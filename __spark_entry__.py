@@ -3704,11 +3704,10 @@ def _kmeans_oracle() -> tuple[str, str]:
     component VALUES ``(qvec, nvec, sim)`` for the 'cent' section)."""
     import math
     import struct as _st
-    from decimal import Decimal, ROUND_HALF_UP, getcontext
+    from decimal import Decimal, ROUND_HALF_UP, localcontext
 
     import duckdb
 
-    getcontext().prec = 60
     rows = duckdb.sql(
         f"select vec_id, embedding from '{_ORACLE_SF}/embeddings.parquet'"
     ).fetchall()
@@ -3736,55 +3735,57 @@ def _kmeans_oracle() -> tuple[str, str]:
             acc += x * x
         return math.sqrt(acc)
 
-    order = sorted(vecs, key=lambda v: (hkey(v), v))
-    cents = [(i, list(vecs[order[i]])) for i in range(KMEANS_K)]
-    q9 = Decimal("1e-9")
-    for _ in range(KMEANS_ITERS):
-        cn = {cid: nrm(c) for cid, c in cents}
-        sums: dict = {}
-        counts: dict = {}
-        for vid in sorted(vecs):
-            e = vecs[vid]
-            en = nrm(e)
-            best, bsim = None, None
-            for cid, c in cents:
-                s = dot(e, c) / (en * cn[cid])
-                if bsim is None or s > bsim:
-                    best, bsim = cid, s
-            counts[best] = counts.get(best, 0) + 1
-            acc = sums.setdefault(best, [Decimal(0)] * dim)
-            for i, x in enumerate(e):
-                acc[i] += Decimal(x).quantize(q9, ROUND_HALF_UP)
-        cents = [
-            (
-                cid,
-                [
-                    f32(
-                        float(
-                            (sums[cid][i] / counts[cid]).quantize(
-                                q9, ROUND_HALF_UP
+    with localcontext() as ctx:
+        ctx.prec = 60
+        order = sorted(vecs, key=lambda v: (hkey(v), v))
+        cents = [(i, list(vecs[order[i]])) for i in range(KMEANS_K)]
+        q9 = Decimal("1e-9")
+        for _ in range(KMEANS_ITERS):
+            cn = {cid: nrm(c) for cid, c in cents}
+            sums: dict = {}
+            counts: dict = {}
+            for vid in sorted(vecs):
+                e = vecs[vid]
+                en = nrm(e)
+                best, bsim = None, None
+                for cid, c in cents:
+                    s = dot(e, c) / (en * cn[cid])
+                    if bsim is None or s > bsim:
+                        best, bsim = cid, s
+                counts[best] = counts.get(best, 0) + 1
+                acc = sums.setdefault(best, [Decimal(0)] * dim)
+                for i, x in enumerate(e):
+                    acc[i] += Decimal(x).quantize(q9, ROUND_HALF_UP)
+            cents = [
+                (
+                    cid,
+                    [
+                        f32(
+                            float(
+                                (sums[cid][i] / counts[cid]).quantize(
+                                    q9, ROUND_HALF_UP
+                                )
                             )
                         )
-                    )
-                    for i in range(dim)
-                ]
-                if cid in counts
-                else old,
-            )
-            for cid, old in cents
-        ]
-    q6 = Decimal("0.000001")
-    cent_vals = ", ".join(
-        f"({cid}, [" + ", ".join(repr(v) for v in c) + "])"
-        for cid, c in cents
-    )
-    comp_vals = ", ".join(
-        f"({cid}, {i},"
-        f" {float(Decimal(repr(v)).quantize(q6, ROUND_HALF_UP))!r})"
-        for cid, c in cents
-        for i, v in enumerate(c)
-    )
-    return cent_vals, comp_vals
+                        for i in range(dim)
+                    ]
+                    if cid in counts
+                    else old,
+                )
+                for cid, old in cents
+            ]
+        q6 = Decimal("0.000001")
+        cent_vals = ", ".join(
+            f"({cid}, [" + ", ".join(repr(v) for v in c) + "])"
+            for cid, c in cents
+        )
+        comp_vals = ", ".join(
+            f"({cid}, {i},"
+            f" {float(Decimal(repr(v)).quantize(q6, ROUND_HALF_UP))!r})"
+            for cid, c in cents
+            for i, v in enumerate(c)
+        )
+        return cent_vals, comp_vals
 
 
 def _substring_oracle_rows() -> str:

@@ -1,10 +1,13 @@
 """Snapshot dedup + byte-deterministic HTML→text extraction.
 
 Extraction is the one stage that genuinely cannot be a built-in column
-expression, so it is a *vectorized* Arrow pandas UDF (pd.Series regex
-ops, C-level — never per-row Python).  The function is pure over the
-html bytes: same bytes → same text, on any executor, any Spark version
-(the byte-identity invariant from BASELINE input_hint).
+expression, so it is an Arrow pandas UDF over whole pd.Series batches
+(no BatchEvalPython, no per-row Python-object round trip through the
+JVM).  It is not C-level end to end: ``.str.replace(regex=True)`` calls
+``re.sub`` once per element, so each regex step is a Python-level loop
+over the batch.  The function is pure over the html bytes: same bytes →
+same text, on any executor, any Spark version (the byte-identity
+invariant from BASELINE input_hint).
 
 EXTRACTION SPEC (fixture-locked; tests/oracle.py reimplements it
 independently and tests/test_pipeline.py asserts byte equality):
@@ -96,3 +99,9 @@ def with_text(pages: DataFrame) -> DataFrame:
     return pages.withColumn(
         "text", F.coalesce(F.col("text"), extract_text_udf(masked_html))
     )
+
+
+def clean_pages(pages: DataFrame) -> DataFrame:
+    """The ``pages_clean`` stage: newest snapshot per url, English
+    pages only, text filled from html."""
+    return with_text(latest_snapshot(pages).where(F.col("lang") == "en"))

@@ -264,3 +264,21 @@ def mention_triples(mentions: DataFrame) -> DataFrame:
         F.lit("mentions").alias("pred"),
         F.col("qid").alias("obj"),
     ).dropDuplicates(["subj", "obj"])
+
+
+def link_triples(
+    mentions: DataFrame,
+    predicate_df: DataFrame,
+    fuzzy: DataFrame | None = None,
+) -> DataFrame:
+    """The ``triples_raw`` assembly: exact mention triples ∪ fuzzy
+    mention triples (when ``fuzzy`` (url, qid) rows are given) ∪
+    dictionary relations, each branch deduplicated."""
+    out = mention_triples(mentions)
+    if fuzzy is not None:
+        out = out.unionByName(mention_triples(fuzzy))
+    return out.unionByName(
+        extract_relations(mentions, predicate_df)
+        .select("subj", "pred", "obj")
+        .dropDuplicates()
+    )

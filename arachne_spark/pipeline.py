@@ -40,13 +40,9 @@ from pyspark.sql import functions as F
 from arachne_spark.functions.ids import entity_root, identify
 from arachne_spark.operators.cc import canonical_mapping
 from arachne_spark.operators.dedup import minhash_doc_dedup
-from arachne_spark.operators.extract import latest_snapshot, with_text
+from arachne_spark.operators.extract import clean_pages
 from arachne_spark.operators.lsh_link import fuzzy_mentions
-from arachne_spark.operators.mentions import (
-    detect_mentions,
-    extract_relations,
-    mention_triples,
-)
+from arachne_spark.operators.mentions import detect_mentions, link_triples
 from arachne_spark.operators.quality import repetition_filter
 from arachne_spark.operators.sampling import hash_unit
 from arachne_spark.operators.scrub import scrub_expr
@@ -61,6 +57,8 @@ from arachne_spark.sources.pages import pages_df
 BATCH_THRESHOLD = 50
 CANDIDATES_THRESHOLD = 50
 STALENESS_HOURS = 24
+# parallel window groups per kind for batch-id assignment
+BATCH_BUCKETS = 256
 
 
 @dataclass
@@ -71,12 +69,7 @@ class PipelineConfig:
 
     warehouse: str
     n_pages: int = 2000
-    lang: str = "en"
-    touch_threshold: int = CANDIDATES_THRESHOLD
-    batch_threshold: int = BATCH_THRESHOLD
-    staleness_hours: int = STALENESS_HOURS
     run_id: str = "r0"
-    n_batch_buckets: int = 256  # parallel window groups for batch ids
     force: bool = False  # ignore committed snapshots (full recompute)
     # near-dup page dedup gate: the map is always computed (page_dupes
     # stage); when True, only cluster representatives flow downstream
@@ -129,9 +122,7 @@ class PipelineConfig:
 FETCH_STATE = "fetch_state"
 
 
-def enrich_entities(
-    fetch_queue: DataFrame, labels: DataFrame, lang: str = "en"
-) -> DataFrame:
+def enrich_entities(fetch_queue: DataFrame, labels: DataFrame) -> DataFrame:
     """The fetch_json dictionary lookup (src/pheidippides.cpp:29-82).
 
     No broadcast hint: a real Wikidata labels table is ~10^8 rows —
@@ -141,24 +132,24 @@ def enrich_entities(
     (:59-61) holds by construction (qid grammar ↔ kind column).
     """
     return fetch_queue.join(
-        labels.where(F.col("lang") == lang),
+        labels.where(F.col("lang") == "en"),
         ["qid", "kind"],
         "left",
     ).select("qid", "kind", "batch_id", "label")
 
 
-def assign_batches(queue: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Chunk the fetch queue into batches of <= batch_threshold per kind.
+def assign_batches(queue: DataFrame) -> DataFrame:
+    """Chunk the fetch queue into batches of <= BATCH_THRESHOLD per kind.
 
     The reference chunks with std::views::chunk(50) in one thread
     (src/pheidippides.cpp:56); a single global row_number would serialize
     at scale, so the window is partitioned by (kind, hash bucket) —
-    n_batch_buckets independent windows per kind, each emitting bounded
+    BATCH_BUCKETS independent windows per kind, each emitting bounded
     batches.
     """
     from pyspark.sql.window import Window
 
-    bucket = F.pmod(F.xxhash64("qid"), F.lit(cfg.n_batch_buckets))
+    bucket = F.pmod(F.xxhash64("qid"), F.lit(BATCH_BUCKETS))
     w = Window.partitionBy("kind", "bucket").orderBy("qid")
     return (
         queue.withColumn("bucket", bucket)
@@ -169,9 +160,7 @@ def assign_batches(queue: DataFrame, cfg: PipelineConfig) -> DataFrame:
                 ":",
                 "kind",
                 F.col("bucket").cast("string"),
-                F.floor((F.col("rn") - 1) / cfg.batch_threshold).cast(
-                    "string"
-                ),
+                F.floor((F.col("rn") - 1) / BATCH_THRESHOLD).cast("string"),
             ),
         )
         .drop("rn")
@@ -299,9 +288,7 @@ def run_pipeline(
 
     pages_clean = rec.run_stage(
         "pages_clean",
-        lambda: with_text(
-            latest_snapshot(pages).where(F.col("lang") == cfg.lang)
-        ),
+        lambda: clean_pages(pages),
         force=cfg.force,
     )
 
@@ -359,7 +346,7 @@ def run_pipeline(
     promoted = rec.run_stage(
         "promoted",
         lambda: promote_candidates(
-            mentions, key="qid", threshold=cfg.touch_threshold,
+            mentions, key="qid", threshold=CANDIDATES_THRESHOLD,
             salt_from="url",
         ),
         force=cfg.force,
@@ -382,7 +369,7 @@ def run_pipeline(
             .withColumn("kind", identify(F.col("qid")))
         )
         # staleness gate (enqueue, src/arachne.cpp:201-222): skip
-        # entities fetched < staleness_hours before logical now.
+        # entities fetched < STALENESS_HOURS before logical now.
         # No broadcast hint: fetch_state grows with the entity
         # universe — AQE picks broadcast while it's small and falls
         # back to a shuffled anti-join once it isn't.
@@ -390,10 +377,10 @@ def run_pipeline(
             fresh = wh.read(FETCH_STATE).where(
                 F.col("last_fetched_ts")
                 >= F.lit(logical_now).cast("timestamp")
-                - F.expr(f"INTERVAL {cfg.staleness_hours} HOURS")
+                - F.expr(f"INTERVAL {STALENESS_HOURS} HOURS")
             )
             seen = seen.join(fresh, "qid", "left_anti")
-        return assign_batches(seen, cfg)
+        return assign_batches(seen)
 
     fetch_queue = rec.run_stage("fetch_queue", build_queue, force=cfg.force)
 
@@ -425,19 +412,7 @@ def run_pipeline(
 
     triples_raw = rec.run_stage(
         "triples_raw",
-        lambda: mention_triples(mentions)
-        .unionByName(
-            fuzzy.select(
-                F.col("url").alias("subj"),
-                F.lit("mentions").alias("pred"),
-                F.col("qid").alias("obj"),
-            ).dropDuplicates()
-        )
-        .unionByName(
-            extract_relations(mentions, preds).select(
-                F.col("subj"), F.col("pred"), F.col("obj")
-            ).dropDuplicates()
-        ),
+        lambda: link_triples(mentions, preds, fuzzy),
         force=cfg.force,
     )
 

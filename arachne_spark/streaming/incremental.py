@@ -32,6 +32,19 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from arachne_spark.operators.extract import (
+    clean_pages,
+    latest_snapshot,
+    with_text,
+)
+from arachne_spark.operators.mentions import (
+    detect_mentions,
+    link_triples,
+    resolve_alias_dict,
+    tokenize,
+)
+from arachne_spark.plans.storage import checked_rename, hadoop_fs
+
 PAGE_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
@@ -53,11 +66,26 @@ def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
         return None
 
 
-def _hadoop_fs(spark: SparkSession, path: str):
-    """(FileSystem, Path) — shared with the Warehouse layer."""
-    from arachne_spark.plans.storage import hadoop_fs
-
-    return hadoop_fs(spark, path)
+def write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
+    """Write ``df`` as the ``batch_id=<n>`` partition of the parquet
+    table at ``path`` with dynamic partition overwrite: a retried
+    micro-batch (foreachBatch is at-least-once) replaces its own
+    partial files and leaves every other partition alone.  The
+    session's overwrite mode is restored afterwards, also when the
+    write raises."""
+    sp = df.sparkSession
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = sp.conf.get(key)
+    sp.conf.set(key, "dynamic")
+    try:
+        (
+            df.withColumn("batch_id", F.lit(batch_id))
+            .write.mode("overwrite")
+            .partitionBy("batch_id")
+            .parquet(path)
+        )
+    finally:
+        sp.conf.set(key, prev)
 
 
 class TwoTierState:
@@ -103,9 +131,7 @@ class TwoTierState:
         dir is only cleared AFTER a completed swap, restoring old
         reconstructs exactly the committed state (old ∪ deltas =
         the merged tmp)."""
-        from arachne_spark.plans.storage import checked_rename
-
-        fs, bpath = _hadoop_fs(sp, self.base_dir)
+        fs, bpath = hadoop_fs(sp, self.base_dir)
         jvm = sp._jvm
         old = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__old")
         if not fs.exists(bpath) and fs.exists(old):
@@ -143,7 +169,7 @@ class TwoTierState:
 
     def exists(self, sp: SparkSession) -> bool:
         """True if either tier (or a recoverable base) is present."""
-        fs, bpath = _hadoop_fs(sp, self.base_dir)
+        fs, bpath = hadoop_fs(sp, self.base_dir)
         jvm = sp._jvm
         mk = jvm.org.apache.hadoop.fs.Path
         return bool(
@@ -157,10 +183,8 @@ class TwoTierState:
         (atomic tmp-write + checked rename, so a crash mid-seed never
         leaves a partial base that would silently shrink the probe).
         Caller ensures the state does not already exist."""
-        from arachne_spark.plans.storage import checked_rename
-
         sp = df.sparkSession
-        fs, bpath = _hadoop_fs(sp, self.base_dir)
+        fs, bpath = hadoop_fs(sp, self.base_dir)
         jvm = sp._jvm
         tmp = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__tmp")
         fs.delete(tmp, True)
@@ -175,26 +199,11 @@ class TwoTierState:
         """Append ``df`` as the batch's ``batch_id=<n>`` delta
         partition (dynamic partition overwrite: a retried batch
         replaces its own partial files)."""
-        sp = df.sparkSession
-        prev = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        sp.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                df.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(self.delta_dir)
-            )
-        finally:
-            sp.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch_partition(df, self.delta_dir, batch_id)
 
     def compact(self, sp: SparkSession) -> None:
         self.recover_base(sp)
-        fs, dpath = _hadoop_fs(sp, self.delta_dir)
+        fs, dpath = hadoop_fs(sp, self.delta_dir)
         if not fs.exists(dpath):
             return
         n_deltas = sum(
@@ -207,8 +216,6 @@ class TwoTierState:
         merged = self._read_all(sp)
         # full-row dedup: absorbs rows double-committed when a retry
         # interleaves with a compaction swap
-        from arachne_spark.plans.storage import checked_rename
-
         merged = merged.dropDuplicates().repartition(self.n_files)
         jvm = sp._jvm
         tmp = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__tmp")
@@ -249,12 +256,6 @@ def streaming_mention_counts(
     match — the touch-counter semantics, which also ignores spans
     (src/arachne.cpp:224-233 counts every touch).
     """
-    from arachne_spark.operators.extract import with_text
-    from arachne_spark.operators.mentions import (
-        resolve_alias_dict,
-        tokenize,
-    )
-
     resolved = resolve_alias_dict(alias_df)
     toks = tokenize(with_text(pages)).select(
         "url", "warc_ts", "tokens",
@@ -356,7 +357,6 @@ def run_incremental_dedup(
         minhash_bands,
         minhash_doc_dedup,
     )
-    from arachne_spark.operators.extract import latest_snapshot, with_text
     from arachne_spark.operators.lsh_link import jaccard_expr
 
     sdir = state_dir if state_dir is not None else out_dir + "_state"
@@ -371,10 +371,16 @@ def run_incremental_dedup(
         sh = cap_shingle_df(
             doc_shingles(docs, id_col="url"), max_shingle_df
         )
-        sets = sh.groupBy("doc_id").agg(
-            F.sort_array(F.collect_set("s")).alias("shset")
+        # sets, bands and out (below) each feed both writes of the
+        # batch (output partition + state rows): persisted, so the
+        # shingle/band derivation, the intra-batch dedup and the
+        # committed-band probe run once per batch, not twice
+        sets = (
+            sh.groupBy("doc_id")
+            .agg(F.sort_array(F.collect_set("s")).alias("shset"))
+            .persist()
         )
-        bands = minhash_bands(sh)
+        bands = minhash_bands(sh).persist()
         intra = minhash_doc_dedup(
             docs, id_col="url", text_col="text", threshold=threshold,
             max_shingle_df=max_shingle_df,
@@ -425,7 +431,7 @@ def run_incremental_dedup(
 
         out = resolved.withColumn(
             "keep", F.col("url") == F.col("rep_url")
-        )
+        ).persist()
         state_rows = (
             out.select("url", "rep_url")
             .join(
@@ -442,22 +448,10 @@ def run_incremental_dedup(
                 "left",
             )
         )
-        prev = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        sp.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                out.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            sp.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch_partition(out, out_dir, batch_id)
         state.write_delta(state_rows, batch_id)
+        for df in (out, sets, bands):
+            df.unpersist()
         state.compact(sp)
 
     writer = (
@@ -522,13 +516,6 @@ def run_incremental_pipeline(
     batch-only by design: their output depends on the whole corpus, so
     a streaming variant would encode batch boundaries into results.
     """
-    from arachne_spark.operators.extract import latest_snapshot, with_text
-    from arachne_spark.operators.mentions import (
-        detect_mentions,
-        extract_relations,
-        mention_triples,
-    )
-
     state = TwoTierState(
         state_dir if state_dir is not None else out_dir + "_state",
         compact_every=compact_every,
@@ -592,17 +579,8 @@ def run_incremental_pipeline(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
-        clean = curate(
-            with_text(
-                latest_snapshot(batch_df).where(F.col("lang") == "en")
-            )
-        )
-        m = detect_mentions(clean, alias_df)
-        triples = mention_triples(m).unionByName(
-            extract_relations(m, predicate_df)
-            .select("subj", "pred", "obj")
-            .dropDuplicates()
-        )
+        m = detect_mentions(curate(clean_pages(batch_df)), alias_df)
+        triples = link_triples(m, predicate_df)
         # read_committed excludes THIS batch's delta partition: on an
         # at-least-once retry its partial rows exist, and anti-joining
         # against them before overwriting the same partition would
@@ -617,21 +595,7 @@ def run_incremental_pipeline(
         # two consumers (output partition + probe-index delta): persist
         # so the extraction core runs once per batch, not twice
         triples = triples.persist()
-        prev = sp.conf.get("spark.sql.sources.partitionOverwriteMode")
-        sp.conf.set(
-            "spark.sql.sources.partitionOverwriteMode", "dynamic"
-        )
-        try:
-            (
-                triples.withColumn("batch_id", F.lit(batch_id))
-                .write.mode("overwrite")
-                .partitionBy("batch_id")
-                .parquet(out_dir)
-            )
-        finally:
-            sp.conf.set(
-                "spark.sql.sources.partitionOverwriteMode", prev
-            )
+        write_batch_partition(triples, out_dir, batch_id)
         state.write_delta(
             triples.select("subj", "pred", "obj"), batch_id
         )

@@ -506,15 +506,10 @@ def run_media(cpus: int) -> dict:
 def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
     """Wall seconds + triple count for the warmed pipeline core."""
     from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
 
-    from arachne_spark.operators.extract import latest_snapshot, with_text
+    from arachne_spark.operators.extract import clean_pages
     from arachne_spark.operators.lsh_link import fuzzy_mentions
-    from arachne_spark.operators.mentions import (
-        detect_mentions,
-        extract_relations,
-        mention_triples,
-    )
+    from arachne_spark.operators.mentions import detect_mentions, link_triples
     from arachne_spark.session import get_spark
     from arachne_spark.sources.dictionary import alias_df, predicate_df
     from arachne_spark.sources.pages import pages_df
@@ -582,27 +577,9 @@ def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
         # distorts the scaling measurement, while the recompute it
         # avoids is embarrassingly parallel and identical at both
         # levels.
-        clean = with_text(
-            latest_snapshot(pg).where(F.col("lang") == "en")
-        )
+        clean = clean_pages(pg)
         m = detect_mentions(clean, aliases).persist()
-        fz = fuzzy_mentions(clean, m, aliases)
-        triples = (
-            mention_triples(m)
-            .unionByName(
-                fz.select(
-                    F.col("url").alias("subj"),
-                    F.lit("mentions").alias("pred"),
-                    F.col("qid").alias("obj"),
-                ).dropDuplicates()
-            )
-            .unionByName(
-                extract_relations(m, preds)
-                .select("subj", "pred", "obj")
-                .dropDuplicates()
-            )
-        )
-        n = triples.count()
+        n = link_triples(m, preds, fuzzy_mentions(clean, m, aliases)).count()
         m.unpersist()
         return n
 

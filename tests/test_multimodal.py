@@ -3365,6 +3365,7 @@ def test_mp4_video_frames():
     bad[at:at + 4] = (len(bad) + 100).to_bytes(4, "big")
     assert _mp4_video_frames(bytes(bad)) is None
     assert _mp4_video_frames(b"\x00" * 40) is None
+    assert _mp4_video_frames(None) is None
 
 
 def test_mp4_hostile_stsc_runs_bounded():
@@ -3385,7 +3386,6 @@ def test_mp4_hostile_stsc_runs_bounded():
     dup = bytearray(base)
     dup[run1_first:run1_first + 4] = (1).to_bytes(4, "big")  # = run 0
     assert _mp4_video_frames(bytes(dup)) is None
-    assert _mp4_video_frames(None) is None
 
 
 def test_decode_video_mp4(spark):

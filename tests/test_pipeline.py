@@ -9,7 +9,11 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from arachne_spark.pipeline import PipelineConfig, run_pipeline
+from arachne_spark.pipeline import (
+    CANDIDATES_THRESHOLD,
+    PipelineConfig,
+    run_pipeline,
+)
 from arachne_spark.sources.pages import pages_df
 from tests import oracle
 
@@ -77,7 +81,7 @@ def test_fuzzy_links_present(spark, pipeline_result):
 
 
 def test_promotion_threshold(spark, pipeline_result):
-    wh, cfg, _ = pipeline_result
+    wh, _, _ = pipeline_result
     promoted = spark.read.parquet(f"{wh}/promoted")
     mentions = spark.read.parquet(f"{wh}/mentions")
     true_counts = {
@@ -86,7 +90,7 @@ def test_promotion_threshold(spark, pipeline_result):
     }
     got = {r["qid"]: r["cnt"] for r in promoted.collect()}
     want = {
-        q: c for q, c in true_counts.items() if c >= cfg.touch_threshold
+        q: c for q, c in true_counts.items() if c >= CANDIDATES_THRESHOLD
     }
     assert got == want  # salted two-phase count == plain count
 

@@ -7,6 +7,8 @@ from __future__ import annotations
 
 import shutil
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from arachne_spark.operators.extract import latest_snapshot, with_text
@@ -21,6 +23,7 @@ from arachne_spark.streaming.incremental import (
     run_incremental_pipeline,
     stream_pages,
     streaming_mention_counts,
+    write_batch_partition,
 )
 
 N_PAGES = 200
@@ -195,6 +198,45 @@ def test_foreachbatch_recrawl_no_duplicates(spark, tmp_path):
         tuple(r) for r in want.collect()
     }
     shutil.rmtree(ckpt, ignore_errors=True)
+
+
+def test_write_batch_partition_idempotent(spark, tmp_path):
+    """Rewriting a batch_id replaces that partition only, leaves the
+    other partitions' files alone, and restores the session's
+    partition-overwrite mode afterwards, also when the write raises."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    out = tmp_path / "parts"
+    mode = spark.conf.get(key)
+
+    def write(vals, batch_id):
+        df = spark.createDataFrame([(v,) for v in vals], "v string")
+        write_batch_partition(df, str(out), batch_id)
+
+    def rows():
+        return sorted(
+            (r["batch_id"], r["v"])
+            for r in spark.read.parquet(str(out)).collect()
+        )
+
+    def files(batch_id):
+        return sorted(p.name for p in (out / f"batch_id={batch_id}").iterdir())
+
+    write(["a", "b"], 0)
+    write(["c"], 1)
+    kept = files(1)
+    write(["d"], 0)
+    assert rows() == [(0, "d"), (1, "c")]
+    assert files(1) == kept
+    assert spark.conf.get(key) == mode
+
+    # a frame with a duplicated column cannot be written: the write
+    # raises, and the committed partitions and the session mode survive
+    bad = spark.range(1).select(F.lit("e").alias("v"), F.lit("f").alias("v"))
+    with pytest.raises(AnalysisException):
+        write_batch_partition(bad, str(out), 1)
+    assert spark.conf.get(key) == mode
+    assert rows() == [(0, "d"), (1, "c")]
+    assert files(1) == kept
 
 
 def test_incremental_pipeline_state_bounded(spark, tmp_path):

@@ -96,15 +96,12 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     )
 
     # KG mention path: dictionary broadcast; Python only via Arrow
-    from arachne_spark.operators.extract import latest_snapshot, with_text
+    from arachne_spark.operators.extract import clean_pages
     from arachne_spark.operators.mentions import detect_mentions
     from arachne_spark.sources.dictionary import alias_df
     from arachne_spark.sources.pages import pages_df
 
-    clean = with_text(
-        latest_snapshot(pages_df(spark, 100)).where(F.col("lang") == "en")
-    )
-    m = detect_mentions(clean, alias_df(spark))
+    m = detect_mentions(clean_pages(pages_df(spark, 100)), alias_df(spark))
     audit(
         "mention detection", m,
         expect_contains=("BroadcastHashJoin", "ArrowEvalPython"),
