@@ -4763,18 +4763,33 @@ def oracle_sql() -> dict[str, str]:
                              substr(h, cast(2*i+2 as int), 1)) - 1)
                      as bv
             from hx, unnest(range(length(h)//2)) as t(i)
+          ),
+          counts as (
+            select doc_id,
+                   count(*) as n_bytes,
+                   count(*) filter (where bv//4 = 8)  as c08,
+                   count(*) filter (where bv//4 = 24) as c24,
+                   count(*) filter (where bv//4 = 25) as c25,
+                   count(*) filter (where bv//4 = 26) as c26,
+                   count(*) filter (where bv//4 = 27) as c27,
+                   count(*) filter (where bv//4 = 28) as c28,
+                   count(*) filter (where bv//4 = 29) as c29,
+                   count(*) filter (where bv//4 = 30) as c30
+            from bytes group by doc_id
           )
-          select doc_id, 64 as dim,
-                 count(*) as n_bytes,
-                 count(*) filter (where bv//4 = 8)  as c08,
-                 count(*) filter (where bv//4 = 24) as c24,
-                 count(*) filter (where bv//4 = 25) as c25,
-                 count(*) filter (where bv//4 = 26) as c26,
-                 count(*) filter (where bv//4 = 27) as c27,
-                 count(*) filter (where bv//4 = 28) as c28,
-                 count(*) filter (where bv//4 = 29) as c29,
-                 count(*) filter (where bv//4 = 30) as c30
-          from bytes group by doc_id
+          -- a NULL or empty text has no bytes to unnest: the left join
+          -- keeps its doc with the zero vector extract_features gives it
+          select d.doc_id, 64 as dim,
+                 coalesce(n_bytes, 0) as n_bytes,
+                 coalesce(c08, 0) as c08,
+                 coalesce(c24, 0) as c24,
+                 coalesce(c25, 0) as c25,
+                 coalesce(c26, 0) as c26,
+                 coalesce(c27, 0) as c27,
+                 coalesce(c28, 0) as c28,
+                 coalesce(c29, 0) as c29,
+                 coalesce(c30, 0) as c30
+          from documents d left join counts c on c.doc_id = d.doc_id
         """,
         "q47_ntriples_lines": """
           select case when n_nationkey % 2 = 0 then

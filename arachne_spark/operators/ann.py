@@ -104,6 +104,14 @@ def pair_dot(a_col: str, b_col: str, vec_dim: int | None = None) -> Column:
     return dot_expr(a_col, b_col)
 
 
+def cosine(dot: Column, n1: Column, n2: Column) -> Column:
+    """dot / (n1 * n2), NULL when either norm is zero: an all-zero
+    vector has no direction, and a bare division would fail (ANSI) or
+    rank it with a non-number.  Descending sorts put NULL last, so a
+    zero vector never outranks a real neighbour."""
+    return dot / F.nullif(n1 * n2, F.lit(0.0))
+
+
 def bucket_expr(vec_col: str, hyperplanes: list[list[float]]) -> Column:
     """Sign-pattern bucket id: bit j set iff <vec, hyperplane_j> > 0."""
     bucket = F.lit(0)
@@ -236,7 +244,7 @@ def brute_force_topk(
         "qvec",
         "nvec",
         F.round(
-            pair_dot("qe", "ne", vec_dim) / (F.col("qn") * F.col("nn")), 4
+            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
         ).alias("sim"),
     )
     w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
@@ -300,7 +308,7 @@ def ann_topk(
         "qvec",
         "nvec",
         F.round(
-            pair_dot("qe", "ne", vec_dim) / (F.col("qn") * F.col("nn")), 4
+            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
         ).alias("sim"),
     )
     w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
@@ -443,8 +451,11 @@ def ivf_assign(
     pairs = e.crossJoin(F.broadcast(centroids))
     sims = pairs.withColumn(
         "csim",
-        pair_dot("embedding", "cvec", vec_dim)
-        / (F.col("nrm") * F.col("cnrm")),
+        cosine(
+            pair_dot("embedding", "cvec", vec_dim),
+            F.col("nrm"),
+            F.col("cnrm"),
+        ),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("cid")
@@ -518,7 +529,7 @@ def ivf_topk(
         "qvec",
         "nvec",
         F.round(
-            pair_dot("qe", "ne", vec_dim) / (F.col("qn") * F.col("nn")), 4
+            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
         ).alias("sim"),
     )
     w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
@@ -549,7 +560,7 @@ def embedding_neardup(
         "qvec",
         "nvec",
         F.round(
-            pair_dot("qe", "ne", vec_dim) / (F.col("qn") * F.col("nn")), 4
+            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
         ).alias("sim"),
     )
     return sims.where(F.col("sim") >= threshold)
@@ -615,7 +626,7 @@ def semantic_dedup(
         "qvec",
         "nvec",
         F.round(
-            pair_dot("qe", "ne", vec_dim) / (F.col("qn") * F.col("nn")), 4
+            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
         ).alias("sim"),
     ).where(F.col("sim") >= threshold)
     # min-id representative via CC, the minhash_doc_dedup encoding:

@@ -279,6 +279,29 @@ def run_pipeline(
 ) -> dict:
     wh = Warehouse(spark, cfg.warehouse)
     rec = StageRecorder(wh, cfg.run_id)
+    try:
+        _run_stage_graph(spark, cfg, pages, wh, rec)
+    finally:
+        # one kg_lineage / kg_metrics commit per run; a run that raises
+        # still records the stages it finished
+        rec.flush()
+    # stage totals come from the recorder (parquet footers), so the
+    # summary costs no count job
+    rows = {r["stage"]: r["rows"] for r in rec.records}
+    return {
+        "stages": rec.records,
+        "triples": rows["triples"],
+        "entities": rows["entities"],
+    }
+
+
+def _run_stage_graph(
+    spark: SparkSession,
+    cfg: PipelineConfig,
+    pages: DataFrame | None,
+    wh: Warehouse,
+    rec: StageRecorder,
+) -> None:
     aliases = alias_df(spark)
     labels = labels_df(spark)
     preds = predicate_df(spark)
@@ -384,7 +407,7 @@ def run_pipeline(
 
     fetch_queue = rec.run_stage("fetch_queue", build_queue, force=cfg.force)
 
-    entities = rec.run_stage(
+    rec.run_stage(
         "entities",
         lambda: enrich_entities(fetch_queue, labels),
         force=cfg.force,
@@ -455,12 +478,6 @@ def run_pipeline(
         from arachne_spark.sources.ntriples import write_ntriples
 
         write_ntriples(triples, cfg.warehouse + "/triples_nt")
-
-    return {
-        "stages": rec.records,
-        "triples": triples.count(),
-        "entities": entities.count(),
-    }
 
 
 def main() -> None:

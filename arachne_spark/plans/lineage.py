@@ -1,15 +1,21 @@
-"""Per-partition lineage + per-stage metrics tables.
+"""Per-file lineage + per-stage metrics tables.
 
 Spark analog of the reference's ``network_metrics`` instrumentation
 (/root/reference/include/utils.hpp:119-142, updated at
-src/http_client.cpp:346-356): every committed stage appends
+src/http_client.cpp:346-356): in-process counters the stage graph
+updates as it runs, with no extra request to count what was just
+sent.  Every stage run records
 
 * ``metrics``  — one row per stage run: rows out, wall ms, resumed flag
-* ``lineage``  — one row per output partition: (stage, partition_id,
-  rows) computed with ``spark_partition_id()`` over the *committed*
-  table, so it reflects exactly what was persisted (and costs one
-  metadata-cheap scan of freshly written parquet, not a second
-  execution of the stage).
+* ``lineage``  — one row per written file: (stage, partition_id, rows),
+  the writer's task number and the row count from the parquet footer
+  of the *committed* table (``Warehouse.file_row_counts``; the files
+  one task writes into several ``partition_by`` directories share a
+  row), so it reflects exactly what was persisted without scanning it.
+
+The recorder launches no Spark job while the stage graph runs: rows are
+buffered in memory and ``flush`` commits them once per run, one append
+to each table.
 """
 
 from __future__ import annotations
@@ -18,12 +24,15 @@ import time
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from arachne_spark.plans.storage import Warehouse
 
 METRICS_TABLE = "kg_metrics"
 LINEAGE_TABLE = "kg_lineage"
+METRICS_SCHEMA = (
+    "run_id string, stage string, rows long, wall_ms long, resumed boolean"
+)
+LINEAGE_SCHEMA = "run_id string, stage string, partition_id int, rows long"
 
 
 @dataclass
@@ -31,44 +40,47 @@ class StageRecorder:
     wh: Warehouse
     run_id: str
     records: list = field(default_factory=list)
+    # rows not yet committed by flush()
+    _lineage: list = field(default_factory=list)
+    _metrics: list = field(default_factory=list)
 
     def run_stage(
         self, name: str, compute, force: bool = False, **write_kwargs
     ) -> DataFrame:
-        """resume_or_compute a stage and record metrics + lineage."""
+        """resume_or_compute a stage and buffer its metrics + lineage."""
         t0 = time.time()
         df, resumed = self.wh.resume_or_compute(
             name, compute, force=force, **write_kwargs
         )
         wall_ms = int((time.time() - t0) * 1000)
 
-        # ONE scan of the committed table: partition counts are a
-        # #partitions-sized result (bounded), so both the lineage rows
-        # and the stage total derive from a single collect instead of
-        # two passes over the data
-        spark = df.sparkSession
-        parts = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .collect()
+        parts = self.wh.file_row_counts(name)
+        self._lineage += [
+            (self.run_id, name, pid, rows)
+            for pid, rows in sorted(parts.items())
+        ] or [(self.run_id, name, -1, 0)]
+        total = sum(parts.values())
+        self._metrics.append(
+            (self.run_id, name, total, wall_ms, bool(resumed))
         )
-        lineage = spark.createDataFrame(
-            [
-                (self.run_id, name, p["partition_id"], p["count"])
-                for p in parts
-            ] or [(self.run_id, name, -1, 0)],
-            "run_id string, stage string, partition_id int, rows long",
-        )
-        self.wh.write(lineage, LINEAGE_TABLE, mode="append")
-        total = sum(p["count"] for p in parts)
-        metrics_row = spark.createDataFrame(
-            [(self.run_id, name, int(total), wall_ms, bool(resumed))],
-            "run_id string, stage string, rows long, wall_ms long, "
-            "resumed boolean",
-        )
-        self.wh.write(metrics_row, METRICS_TABLE, mode="append")
         self.records.append(
-            {"stage": name, "rows": int(total), "wall_ms": wall_ms,
+            {"stage": name, "rows": total, "wall_ms": wall_ms,
              "resumed": resumed}
         )
         return df
+
+    def flush(self) -> None:
+        """Commit the buffered rows: one single-file append to each of
+        the lineage and metrics tables."""
+        spark = self.wh.spark
+        for table, rows, schema in (
+            (LINEAGE_TABLE, self._lineage, LINEAGE_SCHEMA),
+            (METRICS_TABLE, self._metrics, METRICS_SCHEMA),
+        ):
+            if rows:
+                self.wh.write(
+                    spark.createDataFrame(rows, schema).coalesce(1),
+                    table,
+                    mode="append",
+                )
+                rows.clear()

@@ -26,6 +26,7 @@ load from their snapshots.
 from __future__ import annotations
 
 import hashlib
+import re
 import time
 
 from pyspark.sql import DataFrame, SparkSession
@@ -145,6 +146,50 @@ class Warehouse:
             if not name.startswith(("_", ".")):
                 return True
         return False
+
+    def file_row_counts(self, table: str) -> dict[int, int]:
+        """{partition_id: rows} of a committed table, read from file
+        metadata instead of the data: the record count in each parquet
+        footer (Iceberg: ``record_count`` of the ``files`` metadata
+        table).  ``partition_id`` is the writer's task number, the
+        ``NNNNN`` of a ``part-NNNNN-…`` file name; the files one task
+        writes into several ``partition_by`` directories are summed.
+        Zero-row files are skipped: an empty write leaves one
+        schema-only file, and an empty table reads as ``{}``."""
+        counts: dict[int, int] = {}
+
+        def add(name: str, rows: int) -> None:
+            if rows:
+                pid = int(re.match(r"(?:part-)?(\d+)-", name).group(1))
+                counts[pid] = counts.get(pid, 0) + rows
+
+        if self.catalog:
+            for r in self.spark.sql(
+                "SELECT file_path, record_count FROM "
+                f"{self.catalog}.{table}.files WHERE content = 0"
+            ).collect():
+                add(r["file_path"].rsplit("/", 1)[-1], r["record_count"])
+            return counts
+        jvm = self.spark._jvm
+        conf = self.spark._jsc.hadoopConfiguration()
+        parquet = jvm.org.apache.parquet.hadoop
+        fs, _ = hadoop_fs(self.spark, self.root)
+        # recursive: a partition_by table keeps its files one
+        # directory down, under <col>=<value>/
+        files = fs.listFiles(self._jpath(self._path(table)), True)
+        while files.hasNext():
+            st = files.next()
+            name = st.getPath().getName()
+            if not name.startswith("part-"):
+                continue
+            reader = parquet.ParquetFileReader.open(
+                parquet.util.HadoopInputFile.fromStatus(st, conf)
+            )
+            try:
+                add(name, reader.getRecordCount())
+            finally:
+                reader.close()
+        return counts
 
     def read(self, table: str) -> DataFrame:
         if self.catalog:

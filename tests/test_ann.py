@@ -322,3 +322,39 @@ def test_semantic_dedup_negative_ids_numeric_min_rep(spark):
            for r in semantic_dedup(df, threshold=0.999,
                                    n_centroids=2).collect()}
     assert got == {-5: -5, 3: -5, 10: -5, -20: -20, -1: -20}
+
+
+def test_zero_vector_never_ranks_first(spark):
+    """An all-zero embedding has no direction: its cosine with anything
+    is NULL, so ann_topk ranks it after every real neighbour and
+    ivf_assign never picks a zero centroid, instead of failing on the
+    0/0 division or ranking it first."""
+    from arachne_spark.operators.ann import ann_topk, ivf_assign, norm_expr
+
+    emb = spark.createDataFrame(
+        [(1, [-1.0, 0.0, 0.0]), (2, [0.0, 0.0, 0.0]),
+         (3, [-1.0, -0.2, 0.0]), (4, [-0.5, -0.5, 0.0])],
+        "vec_id long, embedding array<float>",
+    )
+    # no vector has a positive dot with either hyperplane: one bucket,
+    # so the zero vector is a candidate of the query
+    hyperplanes = [[1.0, 1.0, 1.0], [1.0, -1.0, 0.0]]
+    ranked = {
+        r["rank"]: (r["nvec"], r["sim"])
+        for r in ann_topk(
+            emb, hyperplanes, F.col("vec_id") == 1, k=3, radius=0
+        ).collect()
+    }
+    assert [ranked[k][0] for k in (1, 2, 3)] == [3, 4, 2]
+    assert ranked[3][1] is None
+
+    cents = spark.createDataFrame(
+        [(0, [0.0, 0.0, 0.0]), (1, [-1.0, 0.0, 0.0])],
+        "cid long, cvec array<float>",
+    ).withColumn("cnrm", norm_expr("cvec"))
+    nearest = {
+        r["vec_id"]: r["cid"]
+        for r in ivf_assign(emb.where(F.col("vec_id") != 2), cents)
+        .collect()
+    }
+    assert nearest == {1: 1, 3: 1, 4: 1}

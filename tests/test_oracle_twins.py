@@ -79,3 +79,32 @@ def test_hash_unit_twin_bit_exact(spark):
     ).select("k", hash_unit(F.col("k"), "split").alias("u"))
     for r in df.collect():
         assert _hash_unit_twin(r["k"], "split") == r["u"], r["k"]
+
+
+def test_q46_twin_keeps_null_and_empty_text(spark, tmp_path):
+    """q46's DuckDB twin keeps a NULL- or empty-text document, with the
+    zero counts of the zero vector extract_features gives it — the
+    Spark side emits a row for every document."""
+    import duckdb
+
+    from __spark_entry__ import oracle_sql, q46_payload_features
+
+    spark.createDataFrame(
+        [(1, "hello world", "en", "web", 11),
+         (2, None, "en", "web", None),
+         (3, "", "en", "web", 0)],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long",
+    ).write.parquet(str(tmp_path / "documents.parquet"))
+    got = {
+        tuple(r)
+        for r in q46_payload_features(spark, str(tmp_path)).collect()
+    }
+    con = duckdb.connect()
+    con.execute(
+        "CREATE VIEW documents AS SELECT * FROM "
+        f"'{tmp_path}/documents.parquet/*.parquet'"
+    )
+    want = set(con.execute(oracle_sql()["q46_payload_features"]).fetchall())
+    assert got == want
+    assert {r[0] for r in want} == {1, 2, 3}

@@ -14,6 +14,8 @@ from arachne_spark.pipeline import (
     PipelineConfig,
     run_pipeline,
 )
+from arachne_spark.plans.lineage import StageRecorder
+from arachne_spark.plans.storage import Warehouse
 from arachne_spark.sources.pages import pages_df
 from tests import oracle
 
@@ -127,6 +129,88 @@ def test_lineage_and_metrics_tables(spark, pipeline_result):
         (F.col("rows") > 0) & (F.col("partition_id") < 0)
     ).count()
     assert nonneg == 0
+    # independent of the parquet footers: a scan of each committed
+    # table, rows grouped by the part-NNNNN task number of their file
+    # (triples is pred-partitioned: one task writes several files)
+    assert "triples" in want_stages
+    for stage in want_stages:
+        scanned = {
+            (r["p"], r["n"])
+            for r in spark.read.parquet(f"{wh}/{stage}")
+            .groupBy(
+                F.regexp_extract(F.input_file_name(), r"part-(\d+)-", 1)
+                .cast("int")
+                .alias("p")
+            )
+            .agg(F.count("*").alias("n"))
+            .collect()
+        } or {(-1, 0)}
+        recorded = {
+            (r["partition_id"], r["rows"])
+            for r in lineage.where(F.col("stage") == stage).collect()
+        }
+        assert recorded == scanned, stage
+
+
+def _jobs_in_group(sc, group: str, fn) -> int:
+    """Spark jobs ``fn`` launches, counted in the status store."""
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    jobs = jsc.statusStore().jobsList(None)
+    groups = (jobs.apply(i).jobGroup() for i in range(jobs.size()))
+    return sum(1 for g in groups if g.isDefined() and g.get() == group)
+
+
+def test_recorder_launches_no_jobs(spark, tmp_path):
+    """Recording a stage costs no Spark job: on the resume path
+    run_stage launches exactly the jobs of the bare resume_or_compute
+    of the same stage (row counts come from the parquet footers, the
+    rows are committed once per run by flush)."""
+    wh = Warehouse(spark, str(tmp_path / "jobs_wh"))
+    rec = StageRecorder(wh, "jobs")
+    df = spark.range(100).selectExpr("id", "id % 3 as k")
+    wh.resume_or_compute("stage", lambda: df, partition_by=["k"])
+    sc = spark.sparkContext
+    bare = _jobs_in_group(
+        sc, "recorder-bare", lambda: wh.resume_or_compute("stage", None)
+    )
+    recorded = _jobs_in_group(
+        sc, "recorder-run-stage", lambda: rec.run_stage("stage", None)
+    )
+    assert recorded == bare
+    assert rec.records[-1]["rows"] == 100 and rec.records[-1]["resumed"]
+
+
+def test_failing_run_still_flushes(spark, tmp_path, monkeypatch):
+    """A run that raises still commits the metrics and lineage rows of
+    every stage it finished, and no others."""
+    import arachne_spark.pipeline as pipeline
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("canonical_mapping failed")
+
+    monkeypatch.setattr(pipeline, "canonical_mapping", fail)
+    wh = str(tmp_path / "fail_wh")
+    with pytest.raises(RuntimeError, match="canonical_mapping failed"):
+        run_pipeline(
+            spark, PipelineConfig(warehouse=wh, n_pages=60, run_id="fail")
+        )
+    finished = [
+        "pages_clean", "page_dupes", "mentions", "fuzzy_mentions",
+        "promoted", "fetch_queue", "entities", "triples_raw",
+    ]
+    metrics = spark.read.parquet(f"{wh}/kg_metrics").collect()
+    assert sorted((r["run_id"], r["stage"]) for r in metrics) == sorted(
+        ("fail", s) for s in finished
+    )
+    lineage = spark.read.parquet(f"{wh}/kg_lineage").collect()
+    assert {r["run_id"] for r in lineage} == {"fail"}
+    assert {r["stage"] for r in lineage} == set(finished)
 
 
 def test_determinism_across_parallelism(spark, tmp_path):

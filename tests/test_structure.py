@@ -60,3 +60,24 @@ def test_link_core_defined_once():
         "arachne_spark/operators/extract.py:clean_pages",
         "arachne_spark/streaming/incremental.py:run_incremental_dedup.process",
     }
+
+
+def test_stage_bookkeeping_launches_no_jobs():
+    lineage = "arachne_spark/plans/lineage.py"
+    # lineage row counts come from parquet footers, not a rescan of
+    # the committed table
+    assert not {
+        h for h in _holders(_calls("spark_partition_id"))
+        if h.startswith(lineage + ":")
+    }
+    # kg_metrics / kg_lineage are named once and written only by the
+    # once-per-run StageRecorder.flush
+    assert _holders(
+        lambda n: isinstance(n, ast.Constant)
+        and n.value in ("kg_metrics", "kg_lineage")
+    ) == {f"{lineage}:<module>"}
+    assert _holders(
+        lambda n: isinstance(n, ast.Name)
+        and isinstance(n.ctx, ast.Load)
+        and n.id in ("METRICS_TABLE", "LINEAGE_TABLE")
+    ) == {f"{lineage}:flush"}
