@@ -12,8 +12,10 @@ over Common-Crawl-style web pages, designed Spark-first:
 * broadcast joins for the alias/QID dictionary
 * salted two-phase aggregation for skewed head entities
 * iterative large-star/small-star connected components for entity stitching
-* vectorized Arrow/pandas UDFs only where column expressions cannot express
-  the semantics (HTML extraction); no per-row Python anywhere.
+* the KG stage graph is built-in column expressions end to end (HTML
+  extraction included); vectorized Arrow/pandas UDFs only where column
+  expressions cannot express the semantics (binary decoders, BPE, ANN
+  matmul); no per-row Python anywhere.
 
 Nothing here is a port: no code is translated from the reference; only its
 observable behavior (cited per-module as file:line into /root/reference).

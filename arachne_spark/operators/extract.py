@@ -1,16 +1,14 @@
 """Snapshot dedup + byte-deterministic HTML→text extraction.
 
-Extraction is the one stage that genuinely cannot be a built-in column
-expression, so it is an Arrow pandas UDF over whole pd.Series batches
-(no BatchEvalPython, no per-row Python-object round trip through the
-JVM).  It is not C-level end to end: ``.str.replace(regex=True)`` calls
-``re.sub`` once per element, so each regex step is a Python-level loop
-over the batch.  The function is pure over the html bytes: same bytes →
-same text, on any executor, any Spark version (the byte-identity
+Extraction is built-in column expressions only (a decode, a chain of
+``regexp_replace``/``replace`` and a ``btrim``), so it runs codegen'd in
+the JVM with no Python worker process.  The result is pure over the html bytes: same
+bytes → same text, on any executor, any Spark version (the byte-identity
 invariant from BASELINE input_hint).
 
 EXTRACTION SPEC (fixture-locked; tests/oracle.py reimplements it
-independently and tests/test_pipeline.py asserts byte equality):
+independently in Python, and tests/test_extract.py asserts byte
+equality on hostile and random inputs):
   1. decode UTF-8 (errors=replace)
   2. drop <script>…</script> and <style>…</style> blocks (case-insensitive)
   3. drop <!-- … --> comments
@@ -19,26 +17,58 @@ independently and tests/test_pipeline.py asserts byte equality):
   6. collapse [ \t]+ → ' '; strip spaces around '\n'; collapse '\n'+ →
      '\n'; strip outer whitespace
 
-The latest-snapshot dedup is an aggregate (``max_by``), not a window:
+The spec is written in Python ``re``/``str`` terms.  Where Java regex
+and the JVM decoder differ from them, the code below says how it
+matches Python instead (``_WS``, ``_WORD_END``, ``_CASES``,
+``make_valid_utf8``).
+
+The latest-snapshot dedup is an aggregate (``max``), not a window:
 partial aggregation runs map-side, so at 100 TB the shuffle carries at
 most one pre-reduced row per (url, partition) instead of every snapshot.
 """
 
 from __future__ import annotations
 
-import re
+from itertools import product
 
-import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
-from pyspark.sql.types import StringType
 
-_SCRIPT_RE = re.compile(
-    r"<(script|style)\b[^>]*>.*?</\1\s*>", re.IGNORECASE | re.DOTALL
+# Python's str.isspace set, which is what re's \s and str.strip() use;
+# Java's \s is ASCII-only and its Unicode \s differs on \x1c-\x1f, and
+# Spark's trim() strips only ' '.
+_WS_CHARS = (
+    "\t\n\x0b\x0c\r\x1c\x1d\x1e\x1f \x85\xa0\u1680"
+    + "".join(map(chr, range(0x2000, 0x200B)))
+    + "\u2028\u2029\u202f\u205f\u3000"
 )
-_COMMENT_RE = re.compile(r"<!--.*?-->", re.DOTALL)
-_TAG_RE = re.compile(r"<[^>]*>")
+_WS = "[" + "".join(f"\\u{ord(c):04x}" for c in _WS_CHARS) + "]"
+# Python's \b after a word: the next char is not alphanumeric or '_'.
+# Java's \b disagrees with it on combining marks (U+0301) and on
+# numerics outside Nd ('²').
+_WORD_END = "(?![\\p{L}\\p{N}_])"
+# Python's re.IGNORECASE lets 'ſ' match 's' and 'İ'/'ı' match 'i', but
+# its backreference compares simple lowercase, so a tag opened with 'ſ'
+# or 'ı' closes only with that same letter.  Java's case-insensitive
+# backreference folds further, so each case class is its own branch,
+# with no flag and no backreference.
+_CASES = {"s": ["sS", "\u017f"], "i": ["iI\u0130", "\u0131"]}
+
+
+def _block_re(names: tuple[str, ...]) -> str:
+    branches = []
+    for name in names:
+        for classes in product(
+            *(_CASES.get(c, [c + c.upper()]) for c in name)
+        ):
+            tag = "".join(f"[{c}]" for c in classes)
+            branches.append(f"{tag}{_WORD_END}[^>]*>.*?</{tag}{_WS}*>")
+    return f"(?s)<(?:{'|'.join(branches)})"
+
+
+_SCRIPT_RE = _block_re(("script", "style"))
+_COMMENT_RE = "(?s)<!--.*?-->"
+_TAG_RE = "<[^>]*>"
 _ENTITIES = [
     ("&lt;", "<"),
     ("&gt;", ">"),
@@ -49,55 +79,47 @@ _ENTITIES = [
 ]
 
 
-def extract_text_series(html: pd.Series) -> pd.Series:
-    """Vectorized extraction over a series of html byte strings."""
-    # vectorized decode (C-level); bytes → str, None → None, and any
-    # already-str input decodes to NaN and is kept verbatim below
-    decoded = html.str.decode("utf-8", errors="replace")
-    s = decoded.where(decoded.notna(), html).fillna("")
-    s = s.str.replace(_SCRIPT_RE, "\n", regex=True)
-    s = s.str.replace(_COMMENT_RE, "\n", regex=True)
-    s = s.str.replace(_TAG_RE, "\n", regex=True)
+def extract_text_col(html: Column) -> Column:
+    """EXTRACTION SPEC steps 1-6 over an html (binary) column; NULL
+    html extracts to ''."""
+    # a plain cast collapses each invalid sequence into ONE U+FFFD;
+    # make_valid_utf8 replaces per maximal subpart, as Python does
+    # (ED A0 80 → three U+FFFD)
+    s = F.coalesce(F.make_valid_utf8(html.cast("string")), F.lit(""))
+    s = F.regexp_replace(s, _SCRIPT_RE, "\n")
+    s = F.regexp_replace(s, _COMMENT_RE, "\n")
+    s = F.regexp_replace(s, _TAG_RE, "\n")
     for ent, ch in _ENTITIES:
-        s = s.str.replace(ent, ch, regex=False)
-    s = s.str.replace(r"[ \t]+", " ", regex=True)
-    s = s.str.replace(r" ?\n ?", "\n", regex=True)
-    s = s.str.replace(r"\n+", "\n", regex=True)
-    return s.str.strip()
-
-
-@pandas_udf(StringType())
-def extract_text_udf(html: pd.Series) -> pd.Series:
-    return extract_text_series(html)
+        s = F.replace(s, F.lit(ent), F.lit(ch))
+    s = F.regexp_replace(s, "[ \t]+", " ")
+    s = F.regexp_replace(s, " ?\n ?", "\n")
+    s = F.regexp_replace(s, "\n+", "\n")
+    return F.btrim(s, F.lit(_WS_CHARS))
 
 
 def latest_snapshot(pages: DataFrame) -> DataFrame:
     """Keep the newest crawl per url (src/arachne.cpp merge analog).
 
-    Tie-break on html bytes keeps the result total-ordered and therefore
-    deterministic even if two snapshots share a timestamp — the explicit
-    total order §4.3 of SURVEY.md demands (the reference's merge order is
-    hash-iteration order, i.e. nondeterministic; we fix that).
+    The ordering is total over the whole snapshot (the explicit total
+    order §4.3 of SURVEY.md demands; the reference's merge order is
+    hash-iteration order, i.e. nondeterministic): ties on ``warc_ts``
+    break on the html hash, then on html, text and lang, so two
+    snapshots that differ anywhere resolve the same way in any input
+    order.
     """
     snap = F.struct(
-        F.col("warc_ts"), F.col("html"), F.col("text"), F.col("lang")
+        F.col("warc_ts"), F.xxhash64(F.col("html")).alias("h"),
+        F.col("html"), F.col("text"), F.col("lang"),
     )
-    order = F.struct(F.col("warc_ts"), F.xxhash64(F.col("html")))
-    agg = pages.groupBy("url").agg(F.max_by(snap, order).alias("s"))
+    agg = pages.groupBy("url").agg(F.max(snap).alias("s"))
     return agg.select("url", "s.warc_ts", "s.html", "s.text", "s.lang")
 
 
 def with_text(pages: DataFrame) -> DataFrame:
-    """Fill NULL text from html; keep pre-extracted text verbatim.
-
-    The UDF input is masked to NULL where text already exists: Catalyst
-    evaluates an extracted Python UDF for every row regardless of the
-    surrounding coalesce, so without the mask the regex pipeline would
-    run (and be paid for) on rows whose result is then discarded.
-    """
-    masked_html = F.when(F.col("text").isNull(), F.col("html"))
+    """Fill NULL text from html; keep pre-extracted text verbatim
+    (``coalesce`` evaluates the extraction only where text is NULL)."""
     return pages.withColumn(
-        "text", F.coalesce(F.col("text"), extract_text_udf(masked_html))
+        "text", F.coalesce(F.col("text"), extract_text_col(F.col("html")))
     )
 
 

@@ -427,11 +427,9 @@ def _run_stage_graph(
             .groupBy("qid")
             .agg(F.max("last_fetched_ts").alias("last_fetched_ts"))
         )
-    wh.write(new_state, FETCH_STATE + "_next")
-    # swap: parquet backend can't overwrite a table being read from
-    new_state = wh.read(FETCH_STATE + "_next")
+    # safe although new_state reads FETCH_STATE: Warehouse.write
+    # commits by writing a temp copy and renaming it into place
     wh.write(new_state, FETCH_STATE)
-    wh.drop(FETCH_STATE + "_next")
 
     triples_raw = rec.run_stage(
         "triples_raw",

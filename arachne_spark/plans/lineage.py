@@ -26,6 +26,7 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame
 
 from arachne_spark.plans.storage import Warehouse
+from arachne_spark.session import local_df
 
 METRICS_TABLE = "kg_metrics"
 LINEAGE_TABLE = "kg_lineage"
@@ -79,7 +80,7 @@ class StageRecorder:
         ):
             if rows:
                 self.wh.write(
-                    spark.createDataFrame(rows, schema).coalesce(1),
+                    local_df(spark, rows, schema).coalesce(1),
                     table,
                     mode="append",
                 )

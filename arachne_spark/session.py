@@ -3,8 +3,9 @@
 Design notes (scale-first):
 * AQE on — runtime join-strategy re-planning, skew-join splitting, and
   partition coalescing are the first line of defense at 100 TB.
-* Arrow on — every Python-side transform in this engine is a vectorized
-  pandas UDF / mapInPandas; Arrow batching is what makes that viable.
+* Arrow on — every Python-side transform in this engine (none in the KG
+  stage graph) is a vectorized pandas UDF / mapInPandas; Arrow batching
+  is what makes that viable.
 * shuffle.partitions defaults to max(cores*2, 32) locally; on a real
   cluster AQE's coalescing makes the initial number less critical, but we
   still set spark.sql.adaptive.coalescePartitions.initialPartitionNum high
@@ -13,12 +14,15 @@ Design notes (scale-first):
 
 from __future__ import annotations
 
+import json
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType
 
 # Columnar batch size for Arrow transfer into pandas UDFs. 10k rows of
-# (url, html) at ~5 KB/page ≈ 50 MB per batch — large enough to amortize
+# ~5 KB payloads ≈ 50 MB per batch — large enough to amortize
 # Python call overhead, small enough to not blow executor memory.
 ARROW_BATCH_ROWS = 10_000
 
@@ -67,3 +71,15 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     return builder.getOrCreate()
+
+
+def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
+    """A small driver-side row set (tuples in DDL ``schema`` order) as
+    a DataFrame the JVM alone evaluates: one JSON literal expanded by
+    ``from_json`` + ``inline``.  ``spark.createDataFrame(rows)`` would
+    be a Python RDD that starts a Python worker pool on every scan."""
+    struct = DataType.fromDDL(schema)
+    data = json.dumps([dict(zip(struct.names, r)) for r in rows])
+    return spark.range(1).select(
+        F.inline(F.from_json(F.lit(data), ArrayType(struct)))
+    )

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from arachne_spark.session import local_df
+
 MAX_ALIAS_TOKENS = 4
 
 # (qid, kind, label_en, aliases)
@@ -152,16 +154,18 @@ def label_rows() -> list[tuple[str, str, str, str]]:
 
 
 def alias_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        alias_rows(), "alias string, qid string, kind string, priority long"
+    return local_df(
+        spark, alias_rows(),
+        "alias string, qid string, kind string, priority long",
     )
 
 
 def predicate_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(_PREDICATES, "phrase string, pred string")
+    return local_df(spark, _PREDICATES, "phrase string, pred string")
 
 
 def labels_df(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
-        label_rows(), "qid string, kind string, lang string, label string"
+    return local_df(
+        spark, label_rows(),
+        "qid string, kind string, lang string, label string",
     )

@@ -16,6 +16,8 @@ from arachne_spark.pipeline import (
 )
 from arachne_spark.plans.lineage import StageRecorder
 from arachne_spark.plans.storage import Warehouse
+from arachne_spark.session import local_df
+from arachne_spark.sources.dictionary import alias_df, labels_df, predicate_df
 from arachne_spark.sources.pages import pages_df
 from tests import oracle
 
@@ -186,6 +188,26 @@ def test_recorder_launches_no_jobs(spark, tmp_path):
     assert rec.records[-1]["rows"] == 100 and rec.records[-1]["resumed"]
 
 
+def test_local_inputs_need_no_python_worker(spark):
+    """Driver-side rows (dictionaries, the recorder's flush) become
+    JVM-only DataFrames: exact round trip, and no plan scans a Python
+    RDD, which would start a Python worker pool on every run."""
+    schema = "s string, n long, b boolean, i int"
+    rows = [
+        ("\u00e9 \u2028 \"q\" \\ \U0001f600", 2**53 + 1, True, None),
+        ("", -(2**63), False, 0),
+    ]
+    df = local_df(spark, rows, schema)
+    assert df.schema.simpleString() == (
+        "struct<s:string,n:bigint,b:boolean,i:int>"
+    )
+    assert [tuple(r) for r in df.collect()] == rows
+    assert local_df(spark, [], schema).count() == 0
+    for make in (alias_df, labels_df, predicate_df):
+        plan = make(spark)._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan
+
+
 def test_failing_run_still_flushes(spark, tmp_path, monkeypatch):
     """A run that raises still commits the metrics and lineage rows of
     every stage it finished, and no others."""
@@ -271,6 +293,46 @@ def test_resume_skips_committed_stages(spark, tmp_path):
     assert by_stage["mentions"]["resumed"]
     assert not by_stage["triples"]["resumed"]
     assert second["triples"] == first["triples"]
+
+
+def test_fetch_state_two_runs_one_write(spark, tmp_path):
+    """A second run over the same warehouse rewrites fetch_state in
+    place: the result is the previous state merged with this run's
+    queue at its logical now (latest timestamp per qid), and no
+    side table is left behind."""
+    wh = str(tmp_path / "state")
+    pages = pages_df(spark, 120, partitions=4)
+    run_pipeline(spark, PipelineConfig(warehouse=wh, run_id="s1"),
+                 pages=pages)
+    state1 = {
+        r["qid"]: r["last_fetched_ts"]
+        for r in spark.read.parquet(f"{wh}/fetch_state").collect()
+    }
+    # two days later, half of the pages recrawled: every entity they
+    # mention is stale again, the rest keep their first fetch time
+    uid = F.element_at(F.split("url", "/"), -1).cast("int")
+    later = pages.where(uid >= 60).withColumn(
+        "warc_ts", F.col("warc_ts") + F.expr("INTERVAL 2 DAYS")
+    )
+    run_pipeline(spark, PipelineConfig(warehouse=wh, run_id="s2",
+                                       force=True), pages=later)
+    now2 = spark.read.parquet(f"{wh}/pages_clean").agg(
+        F.max("warc_ts")
+    ).collect()[0][0]
+    queue2 = [
+        r["qid"] for r in spark.read.parquet(f"{wh}/fetch_queue").collect()
+    ]
+    want = dict(state1)
+    for q in queue2:
+        want[q] = max(want.get(q, now2), now2)
+    got = {
+        r["qid"]: r["last_fetched_ts"]
+        for r in spark.read.parquet(f"{wh}/fetch_state").collect()
+    }
+    assert queue2 and set(state1) - set(queue2)
+    assert got == want
+    assert sorted(p.name for p in (tmp_path / "state").iterdir()
+                  if p.name.startswith("fetch_state")) == ["fetch_state"]
 
 
 def test_flush_any_round_robin(spark):

@@ -95,7 +95,8 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
                          "GreaterThan(l_quantity,40.0)]",),
     )
 
-    # KG mention path: dictionary broadcast; Python only via Arrow
+    # KG mention path: dictionary broadcast; no Python at all, neither a
+    # Python UDF nor a scan of a Python RDD (createDataFrame over a list)
     from arachne_spark.operators.extract import clean_pages
     from arachne_spark.operators.mentions import detect_mentions
     from arachne_spark.sources.dictionary import alias_df
@@ -104,8 +105,8 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     m = detect_mentions(clean_pages(pages_df(spark, 100)), alias_df(spark))
     audit(
         "mention detection", m,
-        expect_contains=("BroadcastHashJoin", "ArrowEvalPython"),
-        expect_absent=("BatchEvalPython",),
+        expect_contains=("BroadcastHashJoin",),
+        expect_absent=("ArrowEvalPython", "BatchEvalPython", "ExistingRDD"),
     )
 
     audit(
