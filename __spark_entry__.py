@@ -1123,6 +1123,705 @@ def q41_distinct_touch(spark, sf_dir):
     ).select(F.col("o_custkey").alias("entity_id"), "n_days")
 
 
+# ---------------------------------------------------------------------------
+# binary fixture encoders, written forward from the public specs and
+# shared by the fixtures below and tests/test_multimodal.py; none of
+# them reads a table or helper of arachne_spark.operators.multimodal
+
+
+def _riff(fourcc: bytes, body: bytes, order: str = "little") -> bytes:
+    """One RIFF chunk (u32 little-endian size, body padded to even);
+    ``order="big"`` gives its IFF/AIFF ancestor."""
+    pad = b"\x00" if len(body) & 1 else b""
+    return fourcc + len(body).to_bytes(4, order) + body + pad
+
+
+def _box(fourcc: bytes, body: bytes = b"", largesize: bool = False) -> bytes:
+    """One ISO-BMFF box: u32 size + type + body, or size 1 + u64
+    largesize."""
+    if largesize:
+        return ((1).to_bytes(4, "big") + fourcc
+                + (16 + len(body)).to_bytes(8, "big") + body)
+    return (8 + len(body)).to_bytes(4, "big") + fourcc + body
+
+
+def _png_chunk(ctype: bytes, data: bytes) -> bytes:
+    """One PNG chunk: u32 length + type + data + CRC32(type + data)."""
+    import zlib
+
+    return (len(data).to_bytes(4, "big") + ctype + data
+            + zlib.crc32(ctype + data).to_bytes(4, "big"))
+
+
+def _ebml_vint(v: int, ln: int = 1) -> bytes:
+    """EBML size vint of at least ``ln`` bytes (RFC 8794)."""
+    while v >= (1 << (7 * ln)) - 1:
+        ln += 1
+    return (v | (1 << (7 * ln))).to_bytes(ln, "big")
+
+
+def _ebml_el(eid: bytes, body: bytes) -> bytes:
+    """One EBML element: raw ID bytes (marker included) + minimal-width
+    size vint + body."""
+    return eid + _ebml_vint(len(body)) + body
+
+
+def _ulaw_enc(x: int) -> int:
+    """ITU-T G.711 mu-law compander, Sun g711.c style."""
+    sign = 0x80 if x < 0 else 0
+    x = min(abs(x), 32635) + 0x84
+    e, mask = 7, 0x4000
+    while e > 0 and not (x & mask):
+        e -= 1
+        mask >>= 1
+    return ~(sign | (e << 4) | ((x >> (e + 3)) & 0x0F)) & 0xFF
+
+
+def _ulaw_lin(c: int) -> int:
+    u = ~c & 0xFF
+    t = (((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)
+    return 0x84 - t if u & 0x80 else t - 0x84
+
+
+def _alaw_enc(x: int) -> int:
+    """ITU-T G.711 A-law compander, Sun g711.c style."""
+    mask = 0xD5 if x >= 0 else 0x55
+    x >>= 3  # 16-bit → 13-bit domain
+    if mask == 0x55:
+        x = -x - 1
+    ends = (0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF)
+    seg = 0
+    while seg < 8 and x > ends[seg]:
+        seg += 1
+    if seg >= 8:
+        return 0x7F ^ mask
+    aval = seg << 4
+    aval |= (x >> 1) & 0x0F if seg < 2 else (x >> seg) & 0x0F
+    return aval ^ mask
+
+
+def _alaw_lin(c: int) -> int:
+    a = c ^ 0x55
+    seg, m = (a >> 4) & 7, a & 0x0F
+    if seg == 0:
+        v = (m << 4) + 8
+    elif seg == 1:
+        v = (m << 4) + 0x108
+    else:
+        v = ((m << 4) + 0x108) << (seg - 1)
+    return v if a & 0x80 else -v
+
+
+# IMA Digital Audio Pack quantizer + MS ADPCM (mmreg.h) tables, the
+# encoders' own copies
+_ENC_IMA_STEPS = (
+    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
+    34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118,
+    130, 143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371,
+    408, 449, 494, 544, 598, 658, 724, 796, 876, 963, 1060,
+    1166, 1282, 1411, 1552, 1707, 1878, 2066, 2272, 2499, 2749,
+    3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132,
+    7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818,
+    18500, 20350, 22385, 24623, 27086, 29794, 32767,
+)
+_ENC_IMA_INDEX = (-1, -1, -1, -1, 2, 4, 6, 8)
+_ENC_MS_COEFS = (
+    (256, 0), (512, -256), (0, 0), (192, 64),
+    (240, 0), (460, -208), (392, -232),
+)
+_ENC_MS_ADAPT = (
+    230, 230, 230, 230, 307, 409, 512, 614,
+    768, 614, 512, 409, 307, 230, 230, 230,
+)
+
+
+def _ima_block(samples, ch, balign, init_idx):
+    """Encode one IMA ADPCM block (samples = per-channel int16 lists,
+    all length spb); returns (block_bytes, per-channel reconstructed
+    samples) — the reconstruction tracks the quantizer exactly, so a
+    decoder must reproduce it bit-for-bit."""
+    blk = bytearray()
+    pred = [s[0] for s in samples]
+    idx = list(init_idx)
+    recon = [[s[0]] for s in samples]
+    for c in range(ch):
+        blk += pred[c].to_bytes(2, "little", signed=True)
+        blk += bytes([idx[c], 0])
+    nibbles = [[] for _ in range(ch)]
+    for j in range(1, len(samples[0])):
+        for c in range(ch):
+            step = _ENC_IMA_STEPS[idx[c]]
+            diff = samples[c][j] - pred[c]
+            nib = 0
+            if diff < 0:
+                nib = 8
+                diff = -diff
+            if diff >= step:
+                nib |= 4
+                diff -= step
+            if diff >= step >> 1:
+                nib |= 2
+                diff -= step >> 1
+            if diff >= step >> 2:
+                nib |= 1
+            d = step >> 3
+            if nib & 4:
+                d += step
+            if nib & 2:
+                d += step >> 1
+            if nib & 1:
+                d += step >> 2
+            p = pred[c] - d if nib & 8 else pred[c] + d
+            p = max(-32768, min(32767, p))
+            pred[c] = p
+            idx[c] = max(0, min(88, idx[c] + _ENC_IMA_INDEX[nib & 7]))
+            recon[c].append(p)
+            nibbles[c].append(nib)
+    gi = 0
+    while gi < len(nibbles[0]):
+        for c in range(ch):
+            grp = nibbles[c][gi:gi + 8]
+            for k in range(0, 8, 2):
+                blk.append(grp[k] | (grp[k + 1] << 4))
+        gi += 8
+    assert len(blk) == balign
+    return bytes(blk), recon
+
+
+def _ms_block(samples, ch, balign, ipred, idelta0):
+    """Encode one MS ADPCM block; returns (block_bytes, per-channel
+    reconstruction).  Predictor division truncates toward zero like
+    the spec's C pseudocode."""
+    c1, c2 = _ENC_MS_COEFS[ipred]
+    blk = bytearray(bytes([ipred] * ch))
+    delta = [idelta0] * ch
+    for c in range(ch):
+        blk += delta[c].to_bytes(2, "little", signed=True)
+    for c in range(ch):
+        blk += samples[c][1].to_bytes(2, "little", signed=True)
+    for c in range(ch):
+        blk += samples[c][0].to_bytes(2, "little", signed=True)
+    chan = [[samples[c][0], samples[c][1]] for c in range(ch)]
+    nibs = []
+    for j in range(2, len(samples[0])):
+        for c in range(ch):
+            s = chan[c][-1] * c1 + chan[c][-2] * c2
+            predv = -((-s) >> 8) if s < 0 else s >> 8
+            snib = max(-8, min(7, round((samples[c][j] - predv)
+                                        / delta[c])))
+            v = max(-32768, min(32767, predv + delta[c] * snib))
+            chan[c].append(v)
+            nib = snib & 0x0F
+            nibs.append(nib)
+            delta[c] = max((_ENC_MS_ADAPT[nib] * delta[c]) >> 8, 16)
+    for k in range(0, len(nibs), 2):
+        blk.append((nibs[k] << 4) | nibs[k + 1])
+    assert len(blk) == balign
+    return bytes(blk), chan
+
+
+def _wav_coded(tag, ch, rate, bits, balign, data, fact=None,
+               extensible=False):
+    """RIFF/WAVE with one fmt chunk (optionally WAVE_FORMAT_EXTENSIBLE,
+    the tag moved into the SubFormat GUID), an optional `fact` frame
+    count, and the data chunk."""
+    import struct
+
+    if extensible:
+        fmt = struct.pack(
+            "<HHIIHH", 0xFFFE, ch, rate, rate * balign, balign, bits,
+        )
+        fmt += struct.pack("<HHI", 22, bits, 0)
+        fmt += tag.to_bytes(2, "little") + (
+            b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71")
+    else:
+        fmt = struct.pack(
+            "<HHIIHH", tag, ch, rate, rate * balign, balign, bits
+        )
+    body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
+    if fact is not None:
+        body += (b"fact" + (4).to_bytes(4, "little")
+                 + fact.to_bytes(4, "little"))
+    body += b"data" + len(data).to_bytes(4, "little") + data
+    return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+def _ext80(rate: int) -> bytes:
+    """A positive integer as the 80-bit IEEE extended float AIFF's
+    COMM sampleRate uses (explicit-integer-bit mantissa)."""
+    if rate == 0:
+        return bytes(10)
+    e = rate.bit_length() - 1
+    mant = rate << (63 - e)
+    return (16383 + e).to_bytes(2, "big") + mant.to_bytes(8, "big")
+
+
+def _mkv_block(track, frames, lacing="none", group=False):
+    """One Matroska SimpleBlock (or BlockGroup>Block when group=True)
+    holding ``frames`` with the given lacing ('none' | 'xiph' |
+    'fixed' | 'ebml')."""
+    lbits = {"none": 0, "xiph": 1, "fixed": 2, "ebml": 3}[lacing]
+    body = (_ebml_vint(track) + b"\x00\x00"
+            + bytes([(0 if group else 0x80) | (lbits << 1)]))
+    if lacing == "none":
+        assert len(frames) == 1
+        body += frames[0]
+    else:
+        body += bytes([len(frames) - 1])
+        if lacing == "xiph":
+            for fr in frames[:-1]:
+                sz = len(fr)
+                body += b"\xff" * (sz // 255) + bytes([sz % 255])
+        elif lacing == "ebml":
+            body += _ebml_vint(len(frames[0]), 2)
+            prev = len(frames[0])
+            for fr in frames[1:-1]:
+                body += ((len(fr) - prev + (1 << 13) - 1)
+                         | (1 << 14)).to_bytes(2, "big")
+                prev = len(fr)
+        else:  # fixed: all frames must share a size
+            assert len({len(f) for f in frames}) == 1
+        body += b"".join(frames)
+    blk = _ebml_el(b"\xa1" if group else b"\xa3", body)
+    return _ebml_el(b"\xa0", blk) if group else blk
+
+
+def _tiff_lzw_enc(raw: bytes) -> bytes:
+    """TIFF-LZW encoder (TIFF 6.0 §13): real dictionary compression
+    with MSB-first variable-width codes — leading ClearCode, EOI
+    trailer, width widened when the NEXT free index reaches 2^width
+    (the dictionary side of the spec's early change: the decoder, one
+    entry behind, widens at 2^width - 1), and a mid-stream ClearCode
+    reset before the table overflows."""
+    out = bytearray()
+    bitbuf = nbits = 0
+
+    def emit(code: int, width: int) -> None:
+        nonlocal bitbuf, nbits
+        bitbuf = (bitbuf << width) | code
+        nbits += width
+        while nbits >= 8:
+            out.append((bitbuf >> (nbits - 8)) & 0xFF)
+            nbits -= 8
+
+    table = {bytes([i]): i for i in range(256)}
+    next_code, width = 258, 9
+    emit(256, width)  # every strip begins with Clear
+    w = b""
+    for b in raw:
+        wc = w + bytes([b])
+        if wc in table:
+            w = wc
+            continue
+        emit(table[w], width)
+        table[wc] = next_code
+        next_code += 1
+        if next_code == (1 << width) and width < 12:
+            width += 1
+        w = bytes([b])
+        if next_code == 4094:  # reset before the 12-bit table fills
+            emit(256, width)
+            table = {bytes([i]): i for i in range(256)}
+            next_code, width = 258, 9
+    if w:
+        emit(table[w], width)
+    emit(257, width)  # EOI
+    if nbits:
+        out.append((bitbuf << (8 - nbits)) & 0xFF)
+    return bytes(out)
+
+
+def _mp4_frames(samples, chunks=None, co64=False, uniform=False,
+                handler=b"vide", w=64, h=48):
+    """MP4 with a REAL video sample table: ftyp + moov(mvhd +
+    trak(tkhd + mdia(hdlr + minf(stbl(stsz + stsc + stco/co64))))) +
+    mdat carrying the samples; ``chunks`` = samples-per-chunk layout,
+    chunk offsets are absolute (two-pass build).  The table is
+    composed forward from the layout, never walked."""
+    if chunks is None:
+        k = len(samples) // 2
+        chunks = [2] * k + ([1] if len(samples) % 2 else [])
+    assert sum(chunks) == len(samples)
+    sizes = [len(s) for s in samples]
+    if uniform:
+        assert len(set(sizes)) == 1
+        stsz = (bytes(4) + sizes[0].to_bytes(4, "big")
+                + len(samples).to_bytes(4, "big"))
+    else:
+        stsz = (bytes(4) + bytes(4) + len(samples).to_bytes(4, "big")
+                + b"".join(sz.to_bytes(4, "big") for sz in sizes))
+    runs = []
+    for ci, per in enumerate(chunks):
+        if not runs or runs[-1][1] != per:
+            runs.append((ci + 1, per))
+    stsc = (bytes(4) + len(runs).to_bytes(4, "big")
+            + b"".join(f.to_bytes(4, "big") + p.to_bytes(4, "big")
+                       + (1).to_bytes(4, "big") for f, p in runs))
+    ow = 8 if co64 else 4
+
+    def build(chunk_offsets):
+        stco = (bytes(4) + len(chunks).to_bytes(4, "big")
+                + b"".join(o.to_bytes(ow, "big")
+                           for o in chunk_offsets))
+        stbl = (_box(b"stsz", stsz) + _box(b"stsc", stsc)
+                + _box(b"co64" if co64 else b"stco", stco))
+        hdlr = bytes(8) + handler + bytes(4)
+        mdia = _box(b"hdlr", hdlr) + _box(b"minf", _box(b"stbl", stbl))
+        tkhd = (bytes(4) + b"\x00" * 72
+                + (w << 16).to_bytes(4, "big")
+                + (h << 16).to_bytes(4, "big"))
+        mvhd = (bytes(4) + b"\x00" * 8 + (600).to_bytes(4, "big")
+                + (1200).to_bytes(4, "big"))
+        moov = _box(b"mvhd", mvhd) + _box(
+            b"trak", _box(b"tkhd", tkhd) + _box(b"mdia", mdia)
+        )
+        return _box(b"ftyp", b"isom" + bytes(4)) + _box(b"moov", moov)
+
+    head = build([0] * len(chunks))
+    pos = len(head) + 8  # mdat body starts after its 8-byte header
+    offsets, si = [], 0
+    for per in chunks:
+        offsets.append(pos)
+        for _ in range(per):
+            pos += len(samples[si])
+            si += 1
+    return build(offsets) + _box(b"mdat", b"".join(samples))
+
+
+def _avi(frames, w=16, h=12, us_per_frame=40000, handler=b"MJPG",
+         rec_group=False, n_streams=1, strf=None):
+    """Minimal valid RIFF-AVI: hdrl LIST (avih MainAVIHeader + strl
+    with a 'vids' strh and optionally its strf format blob) + movi
+    LIST holding one '00dc' chunk per frame (optionally the tail
+    frames inside a 'rec ' group)."""
+    avih = (
+        us_per_frame.to_bytes(4, "little") + bytes(12)
+        + len(frames).to_bytes(4, "little") + bytes(4)
+        + n_streams.to_bytes(4, "little") + bytes(4)
+        + w.to_bytes(4, "little") + h.to_bytes(4, "little") + bytes(16)
+    )
+    strh = b"vids" + handler + bytes(48)
+    strl = _riff(b"strh", strh)
+    if strf is not None:
+        strl += _riff(b"strf", strf)
+    hdrl = _riff(
+        b"LIST",
+        b"hdrl" + _riff(b"avih", avih)
+        + _riff(b"LIST", b"strl" + strl),
+    )
+    chunks = [_riff(b"00dc", bytes(f)) for f in frames]
+    if rec_group and len(chunks) > 1:
+        head, tail = chunks[0], b"".join(chunks[1:])
+        movi_body = head + _riff(b"LIST", b"rec " + tail)
+    else:
+        movi_body = b"".join(chunks)
+    movi = _riff(b"LIST", b"movi" + movi_body)
+    body = b"AVI " + hdrl + movi
+    return b"RIFF" + len(body).to_bytes(4, "little") + body
+
+
+def _bih(w, h, bpp, compression, palette=b"", size_image=0):
+    """BITMAPINFOHEADER (+palette) blob — the strf body of an AVI
+    video stream and the info header of a re-wrapped BMP."""
+    return (
+        (40).to_bytes(4, "little")
+        + w.to_bytes(4, "little", signed=True)
+        + h.to_bytes(4, "little", signed=True)
+        + (1).to_bytes(2, "little")
+        + bpp.to_bytes(2, "little")
+        + (compression if isinstance(compression, int)
+           else int.from_bytes(compression, "little"))
+        .to_bytes(4, "little")
+        + size_image.to_bytes(4, "little")
+        + bytes(8)
+        + (len(palette) // 4).to_bytes(4, "little")
+        + bytes(4)
+        + palette
+    )
+
+
+def _wrap_bmp(bih_palette: bytes, data: bytes) -> bytes:
+    """BM file header + info-header blob + frame data: a standalone
+    BMP around one DIB/RLE/MS Video 1 frame."""
+    off = 14 + len(bih_palette)
+    return (b"BM" + (off + len(data)).to_bytes(4, "little")
+            + bytes(4) + off.to_bytes(4, "little")
+            + bih_palette + data)
+
+
+def _webp(w, h, kind="lossy", keyframe=True, start_code=True,
+          version=0, riff_pad=0, lead_junk=False):
+    """Build a WebP container: simple-lossy ('VP8 '), simple-lossless
+    (VP8L) or extended (VP8X) leading chunk, RIFF size covering the
+    padded chunk table exactly (+riff_pad to corrupt it)."""
+    if kind == "lossy":
+        tag = b"\x00\x00\x00" if keyframe else b"\x01\x00\x00"
+        sc = b"\x9d\x01\x2a" if start_code else b"\x9d\x01\x2b"
+        body = tag + sc + w.to_bytes(2, "little") + h.to_bytes(2, "little")
+        chunks = _riff(b"VP8 ", body + b"\x00\x00")
+    elif kind == "lossless":
+        bits = (w - 1) | ((h - 1) << 14) | (version << 29)
+        chunks = _riff(b"VP8L", b"\x2f" + bits.to_bytes(4, "little"))
+    else:  # extended
+        body = (b"\x00" + b"\x00\x00\x00"
+                + (w - 1).to_bytes(3, "little")
+                + (h - 1).to_bytes(3, "little"))
+        chunks = _riff(b"VP8X", body)
+    if lead_junk:
+        chunks = _riff(b"JUNK", b"xy") + chunks
+    riff = b"WEBP" + chunks
+    return b"RIFF" + (len(riff) + riff_pad).to_bytes(4, "little") + riff
+
+
+def _heif(w, h, brand=b"avif", compat=(b"mif1",), with_pitm=True,
+          pitm_id=1, ipma_flags=0, essential=False,
+          extra_ispe_first=None):
+    """Build a minimal HEIF/AVIF still image: ftyp + meta(pitm, iprp(
+    ipco(ispe...), ipma)).  extra_ispe_first prepends a decoy ispe so
+    the pitm→ipma association must pick the SECOND property."""
+    ispes = []
+    if extra_ispe_first is not None:
+        dw, dh = extra_ispe_first
+        ispes.append(_box(
+            b"ispe", b"\x00" * 4 + dw.to_bytes(4, "big")
+            + dh.to_bytes(4, "big")))
+    ispes.append(_box(
+        b"ispe", b"\x00" * 4 + w.to_bytes(4, "big")
+        + h.to_bytes(4, "big")))
+    ipco = _box(b"ipco", b"".join(ispes))
+    idx = len(ispes)  # associate the REAL ispe (1-based)
+    if ipma_flags & 1:
+        assoc = ((0x8000 if essential else 0) | idx).to_bytes(2, "big")
+    else:
+        assoc = bytes([(0x80 if essential else 0) | idx])
+    entry = pitm_id.to_bytes(2, "big") + bytes([1]) + assoc
+    ipma = _box(
+        b"ipma", bytes([0]) + ipma_flags.to_bytes(3, "big")
+        + (1).to_bytes(4, "big") + entry)
+    meta_kids = b""
+    if with_pitm:
+        meta_kids += _box(
+            b"pitm", b"\x00" * 4 + pitm_id.to_bytes(2, "big"))
+    meta_kids += _box(b"iprp", ipco + ipma)
+    meta = _box(b"meta", b"\x00" * 4 + meta_kids)
+    ftyp = _box(
+        b"ftyp", brand + b"\x00" * 4 + b"".join(compat))
+    return ftyp + meta
+
+
+# Adam7 pass origins/steps (x0, y0, dx, dy), PNG spec §8.2
+_ENC_ADAM7 = (
+    (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
+    (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
+)
+
+
+def _png_filter(rows, stride: int, bpp: int) -> bytearray:
+    """Forward-filter PNG scanlines, row y with filter type y % 5 so
+    all five filters (None/Sub/Up/Average/Paeth) are exercised."""
+
+    def paeth(a, b, c):
+        p = a + b - c
+        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+        return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
+
+    out, prev = bytearray(), bytes(stride)
+    for y, row in enumerate(rows):
+        ft = y % 5
+        out.append(ft)
+        for x in range(stride):
+            a = row[x - bpp] if x >= bpp else 0
+            b = prev[x]
+            c = prev[x - bpp] if x >= bpp else 0
+            if ft == 0:
+                out.append(row[x])
+            elif ft == 1:
+                out.append((row[x] - a) & 0xFF)
+            elif ft == 2:
+                out.append((row[x] - b) & 0xFF)
+            elif ft == 3:
+                out.append((row[x] - ((a + b) >> 1)) & 0xFF)
+            else:
+                out.append((row[x] - paeth(a, b, c)) & 0xFF)
+        prev = bytes(row)
+    return out
+
+
+def _png_file(w, h, depth, color, scan, interlace=0, plte=None):
+    """PNG magic + IHDR (+ PLTE) + one zlib-compressed IDAT holding
+    the already-filtered ``scan`` + IEND."""
+    import struct
+    import zlib
+
+    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, interlace)
+    body = _png_chunk(b"IHDR", ihdr)
+    if plte is not None:
+        body += _png_chunk(b"PLTE", plte)
+    return (b"\x89PNG\r\n\x1a\n" + body
+            + _png_chunk(b"IDAT", zlib.compress(bytes(scan)))
+            + _png_chunk(b"IEND", b""))
+
+
+def _png_raw(w, h, color, pixel):
+    """Valid PNG with REAL zlib pixel data, filter 0 on every row
+    (the all-filters encoding path is covered by the q45 fixture
+    roundtrip below); ``pixel(x, y) -> tuple of channel bytes``."""
+    scan = bytearray()
+    for y in range(h):
+        scan.append(0)
+        for x in range(w):
+            scan.extend(pixel(x, y))
+    return _png_file(w, h, 8, color, scan)
+
+
+def _ico_dib(w, h, rgb, clr_used_override=None):
+    """One ICO directory image as a 24-bit DIB: BITMAPINFOHEADER with
+    DOUBLED height, bottom-up BGR rows, then an all-opaque 1-bit AND
+    mask."""
+    import struct
+
+    row_len = ((w * 3 + 3) // 4) * 4
+    rows = b""
+    for y in range(h - 1, -1, -1):
+        r = b"".join(
+            bytes([rgb[(y * w + x) * 3 + 2], rgb[(y * w + x) * 3 + 1],
+                   rgb[(y * w + x) * 3]])
+            for x in range(w))
+        rows += r + b"\x00" * (row_len - len(r))
+    mask = b"\x00" * (((w + 31) // 32) * 4 * h)
+    hdr = struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 24, 0, 0,
+                      0, 0, clr_used_override or 0, 0)
+    return hdr + rows + mask
+
+
+def _ico(blobs, kind=1):
+    """ICO/CUR container around raw entry blobs (PNGs or DIBs)."""
+    n = len(blobs)
+    off0 = 6 + 16 * n
+    dirs, datas = b"", b""
+    for b in blobs:
+        dirs += (bytes([0, 0, 0, 0]) + (1).to_bytes(2, "little")
+                 + (24).to_bytes(2, "little")
+                 + len(b).to_bytes(4, "little")
+                 + (off0 + len(datas)).to_bytes(4, "little"))
+        datas += b
+    return (b"\x00\x00" + kind.to_bytes(2, "little")
+            + n.to_bytes(2, "little") + dirs + datas)
+
+
+def _tiff_file(tags, chunks, endian="little") -> bytes:
+    """Baseline TIFF: header, one IFD of ``tags`` — (tag, type,
+    values), type 3 SHORT / 4 LONG / 7 UNDEFINED (values = bytes),
+    values None = the chunk offsets — sorted by tag, value arrays
+    longer than the 4-byte field spilled after the IFD, then
+    ``chunks`` (strips or tiles).  Two passes: the spill size depends
+    only on counts, not on the offsets."""
+    import struct
+
+    bo = "<" if endian == "little" else ">"
+    ext_off = 8 + 2 + 12 * len(tags) + 4
+
+    def build(offsets):
+        ext, entries = bytearray(), []
+        for tag, typ, vals in tags:
+            vals = offsets if vals is None else vals
+            raw = vals if typ == 7 else b"".join(
+                struct.pack(bo + ("H" if typ == 3 else "I"), v)
+                for v in vals)
+            if len(raw) <= 4:
+                field = raw + b"\x00" * (4 - len(raw))
+            else:
+                field = struct.pack(bo + "I", ext_off + len(ext))
+                ext.extend(raw)
+            entries.append(struct.pack(bo + "HHI", tag, typ, len(vals))
+                           + field)
+        entries.sort(key=lambda e: int.from_bytes(e[:2], endian))
+        ifd = (struct.pack(bo + "H", len(tags)) + b"".join(entries)
+               + struct.pack(bo + "I", 0))
+        return ifd, bytes(ext)
+
+    _, ext0 = build([0] * len(chunks))
+    offsets, pos = [], ext_off + len(ext0)
+    for c in chunks:
+        offsets.append(pos)
+        pos += len(c)
+    ifd, ext = build(offsets)
+    magic = b"II*\x00" if endian == "little" else b"MM\x00*"
+    return (magic + struct.pack(bo + "I", 8) + ifd + ext
+            + b"".join(chunks))
+
+
+def _tiff_px(w, h, pixels, endian="little", spp=3, photometric=None,
+             n_strips=2, compression=1, predictor=1):
+    """Full baseline TIFF with REAL pixel strips: 9-entry IFD (dims,
+    8-bit samples, compression, photometric, strip offsets/counts,
+    spp, rows-per-strip; +Predictor when asked), value arrays spilled
+    past the 4-byte field when needed, strip data appended last.
+    ``compression`` 8 deflates each strip independently; 32773
+    PackBits-encodes each strip (independent RLE encoder: literal
+    runs chunked at 128, repeats for >=3 equal bytes); 5 LZW-encodes
+    each strip (``_tiff_lzw_enc``); ``predictor=2`` applies forward
+    horizontal differencing per row/channel before compression."""
+    import zlib
+
+    if photometric is None:
+        photometric = 2 if spp == 3 else 1
+    rps = max(1, (h + n_strips - 1) // n_strips)
+    row_bytes = w * spp
+    if predictor == 2:  # forward horizontal differencing
+        diff = bytearray(pixels)
+        for y in range(h):
+            base = y * row_bytes
+            for x in range(row_bytes - 1, spp - 1, -1):
+                diff[base + x] = (
+                    diff[base + x] - pixels[base + x - spp]
+                ) & 0xFF
+        pixels = bytes(diff)
+
+    def packbits_enc(raw: bytes) -> bytes:
+        out = bytearray()
+        i, n = 0, len(raw)
+        while i < n:
+            # find a repeat run of >= 3
+            j = i
+            while j + 1 < n and raw[j + 1] == raw[j] and j - i < 127:
+                j += 1
+            if j - i >= 2:  # repeat run [i..j]
+                out.append(257 - (j - i + 1))
+                out.append(raw[i])
+                i = j + 1
+            else:  # literal run up to next repeat-of-3 or 128 bytes
+                j = i
+                while (j < n and j - i < 128
+                       and not (j + 2 < n and raw[j + 1] == raw[j]
+                                and raw[j + 2] == raw[j])):
+                    j += 1
+                out.append(j - i - 1)
+                out += raw[i:j]
+                i = j
+        return bytes(out)
+
+    strips = [
+        bytes(pixels[r * row_bytes:min(r + rps, h) * row_bytes])
+        for r in range(0, h, rps)
+    ]
+    if compression == 8:
+        strips = [zlib.compress(s) for s in strips]
+    elif compression == 32773:
+        strips = [packbits_enc(s) for s in strips]
+    elif compression == 5:
+        strips = [_tiff_lzw_enc(s) for s in strips]
+    tags = [
+        (256, 3, [w]), (257, 3, [h]), (258, 3, [8] * spp),
+        (259, 3, [compression]), (262, 3, [photometric]),
+        (273, 4, None), (277, 3, [spp]), (278, 3, [rps]),
+        (279, 4, [len(s) for s in strips]),
+    ]
+    if predictor != 1:
+        tags.append((317, 3, [predictor]))
+    return _tiff_file(tags, strips, endian)
+
+
 def _avi_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     """Deterministic valid RIFF-AVI payloads embedding baseline-JPEG
     frames (drawn from ``_jpeg_fixture``): (id, avi_bytes, frames).
@@ -1131,33 +1830,11 @@ def _avi_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     Spark side recovers them from the actual AVI bytes through the
     REAL RIFF walk (``multimodal._avi_scan``).  8 videos, 5-9 frames
     each, ids 3_000_000+i."""
-
-    def riff(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return fourcc + len(body).to_bytes(4, "little") + body + pad
-
     jpegs = [b for _, b, _, _ in _jpeg_fixture()]
     out = []
     for i in range(8):
         frames = [jpegs[(i * 5 + k) % len(jpegs)] for k in range(5 + i % 5)]
-        avih = (
-            (40000 + i).to_bytes(4, "little") + bytes(12)
-            + len(frames).to_bytes(4, "little") + bytes(4)
-            + (1).to_bytes(4, "little") + bytes(4)
-            + (8).to_bytes(4, "little") + (8).to_bytes(4, "little")
-            + bytes(16)
-        )
-        hdrl = riff(
-            b"LIST",
-            b"hdrl" + riff(b"avih", avih)
-            + riff(b"LIST",
-                   b"strl" + riff(b"strh", b"vidsMJPG" + bytes(48))),
-        )
-        movi = riff(
-            b"LIST", b"movi" + b"".join(riff(b"00dc", f) for f in frames)
-        )
-        body = b"AVI " + hdrl + movi
-        avi = b"RIFF" + len(body).to_bytes(4, "little") + body
+        avi = _avi(frames, w=8, h=8, us_per_frame=40000 + i)
         out.append((3_000_000 + i, avi, frames))
     return out
 
@@ -1179,17 +1856,13 @@ def _avi_oracle_rows() -> str:
 
 def _mp4_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     """Deterministic valid sample-table MP4 payloads: (id, mp4_bytes,
-    samples).  The writer composes ftyp + moov(mvhd + trak(tkhd +
-    mdia(hdlr 'vide' + minf(stbl(stsz + stsc + stco))))) + mdat
+    samples).  The writer (``_mp4_frames``) composes the sample table
     forward from the layout — the oracle twin hashes the sample list
     directly and never parses ISO-BMFF; the Spark side recovers the
     samples from the actual bytes through the REAL table walk
     (``multimodal._mp4_video_frames``).  6 videos, 5-10 samples each
     (JPEG frames from ``_jpeg_fixture``), varied chunk layouts, ids
     7_000_000+i."""
-
-    def box(fourcc: bytes, body: bytes) -> bytes:
-        return (8 + len(body)).to_bytes(4, "big") + fourcc + body
 
     jpegs = [b for _, b, _, _ in _jpeg_fixture()]
     out = []
@@ -1198,45 +1871,7 @@ def _mp4_fixture() -> list[tuple[int, bytes, list[bytes]]]:
             jpegs[(i * 7 + k) % len(jpegs)] for k in range(5 + i)
         ]
         chunks = [3, len(samples) - 3] if i % 2 else [len(samples)]
-        sizes = b"".join(len(s).to_bytes(4, "big") for s in samples)
-        stsz = (bytes(8) + len(samples).to_bytes(4, "big") + sizes)
-        runs = []
-        for ci, per in enumerate(chunks):
-            if not runs or runs[-1][1] != per:
-                runs.append((ci + 1, per))
-        stsc = (bytes(4) + len(runs).to_bytes(4, "big") + b"".join(
-            f.to_bytes(4, "big") + p.to_bytes(4, "big")
-            + (1).to_bytes(4, "big") for f, p in runs
-        ))
-
-        def build(offsets):
-            stco = (bytes(4) + len(chunks).to_bytes(4, "big")
-                    + b"".join(o.to_bytes(4, "big") for o in offsets))
-            stbl = box(b"stsz", stsz) + box(b"stsc", stsc) + box(
-                b"stco", stco
-            )
-            mdia = box(b"hdlr", bytes(8) + b"vide" + bytes(4)) + box(
-                b"minf", box(b"stbl", stbl)
-            )
-            tkhd = (bytes(4) + bytes(72)
-                    + (64 << 16).to_bytes(4, "big")
-                    + (48 << 16).to_bytes(4, "big"))
-            mvhd = (bytes(4) + bytes(8) + (600).to_bytes(4, "big")
-                    + (1200).to_bytes(4, "big"))
-            moov = box(b"mvhd", mvhd) + box(
-                b"trak", box(b"tkhd", tkhd) + box(b"mdia", mdia)
-            )
-            return box(b"ftyp", b"isom" + bytes(4)) + box(b"moov", moov)
-
-        head = build([0] * len(chunks))
-        pos = len(head) + 8
-        offsets, si = [], 0
-        for per in chunks:
-            offsets.append(pos)
-            for _ in range(per):
-                pos += len(samples[si])
-                si += 1
-        payload = build(offsets) + box(b"mdat", b"".join(samples))
+        payload = _mp4_frames(samples, chunks)
         out.append((7_000_000 + i, payload, samples))
     return out
 
@@ -1375,11 +2010,6 @@ def _cram_avi_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     ``decode_bmp_pixels`` (pinned independently in
     tests/test_multimodal.py).  4 videos, 5-8 frames each, ids
     9_000_000+i."""
-
-    def riff(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return fourcc + len(body).to_bytes(4, "little") + body + pad
-
     out = []
     for i in range(4):
         w, h = 8 + 4 * (i % 2), 8
@@ -1389,14 +2019,7 @@ def _cram_avi_fixture() -> list[tuple[int, bytes, list[bytes]]]:
                    (c * 17 + i * 3) % 256, 0))
             for c in range(16)
         )
-        strf = (
-            (40).to_bytes(4, "little")
-            + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-            + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-            + b"CRAM" + bytes(12)
-            + (16).to_bytes(4, "little") + bytes(4)
-            + palette
-        )
+        strf = _bih(w, h, 8, b"CRAM", palette)
         n_frames = 5 + i
         chunks = []
         for k in range(n_frames):
@@ -1419,31 +2042,9 @@ def _cram_avi_fixture() -> list[tuple[int, bytes, list[bytes]]]:
                 else:            # skip this one block (black canvas)
                     data += bytes([1, 0x84])
             chunks.append(bytes(data))
-        avih = (
-            (40000 + i).to_bytes(4, "little") + bytes(12)
-            + n_frames.to_bytes(4, "little") + bytes(4)
-            + (1).to_bytes(4, "little") + bytes(4)
-            + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-            + bytes(16)
-        )
-        hdrl = riff(
-            b"LIST",
-            b"hdrl" + riff(b"avih", avih)
-            + riff(b"LIST",
-                   b"strl" + riff(b"strh", b"vidsCRAM" + bytes(48))
-                   + riff(b"strf", strf)),
-        )
-        movi = riff(
-            b"LIST", b"movi" + b"".join(riff(b"00dc", c) for c in chunks)
-        )
-        body = b"AVI " + hdrl + movi
-        avi = b"RIFF" + len(body).to_bytes(4, "little") + body
-        off = 14 + len(strf)
-        frames = [
-            b"BM" + (off + len(c)).to_bytes(4, "little")
-            + bytes(4) + off.to_bytes(4, "little") + strf + c
-            for c in chunks
-        ]
+        avi = _avi(chunks, w=w, h=h, us_per_frame=40000 + i,
+                   handler=b"CRAM", strf=strf)
+        frames = [_wrap_bmp(strf, c) for c in chunks]
         out.append((9_000_000 + i, avi, frames))
     return out
 
@@ -1552,10 +2153,6 @@ def _compose_fixture() -> list[tuple[int, bytes, list[bytes]]]:
         out.append((10_000_000 + i, bytes(anim), frames))
 
     # --- CRAM AVIs: 1-color repaints + persisting skips -------------
-    def riff(fourcc: bytes, body: bytes) -> bytes:
-        pad = b"\x00" if len(body) & 1 else b""
-        return fourcc + len(body).to_bytes(4, "little") + body + pad
-
     for i in range(2):
         w, h = 8 + 4 * i, 8
         n_bx, n_by = w // 4, h // 4
@@ -1566,14 +2163,7 @@ def _compose_fixture() -> list[tuple[int, bytes, list[bytes]]]:
             for c in range(16)
         ]
         palette = b"".join(bytes((b_, g, r, 0)) for r, g, b_ in pal_rgb)
-        strf = (
-            (40).to_bytes(4, "little")
-            + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-            + (1).to_bytes(2, "little") + (8).to_bytes(2, "little")
-            + b"CRAM" + bytes(12)
-            + (16).to_bytes(4, "little") + bytes(4)
-            + palette
-        )
+        strf = _bih(w, h, 8, b"CRAM", palette)
         n_frames = 4 + i
         # block-color spec: grid[j] indexed top-down (j = by*n_bx+bx)
         grid = [(j * 3 + i) % 16 for j in range(n_blocks)]
@@ -1599,71 +2189,19 @@ def _compose_fixture() -> list[tuple[int, bytes, list[bytes]]]:
                 bytes(pal_rgb[state[(y // 4) * n_bx + (x // 4)]])
                 for y in range(h) for x in range(w)
             ))
-        avih = (
-            (40000 + i).to_bytes(4, "little") + bytes(12)
-            + n_frames.to_bytes(4, "little") + bytes(4)
-            + (1).to_bytes(4, "little") + bytes(4)
-            + w.to_bytes(4, "little") + h.to_bytes(4, "little")
-            + bytes(16)
-        )
-        hdrl = riff(
-            b"LIST",
-            b"hdrl" + riff(b"avih", avih)
-            + riff(b"LIST",
-                   b"strl" + riff(b"strh", b"vidsCRAM" + bytes(48))
-                   + riff(b"strf", strf)),
-        )
-        movi = riff(
-            b"LIST",
-            b"movi" + b"".join(riff(b"00dc", c) for c in chunks),
-        )
-        body = b"AVI " + hdrl + movi
-        avi = b"RIFF" + len(body).to_bytes(4, "little") + body
+        avi = _avi(chunks, w=w, h=h, us_per_frame=40000 + i,
+                   handler=b"CRAM", strf=strf)
         out.append((10_000_050 + i, avi, frames))
 
     # --- MJPEG MP4s: sequential + progressive of one spec index -----
     jpegs = {vid_id: (b, w, h) for vid_id, b, w, h in _jpeg_fixture()}
-
-    def box(fourcc: bytes, body: bytes) -> bytes:
-        return (8 + len(body)).to_bytes(4, "big") + fourcc + body
 
     for j in range(3):
         i = 4 * j + 1
         seq, w, h = jpegs[2_000_000 + i]
         prog, pw, ph = jpegs[4_000_000 + i]
         assert (w, h) == (pw, ph)
-        samples = [seq, prog]
-        sizes = b"".join(len(s).to_bytes(4, "big") for s in samples)
-        stsz = bytes(8) + len(samples).to_bytes(4, "big") + sizes
-        stsc = (bytes(4) + (1).to_bytes(4, "big")
-                + (1).to_bytes(4, "big")
-                + len(samples).to_bytes(4, "big")
-                + (1).to_bytes(4, "big"))
-
-        def build(offset):
-            stco = (bytes(4) + (1).to_bytes(4, "big")
-                    + offset.to_bytes(4, "big"))
-            stbl = (box(b"stsz", stsz) + box(b"stsc", stsc)
-                    + box(b"stco", stco))
-            mdia = box(b"hdlr", bytes(8) + b"vide" + bytes(4)) + box(
-                b"minf", box(b"stbl", stbl)
-            )
-            tkhd = (bytes(4) + bytes(72)
-                    + (w << 16).to_bytes(4, "big")
-                    + (h << 16).to_bytes(4, "big"))
-            mvhd = (bytes(4) + bytes(8) + (600).to_bytes(4, "big")
-                    + (1200).to_bytes(4, "big"))
-            moov = box(b"mvhd", mvhd) + box(
-                b"trak", box(b"tkhd", tkhd) + box(b"mdia", mdia)
-            )
-            return box(b"ftyp", b"isom" + bytes(4)) + box(
-                b"moov", moov
-            )
-
-        head = build(0)
-        payload = build(len(head) + 8) + box(
-            b"mdat", b"".join(samples)
-        )
+        payload = _mp4_frames([seq, prog], [2], w=w, h=h)
         # expected grayscale pixels straight from the block spec —
         # the analytic decode both payloads share (``_jpeg_fixture``)
         grey = bytes(
@@ -1702,66 +2240,31 @@ def _mkv_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     Cluster walk (``multimodal._mkv_video_frames``).  4 videos, ids
     11_000_000+i; video 3 streams an unknown-size Segment."""
 
-    def el(eid: bytes, body: bytes) -> bytes:
-        size, ln = len(body), 1
-        while size >= (1 << (7 * ln)) - 1:
-            ln += 1
-        return (eid + (size | (1 << (7 * ln))).to_bytes(ln, "big")
-                + body)
-
     def uint(v: int) -> bytes:
         return v.to_bytes(max(1, (v.bit_length() + 7) // 8), "big")
 
-    def vint(v: int, ln: int = 1) -> bytes:
-        while v >= (1 << (7 * ln)) - 1:
-            ln += 1
-        return (v | (1 << (7 * ln))).to_bytes(ln, "big")
-
-    def block(track, frames, lacing, group=False):
-        lbits = {"none": 0, "xiph": 1, "fixed": 2, "ebml": 3}[lacing]
-        body = (vint(track) + b"\x00\x00"
-                + bytes([(0 if group else 0x80) | (lbits << 1)]))
-        if lacing == "none":
-            body += frames[0]
-        else:
-            body += bytes([len(frames) - 1])
-            if lacing == "xiph":
-                for fr in frames[:-1]:
-                    sz = len(fr)
-                    body += b"\xff" * (sz // 255) + bytes([sz % 255])
-            elif lacing == "ebml":
-                body += vint(len(frames[0]), 2)
-                prev = len(frames[0])
-                for fr in frames[1:-1]:
-                    body += ((len(fr) - prev + (1 << 13) - 1)
-                             | (1 << 14)).to_bytes(2, "big")
-                    prev = len(fr)
-            body += b"".join(frames)
-        blk = el(b"\xa1" if group else b"\xa3", body)
-        return el(b"\xa0", blk) if group else blk
-
     def track_entry(num, ttype, w=None, h=None):
-        body = el(b"\x83", bytes([ttype])) + el(b"\xd7", uint(num))
+        body = _ebml_el(b"\x83", bytes([ttype])) + _ebml_el(b"\xd7", uint(num))
         if w:
-            body += el(b"\xe0",
-                       el(b"\xb0", uint(w)) + el(b"\xba", uint(h)))
-        return el(b"\xae", body)
+            body += _ebml_el(b"\xe0",
+                       _ebml_el(b"\xb0", uint(w)) + _ebml_el(b"\xba", uint(h)))
+        return _ebml_el(b"\xae", body)
 
     def container(doctype, entries, clusters, unknown_seg=False):
-        hdr = el(b"\x1a\x45\xdf\xa3", el(b"\x42\x82", doctype))
-        info = el(
+        hdr = _ebml_el(b"\x1a\x45\xdf\xa3", _ebml_el(b"\x42\x82", doctype))
+        info = _ebml_el(
             b"\x15\x49\xa9\x66",
-            el(b"\x2a\xd7\xb1", uint(1_000_000))
-            + el(b"\x44\x89", struct.pack(">d", 2400.0)),
+            _ebml_el(b"\x2a\xd7\xb1", uint(1_000_000))
+            + _ebml_el(b"\x44\x89", struct.pack(">d", 2400.0)),
         )
-        seg_body = (info + el(b"\x16\x54\xae\x6b", b"".join(entries))
+        seg_body = (info + _ebml_el(b"\x16\x54\xae\x6b", b"".join(entries))
                     + b"".join(
-                        el(b"\x1f\x43\xb6\x75",
-                           el(b"\xe7", uint(k)) + c)
+                        _ebml_el(b"\x1f\x43\xb6\x75",
+                           _ebml_el(b"\xe7", uint(k)) + c)
                         for k, c in enumerate(clusters)))
         if unknown_seg:
             return hdr + b"\x18\x53\x80\x67\xff" + seg_body
-        return hdr + el(b"\x18\x53\x80\x67", seg_body)
+        return hdr + _ebml_el(b"\x18\x53\x80\x67", seg_body)
 
     import struct
 
@@ -1774,8 +2277,8 @@ def _mkv_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     out.append((
         11_000_000,
         container(b"webm", [track_entry(1, 1, 64, 48)],
-                  [block(1, f0[:1], "none")
-                   + block(1, f0[1:], "xiph")]),
+                  [_mkv_block(1, f0[:1], "none")
+                   + _mkv_block(1, f0[1:], "xiph")]),
         f0,
     ))
     # 11000001: matroska — audio track 2 first (its blocks skipped),
@@ -1785,9 +2288,9 @@ def _mkv_fixture() -> list[tuple[int, bytes, list[bytes]]]:
         11_000_001,
         container(b"matroska",
                   [track_entry(2, 2), track_entry(3, 1, 320, 240)],
-                  [block(2, [b"skip-me-audio"], "none")
-                   + block(3, f1[:3], "fixed")
-                   + block(3, f1[3:], "none", group=True)]),
+                  [_mkv_block(2, [b"skip-me-audio"], "none")
+                   + _mkv_block(3, f1[:3], "fixed")
+                   + _mkv_block(3, f1[3:], "none", group=True)]),
         f1,
     ))
     # 11000002: webm — EBML lacing across TWO clusters (ordering)
@@ -1796,7 +2299,7 @@ def _mkv_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     out.append((
         11_000_002,
         container(b"webm", [track_entry(1, 1, 128, 72)],
-                  [block(1, f2a, "ebml"), block(1, f2b, "ebml")]),
+                  [_mkv_block(1, f2a, "ebml"), _mkv_block(1, f2b, "ebml")]),
         f2a + f2b,
     ))
     # 11000003: streamed unknown-size Segment, plain blocks
@@ -1804,7 +2307,7 @@ def _mkv_fixture() -> list[tuple[int, bytes, list[bytes]]]:
     out.append((
         11_000_003,
         container(b"webm", [track_entry(1, 1, 16, 16)],
-                  [b"".join(block(1, [x], "none") for x in f3)],
+                  [b"".join(_mkv_block(1, [x], "none") for x in f3)],
                   unknown_seg=True),
         f3,
     ))
@@ -1964,59 +2467,13 @@ def _png_fixture() -> list[tuple[int, bytes, int, int]]:
     thumbnails from the pixel spec and never parses PNG, so the
     expected rows are identical either way.  Used by q45 and its spec
     oracle."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    def paeth(a: int, b: int, c: int) -> int:
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        if pa <= pb and pa <= pc:
-            return a
-        return b if pb <= pc else c
-
-    def filt(raw_rows: list[bytes], stride: int) -> bytearray:
-        """Forward-filter rows, cycling all five filter types."""
-        scan = bytearray()
-        prev = bytes(stride)
-        for y, raw in enumerate(raw_rows):
-            ft = y % 5
-            scan.append(ft)
-            for x in range(stride):
-                a = raw[x - 3] if x >= 3 else 0
-                b = prev[x]
-                c = prev[x - 3] if x >= 3 else 0
-                if ft == 0:
-                    scan.append(raw[x])
-                elif ft == 1:
-                    scan.append((raw[x] - a) & 0xFF)
-                elif ft == 2:
-                    scan.append((raw[x] - b) & 0xFF)
-                elif ft == 3:
-                    scan.append((raw[x] - ((a + b) >> 1)) & 0xFF)
-                else:
-                    scan.append((raw[x] - paeth(a, b, c)) & 0xFF)
-            prev = raw
-        return scan
-
-    adam7 = (  # pass origins/steps (x0, y0, dx, dy), PNG spec §8.2
-        (0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-        (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2),
-    )
     out = []
     for i in range(40):
         w, h = i % 23 + 2, i % 13 + 3
         interlaced = i % 4 == 3
         if interlaced:
             scan = bytearray()
-            for x0, y0, dx, dy in adam7:
+            for x0, y0, dx, dy in _ENC_ADAM7:
                 pw = (w - x0 + dx - 1) // dx
                 ph = (h - y0 + dy - 1) // dy
                 if pw <= 0 or ph <= 0:
@@ -2029,7 +2486,7 @@ def _png_fixture() -> list[tuple[int, bytes, int, int]]:
                     )
                     for py in range(ph)
                 ]
-                scan += filt(rows, pw * 3)
+                scan += _png_filter(rows, pw * 3, 3)
         else:
             raw_rows = [
                 bytes(
@@ -2039,16 +2496,8 @@ def _png_fixture() -> list[tuple[int, bytes, int, int]]:
                 )
                 for y in range(h)
             ]
-            scan = filt(raw_rows, w * 3)
-        ihdr = struct.pack(
-            ">IIBBBBB", w, h, 8, 2, 0, 0, 1 if interlaced else 0
-        )
-        png = (
-            b"\x89PNG\r\n\x1a\n"
-            + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(scan)))
-            + chunk(b"IEND", b"")
-        )
+            scan = _png_filter(raw_rows, w * 3, 3)
+        png = _png_file(w, h, 8, 2, scan, interlace=int(interlaced))
         out.append((1_000_000 + i, png, w, h))
     return out
 
@@ -2329,50 +2778,11 @@ def _tiff_lzw_pixel(i: int, x: int, y: int) -> tuple[int, int, int]:
 def _tiff_lzw_fixture() -> list[tuple[int, bytes, int, int]]:
     """Deterministic valid LZW-TIFF payloads for q45 (ids
     6_000_000+i): 12 little-endian RGB images, 2 strips each, every
-    strip independently LZW-compressed by an inline TIFF6 §13 encoder
-    (MSB-first variable-width codes, early-change widening) — decoded
+    strip independently LZW-compressed (``_tiff_lzw_enc``: TIFF6 §13
+    MSB-first variable-width codes, early-change widening) — decoded
     for real by ``multimodal.decode_tiff_pixels`` through
     ``_tiff_lzw``; the oracle twin recomputes thumbnails from
     ``_tiff_lzw_pixel`` and never parses TIFF."""
-    import struct
-
-    def lzw(raw: bytes) -> bytes:
-        buf = bytearray()
-        acc = [0, 0]
-
-        def emit(code, width):
-            acc[0] = (acc[0] << width) | code
-            acc[1] += width
-            while acc[1] >= 8:
-                buf.append((acc[0] >> (acc[1] - 8)) & 0xFF)
-                acc[1] -= 8
-
-        table = {bytes([b]): b for b in range(256)}
-        nxt, width = 258, 9
-        emit(256, width)
-        w = b""
-        for b in raw:
-            wc = w + bytes([b])
-            if wc in table:
-                w = wc
-                continue
-            emit(table[w], width)
-            table[wc] = nxt
-            nxt += 1
-            if nxt == (1 << width) and width < 12:
-                width += 1
-            w = bytes([b])
-            if nxt == 4094:
-                emit(256, width)
-                table = {bytes([b2]): b2 for b2 in range(256)}
-                nxt, width = 258, 9
-        if w:
-            emit(table[w], width)
-        emit(257, width)
-        if acc[1]:
-            buf.append((acc[0] << (8 - acc[1])) & 0xFF)
-        return bytes(buf)
-
     out = []
     for i in range(12):
         w, h = i % 9 + 2, i % 6 + 2
@@ -2382,55 +2792,7 @@ def _tiff_lzw_fixture() -> list[tuple[int, bytes, int, int]]:
             for x in range(w)
             for v in _tiff_lzw_pixel(i, x, y)
         )
-        rps = max(1, (h + 1) // 2)
-        strips = [
-            lzw(pixels[r * w * 3:min(r + rps, h) * w * 3])
-            for r in range(0, h, rps)
-        ]
-        k = len(strips)
-        ntags = 9
-        ifd_off = 8
-        ext_off = ifd_off + 2 + 12 * ntags + 4
-
-        def build(strip_offsets):
-            ext = bytearray()
-
-            def entry(tag, typ, count, vals):
-                fmt = "H" if typ == 3 else "I"
-                raw = b"".join(
-                    struct.pack("<" + fmt, v) for v in vals
-                )
-                if len(raw) <= 4:
-                    field = raw + b"\x00" * (4 - len(raw))
-                else:
-                    field = struct.pack("<I", ext_off + len(ext))
-                    ext.extend(raw)
-                return struct.pack("<HHI", tag, typ, count) + field
-
-            entries = [
-                entry(256, 3, 1, [w]),
-                entry(257, 3, 1, [h]),
-                entry(258, 3, 3, [8, 8, 8]),
-                entry(259, 3, 1, [5]),  # LZW
-                entry(262, 3, 1, [2]),  # RGB
-                entry(273, 4, k, strip_offsets),
-                entry(277, 3, 1, [3]),
-                entry(278, 3, 1, [rps]),
-                entry(279, 4, k, [len(s) for s in strips]),
-            ]
-            ifd = (struct.pack("<H", ntags) + b"".join(entries)
-                   + struct.pack("<I", 0))
-            return ifd, bytes(ext)
-
-        _, ext0 = build([0] * k)
-        data_off = ext_off + len(ext0)
-        offsets, pos = [], data_off
-        for s in strips:
-            offsets.append(pos)
-            pos += len(s)
-        ifd, ext = build(offsets)
-        payload = (b"II*\x00" + struct.pack("<I", ifd_off) + ifd + ext
-                   + b"".join(strips))
+        payload = _tiff_px(w, h, pixels, compression=5)
         out.append((6_000_000 + i, payload, w, h))
     return out
 
@@ -2473,65 +2835,19 @@ def _webp_heif_fixture() -> list[tuple[int, bytes, int, int]]:
     entropy coders this container lacks, so ``resize_meta``'s
     thumbnail is the labeled 32-byte-prefix stub — the oracle twin
     carries md5(prefix) literals (``_header_stub_rows``)."""
-
-    def rchunk(fourcc: bytes, body: bytes) -> bytes:
-        c = fourcc + len(body).to_bytes(4, "little") + body
-        return c + (b"\x00" if len(body) % 2 else b"")
-
-    def webp(kind: int, w: int, h: int) -> bytes:
-        if kind == 0:  # simple lossy
-            body = (b"\x00\x00\x00" + b"\x9d\x01\x2a"
-                    + w.to_bytes(2, "little")
-                    + h.to_bytes(2, "little") + b"\x00\x00")
-            chunks = rchunk(b"VP8 ", body)
-        elif kind == 1:  # simple lossless
-            bits = (w - 1) | ((h - 1) << 14)
-            chunks = rchunk(
-                b"VP8L", b"\x2f" + bits.to_bytes(4, "little"))
-        else:  # extended
-            chunks = rchunk(
-                b"VP8X", b"\x00\x00\x00\x00"
-                + (w - 1).to_bytes(3, "little")
-                + (h - 1).to_bytes(3, "little"))
-        riff = b"WEBP" + chunks
-        return b"RIFF" + len(riff).to_bytes(4, "little") + riff
-
-    def bbox(t: bytes, body: bytes = b"") -> bytes:
-        return (8 + len(body)).to_bytes(4, "big") + t + body
-
-    def heif(brand: bytes, w: int, h: int, via_pitm: bool) -> bytes:
-        ispe_main = bbox(
-            b"ispe", b"\x00" * 4 + w.to_bytes(4, "big")
-            + h.to_bytes(4, "big"))
-        if via_pitm:  # decoy first: ipma must pick property #2
-            ispes = bbox(
-                b"ispe", b"\x00" * 4 + (7).to_bytes(4, "big")
-                + (7).to_bytes(4, "big")) + ispe_main
-            idx = 2
-        else:
-            ispes, idx = ispe_main, 1
-        ipco = bbox(b"ipco", ispes)
-        entry = (1).to_bytes(2, "big") + bytes([1, 0x80 | idx])
-        ipma = bbox(
-            b"ipma", b"\x00" * 4 + (1).to_bytes(4, "big") + entry)
-        kids = b""
-        if via_pitm:
-            kids += bbox(b"pitm", b"\x00" * 4 + (1).to_bytes(2, "big"))
-        kids += bbox(b"iprp", ipco + ipma)
-        meta = bbox(b"meta", b"\x00" * 4 + kids)
-        return bbox(b"ftyp", brand + b"\x00" * 4 + brand) + meta
-
     out = []
     for i in range(6):
         w, h = (i * 19 + 5) % 300 + 2, (i * 11 + 3) % 200 + 2
-        out.append((10_000_000 + i, webp(i % 3, w, h), w, h))
+        kind = ("lossy", "lossless", "extended")[i % 3]
+        out.append((10_000_000 + i, _webp(w, h, kind), w, h))
     brands = (b"avif", b"heic", b"mif1", b"msf1")
     for j in range(8):
         w, h = j * 31 + 12, j * 17 + 9
-        out.append((
-            10_000_100 + j,
-            heif(brands[j % 4], w, h, via_pitm=j % 2 == 0), w, h,
-        ))
+        via_pitm = j % 2 == 0  # decoy first: ipma must pick property #2
+        heif = _heif(w, h, brand=brands[j % 4], compat=(brands[j % 4],),
+                     with_pitm=via_pitm, essential=True,
+                     extra_ispe_first=(7, 7) if via_pitm else None)
+        out.append((10_000_100 + j, heif, w, h))
     return out
 
 
@@ -2559,53 +2875,18 @@ def _ico_fixture() -> list[tuple[int, bytes, int, int]]:
     sit under the driver hash.  Pixels follow ``_ico_pixel``; the
     oracle twin computes thumbnails from the spec and never parses
     ICO."""
-    import struct
-    import zlib
-
-    def dib(w, h, pixel):
-        row_len = ((w * 3 + 3) // 4) * 4
-        rows = b""
-        for y in range(h - 1, -1, -1):
-            r = b"".join(bytes(pixel(x, y)[::-1]) for x in range(w))
-            rows += r + b"\x00" * (row_len - len(r))
-        mask = b"\x00" * (((w + 31) // 32) * 4 * h)
-        hdr = struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 24,
-                          0, 0, 0, 0, 0, 0)
-        return hdr + rows + mask
-
-    def png(w, h, pixel):
-        def chunk(ctype, data):
-            return (struct.pack(">I", len(data)) + ctype + data
-                    + struct.pack(">I", zlib.crc32(ctype + data)))
-
-        scan = b"".join(
-            b"\x00" + bytes(v for x in range(w) for v in pixel(x, y))
-            for y in range(h))
-        return (b"\x89PNG\r\n\x1a\n"
-                + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2,
-                                             0, 0, 0))
-                + chunk(b"IDAT", zlib.compress(scan))
-                + chunk(b"IEND", b""))
-
-    def container(blobs):
-        off0 = 6 + 16 * len(blobs)
-        dirs, datas = b"", b""
-        for b in blobs:
-            dirs += (bytes(4) + (1).to_bytes(2, "little")
-                     + (24).to_bytes(2, "little")
-                     + len(b).to_bytes(4, "little")
-                     + (off0 + len(datas)).to_bytes(4, "little"))
-            datas += b
-        return (b"\x00\x00\x01\x00"
-                + len(blobs).to_bytes(2, "little") + dirs + datas)
-
     out = []
     for i in range(10):
         w, h = _ico_dims(i)
         pixel = lambda x, y, i=i: _ico_pixel(i, x, y)
-        main = dib(w, h, pixel) if i % 2 == 0 else png(w, h, pixel)
-        decoy = dib(2, 2, lambda x, y: (9, 9, 9))
-        out.append((12_000_000 + i, container([decoy, main]), w, h))
+        if i % 2 == 0:
+            main = _ico_dib(w, h, bytes(v for y in range(h)
+                                        for x in range(w)
+                                        for v in pixel(x, y)))
+        else:
+            main = _png_raw(w, h, 2, pixel)
+        decoy = _ico_dib(2, 2, bytes([9] * 12))
+        out.append((12_000_000 + i, _ico([decoy, main]), w, h))
     return out
 
 
@@ -2643,165 +2924,6 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     pins the decoded waveforms bit-for-bit.  Ids 9_000_000+."""
     import struct
 
-    guid_tail = (
-        b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-    )
-
-    def container(tag, ch, rate, bits, balign, data, fact=None,
-                  extensible=False):
-        if extensible:
-            fmt = struct.pack(
-                "<HHIIHH", 0xFFFE, ch, rate, rate * balign, balign,
-                bits,
-            )
-            fmt += struct.pack("<HHI", 22, bits, 0)
-            fmt += tag.to_bytes(2, "little") + guid_tail
-        else:
-            fmt = struct.pack(
-                "<HHIIHH", tag, ch, rate, rate * balign, balign, bits
-            )
-        body = b"WAVE" + b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-        if fact is not None:
-            body += (b"fact" + (4).to_bytes(4, "little")
-                     + fact.to_bytes(4, "little"))
-        body += b"data" + len(data).to_bytes(4, "little") + data
-        return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-    def ulaw_enc(x):
-        sign = 0x80 if x < 0 else 0
-        x = min(abs(x), 32635) + 0x84
-        e, mask = 7, 0x4000
-        while e > 0 and not (x & mask):
-            e -= 1
-            mask >>= 1
-        return ~(sign | (e << 4) | ((x >> (e + 3)) & 0x0F)) & 0xFF
-
-    def ulaw_lin(c):
-        u = ~c & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)
-        return 0x84 - t if u & 0x80 else t - 0x84
-
-    def alaw_enc(x):
-        mask = 0xD5 if x >= 0 else 0x55
-        x >>= 3
-        if mask == 0x55:
-            x = -x - 1
-        ends = (0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF)
-        seg = 0
-        while seg < 8 and x > ends[seg]:
-            seg += 1
-        if seg >= 8:
-            return 0x7F ^ mask
-        aval = seg << 4
-        aval |= (x >> 1) & 0x0F if seg < 2 else (x >> seg) & 0x0F
-        return aval ^ mask
-
-    def alaw_lin(c):
-        a = c ^ 0x55
-        seg, m = (a >> 4) & 7, a & 0x0F
-        if seg == 0:
-            v = (m << 4) + 8
-        elif seg == 1:
-            v = (m << 4) + 0x108
-        else:
-            v = ((m << 4) + 0x108) << (seg - 1)
-        return v if a & 0x80 else -v
-
-    ima_steps = (
-        7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
-        34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118,
-        130, 143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371,
-        408, 449, 494, 544, 598, 658, 724, 796, 876, 963, 1060,
-        1166, 1282, 1411, 1552, 1707, 1878, 2066, 2272, 2499, 2749,
-        3024, 3327, 3660, 4026, 4428, 4871, 5358, 5894, 6484, 7132,
-        7845, 8630, 9493, 10442, 11487, 12635, 13899, 15289, 16818,
-        18500, 20350, 22385, 24623, 27086, 29794, 32767,
-    )
-    ima_index = (-1, -1, -1, -1, 2, 4, 6, 8)
-
-    def ima_block(samples, ch, balign, init_idx):
-        blk = bytearray()
-        pred = [s[0] for s in samples]
-        idx = list(init_idx)
-        recon = [[s[0]] for s in samples]
-        for c in range(ch):
-            blk += pred[c].to_bytes(2, "little", signed=True)
-            blk += bytes([idx[c], 0])
-        nibbles = [[] for _ in range(ch)]
-        for j in range(1, len(samples[0])):
-            for c in range(ch):
-                step = ima_steps[idx[c]]
-                diff = samples[c][j] - pred[c]
-                nib = 0
-                if diff < 0:
-                    nib = 8
-                    diff = -diff
-                if diff >= step:
-                    nib |= 4
-                    diff -= step
-                if diff >= step >> 1:
-                    nib |= 2
-                    diff -= step >> 1
-                if diff >= step >> 2:
-                    nib |= 1
-                d = step >> 3
-                if nib & 4:
-                    d += step
-                if nib & 2:
-                    d += step >> 1
-                if nib & 1:
-                    d += step >> 2
-                p = pred[c] - d if nib & 8 else pred[c] + d
-                p = max(-32768, min(32767, p))
-                pred[c] = p
-                idx[c] = max(0, min(88, idx[c] + ima_index[nib & 7]))
-                recon[c].append(p)
-                nibbles[c].append(nib)
-        gi = 0
-        while gi < len(nibbles[0]):
-            for c in range(ch):
-                grp = nibbles[c][gi:gi + 8]
-                for k in range(0, 8, 2):
-                    blk.append(grp[k] | (grp[k + 1] << 4))
-            gi += 8
-        return bytes(blk), recon
-
-    ms_coefs = (
-        (256, 0), (512, -256), (0, 0), (192, 64),
-        (240, 0), (460, -208), (392, -232),
-    )
-    ms_adapt = (
-        230, 230, 230, 230, 307, 409, 512, 614,
-        768, 614, 512, 409, 307, 230, 230, 230,
-    )
-
-    def ms_block(samples, ch, balign, ipred, idelta0):
-        c1, c2 = ms_coefs[ipred]
-        blk = bytearray(bytes([ipred] * ch))
-        delta = [idelta0] * ch
-        for c in range(ch):
-            blk += delta[c].to_bytes(2, "little", signed=True)
-        for c in range(ch):
-            blk += samples[c][1].to_bytes(2, "little", signed=True)
-        for c in range(ch):
-            blk += samples[c][0].to_bytes(2, "little", signed=True)
-        chan = [[samples[c][0], samples[c][1]] for c in range(ch)]
-        nibs = []
-        for j in range(2, len(samples[0])):
-            for c in range(ch):
-                s = chan[c][-1] * c1 + chan[c][-2] * c2
-                predv = -((-s) >> 8) if s < 0 else s >> 8
-                snib = max(-8, min(7, round((samples[c][j] - predv)
-                                            / delta[c])))
-                v = max(-32768, min(32767, predv + delta[c] * snib))
-                chan[c].append(v)
-                nib = snib & 0x0F
-                nibs.append(nib)
-                delta[c] = max((ms_adapt[nib] * delta[c]) >> 8, 16)
-        for k in range(0, len(nibs), 2):
-            blk.append((nibs[k] << 4) | nibs[k + 1])
-        return bytes(blk), chan
-
     def interleave(chans, n):
         out = []
         for j in range(n):
@@ -2814,14 +2936,14 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     pcm16 = [((k * 2477) % 65536) - 32768 for k in range(120)]
     out.append((
         9_000_000,
-        container(1, 2, 16000, 16, 4,
+        _wav_coded(1, 2, 16000, 16, 4,
                   struct.pack("<120h", *pcm16)),
         (2, 16000, 16, 60, 3), pcm16,
     ))
     # 9000001: 8-bit unsigned PCM mono → (b-128)*256 in int16 terms
     pcm8 = bytes((k * 37) % 256 for k in range(80))
     out.append((
-        9_000_001, container(1, 1, 8000, 8, 1, pcm8),
+        9_000_001, _wav_coded(1, 1, 8000, 8, 1, pcm8),
         (1, 8000, 8, 80, 10), [(b - 128) * 256 for b in pcm8],
     ))
     # 9000002: 24-bit PCM mono, values multiples of 256 so v/256 is
@@ -2829,7 +2951,7 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     v24 = [(((k * 9973) % 60000) - 30000) * 256 for k in range(40)]
     out.append((
         9_000_002,
-        container(
+        _wav_coded(
             1, 1, 24000, 24,
             3, b"".join(v.to_bytes(3, "little", signed=True)
                         for v in v24),
@@ -2840,34 +2962,34 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     fints = [((k * 331) % 65536) - 32768 for k in range(64)]
     out.append((
         9_000_003,
-        container(3, 1, 32000, 32, 4,
+        _wav_coded(3, 1, 32000, 32, 4,
                   struct.pack("<64f", *[v / 32768.0 for v in fints])),
         (1, 32000, 32, 64, 2), fints,
     ))
     # 9000004: G.711 mu-law mono ramp
-    mu_codes = bytes(ulaw_enc(v) for v in range(-32000, 32000, 997))
+    mu_codes = bytes(_ulaw_enc(v) for v in range(-32000, 32000, 997))
     out.append((
-        9_000_004, container(7, 1, 8000, 8, 1, mu_codes,
+        9_000_004, _wav_coded(7, 1, 8000, 8, 1, mu_codes,
                              fact=len(mu_codes)),
         (1, 8000, 8, len(mu_codes), len(mu_codes) * 1000 // 8000),
-        [ulaw_lin(c) for c in mu_codes],
+        [_ulaw_lin(c) for c in mu_codes],
     ))
     # 9000005: G.711 A-law stereo
-    al_codes = bytes(alaw_enc(((k * 1741) % 64000) - 32000)
+    al_codes = bytes(_alaw_enc(((k * 1741) % 64000) - 32000)
                      for k in range(90))
     out.append((
-        9_000_005, container(6, 2, 16000, 8, 2, al_codes),
-        (2, 16000, 8, 45, 2), [alaw_lin(c) for c in al_codes],
+        9_000_005, _wav_coded(6, 2, 16000, 8, 2, al_codes),
+        (2, 16000, 8, 45, 2), [_alaw_lin(c) for c in al_codes],
     ))
     # 9000006: IMA ADPCM stereo, two blocks, fact-truncated
     spb = 17  # balign 24, ch 2
     wave = [[(((k * 911 + c * 517) % 24000) - 12000)
              for k in range(2 * spb)] for c in range(2)]
-    b0, r0 = ima_block([w[:spb] for w in wave], 2, 24, (0, 5))
-    b1, r1 = ima_block([w[spb:] for w in wave], 2, 24, (31, 12))
+    b0, r0 = _ima_block([w[:spb] for w in wave], 2, 24, (0, 5))
+    b1, r1 = _ima_block([w[spb:] for w in wave], 2, 24, (31, 12))
     fact = spb + 11
     out.append((
-        9_000_006, container(0x11, 2, 11025, 4, 24, b0 + b1,
+        9_000_006, _wav_coded(0x11, 2, 11025, 4, 24, b0 + b1,
                              fact=fact),
         (2, 11025, 4, fact, fact * 1000 // 11025),
         interleave([r0[0] + r1[0], r0[1] + r1[1]], fact),
@@ -2875,10 +2997,10 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     # 9000007: MS ADPCM mono, two blocks, two predictor pairs
     spb = 18  # balign 15, ch 1
     sig = [(((k * 643) % 16000) - 8000) for k in range(2 * spb)]
-    mb0, mr0 = ms_block([sig[:spb]], 1, 15, 0, 64)
-    mb1, mr1 = ms_block([sig[spb:]], 1, 15, 1, 190)
+    mb0, mr0 = _ms_block([sig[:spb]], 1, 15, 0, 64)
+    mb1, mr1 = _ms_block([sig[spb:]], 1, 15, 1, 190)
     out.append((
-        9_000_007, container(2, 1, 22050, 4, 15, mb0 + mb1,
+        9_000_007, _wav_coded(2, 1, 22050, 4, 15, mb0 + mb1,
                              fact=2 * spb),
         (1, 22050, 4, 2 * spb, 2 * spb * 1000 // 22050),
         mr0[0] + mr1[0],
@@ -2887,9 +3009,9 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     spb = 10  # balign 22, ch 2
     wave = [[(((k * 457 + c * 83) % 12000) - 6000) for k in range(spb)]
             for c in range(2)]
-    sb, sr = ms_block(wave, 2, 22, 4, 120)
+    sb, sr = _ms_block(wave, 2, 22, 4, 120)
     out.append((
-        9_000_008, container(2, 2, 44100, 4, 22, sb, fact=spb - 3),
+        9_000_008, _wav_coded(2, 2, 44100, 4, 22, sb, fact=spb - 3),
         (2, 44100, 4, spb - 3, (spb - 3) * 1000 // 44100),
         interleave(sr, spb - 3),
     ))
@@ -2897,7 +3019,7 @@ def _wav_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     pcm16b = [((k * 5119) % 65536) - 32768 for k in range(50)]
     out.append((
         9_000_009,
-        container(1, 1, 48000, 16, 2, struct.pack("<50h", *pcm16b),
+        _wav_coded(1, 1, 48000, 16, 2, struct.pack("<50h", *pcm16b),
                   extensible=True),
         (1, 48000, 16, 50, 1), pcm16b,
     ))
@@ -2917,40 +3039,17 @@ def _aiff_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
     hash pins the decoded waveform bit-for-bit.  Ids 9_100_000+."""
     import struct
 
-    def ext80(rate: int) -> bytes:
-        e = rate.bit_length() - 1
-        mant = rate << (63 - e)
-        return (16383 + e).to_bytes(2, "big") + mant.to_bytes(8, "big")
-
     def container(ch, n_frames, bits, rate, sound, codec=None,
                   offset=0):
-        comm = struct.pack(">HIH", ch, n_frames, bits) + ext80(rate)
+        comm = struct.pack(">HIH", ch, n_frames, bits) + _ext80(rate)
         ftype = b"AIFF" if codec is None else b"AIFC"
         if codec is not None:
             comm += codec + b"\x04none\x00"
 
-        def chunk(cid, body):
-            c = cid + struct.pack(">I", len(body)) + body
-            return c + (b"\x00" if len(body) % 2 else b"")
-
-        body = (ftype + chunk(b"COMM", comm)
-                + chunk(b"SSND", struct.pack(">II", offset, 0)
-                        + b"\x00" * offset + sound))
+        body = (ftype + _riff(b"COMM", comm, "big")
+                + _riff(b"SSND", struct.pack(">II", offset, 0)
+                        + b"\x00" * offset + sound, "big"))
         return b"FORM" + struct.pack(">I", len(body)) + body
-
-    def ulaw_enc(x):  # ITU-T G.711 Sun-style compander (spec twin)
-        sign = 0x80 if x < 0 else 0
-        x = min(abs(x), 32635) + 0x84
-        e, mask = 7, 0x4000
-        while e > 0 and not (x & mask):
-            e -= 1
-            mask >>= 1
-        return ~(sign | (e << 4) | ((x >> (e + 3)) & 0x0F)) & 0xFF
-
-    def ulaw_lin(c):
-        u = ~c & 0xFF
-        t = (((u & 0x0F) << 3) + 0x84) << ((u >> 4) & 7)
-        return 0x84 - t if u & 0x80 else t - 0x84
 
     out = []
     # 9100000: AIFF 16-bit big-endian stereo PCM
@@ -3008,12 +3107,12 @@ def _aiff_fixture() -> list[tuple[int, bytes, tuple, list[int]]]:
         ("aifc", 1, 16000, 64, 30, 30 * 1000 // 16000), dints,
     ))
     # 9100006: AIFC G.711 mu-law mono ramp (shared table expansion)
-    mu = bytes(ulaw_enc(v) for v in range(-30000, 30000, 1237))
+    mu = bytes(_ulaw_enc(v) for v in range(-30000, 30000, 1237))
     out.append((
         9_100_006,
         container(1, len(mu), 16, 8000, mu, codec=b"ulaw"),
         ("aifc", 1, 8000, 16, len(mu), len(mu) * 1000 // 8000),
-        [ulaw_lin(c) for c in mu],
+        [_ulaw_lin(c) for c in mu],
     ))
     return out
 

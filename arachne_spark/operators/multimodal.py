@@ -7,8 +7,11 @@ pheidippides.cpp:36-39).  Everything that is pure structure or
 lossless coding decodes FOR REAL from the public specs — no codec
 library in this container, none needed; only the perceptual entropy
 coders (MP3/AAC/OGG samples, non-MJPEG video pixels) keep
-clearly-labeled stubs.  Every decoder bounds allocations by the
-declared pixel cap and never raises on adversarial bytes.  The
+clearly-labeled stubs.  Every format's structure is walked once, by
+one layout function, through the bounded ``_Reader``: a declared
+size the payload cannot back, or an allocation past ``_MAX_PIXELS``,
+raises ``Malformed``, and the ``_never_raise`` boundary on each
+public decoder turns it into None.  The
 Spark side — schema, Arrow batch shape, ``mapInPandas`` iterator
 signature, fan-out row production, binary output columns, partition
 preservation — is real and tested throughout:
@@ -45,8 +48,9 @@ preservation — is real and tested throughout:
 
 from __future__ import annotations
 
+import functools
 import struct
-from collections.abc import Iterator
+import zlib
 
 import numpy as np
 import pandas as pd
@@ -64,65 +68,221 @@ from pyspark.sql.types import (
 )
 
 
+class Malformed(ValueError):
+    """A declared size, offset or count that the payload cannot back,
+    or an allocation past its cap — the one error every structure
+    walk raises."""
+
+
+# adversarial dimension-claim bound for every pixel allocation sized
+# from a declared field (PNG, GIF, TIFF, BMP, JPEG, composed video);
+# header-only decodes have no such bound — metadata is cheap
+_MAX_PIXELS = 1 << 22
+
+# what hostile bytes can make a decoder raise; MemoryError and
+# everything else propagate (the capped sweeps rely on seeing them)
+_HOSTILE = (ValueError, IndexError, KeyError, struct.error, OverflowError,
+            zlib.error)
+
+
+def _never_raise(fn):
+    """The never-raise boundary of a public decoder or frame
+    extractor: malformed input yields None, so one hostile payload
+    cannot fail an Arrow batch."""
+
+    @functools.wraps(fn)
+    def guarded(payload):
+        try:
+            return fn(payload)
+        except _HOSTILE:
+            return None
+
+    return guarded
+
+
+def _need(count: int, limit: int) -> int:
+    """The one bounds check: a size or count declared by the payload
+    must not exceed what backs it — the bytes left in a ``_Reader``
+    range, or an allocation cap such as ``_MAX_PIXELS``."""
+    if not 0 <= count <= limit:
+        raise Malformed(f"declared {count} exceeds {limit}")
+    return count
+
+
+class _Reader:
+    """Bounded cursor over ``data[pos:end]`` with typed reads in one
+    byte order; every read and sub-range is checked against ``end``.
+    The structure walks (ISO-BMFF boxes, RIFF/IFF chunks, EBML
+    elements) live here and yield (type, body reader) pairs."""
+
+    __slots__ = ("data", "pos", "end", "order")
+
+    def __init__(self, data: bytes, pos: int = 0, end: int | None = None,
+                 order: str = "big"):
+        self.data = data
+        self.pos = pos
+        self.end = len(data) if end is None else end
+        self.order = order
+
+    @property
+    def remaining(self) -> int:
+        return self.end - self.pos
+
+    def take(self, n: int) -> bytes:
+        p = self.pos
+        self.pos = p + _need(n, self.end - p)
+        return self.data[p:self.pos]
+
+    def skip(self, n: int) -> None:
+        self.pos += _need(n, self.end - self.pos)
+
+    def sub(self, n: int) -> "_Reader":
+        p = self.pos
+        self.pos = p + _need(n, self.end - p)
+        return _Reader(self.data, p, self.pos, self.order)
+
+    def uint(self, n: int) -> int:
+        return int.from_bytes(self.take(n), self.order)
+
+    def u8(self) -> int:
+        p = self.pos
+        self.pos = p + _need(1, self.end - p)
+        return self.data[p]
+
+    def u16(self) -> int:
+        return int.from_bytes(self.take(2), self.order)
+
+    def u24(self) -> int:
+        return int.from_bytes(self.take(3), self.order)
+
+    def u32(self) -> int:
+        return int.from_bytes(self.take(4), self.order)
+
+    def unpack(self, fmt: str) -> tuple:
+        """Typed fields or a whole table at once (``struct`` codes
+        without a byte-order prefix, e.g. "HHI" or "12I"), bounds-
+        checked once."""
+        fmt = (">" if self.order == "big" else "<") + fmt
+        return struct.unpack(fmt, self.take(struct.calcsize(fmt)))
+
+    def boxes(self):
+        """ISO-BMFF box table (u32 size incl. header, 1 = u64
+        largesize, 0 = to the end of the range); the boxes must tile
+        the range."""
+        while self.pos < self.end:
+            start = self.pos
+            size, btype = self.u32(), self.take(4)
+            if size == 1:
+                size = self.uint(8)
+                if size < 16:
+                    raise Malformed("largesize too small")
+            elif size == 0:
+                size = self.end - start
+            elif size < 8:
+                raise Malformed("box size below header size")
+            yield btype, self.sub(size - (self.pos - start))
+
+    def chunks(self):
+        """RIFF (little-endian) / IFF (big-endian) chunk table: fourcc +
+        u32 size, bodies padded to even offsets; every chunk must fit
+        the range (the final pad byte may lie past it)."""
+        while self.pos < self.end:
+            fourcc, size = self.take(4), self.u32()
+            yield fourcc, self.sub(size)
+            self.pos += size & 1
+
+    def vint(self, is_id: bool = False) -> int | None:
+        """One EBML variable-length integer (RFC 8794): the lead
+        byte's first set bit gives the width; IDs keep the marker bit,
+        sizes clear it and read the all-ones 'unknown size' as None."""
+        if self.pos >= self.end or not self.data[self.pos]:
+            raise Malformed("ebml: bad vint lead byte")
+        ln = 9 - self.data[self.pos].bit_length()
+        val = int.from_bytes(self.take(ln), "big")
+        if is_id:
+            return val
+        val &= (1 << (7 * ln)) - 1
+        return None if val == (1 << (7 * ln)) - 1 else val
+
+    def svint(self) -> int:
+        """Signed EBML vint (Matroska lacing deltas): the unsigned
+        value minus 2^(7·width−1) − 1."""
+        start = self.pos
+        val = self.vint()
+        if val is None:
+            raise Malformed("ebml: all-ones signed vint")
+        return val - ((1 << (7 * (self.pos - start) - 1)) - 1)
+
+    def ebml_elements(self):
+        """EBML element table (ID vint + size vint + body); the table
+        must tile the range.  An unknown size is lawful only for the
+        Segment (streamed Matroska), which then runs to the end."""
+        while self.pos < self.end:
+            eid, size = self.vint(is_id=True), self.vint()
+            if size is None:
+                if eid != 0x18538067:
+                    raise Malformed("ebml: unknown size outside Segment")
+                yield eid, self.sub(self.remaining)
+                return
+            yield eid, self.sub(size)
+
+
 PNG_MAGIC = b"\x89PNG\r\n\x1a\n"
 
+# legal bit depths per colour type, PNG spec §11.2.2
+_PNG_DEPTHS = {
+    0: (1, 2, 4, 8, 16),  # greyscale
+    2: (8, 16),           # truecolour
+    3: (1, 2, 4, 8),      # indexed
+    4: (8, 16),           # grey+alpha
+    6: (8, 16),           # truecolour+alpha
+}
 
-def _decode_png(payload: bytes) -> dict | None:
-    """PNG IHDR decode with structural validation, no codec library:
-    fixed 8-byte magic, first chunk must be a 13-byte IHDR whose CRC32
-    verifies (zlib.crc32 over type+data — stdlib, not a codec), field
-    ranges per the spec, and the chunk table must actually contain an
-    IDAT before IEND (header-only walk, skipping each chunk by its
-    declared length — no inflation)."""
-    import zlib
 
-    n = len(payload)
-    if n < 33 or bytes(payload[:8]) != PNG_MAGIC:
+def _png_layout(data: bytes) -> tuple | None:
+    """The one PNG structure walk, no codec library: fixed 8-byte
+    magic, first chunk a 13-byte IHDR whose CRC32 verifies
+    (zlib.crc32 over type+data — stdlib, not a codec) with legal field
+    values, then the chunk table — every chunk before IEND must fit
+    the payload, an IDAT must appear and the walk must reach IEND (no
+    inflation).  Returns (w, h, bit_depth, color_type, interlace,
+    idat stream, last PLTE) or None."""
+    r = _Reader(data)
+    if (len(data) < 33 or r.take(8) != PNG_MAGIC or r.u32() != 13
+            or r.take(4) != b"IHDR"):
         return None
-    if int.from_bytes(payload[8:12], "big") != 13:
+    w, h = r.u32(), r.u32()
+    depth, color, compression, filt, interlace = r.take(5)
+    if zlib.crc32(data[12:29]) != r.u32():
         return None
-    if bytes(payload[12:16]) != b"IHDR":
-        return None
-    crc = int.from_bytes(payload[29:33], "big")
-    if zlib.crc32(bytes(payload[12:29])) != crc:
-        return None
-    w = int.from_bytes(payload[16:20], "big")
-    h = int.from_bytes(payload[20:24], "big")
-    bit_depth, color_type, compression, filt, interlace = payload[24:29]
     if not (0 < w < 2**31 and 0 < h < 2**31):
         return None
-    legal_depths = {
-        0: (1, 2, 4, 8, 16),  # greyscale
-        2: (8, 16),           # truecolour
-        3: (1, 2, 4, 8),      # indexed
-        4: (8, 16),           # grey+alpha
-        6: (8, 16),           # truecolour+alpha
-    }
-    if color_type not in legal_depths:
-        return None
-    if bit_depth not in legal_depths[color_type]:
+    if depth not in _PNG_DEPTHS.get(color, ()):
         return None
     if compression != 0 or filt != 0 or interlace not in (0, 1):
         return None
-    # walk the chunk table: every chunk's declared length must FIT the
-    # payload (a truncated-mid-chunk or bogus-length file must fail,
-    # same contract as the PPM pixel-length check), an IDAT must
-    # appear, and the walk must reach IEND
-    i, saw_idat, saw_iend = 33, False, False
-    while i + 8 <= n:
-        clen = int.from_bytes(payload[i:i + 4], "big")
-        ctype = bytes(payload[i + 4:i + 8])
+    idat, plte = [], None
+    while r.remaining >= 8:
+        clen, ctype = r.u32(), r.take(4)
         if ctype == b"IEND":
-            saw_iend = True
-            break
-        if i + 12 + clen > n:  # len + type + data + crc must fit
-            return None
+            if not idat:
+                return None
+            return w, h, depth, color, interlace, b"".join(idat), plte
+        body = r.take(clen)
+        r.skip(4)  # crc
         if ctype == b"IDAT":
-            saw_idat = True
-        i += 12 + clen
-    if not saw_idat or not saw_iend:
+            idat.append(body)
+        elif ctype == b"PLTE":
+            plte = body
+    return None
+
+
+def _decode_png(payload: bytes) -> dict | None:
+    """PNG header decode: dimensions from ``_png_layout``."""
+    layout = _png_layout(bytes(payload))
+    if layout is None:
         return None
-    return {"format": "png", "width": w, "height": h}
+    return {"format": "png", "width": layout[0], "height": layout[1]}
 
 
 def _png_unfilter(
@@ -179,6 +339,7 @@ _ADAM7 = (
 )
 
 
+@_never_raise
 def decode_png_pixels(payload: bytes | None) -> dict | None:
     """REAL PNG pixel decode via stdlib zlib — no codec library:
     inflate the concatenated IDAT stream and invert the five per-row
@@ -194,63 +355,26 @@ def decode_png_pixels(payload: bytes | None) -> dict | None:
     passes contribute zero stream bytes).  Returns
     ``{"width", "height", "channels", "pixels"}`` with ``pixels`` =
     height rows of width*channels bytes, or None; never raises on
-    adversarial bytes (structural validation via ``_decode_png``,
+    adversarial bytes (structural validation via ``_png_layout``,
     zlib/length failures → None).  Per-byte Python is fine here: this
     runs inside Arrow batches on THUMBNAIL-SCALE work (a deployment
     decoding full-size photos swaps in an Arrow-native codec, same
     mapInPandas plumbing)."""
-    import zlib
-
-    if not payload:
+    layout = payload and _png_layout(bytes(payload))
+    if not layout:
         return None
-    meta = _decode_png(payload)
-    if meta is None:
-        return None
-    bit_depth, color_type, interlace = (
-        payload[24],
-        payload[25],
-        payload[28],
-    )
+    w, h, bit_depth, color_type, interlace, idat, plte = layout
     channels = {0: 1, 2: 3, 4: 2, 6: 4}.get(color_type)
-    # legal (color type, bit depth) combinations, PNG spec §11.2.2
-    if color_type == 3:
-        if bit_depth not in (1, 2, 4, 8):
-            return None
-    elif channels is None:
-        return None
-    elif color_type == 0:
-        if bit_depth not in (1, 2, 4, 8, 16):
-            return None
-    elif bit_depth not in (8, 16):
-        return None
-    w, h = meta["width"], meta["height"]
-    if w * h > _JPEG_MAX_PIXELS:
-        # adversarial-dimension guard: a CRC-valid IHDR can still
-        # claim huge dims over a tiny (or zip-bomb) IDAT; bound the
-        # pixel grid before any allocation, like _JPEG_MAX_PIXELS
-        return None
-    i, n, idat, plte = 33, len(payload), [], None
-    while i + 8 <= n:  # chunk table already validated by _decode_png
-        clen = int.from_bytes(payload[i:i + 4], "big")
-        ctype = bytes(payload[i + 4:i + 8])
-        if ctype == b"IEND":
-            break
-        if ctype == b"IDAT":
-            idat.append(bytes(payload[i + 8:i + 8 + clen]))
-        elif ctype == b"PLTE":
-            plte = bytes(payload[i + 8:i + 8 + clen])
-        i += 12 + clen
-    try:
-        # cap the inflate at the largest legal filtered-stream size
-        # (≤ 8 bytes/pixel + one filter byte per scanline, interlace
-        # adds at most one short row per pass) so a zip-bomb IDAT
-        # cannot expand past the declared image
-        max_raw = (w * 8 + 2) * h + 4096
-        d = zlib.decompressobj()
-        raw = d.decompress(b"".join(idat), max_raw)
-        if d.unconsumed_tail:
-            return None
-    except zlib.error:
+    # a CRC-valid IHDR can still claim huge dims over a tiny (or
+    # zip-bomb) IDAT: bound the pixel grid before any allocation
+    _need(w * h, _MAX_PIXELS)
+    # cap the inflate at the largest legal filtered-stream size
+    # (≤ 8 bytes/pixel + one filter byte per scanline, interlace
+    # adds at most one short row per pass) so a zip-bomb IDAT
+    # cannot expand past the declared image
+    d = zlib.decompressobj()
+    raw = d.decompress(idat, (w * 8 + 2) * h + 4096)
+    if d.unconsumed_tail:
         return None
     # packed formats (palette at any depth, sub-byte grayscale) carry
     # one sample VALUE per pixel; byte-aligned formats carry bpp raw
@@ -332,24 +456,18 @@ def decode_png_pixels(payload: bytes | None) -> dict | None:
     }
 
 
-def _ppm_pixels(payload: bytes | None) -> dict | None:
-    """Raw pixel extraction for binary PPM (P6, maxval <= 255): the
-    header parse is ``decode_image``'s tolerant netpbm walk; pixels
-    are the w*h*3 bytes after the single whitespace following maxval.
-    Same return shape as ``decode_png_pixels``."""
-    if not payload or bytes(payload[:2]) != b"P6":
-        return None
-    img = decode_image(payload)
-    if img is None or img["format"] != "ppm":
-        return None
-    # re-walk the header for the maxval and the pixel offset
-    # (decode_image already validated structure + pixel length)
+def _netpbm_layout(data: bytes) -> tuple | None:
+    """The one binary-netpbm header walk (P6 PPM / P5 PGM):
+    whitespace- and comment-tolerant tokens for width, height and
+    maxval, then exactly one whitespace byte before the pixel array,
+    whose declared length must be present.  Returns (format, w, h,
+    maxval, pixel offset) or None."""
     toks: list[bytes] = []
-    i, n = 2, len(payload)
+    i, n = 2, len(data)
     while len(toks) < 3 and i < n:
-        c = payload[i:i + 1]
-        if c == b"#":
-            while i < n and payload[i:i + 1] not in (b"\n", b"\r"):
+        c = data[i:i + 1]
+        if c == b"#":  # comment runs to end of line
+            while i < n and data[i:i + 1] not in (b"\n", b"\r"):
                 i += 1
         elif c.isspace():
             i += 1
@@ -357,21 +475,42 @@ def _ppm_pixels(payload: bytes | None) -> dict | None:
             j = i
             while (
                 j < n
-                and not payload[j:j + 1].isspace()
-                and payload[j:j + 1] != b"#"
+                and not data[j:j + 1].isspace()
+                and data[j:j + 1] != b"#"
             ):
                 j += 1
-            toks.append(bytes(payload[i:j]))
+            toks.append(data[i:j])
             i = j
-    if int(toks[2]) > 255:  # 2-byte samples out of scope (like 16-bit PNG)
+    if len(toks) < 3 or i >= n:
         return None
-    w, h = img["width"], img["height"]
-    start = i + 1  # one whitespace byte after maxval
+    w, h, maxval = (int(t) for t in toks)
+    if w <= 0 or h <= 0 or not 0 < maxval < 65536:
+        return None
+    per_px = (3 if data[:2] == b"P6" else 1) * (2 if maxval > 255 else 1)
+    if n - (i + 1) < w * h * per_px:
+        return None
+    return ("ppm" if data[:2] == b"P6" else "pgm"), w, h, maxval, i + 1
+
+
+@_never_raise
+def _ppm_pixels(payload: bytes | None) -> dict | None:
+    """Raw pixel extraction for binary PPM (P6, maxval <= 255): the
+    header is ``_netpbm_layout``'s; pixels are the w*h*3 bytes after
+    it.  Same return shape as ``decode_png_pixels``."""
+    data = bytes(payload or b"")
+    # decode_image routes an ftyp at bytes 4-8 to HEIF before netpbm
+    if data[:2] != b"P6" or data[4:8] == b"ftyp":
+        return None
+    layout = _netpbm_layout(data)
+    # 2-byte samples are out of scope (like 16-bit PNG)
+    if layout is None or layout[3] > 255:
+        return None
+    _, w, h, _, start = layout
     return {
         "width": w,
         "height": h,
         "channels": 3,
-        "pixels": bytes(payload[start:start + w * h * 3]),
+        "pixels": data[start:start + w * h * 3],
     }
 
 
@@ -439,152 +578,139 @@ def _lzw_decode(data: bytes, min_code: int, npix: int) -> bytes | None:
     return bytes(out[:npix]) if len(out) >= npix else None
 
 
-def decode_gif_pixels(payload: bytes | None) -> dict | None:
-    """REAL GIF pixel decode — LZW is pure bit-twiddling, no codec
-    library: walk to the FIRST image descriptor, choose its local or
-    the global color table, concatenate the LZW sub-blocks, decode the
-    index stream (``_lzw_decode``), undo interlacing if flagged, and
-    map indices through the palette to RGB bytes.  Frames after the
-    first (animation) are out of scope — the first frame is the
-    thumbnail/feature source.  Same return shape as
-    ``decode_png_pixels`` (channels = 3); None on anything malformed,
-    never raises."""
-    if not payload:
-        return None
-    img = decode_image(payload)
-    if img is None or img["format"] != "gif":
-        return None
-    n = len(payload)
-    flags = payload[10]
-    gct = None
-    i = 13
-    if flags & 0x80:
-        size = 3 * (2 << (flags & 0x07))
-        gct = bytes(payload[13:13 + size])
-        i = 13 + size
-    while i < n:
-        b = payload[i]
-        if b == 0x21:
-            i = _skip_subblocks(payload, i + 2)
-        elif b == 0x2C:
-            # image descriptor: left, top, w, h (little-endian), flags
-            iw = int.from_bytes(payload[i + 5:i + 7], "little")
-            ih = int.from_bytes(payload[i + 7:i + 9], "little")
-            lflags = payload[i + 9]
-            j = i + 10
-            pal = gct
-            if lflags & 0x80:
-                size = 3 * (2 << (lflags & 0x07))
-                pal = bytes(payload[j:j + size])
-                j += size
-            if pal is None or iw <= 0 or ih <= 0:
-                return None
-            if iw * ih > _JPEG_MAX_PIXELS:
-                return None  # bound the LZW output target (hostile
-                # dims would otherwise let a small stream of max-length
-                # dictionary entries expand ~4096x the payload)
-            min_code = payload[j]
-            j += 1
-            # concatenate the LZW sub-blocks
-            data = bytearray()
-            while j < n:
-                sz = payload[j]
-                j += 1
-                if sz == 0:
-                    break
-                data.extend(payload[j:j + sz])
-                j += sz
-            idx = _lzw_decode(bytes(data), min_code, iw * ih)
-            if idx is None or max(idx) * 3 + 2 >= len(pal):
-                return None
-            if lflags & 0x40:  # interlaced: rows arrive in 4 passes
-                rows = [idx[r * iw:(r + 1) * iw] for r in range(ih)]
-                order = (
-                    list(range(0, ih, 8))
-                    + list(range(4, ih, 8))
-                    + list(range(2, ih, 4))
-                    + list(range(1, ih, 2))
-                )
-                deinter: list[bytes] = [b""] * ih
-                for src, dst in enumerate(order):
-                    deinter[dst] = rows[src]
-                idx = b"".join(deinter)
-            pixels = bytes(
-                v for k in idx for v in pal[3 * k:3 * k + 3]
-            )
-            return {
-                "width": iw,
-                "height": ih,
-                "channels": 3,
-                "pixels": pixels,
-            }
-        else:
-            return None
-        if i is None:
-            return None
-    return None
-
-
 # SOF markers that carry frame dimensions: C0-C3, C5-C7, C9-CB, CD-CF
 # (C4 = DHT, C8 = JPG extension, CC = DAC — no dimensions)
 _JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
 
 
-def _skip_subblocks(payload: bytes, i: int) -> int | None:
-    """Advance past a GIF sub-block chain (size-prefixed blocks ending
-    at a 0 terminator); None if the chain runs off the payload."""
-    n = len(payload)
-    while i < n:
-        sz = payload[i]
-        i += 1
-        if sz == 0:
-            return i
-        i += sz
-    return None
+def _gif_subblocks(r: _Reader) -> bytes:
+    """One GIF sub-block chain (size-prefixed blocks ending at a 0
+    terminator), joined; Malformed if it runs off the payload."""
+    out = []
+    while size := r.u8():
+        out.append(r.take(size))
+    return b"".join(out)
+
+
+def _gif_layout(data: bytes) -> tuple | None:
+    """The one GIF block walk, shared by the header, pixel, frame and
+    compose decoders: logical screen (width, height, flags,
+    background index), the global colour table, then extension and
+    image blocks up to the 0x3B trailer or the payload end.  Each
+    image is (left, top, w, h, flags, palette — local else global —,
+    palette bits, raw LZW block incl. the min-code byte, min code,
+    joined LZW data, (disposal, transparent index) of the last
+    graphic control extension before it).  Returns (sw, sh, flags,
+    bg_index, gct, images, trailer reached) or None; raises Malformed
+    when a table or sub-block chain runs off the payload."""
+    n = len(data)
+    if n < 14 or data[:6] not in (b"GIF87a", b"GIF89a"):
+        return None
+    r = _Reader(data, 6, order="little")
+    sw, sh, flags, bg_index, _ = r.unpack("HHBBB")
+    gct = r.take(3 * (2 << (flags & 7))) if flags & 0x80 else None
+    images: list[tuple] = []
+    gce = (0, None)
+    while r.pos < n:
+        i = r.pos
+        b = r.u8()
+        if b == 0x3B:  # trailer
+            return sw, sh, flags, bg_index, gct, images, True
+        if b == 0x21:  # extension: label + sub-blocks
+            if data[i + 1:i + 2] == b"\xf9" and i + 7 < n and (
+                    data[i + 2] == 4):
+                packed = data[i + 3]
+                gce = ((packed >> 2) & 7,
+                       data[i + 6] if packed & 1 else None)
+            r.skip(1)
+            _gif_subblocks(r)
+        elif b == 0x2C:  # image descriptor
+            if r.remaining < 9:
+                return None
+            left, top, iw, ih, lflags = r.unpack("HHHHB")
+            pal, bits = gct, (flags & 7 if gct is not None else 0)
+            if lflags & 0x80:  # local colour table
+                bits = lflags & 7
+                pal = r.take(3 * (2 << bits))
+            start = r.pos
+            min_code = r.u8()
+            lzw = _gif_subblocks(r)
+            images.append((left, top, iw, ih, lflags, pal, bits,
+                           data[start:r.pos], min_code, lzw, gce))
+            gce = (0, None)
+        else:
+            return None
+    return sw, sh, flags, bg_index, gct, images, False
+
+
+def _gif_header(layout: tuple | None) -> dict | None:
+    """``decode_image``'s GIF gate over ``_gif_layout``: positive
+    logical-screen dims, at least one image descriptor AND the
+    trailer — "GIF89a" followed by junk fails, same contract as the
+    PNG chunk walk."""
+    if layout is None:
+        return None
+    sw, sh, _, _, _, images, trailer = layout
+    if sw <= 0 or sh <= 0 or not images or not trailer:
+        return None
+    return {"format": "gif", "width": sw, "height": sh}
 
 
 def _decode_gif(payload: bytes) -> dict | None:
-    """GIF logical-screen decode with a full block walk: header +
-    screen descriptor give (width, height); the walk skips the global
-    color table, extension and image blocks (each sub-block chain
-    bounds-checked) and must find at least one image descriptor AND
-    the 0x3B trailer — "GIF89a" followed by junk fails, same contract
-    as the PNG chunk walk."""
-    n = len(payload)
-    if n < 14 or bytes(payload[:6]) not in (b"GIF87a", b"GIF89a"):
+    """GIF header decode: the logical-screen dims (``_gif_header``)."""
+    return _gif_header(_gif_layout(bytes(payload)))
+
+
+def _gif_indices(image: tuple) -> bytes | None:
+    """One GIF image's palette indices in display order: LZW decode
+    (``_lzw_decode``), every index inside the palette, interlaced rows
+    (4 passes) put back in order.  None if the stream is bad."""
+    _, _, iw, ih, lflags, pal, _, _, min_code, lzw, _ = image
+    idx = _lzw_decode(lzw, min_code, iw * ih)
+    if idx is None or max(idx) * 3 + 2 >= len(pal):
         return None
-    w = int.from_bytes(payload[6:8], "little")
-    h = int.from_bytes(payload[8:10], "little")
-    if w <= 0 or h <= 0:
+    if lflags & 0x40:  # interlaced: rows arrive in 4 passes
+        rows = [idx[r * iw:(r + 1) * iw] for r in range(ih)]
+        order = (
+            list(range(0, ih, 8)) + list(range(4, ih, 8))
+            + list(range(2, ih, 4)) + list(range(1, ih, 2))
+        )
+        deinter: list[bytes] = [b""] * ih
+        for src, dst in enumerate(order):
+            deinter[dst] = rows[src]
+        idx = b"".join(deinter)
+    return idx
+
+
+@_never_raise
+def decode_gif_pixels(payload: bytes | None) -> dict | None:
+    """REAL GIF pixel decode — LZW is pure bit-twiddling, no codec
+    library: the FIRST image of ``_gif_layout`` (local or global
+    colour table), its index stream decoded and de-interlaced
+    (``_gif_indices``) and mapped through the palette to RGB bytes.
+    Frames after the first (animation) are out of scope — the first
+    frame is the thumbnail/feature source.  Same return shape as
+    ``decode_png_pixels`` (channels = 3); None on anything malformed,
+    never raises."""
+    layout = _gif_layout(bytes(payload or b""))
+    if _gif_header(layout) is None:
         return None
-    flags = payload[10]
-    i = 13
-    if flags & 0x80:  # global color table: 3 bytes x 2^(bits+1)
-        i += 3 * (2 << (flags & 0x07))
-    saw_image = False
-    while i < n:
-        b = payload[i]
-        if b == 0x3B:  # trailer
-            if saw_image:
-                return {"format": "gif", "width": w, "height": h}
-            return None
-        if b == 0x21:  # extension: introducer + label + sub-blocks
-            nxt = _skip_subblocks(payload, i + 2)
-        elif b == 0x2C:  # image descriptor
-            if i + 10 > n:
-                return None
-            lflags = payload[i + 9]
-            j = i + 10
-            if lflags & 0x80:  # local color table
-                j += 3 * (2 << (lflags & 0x07))
-            nxt = _skip_subblocks(payload, j + 1)  # +1: LZW code size
-            saw_image = True
-        else:
-            return None
-        if nxt is None:
-            return None
-        i = nxt
-    return None  # ran out of payload before the trailer
+    image = layout[5][0]
+    iw, ih, pal = image[2], image[3], image[5]
+    if pal is None or iw <= 0 or ih <= 0:
+        return None
+    # bound the LZW output target (hostile dims would otherwise let
+    # max-length dictionary entries expand ~4096x)
+    _need(iw * ih, _MAX_PIXELS)
+    idx = _gif_indices(image)
+    if idx is None:
+        return None
+    return {
+        "width": iw,
+        "height": ih,
+        "channels": 3,
+        "pixels": bytes(v for k in idx for v in pal[3 * k:3 * k + 3]),
+    }
 
 
 def _decode_jpeg(payload: bytes) -> dict | None:
@@ -653,10 +779,6 @@ def _jpeg_dct_basis() -> "np.ndarray":
 
 
 _JPEG_DCT_C = _jpeg_dct_basis()
-
-# adversarial dimension-claim bound for the full pixel decode (the
-# header-only walk above has no such bound — metadata is cheap)
-_JPEG_MAX_PIXELS = 1 << 22
 
 
 def _jpeg_huff_table(
@@ -748,6 +870,7 @@ def _jpeg_extend(v: int, t: int) -> int:
     return v if v >= (1 << (t - 1)) else v - (1 << t) + 1
 
 
+@_never_raise
 def decode_jpeg_pixels(payload: bytes | None) -> dict | None:
     """REAL baseline-JPEG pixel decode from the public T.81 spec — no
     codec library: the marker walk collects DQT/DHT/SOF/DRI, the scan
@@ -765,22 +888,13 @@ def decode_jpeg_pixels(payload: bytes | None) -> dict | None:
     overwhelming majority of web JPEGs; arithmetic, 12-bit and CMYK
     return None and stay on the metadata-only path.  Same return
     shape as ``decode_png_pixels``; never raises on adversarial bytes
-    (dimension claims bounded by ``_JPEG_MAX_PIXELS``).  Per-symbol
+    (dimension claims bounded by ``_MAX_PIXELS``).  Per-symbol
     Python bit-reading is fine here: thumbnail-scale work inside
     Arrow batches, same contract as the PNG unfilter loop."""
-    if not payload or len(payload) < 4:
-        return None
-    try:
-        return _jpeg_pixels(bytes(payload))
-    except (ValueError, IndexError, KeyError, struct.error,
-            OverflowError):
-        return None
-
-
-def _jpeg_pixels(p: bytes) -> dict | None:
-    if p[0] != 0xFF or p[1] != 0xD8:
-        return None
+    p = bytes(payload or b"")
     n = len(p)
+    if n < 4 or p[0] != 0xFF or p[1] != 0xD8:
+        return None
     i = 2
     qt: dict[int, "np.ndarray"] = {}
     huff_dc: dict[int, dict] = {}
@@ -852,8 +966,9 @@ def _jpeg_pixels(p: bytes) -> dict | None:
             h = int.from_bytes(body[1:3], "big")
             w = int.from_bytes(body[3:5], "big")
             nc = body[5]
-            if not w or not h or w * h > _JPEG_MAX_PIXELS:
+            if not w or not h:
                 return None
+            _need(w * h, _MAX_PIXELS)
             if nc not in (1, 3) or len(body) < 6 + 3 * nc:
                 return None
             comps = []
@@ -1209,53 +1324,53 @@ def _jpeg_assemble(w, h, comps, planes):
     }
 
 
-def _decode_tiff(payload: bytes) -> dict | None:
-    """TIFF baseline header decode, both byte orders: magic (II*\\0 /
-    MM\\0*), first-IFD offset, then the IFD entry table (12-byte
-    entries) read for ImageWidth (256) / ImageLength (257) as SHORT or
-    LONG; structural validation = the IFD must fit the payload, both
-    dimensions must be present and positive, and the image must
-    declare pixel data (StripOffsets 273 or TileOffsets 324) — "II*"
-    followed by junk fails.  Inline values are left-justified in the
-    4-byte value field per the spec, so a SHORT reads from the field's
-    first two bytes in either byte order."""
-    n = len(payload)
+def _tiff_layout(data: bytes) -> tuple | None:
+    """The one TIFF IFD walk, both byte orders: magic (II*\\0 /
+    MM\\0*), first-IFD offset, then the 12-byte entry table, which
+    must fit the payload.  ImageWidth (256) / ImageLength (257) read
+    as SHORT or LONG — inline values are left-justified in the 4-byte
+    field, so a SHORT reads from its first two bytes in either order
+    — must be present and positive, and the image must declare pixel
+    data (StripOffsets 273 or TileOffsets 324): "II*" followed by
+    junk fails.  Returns (byte order, w, h, {tag: (type, count,
+    value field)}) or None."""
+    n = len(data)
     if n < 8:
         return None
-    if bytes(payload[:4]) == b"II*\x00":
-        endian = "little"
-    elif bytes(payload[:4]) == b"MM\x00*":
-        endian = "big"
-    else:
+    endian = {b"II*\x00": "little", b"MM\x00*": "big"}.get(data[:4])
+    if endian is None:
         return None
-    off = int.from_bytes(payload[4:8], endian)
+    r = _Reader(data, 4, order=endian)
+    off = r.u32()
     if off < 8 or off + 2 > n:
         return None
-    cnt = int.from_bytes(payload[off:off + 2], endian)
+    r.pos = off
+    cnt = r.u16()
     if cnt == 0 or off + 2 + 12 * cnt + 4 > n:
         return None
     w = h = None
-    has_data = False
-    for i in range(cnt):
-        e = off + 2 + 12 * i
-        tag = int.from_bytes(payload[e:e + 2], endian)
-        typ = int.from_bytes(payload[e + 2:e + 4], endian)
-        count = int.from_bytes(payload[e + 4:e + 8], endian)
-        if typ == 3:  # SHORT, inline (left-justified)
-            val = int.from_bytes(payload[e + 8:e + 10], endian)
-        elif typ == 4:  # LONG, inline
-            val = int.from_bytes(payload[e + 8:e + 12], endian)
-        else:
-            val = None
-        if tag == 256 and count == 1:
-            w = val
-        elif tag == 257 and count == 1:
-            h = val
-        elif tag in (273, 324):
-            has_data = True
-    if not w or not h or not has_data:
+    tags: dict[int, tuple[int, int, bytes]] = {}
+    for _ in range(cnt):
+        tag, typ, count, field = r.unpack("HHI4s")
+        tags[tag] = (typ, count, field)
+        if count == 1 and tag in (256, 257):
+            val = (int.from_bytes(field[:2] if typ == 3 else field, endian)
+                   if typ in (3, 4) else None)
+            if tag == 256:
+                w = val
+            else:
+                h = val
+    if not w or not h or not (273 in tags or 324 in tags):
         return None
-    return {"format": "tiff", "width": w, "height": h}
+    return endian, w, h, tags
+
+
+def _decode_tiff(payload: bytes) -> dict | None:
+    """TIFF header decode: dimensions from ``_tiff_layout``."""
+    layout = _tiff_layout(bytes(payload))
+    if layout is None:
+        return None
+    return {"format": "tiff", "width": layout[1], "height": layout[2]}
 
 
 def _tiff_values(
@@ -1357,6 +1472,7 @@ def _packbits(src: bytes) -> bytes | None:
     return bytes(out)
 
 
+@_never_raise
 def decode_tiff_pixels(payload: bytes | None) -> dict | None:
     """REAL baseline-TIFF pixel decode — no codec library: both byte
     orders, Compression 1 (none), 5 (LZW — ``_tiff_lzw``, MSB-first
@@ -1382,22 +1498,11 @@ def decode_tiff_pixels(payload: bytes | None) -> dict | None:
     tiles and other bit depths return None (header metadata stays
     real via ``_decode_tiff``).  Same return shape as
     ``decode_png_pixels``; never raises."""
-    if not payload:
+    payload = bytes(payload or b"")
+    layout = _tiff_layout(payload)
+    if layout is None:
         return None
-    meta = _decode_tiff(payload)
-    if meta is None:
-        return None
-    endian = "little" if bytes(payload[:4]) == b"II*\x00" else "big"
-    off = int.from_bytes(payload[4:8], endian)
-    cnt = int.from_bytes(payload[off:off + 2], endian)
-    tags: dict[int, tuple[int, int, bytes]] = {}
-    for i in range(cnt):
-        e = off + 2 + 12 * i
-        tags[int.from_bytes(payload[e:e + 2], endian)] = (
-            int.from_bytes(payload[e + 2:e + 4], endian),
-            int.from_bytes(payload[e + 4:e + 8], endian),
-            bytes(payload[e + 8:e + 12]),
-        )
+    endian, w, h, tags = layout
 
     def values(tag: int) -> list[int] | None:
         if tag not in tags:
@@ -1428,7 +1533,6 @@ def decode_tiff_pixels(payload: bytes | None) -> dict | None:
         offs, counts = values(273), values(279)
         if offs is None or counts is None or len(offs) != len(counts):
             return None
-        w, h = meta["width"], meta["height"]
         rps = scalar(278, h)
         if not rps or len(offs) != -(-h // rps):
             return None
@@ -1481,30 +1585,22 @@ def decode_tiff_pixels(payload: bytes | None) -> dict | None:
     tiled = 322 in tags and 324 in tags
     if planar not in (1, 2) or (planar == 2 and tiled):
         return None
-    # adversarial-dimension guard: the tiled/planar paths preallocate
-    # w*h*spp, so claimed dims must be bounded BEFORE any allocation
-    # (same contract as _JPEG_MAX_PIXELS; crawl payloads are hostile)
-    if meta["width"] * meta["height"] > _JPEG_MAX_PIXELS:
-        return None
+    # the tiled/planar paths preallocate w*h*spp: bound the claimed
+    # dims BEFORE any allocation (crawl payloads are hostile)
+    _need(w * h, _MAX_PIXELS)
     offs = counts = None
     if not tiled:
         offs, counts = values(273), values(279)
         if (offs is None or counts is None
                 or len(offs) != len(counts)):
             return None
-    w, h = meta["width"], meta["height"]
     n = len(payload)
 
     def decomp(chunk: bytes) -> list[int] | None:
         """Decompress one strip/tile and return its SAMPLE values
         (16-bit samples read in the file's byte order)."""
         if comp in (8, 32946):  # Deflate: each chunk its own stream
-            import zlib
-
-            try:
-                chunk = zlib.decompress(chunk)
-            except zlib.error:
-                return None
+            chunk = zlib.decompress(chunk)
         elif comp == 32773:
             chunk = _packbits(chunk)
             if chunk is None:
@@ -1690,8 +1786,8 @@ def _msvideo1_pixels(
     pair up per 2x2 quadrant), else 1-color.  8-bit colors index the
     DIB palette; 16-bit colors are RGB555 expanded with the
     endpoint-exact (v<<3)|(v>>2) replication.  Returns RGB bytes
-    top-down, or None on malformed/truncated streams; never raises
-    (callers rely on the never-raise contract)."""
+    top-down, or None on malformed/truncated streams (an out-of-range
+    palette index raises, for the caller's boundary)."""
     if w <= 0 or h <= 0 or w % 4 or h % 4:
         return None
     if bpp == 8:
@@ -1717,107 +1813,69 @@ def _msvideo1_pixels(
     else:
         rows = [bytearray(black * w) for _ in range(h)]
 
-    def put(y: int, x: int, rgb: bytes) -> None:
-        rows[y][3 * x:3 * x + 3] = rgb
+    def paint(x0: int, top: int, cols: list, flags: int) -> None:
+        # block rows run bottom-up; 2 colors pick per flag bit, 8
+        # colors pair up per 2x2 quadrant, 1 color fills the block
+        for ry in range(4):
+            y = top + 3 - ry
+            for rx in range(4):
+                if len(cols) == 1:
+                    rows[y][3 * (x0 + rx):3 * (x0 + rx) + 3] = cols[0]
+                    continue
+                q = ((ry & 2) << 1) + (rx & 2) if len(cols) == 8 else 0
+                c = cols[q + ((flags & 1) ^ 1)]
+                rows[y][3 * (x0 + rx):3 * (x0 + rx) + 3] = c
+                flags >>= 1
+
+    def words(at: int, k: int) -> list[int]:
+        return [int.from_bytes(data[at + 2 * j:at + 2 * j + 2], "little")
+                for j in range(k)]
 
     data = bytes(data)
     n = len(data)
     i = 0
     skip = 0
-    try:
-        for by in range(h // 4 - 1, -1, -1):
-            top = by * 4
-            for bx in range(w // 4):
-                if skip:
-                    skip -= 1
-                    continue
-                if i + 2 > n:
-                    return None  # truncated: every non-skipped
-                    # block needs its code word
-                a, b = data[i], data[i + 1]
-                i += 2
-                if (b & 0xFC) == 0x84:  # skip run, self-inclusive
-                    skip = (((b - 0x84) << 8) | a) - 1
-                    continue
-                x0 = bx * 4
-                if bpp == 8:
-                    if b < 0x80:  # 2-color
-                        flags = (b << 8) | a
-                        if i + 2 > n:
-                            return None
-                        cols = (palette[data[i]], palette[data[i + 1]])
-                        i += 2
-                        for ry in range(4):
-                            y = top + 3 - ry
-                            for rx in range(4):
-                                put(y, x0 + rx,
-                                    cols[(flags & 1) ^ 1])
-                                flags >>= 1
-                    elif b >= 0x90:  # 8-color, 2 per 2x2 quadrant
-                        flags = (b << 8) | a
-                        if i + 8 > n:
-                            return None
-                        cols = [palette[c] for c in data[i:i + 8]]
-                        i += 8
-                        for ry in range(4):
-                            y = top + 3 - ry
-                            for rx in range(4):
-                                q = ((ry & 2) << 1) + (rx & 2)
-                                put(y, x0 + rx,
-                                    cols[q + ((flags & 1) ^ 1)])
-                                flags >>= 1
-                    else:  # 1-color: the low byte indexes the palette
-                        rgb = palette[a]
-                        for ry in range(4):
-                            for rx in range(4):
-                                put(top + ry, x0 + rx, rgb)
-                else:  # 16-bit RGB555
-                    if b < 0x80:
-                        flags = (b << 8) | a
-                        if i + 4 > n:
-                            return None
-                        c0 = int.from_bytes(data[i:i + 2], "little")
-                        c1 = int.from_bytes(
-                            data[i + 2:i + 4], "little"
-                        )
-                        i += 4
-                        if c0 & 0x8000:  # 8-color variant
-                            if i + 12 > n:
-                                return None
-                            words = [c0, c1] + [
-                                int.from_bytes(
-                                    data[i + 2 * k:i + 2 * k + 2],
-                                    "little",
-                                )
-                                for k in range(6)
-                            ]
-                            i += 12
-                            cols = [rgb555(v) for v in words]
-                            for ry in range(4):
-                                y = top + 3 - ry
-                                for rx in range(4):
-                                    q = ((ry & 2) << 1) + (rx & 2)
-                                    put(y, x0 + rx,
-                                        cols[q + ((flags & 1) ^ 1)])
-                                    flags >>= 1
-                        else:  # 2-color
-                            cols = (rgb555(c0), rgb555(c1))
-                            for ry in range(4):
-                                y = top + 3 - ry
-                                for rx in range(4):
-                                    put(y, x0 + rx,
-                                        cols[(flags & 1) ^ 1])
-                                    flags >>= 1
-                    else:  # 1-color: the word IS the RGB555 color
-                        rgb = rgb555(((b << 8) | a) & 0x7FFF)
-                        for ry in range(4):
-                            for rx in range(4):
-                                put(top + ry, x0 + rx, rgb)
-    except (IndexError, ValueError):
-        return None
+    for by in range(h // 4 - 1, -1, -1):
+        for bx in range(w // 4):
+            if skip:
+                skip -= 1
+                continue
+            if i + 2 > n:
+                return None  # truncated: every non-skipped
+                # block needs its code word
+            a, b = data[i], data[i + 1]
+            i += 2
+            if (b & 0xFC) == 0x84:  # skip run, self-inclusive
+                skip = (((b - 0x84) << 8) | a) - 1
+                continue
+            flags = (b << 8) | a
+            if bpp == 8:
+                # 2-color (b < 0x80), 8-color (b >= 0x90), else
+                # 1-color: the low byte indexes the palette
+                k = 2 if b < 0x80 else 8 if b >= 0x90 else 0
+                if i + k > n:
+                    return None
+                cols = ([palette[c] for c in data[i:i + k]] if k
+                        else [palette[a]])
+                i += k
+            elif b < 0x80:  # 16-bit: 2 colors, 8 if bit 15 of the 1st
+                if i + 4 > n:
+                    return None
+                cw = words(i, 2)
+                i += 4
+                if cw[0] & 0x8000:
+                    if i + 12 > n:
+                        return None
+                    cw += words(i, 6)
+                    i += 12
+                cols = [rgb555(v) for v in cw]
+            else:  # 1-color: the word IS the RGB555 color
+                cols = [rgb555(flags & 0x7FFF)]
+            paint(bx * 4, by * 4, cols, flags)
     return b"".join(bytes(r) for r in rows)
 
 
+@_never_raise
 def decode_bmp_pixels(payload: bytes | None) -> dict | None:
     """REAL BMP pixel decode — BMP needs no entropy codec:
     BITMAPINFOHEADER (or larger); BI_RGB raw rows at bit depths 1/4/8
@@ -1831,17 +1889,12 @@ def decode_bmp_pixels(payload: bytes | None) -> dict | None:
     standalone).  Emits RGB.  Bitfield compressions and 16-bit
     BI_RGB return None (header metadata stays real).  Same return
     shape as ``decode_png_pixels``; never raises."""
-    if not payload or len(payload) < 54 or bytes(payload[:2]) != b"BM":
+    payload = bytes(payload or b"")
+    layout = _bmp_layout(payload)
+    if layout is None:
         return None
-    meta = _decode_bmp(payload)
-    if meta is None:
-        return None
-    hdr_size = int.from_bytes(payload[14:18], "little")
-    w = meta["width"]
-    h_raw = int.from_bytes(payload[22:26], "little", signed=True)
+    w, h_raw, bpp, compression, offset, hdr_size = layout
     h = abs(h_raw)
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
     rle = None
     msv1 = False
     if compression == 1 and bpp == 8 and h_raw > 0:
@@ -1853,11 +1906,9 @@ def decode_bmp_pixels(payload: bytes | None) -> dict | None:
         msv1 = True  # MS Video 1 frame re-wrapped as a DIB
     elif compression != 0 or bpp == 16:  # bitfields / 16-bit: no
         return None
-    if w * h > _JPEG_MAX_PIXELS:
-        # RLE data is variable-length, so claimed dims are unbounded
-        # by the payload size — cap them before _bmp_rle preallocates
-        return None
-    offset = int.from_bytes(payload[10:14], "little")
+    # RLE data is variable-length, so claimed dims are unbounded by
+    # the payload size — cap them before _bmp_rle preallocates
+    _need(w * h, _MAX_PIXELS)
     row_bytes = ((w * bpp + 31) // 32) * 4
     palette = None
     if bpp <= 8:
@@ -1925,26 +1976,36 @@ def decode_bmp_pixels(payload: bytes | None) -> dict | None:
             "pixels": bytes(out)}
 
 
-def _ico_entries(data: bytes):
-    """Parse the ICONDIR + entry table of an ICO/CUR payload (the
-    public favicon format): returns (kind, [(off, size)]) with every
-    entry's byte range bounds-checked, or None."""
+def _ico_layout(data: bytes) -> tuple | None:
+    """The one ICO/CUR (favicon) directory walk: ICONDIR + entry
+    table, every entry's byte range in bounds and its embedded image
+    structurally valid (``_ico_entry_dims``).  Returns (kind,
+    (w, h, off, size, is_png) of the LARGEST entry — the one a
+    pipeline thumbnails) or None."""
     n = len(data)
     if (n < 22 or data[0:2] != b"\x00\x00"
             or data[2:4] not in (b"\x01\x00", b"\x02\x00")):
         return None
-    count = int.from_bytes(data[4:6], "little")
+    r = _Reader(data, 4, order="little")
+    count = r.u16()
     if count == 0 or 6 + 16 * count > n:
         return None
     entries = []
-    for k in range(count):
-        e = 6 + 16 * k
-        size = int.from_bytes(data[e + 8:e + 12], "little")
-        off = int.from_bytes(data[e + 12:e + 16], "little")
+    for _ in range(count):
+        r.skip(8)
+        size, off = r.u32(), r.u32()
         if size < 16 or off < 6 + 16 * count or off + size > n:
             return None
         entries.append((off, size))
-    return ("ico" if data[2] == 1 else "cur"), entries
+    best = None
+    for off, size in entries:
+        d = _ico_entry_dims(data, off, size)
+        if d is None:  # every entry must be structurally valid
+            return None
+        w, h, is_png = d
+        if best is None or w * h > best[0] * best[1]:
+            best = (w, h, off, size, is_png)
+    return ("ico" if data[2] == 1 else "cur"), best
 
 
 def _ico_entry_dims(data: bytes, off: int, size: int):
@@ -1985,27 +2046,17 @@ def _ico_entry_dims(data: bytes, off: int, size: int):
 
 
 def _decode_ico(payload: bytes) -> dict | None:
-    """REAL ICO/CUR (favicon) header decode: ICONDIR walk with every
-    entry's embedded image structurally validated (PNG via the
-    CRC-verified IHDR path, DIB via the doubled-height
-    BITMAPINFOHEADER); reported dims are the LARGEST entry's — the
-    one a pipeline thumbnails.  None on anything malformed; never
-    raises."""
-    parsed = _ico_entries(payload)
-    if parsed is None:
+    """REAL ICO/CUR (favicon) header decode: the largest entry's dims
+    from ``_ico_layout`` (PNG entries via the CRC-verified IHDR path,
+    DIB entries via the doubled-height BITMAPINFOHEADER)."""
+    layout = _ico_layout(payload)
+    if layout is None:
         return None
-    kind, entries = parsed
-    best = None
-    for off, size in entries:
-        d = _ico_entry_dims(payload, off, size)
-        if d is None:  # every entry must be structurally valid
-            return None
-        w, h, _ = d
-        if best is None or w * h > best[0] * best[1]:
-            best = (w, h)
-    return {"format": kind, "width": best[0], "height": best[1]}
+    kind, (w, h, _, _, _) = layout
+    return {"format": kind, "width": w, "height": h}
 
 
+@_never_raise
 def decode_ico_pixels(payload: bytes | None) -> dict | None:
     """REAL ICO/CUR pixel decode of the largest entry: PNG entries
     delegate to ``decode_png_pixels``; DIB entries re-wrap the XOR
@@ -2014,23 +2065,12 @@ def decode_ico_pixels(payload: bytes | None) -> dict | None:
     ``decode_bmp_pixels`` — the same re-wrap pattern the AVI/GIF
     frame extractors use.  The 1-bit AND mask (transparency) is
     dropped: output is opaque RGB, same shape as every pixel decoder
-    here.  Never raises."""
-    if not payload:
+    here."""
+    data = bytes(payload or b"")
+    layout = _ico_layout(data)
+    if layout is None:
         return None
-    data = bytes(payload)
-    parsed = _ico_entries(data)
-    if parsed is None:
-        return None
-    _, entries = parsed
-    best = None
-    for off, size in entries:
-        d = _ico_entry_dims(data, off, size)
-        if d is None:
-            return None
-        w, h, is_png = d
-        if best is None or w * h > best[0] * best[1]:
-            best = (w, h, off, size, is_png)
-    w, h, off, size, is_png = best
+    w, h, off, size, is_png = layout[1]
     sl = data[off:off + size]
     if is_png:
         return decode_png_pixels(sl)
@@ -2063,7 +2103,7 @@ def _decode_webp(payload: bytes) -> dict | None:
     (lossless: 0x2F signature + 14-bit packed dims, version bits must
     be 0).  Metadata only — VP8 entropy decode needs a codec library;
     the pixel stance matches JPEG-before-round-5.  None on anything
-    malformed; never raises."""
+    malformed."""
     data = bytes(payload)
     n = len(data)
     if n < 20 or data[:4] != b"RIFF" or data[8:12] != b"WEBP":
@@ -2072,45 +2112,39 @@ def _decode_webp(payload: bytes) -> dict | None:
     # file = 8-byte RIFF header + declared body (+1 odd-size pad)
     if 8 + riff_size not in (n, n - 1) or riff_size < 4:
         return None
-    try:
-        # materialize first: the whole chunk table must tile the
-        # declared body even though only the leading chunk is read
-        for fourcc, b0, b1 in list(
-            _riff_chunks(data, 12, 8 + riff_size)
-        ):
-            if fourcc == b"VP8X":
-                if b1 - b0 < 10:
-                    return None
-                w = int.from_bytes(data[b0 + 4:b0 + 7], "little") + 1
-                h = int.from_bytes(data[b0 + 7:b0 + 10], "little") + 1
-                return {"format": "webp", "width": w, "height": h}
-            if fourcc == b"VP8 ":
-                if b1 - b0 < 10:
-                    return None
-                if data[b0] & 1:  # not a keyframe
-                    return None
-                if data[b0 + 3:b0 + 6] != b"\x9d\x01\x2a":
-                    return None
-                w = int.from_bytes(data[b0 + 6:b0 + 8],
-                                   "little") & 0x3FFF
-                h = int.from_bytes(data[b0 + 8:b0 + 10],
-                                   "little") & 0x3FFF
-                if not w or not h:
-                    return None
-                return {"format": "webp", "width": w, "height": h}
-            if fourcc == b"VP8L":
-                if b1 - b0 < 5 or data[b0] != 0x2F:
-                    return None
-                bits = int.from_bytes(data[b0 + 1:b0 + 5], "little")
-                if bits >> 29:  # version must be 0
-                    return None
-                w = (bits & 0x3FFF) + 1
-                h = ((bits >> 14) & 0x3FFF) + 1
-                return {"format": "webp", "width": w, "height": h}
-            return None  # first chunk must be image-bearing
-    except (ValueError, IndexError, struct.error, OverflowError):
+    # the whole chunk table must tile the declared body even though
+    # only the leading chunk is read
+    chunks = list(_Reader(data, 12, 8 + riff_size, "little").chunks())
+    if not chunks:
         return None
-    return None
+    fourcc, c = chunks[0]
+    if fourcc == b"VP8X":
+        if c.remaining < 10:
+            return None
+        c.skip(4)
+        return {"format": "webp", "width": c.u24() + 1,
+                "height": c.u24() + 1}
+    if fourcc == b"VP8 ":
+        if c.remaining < 10:
+            return None
+        if c.u8() & 1:  # not a keyframe
+            return None
+        c.skip(2)
+        if c.take(3) != b"\x9d\x01\x2a":
+            return None
+        w, h = c.u16() & 0x3FFF, c.u16() & 0x3FFF
+        if not w or not h:
+            return None
+        return {"format": "webp", "width": w, "height": h}
+    if fourcc == b"VP8L":
+        if c.remaining < 5 or c.u8() != 0x2F:
+            return None
+        bits = c.u32()
+        if bits >> 29:  # version must be 0
+            return None
+        return {"format": "webp", "width": (bits & 0x3FFF) + 1,
+                "height": ((bits >> 14) & 0x3FFF) + 1}
+    return None  # first chunk must be image-bearing
 
 
 _HEIF_BRANDS = {
@@ -2129,234 +2163,178 @@ def _decode_heif(payload: bytes) -> dict | None:
     item id) + ipma (item→property associations, 7- or 15-bit
     indices into ipco's 1-based child list) when both are present,
     else the first ispe.  Metadata only — HEVC/AV1 payload decode
-    needs a codec library.  None on anything malformed; never
-    raises."""
+    needs a codec library.  None on anything malformed."""
     data = bytes(payload)
-    n = len(data)
-    if n < 16 or data[4:8] != b"ftyp":
+    if len(data) < 16 or data[4:8] != b"ftyp":
         return None
-    try:
-        fmt = None
-        meta = None
-        for btype, b0, b1 in _mp4_boxes(data, 0, n):
-            if btype == b"ftyp":
-                if b1 - b0 < 8:
-                    return None
-                brands = [data[b0:b0 + 4]] + [
-                    data[k:k + 4] for k in range(b0 + 8, b1 - 3, 4)
-                ]
-                for br in brands:
-                    if br in _HEIF_BRANDS:
-                        fmt = _HEIF_BRANDS[br]
-                        break
-                if fmt is None:
-                    return None
-            elif btype == b"meta":
-                meta = (b0, b1)
-        if fmt is None or meta is None:
-            return None
-        # meta is a FULL box: 4 version/flags bytes precede children
-        if meta[1] - meta[0] < 4:
-            return None
-        pitm_id = None
-        iprp = None
-        for btype, b0, b1 in _mp4_boxes(data, meta[0] + 4, meta[1]):
-            if btype == b"pitm":
-                if b1 - b0 < 6:
-                    return None
-                ver = data[b0]
-                if ver == 0:
-                    pitm_id = int.from_bytes(data[b0 + 4:b0 + 6],
-                                             "big")
-                elif b1 - b0 >= 8:
-                    pitm_id = int.from_bytes(data[b0 + 4:b0 + 8],
-                                             "big")
-            elif btype == b"iprp":
-                iprp = (b0, b1)
-        if iprp is None:
-            return None
-        props: list[tuple[bytes, int, int]] = []
-        ipma = None
-        for btype, b0, b1 in _mp4_boxes(data, *iprp):
-            if btype == b"ipco":
-                props = list(_mp4_boxes(data, b0, b1))
-            elif btype == b"ipma":
-                ipma = (b0, b1)
-
-        def ispe_dims(b0: int, b1: int) -> dict | None:
-            if b1 - b0 < 12:
+    fmt = meta = None
+    for btype, box in _Reader(data).boxes():
+        if btype == b"ftyp":
+            if box.remaining < 8:
                 return None
-            w = int.from_bytes(data[b0 + 4:b0 + 8], "big")
-            h = int.from_bytes(data[b0 + 8:b0 + 12], "big")
-            if not w or not h:
+            brands = [box.take(4)]
+            box.skip(4)
+            brands += [box.take(4) for _ in range(box.remaining // 4)]
+            fmt = next((_HEIF_BRANDS[b] for b in brands
+                        if b in _HEIF_BRANDS), fmt)
+            if fmt is None:
                 return None
-            return {"format": fmt, "width": w, "height": h}
-
-        if pitm_id is not None and ipma is not None:
-            b0, b1 = ipma
-            if b1 - b0 < 8:
+        elif btype == b"meta":
+            meta = box
+    if fmt is None or meta is None:
+        return None
+    # meta is a FULL box: 4 version/flags bytes precede children
+    if meta.remaining < 4:
+        return None
+    meta.skip(4)
+    pitm_id = iprp = None
+    for btype, box in meta.boxes():
+        if btype == b"pitm":
+            if box.remaining < 6:
                 return None
-            ver, flags = data[b0], int.from_bytes(data[b0 + 1:b0 + 4],
-                                                  "big")
-            cnt = int.from_bytes(data[b0 + 4:b0 + 8], "big")
-            at = b0 + 8
-            for _ in range(cnt):
-                id_w = 4 if ver >= 1 else 2
-                if at + id_w + 1 > b1:
-                    return None
-                item = int.from_bytes(data[at:at + id_w], "big")
-                at += id_w
-                n_assoc = data[at]
-                at += 1
-                for _ in range(n_assoc):
-                    if flags & 1:
-                        if at + 2 > b1:
-                            return None
-                        idx = int.from_bytes(data[at:at + 2],
-                                             "big") & 0x7FFF
-                        at += 2
-                    else:
-                        if at + 1 > b1:
-                            return None
-                        idx = data[at] & 0x7F
-                        at += 1
-                    if item != pitm_id or not idx or idx > len(props):
-                        continue
-                    ptype, p0, p1 = props[idx - 1]
-                    if ptype == b"ispe":
-                        return ispe_dims(p0, p1)
-        for ptype, p0, p1 in props:
-            if ptype == b"ispe":
-                return ispe_dims(p0, p1)
+            ver = box.u8()
+            box.skip(3)
+            if ver == 0:
+                pitm_id = box.u16()
+            elif box.remaining >= 4:
+                pitm_id = box.u32()
+        elif btype == b"iprp":
+            iprp = box
+    if iprp is None:
         return None
-    except (ValueError, IndexError, struct.error, OverflowError):
-        return None
+    props: list = []
+    ipma = None
+    for btype, box in iprp.boxes():
+        if btype == b"ipco":
+            props = list(box.boxes())
+        elif btype == b"ipma":
+            ipma = box
 
+    def ispe_dims(box: _Reader) -> dict | None:
+        if box.remaining < 12:
+            return None
+        box.skip(4)
+        w, h = box.u32(), box.u32()
+        if not w or not h:
+            return None
+        return {"format": fmt, "width": w, "height": h}
 
-def decode_image(payload: bytes | None) -> dict | None:
-    """REAL pure-Python image header decoder for the eight formats
-    whose structure needs no codec library: netpbm binary (P6 PPM / P5
-    PGM, whitespace-and-comment-tolerant header, pixel-length
-    validated), BMP (BITMAPINFOHEADER), PNG (IHDR chunk, CRC-verified,
-    IDAT-present — ``_decode_png``), JPEG (marker-segment walk to
-    SOF — ``_decode_jpeg``), GIF (logical screen descriptor +
-    block walk to the trailer — ``_decode_gif``), TIFF (both byte
-    orders, IFD entry walk — ``_decode_tiff``), WebP (RIFF chunk walk
-    to VP8X / VP8 / VP8L — ``_decode_webp``), HEIF/AVIF (ISO-BMFF
-    box walk to the primary item's ispe — ``_decode_heif``), and
-    ICO/CUR favicons (ICONDIR walk, largest entry's PNG or
-    doubled-height DIB — ``_decode_ico``).  Returns
-    ``{"format", "width", "height"}``
-    or None if the payload is not a valid image in any of them.
-    Pixel decoding and the remaining media types (audio codecs beyond
-    WAV — see ``decode_audio`` — and video) stay behind the deliberate
-    stubs — this container has no codec libraries — but the decode
-    CONTRACT is exercised for real here: a truncated pixel array, a
-    corrupt CRC, a broken marker walk, or nonsense dimensions must
-    fail.
-    """
-    if not payload:
-        return None
-    if bytes(payload[:8]) == PNG_MAGIC:
-        return _decode_png(payload)
-    if bytes(payload[:2]) == b"\xff\xd8":
-        return _decode_jpeg(payload)
-    if bytes(payload[:6]) in (b"GIF87a", b"GIF89a"):
-        return _decode_gif(payload)
-    if bytes(payload[:4]) in (b"II*\x00", b"MM\x00*"):
-        return _decode_tiff(payload)
-    if bytes(payload[:4]) == b"RIFF" and bytes(payload[8:12]) == b"WEBP":
-        return _decode_webp(payload)
-    if bytes(payload[4:8]) == b"ftyp":
-        return _decode_heif(payload)
-    if bytes(payload[:4]) in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
-        return _decode_ico(bytes(payload))
-    magic = bytes(payload[:2])
-    if magic in (b"P6", b"P5"):
-        toks: list[bytes] = []
-        i, n = 2, len(payload)
-        while len(toks) < 3 and i < n:
-            c = payload[i:i + 1]
-            if c == b"#":  # comment runs to end of line
-                while i < n and payload[i:i + 1] not in (b"\n", b"\r"):
-                    i += 1
-            elif c.isspace():
-                i += 1
-            else:
-                j = i
-                while (
-                    j < n
-                    and not payload[j:j + 1].isspace()
-                    and payload[j:j + 1] != b"#"
-                ):
-                    j += 1
-                toks.append(bytes(payload[i:j]))
-                i = j
-        if len(toks) < 3 or i >= n:
+    if pitm_id is not None and ipma is not None:
+        if ipma.remaining < 8:
             return None
-        try:
-            w, h, maxval = (int(t) for t in toks)
-        except ValueError:
-            return None
-        if w <= 0 or h <= 0 or not 0 < maxval < 65536:
-            return None
-        per_px = (3 if magic == b"P6" else 1) * (2 if maxval > 255 else 1)
-        # exactly one whitespace byte separates maxval from pixel data
-        if n - (i + 1) < w * h * per_px:
-            return None
-        return {
-            "format": "ppm" if magic == b"P6" else "pgm",
-            "width": w,
-            "height": h,
-        }
-    if magic == b"BM" and len(payload) >= 54:
-        return _decode_bmp(payload)
+        ver, flags, cnt = ipma.u8(), ipma.u24(), ipma.u32()
+        for _ in range(cnt):
+            item = ipma.uint(4 if ver >= 1 else 2)
+            for _ in range(ipma.u8()):
+                idx = (ipma.u16() & 0x7FFF if flags & 1
+                       else ipma.u8() & 0x7F)
+                if item != pitm_id or not idx or idx > len(props):
+                    continue
+                ptype, prop = props[idx - 1]
+                if ptype == b"ispe":
+                    return ispe_dims(prop)
+    for ptype, prop in props:
+        if ptype == b"ispe":
+            return ispe_dims(prop)
     return None
 
 
-def _decode_bmp(payload: bytes) -> dict | None:
-    """BMP (BITMAPINFOHEADER) structural validation + dimensions —
-    without it any >=54-byte text that happens to start with "BM"
-    (e.g. "BMW dealers ...") would "decode", since ASCII bytes at the
-    dimension offsets form positive ints.  planes is REQUIRED to be 1
-    by the spec (two ASCII chars can never be 0x0001), bpp must be a
-    legal depth, and the pixel array implied by (w, h, bpp) must
-    actually be present past the declared data offset."""
-    hdr_size = int.from_bytes(payload[14:18], "little")
-    if hdr_size < 40:
+@_never_raise
+def decode_image(payload: bytes | None) -> dict | None:
+    """REAL pure-Python image header decoder for the nine formats
+    whose structure needs no codec library: netpbm binary (P6 PPM / P5
+    PGM, whitespace-and-comment-tolerant header, pixel-length
+    validated — ``_netpbm_layout``), BMP (BITMAPINFOHEADER), PNG (IHDR
+    chunk, CRC-verified, IDAT-present — ``_decode_png``), JPEG
+    (marker-segment walk to SOF — ``_decode_jpeg``), GIF (logical
+    screen descriptor + block walk to the trailer — ``_decode_gif``),
+    TIFF (both byte orders, IFD entry walk — ``_decode_tiff``), WebP
+    (RIFF chunk walk to VP8X / VP8 / VP8L — ``_decode_webp``),
+    HEIF/AVIF (ISO-BMFF box walk to the primary item's ispe —
+    ``_decode_heif``), and ICO/CUR favicons (ICONDIR walk, largest
+    entry's PNG or doubled-height DIB — ``_decode_ico``).  Returns
+    ``{"format", "width", "height"}`` or None if the payload is not a
+    valid image in any of them: a truncated pixel array, a corrupt
+    CRC, a broken marker walk, or nonsense dimensions fail.  PPM
+    (8-bit), BMP, PNG, JPEG, GIF, TIFF and ICO also pixel-decode (see
+    ``resize_meta``); PGM, WebP and HEIF/AVIF stay header-only."""
+    data = bytes(payload or b"")
+    if not data:
         return None
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = int.from_bytes(payload[22:26], "little", signed=True)
-    if w <= 0 or h == 0:  # negative h = top-down BMP, legal
+    if data[:8] == PNG_MAGIC:
+        return _decode_png(data)
+    if data[:2] == b"\xff\xd8":
+        return _decode_jpeg(data)
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        return _decode_gif(data)
+    if data[:4] in (b"II*\x00", b"MM\x00*"):
+        return _decode_tiff(data)
+    if data[:4] == b"RIFF" and data[8:12] == b"WEBP":
+        return _decode_webp(data)
+    if data[4:8] == b"ftyp":
+        return _decode_heif(data)
+    if data[:4] in (b"\x00\x00\x01\x00", b"\x00\x00\x02\x00"):
+        return _decode_ico(data)
+    if data[:2] in (b"P6", b"P5"):
+        layout = _netpbm_layout(data)
+        if layout is None:
+            return None
+        return {"format": layout[0], "width": layout[1],
+                "height": layout[2]}
+    if data[:2] == b"BM":
+        return _decode_bmp(data)
+    return None
+
+
+def _bmp_layout(data: bytes) -> tuple | None:
+    """The one BMP (BITMAPINFOHEADER) header walk, structural
+    validation included — without it any >=54-byte text that happens
+    to start with "BM" (e.g. "BMW dealers ...") would "decode", since
+    ASCII bytes at the dimension offsets form positive ints.  planes
+    is REQUIRED to be 1 by the spec (two ASCII chars can never be
+    0x0001), bpp must be a legal depth, and the pixel array implied by
+    (w, h, bpp) must actually be present past the declared data
+    offset.  Returns (w, signed h, bpp, compression, data offset,
+    info-header size) or None."""
+    if len(data) < 54 or data[:2] != b"BM":
         return None
-    planes = int.from_bytes(payload[26:28], "little")
-    bpp = int.from_bytes(payload[28:30], "little")
-    compression = int.from_bytes(payload[30:34], "little")
-    offset = int.from_bytes(payload[10:14], "little")
+    r = _Reader(data, 10, order="little")
+    offset, hdr_size, w, h, planes, bpp, compression = r.unpack("IIiiHHI")
+    if hdr_size < 40 or w <= 0 or h == 0:  # negative h = top-down
+        return None
     if planes != 1 or bpp not in (1, 4, 8, 16, 24, 32):
         return None
-    if not 54 <= offset <= len(payload):
+    if not 54 <= offset <= len(data):
         return None
     if compression in (1, 2) or compression in _MSV1_FOURCCS:
         # RLE / MS Video 1: data is variable-length, just
-        if offset >= len(payload):  # require SOME pixel bytes
+        if offset >= len(data):  # require SOME pixel bytes
             return None
-    else:
-        row_bytes = ((w * bpp + 31) // 32) * 4
-        if len(payload) - offset < row_bytes * abs(h):
-            return None
-    return {"format": "bmp", "width": w, "height": abs(h)}
+    elif len(data) - offset < ((w * bpp + 31) // 32) * 4 * abs(h):
+        return None
+    return w, h, bpp, compression, offset, hdr_size
 
 
-def _decode_flac(payload: bytes) -> dict | None:
-    """FLAC STREAMINFO decode: "fLaC" magic, then the metadata-block
+def _decode_bmp(payload: bytes) -> dict | None:
+    """BMP header decode: dimensions from ``_bmp_layout``."""
+    layout = _bmp_layout(bytes(payload))
+    if layout is None:
+        return None
+    return {"format": "bmp", "width": layout[0], "height": abs(layout[1])}
+
+
+def _flac_layout(payload: bytes) -> tuple | None:
+    """The one FLAC metadata walk, shared by ``decode_audio`` and
+    ``decode_flac_samples``: "fLaC" magic, then the metadata-block
     walk (1-byte last-flag|type + 3-byte big-endian length each); the
     FIRST block must be a 34-byte STREAMINFO (spec requirement) whose
     bit-packed fields give sample rate (20 bits), channels-1 (3),
     bits-per-sample-1 (5) and total samples (36).  The walk must reach
     the last-flag block inside the payload and audio frames must
     follow (first frame's 14-bit sync code 0b11111111111110) — magic
-    plus junk fails, same contract as the other format walks."""
+    plus junk fails, same contract as the other format walks.
+    Returns (channels, rate, bits, total, first frame offset) or
+    None."""
     n = len(payload)
     if n < 42 or bytes(payload[:4]) != b"fLaC":
         return None
@@ -2383,6 +2361,15 @@ def _decode_flac(payload: bytes) -> dict | None:
         i += 4 + int.from_bytes(payload[i + 1:i + 4], "big")
     if i + 2 > n or payload[i] != 0xFF or payload[i + 1] & 0xFC != 0xF8:
         return None  # no audio frame after the metadata table
+    return channels, rate, bits, total, i
+
+
+def _decode_flac(payload: bytes) -> dict | None:
+    """FLAC header decode from ``_flac_layout``."""
+    layout = _flac_layout(payload)
+    if layout is None:
+        return None
+    channels, rate, bits, total, _ = layout
     return {
         "format": "flac",
         "channels": channels,
@@ -2551,6 +2538,88 @@ def _decode_ogg(payload: bytes) -> dict | None:
     }
 
 
+# WAVE_FORMAT_EXTENSIBLE SubFormat GUID tail (RFC 2361 / mmreg.h):
+# bytes 2-16 of the GUID are fixed; bytes 0-2 carry the real tag
+_WAVE_GUID_TAIL = (
+    b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
+)
+
+
+def _wav_layout(data: bytes) -> tuple | None:
+    """The one WAV structure walk, shared by ``decode_audio`` and
+    ``decode_wav_samples``: the RIFF/WAVE chunk table walked leniently
+    (a short trailing chunk ends the walk; only the data chunk must
+    fit), the last fmt chunk with its codec gates — PCM/IEEE-float
+    plus the codec-free compressed tags (G.711 mu-law/A-law, IMA/MS
+    ADPCM), WAVE_FORMAT_EXTENSIBLE resolved to its SubFormat tag —
+    the `fact` frame count, and the data chunk sized into a frame
+    count.  Returns (tag, channels, rate, bits, block_align,
+    n_samples, sample bytes) or None."""
+    if (len(data) < 42 or data[:4] != b"RIFF"
+            or data[8:12] != b"WAVE"):
+        return None
+    r = _Reader(data, 12, order="little")
+    fmt = sound = fact = None
+    while r.remaining >= 8:
+        cid, csize = r.take(4), r.u32()
+        body = r.pos
+        if cid == b"fmt " and csize >= 16 and r.remaining >= 16:
+            tag, channels, rate, _, balign, bits = r.unpack("HHIIHH")
+            if tag == 0xFFFE:  # EXTENSIBLE: SubFormat GUID's first u16
+                sub = data[body + 24:body + 40]
+                tag = (int.from_bytes(sub[:2], "little")
+                       if csize >= 40 and len(sub) == 16
+                       and sub[2:] == _WAVE_GUID_TAIL else -1)
+            # 1 = PCM, 3 = IEEE float, 6/7 = G.711 A-law/mu-law,
+            # 2/0x11 = MS/IMA ADPCM; anything else needs a codec
+            if tag not in (1, 2, 3, 6, 7, 0x11):
+                return None
+            if channels == 0 or rate == 0:
+                return None
+            if tag in (1, 3) and bits not in (8, 16, 24, 32, 64):
+                return None
+            if tag in (6, 7) and bits != 8:
+                return None
+            if tag in (2, 0x11) and bits != 4:
+                return None
+            fmt = (tag, channels, rate, bits, balign)
+        elif cid == b"fact" and csize >= 4 and r.remaining >= 4:
+            fact = r.u32()
+        elif cid == b"data":
+            sound = r.take(csize)
+        r.pos = body + csize + (csize & 1)  # chunks are word-aligned
+    if fmt is None or sound is None:
+        return None
+    tag, channels, rate, bits, balign = fmt
+    if tag in (1, 3):
+        frame_bytes = channels * (bits // 8)
+        if frame_bytes == 0 or len(sound) % frame_bytes != 0:
+            return None
+        n_samples = len(sound) // frame_bytes
+    elif tag in (6, 7):  # G.711: one byte per sample per channel
+        if len(sound) % channels != 0:
+            return None
+        n_samples = len(sound) // channels
+    else:  # block-structured ADPCM: capacity from the block layout
+        hdr = 4 * channels if tag == 0x11 else 7 * channels
+        if balign <= hdr or len(sound) % balign != 0:
+            return None
+        if tag == 0x11:
+            # IMA data groups are 4 bytes per channel (8 nibbles)
+            if (balign - hdr) % (4 * channels) != 0:
+                return None
+            spb = 1 + (balign - hdr) * 2 // channels
+        else:
+            spb = 2 + (balign - hdr) * 2 // channels
+        n_samples = (len(sound) // balign) * spb
+        # compressed WAV carries the true frame count in `fact`; the
+        # last block may be logically short of its capacity
+        if fact is not None and 0 < fact <= n_samples:
+            n_samples = fact
+    return tag, channels, rate, bits, balign, n_samples, sound
+
+
+@_never_raise
 def decode_audio(payload: bytes | None) -> dict | None:
     """REAL pure-Python audio header decoder for WAV (RIFF/WAVE — walk
     the RIFF chunk table, read the fmt chunk (PCM or IEEE-float
@@ -2569,83 +2638,21 @@ def decode_audio(payload: bytes | None) -> dict | None:
     the entropy-coded formats (MP3/OGG) stays a labeled stub — no
     codec libraries in this container — but their container
     structure, codec parameters and duration are real."""
-    if not payload or len(payload) < 42:
+    data = bytes(payload or b"")
+    if len(data) < 42:
         return None
-    if bytes(payload[:4]) == b"fLaC":
-        return _decode_flac(payload)
-    if bytes(payload[:4]) == b"OggS":
-        return _decode_ogg(payload)
-    if bytes(payload[:4]) == b"FORM":
-        return _decode_aiff(bytes(payload))
-    if (
-        bytes(payload[:3]) == b"ID3"
-        or (payload[0] == 0xFF and payload[1] & 0xE0 == 0xE0)
-    ):
-        return _decode_mp3(payload)
-    if bytes(payload[:4]) != b"RIFF" or bytes(payload[8:12]) != b"WAVE":
+    if data[:4] == b"fLaC":
+        return _decode_flac(data)
+    if data[:4] == b"OggS":
+        return _decode_ogg(data)
+    if data[:4] == b"FORM":
+        return _decode_aiff(data)
+    if data[:3] == b"ID3" or (data[0] == 0xFF and data[1] & 0xE0 == 0xE0):
+        return _decode_mp3(data)
+    layout = _wav_layout(data)
+    if layout is None:
         return None
-    n = len(payload)
-    i, fmt, data_size, fact = 12, None, None, None
-    while i + 8 <= n:
-        cid = bytes(payload[i:i + 4])
-        csize = int.from_bytes(payload[i + 4:i + 8], "little")
-        if cid == b"fmt " and csize >= 16 and i + 8 + 16 <= n:
-            tag = int.from_bytes(payload[i + 8:i + 10], "little")
-            channels = int.from_bytes(payload[i + 10:i + 12], "little")
-            rate = int.from_bytes(payload[i + 12:i + 16], "little")
-            balign = int.from_bytes(payload[i + 20:i + 22], "little")
-            bits = int.from_bytes(payload[i + 22:i + 24], "little")
-            tag = _wav_resolve_tag(payload, i, csize, tag)
-            # 1 = PCM, 3 = IEEE float, 6/7 = G.711 A-law/mu-law,
-            # 2/0x11 = MS/IMA ADPCM; anything else needs a codec
-            if tag not in (1, 2, 3, 6, 7, 0x11):
-                return None
-            if channels == 0 or rate == 0:
-                return None
-            if tag in (1, 3) and bits not in (8, 16, 24, 32, 64):
-                return None
-            if tag in (6, 7) and bits != 8:
-                return None
-            if tag in (2, 0x11) and bits != 4:
-                return None
-            fmt = (tag, channels, rate, bits, balign)
-        elif cid == b"fact" and csize >= 4 and i + 12 <= n:
-            fact = int.from_bytes(payload[i + 8:i + 12], "little")
-        elif cid == b"data":
-            # the data chunk's declared size must actually be present
-            # (truncated payloads fail), up to one RIFF pad byte
-            if i + 8 + csize > n:
-                return None
-            data_size = csize
-        i += 8 + csize + (csize & 1)  # chunks are word-aligned
-    if fmt is None or data_size is None:
-        return None
-    tag, channels, rate, bits, balign = fmt
-    if tag in (1, 3):
-        frame_bytes = channels * (bits // 8)
-        if frame_bytes == 0 or data_size % frame_bytes != 0:
-            return None
-        n_samples = data_size // frame_bytes
-    elif tag in (6, 7):  # G.711: one byte per sample per channel
-        if data_size % channels != 0:
-            return None
-        n_samples = data_size // channels
-    else:  # block-structured ADPCM: capacity from the block layout
-        hdr = 4 * channels if tag == 0x11 else 7 * channels
-        if balign <= hdr or data_size % balign != 0:
-            return None
-        if tag == 0x11:
-            # IMA data groups are 4 bytes per channel (8 nibbles)
-            if (balign - hdr) % (4 * channels) != 0:
-                return None
-            spb = 1 + (balign - hdr) * 2 // channels
-        else:
-            spb = 2 + (balign - hdr) * 2 // channels
-        n_samples = (data_size // balign) * spb
-        # compressed WAV carries the true frame count in `fact`; the
-        # last block may be logically short of its capacity
-        if fact is not None and 0 < fact <= n_samples:
-            n_samples = fact
+    _, channels, rate, bits, _, n_samples, _ = layout
     return {
         "format": "wav",
         "channels": channels,
@@ -2654,13 +2661,6 @@ def decode_audio(payload: bytes | None) -> dict | None:
         "n_samples": n_samples,
         "duration_ms": n_samples * 1000 // rate,
     }
-
-
-# WAVE_FORMAT_EXTENSIBLE SubFormat GUID tail (RFC 2361 / mmreg.h):
-# bytes 2-16 of the GUID are fixed; bytes 0-2 carry the real tag
-_WAVE_GUID_TAIL = (
-    b"\x00\x00\x00\x00\x10\x00\x80\x00\x00\xaa\x00\x38\x9b\x71"
-)
 
 
 def _ieee754_extended(b: bytes) -> float | None:
@@ -2695,14 +2695,13 @@ _AIFC_CODEC_BYTES = {
 
 
 def _aiff_layout(payload: bytes) -> tuple | None:
-    """Shared IFF walk for the AIFF/AIFF-C metadata and sample
+    """The one IFF walk for the AIFF/AIFF-C metadata and sample
     decoders: validate the FORM container (big-endian sizes,
     word-aligned chunks, declared FORM size covering the chunk table),
     read COMM (channels, numSampleFrames, sampleSize, 80-bit extended
     sampleRate, AIFC compression fourcc) and locate SSND's sample
     bytes (honoring its offset field).  Returns (fmt, channels,
-    n_frames, bits, rate, codec, data) or None; never raises (the
-    caller slices only validated ranges)."""
+    n_frames, bits, rate, codec, data) or None."""
     data = bytes(payload)
     n = len(data)
     if n < 20 or data[:4] != b"FORM":
@@ -2714,32 +2713,12 @@ def _aiff_layout(payload: bytes) -> tuple | None:
     # FORM size counts formType + chunks; allow one trailing pad byte
     if 8 + form_size not in (n, n - 1) or form_size < 4:
         return None
-    end = 8 + form_size
-    comm = None
-    ssnd = None
-    i = 12
-    while i < end:
-        if i + 8 > end:
-            return None
-        cid = data[i:i + 4]
-        csize = int.from_bytes(data[i + 4:i + 8], "big")
-        body = i + 8
-        if body + csize > end:
-            return None
-        if cid == b"COMM":
-            comm = (body, body + csize)
-        elif cid == b"SSND":
-            ssnd = (body, body + csize)
-        i = body + csize + (csize & 1)  # chunks are word-aligned
-    if comm is None or ssnd is None:
+    chunks = dict(_Reader(data, 12, 8 + form_size).chunks())
+    comm, ssnd = chunks.get(b"COMM"), chunks.get(b"SSND")
+    if comm is None or ssnd is None or comm.remaining < 18:
         return None
-    b0, b1 = comm
-    if b1 - b0 < 18:
-        return None
-    channels = int.from_bytes(data[b0:b0 + 2], "big")
-    n_frames = int.from_bytes(data[b0 + 2:b0 + 6], "big")
-    bits = int.from_bytes(data[b0 + 6:b0 + 8], "big")
-    rate_f = _ieee754_extended(data[b0 + 8:b0 + 18])
+    channels, n_frames, bits = comm.unpack("HIH")
+    rate_f = _ieee754_extended(comm.take(10))
     if channels == 0 or rate_f is None or not 0 < rate_f < 1e7:
         return None
     rate = int(round(rate_f))
@@ -2747,9 +2726,9 @@ def _aiff_layout(payload: bytes) -> tuple | None:
         return None
     codec = b"NONE"
     if ftype == b"AIFC":
-        if b1 - b0 < 22:
+        if comm.remaining < 4:
             return None
-        codec = data[b0 + 18:b0 + 22]
+        codec = comm.take(4)
         if codec not in _AIFC_CODEC_BYTES:
             return None
     per_point = _AIFC_CODEC_BYTES[codec]
@@ -2759,15 +2738,12 @@ def _aiff_layout(payload: bytes) -> tuple | None:
         per_point = (bits + 7) // 8
     elif codec == b"sowt" and bits != 16:
         return None
-    s0, s1 = ssnd
-    if s1 - s0 < 8:
+    if ssnd.remaining < 8:
         return None
-    offset = int.from_bytes(data[s0:s0 + 4], "big")
-    need = n_frames * channels * per_point
-    if s0 + 8 + offset + need > s1:
-        return None
+    offset = ssnd.u32()
+    ssnd.skip(4 + offset)  # blockSize, then the offset's padding
+    sound = ssnd.take(n_frames * channels * per_point)
     fmt = "aiff" if ftype == b"AIFF" else "aifc"
-    sound = data[s0 + 8 + offset:s0 + 8 + offset + need]
     return fmt, channels, n_frames, bits, rate, codec, sound
 
 
@@ -2791,6 +2767,7 @@ def _decode_aiff(payload: bytes) -> dict | None:
     }
 
 
+@_never_raise
 def decode_aiff_samples(payload: bytes | None) -> dict | None:
     """REAL AIFF / AIFF-C sample decode, codec-free per spec: NONE =
     big-endian SIGNED integer PCM at 8/16/24/32 stored bits (AIFF
@@ -2799,10 +2776,10 @@ def decode_aiff_samples(payload: bytes | None) -> dict | None:
     endian IEEE floats, ulaw/alaw = the shared G.711 tables.  Output
     shape matches ``decode_wav_samples`` — normalized interleaved
     floats where integer reconstructions satisfy the round(s·32768)
-    exactness q30-style oracles rely on.  Never raises."""
+    exactness q30-style oracles rely on."""
     if not payload:
         return None
-    layout = _aiff_layout(bytes(payload))
+    layout = _aiff_layout(payload)
     if layout is None:
         return None
     _, channels, n_frames, bits, rate, codec, data = layout
@@ -2835,19 +2812,54 @@ def decode_aiff_samples(payload: bytes | None) -> dict | None:
     }
 
 
-def _wav_resolve_tag(payload, i: int, csize: int, tag: int) -> int:
-    """Resolve WAVE_FORMAT_EXTENSIBLE (0xFFFE, the modern default for
-    multichannel/high-bit WAVs) to the real format tag carried in the
-    SubFormat GUID's first two bytes; other tags pass through.
-    Returns -1 for a malformed extensible header."""
-    if tag != 0xFFFE:
-        return tag
-    if csize < 40 or i + 48 > len(payload):
-        return -1
-    sub = bytes(payload[i + 32:i + 48])
-    if sub[2:] != _WAVE_GUID_TAIL:
-        return -1
-    return int.from_bytes(sub[:2], "little")
+# nullable pandas dtype per Spark column type: Arrow maps None to
+# NULL in an integer/float column only through these
+_PD_NULLABLE = {IntegerType: "Int32", LongType: "Int64", FloatType: "Float32"}
+
+
+def _map_payloads(df: DataFrame, id_col: str, payload_col: str,
+                  fields: list, row) -> DataFrame:
+    """The one ``mapInPandas`` wrapper behind every operator here:
+    the output is ``id_col`` then ``fields`` — (name, Spark type)
+    pairs — and ``row(payload)`` returns one tuple of field values,
+    or a list of such tuples to fan out (one output row each, none
+    allowed).  The schema and the nullable pandas dtypes both come
+    from ``fields``."""
+    schema = StructType(
+        [StructField(id_col, df.schema[id_col].dataType)]
+        + [StructField(name, typ) for name, typ in fields])
+
+    def batches(it):
+        for pdf in it:
+            ids, rows = [], []
+            for i, payload in zip(pdf[id_col], pdf[payload_col]):
+                out = row(payload)
+                for r in out if isinstance(out, list) else (out,):
+                    ids.append(i)
+                    rows.append(r)
+            cols = {id_col: ids}
+            for k, (name, typ) in enumerate(fields):
+                vals = [r[k] for r in rows]
+                dtype = _PD_NULLABLE.get(type(typ))
+                cols[name] = pd.array(vals, dtype=dtype) if dtype else vals
+            yield pd.DataFrame(cols)
+
+    return df.mapInPandas(batches, schema)
+
+
+def _meta_operator(df: DataFrame, id_col: str, payload_col: str, decode,
+                   fields: list) -> DataFrame:
+    """(id, is_decodable, *fields): one ``decode`` dict per payload,
+    NULL fields where it returned None."""
+    keys = [name for name, _ in fields]
+
+    def row(payload) -> tuple:
+        meta = decode(payload)
+        return (meta is not None,) + tuple(
+            meta[k] if meta else None for k in keys)
+
+    return _map_payloads(df, id_col, payload_col,
+                         [("is_decodable", BooleanType())] + fields, row)
 
 
 def audio_meta(
@@ -2856,44 +2868,11 @@ def audio_meta(
     """(id, is_decodable, format, channels, sample_rate,
     bits_per_sample, n_samples, duration_ms) via Arrow-batched
     ``decode_audio`` — real for WAV, null for codec formats."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("is_decodable", BooleanType()),
-            StructField("format", StringType()),
-            StructField("channels", IntegerType()),
-            StructField("sample_rate", IntegerType()),
-            StructField("bits_per_sample", IntegerType()),
-            StructField("n_samples", LongType()),
-            StructField("duration_ms", LongType()),
-        ]
-    )
-
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = pdf[payload_col].map(decode_audio)
-            get = lambda k: metas.map(  # noqa: E731
-                lambda m: m[k] if m else None
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "is_decodable": metas.map(lambda m: m is not None),
-                    "format": get("format"),
-                    "channels": get("channels").astype("Int32"),
-                    "sample_rate": get("sample_rate").astype("Int32"),
-                    "bits_per_sample": get("bits_per_sample").astype(
-                        "Int32"
-                    ),
-                    "n_samples": get("n_samples").astype("Int64"),
-                    "duration_ms": get("duration_ms").astype("Int64"),
-                }
-            )
-
-    return df.mapInPandas(decode_batches, schema)
+    return _meta_operator(df, id_col, payload_col, decode_audio, [
+        ("format", StringType()), ("channels", IntegerType()),
+        ("sample_rate", IntegerType()), ("bits_per_sample", IntegerType()),
+        ("n_samples", LongType()), ("duration_ms", LongType()),
+    ])
 
 
 def _g711_tables() -> tuple[tuple, tuple]:
@@ -3056,6 +3035,7 @@ def _ms_adpcm_samples(
     return out
 
 
+@_never_raise
 def decode_wav_samples(payload: bytes | None) -> dict | None:
     """REAL WAV sample decode: integer PCM normalized to floats in
     [-1, 1] (8-bit unsigned → (v-128)/128, 16/24/32 signed →
@@ -3063,33 +3043,13 @@ def decode_wav_samples(payload: bytes | None) -> dict | None:
     expansion (tags 7/6), and IMA/MS ADPCM block decode (tags 0x11/2,
     truncated to the `fact` frame count) — all codec-free per spec;
     interleaved as written.  Structural validation is
-    ``decode_audio``'s RIFF walk; returns ``{"channels",
-    "sample_rate", "samples": list[float]}`` or None (entropy-coded
-    formats — MP3/OGG — keep the labeled stub).  Never raises."""
-    meta = decode_audio(payload)
-    if meta is None or meta["format"] != "wav":
+    ``_wav_layout``'s; returns ``{"channels", "sample_rate",
+    "samples": list[float]}`` or None (entropy-coded formats —
+    MP3/OGG — keep the labeled stub)."""
+    layout = _wav_layout(bytes(payload or b""))
+    if layout is None:
         return None
-    n = len(payload)
-    i, tag, bits, balign, data = 12, None, None, None, None
-    while i + 8 <= n:
-        cid = bytes(payload[i:i + 4])
-        csize = int.from_bytes(payload[i + 4:i + 8], "little")
-        # the fmt guard MUST mirror decode_audio's: without it, a
-        # payload carrying a second (short, invalid) fmt chunk would
-        # make this walk adopt garbage tag/bits that decode_audio
-        # skipped — and a tag/bits pair inconsistent with the data
-        # length turns struct.unpack into a raise
-        if cid == b"fmt " and csize >= 16 and i + 8 + 16 <= n:
-            tag = int.from_bytes(payload[i + 8:i + 10], "little")
-            balign = int.from_bytes(payload[i + 20:i + 22], "little")
-            bits = int.from_bytes(payload[i + 22:i + 24], "little")
-            tag = _wav_resolve_tag(payload, i, csize, tag)
-        elif cid == b"data":
-            data = bytes(payload[i + 8:i + 8 + csize])
-        i += 8 + csize + (csize & 1)
-    if tag is None or data is None:
-        return None
-    ch, n_target = meta["channels"], meta["n_samples"]
+    tag, ch, rate, bits, balign, n_target, data = layout
     if tag in (6, 7):  # G.711 mu-law / A-law: table decode per byte
         table = _ULAW_LINEAR if tag == 7 else _ALAW_LINEAR
         samples = [table[b] / 32768.0 for b in data]
@@ -3130,16 +3090,12 @@ def decode_wav_samples(payload: bytes | None) -> dict | None:
             return None
     else:
         return None
-    return {
-        "channels": meta["channels"],
-        "sample_rate": meta["sample_rate"],
-        "samples": samples,
-    }
+    return {"channels": ch, "sample_rate": rate, "samples": samples}
 
 
 class _FlacBitReader:
     """MSB-first bit reader over the FLAC frame section.  Raises
-    ValueError past the end — ``decode_flac_samples`` catches it."""
+    ValueError past the end, for ``decode_flac_samples``' boundary."""
 
     __slots__ = ("data", "pos")
 
@@ -3300,6 +3256,7 @@ def _flac_subframe(reader, blocksize, bps):
     return samples
 
 
+@_never_raise
 def decode_flac_samples(payload: bytes | None) -> dict | None:
     """REAL FLAC sample decode — FLAC is lossless and needs no codec
     library, only the public RFC 9639 bitstream: metadata blocks are
@@ -3311,125 +3268,111 @@ def decode_flac_samples(payload: bytes | None) -> dict | None:
     integer arithmetic and un-decorrelated (left-side / right-side /
     mid-side) per the channel assignment.  Returns the
     ``decode_wav_samples`` shape ``{"channels", "sample_rate",
-    "samples": interleaved floats in [-1, 1]}`` or None; never
-    raises.  Reference analog: the M-entity mediainfo capability
+    "samples": interleaved floats in [-1, 1]}`` or None.  Reference
+    analog: the M-entity mediainfo capability
     (/root/reference/src/pheidippides.cpp:36-39) exposes media
     metadata only — sample access is this engine's extension."""
-    meta = decode_audio(payload)
-    if meta is None or meta["format"] != "flac":
+    data = bytes(payload or b"")
+    layout = _flac_layout(data)
+    if layout is None:
         return None
-    try:
-        data = bytes(payload)
-        n = len(data)
-        channels = meta["channels"]
-        rate = meta["sample_rate"]
-        stream_bps = meta["bits_per_sample"]
-        total = meta["n_samples"]
-        # walk metadata blocks to the first audio frame
-        i = 4
-        while i + 4 <= n:
-            last = data[i] & 0x80
-            size = int.from_bytes(data[i + 1:i + 4], "big")
-            i += 4 + size
-            if last:
-                break
-        out: list[list[int]] = [[] for _ in range(channels)]
-        done = 0
-        # STREAMINFO total_samples == 0 means UNKNOWN length (RFC
-        # 9639): decode every frame present instead of expecting none
-        unknown = total == 0
-        while (unknown or done < total) and i + 5 <= n:
-            hdr_start = i
-            if data[i] != 0xFF or data[i + 1] & 0xFC != 0xF8:
-                return None
-            reader = _FlacBitReader(data, i)
-            reader.bits(16)  # sync + reserved + blocking strategy
-            bs_bits = reader.bits(4)
-            rate_bits = reader.bits(4)
-            chan_bits = reader.bits(4)
-            bps_bits = reader.bits(3)
-            if reader.bits(1):
-                return None  # reserved bit must be 0
-            _flac_utf8_num(reader)
-            if bs_bits == 0:
-                return None
-            blocksize = _FLAC_BLOCKSIZES.get(bs_bits)
-            if bs_bits == 6:
-                blocksize = reader.bits(8) + 1
-            elif bs_bits == 7:
-                blocksize = reader.bits(16) + 1
-            elif bs_bits >= 8:
-                blocksize = 256 << (bs_bits - 8)
-            if rate_bits == 12:
-                reader.bits(8)
-            elif rate_bits in (13, 14):
-                reader.bits(16)
-            elif rate_bits == 15:
-                return None
-            bps = _FLAC_BPS.get(bps_bits, stream_bps)
-            if bps_bits == 3:
-                return None
-            crc_at = reader.byte_pos()
-            if _flac_crc8(data[hdr_start:crc_at]) != reader.bits(8):
-                return None
-            if chan_bits < 8:
-                if chan_bits + 1 != channels:
-                    return None
-                chans = [
-                    _flac_subframe(reader, blocksize, bps)
-                    for _ in range(channels)
-                ]
-            elif chan_bits <= 10:
-                if channels != 2:
-                    return None
-                # the SIDE channel carries one extra bit
-                extra0 = 1 if chan_bits == 9 else 0
-                extra1 = 0 if chan_bits == 9 else 1
-                c0 = _flac_subframe(reader, blocksize, bps + extra0)
-                c1 = _flac_subframe(reader, blocksize, bps + extra1)
-                if chan_bits == 8:  # left/side: R = L - side
-                    chans = [c0, [a - b for a, b in zip(c0, c1)]]
-                elif chan_bits == 9:  # side/right: L = side + R
-                    chans = [[a + b for a, b in zip(c0, c1)], c1]
-                else:  # mid/side
-                    left, right = [], []
-                    for m, s in zip(c0, c1):
-                        m2 = (m << 1) | (s & 1)
-                        left.append((m2 + s) >> 1)
-                        right.append((m2 - s) >> 1)
-                    chans = [left, right]
-            else:
-                return None
-            reader.align()
-            if reader.byte_pos() + 2 > n:
-                return None
-            reader.bits(16)  # frame CRC-16 (presence-checked)
-            take = blocksize if unknown else min(
-                blocksize, total - done
-            )
-            for c in range(channels):
-                out[c].extend(chans[c][:take])
-            done += take
-            i = reader.byte_pos()
-        if unknown:
-            if done == 0:
-                return None  # unknown length but no frames at all
-            total = done
-        elif done != total:
+    channels, rate, stream_bps, total, i = layout
+    n = len(data)
+    out: list[list[int]] = [[] for _ in range(channels)]
+    done = 0
+    # STREAMINFO total_samples == 0 means UNKNOWN length (RFC
+    # 9639): decode every frame present instead of expecting none
+    unknown = total == 0
+    while (unknown or done < total) and i + 5 <= n:
+        hdr_start = i
+        if data[i] != 0xFF or data[i + 1] & 0xFC != 0xF8:
             return None
-        half = 1 << (stream_bps - 1)
-        samples = [
-            out[c][k] / half
-            for k in range(total)
-            for c in range(channels)
-        ]
-        return {
-            "channels": channels,
-            "sample_rate": rate,
-            "samples": samples,
-        }
-    except (ValueError, IndexError, KeyError, OverflowError):
+        reader = _FlacBitReader(data, i)
+        reader.bits(16)  # sync + reserved + blocking strategy
+        bs_bits = reader.bits(4)
+        rate_bits = reader.bits(4)
+        chan_bits = reader.bits(4)
+        bps_bits = reader.bits(3)
+        if reader.bits(1):
+            return None  # reserved bit must be 0
+        _flac_utf8_num(reader)
+        if bs_bits == 0:
+            return None
+        blocksize = _FLAC_BLOCKSIZES.get(bs_bits)
+        if bs_bits == 6:
+            blocksize = reader.bits(8) + 1
+        elif bs_bits == 7:
+            blocksize = reader.bits(16) + 1
+        elif bs_bits >= 8:
+            blocksize = 256 << (bs_bits - 8)
+        if rate_bits == 12:
+            reader.bits(8)
+        elif rate_bits in (13, 14):
+            reader.bits(16)
+        elif rate_bits == 15:
+            return None
+        bps = _FLAC_BPS.get(bps_bits, stream_bps)
+        if bps_bits == 3:
+            return None
+        crc_at = reader.byte_pos()
+        if _flac_crc8(data[hdr_start:crc_at]) != reader.bits(8):
+            return None
+        if chan_bits < 8:
+            if chan_bits + 1 != channels:
+                return None
+            chans = [
+                _flac_subframe(reader, blocksize, bps)
+                for _ in range(channels)
+            ]
+        elif chan_bits <= 10:
+            if channels != 2:
+                return None
+            # the SIDE channel carries one extra bit
+            extra0 = 1 if chan_bits == 9 else 0
+            extra1 = 0 if chan_bits == 9 else 1
+            c0 = _flac_subframe(reader, blocksize, bps + extra0)
+            c1 = _flac_subframe(reader, blocksize, bps + extra1)
+            if chan_bits == 8:  # left/side: R = L - side
+                chans = [c0, [a - b for a, b in zip(c0, c1)]]
+            elif chan_bits == 9:  # side/right: L = side + R
+                chans = [[a + b for a, b in zip(c0, c1)], c1]
+            else:  # mid/side
+                left, right = [], []
+                for m, s in zip(c0, c1):
+                    m2 = (m << 1) | (s & 1)
+                    left.append((m2 + s) >> 1)
+                    right.append((m2 - s) >> 1)
+                chans = [left, right]
+        else:
+            return None
+        reader.align()
+        if reader.byte_pos() + 2 > n:
+            return None
+        reader.bits(16)  # frame CRC-16 (presence-checked)
+        take = blocksize if unknown else min(
+            blocksize, total - done
+        )
+        for c in range(channels):
+            out[c].extend(chans[c][:take])
+        done += take
+        i = reader.byte_pos()
+    if unknown:
+        if done == 0:
+            return None  # unknown length but no frames at all
+        total = done
+    elif done != total:
         return None
+    half = 1 << (stream_bps - 1)
+    samples = [
+        out[c][k] / half
+        for k in range(total)
+        for c in range(channels)
+    ]
+    return {
+        "channels": channels,
+        "sample_rate": rate,
+        "samples": samples,
+    }
 
 
 def audio_features(
@@ -3444,22 +3387,8 @@ def audio_features(
     entropy-coded payloads (MP3/OGG) come back is_decodable=false
     with NULL stats.  Arrow ``mapInPandas`` throughout, like every
     decoder here."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("is_decodable", BooleanType()),
-            StructField("n_frames", LongType()),
-            StructField("rms", FloatType()),
-            StructField("peak", FloatType()),
-            StructField("zero_crossings", LongType()),
-        ]
-    )
-
     def stats(payload: bytes) -> tuple:
-        dec = (decode_wav_samples(payload)
-               or decode_aiff_samples(payload)
-               or decode_flac_samples(payload))
+        dec = _decode_samples(payload)
         if dec is None:
             return (False, None, None, None, None)
         ch = dec["channels"]
@@ -3478,31 +3407,18 @@ def audio_features(
         )
         return (True, len(mono), rms, peak, zc)
 
-    def feature_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [stats(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "is_decodable": [r[0] for r in rows],
-                    "n_frames": pd.array(
-                        [r[1] for r in rows], dtype="Int64"
-                    ),
-                    "rms": pd.array(
-                        [r[2] for r in rows], dtype="Float32"
-                    ),
-                    "peak": pd.array(
-                        [r[3] for r in rows], dtype="Float32"
-                    ),
-                    "zero_crossings": pd.array(
-                        [r[4] for r in rows], dtype="Int64"
-                    ),
-                }
-            )
+    return _map_payloads(df, id_col, payload_col, [
+        ("is_decodable", BooleanType()), ("n_frames", LongType()),
+        ("rms", FloatType()), ("peak", FloatType()),
+        ("zero_crossings", LongType()),
+    ], stats)
 
-    return df.mapInPandas(feature_batches, schema)
+
+def _decode_samples(payload: bytes | None) -> dict | None:
+    """The audio sample dispatch: WAV, AIFF/AIFF-C, then FLAC."""
+    return (decode_wav_samples(payload)
+            or decode_aiff_samples(payload)
+            or decode_flac_samples(payload))
 
 
 def audio_samples(
@@ -3521,22 +3437,8 @@ def audio_samples(
     recovers the exact int16 stream (float32 holds 16-bit integers
     exactly) — the property q30's driver-hash oracle relies on.
     Arrow ``mapInPandas``, like every decoder here."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("is_decodable", BooleanType()),
-            StructField("channels", IntegerType()),
-            StructField("sample_rate", IntegerType()),
-            StructField("n_frames", LongType()),
-            StructField("samples", ArrayType(FloatType())),
-        ]
-    )
-
     def decode(payload) -> tuple:
-        dec = (decode_wav_samples(payload)
-               or decode_aiff_samples(payload)
-               or decode_flac_samples(payload))
+        dec = _decode_samples(payload)
         if dec is None:
             return (False, None, None, None, None)
         ch = dec["channels"]
@@ -3545,214 +3447,113 @@ def audio_samples(
             len(dec["samples"]) // ch, dec["samples"],
         )
 
-    def sample_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [decode(p) for p in pdf[payload_col]]
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "is_decodable": [r[0] for r in rows],
-                    "channels": pd.array(
-                        [r[1] for r in rows], dtype="Int32"
-                    ),
-                    "sample_rate": pd.array(
-                        [r[2] for r in rows], dtype="Int32"
-                    ),
-                    "n_frames": pd.array(
-                        [r[3] for r in rows], dtype="Int64"
-                    ),
-                    "samples": [r[4] for r in rows],
-                }
-            )
-
-    return df.mapInPandas(sample_batches, schema)
+    return _map_payloads(df, id_col, payload_col, [
+        ("is_decodable", BooleanType()), ("channels", IntegerType()),
+        ("sample_rate", IntegerType()), ("n_frames", LongType()),
+        ("samples", ArrayType(FloatType())),
+    ], decode)
 
 
-def _mp4_boxes(payload: bytes, start: int, end: int):
-    """Yield (box_type, body_start, body_end) for the ISO-BMFF box
-    table in payload[start:end]; raises ValueError on a malformed
-    table (size too small, box overrunning the range, truncated
-    header) — the walk itself is the structural validation."""
-    i = end_of_prev = start
-    while i < end:
-        if i + 8 > end:
-            raise ValueError("truncated box header")
-        size = int.from_bytes(payload[i:i + 4], "big")
-        btype = bytes(payload[i + 4:i + 8])
-        body = i + 8
-        if size == 1:  # 64-bit largesize follows the type
-            if i + 16 > end:
-                raise ValueError("truncated largesize")
-            size = int.from_bytes(payload[i + 8:i + 16], "big")
-            body = i + 16
-            if size < 16:
-                raise ValueError("largesize too small")
-        elif size == 0:  # box extends to the end of the enclosing range
-            size = end - i
-            if size < 8:
-                raise ValueError("empty to-end box")
-        elif size < 8:
-            raise ValueError("box size below header size")
-        if i + size > end:
-            raise ValueError("box overruns enclosing range")
-        yield btype, body, i + size
-        i = end_of_prev = i + size
-    if end_of_prev != end:  # pragma: no cover — loop exits exactly at end
-        raise ValueError("box table does not tile the range")
-
-
-def _riff_chunks(payload: bytes, start: int, end: int):
-    """Yield (fourcc, body_start, body_end) for the RIFF chunk table
-    in payload[start:end] (u32 little-endian sizes, bodies padded to
-    even offsets); raises ValueError when a chunk overruns the range
-    or the table does not tile it — same structural contract as
-    ``_mp4_boxes``."""
-    i = start
-    while i < end:
-        if i + 8 > end:
-            raise ValueError("truncated RIFF chunk header")
-        fourcc = bytes(payload[i:i + 4])
-        size = int.from_bytes(payload[i + 4:i + 8], "little")
-        body = i + 8
-        if body + size > end:
-            raise ValueError("RIFF chunk overruns enclosing range")
-        yield fourcc, body, body + size
-        i = body + size + (size & 1)  # bodies pad to even
-    if i != end and i != end + 1:  # final pad byte may exceed `end`
-        raise ValueError("RIFF table does not tile the range")
-
-
-def _avi_scan(payload: bytes) -> tuple[dict, list[bytes]] | None:
-    """RIFF-AVI container walk: returns (meta, ordered video-frame
-    chunk bodies) or None.  The ``hdrl`` LIST must hold a valid
-    ``avih`` main header (frame timing, stream count, dimensions) and
-    the video ``strh`` supplies the handler fourcc (e.g. ``MJPG`` —
-    whose frames are baseline JPEGs that ``decode_jpeg_pixels``
-    decodes for real); frames are the ``##dc``/``##db`` chunks of the
-    ``movi`` LIST, including inside ``rec `` groups.  Raises
-    ValueError on structural violations (caller converts to None)."""
-    n = len(payload)
-    if n < 12 or bytes(payload[:4]) != b"RIFF":
+def _avi_scan(data: bytes) -> tuple[dict, list[bytes]] | None:
+    """The one RIFF-AVI container walk: returns (meta, ordered
+    video-frame chunk bodies) or None.  The ``hdrl`` LIST must hold a
+    valid ``avih`` main header (frame timing, stream count,
+    dimensions) and the video ``strh`` supplies the handler fourcc
+    (e.g. ``MJPG`` — whose frames are baseline JPEGs that
+    ``decode_jpeg_pixels`` decodes for real); frames are the
+    ``##dc``/``##db`` chunks of the ``movi`` LIST, including inside
+    ``rec `` groups.  Raises Malformed on a broken chunk table."""
+    n = len(data)
+    if n < 12 or data[:4] != b"RIFF":
         return None
-    riff_size = int.from_bytes(payload[4:8], "little")
-    if bytes(payload[8:12]) != b"AVI " or 8 + riff_size > n + 1:
+    riff_size = int.from_bytes(data[4:8], "little")
+    if data[8:12] != b"AVI " or 8 + riff_size > n + 1:
         return None
-    end = min(n, 8 + riff_size)
     meta = {
         "us_per_frame": None, "total_frames": None, "n_streams": None,
         "width": None, "height": None, "handler": None, "strf": None,
     }
     frames: list[bytes] = []
 
-    def is_video_frame(fourcc: bytes) -> bool:
-        return (
-            len(fourcc) == 4
-            and fourcc[:2].isdigit()
-            and fourcc[2:] in (b"dc", b"db")
-        )
+    def is_list(c: _Reader, ltype: bytes) -> bool:
+        return c.remaining >= 4 and c.take(4) == ltype
 
-    for fourcc, body, bend in _riff_chunks(payload, 12, end):
-        if fourcc != b"LIST" or bend - body < 4:
+    def movi_frames(r: _Reader, top: bool) -> None:
+        for fourcc, c in r.chunks():
+            if fourcc[:2].isdigit() and fourcc[2:] in (b"dc", b"db"):
+                frames.append(c.take(c.remaining))
+            elif top and fourcc == b"LIST" and is_list(c, b"rec "):
+                movi_frames(c, False)
+
+    for fourcc, body in _Reader(data, 12, min(n, 8 + riff_size),
+                                "little").chunks():
+        if fourcc != b"LIST" or body.remaining < 4:
             continue
-        ltype = bytes(payload[body:body + 4])
-        if ltype == b"hdrl":
-            for cf, cb, ce in _riff_chunks(payload, body + 4, bend):
-                if cf == b"avih":
-                    if ce - cb < 40:
-                        raise ValueError("short avih")
-                    u32 = lambda o: int.from_bytes(  # noqa: E731
-                        payload[cb + o:cb + o + 4], "little"
-                    )
-                    meta.update(
-                        us_per_frame=u32(0), total_frames=u32(16),
-                        n_streams=u32(24), width=u32(32),
-                        height=u32(36),
-                    )
-                elif cf == b"LIST" and ce - cb >= 4 and bytes(
-                    payload[cb:cb + 4]
-                ) == b"strl":
-                    in_vids = False
-                    for sf, sb, se in _riff_chunks(
-                        payload, cb + 4, ce
-                    ):
-                        if sf == b"strh" and se - sb >= 8:
-                            in_vids = bytes(
-                                payload[sb:sb + 4]
-                            ) == b"vids"
-                            if in_vids:
-                                raw = bytes(payload[sb + 4:sb + 8])
-                                if raw.isascii():
-                                    meta["handler"] = (
-                                        raw.decode("ascii").strip()
-                                        or None
-                                    )
-                        elif sf == b"strf" and in_vids and (
-                            se - sb >= 40
-                        ):
-                            # the video stream's BITMAPINFOHEADER
-                            # (+palette) — lets DIB/RLE/CRAM frames
-                            # re-wrap as standalone BMPs downstream
-                            meta["strf"] = bytes(payload[sb:se])
-        elif ltype == b"movi":
-            for cf, cb, ce in _riff_chunks(payload, body + 4, bend):
-                if is_video_frame(cf):
-                    frames.append(bytes(payload[cb:ce]))
-                elif cf == b"LIST" and ce - cb >= 4 and bytes(
-                    payload[cb:cb + 4]
-                ) == b"rec ":
-                    for rf, rb, re_ in _riff_chunks(
-                        payload, cb + 4, ce
-                    ):
-                        if is_video_frame(rf):
-                            frames.append(bytes(payload[rb:re_]))
-    if meta["us_per_frame"] is None or not meta["us_per_frame"]:
-        return None
-    if not meta["width"] or not meta["height"]:
+        ltype = body.take(4)
+        if ltype == b"movi":
+            movi_frames(body, True)
+        if ltype != b"hdrl":
+            continue
+        for cf, c in body.chunks():
+            if cf == b"avih":
+                if c.remaining < 40:
+                    raise Malformed("short avih")
+                f = c.unpack("10I")
+                meta.update(us_per_frame=f[0], total_frames=f[4],
+                            n_streams=f[6], width=f[8], height=f[9])
+            elif cf == b"LIST" and is_list(c, b"strl"):
+                in_vids = False
+                for sf, sc in c.chunks():
+                    if sf == b"strh" and sc.remaining >= 8:
+                        in_vids = sc.take(4) == b"vids"
+                        raw = sc.take(4)
+                        if in_vids and raw.isascii():
+                            meta["handler"] = (
+                                raw.decode("ascii").strip() or None)
+                    elif sf == b"strf" and in_vids and sc.remaining >= 40:
+                        # the video stream's BITMAPINFOHEADER (+palette)
+                        # — lets DIB/RLE/CRAM frames re-wrap as
+                        # standalone BMPs downstream
+                        meta["strf"] = sc.take(sc.remaining)
+    if not meta["us_per_frame"] or not meta["width"] or not meta["height"]:
         return None
     return meta, frames
 
 
+def _bmp_rewrap(strf: bytes, frame: bytes) -> bytes:
+    """A standalone BMP from an AVI video chunk: ``BM`` file header +
+    the strf BITMAPINFOHEADER+palette verbatim + the chunk verbatim."""
+    off = 14 + len(strf)
+    return (b"BM" + (off + len(frame)).to_bytes(4, "little") + bytes(4)
+            + off.to_bytes(4, "little") + strf + frame)
+
+
+@_never_raise
 def _avi_video_frames(payload: bytes | None) -> list[bytes] | None:
     """Ordered real video-frame chunks of an AVI payload, or None for
-    non-AVI/malformed payloads; never raises.  MJPEG (and other
-    self-contained codec) chunks pass through verbatim — each is a
-    complete JPEG stream.  When the video ``strf`` declares an
-    uncompressed DIB (BI_RGB), RLE (BI_RLE8/4), or MS Video 1
-    (CRAM/MSVC/WHAM fourcc) stream, each chunk is instead re-wrapped
-    as a standalone BMP — ``BM`` file header + the strf
-    BITMAPINFOHEADER+palette verbatim + the chunk verbatim — so the
-    frames pixel-decode through ``decode_bmp_pixels`` downstream,
-    exactly like ``_gif_video_frames`` re-wraps animated-GIF
-    descriptors (composition across skip blocks is a sequence-level
-    concern, same stance as GIF disposal)."""
-    if not payload:
-        return None
-    try:
-        scanned = _avi_scan(bytes(payload))
-    except (ValueError, IndexError, struct.error):
-        return None
+    non-AVI/malformed payloads.  MJPEG (and other self-contained
+    codec) chunks pass through verbatim — each is a complete JPEG
+    stream.  When the video ``strf`` declares an uncompressed DIB
+    (BI_RGB), RLE (BI_RLE8/4), or MS Video 1 (CRAM/MSVC/WHAM fourcc)
+    stream, each chunk is instead re-wrapped as a standalone BMP
+    (``_bmp_rewrap``) so the frames pixel-decode through
+    ``decode_bmp_pixels`` downstream, exactly like
+    ``_gif_video_frames`` re-wraps animated-GIF descriptors
+    (composition across skip blocks is a sequence-level concern, same
+    stance as GIF disposal)."""
+    scanned = payload and _avi_scan(bytes(payload))
     if not scanned:
         return None
     meta, frames = scanned
-    strf = meta.get("strf")
+    strf = meta["strf"]
     if strf is not None:
         comp = int.from_bytes(strf[16:20], "little")
         if comp in (0, 1, 2) or comp in _MSV1_FOURCCS:
-            off = 14 + len(strf)
-            frames = [
-                b"BM"
-                + (off + len(f)).to_bytes(4, "little")
-                + bytes(4)
-                + off.to_bytes(4, "little")
-                + strf
-                + f
-                for f in frames
-            ]
+            frames = [_bmp_rewrap(strf, f) for f in frames]
     return frames
 
 
+@_never_raise
 def _gif_video_frames(payload: bytes | None) -> list[bytes] | None:
     """Ordered REAL frames of an ANIMATED GIF (≥ 2 image
     descriptors), each re-wrapped as a standalone single-frame GIF89a
@@ -3763,87 +3564,67 @@ def _gif_video_frames(payload: bytes | None) -> list[bytes] | None:
     decode through ``decode_jpeg_pixels``.  Frames are the raw
     per-descriptor images (no disposal/coalescing — composition is a
     downstream choice, like codec decode for MP4 samples).
-    Single-image GIFs return None and stay on the still-image path;
-    never raises."""
-    if not payload or len(payload) < 14:
+    Single-image GIFs return None and stay on the still-image path."""
+    layout = _gif_layout(bytes(payload or b""))
+    if layout is None:
         return None
-    data = bytes(payload)
-    if data[:6] not in (b"GIF87a", b"GIF89a"):
-        return None
+    frames = []
+    for _, _, iw, ih, lflags, pal, bits, raw, _, _, _ in layout[5]:
+        if pal is None or not iw or not ih:
+            return None
+        frames.append(
+            b"GIF89a"
+            + iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
+            + bytes([0x80 | bits, 0, 0]) + pal
+            + b"\x2c" + bytes(4)
+            + iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
+            + bytes([lflags & 0x40])  # keep interlace only
+            + raw
+            + b"\x3b"
+        )
+    if len(frames) < 2:
+        return None  # a still image, not an animation
+    return frames
+
+
+# the container path both MP4 consumers descend, one level per entry
+_MP4_PATH = (b"moov", b"trak", b"mdia", b"minf", b"stbl")
+
+
+def _mp4_layout(r: _Reader, path: tuple = _MP4_PATH) -> tuple[list, bool]:
+    """The one ISO-BMFF walk, shared by ``decode_video`` and
+    ``_mp4_video_frames``: the box table under ``r`` as a list of
+    (type, body start, body end, children) for every box before the
+    first malformed one, plus whether the table tiled its range.
+    Boxes of type ``path[0]`` carry their own (boxes, ok) pair, walked
+    with ``path[1:]`` (moov → trak → mdia → minf → stbl).  Header
+    decode needs every table on its path to tile; sample extraction
+    only needs each box it looks up to come before the first error
+    (``_mp4_find``)."""
+    boxes = []
     try:
-        flags = data[10]
-        i = 13
-        gct = None
-        gct_bits = 0
-        if flags & 0x80:
-            gct_bits = flags & 7
-            size = 3 * (2 << gct_bits)
-            gct = data[13:13 + size]
-            if len(gct) != size:
-                return None
-            i = 13 + size
-        frames = []
-        n = len(data)
-        while i < n:
-            b = data[i]
-            if b == 0x3B:  # trailer
-                break
-            if b == 0x21:  # extension: skip (GCE timing not needed)
-                j = _skip_subblocks(data, i + 2)
-                if j is None:
-                    return None
-                i = j
-                continue
-            if b != 0x2C:
-                return None
-            if i + 10 > n:
-                return None
-            iw = int.from_bytes(data[i + 5:i + 7], "little")
-            ih = int.from_bytes(data[i + 7:i + 9], "little")
-            lflags = data[i + 9]
-            j = i + 10
-            pal, bits = gct, gct_bits
-            if lflags & 0x80:  # local color table
-                bits = lflags & 7
-                size = 3 * (2 << bits)
-                pal = data[j:j + size]
-                if len(pal) != size:
-                    return None
-                j += size
-            if pal is None or not iw or not ih:
-                return None
-            body_start = j  # LZW min-code byte + sub-blocks
-            if j >= n:
-                return None
-            j += 1
-            while True:  # walk the data sub-blocks to the 0 sentinel
-                if j >= n:
-                    return None
-                sz = data[j]
-                j += 1
-                if sz == 0:
-                    break
-                j += sz
-                if j > n:
-                    return None
-            frames.append(
-                b"GIF89a"
-                + iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
-                + bytes([0x80 | bits, 0, 0]) + pal
-                + b"\x2c" + bytes(4)
-                + iw.to_bytes(2, "little") + ih.to_bytes(2, "little")
-                + bytes([lflags & 0x40])  # keep interlace only
-                + data[body_start:j]
-                + b"\x3b"
-            )
-            i = j
-        if len(frames) < 2:
-            return None  # a still image, not an animation
-        return frames
-    except (ValueError, IndexError, struct.error):
-        return None
+        for btype, body in r.boxes():
+            start = body.pos
+            kids = (_mp4_layout(body, path[1:])
+                    if path and btype == path[0] else None)
+            boxes.append((btype, start, body.end, kids))
+    except Malformed:
+        return boxes, False
+    return boxes, True
 
 
+def _mp4_find(layout: tuple[list, bool], btype: bytes):
+    """First ``btype`` box of one layout level, or None; a malformed
+    table before it is Malformed (a forward walk would hit it
+    first)."""
+    boxes, ok = layout
+    box = next((b for b in boxes if b[0] == btype), None)
+    if box is None and not ok:
+        raise Malformed(f"box table breaks before {btype!r}")
+    return box
+
+
+@_never_raise
 def _mp4_video_frames(payload: bytes | None) -> list[bytes] | None:
     """Ordered REAL video samples of an MP4 payload via the sample
     tables — ISO 14496-12 ``stbl`` is plain structure, no codec:
@@ -3854,128 +3635,105 @@ def _mp4_video_frames(payload: bytes | None) -> list[bytes] | None:
     sample exactly as the encoder wrote it (e.g. AVC NAL units) —
     the codec-free frame-extraction step a 100 TB pipeline runs
     before shipping frames to a GPU decoder.  None for
-    non-MP4 / malformed / table-less payloads; never raises."""
-    if not payload:
-        return None
-    data = bytes(payload)
+    non-MP4 / malformed / table-less payloads."""
+    data = bytes(payload or b"")
     n = len(data)
     if n < 16 or data[4:8] != b"ftyp":
         return None
-
-    def child(start, end, wanted):
-        for btype, body, bend in _mp4_boxes(data, start, end):
-            if btype == wanted:
-                return body, bend
+    moov = _mp4_find(_mp4_layout(_Reader(data)), b"moov")
+    if moov is None:
+        return None
+    stbl = None
+    for btype, _, _, trak in moov[3][0]:
+        if btype != b"trak":
+            continue
+        mdia = _mp4_find(trak, b"mdia")
+        if mdia is None:
+            continue
+        hdlr = _mp4_find(mdia[3], b"hdlr")
+        if (hdlr is None or hdlr[2] - hdlr[1] < 12
+                or data[hdlr[1] + 8:hdlr[1] + 12] != b"vide"):
+            continue
+        minf = _mp4_find(mdia[3], b"minf")
+        if minf is None:
+            continue
+        stbl = _mp4_find(minf[3], b"stbl")
+        break
+    if stbl is None:
+        return None
+    stsz, stsc, stco = (_mp4_find(stbl[3], t)
+                        for t in (b"stsz", b"stsc", b"stco"))
+    width = 4
+    if stco is None:
+        stco, width = _mp4_find(stbl[3], b"co64"), 8
+    if stsz is None or stsc is None or stco is None:
         return None
 
-    try:
-        moov = child(0, n, b"moov")
-        if moov is None:
-            return None
-        stbl = None
-        for btype, body, bend in _mp4_boxes(data, *moov):
-            if btype != b"trak":
-                continue
-            mdia = child(body, bend, b"mdia")
-            if mdia is None:
-                continue
-            hdlr = child(*mdia, b"hdlr")
-            if hdlr is None or hdlr[1] - hdlr[0] < 12:
-                continue
-            if data[hdlr[0] + 8:hdlr[0] + 12] != b"vide":
-                continue
-            minf = child(*mdia, b"minf")
-            if minf is None:
-                continue
-            stbl = child(*minf, b"stbl")
-            break
-        if stbl is None:
-            return None
-        stsz = child(*stbl, b"stsz")
-        stsc = child(*stbl, b"stsc")
-        stco = child(*stbl, b"stco")
-        width = 4
-        if stco is None:
-            stco = child(*stbl, b"co64")
-            width = 8
-        if stsz is None or stsc is None or stco is None:
-            return None
+    def table(box, skip: int) -> _Reader:
+        # tables read to the payload end; each declared count is
+        # checked against its own box below
+        r = _Reader(data, box[1])
+        r.skip(skip)
+        return r
 
-        def u32(at):
-            if at + 4 > n:
-                raise ValueError("mp4: truncated table")
-            return int.from_bytes(data[at:at + 4], "big")
-
-        # stsz: ver/flags, uniform sample_size, count, [sizes]
-        b0 = stsz[0]
-        uniform = u32(b0 + 4)
-        count = u32(b0 + 8)
-        if count == 0 or count > n:
-            return None
-        if uniform:
-            sizes = [uniform] * count
-        else:
-            if b0 + 12 + 4 * count > stsz[1]:
-                return None
-            sizes = [u32(b0 + 12 + 4 * k) for k in range(count)]
-        # stco/co64: chunk offsets
-        b0 = stco[0]
-        n_chunks = u32(b0 + 4)
-        if b0 + 8 + width * n_chunks > stco[1] or n_chunks == 0:
-            return None
-        offs = [
-            int.from_bytes(
-                data[b0 + 8 + width * k:b0 + 8 + width * (k + 1)],
-                "big",
-            )
-            for k in range(n_chunks)
-        ]
-        # stsc: (first_chunk, samples_per_chunk) runs over the chunks
-        b0 = stsc[0]
-        n_runs = u32(b0 + 4)
-        if n_runs == 0 or b0 + 8 + 12 * n_runs > stsc[1]:
-            return None
-        runs = [
-            (u32(b0 + 8 + 12 * k), u32(b0 + 12 + 12 * k))
-            for k in range(n_runs)
-        ]
-        if runs[0][0] != 1:
-            return None
-        # run starts must be strictly increasing and within the chunk
-        # table BEFORE the expansion below — a hostile first_chunk
-        # near 2^32 would otherwise build a multi-GB samples-per-chunk
-        # list from a few-hundred-byte payload
-        for k in range(1, n_runs):
-            if runs[k][0] <= runs[k - 1][0] or runs[k][0] > n_chunks:
-                return None
-        spc = []
-        for k, (first, per) in enumerate(runs):
-            last = (
-                runs[k + 1][0] - 1 if k + 1 < n_runs else n_chunks
-            )
-            if last < first:
-                return None
-            spc.extend([per] * (last - first + 1))
-        if len(spc) != n_chunks:
-            return None
-        frames = []
-        si = 0
-        for c, off in enumerate(offs):
-            pos = off
-            for _ in range(spc[c]):
-                if si >= count:
-                    return None
-                sz = sizes[si]
-                if pos + sz > n:
-                    return None
-                frames.append(data[pos:pos + sz])
-                pos += sz
-                si += 1
-        if si != count:
-            return None
-        return frames
-    except (ValueError, IndexError, struct.error):
+    # stsz: ver/flags, uniform sample_size, count, [sizes]
+    r = table(stsz, 4)
+    uniform, count = r.u32(), r.u32()
+    if count == 0:
         return None
+    _need(count, n)  # sizes the uniform-size list below
+    if uniform:
+        sizes = [uniform] * count
+    else:
+        if stsz[1] + 12 + 4 * count > stsz[2]:
+            return None
+        sizes = r.unpack(f"{count}I")
+    # stco/co64: chunk offsets
+    r = table(stco, 4)
+    n_chunks = r.u32()
+    if stco[1] + 8 + width * n_chunks > stco[2] or n_chunks == 0:
+        return None
+    offs = r.unpack(f"{n_chunks}{'I' if width == 4 else 'Q'}")
+    # stsc: (first_chunk, samples_per_chunk) runs over the chunks
+    r = table(stsc, 4)
+    n_runs = r.u32()
+    if n_runs == 0 or stsc[1] + 8 + 12 * n_runs > stsc[2]:
+        return None
+    flat = r.unpack(f"{3 * n_runs}I")  # (first_chunk, per_chunk, desc)
+    runs = list(zip(flat[::3], flat[1::3]))
+    if runs[0][0] != 1:
+        return None
+    # run starts must be strictly increasing and within the chunk
+    # table BEFORE the expansion below — a hostile first_chunk near
+    # 2^32 would otherwise build a multi-GB samples-per-chunk list
+    # from a few-hundred-byte payload
+    for k in range(1, n_runs):
+        if runs[k][0] <= runs[k - 1][0] or runs[k][0] > n_chunks:
+            return None
+    spc = []
+    for k, (first, per) in enumerate(runs):
+        last = runs[k + 1][0] - 1 if k + 1 < n_runs else n_chunks
+        if last < first:
+            return None
+        spc.extend([per] * (last - first + 1))
+    if len(spc) != n_chunks:
+        return None
+    frames = []
+    si = 0
+    for c, off in enumerate(offs):
+        pos = off
+        for _ in range(spc[c]):
+            if si >= count:
+                return None
+            sz = sizes[si]
+            if pos + sz > n:
+                return None
+            frames.append(data[pos:pos + sz])
+            pos += sz
+            si += 1
+    if si != count:
+        return None
+    return frames
 
 
 _MAX_COMPOSED_FRAMES = 256  # bound total composed output (hostile
@@ -3997,95 +3755,30 @@ def _gif_compose(data: bytes) -> dict | None:
     flattening, since the 3-channel pixel shape has no alpha).
     Returns {width, height, channels, frames:[rgb,...]} with one
     composited full-canvas RGB per frame, or None (malformed, a
-    still, or past the frame/pixel bounds); never raises."""
-    if len(data) < 14 or data[:6] not in (b"GIF87a", b"GIF89a"):
+    still, or past the frame/pixel bounds)."""
+    layout = _gif_layout(data)
+    if layout is None:
         return None
-    sw = int.from_bytes(data[6:8], "little")
-    sh = int.from_bytes(data[8:10], "little")
-    if sw <= 0 or sh <= 0 or sw * sh > _JPEG_MAX_PIXELS:
+    sw, sh, _, bg_index, gct, images, _ = layout
+    if sw <= 0 or sh <= 0:
         return None
-    flags = data[10]
-    bg_index = data[11]
-    gct = None
-    i = 13
-    if flags & 0x80:
-        size = 3 * (2 << (flags & 7))
-        gct = bytes(data[13:13 + size])
-        if len(gct) != size:
-            return None
-        i = 13 + size
+    _need(sw * sh, _MAX_PIXELS)
     if gct is not None and 3 * bg_index + 2 < len(gct):
         background = gct[3 * bg_index:3 * bg_index + 3]
     else:
         background = b"\x00\x00\x00"
     canvas = bytearray(background * (sw * sh))
-    n = len(data)
     frames: list[bytes] = []
-    disposal, transparent = 0, None
-    while i < n:
-        b = data[i]
-        if b == 0x3B:
-            break
-        if b == 0x21:
-            if data[i + 1:i + 2] == b"\xf9" and i + 7 < n and (
-                data[i + 2] == 4
-            ):
-                packed = data[i + 3]
-                disposal = (packed >> 2) & 7
-                transparent = data[i + 6] if packed & 1 else None
-            j = _skip_subblocks(data, i + 2)
-            if j is None:
-                return None
-            i = j
-            continue
-        if b != 0x2C or i + 10 > n:
-            return None
-        left = int.from_bytes(data[i + 1:i + 3], "little")
-        top = int.from_bytes(data[i + 3:i + 5], "little")
-        iw = int.from_bytes(data[i + 5:i + 7], "little")
-        ih = int.from_bytes(data[i + 7:i + 9], "little")
-        lflags = data[i + 9]
+    for image in images:
+        left, top, iw, ih, _, pal, _, _, _, _, gce = image
         if not iw or not ih or left + iw > sw or top + ih > sh:
             return None
-        j = i + 10
-        pal, _bits = gct, flags & 7
-        if lflags & 0x80:
-            size = 3 * (2 << (lflags & 7))
-            pal = bytes(data[j:j + size])
-            if len(pal) != size:
-                return None
-            j += size
         if pal is None:
             return None
-        if j >= n:
+        idx = _gif_indices(image)
+        if idx is None:
             return None
-        min_code = data[j]
-        j += 1
-        lzw = bytearray()
-        while True:
-            if j >= n:
-                return None
-            sz = data[j]
-            j += 1
-            if sz == 0:
-                break
-            lzw += data[j:j + sz]
-            j += sz
-            if j > n:
-                return None
-        idx = _lzw_decode(bytes(lzw), min_code, iw * ih)
-        if idx is None or max(idx) * 3 + 2 >= len(pal):
-            return None
-        if lflags & 0x40:  # interlaced rows arrive in 4 passes
-            rows = [idx[r * iw:(r + 1) * iw] for r in range(ih)]
-            order = (
-                list(range(0, ih, 8)) + list(range(4, ih, 8))
-                + list(range(2, ih, 4)) + list(range(1, ih, 2))
-            )
-            deinter: list[bytes] = [b""] * ih
-            for src, dst in enumerate(order):
-                deinter[dst] = rows[src]
-            idx = b"".join(deinter)
+        disposal, transparent = gce
         saved = bytes(canvas) if disposal == 3 else None
         for y in range(ih):
             row = idx[y * iw:(y + 1) * iw]
@@ -4105,8 +3798,6 @@ def _gif_compose(data: bytes) -> dict | None:
                 canvas[base:base + 3 * iw] = background * iw
         elif disposal == 3 and saved is not None:
             canvas = bytearray(saved)
-        disposal, transparent = 0, None
-        i = j
     if len(frames) < 2:
         return None  # a still image, not an animation
     return {"width": sw, "height": sh, "channels": 3,
@@ -4157,13 +3848,12 @@ def _avi_compose(data: bytes) -> dict | None:
     geometry and palette come from the captured strf
     BITMAPINFOHEADER (MJPEG geometry from each frame's own SOF).
     Returns the ``_gif_compose`` shape, or None (no video strf, a
-    codec this engine cannot pixel-decode, or any malformed frame);
-    never raises."""
+    codec this engine cannot pixel-decode, or any malformed frame)."""
     scanned = _avi_scan(data)
     if not scanned:
         return None
     meta, chunks = scanned
-    strf = meta.get("strf")
+    strf = meta["strf"]
     if strf is None or not chunks:
         return None
     if len(chunks) > _MAX_COMPOSED_FRAMES:
@@ -4173,8 +3863,9 @@ def _avi_compose(data: bytes) -> dict | None:
     bpp = int.from_bytes(strf[14:16], "little")
     comp = int.from_bytes(strf[16:20], "little")
     if comp in _MSV1_FOURCCS and bpp in (8, 16) and h > 0:
-        if w <= 0 or w * h > _JPEG_MAX_PIXELS:
+        if w <= 0:
             return None
+        _need(w * h, _MAX_PIXELS)
         if len(chunks) * w * h > _MAX_COMPOSED_PIXELS:
             return None
         palette = None
@@ -4198,12 +3889,9 @@ def _avi_compose(data: bytes) -> dict | None:
         return {"width": w, "height": h, "channels": 3,
                 "frames": frames}
     if comp in (0, 1, 2):  # DIB / RLE: every frame a full repaint
-        off = 14 + len(strf)
         frames = []
         for c in chunks:
-            bmp = (b"BM" + (off + len(c)).to_bytes(4, "little")
-                   + bytes(4) + off.to_bytes(4, "little") + strf + c)
-            dec = decode_bmp_pixels(bmp)
+            dec = decode_bmp_pixels(_bmp_rewrap(strf, c))
             if dec is None:
                 return None
             if (len(chunks) * dec["width"] * dec["height"]
@@ -4234,6 +3922,7 @@ def _mp4_compose(data: bytes) -> dict | None:
     return _jpeg_sequence_compose(frames)
 
 
+@_never_raise
 def compose_video_pixels(payload: bytes | None) -> dict | None:
     """REAL sequence-level video decode: every frame of an animated
     payload as composited full-canvas RGB pixels — the step after
@@ -4245,314 +3934,207 @@ def compose_video_pixels(payload: bytes | None) -> dict | None:
     predictive codecs — H.26x/VP9 samples, entropy-coded AVI streams
     beyond MJPEG — return None, same stance as ``decode_image``'s
     metadata path.  Returns {width, height, channels,
-    frames: [rgb, ...]} or None; never raises."""
-    if not payload:
-        return None
-    data = bytes(payload)
-    try:
-        if data[:6] in (b"GIF87a", b"GIF89a"):
-            return _gif_compose(data)
-        if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
-            return _avi_compose(data)
-        if len(data) >= 12 and data[4:8] == b"ftyp":
-            return _mp4_compose(data)
-    except (ValueError, IndexError, struct.error, OverflowError):
-        return None
+    frames: [rgb, ...]} or None."""
+    data = bytes(payload or b"")
+    if data[:6] in (b"GIF87a", b"GIF89a"):
+        return _gif_compose(data)
+    if data[:4] == b"RIFF" and data[8:12] == b"AVI ":
+        return _avi_compose(data)
+    if len(data) >= 12 and data[4:8] == b"ftyp":
+        return _mp4_compose(data)
     return None
 
 
-def _ebml_vint(data: bytes, i: int, end: int, is_id: bool):
-    """Read one EBML variable-length integer at data[i] (RFC 8794):
-    the leading byte's first set bit gives the width.  IDs keep the
-    marker bit in the value; sizes clear it and report the all-ones
-    'unknown size' as None.  Returns (value, next_index); raises
-    ValueError on truncation or a zero lead byte."""
-    if i >= end:
-        raise ValueError("ebml: truncated vint")
-    b0 = data[i]
-    if b0 == 0:
-        raise ValueError("ebml: vint width > 8")
-    ln = 9 - b0.bit_length()
-    if i + ln > end:
-        raise ValueError("ebml: vint overruns range")
-    if is_id:
-        return int.from_bytes(data[i:i + ln], "big"), i + ln
-    val = b0 & (0xFF >> ln)
-    for k in range(1, ln):
-        val = (val << 8) | data[i + k]
-    if val == (1 << (7 * ln)) - 1:  # all value bits set: unknown
-        return None, i + ln
-    return val, i + ln
-
-
-def _ebml_elements(data: bytes, start: int, end: int):
-    """Yield (element_id, body_start, body_end) for the EBML element
-    table in data[start:end]; the table must tile the range (same
-    structural contract as ``_mp4_boxes``).  An unknown-size element
-    is only lawful for the Segment (0x18538067, streamed Matroska)
-    and extends to the end of the range; raises ValueError on any
-    other malformation."""
-    i = start
-    while i < end:
-        eid, j = _ebml_vint(data, i, end, is_id=True)
-        size, body = _ebml_vint(data, j, end, is_id=False)
-        if size is None:
-            if eid != 0x18538067:
-                raise ValueError("ebml: unknown size outside Segment")
-            yield eid, body, end
-            return
-        if body + size > end:
-            raise ValueError("ebml: element overruns range")
-        yield eid, body, body + size
-        i = body + size
-
-
-def _ebml_vint_signed(data: bytes, i: int, end: int):
-    """Signed EBML vint (Matroska EBML-lacing size deltas): the
-    unsigned value minus 2^(7·width−1) − 1.  Raises ValueError on
-    malformation (incl. the all-ones pattern)."""
-    b0 = data[i] if i < end else 0
-    if b0 == 0:
-        raise ValueError("ebml: bad signed vint")
-    ln = 9 - b0.bit_length()
-    val, j = _ebml_vint(data, i, end, is_id=False)
-    if val is None:
-        raise ValueError("ebml: all-ones signed vint")
-    return val - ((1 << (7 * ln - 1)) - 1), j
-
-
-def _mkv_block_frames(
-    data: bytes, s0: int, s1: int, track: int
-) -> list[bytes]:
+def _mkv_block_frames(r: _Reader, track: int) -> list[bytes]:
     """Frames of one Matroska (Simple)Block body (track-number vint,
     s16 timecode, flags, then the lace table + frame bytes): no
     lacing, Xiph (255-terminated size bytes), fixed (equal split) and
     EBML (first size + signed deltas) lacing all reconstruct exact
     frame byte ranges.  Blocks of other tracks return []; raises
-    ValueError on malformation."""
-    tnum, i = _ebml_vint(data, s0, s1, is_id=False)
+    Malformed on a broken block."""
+    tnum = r.vint()
     if tnum is None:
-        raise ValueError("mkv: unknown-size track number")
-    if i + 3 > s1:
-        raise ValueError("mkv: truncated block header")
-    flags = data[i + 2]
-    i += 3
+        raise Malformed("mkv: unknown-size track number")
+    r.skip(2)  # timecode
+    flags = r.u8()
     if tnum != track:
         return []
     lacing = (flags >> 1) & 3
     if lacing == 0:
-        return [data[i:s1]]
-    if i >= s1:
-        raise ValueError("mkv: missing lace count")
-    k = data[i] + 1
-    i += 1
+        return [r.take(r.remaining)]
+    k = r.u8() + 1
     if lacing == 2:  # fixed-size lacing: equal split of the rest
-        rem = s1 - i
-        if rem % k:
-            raise ValueError("mkv: fixed lacing not divisible")
-        w = rem // k
-        return [data[i + t * w:i + (t + 1) * w] for t in range(k)]
+        if r.remaining % k:
+            raise Malformed("mkv: fixed lacing not divisible")
+        w = r.remaining // k
+        return [r.take(w) for _ in range(k)]
     sizes = []
     if lacing == 1:  # Xiph: 255-terminated byte sums for k-1 frames
         for _ in range(k - 1):
-            sz = 0
-            while True:
-                if i >= s1:
-                    raise ValueError("mkv: truncated Xiph lace")
-                b = data[i]
-                i += 1
+            sz, b = 0, 255
+            while b == 255:
+                b = r.u8()
                 sz += b
-                if b < 255:
-                    break
             sizes.append(sz)
     else:  # EBML: first size absolute, then signed deltas
-        first, i = _ebml_vint(data, i, s1, is_id=False)
-        if first is None:
-            raise ValueError("mkv: unknown-size lace")
-        sizes.append(first)
-        prev = first
+        prev = r.vint()
+        if prev is None:
+            raise Malformed("mkv: unknown-size lace")
+        sizes.append(prev)
         for _ in range(k - 2):
-            delta, i = _ebml_vint_signed(data, i, s1)
-            prev += delta
+            prev += r.svint()
             if prev < 0:
-                raise ValueError("mkv: negative lace size")
+                raise Malformed("mkv: negative lace size")
             sizes.append(prev)
-    last = s1 - i - sum(sizes)  # final frame size is inferred
-    if last < 0:
-        raise ValueError("mkv: laces overrun block")
-    out = []
-    for sz in sizes:
-        out.append(data[i:i + sz])
-        i += sz
-    out.append(data[i:s1])
-    return out
+    if r.remaining < sum(sizes):  # the final frame size is inferred
+        raise Malformed("mkv: laces overrun block")
+    return [r.take(sz) for sz in sizes] + [r.take(r.remaining)]
 
 
-def _mkv_video_frames(payload: bytes | None) -> list[bytes] | None:
-    """Ordered REAL video frames of a Matroska/WebM payload: resolve
-    the first video track's TrackNumber, then walk every Cluster's
-    SimpleBlocks and BlockGroup Blocks (``_mkv_block_frames``) —
-    un-lacing Xiph / fixed / EBML lace tables — and emit each frame's
-    exact bytes as the encoder wrote them (VP8/VP9/AV1/H.264
-    bitstream chunks), the same codec-free extraction step
-    ``_mp4_video_frames`` performs from the ISO-BMFF sample tables.
-    None for non-Matroska / malformed / frameless payloads; never
-    raises."""
-    if not payload:
+_EBML_MAGIC = b"\x1a\x45\xdf\xa3"
+
+
+def _mkv_layout(data: bytes) -> tuple | None:
+    """The one Matroska/WebM structure walk, shared by
+    ``_decode_webm`` and ``_mkv_video_frames`` (public RFC 8794 EBML +
+    the matroska.org element registry): the top-level element table
+    must tile the payload, with an EBML header whose DocType is
+    'matroska' or 'webm' and a Segment (unknown-size Segments, the
+    streamed form, run to payload end).  Inside the Segment: the
+    first Info, every Cluster, and each TrackEntry of every Tracks as
+    (TrackType, TrackNumber, its Video settings elements).  Returns
+    (doctype, info, tracks, clusters) as readers, or None; raises
+    Malformed on a broken element table."""
+    if len(data) < 8 or data[:4] != _EBML_MAGIC:
         return None
-    data = bytes(payload)
-    n = len(data)
-    if n < 8 or data[:4] != b"\x1a\x45\xdf\xa3":
+    doctype = seg = None
+    for eid, el in _Reader(data).ebml_elements():
+        if eid == 0x1A45DFA3 and doctype is None:
+            for hid, h in el.ebml_elements():
+                if hid == 0x4282:  # DocType
+                    doctype = h.take(h.remaining).split(b"\x00")[0]
+        elif eid == 0x18538067 and seg is None:
+            seg = el
+    if doctype not in (b"matroska", b"webm") or seg is None:
         return None
-    try:
-        doctype = None
-        seg = None
-        for eid, b0, b1 in _ebml_elements(data, 0, n):
-            if eid == 0x1A45DFA3 and doctype is None:
-                for hid, h0, h1 in _ebml_elements(data, b0, b1):
-                    if hid == 0x4282:
-                        doctype = data[h0:h1].split(b"\x00")[0]
-            elif eid == 0x18538067 and seg is None:
-                seg = (b0, b1)
-        if doctype not in (b"matroska", b"webm") or seg is None:
-            return None
-        video_track = None
-        clusters = []
-        for eid, b0, b1 in _ebml_elements(data, *seg):
-            if eid == 0x1654AE6B:  # Tracks
-                for tid, t0, t1 in _ebml_elements(data, b0, b1):
-                    if tid != 0xAE:
-                        continue
-                    ttype = tnum = None
-                    for fid, f0, f1 in _ebml_elements(data, t0, t1):
-                        if fid == 0x83 and f1 > f0:  # TrackType
-                            ttype = data[f0]
-                        elif fid == 0xD7 and 1 <= f1 - f0 <= 8:
-                            tnum = int.from_bytes(
-                                data[f0:f1], "big")
-                    if ttype == 1 and tnum and video_track is None:
-                        video_track = tnum
-            elif eid == 0x1F43B675:
-                clusters.append((b0, b1))
-        if video_track is None or not clusters:
-            return None
-        frames: list[bytes] = []
-        for b0, b1 in clusters:
-            for cid, c0, c1 in _ebml_elements(data, b0, b1):
-                if cid == 0xA3:  # SimpleBlock
-                    spans = [(c0, c1)]
-                elif cid == 0xA0:  # BlockGroup → Block children
-                    spans = [
-                        (g0, g1)
-                        for gid, g0, g1 in _ebml_elements(
-                            data, c0, c1)
-                        if gid == 0xA1
-                    ]
-                else:
+    info, tracks, clusters = None, [], []
+    for eid, el in seg.ebml_elements():
+        if eid == 0x1549A966 and info is None:
+            info = el
+        elif eid == 0x1654AE6B:  # Tracks
+            for tid, entry in el.ebml_elements():
+                if tid != 0xAE:  # TrackEntry
                     continue
-                for s0, s1 in spans:
-                    frames.extend(
-                        _mkv_block_frames(data, s0, s1, video_track))
-        return frames or None
-    except (ValueError, IndexError, struct.error, OverflowError):
+                ttype = tnum = None
+                video = []
+                for fid, f in entry.ebml_elements():
+                    if fid == 0x83 and f.remaining:  # TrackType
+                        ttype = f.u8()
+                    elif fid == 0xD7 and 1 <= f.remaining <= 8:
+                        tnum = f.uint(f.remaining)  # TrackNumber
+                    elif fid == 0xE0:  # Video settings
+                        video.append(f)
+                tracks.append((ttype, tnum, video))
+        elif eid == 0x1F43B675:
+            clusters.append(el)
+    return doctype, info, tracks, clusters
+
+
+@_never_raise
+def _mkv_video_frames(payload: bytes | None) -> list[bytes] | None:
+    """Ordered REAL video frames of a Matroska/WebM payload: the first
+    video track's TrackNumber from ``_mkv_layout``, then every
+    Cluster's SimpleBlocks and BlockGroup Blocks
+    (``_mkv_block_frames``) — un-lacing Xiph / fixed / EBML lace
+    tables — emitting each frame's exact bytes as the encoder wrote
+    them (VP8/VP9/AV1/H.264 bitstream chunks), the same codec-free
+    extraction step ``_mp4_video_frames`` performs from the ISO-BMFF
+    sample tables.  None for non-Matroska / malformed / frameless
+    payloads."""
+    layout = _mkv_layout(bytes(payload or b""))
+    if layout is None:
         return None
+    _, _, tracks, clusters = layout
+    video_track = next(
+        (tnum for ttype, tnum, _ in tracks if ttype == 1 and tnum), None)
+    if video_track is None or not clusters:
+        return None
+    frames: list[bytes] = []
+    for cluster in clusters:
+        for cid, c in cluster.ebml_elements():
+            if cid == 0xA3:  # SimpleBlock
+                blocks = [c]
+            elif cid == 0xA0:  # BlockGroup → Block children
+                blocks = [g for gid, g in c.ebml_elements() if gid == 0xA1]
+            else:
+                continue
+            for block in blocks:
+                frames.extend(_mkv_block_frames(block, video_track))
+    return frames or None
 
 
 def _decode_webm(payload: bytes) -> dict | None:
-    """REAL Matroska / WebM container decode (public RFC 8794 EBML +
-    the matroska.org element registry): the top-level element walk
-    must tile the payload — an EBML header whose DocType is
-    'matroska' or 'webm', then a Segment (unknown-size Segments, the
-    streamed form, extend to payload end).  Inside the Segment: Info
-    yields TimecodeScale (ns/tick, default 1e6) and the float
+    """REAL Matroska / WebM container decode over ``_mkv_layout``:
+    Info yields TimecodeScale (ns/tick, default 1e6) and the float
     Duration; Tracks yields the track count and the first video
-    track's PixelWidth/PixelHeight; at least one Cluster must be
-    present (the ``mdat`` analog).  Reported ``timescale`` is
+    track's PixelWidth/PixelHeight; an Info and at least one Cluster
+    (the ``mdat`` analog) must be present.  Reported ``timescale`` is
     ticks/second (1e9 / TimecodeScale) so the shape matches the MP4
     branch.  Frame extraction (SimpleBlock/laced Block payloads)
     carries codec bitstreams (VP8/VP9/AV1/H.264) and stays behind
-    the codec boundary.  None on anything malformed; never raises."""
-    data = bytes(payload)
-    n = len(data)
-    doctype = None
-    seg = None
-    try:
-        for eid, b0, b1 in _ebml_elements(data, 0, n):
-            if eid == 0x1A45DFA3 and doctype is None:
-                for hid, h0, h1 in _ebml_elements(data, b0, b1):
-                    if hid == 0x4282:  # DocType
-                        doctype = data[h0:h1].split(b"\x00")[0]
-            elif eid == 0x18538067 and seg is None:
-                seg = (b0, b1)
-        if doctype not in (b"matroska", b"webm") or seg is None:
-            return None
-        scale = 1_000_000  # TimecodeScale default: 1 ms ticks
-        duration = None
-        saw_info = saw_cluster = False
-        n_tracks = 0
-        width = height = None
-        for eid, b0, b1 in _ebml_elements(data, *seg):
-            if eid == 0x1549A966 and not saw_info:  # Info
-                saw_info = True
-                for iid, i0, i1 in _ebml_elements(data, b0, b1):
-                    if iid == 0x2AD7B1:  # TimecodeScale (uint)
-                        if not 1 <= i1 - i0 <= 8:
-                            return None
-                        scale = int.from_bytes(data[i0:i1], "big")
-                        # ns/tick: 0 is invalid; >1e9 would zero the
-                        # reported ticks/second
-                        if not 1 <= scale <= 1_000_000_000:
-                            return None
-                    elif iid == 0x4489:  # Duration (float 4/8)
-                        if i1 - i0 == 4:
-                            duration = struct.unpack(
-                                ">f", data[i0:i1])[0]
-                        elif i1 - i0 == 8:
-                            duration = struct.unpack(
-                                ">d", data[i0:i1])[0]
-                        else:
-                            return None
-                        # NaN, negative and inf all fail (inf would
-                        # overflow the int() conversion below)
-                        if not 0 <= duration < 1e15:
-                            return None
-            elif eid == 0x1654AE6B:  # Tracks
-                for tid, t0, t1 in _ebml_elements(data, b0, b1):
-                    if tid != 0xAE:  # TrackEntry
-                        continue
-                    n_tracks += 1
-                    for fid, f0, f1 in _ebml_elements(data, t0, t1):
-                        if fid != 0xE0:  # Video settings
-                            continue
-                        w = h = None
-                        for vid, v0, v1 in _ebml_elements(
-                                data, f0, f1):
-                            if not 1 <= v1 - v0 <= 8:
-                                continue
-                            if vid == 0xB0:  # PixelWidth
-                                w = int.from_bytes(data[v0:v1], "big")
-                            elif vid == 0xBA:  # PixelHeight
-                                h = int.from_bytes(data[v0:v1], "big")
-                        if width is None and w and h:
-                            width, height = w, h
-            elif eid == 0x1F43B675:  # Cluster
-                saw_cluster = True
-    except (ValueError, IndexError, struct.error, OverflowError):
+    the codec boundary.  None on anything malformed."""
+    layout = _mkv_layout(bytes(payload))
+    if layout is None:
         return None
-    if not saw_info or not saw_cluster:
+    doctype, info, tracks, clusters = layout
+    if info is None or not clusters:
         return None
+    scale = 1_000_000  # TimecodeScale default: 1 ms ticks
+    duration = None
+    for iid, f in info.ebml_elements():
+        if iid == 0x2AD7B1:  # TimecodeScale (uint)
+            if not 1 <= f.remaining <= 8:
+                return None
+            scale = f.uint(f.remaining)
+            # ns/tick: 0 is invalid; >1e9 would zero the reported
+            # ticks/second
+            if not 1 <= scale <= 1_000_000_000:
+                return None
+        elif iid == 0x4489:  # Duration (float 4/8)
+            if f.remaining not in (4, 8):
+                return None
+            duration = struct.unpack(
+                ">f" if f.remaining == 4 else ">d", f.take(f.remaining))[0]
+            # NaN, negative and inf all fail (inf would overflow the
+            # int() conversion below)
+            if not 0 <= duration < 1e15:
+                return None
+    width = height = None
+    for _, _, video in tracks:
+        for v in video:
+            w = h = None
+            for vid, p in v.ebml_elements():
+                if not 1 <= p.remaining <= 8:
+                    continue
+                if vid == 0xB0:  # PixelWidth
+                    w = p.uint(p.remaining)
+                elif vid == 0xBA:  # PixelHeight
+                    h = p.uint(p.remaining)
+            if width is None and w and h:
+                width, height = w, h
     dur_ms = int(duration * scale / 1e6) if duration else 0
     return {
         "format": "webm" if doctype == b"webm" else "mkv",
         "major_brand": doctype.decode("ascii"),
         "timescale": 1_000_000_000 // scale,
         "duration_ms": dur_ms,
-        "n_tracks": n_tracks,
+        "n_tracks": len(tracks),
         "width": width,
         "height": height,
     }
 
 
+@_never_raise
 def decode_video(payload: bytes | None) -> dict | None:
     """REAL pure-Python video container decoder for MP4 (ISO base
     media file format): walk the top-level box table (every declared
@@ -4577,14 +4159,12 @@ def decode_video(payload: bytes | None) -> dict | None:
     ``decode_jpeg_pixels`` handles); other codecs keep the labeled
     stub fan-out — but the container-structure contract is exercised
     for real in both containers."""
-    n = len(payload) if payload else 0
-    if n >= 8 and bytes(payload[:4]) == b"\x1a\x45\xdf\xa3":
-        return _decode_webm(bytes(payload))
-    if n >= 12 and bytes(payload[:4]) == b"RIFF":
-        try:
-            scanned = _avi_scan(bytes(payload))
-        except (ValueError, IndexError, struct.error):
-            return None
+    data = bytes(payload or b"")
+    n = len(data)
+    if n >= 8 and data[:4] == _EBML_MAGIC:
+        return _decode_webm(data)
+    if n >= 12 and data[:4] == b"RIFF":
+        scanned = _avi_scan(data)
         if scanned is None:
             return None
         meta, _ = scanned
@@ -4598,76 +4178,57 @@ def decode_video(payload: bytes | None) -> dict | None:
             "width": meta["width"],
             "height": meta["height"],
         }
-    if n < 16 or bytes(payload[4:8]) != b"ftyp":
+    if n < 16 or data[4:8] != b"ftyp":
         return None
-    brand = None
+    top, ok = _mp4_layout(_Reader(data))
+    if not ok or top[0][2] - top[0][1] < 8:
+        return None
+    brand = data[top[0][1]:top[0][1] + 4]
+    if not brand.isascii():
+        return None
     timescale = duration = None
     n_tracks = 0
     width = height = None
-    saw_moov = saw_mdat = False
-    try:
-        for btype, body, bend in _mp4_boxes(payload, 0, n):
-            if brand is None:
-                if btype != b"ftyp" or bend - body < 8:
+    for btype, _, _, moov in top[1:]:
+        if btype != b"moov":
+            continue
+        if not moov[1]:
+            return None
+        for ityp, ib, ie, trak in moov[0]:
+            if ityp == b"mvhd":
+                # smallest valid body is v0 (20 bytes); a header-only
+                # mvhd ending at payload end would otherwise index
+                # past the buffer
+                r = _Reader(data, ib, ie)
+                if r.remaining < 20:
                     return None
-                raw = bytes(payload[body:body + 4])
-                if not raw.isascii():
+                ver = r.u8()
+                if ver not in (0, 1) or (ver and r.remaining < 31):
                     return None
-                brand = raw.decode("ascii").strip()
-            elif btype == b"mdat":
-                saw_mdat = True
-            elif btype == b"moov":
-                saw_moov = True
-                for ityp, ib, ie in _mp4_boxes(payload, body, bend):
-                    if ityp == b"mvhd":
-                        # smallest valid body is v0 (20 bytes); a
-                        # header-only mvhd ending at payload end would
-                        # otherwise index past the buffer
-                        if ie - ib < 20:
-                            return None
-                        ver = payload[ib]
-                        if ver == 0 and ie - ib >= 20:
-                            timescale = int.from_bytes(
-                                payload[ib + 12:ib + 16], "big"
-                            )
-                            duration = int.from_bytes(
-                                payload[ib + 16:ib + 20], "big"
-                            )
-                        elif ver == 1 and ie - ib >= 32:
-                            timescale = int.from_bytes(
-                                payload[ib + 20:ib + 24], "big"
-                            )
-                            duration = int.from_bytes(
-                                payload[ib + 24:ib + 32], "big"
-                            )
-                        else:
-                            return None
-                        if timescale == 0:
-                            return None
-                    elif ityp == b"trak":
-                        n_tracks += 1
-                        for ttyp, tb, te in _mp4_boxes(payload, ib, ie):
-                            # tkhd v0 body is 84 bytes; width/height
-                            # are the final two 16.16 fixed-point
-                            # fields (nonzero only on visual tracks)
-                            if ttyp != b"tkhd" or te - tb < 84:
-                                continue
-                            w16 = int.from_bytes(
-                                payload[te - 8:te - 4], "big"
-                            )
-                            h16 = int.from_bytes(
-                                payload[te - 4:te], "big"
-                            )
-                            if width is None and w16 and h16:
-                                width = w16 >> 16
-                                height = h16 >> 16
-    except (ValueError, IndexError, struct.error, OverflowError):
-        return None
-    if not saw_moov or not saw_mdat or timescale is None:
+                r.skip(3 + 8 * (ver + 1))  # flags, creation/modification
+                timescale, duration = r.u32(), r.uint(4 * (ver + 1))
+                if timescale == 0:
+                    return None
+            elif ityp == b"trak":
+                n_tracks += 1
+                if not trak[1]:
+                    return None
+                for ttyp, tb, te, _ in trak[0]:
+                    # tkhd v0 body is 84 bytes; width/height are the
+                    # final two 16.16 fixed-point fields (nonzero only
+                    # on visual tracks)
+                    if ttyp != b"tkhd" or te - tb < 84:
+                        continue
+                    w16 = int.from_bytes(data[te - 8:te - 4], "big")
+                    h16 = int.from_bytes(data[te - 4:te], "big")
+                    if width is None and w16 and h16:
+                        width, height = w16 >> 16, h16 >> 16
+    saw = {b[0] for b in top[1:]}
+    if b"moov" not in saw or b"mdat" not in saw or timescale is None:
         return None
     return {
         "format": "mp4",
-        "major_brand": brand,
+        "major_brand": brand.decode("ascii").strip(),
         "timescale": timescale,
         "duration_ms": duration * 1000 // timescale,
         "n_tracks": n_tracks,
@@ -4682,59 +4243,21 @@ def video_meta(
     """(id, is_decodable, format, major_brand, timescale, duration_ms,
     n_tracks, width, height) via Arrow-batched ``decode_video`` — real
     for MP4 containers, null for formats needing a codec library."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("is_decodable", BooleanType()),
-            StructField("format", StringType()),
-            StructField("major_brand", StringType()),
-            StructField("timescale", LongType()),
-            StructField("duration_ms", LongType()),
-            StructField("n_tracks", IntegerType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
-    )
-
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = pdf[payload_col].map(decode_video)
-            get = lambda k: metas.map(  # noqa: E731
-                lambda m: m[k] if m else None
-            )
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "is_decodable": metas.map(lambda m: m is not None),
-                    "format": get("format"),
-                    "major_brand": get("major_brand"),
-                    "timescale": get("timescale").astype("Int64"),
-                    "duration_ms": get("duration_ms").astype("Int64"),
-                    "n_tracks": get("n_tracks").astype("Int32"),
-                    "width": get("width").astype("Int32"),
-                    "height": get("height").astype("Int32"),
-                }
-            )
-
-    return df.mapInPandas(decode_batches, schema)
+    return _meta_operator(df, id_col, payload_col, decode_video, [
+        ("format", StringType()), ("major_brand", StringType()),
+        ("timescale", LongType()), ("duration_ms", LongType()),
+        ("n_tracks", IntegerType()), ("width", IntegerType()),
+        ("height", IntegerType()),
+    ])
 
 
-def fake_decode(payload: bytes) -> dict:
-    """Payload metadata: byte stats are always real; ``is_decodable``
-    and dimensions are REAL for netpbm/BMP (``decode_image``) and a
-    labeled stub (not-decodable) for codec formats this container
-    cannot parse."""
-    if payload is None:
-        return {
-            "n_bytes": 0, "first_byte": 0, "is_decodable": False,
-            "format": None, "width": None, "height": None,
-        }
+def payload_meta(payload: bytes | None) -> dict:
+    """Payload metadata: byte stats are always real; ``is_decodable``,
+    ``format`` and the dimensions come from ``decode_image`` (real for
+    all nine header formats, None for anything else)."""
     img = decode_image(payload)
     return {
-        "n_bytes": len(payload),
+        "n_bytes": len(payload) if payload is not None else 0,
         "first_byte": payload[0] if payload else 0,
         "is_decodable": img is not None,
         "format": img["format"] if img else None,
@@ -4747,49 +4270,16 @@ def binary_meta(
     df: DataFrame, id_col: str, payload_col: str = "payload"
 ) -> DataFrame:
     """(id, n_bytes, first_byte, is_decodable, format, width, height)
-    via Arrow-batched decode; dimensions are real for netpbm/BMP and
-    null otherwise."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("n_bytes", LongType()),
-            StructField("first_byte", IntegerType()),
-            StructField("is_decodable", BooleanType()),
-            StructField("format", StringType()),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-        ]
-    )
-
-    def decode_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            metas = pdf[payload_col].map(fake_decode)
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "n_bytes": metas.map(lambda m: m["n_bytes"]).astype(
-                        "int64"
-                    ),
-                    "first_byte": metas.map(
-                        lambda m: m["first_byte"]
-                    ).astype("int32"),
-                    "is_decodable": metas.map(
-                        lambda m: m["is_decodable"]
-                    ),
-                    "format": metas.map(lambda m: m["format"]),
-                    "width": metas.map(lambda m: m["width"]).astype(
-                        "Int32"
-                    ),
-                    "height": metas.map(lambda m: m["height"]).astype(
-                        "Int32"
-                    ),
-                }
-            )
-
-    return df.mapInPandas(decode_batches, schema)
+    via Arrow-batched ``payload_meta``; dimensions are real for every
+    ``decode_image`` format and null otherwise."""
+    fields = [
+        ("n_bytes", LongType()), ("first_byte", IntegerType()),
+        ("is_decodable", BooleanType()), ("format", StringType()),
+        ("width", IntegerType()), ("height", IntegerType()),
+    ]
+    return _map_payloads(
+        df, id_col, payload_col, fields,
+        lambda p: tuple(payload_meta(p).values()))
 
 
 FRAME_STRIDE = 16
@@ -4819,48 +4309,23 @@ def frame_sample(
     deterministic byte-slicing stub (fixed ``stride`` chunks); a
     deployment swaps that for ffmpeg keyframe extraction — schema,
     batch iterator, and row fan-out are identical."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("frame_idx", LongType()),
-            StructField("frame_bytes", df.schema[payload_col].dataType),
+    def frames(payload) -> list[tuple]:
+        if payload is None:
+            return []
+        for extract in (_avi_video_frames, _mp4_video_frames,
+                        _gif_video_frames, _mkv_video_frames):
+            real = extract(payload)
+            if real is not None:  # REAL container frames
+                return [(f, real[f]) for f in range(0, len(real), every_n)]
+        return [
+            (f, bytes(payload[f * stride:(f + 1) * stride]))
+            for f in range(0, len(payload) // stride, every_n)
         ]
-    )
 
-    def sample_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, frames = [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                if payload is None:
-                    continue
-                real = _avi_video_frames(payload)
-                if real is None:
-                    real = _mp4_video_frames(payload)
-                if real is None:
-                    real = _gif_video_frames(payload)
-                if real is None:
-                    real = _mkv_video_frames(payload)
-                if real is not None:  # REAL container frames
-                    for f in range(0, len(real), every_n):
-                        ids.append(i)
-                        idxs.append(f)
-                        frames.append(real[f])
-                    continue
-                n_frames = len(payload) // stride
-                for f in range(0, n_frames, every_n):
-                    ids.append(i)
-                    idxs.append(f)
-                    frames.append(
-                        bytes(payload[f * stride:(f + 1) * stride])
-                    )
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "frame_bytes": frames}
-            )
-
-    return df.mapInPandas(sample_batches, schema)
+    return _map_payloads(df, id_col, payload_col, [
+        ("frame_idx", LongType()),
+        ("frame_bytes", df.schema[payload_col].dataType),
+    ], frames)
 
 
 def video_pixel_frames(
@@ -4879,38 +4344,33 @@ def video_pixel_frames(
     container.  Arrow-batched mapInPandas, one input row → many
     output rows; partitioning by payload row is the unit of
     parallelism, exactly like ``frame_sample``."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("frame_idx", LongType()),
-            StructField("width", LongType()),
-            StructField("height", LongType()),
-            StructField("pixels", BinaryType()),
+    def frames(payload) -> list[tuple]:
+        dec = compose_video_pixels(payload)
+        if dec is None:
+            return []
+        return [
+            (f, dec["width"], dec["height"], dec["frames"][f])
+            for f in range(0, len(dec["frames"]), every_n)
         ]
+
+    return _map_payloads(df, id_col, payload_col, [
+        ("frame_idx", LongType()), ("width", LongType()),
+        ("height", LongType()), ("pixels", BinaryType()),
+    ], frames)
+
+
+def _decode_pixels(payload: bytes | None) -> dict | None:
+    """The image pixel dispatch shared by ``resize_meta`` and
+    ``extract_features``."""
+    return (
+        decode_png_pixels(payload)
+        or _ppm_pixels(payload)
+        or decode_gif_pixels(payload)
+        or decode_tiff_pixels(payload)
+        or decode_jpeg_pixels(payload)
+        or decode_bmp_pixels(payload)
+        or decode_ico_pixels(payload)
     )
-
-    def compose_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, pxs = [], [], [], [], []
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                dec = compose_video_pixels(payload)
-                if dec is None:
-                    continue
-                for f in range(0, len(dec["frames"]), every_n):
-                    ids.append(i)
-                    idxs.append(f)
-                    ws.append(dec["width"])
-                    hs.append(dec["height"])
-                    pxs.append(dec["frames"][f])
-            yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "width": ws,
-                 "height": hs, "pixels": pxs}
-            )
-
-    return df.mapInPandas(compose_batches, schema)
 
 
 def resize_meta(
@@ -4935,61 +4395,31 @@ def resize_meta(
     from-spec T.81 Huffman + IDCT).  Every image format this engine
     recognizes now pixel-decodes codec-free; the payload-prefix stub
     remains only for unrecognized payloads."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("width", IntegerType()),
-            StructField("height", IntegerType()),
-            StructField("out_width", IntegerType()),
-            StructField("out_height", IntegerType()),
-            StructField("thumb", df.schema[payload_col].dataType),
-        ]
-    )
+    def resize(payload) -> tuple:
+        p = payload or b""
+        img = decode_image(p)
+        if img is not None:  # real header decode
+            w, h = img["width"], img["height"]
+        else:
+            # STUB for codec formats: dims from the byte length
+            w = 64 + (len(p) % 1920)
+            h = 64 + ((len(p) * 7) % 1080)
+        scale = min(1.0, max_side / max(w, h))
+        ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
+        pix = _decode_pixels(p)
+        if pix is not None:  # REAL resampled pixel bytes
+            thumb = _nn_resize(
+                pix["pixels"], w, h, pix["channels"], ow, oh
+            )
+        else:  # labeled stub for entropy-coded formats
+            thumb = bytes(p[:32])
+        return w, h, ow, oh, thumb
 
-    def resize_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {k: [] for k in (
-                id_col, "width", "height", "out_width", "out_height",
-                "thumb",
-            )}
-            for i, payload in zip(pdf[id_col], pdf[payload_col]):
-                p = payload or b""
-                img = decode_image(p)
-                if img is not None:  # real header decode
-                    w, h = img["width"], img["height"]
-                else:
-                    # STUB for codec formats: dims from the byte length
-                    w = 64 + (len(p) % 1920)
-                    h = 64 + ((len(p) * 7) % 1080)
-                scale = min(1.0, max_side / max(w, h))
-                ow, oh = max(1, int(w * scale)), max(1, int(h * scale))
-                pix = (
-                    decode_png_pixels(p)
-                    or _ppm_pixels(p)
-                    or decode_gif_pixels(p)
-                    or decode_tiff_pixels(p)
-                    or decode_jpeg_pixels(p)
-                    or decode_bmp_pixels(p)
-                    or decode_ico_pixels(p)
-                )
-                if pix is not None:  # REAL resampled pixel bytes
-                    thumb = _nn_resize(
-                        pix["pixels"], w, h, pix["channels"], ow, oh
-                    )
-                else:  # labeled stub for entropy-coded formats
-                    thumb = bytes(p[:32])
-                rows[id_col].append(i)
-                rows["width"].append(w)
-                rows["height"].append(h)
-                rows["out_width"].append(ow)
-                rows["out_height"].append(oh)
-                rows["thumb"].append(thumb)
-            yield pd.DataFrame(rows)
-
-    return df.mapInPandas(resize_batches, schema)
+    return _map_payloads(df, id_col, payload_col, [
+        ("width", IntegerType()), ("height", IntegerType()),
+        ("out_width", IntegerType()), ("out_height", IntegerType()),
+        ("thumb", df.schema[payload_col].dataType),
+    ], resize)
 
 
 def extract_features(
@@ -5017,25 +4447,10 @@ def extract_features(
     `embeddings.embedding` schema, so the result feeds
     ann.with_buckets / ann_topk unchanged — binary column in,
     similarity-searchable vector out."""
-    id_field = df.schema[id_col]
-    schema = StructType(
-        [
-            StructField(id_col, id_field.dataType),
-            StructField("embedding", ArrayType(FloatType())),
-        ]
-    )
     grid = max(1, int(dim ** 0.5))
 
     def embed(payload: bytes) -> list[float]:
-        pix = (
-            decode_png_pixels(payload)
-            or _ppm_pixels(payload)
-            or decode_gif_pixels(payload)
-            or decode_tiff_pixels(payload)
-            or decode_jpeg_pixels(payload)
-            or decode_bmp_pixels(payload)
-            or decode_ico_pixels(payload)
-        )
+        pix = _decode_pixels(payload)
         if pix is not None:  # REAL grid-pooled luminance features
             w, h, ch = pix["width"], pix["height"], pix["channels"]
             data = pix["pixels"]
@@ -5061,15 +4476,6 @@ def extract_features(
         counts = np.bincount(idx, minlength=dim)[:dim]
         return counts.astype(np.float64).tolist()
 
-    def feature_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "embedding": pdf[payload_col].map(embed),
-                }
-            )
-
-    return df.mapInPandas(feature_batches, schema)
+    return _map_payloads(df, id_col, payload_col,
+                         [("embedding", ArrayType(FloatType()))],
+                         lambda p: (embed(p),))

@@ -62,10 +62,9 @@ def test_media_decoders_never_raise():
         decode_wav_samples,
     )
 
-    rng = random.Random(20260818)
+    from __spark_entry__ import _box, _ima_block, _ms_block, _ulaw_enc
 
-    def _box(t: bytes, body: bytes = b"") -> bytes:
-        return (8 + len(body)).to_bytes(4, "big") + t + body
+    rng = random.Random(20260818)
 
     # structurally valid MP4 whose moov holds a HEADER-ONLY mvhd
     # ending exactly at payload end — indexed past the buffer before
@@ -240,12 +239,7 @@ def test_media_decoders_never_raise():
 
     # compressed-WAV seeds: mutations hit the G.711 table path and
     # the IMA/MS ADPCM block walks (header indices, fact truncation)
-    from test_multimodal import (
-        _ima_enc_block,
-        _ms_enc_block,
-        _ulaw_enc,
-        _wav_coded,
-    )
+    from test_multimodal import _wav_coded
 
     ulaw_wav = _wav_coded(
         7, 1, 8000, 8,
@@ -254,7 +248,7 @@ def test_media_decoders_never_raise():
     )
     ima_wav = _wav_coded(
         0x11, 2, 8000, 4, 24,
-        _ima_enc_block(
+        _ima_block(
             [[(k * 700 + c) % 4000 - 2000 for k in range(17)]
              for c in range(2)], 2, 24, (3, 40),
         )[0],
@@ -262,7 +256,7 @@ def test_media_decoders_never_raise():
     )
     ms_wav = _wav_coded(
         2, 1, 11025, 4, 15,
-        _ms_enc_block(
+        _ms_block(
             [[(k * 450) % 3000 - 1500 for k in range(18)]],
             1, 15, 0, 64,
         )[0],
@@ -304,7 +298,7 @@ def test_media_decoders_never_raise():
     # decode_aiff_samples
     import struct as _struct
 
-    from test_multimodal import _aiff, _mkv, _ulaw_enc
+    from test_multimodal import _aiff, _mkv
 
     aiff_seed = _aiff(
         2, 44100, 16,
@@ -407,6 +401,74 @@ def test_media_decoders_never_raise():
         for fn in decoders:
             out = fn(blob)
             assert out is None or isinstance(out, dict)
+
+
+def test_never_raise_boundary(monkeypatch):
+    """Every structure walk reads through the one bounds check
+    (``multimodal._need``).  A Malformed raised there, deep inside a
+    walk, comes back as None from each public decoder and frame
+    extractor; a MemoryError raised at the same point propagates
+    through the boundary — the capped sweeps rely on seeing it."""
+    import pytest
+    from test_multimodal import (
+        _aiff,
+        _bmp_px,
+        _gif_anim,
+        _gif_px,
+        _ico,
+        _ico_dib,
+        _jpeg_enc,
+        _mkv,
+        _mkv_block,
+        _mp4,
+        _mp4_frames,
+        _png_raw,
+        _tiff_px,
+        _wav,
+    )
+
+    import arachne_spark.operators.multimodal as mm
+
+    png = _png_raw(4, 3, 2, lambda x, y: (x * 40, y * 50, 7))
+    gif = _gif_px(3, 2, [0, 1, 2, 2, 1, 0], [(255, 0, 0), (0, 255, 0),
+                                             (0, 0, 255)])
+    anim = _gif_anim(  # frame k sits at left = k
+        [(3, 2, [0, 1, 1, 0, 0, 1], None, False),
+         (2, 2, [1, 0, 0, 1], None, False)],
+        [(255, 0, 0), (0, 0, 255)],
+    )
+    cases = [
+        (mm.decode_image, png), (mm.decode_png_pixels, png),
+        (mm.decode_gif_pixels, gif), (mm.compose_video_pixels, anim),
+        (mm._gif_video_frames, anim),
+        (mm.decode_tiff_pixels, _tiff_px(2, 2, bytes(range(12)))),
+        (mm.decode_bmp_pixels, _bmp_px(2, 2, bytes(range(12)))),
+        (mm.decode_ico_pixels,
+         _ico([_ico_dib(2, 2, bytes(range(12)))])),
+        (mm.decode_jpeg_pixels, _jpeg_enc(bytes([90] * 64), 8, 8, 1)),
+        (mm.decode_audio, _wav()), (mm.decode_wav_samples, _wav()),
+        (mm.decode_aiff_samples,
+         _aiff(1, 8000, 16, bytes(range(40)), 20)),
+        (mm.decode_video, _mp4()),
+        (mm._mp4_video_frames, _mp4_frames([b"abc", b"defg"])),
+        (mm._mkv_video_frames,
+         _mkv(cluster_body=_mkv_block(1, [bytes(range(9))]))),
+    ]
+    for fn, blob in cases:
+        assert fn(blob) is not None, fn.__name__
+
+    def raising(exc):
+        def need(count, limit):
+            raise exc
+        return need
+
+    monkeypatch.setattr(mm, "_need", raising(mm.Malformed("deep")))
+    for fn, blob in cases:
+        assert fn(blob) is None, fn.__name__
+    monkeypatch.setattr(mm, "_need", raising(MemoryError()))
+    for fn, blob in cases:
+        with pytest.raises(MemoryError):
+            fn(blob)
 
 
 def test_exhaustive_sweeps_capped():

@@ -7,6 +7,36 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
+from __spark_entry__ import (
+    _ENC_ADAM7,
+    _alaw_enc,
+    _alaw_lin,
+    _avi,
+    _bih,
+    _box,
+    _ebml_el,
+    _ext80,
+    _heif,
+    _ico,
+    _ico_dib,
+    _ima_block,
+    _mkv_block,
+    _mp4_frames,
+    _ms_block,
+    _png_chunk,
+    _png_file,
+    _png_filter,
+    _png_raw,
+    _riff,
+    _tiff_lzw_enc,
+    _tiff_file,
+    _tiff_px,
+    _ulaw_enc,
+    _ulaw_lin,
+    _wav_coded,
+    _webp,
+    _wrap_bmp,
+)
 from arachne_spark.operators.multimodal import (
     binary_meta,
     decode_image,
@@ -273,109 +303,6 @@ def test_decode_image_real_formats():
     assert decode_image(None) is None
 
 
-def _webp(w, h, kind="lossy", keyframe=True, start_code=True,
-          version=0, riff_pad=0, lead_junk=False):
-    """Build a WebP container: simple-lossy ('VP8 '), simple-lossless
-    (VP8L) or extended (VP8X) leading chunk, RIFF size covering the
-    padded chunk table exactly (+riff_pad to corrupt it)."""
-    def chunk(fourcc, body):
-        c = fourcc + len(body).to_bytes(4, "little") + body
-        return c + (b"\x00" if len(body) % 2 else b"")
-
-    if kind == "lossy":
-        tag = b"\x00\x00\x00" if keyframe else b"\x01\x00\x00"
-        sc = b"\x9d\x01\x2a" if start_code else b"\x9d\x01\x2b"
-        body = tag + sc + w.to_bytes(2, "little") + h.to_bytes(2, "little")
-        chunks = chunk(b"VP8 ", body + b"\x00\x00")
-    elif kind == "lossless":
-        bits = (w - 1) | ((h - 1) << 14) | (version << 29)
-        chunks = chunk(b"VP8L", b"\x2f" + bits.to_bytes(4, "little"))
-    else:  # extended
-        body = (b"\x00" + b"\x00\x00\x00"
-                + (w - 1).to_bytes(3, "little")
-                + (h - 1).to_bytes(3, "little"))
-        chunks = chunk(b"VP8X", body)
-    if lead_junk:
-        chunks = chunk(b"JUNK", b"xy") + chunks
-    riff = b"WEBP" + chunks
-    return b"RIFF" + (len(riff) + riff_pad).to_bytes(4, "little") + riff
-
-
-def _heif_box(btype, body=b""):
-    return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-
-def _heif(w, h, brand=b"avif", compat=(b"mif1",), with_pitm=True,
-          pitm_id=1, ipma_flags=0, essential=False,
-          extra_ispe_first=None):
-    """Build a minimal HEIF/AVIF still image: ftyp + meta(pitm, iprp(
-    ipco(ispe...), ipma)).  extra_ispe_first prepends a decoy ispe so
-    the pitm→ipma association must pick the SECOND property."""
-    ispes = []
-    if extra_ispe_first is not None:
-        dw, dh = extra_ispe_first
-        ispes.append(_heif_box(
-            b"ispe", b"\x00" * 4 + dw.to_bytes(4, "big")
-            + dh.to_bytes(4, "big")))
-    ispes.append(_heif_box(
-        b"ispe", b"\x00" * 4 + w.to_bytes(4, "big")
-        + h.to_bytes(4, "big")))
-    ipco = _heif_box(b"ipco", b"".join(ispes))
-    idx = len(ispes)  # associate the REAL ispe (1-based)
-    if ipma_flags & 1:
-        assoc = ((0x8000 if essential else 0) | idx).to_bytes(2, "big")
-    else:
-        assoc = bytes([(0x80 if essential else 0) | idx])
-    entry = pitm_id.to_bytes(2, "big") + bytes([1]) + assoc
-    ipma = _heif_box(
-        b"ipma", bytes([0]) + ipma_flags.to_bytes(3, "big")
-        + (1).to_bytes(4, "big") + entry)
-    meta_kids = b""
-    if with_pitm:
-        meta_kids += _heif_box(
-            b"pitm", b"\x00" * 4 + pitm_id.to_bytes(2, "big"))
-    meta_kids += _heif_box(b"iprp", ipco + ipma)
-    meta = _heif_box(b"meta", b"\x00" * 4 + meta_kids)
-    ftyp = _heif_box(
-        b"ftyp", brand + b"\x00" * 4 + b"".join(compat))
-    return ftyp + meta
-
-
-def _ico_dib(w, h, rgb, clr_used_override=None):
-    """One ICO directory image as a 24-bit DIB: BITMAPINFOHEADER with
-    DOUBLED height, bottom-up BGR rows, then an all-opaque 1-bit AND
-    mask."""
-    import struct
-
-    row_len = ((w * 3 + 3) // 4) * 4
-    rows = b""
-    for y in range(h - 1, -1, -1):
-        r = b"".join(
-            bytes([rgb[(y * w + x) * 3 + 2], rgb[(y * w + x) * 3 + 1],
-                   rgb[(y * w + x) * 3]])
-            for x in range(w))
-        rows += r + b"\x00" * (row_len - len(r))
-    mask = b"\x00" * (((w + 31) // 32) * 4 * h)
-    hdr = struct.pack("<IiiHHIIiiII", 40, w, 2 * h, 1, 24, 0, 0,
-                      0, 0, clr_used_override or 0, 0)
-    return hdr + rows + mask
-
-
-def _ico(blobs, kind=1):
-    """ICO/CUR container around raw entry blobs (PNGs or DIBs)."""
-    n = len(blobs)
-    off0 = 6 + 16 * n
-    dirs, datas = b"", b""
-    for b in blobs:
-        dirs += (bytes([0, 0, 0, 0]) + (1).to_bytes(2, "little")
-                 + (24).to_bytes(2, "little")
-                 + len(b).to_bytes(4, "little")
-                 + (off0 + len(datas)).to_bytes(4, "little"))
-        datas += b
-    return (b"\x00\x00" + kind.to_bytes(2, "little")
-            + n.to_bytes(2, "little") + dirs + datas)
-
-
 def test_decode_ico():
     """ICO/CUR favicon decode is REAL: the ICONDIR walk validates
     every entry, reports the LARGEST entry's dims, and pixel decode
@@ -534,20 +461,14 @@ def test_webp_heif_fixture_decodes():
 def _png(w, h, depth=8, color=2, crc_ok=True, with_idat=True,
          compression=0):
     import struct
-    import zlib
-
-    def chunk(ctype, data, good=True):
-        crc = zlib.crc32(ctype + data)
-        if not good:
-            crc ^= 0xFFFF
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", crc))
 
     ihdr = struct.pack(">IIBBBBB", w, h, depth, color, compression, 0, 0)
-    body = chunk(b"IHDR", ihdr, good=crc_ok)
+    body = _png_chunk(b"IHDR", ihdr)
+    if not crc_ok:  # flip the CRC's low 16 bits
+        body = body[:-2] + bytes(b ^ 0xFF for b in body[-2:])
     if with_idat:
-        body += chunk(b"IDAT", b"\x00" * 8)
-    body += chunk(b"IEND", b"")
+        body += _png_chunk(b"IDAT", b"\x00" * 8)
+    body += _png_chunk(b"IEND", b"")
     return b"\x89PNG\r\n\x1a\n" + body
 
 
@@ -581,28 +502,6 @@ def test_decode_image_png():
     bogus = (whole[:33]
              + _struct.pack(">I", 1 << 30) + b"IDAT" + b"\x00" * 12)
     assert decode_image(bogus) is None
-
-
-def _png_raw(w, h, color, pixel):
-    """Valid PNG with REAL zlib pixel data, filter 0 on every row
-    (the all-filters encoding path is covered by the q45 fixture
-    roundtrip below); ``pixel(x, y) -> tuple of channel bytes``."""
-    import struct
-    import zlib
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-
-    scan = bytearray()
-    for y in range(h):
-        scan.append(0)
-        for x in range(w):
-            scan.extend(pixel(x, y))
-    ihdr = struct.pack(">IIBBBBB", w, h, 8, color, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(bytes(scan)))
-            + chunk(b"IEND", b""))
 
 
 def test_decode_png_pixels():
@@ -639,43 +538,19 @@ def test_decode_png_pixels():
     assert decode_png_pixels(_png(4, 4, depth=16, color=6)) is None
     assert decode_png_pixels(_png(4, 4, depth=4, color=3)) is None
     assert decode_png_pixels(_png(4, 4)) is None  # IDAT not valid zlib
-    import zlib as _z
-
     # valid zlib but wrong inflated length
-    import struct as _s
-
-    def _chunk(t, d):
-        return _s.pack(">I", len(d)) + t + d + _s.pack(
-            ">I", _z.crc32(t + d))
-
-    short = (b"\x89PNG\r\n\x1a\n"
-             + _chunk(b"IHDR", _s.pack(">IIBBBBB", 4, 4, 8, 2, 0, 0, 0))
-             + _chunk(b"IDAT", _z.compress(b"\x00" * 7))
-             + _chunk(b"IEND", b""))
+    short = _png_file(4, 4, 8, 2, b"\x00" * 7)
     assert decode_png_pixels(short) is None
     # bad filter byte
-    bad = (b"\x89PNG\r\n\x1a\n"
-           + _chunk(b"IHDR", _s.pack(">IIBBBBB", 1, 1, 8, 0, 0, 0, 0))
-           + _chunk(b"IDAT", _z.compress(b"\x07\x00"))
-           + _chunk(b"IEND", b""))
+    bad = _png_file(1, 1, 8, 0, b"\x07\x00")
     assert decode_png_pixels(bad) is None
     assert decode_png_pixels(None) is None
 
 
 def _png_scan(w, h, depth, color, rows):
     """Valid PNG from pre-packed scanline bytes (filter 0 rows)."""
-    import struct
-    import zlib
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
-
     scan = b"".join(b"\x00" + bytes(r) for r in rows)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, 0)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"IDAT", zlib.compress(scan))
-            + chunk(b"IEND", b""))
+    return _png_file(w, h, depth, color, scan)
 
 
 def test_decode_png_16bit_and_subbyte_grey():
@@ -716,12 +591,6 @@ def test_decode_png_16bit_and_subbyte_grey():
 def _png_pal(w, h, depth, indices, palette, sub_filter=False):
     """Valid palette PNG (color type 3): PLTE + packed MSB-first
     indices; filter 0 rows, or filter 1 (Sub, bpp=1) when asked."""
-    import struct
-    import zlib
-
-    def chunk(ctype, data):
-        return (struct.pack(">I", len(data)) + ctype + data
-                + struct.pack(">I", zlib.crc32(ctype + data)))
 
     per_byte = 8 // depth
     scan = bytearray()
@@ -739,12 +608,8 @@ def _png_pal(w, h, depth, indices, palette, sub_filter=False):
         else:
             scan.append(0)
             scan.extend(packed)
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, 3, 0, 0, 0)
     plte = bytes(v for rgb in palette for v in rgb)
-    return (b"\x89PNG\r\n\x1a\n" + chunk(b"IHDR", ihdr)
-            + chunk(b"PLTE", plte)
-            + chunk(b"IDAT", zlib.compress(bytes(scan)))
-            + chunk(b"IEND", b""))
+    return _png_file(w, h, depth, 3, scan, plte=plte)
 
 
 def test_decode_png_palette_pixels():
@@ -772,24 +637,8 @@ def test_decode_png_palette_pixels():
     bad = _png_pal(4, 2, 8, [3] * 8, pal[:2])
     assert decode_png_pixels(bad) is None
     # PLTE missing entirely
-    import zlib as _z
-    import struct as _s
-
-    def _chunk(t, data):
-        return (_s.pack(">I", len(data)) + t + data
-                + _s.pack(">I", _z.crc32(t + data)))
-
-    no_plte = (b"\x89PNG\r\n\x1a\n"
-               + _chunk(b"IHDR", _s.pack(">IIBBBBB", 2, 2, 8, 3, 0, 0, 0))
-               + _chunk(b"IDAT", _z.compress(b"\x00\x00\x00" * 2))
-               + _chunk(b"IEND", b""))
+    no_plte = _png_file(2, 2, 8, 3, b"\x00\x00\x00" * 2)
     assert decode_png_pixels(no_plte) is None
-
-
-# Adam7 pass origins/steps, PNG spec §8.2 — kept independent of the
-# decoder's table so a table typo cannot self-verify
-_ADAM7 = [(0, 0, 8, 8), (4, 0, 8, 8), (0, 4, 4, 8), (2, 0, 4, 4),
-          (0, 2, 2, 4), (1, 0, 2, 2), (0, 1, 1, 2)]
 
 
 def _png_adam7(w, h, depth, color, sample, palette=None):
@@ -798,45 +647,11 @@ def _png_adam7(w, h, depth, color, sample, palette=None):
     concatenated and deflated.  ``sample(x, y)`` returns the tuple of
     channel values (a 1-tuple index/grey value for packed formats)."""
     import struct
-    import zlib
-
-    def chunk(t, d):
-        return (struct.pack(">I", len(d)) + t + d
-                + struct.pack(">I", zlib.crc32(t + d)))
-
-    def paeth(a, b, c):
-        p = a + b - c
-        pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-        return a if pa <= pb and pa <= pc else (b if pb <= pc else c)
-
-    def filt(rows, stride, bpp):
-        out, prev = bytearray(), bytes(stride)
-        for y, row in enumerate(rows):
-            ft = y % 5
-            out.append(ft)
-            enc = bytearray(stride)
-            for x in range(stride):
-                a = row[x - bpp] if x >= bpp else 0
-                b = prev[x]
-                c = prev[x - bpp] if x >= bpp else 0
-                if ft == 0:
-                    enc[x] = row[x]
-                elif ft == 1:
-                    enc[x] = (row[x] - a) & 0xFF
-                elif ft == 2:
-                    enc[x] = (row[x] - b) & 0xFF
-                elif ft == 3:
-                    enc[x] = (row[x] - ((a + b) >> 1)) & 0xFF
-                else:
-                    enc[x] = (row[x] - paeth(a, b, c)) & 0xFF
-            out += enc
-            prev = bytes(row)
-        return out
 
     ch = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}[color]
     packed = color == 3 or depth < 8
     stream = bytearray()
-    for x0, y0, dx, dy in _ADAM7:
+    for x0, y0, dx, dy in _ENC_ADAM7:
         pw = (w - x0 + dx - 1) // dx
         ph = (h - y0 + dy - 1) // dy
         if pw <= 0 or ph <= 0:
@@ -863,14 +678,11 @@ def _png_adam7(w, h, depth, color, sample, palette=None):
                             row += struct.pack(">H", v)
                 rows.append(row)
         stride = (pw * depth + 7) // 8 if packed else pw * ch * (depth // 8)
-        stream += filt(rows, stride, 1 if packed else ch * (depth // 8))
-    ihdr = struct.pack(">IIBBBBB", w, h, depth, color, 0, 0, 1)
-    body = chunk(b"IHDR", ihdr)
-    if palette is not None:
-        body += chunk(b"PLTE", bytes(v for rgb in palette for v in rgb))
-    body += (chunk(b"IDAT", zlib.compress(bytes(stream)))
-             + chunk(b"IEND", b""))
-    return b"\x89PNG\r\n\x1a\n" + body
+        stream += _png_filter(rows, stride,
+                              1 if packed else ch * (depth // 8))
+    plte = (None if palette is None
+            else bytes(v for rgb in palette for v in rgb))
+    return _png_file(w, h, depth, color, stream, interlace=1, plte=plte)
 
 
 def test_decode_png_adam7_interlaced():
@@ -927,25 +739,15 @@ def test_decode_png_adam7_interlaced():
     assert d["pixels"] == bytes(
         g[(x, y)] * 85 for y in range(h) for x in range(w))
     # an interlaced stream with trailing/missing pass bytes → None
-    import struct as _s
-    import zlib as _z
-
-    def _chunk(t, data):
-        return (_s.pack(">I", len(data)) + t + data
-                + _s.pack(">I", _z.crc32(t + data)))
-
     good = _png_adam7(5, 5, 8, 2, lambda x, y: (1, 2, 3))
     raw_len = sum(
         ((5 - x0 + dx - 1) // dx) * 3 + 1
-        for x0, y0, dx, dy in _ADAM7
+        for x0, y0, dx, dy in _ENC_ADAM7
         for _ in range((5 - y0 + dy - 1) // dy)
         if (5 - x0 + dx - 1) // dx > 0
     )
     for bad_len in (raw_len - 1, raw_len + 1):
-        bad = (b"\x89PNG\r\n\x1a\n"
-               + _chunk(b"IHDR", _s.pack(">IIBBBBB", 5, 5, 8, 2, 0, 0, 1))
-               + _chunk(b"IDAT", _z.compress(b"\x00" * bad_len))
-               + _chunk(b"IEND", b""))
+        bad = _png_file(5, 5, 8, 2, b"\x00" * bad_len, interlace=1)
         assert decode_png_pixels(bad) is None
     assert decode_png_pixels(good) is not None
 
@@ -1168,6 +970,34 @@ def test_decode_image_jpeg():
     assert decode_image(b"\xff\xd8not really a jpeg body") is None
 
 
+def _enc_zigzag() -> tuple:
+    """T.81 Figure A.6 zigzag order, walked independently of the
+    decoder's literal table: anti-diagonals of the 8x8 block,
+    alternating direction."""
+    order = []
+    for d in range(15):
+        cells = [y * 8 + d - y for y in range(8) if 0 <= d - y < 8]
+        order += cells if d % 2 else cells[::-1]
+    return tuple(order)
+
+
+def _enc_dct_basis():
+    """The orthonormal 8x8 DCT-II basis (T.81 A.3.3), the encoders'
+    own copy."""
+    import numpy as np
+
+    c = np.zeros((8, 8))
+    for u in range(8):
+        cu = (1 / np.sqrt(2)) if u == 0 else 1.0
+        for x in range(8):
+            c[u, x] = 0.5 * cu * np.cos((2 * x + 1) * u * np.pi / 16)
+    return c
+
+
+_ENC_ZIGZAG = _enc_zigzag()
+_ENC_DCT = _enc_dct_basis()
+
+
 def _jpeg_canonical_table(symbols):
     """All symbols at one code length L with 2^L > len(symbols): a
     valid canonical JPEG table (the all-ones code stays unused)."""
@@ -1191,7 +1021,6 @@ def _jpeg_enc(pixels, w, h, channels, subsample=False, dri=0):
     generic canonical decode."""
     import numpy as np
 
-    from arachne_spark.operators.multimodal import _JPEG_DCT_C, _JPEG_ZIGZAG
 
     arr = np.frombuffer(bytes(pixels), dtype=np.uint8).astype(np.float64)
     arr = arr.reshape(h, w, channels)
@@ -1228,9 +1057,9 @@ def _jpeg_enc(pixels, w, h, channels, subsample=False, dri=0):
         for by in range(th // 8):
             for bx in range(tw // 8):
                 blk = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
-                coef = _JPEG_DCT_C @ blk @ _JPEG_DCT_C.T
+                coef = _ENC_DCT @ blk @ _ENC_DCT.T
                 zigs[by, bx] = np.round(
-                    coef.flat[list(_JPEG_ZIGZAG)]
+                    coef.flat[list(_ENC_ZIGZAG)]
                 ).astype(np.int64)
         blocks.append(zigs)
 
@@ -1363,11 +1192,6 @@ def _jpeg_prog_enc(pixels, w, h, channels, scans, subsample=False,
     distinct construction."""
     import numpy as np
 
-    from arachne_spark.operators.multimodal import (
-        _JPEG_DCT_C,
-        _JPEG_ZIGZAG,
-    )
-
     def cat(v):
         t, a = 0, abs(int(v))
         while a:
@@ -1390,7 +1214,7 @@ def _jpeg_prog_enc(pixels, w, h, channels, scans, subsample=False,
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
     zigs, tights = [], []
-    zzl = list(_JPEG_ZIGZAG)
+    zzl = list(_ENC_ZIGZAG)
     for pi, plane in enumerate(planes):
         ch, cv = samp[pi]
         if (ch, cv) != (hmax, vmax):
@@ -1408,7 +1232,7 @@ def _jpeg_prog_enc(pixels, w, h, channels, scans, subsample=False,
             for bx in range(tw1 // 8):
                 blk = plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] - 128.0
                 zig[by, bx] = np.round(
-                    (_JPEG_DCT_C @ blk @ _JPEG_DCT_C.T).flat[zzl]
+                    (_ENC_DCT @ blk @ _ENC_DCT.T).flat[zzl]
                 ).astype(np.int64)
         zigs.append(zig)
     out = bytearray(b"\xff\xd8")
@@ -1995,60 +1819,6 @@ def test_decode_wav_samples_and_features(spark):
     assert "BatchEvalPython" not in plan
 
 
-# --- compressed-WAV twins (independent encoders, written from the
-# specs: Sun g711.c-style G.711 companders, IMA Digital Audio Pack
-# quantizer, MS ADPCM block pseudocode) ---------------------------
-
-_TEST_IMA_STEPS = (
-    7, 8, 9, 10, 11, 12, 13, 14, 16, 17, 19, 21, 23, 25, 28, 31,
-    34, 37, 41, 45, 50, 55, 60, 66, 73, 80, 88, 97, 107, 118, 130,
-    143, 157, 173, 190, 209, 230, 253, 279, 307, 337, 371, 408, 449,
-    494, 544, 598, 658, 724, 796, 876, 963, 1060, 1166, 1282, 1411,
-    1552, 1707, 1878, 2066, 2272, 2499, 2749, 3024, 3327, 3660, 4026,
-    4428, 4871, 5358, 5894, 6484, 7132, 7845, 8630, 9493, 10442,
-    11487, 12635, 13899, 15289, 16818, 18500, 20350, 22385, 24623,
-    27086, 29794, 32767,
-)
-_TEST_IMA_INDEX = (-1, -1, -1, -1, 2, 4, 6, 8)
-
-
-def _ulaw_enc(x):
-    sign = 0x80 if x < 0 else 0
-    if x < 0:
-        x = -x
-    x = min(x, 32635) + 0x84
-    e, mask = 7, 0x4000
-    while e > 0 and not (x & mask):
-        e -= 1
-        mask >>= 1
-    return ~(sign | (e << 4) | ((x >> (e + 3)) & 0x0F)) & 0xFF
-
-
-def _alaw_enc(x):
-    mask = 0xD5 if x >= 0 else 0x55
-    x >>= 3  # 16-bit → 13-bit domain
-    if mask == 0x55:
-        x = -x - 1
-    ends = (0x1F, 0x3F, 0x7F, 0xFF, 0x1FF, 0x3FF, 0x7FF, 0xFFF)
-    seg = 0
-    while seg < 8 and x > ends[seg]:
-        seg += 1
-    if seg >= 8:
-        return 0x7F ^ mask
-    aval = seg << 4
-    aval |= (x >> 1) & 0x0F if seg < 2 else (x >> seg) & 0x0F
-    return aval ^ mask
-
-
-def _ebml_el(eid: bytes, body: bytes) -> bytes:
-    """Encode one EBML element: raw ID bytes (marker included) +
-    minimal-width size vint + body."""
-    size, ln = len(body), 1
-    while size >= (1 << (7 * ln)) - 1:
-        ln += 1
-    return eid + (size | (1 << (7 * ln))).to_bytes(ln, "big") + body
-
-
 def _mkv(doctype=b"webm", w=640, h=360, scale=1_000_000,
          duration=4000.0, dur_width=8, n_clusters=1,
          unknown_segment=False, audio_first=False, trailing=b"",
@@ -2103,56 +1873,6 @@ def _mkv(doctype=b"webm", w=640, h=360, scale=1_000_000,
     return hdr + seg + trailing
 
 
-def _mkv_block(track, frames, lacing="none", group=False):
-    """Encode one Matroska SimpleBlock (or BlockGroup>Block when
-    group=True) element holding `frames` with the given lacing mode
-    ('none' | 'xiph' | 'fixed' | 'ebml')."""
-    def vint(v, ln=None):
-        if ln is None:
-            ln = 1
-            while v >= (1 << (7 * ln)) - 1:
-                ln += 1
-        return (v | (1 << (7 * ln))).to_bytes(ln, "big")
-
-    lbits = {"none": 0, "xiph": 1, "fixed": 2, "ebml": 3}[lacing]
-    flags = (0x80 if not group else 0) | (lbits << 1)
-    body = vint(track) + b"\x00\x00" + bytes([flags])
-    if lacing == "none":
-        assert len(frames) == 1
-        body += frames[0]
-    else:
-        body += bytes([len(frames) - 1])
-        if lacing == "xiph":
-            for f in frames[:-1]:
-                sz = len(f)
-                body += b"\xff" * (sz // 255) + bytes([sz % 255])
-        elif lacing == "ebml":
-            body += vint(len(frames[0]), 2)
-            prev = len(frames[0])
-            for f in frames[1:-1]:
-                delta = len(f) - prev
-                prev = len(f)
-                body += ((delta + (1 << 13) - 1)
-                         | (1 << 14)).to_bytes(2, "big")
-        else:  # fixed: all frames must share a size
-            assert len({len(f) for f in frames}) == 1
-        body += b"".join(frames)
-    el = _ebml_el(b"\xa3" if not group else b"\xa1", body)
-    if group:
-        el = _ebml_el(b"\xa0", el)
-    return el
-
-
-def _ext80(rate: int) -> bytes:
-    """Encode a positive integer as the 80-bit IEEE extended float
-    AIFF's COMM sampleRate uses (explicit-integer-bit mantissa)."""
-    if rate == 0:
-        return bytes(10)
-    e = rate.bit_length() - 1
-    mant = rate << (63 - e)
-    return (16383 + e).to_bytes(2, "big") + mant.to_bytes(8, "big")
-
-
 def _aiff(ch, rate, bits, sound, n_frames, codec=None, ssnd_offset=0,
           size_delta=0, drop_ssnd=False, rate_bytes=None):
     """Build an AIFF (codec=None) or AIFF-C (codec fourcc) payload:
@@ -2168,120 +1888,16 @@ def _aiff(ch, rate, bits, sound, n_frames, codec=None, ssnd_offset=0,
     if codec is not None:
         comm += codec + b"\x04none\x00"  # pstring, even-padded
 
-    def chunk(cid, body):
-        c = cid + struct.pack(">I", len(body)) + body
-        return c + (b"\x00" if len(body) % 2 else b"")
-
-    body = ftype + chunk(b"COMM", comm)
+    body = ftype + _riff(b"COMM", comm, "big")
     if not drop_ssnd:
-        body += chunk(
+        body += _riff(
             b"SSND",
             struct.pack(">II", ssnd_offset, 0)
             + b"\x00" * ssnd_offset + sound,
+            "big",
         )
     return (b"FORM"
             + struct.pack(">I", len(body) + size_delta) + body)
-
-
-def _wav_coded(tag, ch, rate, bits, balign, data, fact=None):
-    import struct
-
-    fmt = struct.pack("<HHIIHH", tag, ch, rate, rate * balign,
-                      balign, bits)
-    body = b"WAVE"
-    body += b"fmt " + len(fmt).to_bytes(4, "little") + fmt
-    if fact is not None:
-        body += (b"fact" + (4).to_bytes(4, "little")
-                 + fact.to_bytes(4, "little"))
-    body += b"data" + len(data).to_bytes(4, "little") + data
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-
-def _ima_enc_block(samples, ch, balign, init_idx):
-    """Encode one IMA ADPCM block (samples = per-channel int16 lists,
-    all length spb) and return (block_bytes, per-channel reconstructed
-    samples) — the reconstruction tracks the quantizer exactly, so the
-    product decoder must reproduce it bit-for-bit."""
-    blk = bytearray()
-    pred = [s[0] for s in samples]
-    idx = list(init_idx)
-    recon = [[s[0]] for s in samples]
-    for c in range(ch):
-        blk += pred[c].to_bytes(2, "little", signed=True)
-        blk += bytes([idx[c], 0])
-    nibbles = [[] for _ in range(ch)]
-    for j in range(1, len(samples[0])):
-        for c in range(ch):
-            step = _TEST_IMA_STEPS[idx[c]]
-            diff = samples[c][j] - pred[c]
-            nib = 0
-            if diff < 0:
-                nib = 8
-                diff = -diff
-            if diff >= step:
-                nib |= 4
-                diff -= step
-            if diff >= step >> 1:
-                nib |= 2
-                diff -= step >> 1
-            if diff >= step >> 2:
-                nib |= 1
-            d = step >> 3
-            if nib & 4:
-                d += step
-            if nib & 2:
-                d += step >> 1
-            if nib & 1:
-                d += step >> 2
-            p = pred[c] - d if nib & 8 else pred[c] + d
-            p = max(-32768, min(32767, p))
-            pred[c] = p
-            idx[c] = max(0, min(88, idx[c] + _TEST_IMA_INDEX[nib & 7]))
-            recon[c].append(p)
-            nibbles[c].append(nib)
-    gi = 0
-    while gi < len(nibbles[0]):
-        for c in range(ch):
-            grp = nibbles[c][gi:gi + 8]
-            for k in range(0, 8, 2):
-                blk.append(grp[k] | (grp[k + 1] << 4))
-        gi += 8
-    assert len(blk) == balign
-    return bytes(blk), recon
-
-
-def _ms_enc_block(samples, ch, balign, ipred, idelta0):
-    """Encode one MS ADPCM block; returns (block_bytes, per-channel
-    reconstruction).  Predictor division truncates toward zero like
-    the spec's C pseudocode."""
-    from arachne_spark.operators.multimodal import _MS_ADAPT, _MS_COEFS
-
-    c1, c2 = _MS_COEFS[ipred]
-    blk = bytearray(bytes([ipred] * ch))
-    delta = [idelta0] * ch
-    for c in range(ch):
-        blk += delta[c].to_bytes(2, "little", signed=True)
-    for c in range(ch):
-        blk += samples[c][1].to_bytes(2, "little", signed=True)
-    for c in range(ch):
-        blk += samples[c][0].to_bytes(2, "little", signed=True)
-    chan = [[samples[c][0], samples[c][1]] for c in range(ch)]
-    nibs = []
-    for j in range(2, len(samples[0])):
-        for c in range(ch):
-            s = chan[c][-1] * c1 + chan[c][-2] * c2
-            predv = -((-s) >> 8) if s < 0 else s >> 8
-            snib = max(-8, min(7, round((samples[c][j] - predv)
-                                        / delta[c])))
-            v = max(-32768, min(32767, predv + delta[c] * snib))
-            chan[c].append(v)
-            nib = snib & 0x0F
-            nibs.append(nib)
-            delta[c] = max((_MS_ADAPT[nib] * delta[c]) >> 8, 16)
-    for k in range(0, len(nibs), 2):
-        blk.append((nibs[k] << 4) | nibs[k + 1])
-    assert len(blk) == balign
-    return bytes(blk), chan
 
 
 def test_decode_aiff(spark):
@@ -2293,7 +1909,6 @@ def test_decode_aiff(spark):
     import struct
 
     from arachne_spark.operators.multimodal import (
-        _ULAW_LINEAR,
         audio_features,
         decode_aiff_samples,
         decode_audio,
@@ -2345,7 +1960,7 @@ def test_decode_aiff(spark):
     mu = bytes(_ulaw_enc(v * 700 - 9000) for v in range(20))
     dmu = decode_aiff_samples(_aiff(2, 8000, 16, mu, 10,
                                     codec=b"ulaw"))
-    assert dmu["samples"] == [_ULAW_LINEAR[b] / 32768.0 for b in mu]
+    assert dmu["samples"] == [_ulaw_lin(b) / 32768.0 for b in mu]
 
     # non-integer 80-bit rate (22050.5) rounds (half-to-even);
     # zero/inf rates fail
@@ -2540,14 +2155,15 @@ def test_g711_tables_match_spec():
         assert _alaw_enc(_ALAW_LINEAR[code]) == code
         expect = 0xFF if code == 0x7F else code
         assert _ulaw_enc(_ULAW_LINEAR[code]) == expect
+        # ...and equal the expanders written from the spec formulas
+        assert _ULAW_LINEAR[code] == _ulaw_lin(code)
+        assert _ALAW_LINEAR[code] == _alaw_lin(code)
 
 
 def test_decode_wav_g711(spark):
     """G.711 mu-law/A-law WAVs decode to the exact table expansion,
     meta sizes them per-byte, and the features path accepts them."""
     from arachne_spark.operators.multimodal import (
-        _ALAW_LINEAR,
-        _ULAW_LINEAR,
         audio_features,
         decode_audio,
         decode_wav_samples,
@@ -2560,9 +2176,7 @@ def test_decode_wav_g711(spark):
     assert meta["n_samples"] == len(mu_data)
     assert meta["bits_per_sample"] == 8
     dec = decode_wav_samples(mu)
-    assert dec["samples"] == [
-        _ULAW_LINEAR[b] / 32768.0 for b in mu_data
-    ]
+    assert dec["samples"] == [_ulaw_lin(b) / 32768.0 for b in mu_data]
 
     al_data = bytes(_alaw_enc(v) for v in ramp) * 2  # stereo pairs
     al = _wav_coded(6, 2, 16000, 8, 2, al_data)
@@ -2570,7 +2184,7 @@ def test_decode_wav_g711(spark):
     assert meta["channels"] == 2
     assert meta["n_samples"] == len(al_data) // 2
     assert decode_wav_samples(al)["samples"] == [
-        _ALAW_LINEAR[b] / 32768.0 for b in al_data
+        _alaw_lin(b) / 32768.0 for b in al_data
     ]
 
     # G.711 must be 8-bit; odd data length can't split across channels
@@ -2591,6 +2205,7 @@ def test_decode_wav_ima_adpcm(spark):
     `fact` frame count on the last block."""
     import math
 
+    from __spark_entry__ import _ENC_IMA_INDEX, _ENC_IMA_STEPS
     from arachne_spark.operators.multimodal import (
         _IMA_INDEX,
         _IMA_STEPS,
@@ -2601,8 +2216,8 @@ def test_decode_wav_ima_adpcm(spark):
     )
 
     # transcription pin: product tables must equal the spec literals
-    assert _IMA_STEPS == _TEST_IMA_STEPS
-    assert _IMA_INDEX == _TEST_IMA_INDEX
+    assert _IMA_STEPS == _ENC_IMA_STEPS
+    assert _IMA_INDEX == _ENC_IMA_INDEX
 
     ch, balign = 2, 24            # 4*ch header + 2 groups → spb 17
     spb = 1 + (balign - 4 * ch) * 2 // ch
@@ -2611,10 +2226,10 @@ def test_decode_wav_ima_adpcm(spark):
         [int(12000 * math.sin(k / 3 + c)) for k in range(2 * spb)]
         for c in range(ch)
     ]
-    blk0, rec0 = _ima_enc_block(
+    blk0, rec0 = _ima_block(
         [w[:spb] for w in wave], ch, balign, (0, 0)
     )
-    blk1, rec1 = _ima_enc_block(
+    blk1, rec1 = _ima_block(
         [w[spb:] for w in wave], ch, balign, (24, 30)
     )
     fact = spb + 9                # last block logically short
@@ -2664,10 +2279,7 @@ def test_audio_samples_operator(spark):
 
     from pyspark.sql import functions as F
 
-    from arachne_spark.operators.multimodal import (
-        _ULAW_LINEAR,
-        audio_samples,
-    )
+    from arachne_spark.operators.multimodal import audio_samples
 
     frames = [(k * 1999) % 65536 - 32768 for k in range(40)]
     pcm = _wav(1, 8000, 16, 40,
@@ -2689,7 +2301,7 @@ def test_audio_samples_operator(spark):
     rows = {r["doc_id"]: r.asDict() for r in ints.collect()}
     assert rows[1]["ints"] == frames and rows[1]["n_frames"] == 40
     assert rows[2]["channels"] == 2 and rows[2]["n_frames"] == 13
-    assert rows[2]["ints"] == [_ULAW_LINEAR[b] for b in mu_data]
+    assert rows[2]["ints"] == [_ulaw_lin(b) for b in mu_data]
     assert not rows[3]["is_decodable"] and rows[3]["ints"] is None
     assert not rows[4]["is_decodable"]
     plan = out._jdf.queryExecution().executedPlan().toString()
@@ -2712,8 +2324,8 @@ def test_decode_wav_ms_adpcm():
     spb = 2 + (balign - 7 * ch) * 2 // ch
     assert spb == 18
     sig = [int(9000 * math.sin(k / 2.5)) for k in range(2 * spb)]
-    b0, r0 = _ms_enc_block([sig[:spb]], ch, balign, 0, 64)
-    b1, r1 = _ms_enc_block([sig[spb:]], ch, balign, 1, 200)
+    b0, r0 = _ms_block([sig[:spb]], ch, balign, 0, 64)
+    b1, r1 = _ms_block([sig[spb:]], ch, balign, 1, 200)
     wav = _wav_coded(2, ch, 11025, 4, balign, b0 + b1, fact=2 * spb)
     assert decode_audio(wav)["n_samples"] == 2 * spb
     assert decode_wav_samples(wav)["samples"] == [
@@ -2728,7 +2340,7 @@ def test_decode_wav_ms_adpcm():
         [int(7000 * math.cos(k / 2 + c)) for k in range(spb)]
         for c in range(ch)
     ]
-    blk, rec = _ms_enc_block(wave, ch, balign, 4, 100)
+    blk, rec = _ms_block(wave, ch, balign, 4, 100)
     fact = spb - 3
     wav2 = _wav_coded(2, ch, 22050, 4, balign, blk, fact=fact)
     assert decode_audio(wav2)["n_samples"] == fact
@@ -2784,6 +2396,33 @@ def _lzw_encode(indices, min_code):
     return bytes(out)
 
 
+def _gif_palette(palette) -> tuple[bytes, int]:
+    """A GIF colour table padded to a power of two (at least 2):
+    (table bytes, the 3-bit size field, 3*(2 << field) = len)."""
+    n_pal = max(2, 1 << max(1, (len(palette) - 1).bit_length()))
+    raw = bytes(
+        v for i in range(n_pal)
+        for v in (palette[i] if i < len(palette) else (0, 0, 0))
+    )
+    return raw, n_pal.bit_length() - 2
+
+
+def _gif_image_data(indices, w, h, pal_bits, interlace=False) -> bytes:
+    """One image's data: indices in interlaced row order when asked,
+    LZW min code size, ``_lzw_encode`` output in 255-byte sub-blocks,
+    0 terminator."""
+    if interlace:
+        order = (list(range(0, h, 8)) + list(range(4, h, 8))
+                 + list(range(2, h, 4)) + list(range(1, h, 2)))
+        indices = [indices[r * w + c] for r in order for c in range(w)]
+    min_code = max(2, pal_bits + 1)
+    lzw = _lzw_encode(indices, min_code)
+    return (bytes([min_code])
+            + b"".join(bytes([len(lzw[i:i + 255])]) + lzw[i:i + 255]
+                       for i in range(0, len(lzw), 255))
+            + b"\x00")
+
+
 def _gif_px(w, h, indices, palette, interlace=False):
     """Full valid GIF with REAL pixel data: global color table from
     ``palette`` (padded to a power of two), one image descriptor,
@@ -2791,30 +2430,13 @@ def _gif_px(w, h, indices, palette, interlace=False):
     order)."""
     import struct
 
-    n_pal = max(2, 1 << max(1, (len(palette) - 1).bit_length()))
-    pal = bytes(
-        v for i in range(n_pal)
-        for v in (palette[i] if i < len(palette) else (0, 0, 0))
-    )
-    gct_bits = n_pal.bit_length() - 2  # 3*(2 << bits) == 3*n_pal
-    if interlace:
-        order = (list(range(0, h, 8)) + list(range(4, h, 8))
-                 + list(range(2, h, 4)) + list(range(1, h, 2)))
-        indices = [
-            indices[r * w + c] for r in order for c in range(w)
-        ]
-    min_code = max(2, (n_pal - 1).bit_length())
-    lzw = _lzw_encode(indices, min_code)
-    blocks = b""
-    for i in range(0, len(lzw), 255):
-        chunk = lzw[i:i + 255]
-        blocks += bytes([len(chunk)]) + chunk
+    pal, gct_bits = _gif_palette(palette)
     return (
         b"GIF89a" + struct.pack("<HH", w, h)
         + bytes([0x80 | gct_bits, 0, 0]) + pal
         + b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
         + bytes([0x40 if interlace else 0x00])
-        + bytes([min_code]) + blocks + b"\x00"
+        + _gif_image_data(indices, w, h, gct_bits, interlace)
         + b"\x3b"
     )
 
@@ -2827,15 +2449,7 @@ def _gif_anim(frames, g_palette, loop_ext=True):
     (w, h, indices, local_palette_or_None, interlace)."""
     import struct
 
-    def pal_block(palette):
-        n_pal = max(2, 1 << max(1, (len(palette) - 1).bit_length()))
-        raw = bytes(
-            v for i in range(n_pal)
-            for v in (palette[i] if i < len(palette) else (0, 0, 0))
-        )
-        return raw, n_pal.bit_length() - 2, n_pal
-
-    g_raw, g_bits, _ = pal_block(g_palette)
+    g_raw, g_bits = _gif_palette(g_palette)
     out = bytearray(b"GIF89a")
     out += struct.pack("<HH", max(f[0] for f in frames),
                        max(f[1] for f in frames))
@@ -2845,27 +2459,14 @@ def _gif_anim(frames, g_palette, loop_ext=True):
     for k, (w, h, indices, lpal, interlace) in enumerate(frames):
         out += b"\x21\xf9\x04\x00\x05\x00\x00\x00"  # GCE: 5cs delay
         out += b"\x2c" + struct.pack("<HHHH", k, 0, w, h)
+        bits = g_bits
         if lpal is not None:
-            l_raw, l_bits, n_pal = pal_block(lpal)
-            out += bytes([0x80 | (0x40 if interlace else 0) | l_bits])
+            l_raw, bits = _gif_palette(lpal)
+            out += bytes([0x80 | (0x40 if interlace else 0) | bits])
             out += l_raw
-            use = lpal
         else:
             out += bytes([0x40 if interlace else 0x00])
-            use = g_palette
-            n_pal = max(2, 1 << max(1, (len(use) - 1).bit_length()))
-        if interlace:
-            order = (list(range(0, h, 8)) + list(range(4, h, 8))
-                     + list(range(2, h, 4)) + list(range(1, h, 2)))
-            indices = [indices[r * w + c] for r in order
-                       for c in range(w)]
-        min_code = max(2, (n_pal - 1).bit_length())
-        lzw = _lzw_encode(indices, min_code)
-        out += bytes([min_code])
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i:i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
+        out += _gif_image_data(indices, w, h, bits, interlace)
     return bytes(out) + b"\x3b"
 
 
@@ -2878,14 +2479,10 @@ def _gif_anim_ctl(screen, frames, g_palette, bg_index=0):
     ``_gif_anim``)."""
     import struct
 
-    n_pal = max(2, 1 << max(1, (len(g_palette) - 1).bit_length()))
-    g_raw = bytes(
-        v for i in range(n_pal)
-        for v in (g_palette[i] if i < len(g_palette) else (0, 0, 0))
-    )
+    g_raw, g_bits = _gif_palette(g_palette)
     out = bytearray(b"GIF89a")
     out += struct.pack("<HH", *screen)
-    out += bytes([0x80 | (n_pal.bit_length() - 2), bg_index, 0])
+    out += bytes([0x80 | g_bits, bg_index, 0])
     out += g_raw
     for left, top, w, h, indices, disposal, transparent in frames:
         packed = (disposal & 7) << 2
@@ -2895,13 +2492,7 @@ def _gif_anim_ctl(screen, frames, g_palette, bg_index=0):
                       transparent or 0, 0])
         out += b"\x2c" + struct.pack("<HHHH", left, top, w, h)
         out += b"\x00"
-        min_code = max(2, (n_pal - 1).bit_length())
-        lzw = _lzw_encode(indices, min_code)
-        out += bytes([min_code])
-        for i in range(0, len(lzw), 255):
-            chunk = lzw[i:i + 255]
-            out += bytes([len(chunk)]) + chunk
-        out += b"\x00"
+        out += _gif_image_data(indices, w, h, g_bits)
     return bytes(out) + b"\x3b"
 
 
@@ -3246,13 +2837,6 @@ def test_decode_image_gif():
     assert decode_image(_gif(0, 5)) is None
 
 
-def _box(btype: bytes, body: bytes, largesize: bool = False) -> bytes:
-    if largesize:
-        return (1).to_bytes(4, "big") + btype \
-            + (16 + len(body)).to_bytes(8, "big") + body
-    return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-
 def _mp4(ts=600, dur=1200, v1=False, w=640, h=360, tracks=1,
          mdat=True, brand=b"isom"):
     """Minimal valid ISO-BMFF: ftyp + moov(mvhd + trak(tkhd)*) + mdat."""
@@ -3271,64 +2855,6 @@ def _mp4(ts=600, dur=1200, v1=False, w=640, h=360, tracks=1,
     if mdat:
         out += _box(b"mdat", b"\x00" * 9)
     return out
-
-
-def _mp4_frames(samples, chunks=None, co64=False, uniform=False,
-                handler=b"vide"):
-    """MP4 with a REAL video sample table: ftyp + moov(mvhd +
-    trak(tkhd + mdia(hdlr + minf(stbl(stsz + stsc + stco/co64))))) +
-    mdat carrying the samples; ``chunks`` = samples-per-chunk layout,
-    chunk offsets are absolute (two-pass build).  Independent of the
-    product walk: the table is composed forward from the layout."""
-    if chunks is None:
-        k = len(samples) // 2
-        chunks = [2] * k + ([1] if len(samples) % 2 else [])
-    assert sum(chunks) == len(samples)
-    sizes = [len(s) for s in samples]
-    if uniform:
-        assert len(set(sizes)) == 1
-        stsz = (bytes(4) + sizes[0].to_bytes(4, "big")
-                + len(samples).to_bytes(4, "big"))
-    else:
-        stsz = (bytes(4) + bytes(4) + len(samples).to_bytes(4, "big")
-                + b"".join(sz.to_bytes(4, "big") for sz in sizes))
-    runs = []
-    for ci, per in enumerate(chunks):
-        if not runs or runs[-1][1] != per:
-            runs.append((ci + 1, per))
-    stsc = (bytes(4) + len(runs).to_bytes(4, "big")
-            + b"".join(f.to_bytes(4, "big") + p.to_bytes(4, "big")
-                       + (1).to_bytes(4, "big") for f, p in runs))
-    ow = 8 if co64 else 4
-
-    def build(chunk_offsets):
-        stco = (bytes(4) + len(chunks).to_bytes(4, "big")
-                + b"".join(o.to_bytes(ow, "big")
-                           for o in chunk_offsets))
-        stbl = (_box(b"stsz", stsz) + _box(b"stsc", stsc)
-                + _box(b"co64" if co64 else b"stco", stco))
-        hdlr = bytes(8) + handler + bytes(4)
-        mdia = _box(b"hdlr", hdlr) + _box(b"minf", _box(b"stbl", stbl))
-        tkhd = (bytes(4) + b"\x00" * 72
-                + (64 << 16).to_bytes(4, "big")
-                + (48 << 16).to_bytes(4, "big"))
-        mvhd = (bytes(4) + b"\x00" * 8 + (600).to_bytes(4, "big")
-                + (1200).to_bytes(4, "big"))
-        moov = _box(b"mvhd", mvhd) + _box(
-            b"trak", _box(b"tkhd", tkhd) + _box(b"mdia", mdia)
-        )
-        return _box(b"ftyp", b"isom" + bytes(4)) + _box(b"moov", moov)
-
-    head = build([0] * len(chunks))
-    pos = len(head) + 8  # mdat body starts after its 8-byte header
-    offsets, si = [], 0
-    for per in chunks:
-        offsets.append(pos)
-        for _ in range(per):
-            pos += len(samples[si])
-            si += 1
-    head = build(offsets)
-    return head + _box(b"mdat", b"".join(samples))
 
 
 def test_mp4_video_frames():
@@ -3436,43 +2962,6 @@ def test_decode_video_mp4(spark):
     assert "BatchEvalPython" not in plan
 
 
-def _riff(fourcc: bytes, body: bytes) -> bytes:
-    pad = b"\x00" if len(body) & 1 else b""
-    return fourcc + len(body).to_bytes(4, "little") + body + pad
-
-
-def _avi(frames, w=16, h=12, us_per_frame=40000, handler=b"MJPG",
-         rec_group=False, n_streams=1, strf=None):
-    """Minimal valid RIFF-AVI: hdrl LIST (avih MainAVIHeader + strl
-    with a 'vids' strh and optionally its strf format blob) + movi
-    LIST holding one '00dc' chunk per frame (optionally the tail
-    frames inside a 'rec ' group)."""
-    avih = (
-        us_per_frame.to_bytes(4, "little") + bytes(12)
-        + len(frames).to_bytes(4, "little") + bytes(4)
-        + n_streams.to_bytes(4, "little") + bytes(4)
-        + w.to_bytes(4, "little") + h.to_bytes(4, "little") + bytes(16)
-    )
-    strh = b"vids" + handler + bytes(48)
-    strl = _riff(b"strh", strh)
-    if strf is not None:
-        strl += _riff(b"strf", strf)
-    hdrl = _riff(
-        b"LIST",
-        b"hdrl" + _riff(b"avih", avih)
-        + _riff(b"LIST", b"strl" + strl),
-    )
-    chunks = [_riff(b"00dc", bytes(f)) for f in frames]
-    if rec_group and len(chunks) > 1:
-        head, tail = chunks[0], b"".join(chunks[1:])
-        movi_body = head + _riff(b"LIST", b"rec " + tail)
-    else:
-        movi_body = b"".join(chunks)
-    movi = _riff(b"LIST", b"movi" + movi_body)
-    body = b"AVI " + hdrl + movi
-    return b"RIFF" + len(body).to_bytes(4, "little") + body
-
-
 def test_decode_video_avi():
     """RIFF-AVI container decode is REAL: avih supplies frame timing,
     stream count and dimensions; the video strh supplies the handler;
@@ -3527,35 +3016,6 @@ def test_frame_sample_avi_real_frames(spark):
     stub = [r for r in rows if r["vid_id"] == 2]
     assert sorted(r["frame_idx"] for r in stub) == [0, 2]
     assert all(bytes(r["frame_bytes"]) == b"k" * 16 for r in stub)
-
-
-def _bih(w, h, bpp, compression, palette=b"", size_image=0):
-    """BITMAPINFOHEADER (+palette) blob — the strf body of an AVI
-    video stream and the info header of a re-wrapped BMP."""
-    return (
-        (40).to_bytes(4, "little")
-        + w.to_bytes(4, "little", signed=True)
-        + h.to_bytes(4, "little", signed=True)
-        + (1).to_bytes(2, "little")
-        + bpp.to_bytes(2, "little")
-        + (compression if isinstance(compression, int)
-           else int.from_bytes(compression, "little"))
-        .to_bytes(4, "little")
-        + size_image.to_bytes(4, "little")
-        + bytes(8)
-        + (len(palette) // 4).to_bytes(4, "little")
-        + bytes(4)
-        + palette
-    )
-
-
-def _wrap_bmp(bih_palette: bytes, data: bytes) -> bytes:
-    """BM file header + info-header blob + frame data — the exact
-    re-wrap _avi_video_frames performs."""
-    off = 14 + len(bih_palette)
-    return (b"BM" + (off + len(data)).to_bytes(4, "little")
-            + bytes(4) + off.to_bytes(4, "little")
-            + bih_palette + data)
 
 
 def _msv1_expect(w, h, blocks, palette=None, default=(0, 0, 0)):
@@ -4218,161 +3678,6 @@ def _tiff(w=5, h=3, endian="little", typ=3, strips=True):
     return magic + struct.pack(bo + "I", 8) + ifd
 
 
-def _tiff_lzw_enc(raw: bytes) -> bytes:
-    """Independent TIFF-LZW test encoder (TIFF 6.0 §13): real
-    dictionary compression with MSB-first variable-width codes —
-    leading ClearCode, EOI trailer, width widened when the NEXT free
-    index reaches 2^width (the dictionary side of the spec's early
-    change: the decoder, one entry behind, widens at 2^width - 1), and
-    a mid-stream ClearCode reset before the table overflows."""
-    out = bytearray()
-    bitbuf = nbits = 0
-
-    def emit(code: int, width: int) -> None:
-        nonlocal bitbuf, nbits
-        bitbuf = (bitbuf << width) | code
-        nbits += width
-        while nbits >= 8:
-            out.append((bitbuf >> (nbits - 8)) & 0xFF)
-            nbits -= 8
-
-    table = {bytes([i]): i for i in range(256)}
-    next_code, width = 258, 9
-    emit(256, width)  # every strip begins with Clear
-    w = b""
-    for b in raw:
-        wc = w + bytes([b])
-        if wc in table:
-            w = wc
-            continue
-        emit(table[w], width)
-        table[wc] = next_code
-        next_code += 1
-        if next_code == (1 << width) and width < 12:
-            width += 1
-        w = bytes([b])
-        if next_code == 4094:  # reset before the 12-bit table fills
-            emit(256, width)
-            table = {bytes([i]): i for i in range(256)}
-            next_code, width = 258, 9
-    if w:
-        emit(table[w], width)
-    emit(257, width)  # EOI
-    if nbits:
-        out.append((bitbuf << (8 - nbits)) & 0xFF)
-    return bytes(out)
-
-
-def _tiff_px(w, h, pixels, endian="little", spp=3, photometric=None,
-             n_strips=2, compression=1, predictor=1):
-    """Full baseline TIFF with REAL pixel strips: 9-entry IFD (dims,
-    8-bit samples, compression, photometric, strip offsets/counts,
-    spp, rows-per-strip; +Predictor when asked), value arrays spilled
-    past the 4-byte field when needed, strip data appended last.
-    ``compression`` 8 deflates each strip independently; 32773
-    PackBits-encodes each strip (independent RLE encoder: literal
-    runs chunked at 128, repeats for >=3 equal bytes); 5 LZW-encodes
-    each strip (``_tiff_lzw_enc``); ``predictor=2`` applies forward
-    horizontal differencing per row/channel before compression."""
-    import struct
-    import zlib
-
-    bo = "<" if endian == "little" else ">"
-    magic = b"II*\x00" if endian == "little" else b"MM\x00*"
-    if photometric is None:
-        photometric = 2 if spp == 3 else 1
-    rps = max(1, (h + n_strips - 1) // n_strips)
-    row_bytes = w * spp
-    if predictor == 2:  # forward horizontal differencing
-        diff = bytearray(pixels)
-        for y in range(h):
-            base = y * row_bytes
-            for x in range(row_bytes - 1, spp - 1, -1):
-                diff[base + x] = (
-                    diff[base + x] - pixels[base + x - spp]
-                ) & 0xFF
-        pixels = bytes(diff)
-
-    def packbits_enc(raw: bytes) -> bytes:
-        out = bytearray()
-        i, n = 0, len(raw)
-        while i < n:
-            # find a repeat run of >= 3
-            j = i
-            while j + 1 < n and raw[j + 1] == raw[j] and j - i < 127:
-                j += 1
-            if j - i >= 2:  # repeat run [i..j]
-                out.append(257 - (j - i + 1))
-                out.append(raw[i])
-                i = j + 1
-            else:  # literal run up to next repeat-of-3 or 128 bytes
-                j = i
-                while (j < n and j - i < 128
-                       and not (j + 2 < n and raw[j + 1] == raw[j]
-                                and raw[j + 2] == raw[j])):
-                    j += 1
-                out.append(j - i - 1)
-                out += raw[i:j]
-                i = j
-        return bytes(out)
-
-    strips = [
-        bytes(pixels[r * row_bytes:min(r + rps, h) * row_bytes])
-        for r in range(0, h, rps)
-    ]
-    if compression == 8:
-        strips = [zlib.compress(s) for s in strips]
-    elif compression == 32773:
-        strips = [packbits_enc(s) for s in strips]
-    elif compression == 5:
-        strips = [_tiff_lzw_enc(s) for s in strips]
-    k = len(strips)
-    ntags = 9 + (1 if predictor != 1 else 0)
-    ifd_off = 8
-    ext_off = ifd_off + 2 + 12 * ntags + 4
-
-    def build(strip_offsets):
-        ext = bytearray()
-
-        def entry(tag, typ, count, vals):
-            fmt = "H" if typ == 3 else "I"
-            raw = b"".join(struct.pack(bo + fmt, v) for v in vals)
-            if len(raw) <= 4:
-                field = raw + b"\x00" * (4 - len(raw))
-            else:
-                field = struct.pack(bo + "I", ext_off + len(ext))
-                ext.extend(raw)
-            return struct.pack(bo + "HHI", tag, typ, count) + field
-
-        entries = [
-            entry(256, 3, 1, [w]),
-            entry(257, 3, 1, [h]),
-            entry(258, 3, spp, [8] * spp),
-            entry(259, 3, 1, [compression]),
-            entry(262, 3, 1, [photometric]),
-            entry(273, 4, k, strip_offsets),
-            entry(277, 3, 1, [spp]),
-            entry(278, 3, 1, [rps]),
-            entry(279, 4, k, [len(s) for s in strips]),
-        ]
-        if predictor != 1:
-            entries.append(entry(317, 3, 1, [predictor]))
-        ifd = (struct.pack(bo + "H", ntags) + b"".join(entries)
-               + struct.pack(bo + "I", 0))
-        return ifd, bytes(ext)
-
-    # two passes: ext size depends only on counts, not values
-    _, ext0 = build([0] * k)
-    data_off = ext_off + len(ext0)
-    offsets, pos = [], data_off
-    for s in strips:
-        offsets.append(pos)
-        pos += len(s)
-    ifd, ext = build(offsets)
-    return (magic + struct.pack(bo + "I", ifd_off) + ifd + ext
-            + b"".join(strips))
-
-
 def test_decode_tiff_pixels():
     """REAL uncompressed-TIFF pixel decode: both byte orders,
     multi-strip RGB and grayscale (WhiteIsZero inverted), spilled value
@@ -4446,11 +3751,8 @@ def _tiff_tiled(w, h, pixels, tw, tl, endian="little", spp=3,
     FULL tw x tl tiles (edge tiles zero-padded), each compressed
     independently; ``predictor=2`` applies forward differencing per
     TILE row before compression."""
-    import struct
     import zlib
 
-    bo = "<" if endian == "little" else ">"
-    magic = b"II*\x00" if endian == "little" else b"MM\x00*"
     photometric = 2 if spp == 3 else 1
     across = -(-w // tw)
     down = -(-h // tl)
@@ -4481,52 +3783,15 @@ def _tiff_tiled(w, h, pixels, tw, tl, endian="little", spp=3,
             tiles.append(raw)
     if drop_tiles:
         tiles = tiles[:-drop_tiles]
-    k = len(tiles)
-    ntags = 10 + (1 if predictor != 1 else 0)
-    ifd_off = 8
-    ext_off = ifd_off + 2 + 12 * ntags + 4
-
-    def build(tile_offsets):
-        ext = bytearray()
-
-        def entry(tag, typ, count, vals):
-            fmt = "H" if typ == 3 else "I"
-            raw = b"".join(struct.pack(bo + fmt, v) for v in vals)
-            if len(raw) <= 4:
-                field = raw + b"\x00" * (4 - len(raw))
-            else:
-                field = struct.pack(bo + "I", ext_off + len(ext))
-                ext.extend(raw)
-            return struct.pack(bo + "HHI", tag, typ, count) + field
-
-        entries = [
-            entry(256, 3, 1, [w]),
-            entry(257, 3, 1, [h]),
-            entry(258, 3, spp, [8] * spp),
-            entry(259, 3, 1, [compression]),
-            entry(262, 3, 1, [photometric]),
-            entry(277, 3, 1, [spp]),
-            entry(322, 3, 1, [tw]),
-            entry(323, 3, 1, [tl]),
-            entry(324, 4, k, tile_offsets),
-            entry(325, 4, k, [len(t) for t in tiles]),
-        ]
-        if predictor != 1:
-            entries.append(entry(317, 3, 1, [predictor]))
-        entries.sort(key=lambda e: int.from_bytes(e[:2], endian))
-        ifd = (struct.pack(bo + "H", ntags) + b"".join(entries)
-               + struct.pack(bo + "I", 0))
-        return ifd, bytes(ext)
-
-    _, ext0 = build([0] * k)
-    data_off = ext_off + len(ext0)
-    offsets, pos = [], data_off
-    for t in tiles:
-        offsets.append(pos)
-        pos += len(t)
-    ifd, ext = build(offsets)
-    return (magic + struct.pack(bo + "I", ifd_off) + ifd + ext
-            + b"".join(tiles))
+    tags = [
+        (256, 3, [w]), (257, 3, [h]), (258, 3, [8] * spp),
+        (259, 3, [compression]), (262, 3, [photometric]),
+        (277, 3, [spp]), (322, 3, [tw]), (323, 3, [tl]),
+        (324, 4, None), (325, 4, [len(t) for t in tiles]),
+    ]
+    if predictor != 1:
+        tags.append((317, 3, [predictor]))
+    return _tiff_file(tags, tiles, endian)
 
 
 def _tiff_ext(w, h, samples, spp=1, bits=16, planar=1,
@@ -4541,7 +3806,6 @@ def _tiff_ext(w, h, samples, spp=1, bits=16, planar=1,
     import zlib
 
     bo = "<" if endian == "little" else ">"
-    magic = b"II*\x00" if endian == "little" else b"MM\x00*"
     if photometric is None:
         photometric = 2 if spp == 3 else 1
     mask = (1 << bits) - 1
@@ -4584,52 +3848,15 @@ def _tiff_ext(w, h, samples, spp=1, bits=16, planar=1,
         strips = [zlib.compress(s) for s in strips]
     elif compression == 5:
         strips = [_tiff_lzw_enc(s) for s in strips]
-    k = len(strips)
-    ntags = 10 + (1 if predictor != 1 else 0)
-    ifd_off = 8
-    ext_off = ifd_off + 2 + 12 * ntags + 4
-
-    def build(strip_offsets):
-        ext = bytearray()
-
-        def entry(tag, typ, count, vals):
-            fmt = "H" if typ == 3 else "I"
-            raw = b"".join(struct.pack(bo + fmt, v) for v in vals)
-            if len(raw) <= 4:
-                field = raw + b"\x00" * (4 - len(raw))
-            else:
-                field = struct.pack(bo + "I", ext_off + len(ext))
-                ext.extend(raw)
-            return struct.pack(bo + "HHI", tag, typ, count) + field
-
-        entries = [
-            entry(256, 3, 1, [w]),
-            entry(257, 3, 1, [h]),
-            entry(258, 3, spp, [bits] * spp),
-            entry(259, 3, 1, [compression]),
-            entry(262, 3, 1, [photometric]),
-            entry(273, 4, k, strip_offsets),
-            entry(277, 3, 1, [spp]),
-            entry(278, 3, 1, [rps]),
-            entry(279, 4, k, [len(s) for s in strips]),
-            entry(284, 3, 1, [planar]),
-        ]
-        if predictor != 1:
-            entries.append(entry(317, 3, 1, [predictor]))
-        entries.sort(key=lambda e: int.from_bytes(e[:2], endian))
-        ifd = (struct.pack(bo + "H", ntags) + b"".join(entries)
-               + struct.pack(bo + "I", 0))
-        return ifd, bytes(ext)
-
-    _, ext0 = build([0] * k)
-    data_off = ext_off + len(ext0)
-    offsets, pos = [], data_off
-    for s in strips:
-        offsets.append(pos)
-        pos += len(s)
-    ifd, ext = build(offsets)
-    return (magic + struct.pack(bo + "I", ifd_off) + ifd + ext
-            + b"".join(strips))
+    tags = [
+        (256, 3, [w]), (257, 3, [h]), (258, 3, [bits] * spp),
+        (259, 3, [compression]), (262, 3, [photometric]),
+        (273, 4, None), (277, 3, [spp]), (278, 3, [rps]),
+        (279, 4, [len(s) for s in strips]), (284, 3, [planar]),
+    ]
+    if predictor != 1:
+        tags.append((317, 3, [predictor]))
+    return _tiff_file(tags, strips, endian)
 
 
 def test_adversarial_dimension_guards():
@@ -4799,10 +4026,6 @@ def _tiff_jpeg(w, h, pixels, spp=3, n_strips=2, use_tables=False,
     strip's DQT/DHT segments out of the strip stream into a shared
     JPEGTables (347) blob — the abbreviated-stream layout (single
     strip only: the test encoder derives Huffman tables per image)."""
-    import struct
-
-    bo = "<" if endian == "little" else ">"
-    magic = b"II*\x00" if endian == "little" else b"MM\x00*"
     rps = max(1, (h + n_strips - 1) // n_strips)
     row_bytes = w * spp
 
@@ -4835,64 +4058,15 @@ def _tiff_jpeg(w, h, pixels, spp=3, n_strips=2, use_tables=False,
             tables_blob, stream = split_tables(stream)
             tables_blob = b"\xff\xd8" + tables_blob + b"\xff\xd9"
         strips.append(stream)
-    k = len(strips)
-    photometric = 6 if spp == 3 else 1
-    ntags = 9 + (1 if use_tables else 0)
-    ifd_off = 8
-    ext_off = ifd_off + 2 + 12 * ntags + 4
-
-    def build(strip_offsets, tables_off):
-        ext = bytearray()
-
-        def entry(tag, typ, count, vals=None, raw=None):
-            if raw is not None:
-                if len(raw) <= 4:
-                    field = raw + b"\x00" * (4 - len(raw))
-                else:
-                    field = struct.pack(bo + "I", tables_off)
-            else:
-                fmt = "H" if typ == 3 else "I"
-                enc = b"".join(struct.pack(bo + fmt, v) for v in vals)
-                if len(enc) <= 4:
-                    field = enc + b"\x00" * (4 - len(enc))
-                else:
-                    field = struct.pack(bo + "I", ext_off + len(ext))
-                    ext.extend(enc)
-            return struct.pack(bo + "HHI", tag, typ, count) + field
-
-        entries = [
-            entry(256, 3, 1, [w]),
-            entry(257, 3, 1, [h]),
-            entry(258, 3, spp, [8] * spp),
-            entry(259, 3, 1, [7]),
-            entry(262, 3, 1, [photometric]),
-            entry(273, 4, k, strip_offsets),
-            entry(277, 3, 1, [spp]),
-            entry(278, 3, 1, [rps]),
-            entry(279, 4, k, [len(s) for s in strips]),
-        ]
-        if use_tables:
-            entries.append(entry(347, 7, len(tables_blob),
-                                 raw=tables_blob))
-        entries.sort(key=lambda e: int.from_bytes(e[:2],
-                                                  endian))
-        ifd = (struct.pack(bo + "H", ntags) + b"".join(entries)
-               + struct.pack(bo + "I", 0))
-        return ifd, bytes(ext)
-
-    _, ext0 = build([0] * k, 0)
-    tbl_off = ext_off + len(ext0)
-    data_off = tbl_off + (len(tables_blob)
-                          if use_tables and len(tables_blob) > 4 else 0)
-    offsets, pos = [], data_off
-    for s in strips:
-        offsets.append(pos)
-        pos += len(s)
-    ifd, ext = build(offsets, tbl_off)
-    body = magic + struct.pack(bo + "I", ifd_off) + ifd + ext
-    if use_tables and len(tables_blob) > 4:
-        body += tables_blob
-    return body + b"".join(strips)
+    tags = [
+        (256, 3, [w]), (257, 3, [h]), (258, 3, [8] * spp), (259, 3, [7]),
+        (262, 3, [6 if spp == 3 else 1]), (273, 4, None),
+        (277, 3, [spp]), (278, 3, [rps]),
+        (279, 4, [len(s) for s in strips]),
+    ]
+    if use_tables:
+        tags.append((347, 7, tables_blob))
+    return _tiff_file(tags, strips, endian)
 
 
 def test_decode_tiff_jpeg_strips():

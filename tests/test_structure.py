@@ -1,6 +1,8 @@
 """Structural guards over the engine sources (``arachne_spark/``,
 ``bench.py``, ``tools/``): each piece of the KG link core is defined
-once, and batch, stream and bench call that one definition."""
+once, and batch, stream and bench call that one definition; each
+media format's structure is walked once, behind one never-raise
+boundary."""
 
 from __future__ import annotations
 
@@ -81,3 +83,46 @@ def test_stage_bookkeeping_launches_no_jobs():
         and isinstance(n.ctx, ast.Load)
         and n.id in ("METRICS_TABLE", "LINEAGE_TABLE")
     ) == {f"{lineage}:flush"}
+
+
+def test_media_structure_parsed_once():
+    media = "arachne_spark/operators/multimodal.py"
+    tree = ast.parse((ROOT / media).read_text())
+    # one never-raise boundary: every handler names an exception
+    # (no hand-written tuple, no bare except), only the boundary
+    # catches the hostile-input set, and that set leaves MemoryError
+    # and bare Exception to propagate
+    handlers = [n for n in ast.walk(tree) if isinstance(n, ast.ExceptHandler)]
+    assert {getattr(h.type, "id", None) for h in handlers} <= {
+        "_HOSTILE", "Malformed"}
+    assert {
+        h for h in _holders(lambda n: isinstance(n, ast.ExceptHandler)
+                            and getattr(n.type, "id", None) == "_HOSTILE")
+        if h.startswith(media + ":")
+    } == {f"{media}:_never_raise.guarded"}
+    hostile = next(
+        n.value for n in tree.body if isinstance(n, ast.Assign)
+        and getattr(n.targets[0], "id", None) == "_HOSTILE")
+    caught = {ast.unparse(e) for e in hostile.elts}
+    assert not caught & {"Exception", "BaseException", "MemoryError"}
+    # each structure walker and layout function is defined once, no
+    # per-format walker sits beside the reader's, and the live
+    # metadata helper is payload_meta (fake_decode named it a stub)
+    defs = [n.name for n in ast.walk(tree)
+            if isinstance(n, (ast.FunctionDef, ast.ClassDef))]
+    for name in ("_Reader", "boxes", "chunks", "ebml_elements",
+                 "_png_layout", "_netpbm_layout", "_gif_layout",
+                 "_tiff_layout", "_bmp_layout", "_ico_layout",
+                 "_wav_layout", "_aiff_layout", "_flac_layout",
+                 "_avi_scan", "_mp4_layout", "_mkv_layout",
+                 "_never_raise", "_map_payloads", "payload_meta"):
+        assert defs.count(name) == 1, name
+    for gone in ("fake_decode", "_mp4_boxes", "_riff_chunks",
+                 "_ebml_elements", "_skip_subblocks", "_wav_resolve_tag",
+                 "_jpeg_pixels", "_ico_entries"):
+        assert gone not in defs, gone
+    # every operator goes through the one mapInPandas wrapper
+    assert {
+        h for h in _holders(_calls("mapInPandas"))
+        if h.startswith(media + ":")
+    } == {f"{media}:_map_payloads"}
