@@ -629,31 +629,9 @@ def semantic_dedup(
             cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
         ).alias("sim"),
     ).where(F.col("sim") >= threshold)
-    # min-id representative via CC, the minhash_doc_dedup encoding:
-    # numeric ids zero-padded so string order == numeric order.
-    # Signed ids are offset by 2^63 first — a raw lpad of '-5' sorts
-    # lexicographically above '10', so negative caller-supplied vec_ids
-    # would pick the wrong representative.  Offset via decimal(20,0):
-    # bigint + 2^63 overflows bigint (and F.lit(1<<63) overflows py4j).
-    id_type = emb.schema[id_col].dataType.simpleString()
-    numeric = id_type in ("bigint", "int", "smallint", "tinyint")
-    _OFF = "cast('9223372036854775808' as decimal(20,0))"
-    if numeric:
-        enc = lambda c: F.expr(  # noqa: E731
-            f"lpad(cast(cast({c} as decimal(20,0)) + {_OFF}"
-            " as string), 20, '0')"
-        )
-        dec = lambda c: F.expr(  # noqa: E731
-            f"cast(cast({c} as decimal(20,0)) - {_OFF} as bigint)"
-        )
-    else:
-        enc = lambda c: F.col(c)  # noqa: E731
-        dec = lambda c: F.col(c)  # noqa: E731
-    comp = connected_components(
-        dup.select(enc("qvec").alias("src"), enc("nvec").alias("dst")),
-        key_encode=False,
-    ).select(
-        dec("node").alias("vec_id"), dec("component").alias("rep_id")
+    # min-id representative via CC, in the id column's own order
+    comp = connected_components(dup, "qvec", "nvec", key_encode=False).select(
+        F.col("node").alias("vec_id"), F.col("component").alias("rep_id")
     )
     return (
         emb.select(F.col(id_col).alias("vec_id"))

@@ -8,37 +8,38 @@ al., "Connected Components in MapReduce and Beyond" (SoCC'14): O(log n)
 rounds, each round two aggregate+join passes, no collect_set (so a
 10^9-node star never materializes a neighborhood list on one executor).
 
-Node ordering must be the *deterministic QID priority* (numeric part
-ascending, then prefix) — not raw string order — so the component
-representative is stable across runs and parallelism levels.  Nodes are
-therefore encoded to an orderable key ``<prefix><num zero-padded 10>``
-for the duration of the loop and decoded at the end (bijective).
+Node ordering is the *deterministic QID priority* (prefix, then numeric
+part ascending; ids that are not ``<letter><digits>`` after every QID, in
+string order) — not raw string order — so the component representative
+is stable across runs and parallelism levels.  Nodes are keyed by an
+injective struct that carries the id itself, so distinct ids never
+share a key and the output is read straight off the key.
 
-Each iteration ``localCheckpoint``s the frontier to cut lineage —
-without it the plan doubles per round and the driver dies on iteration
-20 long before the cluster breaks a sweat.
+The rounds run in ``fixpoint.fixpoint``.
 """
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from arachne_spark.operators.fixpoint import fixpoint
 
 _NUM_RE = r"^([A-Z])([0-9]+)$"
 
 
-def qid_order_key(col):
-    """'Q5' → 'Q0000000005': string-orderable by (prefix, numeric)."""
-    return F.concat(
-        F.regexp_extract(col, _NUM_RE, 1),
-        F.lpad(F.regexp_extract(col, _NUM_RE, 2), 10, "0"),
+def _qid_key(col):
+    """'Q5' → (False, 'Q', 1, '5', 'Q5'): orders by (prefix, numeric)."""
+    digits = F.regexp_extract(col, _NUM_RE, 2)
+    return F.struct(
+        (digits == "").alias("other"),
+        F.regexp_extract(col, _NUM_RE, 1).alias("prefix"),
+        F.length(digits).alias("width"),
+        digits.alias("digits"),
+        col.alias("id"),
     )
-
-
-def decode_order_key(col):
-    """'Q0000000005' → 'Q5' (strip zero padding; '0' survives)."""
-    num = F.regexp_replace(F.substring(col, 2, 10), "^0+(?=.)", "")
-    return F.concat(F.substring(col, 1, 1), num)
 
 
 def _undirect(edges: DataFrame) -> DataFrame:
@@ -81,72 +82,40 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 50,
     key_encode: bool = True,
 ) -> DataFrame:
     """→ (node, component) with component = min-priority member.
 
     `edges` is an undirected edge list over entity-ID strings (or any
-    orderable strings if key_encode=False).  Isolated nodes are not
+    orderable column type if key_encode=False).  Isolated nodes are not
     emitted (callers coalesce missing nodes to themselves).
     """
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
+    e = e.where(F.col("src") != F.col("dst"))
     if key_encode:
         e = e.select(
-            qid_order_key(F.col("src")).alias("src"),
-            qid_order_key(F.col("dst")).alias("dst"),
+            _qid_key(F.col("src")).alias("src"),
+            _qid_key(F.col("dst")).alias("dst"),
         )
-    e = e.where(F.col("src") != F.col("dst")).distinct().localCheckpoint()
 
     # convergence: edge multiset unchanged (order-insensitive hash).
     # decimal accumulate: a raw long sum of xxhash64 overflows ANSI.
-    # One sig job per round — the previous round's sig is remembered,
-    # not recomputed (each sig is a full pass over the frontier).
-    sig = lambda d: d.select(  # noqa: E731
-        F.count("*").alias("c"),
-        F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")).alias("h"),
-    ).collect()[0]
+    def sig(d: DataFrame):
+        s = d.select(
+            F.count("*").alias("c"),
+            F.sum(
+                F.xxhash64("src", "dst").cast("decimal(38,0)")
+            ).alias("h"),
+        ).collect()[0]
+        return s["c"], s
 
-    # Shuffle sizing mirrors operators/closure.py: per-round cost at
-    # small frontiers is task scheduling (checkpointed RDDs bypass
-    # AQE's coalescing), and the sig action already measures the edge
-    # count — plan each round at ~100k rows/partition, capped at the
-    # configured setting (which a web-scale edge set keeps).  The conf
-    # is restored in the finally.
-    from arachne_spark.operators.closure import ROWS_PER_SHUFFLE_PARTITION
-
-    sp = edges.sparkSession
-    conf_key = "spark.sql.shuffle.partitions"
-    orig = sp.conf.get(conf_key)
-    try:
-        configured = int(orig)
-    except (TypeError, ValueError):  # pragma: no cover — exotic conf
-        configured = None
-
-    def adapt(n_edges: int) -> None:
-        if configured is not None:
-            target = max(
-                1,
-                min(
-                    configured,
-                    int(n_edges) // ROWS_PER_SHUFFLE_PARTITION + 1,
-                ),
-            )
-            sp.conf.set(conf_key, str(target))
-
-    try:
-        prev_sig = sig(e)
-        adapt(prev_sig["c"])
-        for _ in range(max_iter):
-            e2 = _small_star(_large_star(e)).localCheckpoint(eager=False)
-            cur_sig = sig(e2)  # materializes the lazy checkpoint
-            if cur_sig == prev_sig:
-                e = e2
-                break
-            e, prev_sig = e2, cur_sig
-            adapt(cur_sig["c"])
-    finally:
-        sp.conf.set(conf_key, orig)
+    e = fixpoint(
+        e.distinct(),
+        lambda d: _small_star(_large_star(d)),
+        sig,
+        operator.eq,
+        measure_start=True,
+    )
 
     comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
     roots = comp.select(F.col("component")).distinct().select(
@@ -155,8 +124,8 @@ def connected_components(
     out = comp.unionByName(roots).distinct()
     if key_encode:
         out = out.select(
-            decode_order_key(F.col("node")).alias("node"),
-            decode_order_key(F.col("component")).alias("component"),
+            F.col("node.id").alias("node"),
+            F.col("component.id").alias("component"),
         )
     return out
 

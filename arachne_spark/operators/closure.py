@@ -2,35 +2,22 @@
 
 Query capability for SPARQL property paths like ``wdt:P31/wdt:P279*``
 (/root/reference/tests/sparql_tests.cpp:78-99): reachability over the
-``triples`` table, computed as join-until-fixpoint with per-iteration
-``localCheckpoint`` to cut lineage (same discipline as cc.py).
+``triples`` table, computed as join-until-fixpoint in
+``fixpoint.fixpoint`` (per-round ``localCheckpoint``, one action per
+round, shuffles sized to 2·|R|).
 
-Three strategies, all join-until-fixpoint with per-iteration
-``localCheckpoint`` to cut lineage (same discipline as cc.py):
-
-* ``auto`` (default) — **delta doubling**: R_{k+1} = R_k ∪ Δ_k∘R_k ∪
-  R_k∘Δ_k where Δ_k = R_k \\ R_{k-1}.  Exact: a pair of R_k∘R_k not
-  already in R_k must have at least one half in Δ_k (else both halves
-  were in R_{k-1} and the pair is in R_{k-1}∘R_{k-1} ⊆ R_k).  So it
-  keeps doubling's ⌈log2 d⌉ + 1 rounds — each driver round is a
-  scheduling barrier, the dominant cost for the shallow P31/P279
-  class trees this engine meets — while each round's join is
-  *frontier-proportional* instead of |R|², which is what survives at
-  scale: in late rounds Δ is tiny and AQE broadcasts it, whereas
-  plain doubling re-self-joins the entire closure just to discover
-  nothing is new.  One action per round: new-pair bookkeeping rides a
-  min(flag) aggregate, so the convergence check and the Δ extraction
-  share the round's single job.  This subsumes the discrete
-  "switch to seminaive when |new|/|closure| is small" rule — the work
-  tracks the frontier continuously instead of at a threshold.
-* ``doubling``: R_{k+1} = R_k ∪ (R_k ∘ R_k) — fewest moving parts,
-  same round count, but joins the full closure every round.
-* ``seminaive``: frontier ∘ base each round — O(d) rounds, each
-  extending paths by ONE edge; total join work proportional to the
-  closure, but for depth-d graphs it pays d barriers where the
-  doubling family pays log d.  Right only when the closure is far
-  larger than memory-per-round AND the graph is shallow enough that
-  d ≈ log d.
+**Delta doubling**: R_{k+1} = R_k ∪ Δ_k∘R_k ∪ R_k∘Δ_k where
+Δ_k = R_k \\ R_{k-1}.  Exact: a pair of R_k∘R_k not already in R_k must
+have at least one half in Δ_k (else both halves were in R_{k-1} and the
+pair is in R_{k-1}∘R_{k-1} ⊆ R_k).  So it keeps doubling's ⌈log2 d⌉ + 1
+rounds — each driver round is a scheduling barrier, the dominant cost
+for the shallow P31/P279 class trees this engine meets — while each
+round's join is *frontier-proportional* instead of |R|², which is what
+survives at scale: in late rounds Δ is tiny and AQE broadcasts it,
+whereas plain doubling re-self-joins the entire closure just to
+discover nothing is new.  One action per round: new-pair bookkeeping
+rides a min(flag) aggregate, so the convergence check and the Δ
+extraction share the round's single job.
 """
 
 from __future__ import annotations
@@ -38,157 +25,61 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-# Target rows per shuffle partition for the iterative rounds: the
-# closure relation is two longs + a flag (~25 B/row), so 100 k rows is
-# a ~2.5 MB partition — small enough to stay cache-resident, large
-# enough that task-scheduling overhead does not dominate the round.
-ROWS_PER_SHUFFLE_PARTITION = 100_000
+from arachne_spark.operators.fixpoint import fixpoint
+
+
+def _delta_double(result: DataFrame) -> DataFrame:
+    """One round over rows (src, dst, new): new = 1 iff the pair was
+    first derived in the latest round, so Δ is ``new = 1``.  The start
+    relation has no flag: all of it is Δ, and Δ and R then share one
+    plan, so AQE reuses their shuffles."""
+    r = result.select("src", "dst")
+    delta = r
+    if "new" in result.columns:
+        delta = result.where(F.col("new") == 1).select("src", "dst")
+    stepped = (
+        delta.select("src", F.col("dst").alias("mid"))
+        .join(r.select(F.col("src").alias("mid"), "dst"), "mid")
+        .select("src", "dst")
+        .unionByName(
+            r.select("src", F.col("dst").alias("mid"))
+            .join(delta.select(F.col("src").alias("mid"), "dst"), "mid")
+            .select("src", "dst")
+        )
+        .withColumn("new", F.lit(1))
+    )
+    return (
+        result.withColumn("new", F.lit(0))
+        .unionByName(stepped)
+        .groupBy("src", "dst")
+        .agg(F.min("new").alias("new"))
+    )
+
+
+def _count_new(grown: DataFrame):
+    """groupBy(new).count() is the round's one action; the closure at
+    most doubles per round, so the next round is sized for 2·|R|."""
+    counts = {
+        row["new"]: row["cnt"]
+        for row in grown.groupBy("new").agg(F.count("*").alias("cnt"))
+        .collect()
+    }
+    return 2 * sum(counts.values()), counts.get(1, 0)
 
 
 def transitive_closure(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    max_iter: int = 64,
-    method: str = "auto",
 ) -> DataFrame:
     """→ all (src, dst) pairs with a directed path of length >= 1."""
-    base = (
+    return fixpoint(
         edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
-        .distinct()
-        .localCheckpoint()
-    )
-    if method == "auto":
-        # delta doubling (see module docstring).  Row shape
-        # (src, dst, new): new = 1 iff the pair was first derived in
-        # the latest round; groupBy(new).count() is the ONE action per
-        # round — it materializes the lazy checkpoint, decides
-        # convergence, and the checkpointed plan then serves both the
-        # next Δ (filter new=1) and the final result.
-        #
-        # Shuffle sizing: each round's cost at small |R| is dominated
-        # by task scheduling (the checkpointed RDD bypasses AQE's
-        # post-shuffle coalescing), so the rounds run at a partition
-        # count proportional to the measured closure size — the count
-        # the convergence action already collects — capped at the
-        # session's configured setting (which is what a 100 TB closure
-        # keeps).  Measured at the sf0.1 fixture (247 k pairs, 5
-        # rounds): 64 fixed partitions 7.9 s → adaptive 2.9-5.0 s.
-        # Per-round ``persist`` instead of ``localCheckpoint`` was
-        # also measured: 2-4x SLOWER (lineage re-growth re-plans every
-        # earlier round into each action), so checkpointing stays.
-        sp = edges.sparkSession
-        conf_key = "spark.sql.shuffle.partitions"
-        orig = sp.conf.get(conf_key)
-        try:
-            configured = int(orig)
-        except (TypeError, ValueError):  # pragma: no cover — exotic conf
-            configured = None
-        result = base.withColumn("new", F.lit(1))
-        delta = base
-        try:
-            for _ in range(max_iter):
-                r = result.select("src", "dst")
-                stepped = (
-                    delta.select("src", F.col("dst").alias("mid"))
-                    .join(
-                        r.select(F.col("src").alias("mid"), "dst"), "mid"
-                    )
-                    .select("src", "dst")
-                    .unionByName(
-                        r.select("src", F.col("dst").alias("mid"))
-                        .join(
-                            delta.select(
-                                F.col("src").alias("mid"), "dst"
-                            ),
-                            "mid",
-                        )
-                        .select("src", "dst")
-                    )
-                    .withColumn("new", F.lit(1))
-                )
-                grown = (
-                    result.withColumn("new", F.lit(0))
-                    .unionByName(stepped)
-                    .groupBy("src", "dst")
-                    .agg(F.min("new").alias("new"))
-                    .localCheckpoint(eager=False)
-                )
-                counts = {
-                    row["new"]: row["cnt"]
-                    for row in grown.groupBy("new")
-                    .agg(F.count("*").alias("cnt"))
-                    .collect()
-                }
-                n_new = counts.get(1, 0)
-                if n_new == 0:
-                    return result.select("src", "dst")
-                result = grown
-                delta = grown.where(F.col("new") == 1).select(
-                    "src", "dst"
-                )
-                if configured is not None:
-                    total = sum(counts.values())
-                    # the closure at most doubles per round; size the
-                    # next round for the doubled relation
-                    target = max(
-                        1,
-                        min(
-                            configured,
-                            2 * total // ROWS_PER_SHUFFLE_PARTITION + 1,
-                        ),
-                    )
-                    sp.conf.set(conf_key, str(target))
-            return result.select("src", "dst")
-        finally:
-            sp.conf.set(conf_key, orig)
-    if method == "doubling":
-        result = base
-        n = result.count()
-        for _ in range(max_iter):
-            # explicit renames instead of alias().col("f.x"): the
-            # aliased self-join form trips attribute resolution on
-            # localCheckpoint'd plans (AttributeMap key-not-found on
-            # Spark 4)
-            stepped = (
-                result.select("src", F.col("dst").alias("mid"))
-                .join(
-                    result.select(F.col("src").alias("mid"), "dst"),
-                    "mid",
-                )
-                .select("src", "dst")
-            )
-            # lazy checkpoint: the convergence count() is the action
-            # that materializes it — one job per round instead of two
-            # (eager localCheckpoint runs its own materialization job)
-            grown = (
-                result.unionByName(stepped)
-                .distinct()
-                .localCheckpoint(eager=False)
-            )
-            m = grown.count()
-            if m == n:
-                return result
-            result, n = grown, m
-        return result
-
-    result = base
-    frontier = base
-    for _ in range(max_iter):
-        step = (
-            frontier.select("src", F.col("dst").alias("mid"))
-            .join(
-                base.select(F.col("src").alias("mid"), "dst"), "mid"
-            )
-            .select("src", "dst")
-            .distinct()
-        )
-        new = step.join(result, ["src", "dst"], "left_anti").localCheckpoint()
-        if new.isEmpty():
-            break
-        result = result.unionByName(new).localCheckpoint()
-        frontier = new
-    return result
+        .distinct(),
+        _delta_double,
+        _count_new,
+        lambda _, n_new: n_new == 0,
+    ).select("src", "dst")
 
 
 def reachable_from(

@@ -215,23 +215,9 @@ def minhash_doc_dedup(
         .select("da", "db")
     )
 
-    # cluster + min-id representative.  Numeric ids are zero-padded to
-    # a fixed width so string order == numeric order inside the CC
-    # loop; string ids (urls) use their own lexicographic total order.
-    id_type = docs.schema[id_col].dataType.simpleString()
-    numeric = id_type in ("bigint", "int", "smallint", "tinyint")
-    if numeric:
-        enc = lambda c: F.lpad(F.col(c).cast("string"), 20, "0")  # noqa: E731
-        dec = lambda c: F.col(c).cast("bigint")  # noqa: E731
-    else:
-        enc = lambda c: F.col(c)  # noqa: E731
-        dec = lambda c: F.col(c)  # noqa: E731
-    comp = connected_components(
-        ver.select(enc("da").alias("src"), enc("db").alias("dst")),
-        key_encode=False,
-    ).select(
-        dec("node").alias("doc_id"),
-        dec("component").alias("rep_id"),
+    # cluster + min-id representative, in the id column's own order
+    comp = connected_components(ver, "da", "db", key_encode=False).select(
+        F.col("node").alias("doc_id"), F.col("component").alias("rep_id")
     )
 
     all_docs = docs.select(F.col(id_col).alias("doc_id"))

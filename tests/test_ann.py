@@ -307,9 +307,8 @@ def test_semantic_dedup_injected_quantizer_matches_twin(spark):
 
 def test_semantic_dedup_negative_ids_numeric_min_rep(spark):
     """vec_id is caller-supplied bigint, so negative ids are legal.
-    The CC key encoding offsets signed ids by 2^63 before lpad: a raw
-    lpad of '-5' sorts lexicographically ABOVE '0...10', which used to
-    pick the wrong (non-minimum) representative."""
+    CC orders the bigint column itself: a string key that sorts '-5'
+    above '10' would pick the wrong (non-minimum) representative."""
     from arachne_spark.operators.ann import semantic_dedup
 
     v = [1.0, 0.0, 0.0, 0.0]

@@ -6,7 +6,10 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from arachne_spark.operators.cc import connected_components
+from arachne_spark.operators.cc import (
+    canonical_mapping,
+    connected_components,
+)
 
 N_NODES = 20_000
 N_EDGES = 30_000
@@ -14,14 +17,15 @@ N_EDGES = 30_000
 
 def _edges():
     """Deterministic pseudo-random edge list over Q-ids (no RNG —
-    multiplicative hashing keeps it reproducible everywhere)."""
+    multiplicative hashing keeps it reproducible everywhere), plus one
+    P-id: P3 joins Q1's component and, prefix first, represents it."""
     out = []
     for i in range(N_EDGES):
         a = (i * 2654435761) % N_NODES
         b = (i * 40503 + 7) % N_NODES
         if a != b:
             out.append((f"Q{a + 1}", f"Q{b + 1}"))
-    return out
+    return out + [("P3", "Q1")]
 
 
 def _oracle_components(edges):
@@ -41,13 +45,13 @@ def _oracle_components(edges):
 
     for a, b in edges:
         union(a, b)
-    # representative = min (numeric, qid) member per component
+    # representative = min (prefix, numeric) member per component
     members = {}
     for node in parent:
         members.setdefault(find(node), []).append(node)
     want = {}
     for group in members.values():
-        rep = min(group, key=lambda q: (int(q[1:]), q))
+        rep = min(group, key=lambda q: (q[0], int(q[1:])))
         for node in group:
             want[node] = rep
     return want
@@ -89,6 +93,30 @@ def test_cc_handles_long_chain(spark):
     comps = {r["component"] for r in rows}
     assert comps == {"Q1"}
     assert len(rows) == 200
+
+
+def test_canonical_mapping_key_is_injective(spark):
+    """Forms, senses, leading zeros and ids past ten digits each keep
+    their own key: no cluster merges and no invented id appears."""
+    edges = [
+        ("L1-F2", "Q5"),
+        ("L7", "L7-S1"),
+        ("Q05", "Q5"),
+        ("Q12345678901", "Q9"),
+        ("Q12345678902", "Q3"),
+    ]
+    df = spark.createDataFrame(edges, "src string, dst string")
+    got = {
+        r["qid"]: r["canonical_qid"]
+        for r in canonical_mapping(df).collect()
+    }
+    assert got == {
+        "L1-F2": "Q5",
+        "L7-S1": "L7",
+        "Q05": "Q5",
+        "Q12345678901": "Q9",
+        "Q12345678902": "Q3",
+    }
 
 
 def test_pipeline_force_rerun_idempotent(spark, tmp_path):

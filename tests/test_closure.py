@@ -1,8 +1,8 @@
-"""Transitive-closure strategies must agree with a pure-Python BFS
-oracle on shapes that stress them differently: a deep chain (many
-rounds — the seminaive worst case and the delta-doubling round-count
-proof), a shallow tree (the q17 / P31-P279 class-hierarchy shape), and
-a cyclic graph (fixpoint termination with self-reachability)."""
+"""Delta-doubling transitive closure must agree with a pure-Python BFS
+oracle on shapes that stress it differently: a deep chain (many
+rounds — the round-count proof), a shallow tree (the q17 / P31-P279
+class-hierarchy shape), and a cyclic graph (fixpoint termination with
+self-reachability)."""
 
 from __future__ import annotations
 
@@ -11,8 +11,6 @@ from collections import deque
 import pytest
 
 from arachne_spark.operators.closure import reachable_from, transitive_closure
-
-METHODS = ["auto", "doubling", "seminaive"]
 
 
 def _bfs_closure(edges: list[tuple[int, int]]) -> set[tuple[int, int]]:
@@ -33,23 +31,22 @@ def _bfs_closure(edges: list[tuple[int, int]]) -> set[tuple[int, int]]:
     return out
 
 
-# depth 39: many rounds, yet under seminaive's max_iter=64 cap
+# depth 39: the most rounds (⌈log2 39⌉ + 1)
 CHAIN = [(i, i + 1) for i in range(1, 40)]
 TREE = [(i, i // 2) for i in range(2, 200)]  # q17 shape: log-depth
 CYCLIC = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (6, 4), (7, 7)]
 
 
-@pytest.mark.parametrize("method", METHODS)
+# "auto" names the delta-doubling strategy, the only one
 @pytest.mark.parametrize(
-    "edges", [CHAIN, TREE, CYCLIC], ids=["chain", "tree", "cyclic"]
+    "edges",
+    [CHAIN, TREE, CYCLIC],
+    ids=["chain-auto", "tree-auto", "cyclic-auto"],
 )
-def test_closure_matches_bfs_oracle(spark, method, edges):
+def test_closure_matches_bfs_oracle(spark, edges):
     want = _bfs_closure(edges)
     df = spark.createDataFrame(edges, "src bigint, dst bigint")
-    got = {
-        (r["src"], r["dst"])
-        for r in transitive_closure(df, method=method).collect()
-    }
+    got = {(r["src"], r["dst"]) for r in transitive_closure(df).collect()}
     assert got == want
 
 

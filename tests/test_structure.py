@@ -2,11 +2,13 @@
 ``bench.py``, ``tools/``): each piece of the KG link core is defined
 once, and batch, stream and bench call that one definition; each
 media format's structure is walked once, behind one never-raise
-boundary."""
+boundary; connected components and transitive closure share one
+round loop."""
 
 from __future__ import annotations
 
 import ast
+import inspect
 from pathlib import Path
 
 ROOT = Path(__file__).resolve().parent.parent
@@ -126,3 +128,29 @@ def test_media_structure_parsed_once():
         h for h in _holders(_calls("mapInPandas"))
         if h.startswith(media + ":")
     } == {f"{media}:_map_payloads"}
+
+
+def test_fixpoint_loop_defined_once():
+    from arachne_spark.operators.closure import transitive_closure
+
+    loop = "arachne_spark/operators/fixpoint.py:fixpoint"
+    defs = [
+        src for src in SOURCES for n in ast.walk(ast.parse(src.read_text()))
+        if isinstance(n, ast.FunctionDef) and n.name == "fixpoint"
+    ]
+    assert defs == [ROOT / "arachne_spark/operators/fixpoint.py"]
+    # the session factory configures the setting; only the loop resizes
+    # it per round
+    assert _holders(
+        lambda n: isinstance(n, ast.Constant)
+        and n.value == "spark.sql.shuffle.partitions"
+    ) == {loop, "arachne_spark/session.py:get_spark"}
+    assert not {
+        h for h in _holders(_calls("localCheckpoint"))
+        if "/cc.py:" in h or "/closure.py:" in h
+    }
+    assert "method" not in inspect.signature(transitive_closure).parameters
+    # connected components takes native id types: no string encoders
+    for name in ("dedup.py", "ann.py"):
+        src = (ROOT / "arachne_spark/operators" / name).read_text()
+        assert "lpad" not in src and "_OFF" not in src
