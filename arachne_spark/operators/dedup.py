@@ -154,6 +154,14 @@ def minhash_bands(sh: DataFrame) -> DataFrame:
     ).select("doc_id", "b.band_idx", "b.band_hash")
 
 
+def shingle_sets(sh: DataFrame) -> DataFrame:
+    """(doc_id, shset): each document's shingles as a sorted
+    (deterministic) array — the exact-Jaccard verify input."""
+    return sh.groupBy("doc_id").agg(
+        F.sort_array(F.collect_set("s")).alias("shset")
+    )
+
+
 def minhash_doc_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -169,8 +177,25 @@ def minhash_doc_dedup(
     sh = cap_shingle_df(
         doc_shingles(docs, id_col, text_col), max_shingle_df
     )
+    return near_dup_clusters(
+        docs.select(F.col(id_col).alias("doc_id")),
+        minhash_bands(sh),
+        shingle_sets(sh),
+        threshold,
+        max_band_bucket,
+    )
 
-    bands = minhash_bands(sh)
+
+def near_dup_clusters(
+    ids: DataFrame,
+    bands: DataFrame,
+    sets: DataFrame,
+    threshold: float,
+    max_band_bucket: int,
+) -> DataFrame:
+    """The clustering half of ``minhash_doc_dedup``: (doc_id, rep_id,
+    keep) from the documents' ids, ``minhash_bands`` and
+    ``shingle_sets``, for a caller that already holds them."""
     bucket_sz = bands.groupBy("band_idx", "band_hash").agg(
         F.count("*").alias("_bsz")
     )
@@ -192,11 +217,7 @@ def minhash_doc_dedup(
         .dropDuplicates()
     )
 
-    # exact verify over sorted (deterministic) shingle sets of the
-    # candidate docs only
-    sets = sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set("s")).alias("shset")
-    )
+    # exact verify over the shingle sets of the candidate docs only
     ver = (
         cand.join(
             sets.select(
@@ -220,9 +241,8 @@ def minhash_doc_dedup(
         F.col("node").alias("doc_id"), F.col("component").alias("rep_id")
     )
 
-    all_docs = docs.select(F.col(id_col).alias("doc_id"))
     return (
-        all_docs.join(comp, "doc_id", "left")
+        ids.join(comp, "doc_id", "left")
         .select(
             "doc_id",
             F.coalesce("rep_id", "doc_id").alias("rep_id"),

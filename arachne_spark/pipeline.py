@@ -34,16 +34,24 @@ import argparse
 import json
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from arachne_spark.functions.ids import entity_root, identify
 from arachne_spark.operators.cc import canonical_mapping
-from arachne_spark.operators.dedup import minhash_doc_dedup
+from arachne_spark.operators.classify import quality_classifier_filter
+from arachne_spark.operators.dedup import (
+    exact_substring_dedup,
+    minhash_doc_dedup,
+)
 from arachne_spark.operators.extract import clean_pages
 from arachne_spark.operators.lsh_link import fuzzy_mentions
 from arachne_spark.operators.mentions import detect_mentions, link_triples
-from arachne_spark.operators.quality import repetition_filter
+from arachne_spark.operators.quality import (
+    c4_clean,
+    gopher_quality_filter,
+    repetition_filter,
+)
 from arachne_spark.operators.sampling import hash_unit
 from arachne_spark.operators.scrub import scrub_expr
 from arachne_spark.operators.skew import promote_candidates
@@ -147,8 +155,6 @@ def assign_batches(queue: DataFrame) -> DataFrame:
     BATCH_BUCKETS independent windows per kind, each emitting bounded
     batches.
     """
-    from pyspark.sql.window import Window
-
     bucket = F.pmod(F.xxhash64("qid"), F.lit(BATCH_BUCKETS))
     w = Window.partitionBy("kind", "bucket").orderBy("qid")
     return (
@@ -226,48 +232,55 @@ def bucketize_canonical_inputs(
     )
 
 
-def _curate_pages(pages_clean: DataFrame, cfg: PipelineConfig) -> DataFrame:
-    """Optional corpus-hygiene passes, in the order a pre-training
-    pipeline runs them: URL-canonical dedup first (cheapest key, folds
-    recrawl spellings before any text work), then PII scrub (so the
-    near-dup stage sees redacted text and contact-detail-only
-    variants collapse), then the Gopher repetition filter.  Preserves
-    the pages_clean schema exactly."""
-    out = pages_clean
-    cols = pages_clean.columns
-    if cfg.canonical_url_dedup:
-        from pyspark.sql import Window
-
-        canon = with_canonical(out)
+def curate_pages(
+    pages: DataFrame,
+    canonical_url_dedup: bool = False,
+    scrub_pii: bool = False,
+    c4_rules: bool = False,
+    strip_dup_spans: bool = False,
+    dup_span_tokens: int = 50,
+    quality_filter: bool = False,
+    gopher_filter: bool = False,
+    gopher_min_words: int = 50,
+    classifier: tuple[dict[int, float], float, float] | None = None,
+) -> DataFrame:
+    """The one curation pass of batch and stream, in the order a
+    pre-training pipeline runs it: URL-canonical dedup first (cheapest
+    key, folds recrawl spellings before any text work), then PII scrub
+    (so the near-dup stage sees redacted text and contact-detail-only
+    variants collapse), C4 line rules, span strip, the repetition and
+    Gopher filters, the classifier ``(weights, bias, min_prob)``.
+    Preserves the pages schema; returns ``pages`` itself when no step
+    is on.  The stream turns on only the per-row steps."""
+    out = pages
+    if canonical_url_dedup:
         key = F.coalesce(F.col("canonical_url"), F.col("url"))
         w = Window.partitionBy(key).orderBy(
             hash_unit(F.col("url"), "canon_rep"), "url"
         )
         out = (
-            canon.withColumn("__rn", F.row_number().over(w))
+            with_canonical(out)
+            .withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
-            .select(*cols)
+            .select(*pages.columns)
         )
-    if cfg.scrub_pii:
+    if scrub_pii:
         out = out.withColumn("text", scrub_expr(F.col("text")))
-    if cfg.c4_rules:
-        from arachne_spark.operators.quality import c4_clean
-
+    if c4_rules:
         out = c4_clean(out, id_col="url", text_col="text")
-    if cfg.strip_dup_spans:
-        from arachne_spark.operators.dedup import exact_substring_dedup
-
+    if strip_dup_spans:
         out = exact_substring_dedup(
-            out, k=cfg.dup_span_tokens, id_col="url", text_col="text"
+            out, k=dup_span_tokens, id_col="url", text_col="text"
         )
-    if cfg.quality_filter:
+    if quality_filter:
         out = repetition_filter(out, id_col="url", text_col="text")
-    if cfg.gopher_filter:
-        from arachne_spark.operators.quality import gopher_quality_filter
-
+    if gopher_filter:
         out = gopher_quality_filter(
-            out, id_col="url", text_col="text",
-            min_words=cfg.gopher_min_words,
+            out, id_col="url", text_col="text", min_words=gopher_min_words
+        )
+    if classifier is not None:
+        out = quality_classifier_filter(
+            out, *classifier, id_col="url", text_col="text"
         )
     return out
 
@@ -315,18 +328,17 @@ def _run_stage_graph(
         force=cfg.force,
     )
 
-    if (
-        cfg.canonical_url_dedup
-        or cfg.scrub_pii
-        or cfg.c4_rules
-        or cfg.strip_dup_spans
-        or cfg.quality_filter
-        or cfg.gopher_filter
-    ):
+    curated = curate_pages(
+        pages_clean, canonical_url_dedup=cfg.canonical_url_dedup,
+        scrub_pii=cfg.scrub_pii, c4_rules=cfg.c4_rules,
+        strip_dup_spans=cfg.strip_dup_spans,
+        dup_span_tokens=cfg.dup_span_tokens,
+        quality_filter=cfg.quality_filter, gopher_filter=cfg.gopher_filter,
+        gopher_min_words=cfg.gopher_min_words,
+    )
+    if curated is not pages_clean:
         pages_clean = rec.run_stage(
-            "pages_curated",
-            lambda: _curate_pages(pages_clean, cfg),
-            force=cfg.force,
+            "pages_curated", lambda: curated, force=cfg.force
         )
 
     # near-duplicate page map (url → min-url representative): the

@@ -27,7 +27,7 @@ from __future__ import annotations
 
 import hashlib
 import re
-import time
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -49,6 +49,34 @@ def checked_rename(fs, src, dst) -> None:
     deleting the backup turns a failed rename into silent data loss."""
     if not fs.rename(src, dst):
         raise IOError(f"rename failed: {src} -> {dst}")
+
+
+def swap_in(
+    spark: SparkSession, final: str, write: Callable[[str], None]
+) -> None:
+    """The one directory-swap commit: ``write(tmp)`` fills
+    ``<final>.__tmp`` (cleared first, so a failed earlier write leaves
+    nothing behind), then final → ``.__old``, tmp → final, and the
+    backup is deleted — unless a rename fails first (see restore)."""
+    fs, fpath = hadoop_fs(spark, final)
+    mk = spark._jvm.org.apache.hadoop.fs.Path
+    tmp, old = mk(final + ".__tmp"), mk(final + ".__old")
+    fs.delete(tmp, True)
+    write(final + ".__tmp")
+    fs.delete(old, True)
+    if fs.exists(fpath):
+        checked_rename(fs, fpath, old)
+    checked_rename(fs, tmp, fpath)
+    fs.delete(old, True)
+
+
+def restore(spark: SparkSession, final: str) -> None:
+    """Crash recovery for ``swap_in``: a crash between its two renames
+    leaves ``final`` missing and the data at ``<final>.__old``."""
+    fs, fpath = hadoop_fs(spark, final)
+    old = spark._jvm.org.apache.hadoop.fs.Path(final + ".__old")
+    if not fs.exists(fpath) and fs.exists(old):
+        checked_rename(fs, old, fpath)
 
 
 class Warehouse:
@@ -103,45 +131,36 @@ class Warehouse:
                 writer.createOrReplace()
             return
         final = self._path(table)
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
         if mode == "append":
-            w = df.write.mode("append")
-            if partition_by:
-                w = w.partitionBy(*partition_by)
             w.parquet(final)
             return
         # overwrite: write to temp, atomically swap in via the Hadoop
         # FS API (rename is atomic on HDFS and local; on S3A the
         # object-store commit protocol underneath gives the same
         # all-or-nothing contract for the directory marker)
-        tmp = final + f".__tmp_{int(time.time() * 1000)}"
-        w = df.write.mode("overwrite")
-        if partition_by:
-            w = w.partitionBy(*partition_by)
-        w.parquet(tmp)
-        fs, _ = hadoop_fs(self.spark, self.root)
-        if partition_by and not self._has_data_files(fs, tmp):
-            # a ZERO-ROW partitioned write emits no data files at all
-            # (no partition dirs — just _SUCCESS), which a later read
-            # fails to infer a schema from.  Rewrite schema-only,
-            # unpartitioned: an empty part file carries the schema and
-            # the table stays readable (a curation gate that filters a
-            # stage to nothing must not poison the stage graph).
-            df.limit(0).write.mode("overwrite").parquet(tmp)
-        old = self._jpath(final + ".__old")
-        fpath = self._jpath(final)
-        fs.delete(old, True)
-        if fs.exists(fpath):
-            checked_rename(fs, fpath, old)
-        # a failed rename raises BEFORE the backup delete below — the
-        # previous committed copy stays recoverable at .__old
-        checked_rename(fs, self._jpath(tmp), fpath)
-        fs.delete(old, True)
+        def write_tmp(tmp: str) -> None:
+            w.parquet(tmp)
+            if partition_by and not self._has_data_files(tmp):
+                # a ZERO-ROW partitioned write emits no data files at
+                # all (no partition dirs — just _SUCCESS), which a
+                # later read fails to infer a schema from.  Rewrite
+                # schema-only, unpartitioned: an empty part file
+                # carries the schema and the table stays readable (a
+                # curation gate that filters a stage to nothing must
+                # not poison the stage graph).
+                df.limit(0).write.mode("overwrite").parquet(tmp)
 
-    def _has_data_files(self, fs, path: str) -> bool:
+        swap_in(self.spark, final, write_tmp)
+
+    def _has_data_files(self, path: str) -> bool:
         """True iff the directory holds anything besides commit
         markers (_SUCCESS, .crc) — i.e. at least one data file or
         partition directory."""
-        for st in fs.listStatus(self._jpath(path)):
+        fs, hpath = hadoop_fs(self.spark, path)
+        for st in fs.listStatus(hpath):
             name = st.getPath().getName()
             if not name.startswith(("_", ".")):
                 return True

@@ -43,11 +43,19 @@ from arachne_spark.operators.mentions import (
     resolve_alias_dict,
     tokenize,
 )
-from arachne_spark.plans.storage import checked_rename, hadoop_fs
+from arachne_spark.pipeline import curate_pages
+from arachne_spark.plans.storage import hadoop_fs, restore, swap_in
 
 PAGE_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
 )
+# two-tier state shape (TwoTierState): compact after this many delta
+# partitions, into this many base files
+COMPACT_EVERY = 4
+STATE_FILES = 8
+# streaming dedup: exact-Jaccard verify threshold and band-bucket cap
+DEDUP_THRESHOLD = 0.9
+MAX_BAND_BUCKET = 20
 
 
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
@@ -94,48 +102,32 @@ class TwoTierState:
     of stream history.
 
     * ``<state_dir>/base`` — the compacted relation, rewritten as
-      ``n_files`` files at every compaction;
+      ``STATE_FILES`` files at every compaction;
     * ``<state_dir>/delta`` — per-batch ``batch_id=<n>`` partitions of
       the same schema, written with dynamic partition overwrite
       (idempotent under foreachBatch's at-least-once retries).
 
-    Every ``compact_every`` delta partitions, base ∪ deltas is
+    Every ``COMPACT_EVERY`` delta partitions, base ∪ deltas is
     rewritten into a fresh base (full-row ``dropDuplicates`` absorbs
     retry-duplicated rows) and the delta dir is cleared, so each batch
-    reads at most ``n_files`` base files plus ``compact_every`` delta
-    partitions.  ``read_committed`` also applies ``dropDuplicates``:
-    a crash between the base swap and the delta clear leaves the
-    merged rows present in BOTH tiers until the next compaction, and
-    the read-side dedup (cheap on the bounded state relation) makes
-    that window invisible to every consumer.  All file ops go through
-    the Hadoop FileSystem API so the layout works on HDFS/S3 exactly
-    as on local disk; an Iceberg deployment replaces the swap with a
-    MERGE / rewrite_data_files maintenance action.
+    reads at most ``STATE_FILES`` base files plus ``COMPACT_EVERY``
+    delta partitions.  The base is replaced by ``storage.swap_in``;
+    the delta dir is cleared only AFTER a completed swap, so
+    ``storage.restore`` (before every read and compaction) rebuilds
+    exactly the committed state after a crash mid-swap.
+    ``read_committed`` also applies ``dropDuplicates``: a crash
+    between the base swap and the delta clear leaves the merged rows
+    present in BOTH tiers until the next compaction, and the read-side
+    dedup (cheap on the bounded state relation) makes that window
+    invisible to every consumer.  All file ops go through the Hadoop
+    FileSystem API so the layout works on HDFS/S3 exactly as on local
+    disk; an Iceberg deployment replaces the swap with a MERGE /
+    rewrite_data_files maintenance action.
     """
 
-    def __init__(
-        self,
-        state_dir: str,
-        compact_every: int = 4,
-        n_files: int = 8,
-    ):
+    def __init__(self, state_dir: str):
         self.base_dir = state_dir + "/base"
         self.delta_dir = state_dir + "/delta"
-        self.compact_every = compact_every
-        self.n_files = n_files
-
-    def recover_base(self, sp: SparkSession) -> None:
-        """Crash recovery for the compaction swap: the swap is
-        rename(base→old); rename(tmp→base).  A crash between the two
-        leaves base missing and the data in old — and since the delta
-        dir is only cleared AFTER a completed swap, restoring old
-        reconstructs exactly the committed state (old ∪ deltas =
-        the merged tmp)."""
-        fs, bpath = hadoop_fs(sp, self.base_dir)
-        jvm = sp._jvm
-        old = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__old")
-        if not fs.exists(bpath) and fs.exists(old):
-            checked_rename(fs, old, bpath)
 
     def _read_all(self, sp: SparkSession) -> DataFrame | None:
         parts = [
@@ -159,7 +151,7 @@ class TwoTierState:
         """Base ∪ deltas, minus THIS batch's partition (on an
         at-least-once retry its partial rows exist and must not
         pollute the probe), full-row deduplicated (see class doc)."""
-        self.recover_base(sp)
+        restore(sp, self.base_dir)
         comm = self._read_all(sp)
         if comm is None:
             return None
@@ -168,32 +160,23 @@ class TwoTierState:
         ).dropDuplicates()
 
     def exists(self, sp: SparkSession) -> bool:
-        """True if either tier (or a recoverable base) is present."""
+        """True if either tier is present, once a base left mid-swap
+        is restored."""
+        restore(sp, self.base_dir)
         fs, bpath = hadoop_fs(sp, self.base_dir)
-        jvm = sp._jvm
-        mk = jvm.org.apache.hadoop.fs.Path
-        return bool(
-            fs.exists(bpath)
-            or fs.exists(mk(self.delta_dir))
-            or fs.exists(mk(self.base_dir + ".__old"))
-        )
+        mk = sp._jvm.org.apache.hadoop.fs.Path
+        return bool(fs.exists(bpath) or fs.exists(mk(self.delta_dir)))
 
     def seed_base(self, df: DataFrame) -> None:
         """One-time bootstrap: write ``df`` as the compacted base
-        (atomic tmp-write + checked rename, so a crash mid-seed never
-        leaves a partial base that would silently shrink the probe).
-        Caller ensures the state does not already exist."""
-        sp = df.sparkSession
-        fs, bpath = hadoop_fs(sp, self.base_dir)
-        jvm = sp._jvm
-        tmp = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__tmp")
-        fs.delete(tmp, True)
-        (
-            df.repartition(self.n_files)
-            .write.mode("overwrite")
-            .parquet(self.base_dir + ".__tmp")
+        through the swap, so a crash mid-seed never leaves a partial
+        base that would silently shrink the probe.  Caller ensures the
+        state does not already exist."""
+        swap_in(
+            df.sparkSession,
+            self.base_dir,
+            df.repartition(STATE_FILES).write.mode("overwrite").parquet,
         )
-        checked_rename(fs, tmp, bpath)
 
     def write_delta(self, df: DataFrame, batch_id: int) -> None:
         """Append ``df`` as the batch's ``batch_id=<n>`` delta
@@ -202,7 +185,7 @@ class TwoTierState:
         write_batch_partition(df, self.delta_dir, batch_id)
 
     def compact(self, sp: SparkSession) -> None:
-        self.recover_base(sp)
+        restore(sp, self.base_dir)
         fs, dpath = hadoop_fs(sp, self.delta_dir)
         if not fs.exists(dpath):
             return
@@ -211,27 +194,18 @@ class TwoTierState:
             for st in fs.listStatus(dpath)
             if st.getPath().getName().startswith("batch_id=")
         )
-        if n_deltas < self.compact_every:
+        if n_deltas < COMPACT_EVERY:
             return
-        merged = self._read_all(sp)
         # full-row dedup: absorbs rows double-committed when a retry
         # interleaves with a compaction swap
-        merged = merged.dropDuplicates().repartition(self.n_files)
-        jvm = sp._jvm
-        tmp = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__tmp")
-        old = jvm.org.apache.hadoop.fs.Path(self.base_dir + ".__old")
-        bpath = jvm.org.apache.hadoop.fs.Path(self.base_dir)
-        fs.delete(tmp, True)
-        merged.write.mode("overwrite").parquet(self.base_dir + ".__tmp")
-        fs.delete(old, True)
-        if fs.exists(bpath):
-            checked_rename(fs, bpath, old)
-        # a failed swap raises HERE, before the backup and delta dirs
-        # are cleared — the batch fails, foreachBatch retries it, and
-        # recover_base restores the old base; silent state loss is the
-        # one unacceptable outcome
-        checked_rename(fs, tmp, bpath)
-        fs.delete(old, True)
+        merged = (
+            self._read_all(sp).dropDuplicates().repartition(STATE_FILES)
+        )
+        # a failed swap raises HERE, before the delta dir is cleared —
+        # the batch fails, foreachBatch retries it, and restore brings
+        # the old base back; silent state loss is the one unacceptable
+        # outcome
+        swap_in(sp, self.base_dir, merged.write.mode("overwrite").parquet)
         fs.delete(dpath, True)
 
 
@@ -284,25 +258,69 @@ def streaming_mention_counts(
     )
 
 
+def _run_micro_batches(
+    spark: SparkSession,
+    src_dir: str,
+    out_dir: str,
+    checkpoint_dir: str,
+    state: TwoTierState,
+    available_now: bool,
+    step,
+):
+    """Start the foreachBatch stream both drivers share: the one
+    per-batch commit.  ``step(batch_df, committed, cache)`` plans the
+    batch against ``committed`` (``state.read_committed``: the probe
+    without this batch's own partial rows) and returns ``(out,
+    delta)``; ``cache(df)`` persists a frame the two writes share.
+    ``out`` becomes the ``batch_id=<n>`` partition of ``out_dir`` and
+    ``delta`` the state's delta partition; what was persisted is
+    released also when a write raises, and only a committed batch
+    compacts the state.  The state calls go through the instance: the
+    benchmark instruments them on the class."""
+
+    def commit(batch_df: DataFrame, batch_id: int) -> None:
+        sp = batch_df.sparkSession
+        cached: list[DataFrame] = []
+
+        def cache(df: DataFrame) -> DataFrame:
+            cached.append(df.persist())
+            return df
+
+        try:
+            out, delta = step(
+                batch_df, state.read_committed(sp, batch_id), cache
+            )
+            write_batch_partition(out, out_dir, batch_id)
+            state.write_delta(delta, batch_id)
+        finally:
+            for df in cached:
+                df.unpersist()
+        state.compact(sp)
+
+    writer = (
+        stream_pages(spark, src_dir)
+        .writeStream.foreachBatch(commit)
+        .option("checkpointLocation", checkpoint_dir)
+    )
+    if available_now:
+        writer = writer.trigger(availableNow=True)
+    return writer.start()
+
+
 def run_incremental_dedup(
     spark: SparkSession,
     src_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    threshold: float = 0.9,
-    max_shingle_df: int | None = None,
-    max_band_bucket: int = 20,
     available_now: bool = True,
     state_dir: str | None = None,
-    compact_every: int = 4,
-    n_state_files: int = 8,
 ):
     """Streaming near-duplicate page dedup with stable representatives.
 
     Per micro-batch:
 
-    1. cluster the batch's pages intra-batch with the full batch
-       operator (``minhash_doc_dedup``);
+    1. cluster the batch's pages intra-batch with the batch operator's
+       clustering (``near_dup_clusters``);
     2. probe each page's MinHash bands against the *committed* band
        index (all pages seen in earlier batches), verify candidates by
        exact Jaccard over stored shingle sets, and adopt the minimum
@@ -320,77 +338,45 @@ def run_incremental_dedup(
     nightly pass.  This is the standard split between online dedup and
     offline re-clustering.
 
-    ``max_shingle_df`` defaults to **None** (no df-cap) here, unlike
-    the batch operator: the cap is computed over whatever shares the
-    micro-batch, so a capped signature is NOT a pure function of the
-    document — the same page would hash differently depending on batch
-    composition, and a mirror arriving in a boilerplate-heavy batch
-    would fail to collide with its committed original.  Quadratic
-    blow-up through hot bands is still bounded by ``max_band_bucket``,
-    and precision by the exact-Jaccard verify; the nightly batch
-    re-stitcher applies the globally-consistent df-cap.
+    **No df-cap** here, unlike the batch operator: the cap is computed
+    over whatever shares the micro-batch, so a capped signature is NOT
+    a pure function of the document — the same page would hash
+    differently depending on batch composition, and a mirror arriving
+    in a boilerplate-heavy batch would fail to collide with its
+    committed original.  Quadratic blow-up through hot bands is still
+    bounded by ``MAX_BAND_BUCKET``, and precision by the exact-Jaccard
+    verify; the nightly batch re-stitcher applies the
+    globally-consistent df-cap.
 
-    State layout (``state_dir``, default ``out_dir + "_state"``): a
-    **compacted two-tier band index** so per-batch probe cost does NOT
-    grow with the number of batches streamed:
-
-    * ``state_dir/base`` — the compacted index
-      ``(url, rep_url, band_idx, band_hash, shset, batch_id)``,
-      rewritten as ``n_state_files`` files at every compaction;
-    * ``state_dir/delta`` — per-batch ``batch_id=<n>`` appendixes of
-      the same schema, written with dynamic partition overwrite
-      (idempotent under foreachBatch's at-least-once retries).
-
-    Every ``compact_every`` delta partitions, base ∪ deltas is
-    rewritten into a fresh base (full-row dropDuplicates absorbs
-    retry-duplicated rows) and the delta dir is cleared, so each batch
-    reads at most ``n_state_files`` base files plus ``compact_every``
-    delta partitions — bounded file count regardless of stream
-    history.  (An Iceberg deployment replaces the swap with a MERGE /
-    rewrite_data_files maintenance action; all file ops here go
-    through the Hadoop FileSystem API so the layout works on HDFS/S3
-    exactly as on local disk.)
+    The committed band index ``(url, rep_url, band_idx, band_hash,
+    shset, batch_id)`` is a ``TwoTierState`` at ``state_dir`` (default
+    ``out_dir + "_state"``).
     """
     from arachne_spark.operators.dedup import (
-        cap_shingle_df,
         doc_shingles,
         minhash_bands,
-        minhash_doc_dedup,
+        near_dup_clusters,
+        shingle_sets,
     )
     from arachne_spark.operators.lsh_link import jaccard_expr
 
-    sdir = state_dir if state_dir is not None else out_dir + "_state"
-    state = TwoTierState(
-        sdir, compact_every=compact_every, n_files=n_state_files
-    )
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
+    def process(batch_df: DataFrame, comm: DataFrame | None, cache):
         docs = with_text(latest_snapshot(batch_df)).select("url", "text")
-
-        sh = cap_shingle_df(
-            doc_shingles(docs, id_col="url"), max_shingle_df
-        )
+        sh = doc_shingles(docs, id_col="url")
         # sets, bands and out (below) each feed both writes of the
-        # batch (output partition + state rows): persisted, so the
+        # batch (output partition + state rows): cached, so the
         # shingle/band derivation, the intra-batch dedup and the
         # committed-band probe run once per batch, not twice
-        sets = (
-            sh.groupBy("doc_id")
-            .agg(F.sort_array(F.collect_set("s")).alias("shset"))
-            .persist()
-        )
-        bands = minhash_bands(sh).persist()
-        intra = minhash_doc_dedup(
-            docs, id_col="url", text_col="text", threshold=threshold,
-            max_shingle_df=max_shingle_df,
-            max_band_bucket=max_band_bucket,
+        sets = cache(shingle_sets(sh))
+        bands = cache(minhash_bands(sh))
+        intra = near_dup_clusters(
+            docs.select(F.col("url").alias("doc_id")), bands, sets,
+            DEDUP_THRESHOLD, MAX_BAND_BUCKET,
         ).select(
             F.col("doc_id").alias("url"),
             F.col("rep_id").alias("intra_rep"),
         )
 
-        comm = state.read_committed(sp, batch_id)
         if comm is not None:
             cand = (
                 bands.join(
@@ -405,7 +391,7 @@ def run_incremental_dedup(
                 .withColumn(
                     "j", F.round(jaccard_expr("shset", "c_shset"), 4)
                 )
-                .where(F.col("j") >= threshold)
+                .where(F.col("j") >= DEDUP_THRESHOLD)
                 .groupBy(F.col("doc_id").alias("url"))
                 .agg(F.min("c_rep").alias("comm_rep"))
             )
@@ -429,9 +415,9 @@ def run_incremental_dedup(
                 "url", F.col("intra_rep").alias("rep_url")
             )
 
-        out = resolved.withColumn(
-            "keep", F.col("url") == F.col("rep_url")
-        ).persist()
+        out = cache(
+            resolved.withColumn("keep", F.col("url") == F.col("rep_url"))
+        )
         state_rows = (
             out.select("url", "rep_url")
             .join(
@@ -448,20 +434,15 @@ def run_incremental_dedup(
                 "left",
             )
         )
-        write_batch_partition(out, out_dir, batch_id)
-        state.write_delta(state_rows, batch_id)
-        for df in (out, sets, bands):
-            df.unpersist()
-        state.compact(sp)
+        return out, state_rows
 
-    writer = (
-        stream_pages(spark, src_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    state = TwoTierState(
+        state_dir if state_dir is not None else out_dir + "_state"
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _run_micro_batches(
+        spark, src_dir, out_dir, checkpoint_dir, state, available_now,
+        process,
+    )
 
 
 def run_incremental_pipeline(
@@ -473,8 +454,6 @@ def run_incremental_pipeline(
     predicate_df: DataFrame,
     available_now: bool = True,
     state_dir: str | None = None,
-    compact_every: int = 4,
-    n_state_files: int = 8,
     scrub_pii: bool = False,
     c4_rules: bool = False,
     gopher_filter: bool = False,
@@ -497,29 +476,25 @@ def run_incremental_pipeline(
       output table (re-reading every ``batch_id=*`` partition would
       make per-batch cost O(stream history)): it is a **compacted
       probe index** (``TwoTierState`` at ``state_dir``, default
-      ``out_dir + "_state"``) holding exactly the committed triple
-      keys — per-batch reads stay bounded by ``n_state_files`` base
-      files + ``compact_every`` delta partitions regardless of how
-      long the stream has run.  An Iceberg sink expresses the same
+      ``out_dir + "_state"``, bounded per-batch reads) holding exactly
+      the committed triple keys.  An Iceberg sink expresses the same
       upsert natively as MERGE; the probe index is the parquet-
       fallback statement of it.
 
     **Curation gates** (``scrub_pii`` / ``c4_rules`` /
     ``gopher_filter`` / ``classifier=(weights, bias, min_prob)``): the
-    per-row hygiene passes of the batch pipeline
-    (pipeline._curate_pages), applied per micro-batch in the same
-    order.  Only these four are offered on the stream — each is a pure
-    function of row CONTENT (the CLAUDE.md streaming invariant), so
-    batch boundaries cannot change any row's fate and streaming output
-    equals the gated batch answer (test-pinned).  The CROSS-CORPUS
-    passes (canonical-URL dedup, span dedup, boilerplate strip) stay
-    batch-only by design: their output depends on the whole corpus, so
-    a streaming variant would encode batch boundaries into results.
+    per-row steps of the batch's curation pass (``curate_pages``),
+    applied per micro-batch in the same order.  Only these are offered
+    on the stream — each is a pure function of row CONTENT (the
+    CLAUDE.md streaming invariant), so batch boundaries cannot change
+    any row's fate and streaming output equals the gated batch answer
+    (test-pinned).  The CROSS-CORPUS passes (canonical-URL dedup, span
+    dedup, boilerplate strip) stay batch-only by design: their output
+    depends on the whole corpus, so a streaming variant would encode
+    batch boundaries into results.
     """
     state = TwoTierState(
-        state_dir if state_dir is not None else out_dir + "_state",
-        compact_every=compact_every,
-        n_files=n_state_files,
+        state_dir if state_dir is not None else out_dir + "_state"
     )
     # Migration / divergence bootstrap: a stream whose output was
     # committed before the probe index existed (or whose state dir was
@@ -547,66 +522,32 @@ def run_incremental_pipeline(
                 )
             )
 
-    def curate(pages: DataFrame) -> DataFrame:
-        out = pages
-        if scrub_pii:
-            from arachne_spark.operators.scrub import scrub_expr
-
-            out = out.withColumn("text", scrub_expr(F.col("text")))
-        if c4_rules:
-            from arachne_spark.operators.quality import c4_clean
-
-            out = c4_clean(out, id_col="url", text_col="text")
-        if gopher_filter:
-            from arachne_spark.operators.quality import (
-                gopher_quality_filter,
-            )
-
-            out = gopher_quality_filter(
-                out, id_col="url", text_col="text",
-                min_words=gopher_min_words,
-            )
-        if classifier is not None:
-            from arachne_spark.operators.classify import (
-                quality_classifier_filter,
-            )
-
-            w, bias, min_prob = classifier
-            out = quality_classifier_filter(
-                out, w, bias, min_prob, id_col="url", text_col="text"
-            )
-        return out
-
-    def process(batch_df: DataFrame, batch_id: int) -> None:
-        sp = batch_df.sparkSession
-        m = detect_mentions(curate(clean_pages(batch_df)), alias_df)
-        triples = link_triples(m, predicate_df)
-        # read_committed excludes THIS batch's delta partition: on an
+    def process(batch_df: DataFrame, committed: DataFrame | None, cache):
+        pages = curate_pages(
+            clean_pages(batch_df),
+            scrub_pii=scrub_pii,
+            c4_rules=c4_rules,
+            gopher_filter=gopher_filter,
+            gopher_min_words=gopher_min_words,
+            classifier=classifier,
+        )
+        triples = link_triples(detect_mentions(pages, alias_df), predicate_df)
+        # committed excludes THIS batch's delta partition: on an
         # at-least-once retry its partial rows exist, and anti-joining
         # against them before overwriting the same partition would
         # drop the partially-written triples.
-        committed = state.read_committed(sp, batch_id)
         if committed is not None:
             triples = triples.join(
                 committed.select("subj", "pred", "obj"),
                 ["subj", "pred", "obj"],
                 "left_anti",
             )
-        # two consumers (output partition + probe-index delta): persist
+        # two consumers (output partition + probe-index delta): cached
         # so the extraction core runs once per batch, not twice
-        triples = triples.persist()
-        write_batch_partition(triples, out_dir, batch_id)
-        state.write_delta(
-            triples.select("subj", "pred", "obj"), batch_id
-        )
-        triples.unpersist()
-        state.compact(sp)
+        triples = cache(triples)
+        return triples, triples.select("subj", "pred", "obj")
 
-    writer = (
-        stream_pages(spark, src_dir)
-        .writeStream.foreachBatch(process)
-        .option("checkpointLocation", checkpoint_dir)
+    return _run_micro_batches(
+        spark, src_dir, out_dir, checkpoint_dir, state, available_now,
+        process,
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -1,9 +1,12 @@
 """Benchmark harness.
 
-Prints ONE JSON line:
+Writes the full record to ``bench_record.json`` beside this file and
+ends stdout with one compact JSON line of at most ``LINE_BUDGET``
+chars, so a reader of the log's tail can parse it:
   {"metric": "...", "value": <total headline sec>, "unit": "sec",
-   "queries": {...per-query sec...}, "sf": ...,
-   "kg": {"triples_sec_n": ..., "triples_sec_4n": ...,
+   "sf": ..., "queries": {...per-query sec...},
+   "kg": {"pages": ..., "triples": ..., "wall_sec_n": ...,
+          "wall_sec_4n": ..., "triples_sec_n": ..., "triples_sec_4n": ...,
           "scaling_efficiency_n_to_4n": ...}}
 
 Two parts:
@@ -121,6 +124,26 @@ KG_RETRY_BUDGET_SEC = 2600
 # exactly when the first two ran clean-fast but still scored low —
 # the one case a retry can fix.
 KG_THIRD_PAIR_BUDGET_SEC = 3000
+
+# the last stdout line: headline fields only, within LINE_BUDGET chars;
+# query_runs, curation, graph, semdedup, media and kg.pairs live in the
+# full record at RECORD_PATH
+LINE_BUDGET = 1500
+LINE_FIELDS = ("metric", "value", "unit", "sf", "queries")
+KG_LINE_FIELDS = (
+    "pages", "triples", "wall_sec_n", "wall_sec_4n", "triples_sec_n",
+    "triples_sec_4n", "scaling_efficiency_n_to_4n",
+)
+RECORD_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "bench_record.json"
+)
+
+
+def result_line(result: dict) -> str:
+    """The headline fields of ``result`` as one compact JSON line."""
+    line = {k: result[k] for k in LINE_FIELDS}
+    line["kg"] = {k: result["kg"][k] for k in KG_LINE_FIELDS}
+    return json.dumps(line, separators=(",", ":"))
 
 
 def run_headline(
@@ -718,7 +741,10 @@ def main() -> None:
             "retry_ran": len(pairs) > 1,
         },
     }
-    print(json.dumps(result))
+    with open(RECORD_PATH, "w") as f:
+        json.dump(result, f, indent=1)
+    print(f"full record: {RECORD_PATH}", file=sys.stderr)
+    print(result_line(result))
 
 
 if __name__ == "__main__":

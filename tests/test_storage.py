@@ -92,3 +92,23 @@ def test_empty_partitioned_overwrite_stays_readable(spark, tmp_path):
         for r in wh.read("triples").collect()
     }
     assert got == {("s1", "p1", "o1"), ("s2", "p2", "o2")}
+
+
+def test_failed_overwrite_leaves_no_temp_dir(spark, tmp_path):
+    """A write whose plan raises must not leave a temp directory
+    behind once the next write of the table commits, and the table
+    then holds exactly the good rows."""
+    from pyspark.sql import functions as F
+
+    root = tmp_path / "wh_tmp"
+    wh = Warehouse(spark, str(root))
+    bad = spark.range(3).select(
+        F.raise_error(F.lit("boom")).cast("string").alias("v")
+    )
+    with pytest.raises(Exception):
+        wh.write(bad, "t")
+    good = spark.createDataFrame([("a",), ("b",)], "v string")
+    wh.write(good, "t")
+    assert not [p.name for p in root.iterdir() if p.name.startswith(
+        "t.__tmp")]
+    assert sorted(r["v"] for r in wh.read("t").collect()) == ["a", "b"]

@@ -154,3 +154,46 @@ def test_fixpoint_loop_defined_once():
     for name in ("dedup.py", "ann.py"):
         src = (ROOT / "arachne_spark/operators" / name).read_text()
         assert "lpad" not in src and "_OFF" not in src
+
+
+def test_stream_commit_swap_and_curation_defined_once():
+    from arachne_spark.streaming.incremental import (
+        TwoTierState,
+        run_incremental_dedup,
+        run_incremental_pipeline,
+    )
+
+    inc = "arachne_spark/streaming/incremental.py"
+    storage = "arachne_spark/plans/storage.py"
+    curate = "arachne_spark/pipeline.py:curate_pages"
+    # one micro-batch driver builds the stream for both drivers
+    assert _holders(
+        lambda n: isinstance(n, ast.Attribute) and n.attr == "writeStream"
+    ) == {f"{inc}:_run_micro_batches"}
+    # one directory-swap protocol: every checked rename and the swap's
+    # directory names are in storage
+    assert _holders(_calls("checked_rename")) == {
+        f"{storage}:swap_in", f"{storage}:restore"}
+    assert _holders(
+        lambda n: isinstance(n, ast.Constant) and isinstance(n.value, str)
+        and (".__tmp" in n.value or ".__old" in n.value)
+    ) == {f"{storage}:swap_in", f"{storage}:restore"}
+    # one curation pass for batch and stream
+    for name in ("c4_clean", "gopher_quality_filter",
+                 "quality_classifier_filter"):
+        assert _holders(_calls(name)) == {curate}, name
+    assert _holders(_calls("scrub_expr")) == {
+        curate, "arachne_spark/operators/scrub.py:scrub_pii"}
+    # the stream's fixed shape is module constants, not options
+    removed = {"compact_every", "n_state_files", "n_files", "threshold",
+               "max_shingle_df", "max_band_bucket"}
+    for fn in (run_incremental_dedup, run_incremental_pipeline,
+               TwoTierState.__init__):
+        assert not removed & set(inspect.signature(fn).parameters), fn
+    # no wall-clock-derived names in the warehouse
+    assert not {
+        h for h in _holders(
+            lambda n: isinstance(n, ast.Attribute) and n.attr == "time"
+            and getattr(n.value, "id", None) == "time")
+        if h.startswith(storage + ":")
+    }
