@@ -592,7 +592,7 @@ def semantic_dedup(
     duplicates are rare by definition, so that relation is small).
     Deterministic end-to-end: kmeans_fit's decimal-exact centroids,
     tie-broken assignment, rounded sims, min-id representative."""
-    from .cc import connected_components
+    from .cc import representatives
 
     if centroids is not None:
         cents = centroids
@@ -622,22 +622,10 @@ def semantic_dedup(
         )
         .where(F.col("qvec") < F.col("nvec"))
     )
-    dup = pairs.select(
-        "qvec",
-        "nvec",
+    dup = pairs.where(
         F.round(
             cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
-        ).alias("sim"),
-    ).where(F.col("sim") >= threshold)
-    # min-id representative via CC, in the id column's own order
-    comp = connected_components(dup, "qvec", "nvec", key_encode=False).select(
-        F.col("node").alias("vec_id"), F.col("component").alias("rep_id")
-    )
-    return (
-        emb.select(F.col(id_col).alias("vec_id"))
-        .join(comp, "vec_id", "left")
-        .select(
-            "vec_id", F.coalesce("rep_id", "vec_id").alias("rep_id")
         )
-        .withColumn("keep", F.col("vec_id") == F.col("rep_id"))
-    )
+        >= threshold
+    ).select("qvec", "nvec")
+    return representatives(emb.select(F.col(id_col).alias("vec_id")), dup)

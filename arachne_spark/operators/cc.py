@@ -130,6 +130,27 @@ def connected_components(
     return out
 
 
+def representatives(ids: DataFrame, pairs: DataFrame) -> DataFrame:
+    """(id, rep_id, keep): each id of the one-column ``ids`` mapped to
+    the minimum id of its component in the undirected two-column
+    ``pairs``, in the id column's own type and order; an id in no pair
+    is its own representative.  keep = (id == rep_id) — filtering on
+    it IS the dedup."""
+    (idc,) = ids.columns
+    comp = connected_components(pairs, *pairs.columns, key_encode=False)
+    return (
+        ids.join(
+            comp.select(
+                F.col("node").alias(idc), F.col("component").alias("rep_id")
+            ),
+            idc,
+            "left",
+        )
+        .select(idc, F.coalesce("rep_id", idc).alias("rep_id"))
+        .withColumn("keep", F.col(idc) == F.col("rep_id"))
+    )
+
+
 def canonical_mapping(edges: DataFrame) -> DataFrame:
     """(qid, canonical_qid) from sameAs edges; identity rows omitted."""
     cc = connected_components(edges)

@@ -3,8 +3,9 @@ operator: MinHash bands → candidate pairs → exact-Jaccard verify →
 connected components → keep the min-id representative.
 
 The reference has no document dedup (it ingests entity data, not web
-text); this composes the engine's own primitives (minhash banding as in
-q24, jaccard_expr from lsh_link, cc.connected_components) into the
+text); this composes the engine's own primitives (``lsh_link.minhash``
+and ``lsh_link.lsh_join``, the one MinHash-LSH that fuzzy linking and
+the streaming dedup also run, and ``cc.representatives``) into the
 end-to-end pipeline a 100 TB crawl actually needs.  Scale posture:
 
 * **shingling** is a narrow per-doc projection (token k-grams,
@@ -14,24 +15,25 @@ end-to-end pipeline a 100 TB crawl actually needs.  Scale posture:
   are dropped *before* any join — one hot shingle would otherwise make
   the inverted-index pair generation quadratic in its document
   frequency.  The cap costs one small aggregation over (shingle, df);
-* **banding**: 8 minhashes → 2 bands; a pair collides iff some band
-  matches, so candidate generation is an equi-join on
-  (band_idx, band_hash) — never all-pairs;
+* **banding**: one aggregation per doc gives its sorted shingle set
+  and 8 minhashes → 2 bands; a pair collides iff some band matches,
+  so candidate generation is an equi-join on (band_idx, band_hash) —
+  never all-pairs;
 * **bucket-cap**: a band bucket with B docs yields B^2/2 candidate
   pairs; buckets larger than ``max_band_bucket`` are near-certainly
   boilerplate clusters (every template page hashing identically) and
   are dropped — dedup of *exact* template duplicates belongs to the
   cheaper exact-hash pass (q03/q22 fingerprints), not the quadratic
   verifier;
-* **verify** joins the (sorted, deterministic) shingle sets of the
-  candidate pairs only — candidate-pair-scale data, corpus-scale never
-  shuffles;
+* **verify** scores the candidate pairs only, over the (sorted,
+  deterministic) shingle sets that travel with the band rows — no
+  document text shuffles;
 * **clustering** uses the large-star/small-star CC operator (O(log n)
   rounds, no star materialization), and the representative is the
   minimum doc id — total order, no ties.
 
-MinHash scheme is md5-based and identical to q24's so a DuckDB oracle
-reproduces every signature bit-for-bit.
+The MinHash scheme is md5-based, so a DuckDB oracle reproduces every
+signature bit-for-bit.
 """
 
 from __future__ import annotations
@@ -39,11 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from arachne_spark.operators.cc import connected_components
-from arachne_spark.operators.lsh_link import jaccard_expr
-
-N_HASHES = 8
-N_BANDS = 2
+from arachne_spark.operators.cc import representatives
+from arachne_spark.operators.lsh_link import lsh_join, minhash
 
 
 def doc_shingles(
@@ -98,70 +97,6 @@ def cap_shingle_df(sh: DataFrame, max_df: int | None) -> DataFrame:
     )
 
 
-def ngram_jaccard_pairs(
-    sh: DataFrame, threshold: float = 0.03
-) -> DataFrame:
-    """(da, db, jaccard): inverted-index self-join over (df-capped)
-    shingles + exact Jaccard.  Callers cap df first; this function is
-    the q23 surface."""
-    sizes = sh.groupBy("doc_id").agg(F.count("*").alias("n"))
-    a = sh.select(F.col("doc_id").alias("da"), "s")
-    b = sh.select(F.col("doc_id").alias("db"), "s")
-    inter = (
-        a.join(b, "s")
-        .where(F.col("da") < F.col("db"))
-        .groupBy("da", "db")
-        .agg(F.count("*").alias("i"))
-    )
-    na = sizes.select(F.col("doc_id").alias("da"), F.col("n").alias("na"))
-    nb = sizes.select(F.col("doc_id").alias("db"), F.col("n").alias("nb"))
-    return (
-        inter.join(na, "da")
-        .join(nb, "db")
-        .select(
-            "da",
-            "db",
-            F.round(
-                F.col("i") / (F.col("na") + F.col("nb") - F.col("i")), 4
-            ).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
-
-
-def minhash_bands(sh: DataFrame) -> DataFrame:
-    """(doc_id, band_idx, band_hash): md5 minhash signature grouped
-    into bands — the q24 scheme (8 hashes, 2 bands), oracle-exact."""
-    mins = [
-        F.min(F.md5(F.concat(F.lit(f"{p}:"), F.col("s")))).alias(f"m{p}")
-        for p in range(N_HASHES)
-    ]
-    sig = sh.groupBy("doc_id").agg(*mins)
-    rows = N_HASHES // N_BANDS
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(j).alias("band_idx"),
-                F.md5(
-                    F.concat(*[F.col(f"m{j * rows + i}") for i in range(rows)])
-                ).alias("band_hash"),
-            )
-            for j in range(N_BANDS)
-        ]
-    )
-    return sig.select(
-        "doc_id", F.explode(bands).alias("b")
-    ).select("doc_id", "b.band_idx", "b.band_hash")
-
-
-def shingle_sets(sh: DataFrame) -> DataFrame:
-    """(doc_id, shset): each document's shingles as a sorted
-    (deterministic) array — the exact-Jaccard verify input."""
-    return sh.groupBy("doc_id").agg(
-        F.sort_array(F.collect_set("s")).alias("shset")
-    )
-
-
 def minhash_doc_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -179,8 +114,7 @@ def minhash_doc_dedup(
     )
     return near_dup_clusters(
         docs.select(F.col(id_col).alias("doc_id")),
-        minhash_bands(sh),
-        shingle_sets(sh),
+        minhash(sh, "doc_id"),
         threshold,
         max_band_bucket,
     )
@@ -188,67 +122,21 @@ def minhash_doc_dedup(
 
 def near_dup_clusters(
     ids: DataFrame,
-    bands: DataFrame,
-    sets: DataFrame,
+    sig: DataFrame,
     threshold: float,
     max_band_bucket: int,
 ) -> DataFrame:
     """The clustering half of ``minhash_doc_dedup``: (doc_id, rep_id,
-    keep) from the documents' ids, ``minhash_bands`` and
-    ``shingle_sets``, for a caller that already holds them."""
-    bucket_sz = bands.groupBy("band_idx", "band_hash").agg(
-        F.count("*").alias("_bsz")
+    keep) from the documents' ids and their ``minhash`` rows, for a
+    caller that already holds them."""
+    pairs = lsh_join(
+        sig.withColumnRenamed("doc_id", "da"),
+        sig.withColumnRenamed("doc_id", "db"),
+        threshold,
+        max_band_bucket,
+        F.col("da") < F.col("db"),
     )
-    bands = (
-        bands.join(
-            bucket_sz.where(F.col("_bsz") <= max_band_bucket),
-            ["band_idx", "band_hash"],
-        )
-        .select("doc_id", "band_idx", "band_hash")
-    )
-
-    cand = (
-        bands.alias("a")
-        .join(bands.alias("b"), ["band_idx", "band_hash"])
-        .where(F.col("a.doc_id") < F.col("b.doc_id"))
-        .select(
-            F.col("a.doc_id").alias("da"), F.col("b.doc_id").alias("db")
-        )
-        .dropDuplicates()
-    )
-
-    # exact verify over the shingle sets of the candidate docs only
-    ver = (
-        cand.join(
-            sets.select(
-                F.col("doc_id").alias("da"), F.col("shset").alias("sa")
-            ),
-            "da",
-        )
-        .join(
-            sets.select(
-                F.col("doc_id").alias("db"), F.col("shset").alias("sb")
-            ),
-            "db",
-        )
-        .withColumn("jaccard", F.round(jaccard_expr("sa", "sb"), 4))
-        .where(F.col("jaccard") >= threshold)
-        .select("da", "db")
-    )
-
-    # cluster + min-id representative, in the id column's own order
-    comp = connected_components(ver, "da", "db", key_encode=False).select(
-        F.col("node").alias("doc_id"), F.col("component").alias("rep_id")
-    )
-
-    return (
-        ids.join(comp, "doc_id", "left")
-        .select(
-            "doc_id",
-            F.coalesce("rep_id", "doc_id").alias("rep_id"),
-        )
-        .withColumn("keep", F.col("doc_id") == F.col("rep_id"))
-    )
+    return representatives(ids, pairs.select("da", "db"))
 
 
 def benchmark_contamination(

@@ -322,12 +322,13 @@ def run_incremental_dedup(
     1. cluster the batch's pages intra-batch with the batch operator's
        clustering (``near_dup_clusters``);
     2. probe each page's MinHash bands against the *committed* band
-       index (all pages seen in earlier batches), verify candidates by
-       exact Jaccard over stored shingle sets, and adopt the minimum
-       committed representative for the whole intra-batch cluster;
+       index (all pages seen in earlier batches) with the same
+       ``lsh_join``, which verifies candidates by exact Jaccard over
+       the stored shingle sets, and adopt the minimum committed
+       representative for the whole intra-batch cluster;
     3. emit (url, rep_url, keep, batch_id) to ``out_dir`` — ``keep``
        only for pages that start a brand-new cluster — and append the
-       batch's bands/sets/reps to the committed state.
+       batch's signature rows and reps to the committed state.
 
     Semantics: **first-seen representative stability** — a committed
     page's rep never changes.  If one new page bridges two previously
@@ -343,34 +344,29 @@ def run_incremental_dedup(
     a pure function of the document — the same page would hash
     differently depending on batch composition, and a mirror arriving
     in a boilerplate-heavy batch would fail to collide with its
-    committed original.  Quadratic blow-up through hot bands is still
-    bounded by ``MAX_BAND_BUCKET``, and precision by the exact-Jaccard
-    verify; the nightly batch re-stitcher applies the
+    committed original.  ``MAX_BAND_BUCKET`` bounds the intra-batch
+    clustering's hot-band fan-out only: the committed-band probe is
+    uncapped, so a band that B committed pages share fans each new page
+    in it out into B candidates.  Precision is bounded by the
+    exact-Jaccard verify; the nightly batch re-stitcher applies the
     globally-consistent df-cap.
 
-    The committed band index ``(url, rep_url, band_idx, band_hash,
-    shset, batch_id)`` is a ``TwoTierState`` at ``state_dir`` (default
-    ``out_dir + "_state"``).
+    The committed band index ``(url, rep_url, shset, band_idx,
+    band_hash, batch_id)`` — each page's ``minhash`` rows — is a
+    ``TwoTierState`` at ``state_dir`` (default ``out_dir + "_state"``).
     """
-    from arachne_spark.operators.dedup import (
-        doc_shingles,
-        minhash_bands,
-        near_dup_clusters,
-        shingle_sets,
-    )
-    from arachne_spark.operators.lsh_link import jaccard_expr
+    from arachne_spark.operators.dedup import doc_shingles, near_dup_clusters
+    from arachne_spark.operators.lsh_link import lsh_join, minhash
 
     def process(batch_df: DataFrame, comm: DataFrame | None, cache):
         docs = with_text(latest_snapshot(batch_df)).select("url", "text")
-        sh = doc_shingles(docs, id_col="url")
-        # sets, bands and out (below) each feed both writes of the
-        # batch (output partition + state rows): cached, so the
-        # shingle/band derivation, the intra-batch dedup and the
-        # committed-band probe run once per batch, not twice
-        sets = cache(shingle_sets(sh))
-        bands = cache(minhash_bands(sh))
+        # sig and out (below) each feed both writes of the batch
+        # (output partition + state rows): cached, so the signature,
+        # the intra-batch dedup and the committed-band probe run once
+        # per batch, not twice
+        sig = cache(minhash(doc_shingles(docs, id_col="url"), "doc_id"))
         intra = near_dup_clusters(
-            docs.select(F.col("url").alias("doc_id")), bands, sets,
+            docs.select(F.col("url").alias("doc_id")), sig,
             DEDUP_THRESHOLD, MAX_BAND_BUCKET,
         ).select(
             F.col("doc_id").alias("url"),
@@ -378,20 +374,19 @@ def run_incremental_dedup(
         )
 
         if comm is not None:
+            # (url, batch) identifies a committed signature: a
+            # recrawled url has one per batch it arrived in
             cand = (
-                bands.join(
+                lsh_join(
+                    sig,
                     comm.select(
-                        "band_idx", "band_hash",
+                        F.col("url").alias("c_url"),
+                        F.col("batch_id").alias("c_batch"),
                         F.col("rep_url").alias("c_rep"),
-                        F.col("shset").alias("c_shset"),
+                        "shset", "band_idx", "band_hash",
                     ),
-                    ["band_idx", "band_hash"],
+                    DEDUP_THRESHOLD,
                 )
-                .join(sets, "doc_id")
-                .withColumn(
-                    "j", F.round(jaccard_expr("shset", "c_shset"), 4)
-                )
-                .where(F.col("j") >= DEDUP_THRESHOLD)
                 .groupBy(F.col("doc_id").alias("url"))
                 .agg(F.min("c_rep").alias("comm_rep"))
             )
@@ -418,21 +413,8 @@ def run_incremental_dedup(
         out = cache(
             resolved.withColumn("keep", F.col("url") == F.col("rep_url"))
         )
-        state_rows = (
-            out.select("url", "rep_url")
-            .join(
-                sets.select(F.col("doc_id").alias("url"), "shset"),
-                "url",
-                "left",
-            )
-            .join(
-                bands.select(
-                    F.col("doc_id").alias("url"), "band_idx",
-                    "band_hash",
-                ),
-                "url",
-                "left",
-            )
+        state_rows = out.select("url", "rep_url").join(
+            sig.withColumnRenamed("doc_id", "url"), "url", "left"
         )
         return out, state_rows
 

@@ -537,6 +537,10 @@ def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
     from arachne_spark.sources.dictionary import alias_df, predicate_df
     from arachne_spark.sources.pages import pages_df
 
+    # sequential SparkContexts in one JVM — the warm-JVM protocol (a
+    # production cluster's executors are always JIT-warm; a cold child
+    # JVM was measured to penalize the short 4N run by ~30 s and
+    # distort the ratio)
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
@@ -559,35 +563,6 @@ def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
         },
     )
-    # The bench creates several sequential SparkContexts in one JVM —
-    # the warm-JVM protocol (a production cluster's executors are
-    # always JIT-warm; a cold child JVM was measured to penalize the
-    # short 4N run by ~30 s and distort the ratio).  Known PySpark
-    # wart in that mode: the python-metrics accumulator channel
-    # (PythonAccumulatorV2) of a prior context can leave a dead socket
-    # that every later python-stage task logs a Broken-pipe ERROR
-    # against.  It is metrics-only (task *failures* surface as action
-    # exceptions, not logs).  Suppress ONLY that message — a DENY
-    # RegexFilter on "Failed to update accumulator" — so genuine
-    # DAGScheduler ERRORs (stage failures, lost tasks) stay visible in
-    # the bench output during the timed run.
-    jvm = spark.sparkContext._jvm
-    try:
-        log4j = jvm.org.apache.logging.log4j
-        ctx = log4j.core.LoggerContext.getContext(False)
-        cfg = ctx.getConfiguration()
-        lcfg = cfg.getLoggerConfig("org.apache.spark.scheduler.DAGScheduler")
-        filt = log4j.core.filter.RegexFilter.createFilter(
-            ".*Failed to update accumulator.*",
-            None,
-            True,
-            log4j.core.Filter.Result.DENY,
-            log4j.core.Filter.Result.NEUTRAL,
-        )
-        lcfg.addFilter(filt)
-        ctx.updateLoggers()
-    except Exception as e:  # pragma: no cover — log4j API drift only
-        print(f"accumulator log filter unavailable: {e}", file=sys.stderr)
     aliases = alias_df(spark)
     preds = predicate_df(spark)
 
@@ -612,13 +587,7 @@ def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
     t0 = time.time()
     n = core(pages_df(spark, n_pages, partitions=KG_PARTITIONS))
     wall = time.time() - t0
-    # let the DAGScheduler event loop drain trailing task-completion
-    # events (accumulator merges over the python socket) before the
-    # context goes away — a stop mid-drain prints a harmless but ugly
-    # PythonAccumulatorV2 stack trace into the bench output
-    time.sleep(2.0)
     spark.stop()
-    time.sleep(1.0)
     return wall, n
 
 

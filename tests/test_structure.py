@@ -3,7 +3,8 @@
 once, and batch, stream and bench call that one definition; each
 media format's structure is walked once, behind one never-raise
 boundary; connected components and transitive closure share one
-round loop."""
+round loop; fuzzy linking, page dedup and streaming dedup share one
+MinHash-LSH."""
 
 from __future__ import annotations
 
@@ -196,4 +197,46 @@ def test_stream_commit_swap_and_curation_defined_once():
             lambda n: isinstance(n, ast.Attribute) and n.attr == "time"
             and getattr(n.value, "id", None) == "time")
         if h.startswith(storage + ":")
+    }
+
+
+def test_minhash_defined_once():
+    lsh = "arachne_spark/operators/lsh_link.py"
+
+    def seeded_md5(node) -> bool:
+        # md5 over a '<p>:'-prefixed shingle, as a Column call or
+        # inside a SQL expression string
+        if isinstance(node, ast.Call) and _calls("md5")(node):
+            return any(
+                isinstance(n, ast.JoinedStr)
+                and ast.unparse(n).endswith(":'")
+                for n in ast.walk(node)
+            )
+        return isinstance(node, (ast.Constant, ast.JoinedStr)) and (
+            "md5(concat('" in ast.unparse(node)
+        )
+
+    assert _holders(seeded_md5) == {f"{lsh}:minhash"}
+    for name in ("N_HASHES", "N_BANDS"):
+        assigned = [
+            src for src in SOURCES
+            for n in ast.walk(ast.parse(src.read_text()))
+            if isinstance(n, ast.Assign)
+            and any(getattr(t, "id", None) == name for t in n.targets)
+        ]
+        assert assigned == [ROOT / lsh], name
+    assert _holders(_calls("jaccard_expr")) == {f"{lsh}:lsh_join"}
+    defs = {
+        n.name for src in SOURCES for n in ast.walk(ast.parse(src.read_text()))
+        if isinstance(n, ast.FunctionDef)
+    }
+    for gone in ("_with_signature", "shingle_expr", "minhash_bands",
+                 "shingle_sets", "ngram_jaccard_pairs"):
+        assert gone not in defs, gone
+    # one pairs -> representative tail, beside connected_components
+    cc = _holders(_calls("connected_components"))
+    assert "arachne_spark/operators/cc.py:representatives" in cc
+    assert not {
+        h for h in cc
+        if "/dedup.py:" in h or h.endswith("/ann.py:semantic_dedup")
     }

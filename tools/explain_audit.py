@@ -102,11 +102,22 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     from arachne_spark.sources.dictionary import alias_df
     from arachne_spark.sources.pages import pages_df
 
-    m = detect_mentions(clean_pages(pages_df(spark, 100)), alias_df(spark))
+    clean = clean_pages(pages_df(spark, 100))
+    m = detect_mentions(clean, alias_df(spark))
     audit(
         "mention detection", m,
         expect_contains=("BroadcastHashJoin",),
         expect_absent=("ArrowEvalPython", "BatchEvalPython", "ExistingRDD"),
+    )
+    # fuzzy link: the same, and no interpreted higher-order function
+    # (MinHash signatures are an aggregation over shingle rows)
+    from arachne_spark.operators.lsh_link import fuzzy_mentions
+
+    audit(
+        "fuzzy link", fuzzy_mentions(clean, m, alias_df(spark)),
+        expect_contains=("BroadcastHashJoin",),
+        expect_absent=("lambdafunction", "ArrowEvalPython",
+                       "BatchEvalPython", "ExistingRDD"),
     )
 
     audit(
