@@ -15,7 +15,15 @@ is stable across runs and parallelism levels.  Nodes are keyed by an
 injective struct that carries the id itself, so distinct ids never
 share a key and the output is read straight off the key.
 
-The rounds run in ``fixpoint.fixpoint``.
+The rounds run in ``fixpoint.fixpoint``.  Once the edge frontier fits
+one shuffle partition (at the start, or after any round) the loop
+collects it and ``_min_key_roots`` finishes on the driver: a union-find
+that always hangs the larger root under the smaller, so every node ends
+under the minimum key of its component — the loop's own answer,
+whatever the edge order.  Python compares the collected keys as Spark
+does: struct keys field by field (as tuples), strings by code point
+(Spark's UTF-8 binary order), numbers by value.  The converged edges go
+back through ``session.local_df``, so no Python worker starts.
 """
 
 from __future__ import annotations
@@ -26,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from arachne_spark.operators.fixpoint import fixpoint
+from arachne_spark.session import local_df
 
 _NUM_RE = r"^([A-Z])([0-9]+)$"
 
@@ -78,22 +87,37 @@ def _small_star(edges: DataFrame) -> DataFrame:
     ).distinct()
 
 
-def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    key_encode: bool = True,
-) -> DataFrame:
-    """→ (node, component) with component = min-priority member.
+def _min_key_roots(pairs) -> dict:
+    """{node: minimum node of its component} over undirected ``pairs``."""
+    parent = {}
 
-    `edges` is an undirected edge list over entity-ID strings (or any
-    orderable column type if key_encode=False).  Isolated nodes are not
-    emitted (callers coalesce missing nodes to themselves).
-    """
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return {x: find(x) for x in parent}
+
+
+def _star_edges(
+    edges: DataFrame, src: str, dst: str, key_encode: bool
+) -> DataFrame:
+    """(node, component) for every node but the root of its component,
+    component = the min-priority member: the converged star edges."""
     e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
     e = e.where(F.col("src") != F.col("dst"))
-    if key_encode:
-        e = e.select(
+    id_type = e.schema["src"].dataType.simpleString()
+
+    def encode(d: DataFrame) -> DataFrame:
+        if not key_encode:
+            return d
+        return d.select(
             _qid_key(F.col("src")).alias("src"),
             _qid_key(F.col("dst")).alias("dst"),
         )
@@ -109,35 +133,61 @@ def connected_components(
         ).collect()[0]
         return s["c"], s
 
+    def finish(rows) -> DataFrame:
+        """The converged edges from the collected ones; keys travel to
+        ``local_df`` as their ids and are encoded again."""
+        star = [
+            (n.id, r.id) if key_encode else (n, r)
+            for n, r in _min_key_roots(rows).items()
+            if n != r
+        ]
+        schema = f"src {id_type}, dst {id_type}"
+        return encode(local_df(edges.sparkSession, star, schema))
+
     e = fixpoint(
-        e.distinct(),
+        encode(e).distinct(),
         lambda d: _small_star(_large_star(d)),
         sig,
         operator.eq,
         measure_start=True,
+        finish=finish,
+    )
+    if key_encode:
+        return e.select(
+            F.col("src.id").alias("node"), F.col("dst.id").alias("component")
+        )
+    return e.select(
+        F.col("src").alias("node"), F.col("dst").alias("component")
     )
 
-    comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    roots = comp.select(F.col("component")).distinct().select(
-        F.col("component").alias("node"), F.col("component")
+
+def connected_components(
+    edges: DataFrame,
+    src: str = "src",
+    dst: str = "dst",
+    key_encode: bool = True,
+) -> DataFrame:
+    """→ (node, component) with component = min-priority member.
+
+    `edges` is an undirected edge list over entity-ID strings (or any
+    orderable column type if key_encode=False).  Isolated nodes are not
+    emitted (callers coalesce missing nodes to themselves).
+    """
+    comp = _star_edges(edges, src, dst, key_encode)
+    roots = comp.select("component").distinct().select(
+        F.col("component").alias("node"), "component"
     )
-    out = comp.unionByName(roots).distinct()
-    if key_encode:
-        out = out.select(
-            F.col("node.id").alias("node"),
-            F.col("component.id").alias("component"),
-        )
-    return out
+    return comp.unionByName(roots)
 
 
 def representatives(ids: DataFrame, pairs: DataFrame) -> DataFrame:
     """(id, rep_id, keep): each id of the one-column ``ids`` mapped to
     the minimum id of its component in the undirected two-column
     ``pairs``, in the id column's own type and order; an id in no pair
-    is its own representative.  keep = (id == rep_id) — filtering on
-    it IS the dedup."""
+    (a component's root among them) is its own representative.
+    keep = (id == rep_id) — filtering on it IS the dedup."""
     (idc,) = ids.columns
-    comp = connected_components(pairs, *pairs.columns, key_encode=False)
+    comp = _star_edges(pairs, *pairs.columns, key_encode=False)
     return (
         ids.join(
             comp.select(
@@ -153,7 +203,6 @@ def representatives(ids: DataFrame, pairs: DataFrame) -> DataFrame:
 
 def canonical_mapping(edges: DataFrame) -> DataFrame:
     """(qid, canonical_qid) from sameAs edges; identity rows omitted."""
-    cc = connected_components(edges)
-    return cc.where(F.col("node") != F.col("component")).select(
+    return _star_edges(edges, "src", "dst", key_encode=True).select(
         F.col("node").alias("qid"), F.col("component").alias("canonical_qid")
     )

@@ -54,26 +54,29 @@ def doc_shingles(
     """(doc_id, s): distinct token k-gram shingles per document.
 
     Documents with fewer than ``k`` tokens yield zero shingles (matching
-    the DuckDB/python oracles).  The ``if(size >= k, ...)`` guard is
-    load-bearing: ``sequence(1, n)`` is DESCENDING for n < 1 (e.g.
-    ``sequence(1, 0) = [1, 0]``), which would index ``toks[]`` out of
-    bounds and throw under ANSI mode.
+    the DuckDB/python oracles).  The ``size >= k`` row filter is
+    load-bearing: for a shorter document ``sequence(0, size - k)`` runs
+    DESCENDING (e.g. ``sequence(0, -1) = [0, -1]``), which would index
+    ``toks`` out of bounds and throw under ANSI mode.  The k-grams are
+    element accesses on exploded start positions, not a ``transform``
+    lambda, which Spark interprets instead of code-generating.
     """
-    parts = ", ".join(f"toks[i-1+{j}]" for j in range(k))
+    toks = F.col("toks")
     return (
         docs.select(
             F.col(id_col).alias("doc_id"),
             F.split(F.col(text_col), " ", -1).alias("toks"),
         )
+        .where(F.size(toks) >= k)
         .select(
             "doc_id",
-            F.explode(
-                F.expr(
-                    f"transform("
-                    f" if(size(toks) >= {k},"
-                    f"    sequence(1, size(toks) - {k - 1}), array()),"
-                    f" i -> concat_ws(' ', {parts}))"
-                )
+            "toks",
+            F.explode(F.sequence(F.lit(0), F.size(toks) - k)).alias("_i"),
+        )
+        .select(
+            "doc_id",
+            F.concat_ws(
+                " ", *[toks[F.col("_i") + j] for j in range(k)]
             ).alias("s"),
         )
         .dropDuplicates()

@@ -16,19 +16,37 @@ Measured at the sf0.1 closure fixture (247 k pairs, 5 rounds): 64 fixed
 partitions 7.9 s → adaptive 2.9-5.0 s.  Per-round ``persist`` instead of
 ``localCheckpoint`` was also measured: 2-4x SLOWER (lineage re-growth
 re-plans every earlier round into each action), so checkpointing stays.
+
+Small-frontier finish: once a state fits one shuffle partition, every
+further round is a few jobs of fixed scheduling cost over a handful of
+rows.  A caller that can compute the fixpoint on the driver passes
+``finish``; the loop then collects that state and returns
+``finish(rows)`` instead of running more rounds.  The start is counted
+by one single-task job that reads at most ``FINISH_ROWS`` rows (in
+place of the start's measure, which is two jobs), every later state by
+its round's measure, so a large input whose frontier shrinks finishes
+on the driver too.  Connected components passes a finish (a min-key
+union-find); transitive closure does not, since its output can be
+quadratic in its input.
 """
 
 from __future__ import annotations
 
 from typing import Any, Callable
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 
 # Target rows per shuffle partition: a closure pair is two longs + a
 # flag (~25 B/row), so 100 k rows is a ~2.5 MB partition — small enough
 # to stay cache-resident, large enough that task-scheduling overhead
 # does not dominate the round.
 ROWS_PER_SHUFFLE_PARTITION = 100_000
+
+# A state of fewer rows than this is collected and handed to
+# the caller's ``finish``: the frontier fits one shuffle partition, the
+# point where ``resize`` already drops to one partition.  Tests lower it
+# to force the distributed loop.
+FINISH_ROWS = ROWS_PER_SHUFFLE_PARTITION
 
 # Both callers need O(log n) rounds (star contraction; delta doubling
 # reaches depth 2^63 by round 64), so reaching the cap means a bug, not
@@ -42,6 +60,7 @@ def fixpoint(
     measure: Callable[[DataFrame], tuple[int, Any]],
     converged: Callable[[Any, Any], bool],
     measure_start: bool = False,
+    finish: Callable[[list[Row]], DataFrame] | None = None,
 ) -> DataFrame:
     """Apply ``step`` to ``start`` until ``converged(prev, m)``; return
     the state of the converged round.
@@ -49,7 +68,10 @@ def fixpoint(
     ``measure(df)`` runs one action on ``df`` and returns ``(rows, m)``:
     ``rows`` sizes the next round's shuffles, ``m`` is what ``converged``
     compares with the previous round's (``None`` for round 1 unless
-    ``measure_start``).  Raises ``RuntimeError`` after ``MAX_ROUNDS``.
+    ``measure_start``).  ``finish(rows)``, if given, returns the state
+    the loop would converge to from the collected ``rows`` of the first
+    state of fewer than ``FINISH_ROWS`` rows, the start or an
+    unconverged round.  Raises ``RuntimeError`` after ``MAX_ROUNDS``.
     """
     sp = start.sparkSession
     conf_key = "spark.sql.shuffle.partitions"
@@ -66,6 +88,10 @@ def fixpoint(
 
     state = start.localCheckpoint(eager=False)
     try:
+        if finish is not None and (
+            state.coalesce(1).limit(FINISH_ROWS).count() < FINISH_ROWS
+        ):
+            return finish(state.collect())
         prev = None
         if measure_start:
             rows, prev = measure(state)
@@ -75,6 +101,8 @@ def fixpoint(
             rows, m = measure(state)
             if converged(prev, m):
                 return state
+            if finish is not None and rows < FINISH_ROWS:
+                return finish(state.collect())
             prev = m
             resize(rows)
     finally:

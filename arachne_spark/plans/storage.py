@@ -299,4 +299,10 @@ class Warehouse:
             return self.read(table), True
         df = compute()
         self.write(df, table, **write_kwargs)
-        return self.read(table), False
+        if self.catalog:
+            return self.read(table), False
+        # the schema just written: inferring it again from the parquet
+        # footers is a Spark job per stage, and reads back the same
+        # schema (nullable, partition columns last)
+        path = self._path(table)
+        return self.spark.read.schema(df.schema).parquet(path), False

@@ -1,6 +1,6 @@
 """The shared round loop: a capped loop raises instead of returning a
 partial relation, and a tiny connected-components or closure run
-launches no more Spark jobs than before the loop was shared."""
+launches no more Spark jobs than pinned here."""
 
 from __future__ import annotations
 
@@ -16,13 +16,17 @@ from tests.test_closure import TREE
 from tests.test_pipeline import _jobs_in_group
 
 # status-store job counts under this suite's session (local[4],
-# shuffle_partitions=8) before cc.py and closure.py shared the loop
-CC_TWO_EDGE_JOBS = 27
+# shuffle_partitions=8): the two-edge components finish on the driver,
+# the closure as measured before cc.py and closure.py shared the loop
+CC_TWO_EDGE_JOBS = 4
 CLOSURE_TREE_JOBS = 36
 
 
 def test_round_cap_raises(spark, monkeypatch):
+    """The chain would finish on the driver before its first round, so
+    the finish is forced off: the cap binds the distributed rounds."""
     monkeypatch.setattr(fixpoint, "MAX_ROUNDS", 1)
+    monkeypatch.setattr(fixpoint, "FINISH_ROWS", 0)
     conf = spark.conf.get("spark.sql.shuffle.partitions")
     chain = [(i, i + 1) for i in range(1, 10)]
     ids = spark.createDataFrame(

@@ -112,3 +112,42 @@ def test_failed_overwrite_leaves_no_temp_dir(spark, tmp_path):
     assert not [p.name for p in root.iterdir() if p.name.startswith(
         "t.__tmp")]
     assert sorted(r["v"] for r in wh.read("t").collect()) == ["a", "b"]
+
+
+def test_computed_stage_reads_back_as_inferred(spark, tmp_path):
+    """A computed stage is read back with the schema just written, not
+    re-inferred from the parquet footers: the same schema (names,
+    types, nullability, order — partition columns last) and rows as an
+    inferring read, for a plain, a partitioned and a partitioned stage
+    filtered to zero rows (which the warehouse rewrites schema-only)."""
+    from pyspark.sql import functions as F
+
+    wh = Warehouse(spark, str(tmp_path / "schema_wh"))
+    base = spark.range(6).select(
+        F.col("id"),
+        (F.col("id") % 3).cast("int").alias("k"),
+        F.concat(F.lit("sé"), F.col("id").cast("string")).alias("s"),
+        (F.col("id") > 2).alias("b"),
+        (F.col("id") / 4).alias("d"),
+        F.col("id").cast("decimal(20,2)").alias("dec"),
+        F.timestamp_seconds(F.col("id")).alias("ts"),
+        F.array(F.col("id").cast("string")).alias("arr"),
+        F.struct(F.col("id").alias("x"), F.lit(None).cast("string")
+                 .alias("y")).alias("st"),
+        F.when(F.col("id") > 1, F.col("id")).alias("maybe"),
+    )
+    for table, df, parts in (
+        ("plain", base, None),
+        ("parted", base, ["k"]),
+        ("parted_empty", base.where(F.lit(False)), ["k"]),
+    ):
+        got, resumed = wh.resume_or_compute(
+            table, lambda: df, partition_by=parts
+        )
+        inferred = spark.read.parquet(str(tmp_path / "schema_wh" / table))
+        assert not resumed
+        assert got.schema == inferred.schema, table
+        assert sorted(map(tuple, got.collect())) == sorted(
+            map(tuple, inferred.collect())
+        ), table
+    assert got.count() == 0

@@ -3,7 +3,8 @@
 once, and batch, stream and bench call that one definition; each
 media format's structure is walked once, behind one never-raise
 boundary; connected components and transitive closure share one
-round loop; fuzzy linking, page dedup and streaming dedup share one
+round loop, and components finish small frontiers through one driver
+union-find; fuzzy linking, page dedup and streaming dedup share one
 MinHash-LSH."""
 
 from __future__ import annotations
@@ -151,6 +152,28 @@ def test_fixpoint_loop_defined_once():
         if "/cc.py:" in h or "/closure.py:" in h
     }
     assert "method" not in inspect.signature(transitive_closure).parameters
+    # one driver finish: the union-find is defined once, only the loop
+    # collects a state (the measures collect one aggregate row), and
+    # cc.py returns the driver's rows through local_df, never through a
+    # Python RDD
+    cc = "arachne_spark/operators/cc.py"
+    assert _holders(
+        lambda n: isinstance(n, ast.FunctionDef)
+        and n.name in ("_min_key_roots", "find")
+    ) == {f"{cc}:<module>", f"{cc}:_min_key_roots"}
+    assert {
+        h for h in _holders(_calls("collect"))
+        if h.startswith(("arachne_spark/operators/fixpoint.py:", f"{cc}:",
+                         "arachne_spark/operators/closure.py:"))
+    } == {loop, f"{cc}:_star_edges.sig",
+          "arachne_spark/operators/closure.py:_count_new"}
+    assert not {
+        h for h in _holders(_calls("createDataFrame"))
+        if h.startswith(f"{cc}:")
+    }
+    assert {
+        h for h in _holders(_calls("local_df")) if h.startswith(f"{cc}:")
+    } == {f"{cc}:_star_edges.finish"}
     # connected components takes native id types: no string encoders
     for name in ("dedup.py", "ann.py"):
         src = (ROOT / "arachne_spark/operators" / name).read_text()
@@ -233,10 +256,14 @@ def test_minhash_defined_once():
     for gone in ("_with_signature", "shingle_expr", "minhash_bands",
                  "shingle_sets", "ngram_jaccard_pairs"):
         assert gone not in defs, gone
-    # one pairs -> representative tail, beside connected_components
-    cc = _holders(_calls("connected_components"))
-    assert "arachne_spark/operators/cc.py:representatives" in cc
+    # one pairs -> representative tail: representatives, beside
+    # connected_components and canonical_mapping, runs the one star
+    # contraction, and the dedups reach it only through representatives
+    cc = "arachne_spark/operators/cc.py"
+    assert _holders(_calls("_star_edges")) == {
+        f"{cc}:connected_components", f"{cc}:representatives",
+        f"{cc}:canonical_mapping"}
     assert not {
-        h for h in cc
+        h for h in _holders(_calls("connected_components"))
         if "/dedup.py:" in h or h.endswith("/ann.py:semantic_dedup")
     }

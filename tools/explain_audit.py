@@ -111,11 +111,24 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     )
     # fuzzy link: the same, and no interpreted higher-order function
     # (MinHash signatures are an aggregation over shingle rows)
-    from arachne_spark.operators.lsh_link import fuzzy_mentions
+    from arachne_spark.operators.lsh_link import fuzzy_mentions, minhash
 
     audit(
         "fuzzy link", fuzzy_mentions(clean, m, alias_df(spark)),
         expect_contains=("BroadcastHashJoin",),
+        expect_absent=("lambdafunction", "ArrowEvalPython",
+                       "BatchEvalPython", "ExistingRDD"),
+    )
+
+    # page shingles: token k-grams by element access, and their MinHash
+    # signatures by aggregation — no interpreted higher-order function.
+    # (Audited before the dedup's clustering: a small pair set finishes
+    # on the driver as a local relation.)
+    from arachne_spark.operators.dedup import doc_shingles
+
+    audit(
+        "page shingles",
+        minhash(doc_shingles(clean, id_col="url"), "doc_id"),
         expect_absent=("lambdafunction", "ArrowEvalPython",
                        "BatchEvalPython", "ExistingRDD"),
     )
