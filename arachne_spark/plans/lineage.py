@@ -80,7 +80,7 @@ class StageRecorder:
         ):
             if rows:
                 self.wh.write(
-                    local_df(spark, rows, schema).coalesce(1),
+                    local_df(spark, rows, schema),
                     table,
                     mode="append",
                 )

@@ -77,9 +77,12 @@ def local_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     """A small driver-side row set (tuples in DDL ``schema`` order) as
     a DataFrame the JVM alone evaluates: one JSON literal expanded by
     ``from_json`` + ``inline``.  ``spark.createDataFrame(rows)`` would
-    be a Python RDD that starts a Python worker pool on every scan."""
+    be a Python RDD that starts a Python worker pool on every scan.
+    The literal is expanded in one slice: ``spark.range(1)`` would take
+    the default parallelism, every scan a job of mostly empty tasks,
+    and an aggregation over the rows a shuffle."""
     struct = DataType.fromDDL(schema)
     data = json.dumps([dict(zip(struct.names, r)) for r in rows])
-    return spark.range(1).select(
+    return spark.range(0, 1, 1, 1).select(
         F.inline(F.from_json(F.lit(data), ArrayType(struct)))
     )

@@ -59,11 +59,7 @@ MAX_BAND_BUCKET = 20
 
 
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
-    """Read ``path`` or return None if it does not exist / holds no
-    readable parquet yet.  This is the FS-agnostic committed-state
-    probe: driver-local ``os.path`` checks silently return False on
-    HDFS/S3 (the advertised deployment), which would skip the
-    cross-batch anti-join with no error."""
+    """Read ``path``, or None while it holds no readable parquet."""
     from pyspark.errors import AnalysisException
 
     try:
@@ -101,71 +97,84 @@ class TwoTierState:
     streaming operators: per-batch read cost stays bounded regardless
     of stream history.
 
-    * ``<state_dir>/base`` — the compacted relation, rewritten as
-      ``STATE_FILES`` files at every compaction;
-    * ``<state_dir>/delta`` — per-batch ``batch_id=<n>`` partitions of
-      the same schema, written with dynamic partition overwrite
-      (idempotent under foreachBatch's at-least-once retries).
+    * ``<state_dir>/base`` — the compacted relation in ``STATE_FILES``
+      files, beside a ``_``-prefixed file (parquet readers skip it)
+      holding the watermark W: the batch whose commit compacted;
+    * the delta tier — ``batch_id=<n>`` partitions in ``delta_dir``:
+      ``<state_dir>/delta``, owned by the state and filled by
+      ``write_delta``, or the pipeline's committed output table.
 
-    Every ``COMPACT_EVERY`` delta partitions, base ∪ deltas is
-    rewritten into a fresh base (full-row ``dropDuplicates`` absorbs
-    retry-duplicated rows) and the delta dir is cleared, so each batch
-    reads at most ``STATE_FILES`` base files plus ``COMPACT_EVERY``
-    delta partitions.  The base is replaced by ``storage.swap_in``;
-    the delta dir is cleared only AFTER a completed swap, so
-    ``storage.restore`` (before every read and compaction) rebuilds
-    exactly the committed state after a crash mid-swap.
-    ``read_committed`` also applies ``dropDuplicates``: a crash
-    between the base swap and the delta clear leaves the merged rows
-    present in BOTH tiers until the next compaction, and the read-side
-    dedup (cheap on the bounded state relation) makes that window
-    invisible to every consumer.  All file ops go through the Hadoop
-    FileSystem API so the layout works on HDFS/S3 exactly as on local
-    disk; an Iceberg deployment replaces the swap with a MERGE /
-    rewrite_data_files maintenance action.
+    Batch b reads the base rows of other batches (a retry after a
+    compaction absorbed it must not probe its own rows) ∪ partitions
+    W < n < b, or 0 ≤ n < b when b ≤ W (ids restarted after a lost
+    checkpoint), by path with the state's schema; the consumers absorb
+    duplicate rows.  A commit that leaves ``COMPACT_EVERY`` partitions
+    there folds them into a fresh base (full-row ``dropDuplicates``)
+    with W = b.  Base and W commit in one ``storage.swap_in`` rename,
+    ``storage.restore`` brings the pair back after a crash mid-swap,
+    and absorbed partitions are then deleted if the state owns them.
+    So a batch reads at most ``STATE_FILES`` base files plus fewer
+    than ``COMPACT_EVERY`` partitions.  An Iceberg deployment replaces
+    the swap with a MERGE / rewrite_data_files action.
     """
 
-    def __init__(self, state_dir: str):
-        self.base_dir = state_dir + "/base"
-        self.delta_dir = state_dir + "/delta"
+    _WATERMARK = "_batch_watermark"
 
-    def _read_all(self, sp: SparkSession) -> DataFrame | None:
-        parts = [
-            d
-            for d in (
-                _try_read_parquet(sp, self.base_dir),
-                _try_read_parquet(sp, self.delta_dir),
-            )
-            if d is not None
-        ]
-        if not parts:
+    def __init__(self, state_dir: str, delta_dir: str | None = None):
+        self.state_dir = state_dir
+        self.base_dir = state_dir + "/base"
+        self.owns_delta = delta_dir is None
+        self.delta_dir = delta_dir or state_dir + "/delta"
+        self.batch_id = -1  # the running commit's, set by read_committed
+        self._schema = None
+
+    def watermark(self, sp: SparkSession) -> int | None:
+        """W, or None before the first compaction and after a seed."""
+        fs, glob = hadoop_fs(sp, f"{self.base_dir}/{self._WATERMARK}.*")
+        found = fs.globStatus(glob)
+        if not found:
             return None
-        comm = parts[0]
-        for p in parts[1:]:
-            comm = comm.unionByName(p)
+        return int(found[0].getPath().getName().rsplit(".", 1)[1])
+
+    def _deltas(self, sp: SparkSession, last: int) -> list[str]:
+        """The existing partitions above W (class doc) up to ``last``."""
+        w = self.watermark(sp)
+        lo = w if w is not None and self.batch_id > w else -1
+        paths = (
+            hadoop_fs(sp, f"{self.delta_dir}/batch_id={n}")
+            for n in range(lo + 1, last + 1)
+        )
+        return [p.toString() for fs, p in paths if fs.exists(p)]
+
+    def _read(self, sp: SparkSession, deltas: list[str]) -> DataFrame | None:
+        """Base ∪ the ``deltas`` partitions, or None if both are empty."""
+        fs, base = hadoop_fs(sp, self.base_dir)
+        comm = None
+        for paths, reader in (
+            ([self.base_dir] if fs.exists(base) else [], sp.read),
+            (deltas, sp.read.option("basePath", self.delta_dir)),
+        ):
+            if paths:
+                if self._schema is not None:
+                    reader = reader.schema(self._schema)
+                df = reader.parquet(*paths)
+                self._schema = df.schema
+                comm = df if comm is None else comm.unionByName(df)
         return comm
 
     def read_committed(
         self, sp: SparkSession, batch_id: int
     ) -> DataFrame | None:
-        """Base ∪ deltas, minus THIS batch's partition (on an
-        at-least-once retry its partial rows exist and must not
-        pollute the probe), full-row deduplicated (see class doc)."""
+        """The probe of batch ``batch_id`` (class doc), or None while the
+        state holds nothing; makes the state directory."""
         restore(sp, self.base_dir)
-        comm = self._read_all(sp)
-        if comm is None:
-            return None
-        return comm.where(
+        self.batch_id = batch_id
+        fs, path = hadoop_fs(sp, self.state_dir)
+        fs.mkdirs(path)
+        comm = self._read(sp, self._deltas(sp, batch_id - 1))
+        return None if comm is None else comm.where(
             F.col("batch_id") != batch_id
-        ).dropDuplicates()
-
-    def exists(self, sp: SparkSession) -> bool:
-        """True if either tier is present, once a base left mid-swap
-        is restored."""
-        restore(sp, self.base_dir)
-        fs, bpath = hadoop_fs(sp, self.base_dir)
-        mk = sp._jvm.org.apache.hadoop.fs.Path
-        return bool(fs.exists(bpath) or fs.exists(mk(self.delta_dir)))
+        )
 
     def seed_base(self, df: DataFrame) -> None:
         """One-time bootstrap: write ``df`` as the compacted base
@@ -179,34 +188,28 @@ class TwoTierState:
         )
 
     def write_delta(self, df: DataFrame, batch_id: int) -> None:
-        """Append ``df`` as the batch's ``batch_id=<n>`` delta
-        partition (dynamic partition overwrite: a retried batch
-        replaces its own partial files)."""
+        """Write ``df`` as the batch's partition of an owned delta dir."""
         write_batch_partition(df, self.delta_dir, batch_id)
 
     def compact(self, sp: SparkSession) -> None:
         restore(sp, self.base_dir)
-        fs, dpath = hadoop_fs(sp, self.delta_dir)
-        if not fs.exists(dpath):
+        deltas = self._deltas(sp, self.batch_id)
+        if len(deltas) < COMPACT_EVERY:
             return
-        n_deltas = sum(
-            1
-            for st in fs.listStatus(dpath)
-            if st.getPath().getName().startswith("batch_id=")
-        )
-        if n_deltas < COMPACT_EVERY:
-            return
-        # full-row dedup: absorbs rows double-committed when a retry
-        # interleaves with a compaction swap
-        merged = (
-            self._read_all(sp).dropDuplicates().repartition(STATE_FILES)
-        )
-        # a failed swap raises HERE, before the delta dir is cleared —
-        # the batch fails, foreachBatch retries it, and restore brings
-        # the old base back; silent state loss is the one unacceptable
-        # outcome
-        swap_in(sp, self.base_dir, merged.write.mode("overwrite").parquet)
-        fs.delete(dpath, True)
+        merged = self._read(sp, deltas).dropDuplicates()
+        fs, _ = hadoop_fs(sp, self.base_dir)
+
+        def write(tmp: str) -> None:
+            merged.repartition(STATE_FILES).write.parquet(tmp)
+            mark = f"{tmp}/{self._WATERMARK}.{self.batch_id}"
+            fs.create(hadoop_fs(sp, mark)[1]).close()
+
+        # a failed swap raises before any partition is deleted, and
+        # restore brings the old base and W back
+        swap_in(sp, self.base_dir, write)
+        if self.owns_delta:
+            for p in deltas:
+                fs.delete(hadoop_fs(sp, p)[1], True)
 
 
 def stream_pages(spark: SparkSession, src_dir: str) -> DataFrame:
@@ -270,13 +273,13 @@ def _run_micro_batches(
     """Start the foreachBatch stream both drivers share: the one
     per-batch commit.  ``step(batch_df, committed, cache)`` plans the
     batch against ``committed`` (``state.read_committed``: the probe
-    without this batch's own partial rows) and returns ``(out,
-    delta)``; ``cache(df)`` persists a frame the two writes share.
-    ``out`` becomes the ``batch_id=<n>`` partition of ``out_dir`` and
-    ``delta`` the state's delta partition; what was persisted is
-    released also when a write raises, and only a committed batch
-    compacts the state.  The state calls go through the instance: the
-    benchmark instruments them on the class."""
+    without this batch's own rows) and returns ``(out, delta)``;
+    ``cache(df)`` persists a frame the two writes share.  ``out`` is
+    the ``batch_id=<n>`` partition of ``out_dir``, ``delta`` (None when
+    ``out_dir`` is the state's delta tier) the state's own; persisted
+    frames are released also when a write raises, and only a committed
+    batch compacts the state.  The state calls go through the instance:
+    the benchmark instruments them on the class."""
 
     def commit(batch_df: DataFrame, batch_id: int) -> None:
         sp = batch_df.sparkSession
@@ -291,7 +294,8 @@ def _run_micro_batches(
                 batch_df, state.read_committed(sp, batch_id), cache
             )
             write_batch_partition(out, out_dir, batch_id)
-            state.write_delta(delta, batch_id)
+            if delta is not None:
+                state.write_delta(delta, batch_id)
         finally:
             for df in cached:
                 df.unpersist()
@@ -457,11 +461,11 @@ def run_incremental_pipeline(
       the whole stream.  The anti-join's right side is NOT the full
       output table (re-reading every ``batch_id=*`` partition would
       make per-batch cost O(stream history)): it is a **compacted
-      probe index** (``TwoTierState`` at ``state_dir``, default
-      ``out_dir + "_state"``, bounded per-batch reads) holding exactly
-      the committed triple keys.  An Iceberg sink expresses the same
-      upsert natively as MERGE; the probe index is the parquet-
-      fallback statement of it.
+      probe index**: a ``TwoTierState`` with its base at ``state_dir``
+      (default ``out_dir + "_state"``) and the committed output
+      partitions as its delta tier, so a batch writes its triples once.
+      An Iceberg sink expresses the same upsert natively as MERGE; the
+      probe index is the parquet-fallback statement of it.
 
     **Curation gates** (``scrub_pii`` / ``c4_rules`` /
     ``gopher_filter`` / ``classifier=(weights, bias, min_prob)``): the
@@ -476,23 +480,20 @@ def run_incremental_pipeline(
     batch boundaries into results.
     """
     state = TwoTierState(
-        state_dir if state_dir is not None else out_dir + "_state"
+        state_dir if state_dir is not None else out_dir + "_state",
+        out_dir,
     )
-    # Migration / divergence bootstrap: a stream whose output was
-    # committed before the probe index existed (or whose state dir was
-    # lost) must NOT silently run with an empty probe — that would
-    # re-admit every already-committed triple and break the
-    # output-is-a-set contract.  Seed the base once from the committed
-    # output's own rows; from then on the probe stays bounded.
-    if not state.exists(spark):
+    # Bootstrap: a stream whose output was committed before the probe
+    # index existed (or whose state dir was lost) must NOT run with an
+    # empty probe, which would re-admit every committed triple.  Seed
+    # the base once from the committed output's own rows.
+    fs, path = hadoop_fs(spark, state.state_dir)
+    if not fs.exists(path):
         committed = _try_read_parquet(spark, out_dir)
         if committed is not None:
-            # Sentinel batch_id, NOT the historical values: if the
-            # checkpoint is also lost, batch ids restart at 0 and
-            # read_committed's `batch_id != current` filter would
-            # wrongly exclude seeded rows whose recycled id matches —
-            # re-admitting committed triples.  -1 never collides with
-            # a real (non-negative) micro-batch id.
+            # Sentinel batch_id -1, NOT the historical values: after a
+            # lost checkpoint the ids restart at 0, and read_committed
+            # would exclude the seeded rows of a recycled id.
             state.seed_base(
                 committed.select(
                     "subj",
@@ -514,20 +515,19 @@ def run_incremental_pipeline(
             classifier=classifier,
         )
         triples = link_triples(detect_mentions(pages, alias_df), predicate_df)
-        # committed excludes THIS batch's delta partition: on an
-        # at-least-once retry its partial rows exist, and anti-joining
-        # against them before overwriting the same partition would
-        # drop the partially-written triples.
+        # committed excludes THIS batch's rows: on an at-least-once
+        # retry its partial rows exist, and anti-joining against them
+        # before overwriting the same partition would drop the
+        # partially-written triples.
         if committed is not None:
             triples = triples.join(
                 committed.select("subj", "pred", "obj"),
                 ["subj", "pred", "obj"],
                 "left_anti",
             )
-        # two consumers (output partition + probe-index delta): cached
-        # so the extraction core runs once per batch, not twice
-        triples = cache(triples)
-        return triples, triples.select("subj", "pred", "obj")
+        # the output partition is the probe's delta: one consumer, so
+        # nothing is persisted and the write coalesces to few files
+        return triples, None
 
     return _run_micro_batches(
         spark, src_dir, out_dir, checkpoint_dir, state, available_now,

@@ -799,14 +799,19 @@ def test_failed_micro_batch_releases_persisted_frames(
 def test_state_calls_once_per_micro_batch(spark, tmp_path, monkeypatch):
     """The benchmark instruments ``TwoTierState.read_committed``,
     ``write_delta`` and ``compact`` on the class and reads
-    ``delta_dir``: each runs once per non-empty micro-batch, on the
-    instance."""
+    ``delta_dir``: on both drivers ``read_committed`` and ``compact``
+    run once per non-empty micro-batch, on one instance.  The dedup
+    writes its state rows once per batch with ``write_delta``; the
+    pipeline's output partitions are its delta, so it never calls
+    ``write_delta``."""
     import os
 
-    from arachne_spark.streaming.incremental import TwoTierState
+    from arachne_spark.streaming.incremental import (
+        TwoTierState,
+        run_incremental_dedup,
+    )
 
     src = str(tmp_path / "pages_calls")
-    out = str(tmp_path / "triples_calls")
     # 8 source files at maxFilesPerTrigger=4 → 2 micro-batches
     pages_df(spark, 80, partitions=4).repartition(8).write.parquet(src)
     calls = {"read_committed": 0, "write_delta": 0, "compact": 0}
@@ -824,13 +829,209 @@ def test_state_calls_once_per_micro_batch(spark, tmp_path, monkeypatch):
 
     for name in calls:
         monkeypatch.setattr(TwoTierState, name, counting(name))
-    q = run_incremental_pipeline(
-        spark, src, out, str(tmp_path / "ckpt_calls"),
-        alias_df(spark), predicate_df(spark),
+    drivers = {
+        "pipeline": lambda out, ckpt: run_incremental_pipeline(
+            spark, src, out, ckpt, alias_df(spark), predicate_df(spark)
+        ),
+        "dedup": lambda out, ckpt: run_incremental_dedup(
+            spark, src, out, ckpt
+        ),
+    }
+    for name, start in drivers.items():
+        calls.update(dict.fromkeys(calls, 0))
+        seen.clear()
+        q = start(
+            str(tmp_path / f"out_calls_{name}"),
+            str(tmp_path / f"ckpt_calls_{name}"),
+        )
+        q.awaitTermination(300)
+        batches = sum(p["numInputRows"] > 0 for p in q.recentProgress)
+        assert batches == 2, name
+        writes = batches if name == "dedup" else 0
+        assert calls == {
+            "read_committed": batches, "write_delta": writes,
+            "compact": batches,
+        }, name
+        (state,) = seen
+        if name == "dedup":
+            assert os.path.isdir(state.delta_dir)
+
+
+def _state_stream(spark, tmp_path, name, n_files):
+    """(src, out, ckpt, start) of a pipeline stream over ``n_files``
+    source files (4 per micro-batch) whose modification times increase
+    with their names, so every run groups them into the same batches."""
+    import os
+
+    src = str(tmp_path / f"pages_{name}")
+    out = str(tmp_path / f"triples_{name}")
+    ckpt = str(tmp_path / f"ckpt_{name}")
+    pages_df(spark, N_PAGES, partitions=8).repartition(n_files).write.parquet(
+        src
     )
-    q.awaitTermination(300)
-    batches = sum(p["numInputRows"] > 0 for p in q.recentProgress)
-    assert batches == 2
-    assert calls == dict.fromkeys(calls, batches)
-    (state,) = seen
-    assert os.path.isdir(state.delta_dir)
+    files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    for i, f in enumerate(files):
+        os.utime(os.path.join(src, f), (1_000_000 + i, 1_000_000 + i))
+
+    def start():
+        q = run_incremental_pipeline(
+            spark, src, out, ckpt, alias_df(spark), predicate_df(spark)
+        )
+        q.awaitTermination(600)
+        return q
+
+    return src, out, ckpt, start
+
+
+def _assert_output_is_batch_answer(spark, src, out):
+    rows = spark.read.parquet(out).select("subj", "pred", "obj")
+    assert rows.count() == rows.distinct().count()
+    want = _batch_triples(spark, spark.read.parquet(src))
+    assert {tuple(r) for r in rows.collect()} == {
+        tuple(r) for r in want.collect()
+    }
+
+
+def test_incremental_pipeline_probe_read_bounded(
+    spark, tmp_path, monkeypatch
+):
+    """The pipeline's probe is its compacted base plus the output
+    partitions above the watermark: across >= 8 micro-batches each
+    batch reads at most n_state_files base files and fewer than
+    compact_every output partitions, never its own."""
+    import re
+
+    from arachne_spark.streaming.incremental import TwoTierState
+
+    compact_every, n_state_files = 3, 4
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", compact_every)
+    monkeypatch.setattr(incremental, "STATE_FILES", n_state_files)
+    src, out, _, start = _state_stream(spark, tmp_path, "rbnd", 36)
+    reads = []
+    orig = TwoTierState.read_committed
+
+    def recording(self, sp, batch_id):
+        df = orig(self, sp, batch_id)
+        files = [] if df is None else df.inputFiles()
+        reads.append((
+            batch_id,
+            sum("/base/" in f for f in files),
+            {
+                int(m.group(1)) for f in files
+                if (m := re.search(r"/triples_rbnd/batch_id=(\d+)/", f))
+            },
+        ))
+        return df
+
+    monkeypatch.setattr(TwoTierState, "read_committed", recording)
+    start()
+    assert len(reads) >= 8
+    for batch_id, base_files, parts in reads:
+        assert base_files <= n_state_files, batch_id
+        assert len(parts) < compact_every, batch_id
+        assert batch_id not in parts
+    # the base was read, and partitions were read beside it
+    assert any(b for _, b, _ in reads) and any(p for *_, p in reads)
+    _assert_output_is_batch_answer(spark, src, out)
+
+
+def test_incremental_pipeline_retry_after_compaction(
+    spark, tmp_path, monkeypatch
+):
+    """foreachBatch is at-least-once: a batch whose commit compacted the
+    state and which is then run again (its checkpoint commit lost)
+    probes without its own rows and rewrites the same rows."""
+    import os
+
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", 2)
+    src, out, ckpt, start = _state_stream(spark, tmp_path, "retry", 16)
+    start()
+    last = max(int(f) for f in os.listdir(ckpt + "/commits") if f.isdigit())
+    state = incremental.TwoTierState(out + "_state", out)
+    # the last batch's commit ran the compaction that absorbed it
+    assert state.watermark(spark) == last
+
+    def part():
+        path = f"{out}/batch_id={last}"
+        return sorted(os.listdir(path)), sorted(
+            tuple(r) for r in spark.read.parquet(path).collect()
+        )
+
+    files, before = part()
+    assert before
+    for f in (str(last), f".{last}.crc"):
+        os.remove(f"{ckpt}/commits/{f}")
+    q = start()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 1
+    rewritten, after = part()
+    assert rewritten != files and after == before
+    _assert_output_is_batch_answer(spark, src, out)
+
+
+def test_incremental_pipeline_lost_checkpoint_keeps_state(
+    spark, tmp_path, monkeypatch
+):
+    """A checkpoint lost with the state kept: the rerun's batch ids
+    restart at 0, below the state's watermark, and the output stays a
+    set equal to the batch answer."""
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", 2)
+    src, out, ckpt, start = _state_stream(spark, tmp_path, "lostck", 16)
+    start()
+    _assert_output_is_batch_answer(spark, src, out)
+    shutil.rmtree(ckpt)
+    q = start()
+    assert sum(p["numInputRows"] > 0 for p in q.recentProgress) == 4
+    _assert_output_is_batch_answer(spark, src, out)
+
+
+def test_compaction_crash_restores_base_with_its_watermark(
+    spark, tmp_path, monkeypatch
+):
+    """A crash between the compaction swap's two renames leaves the
+    base missing; ``storage.restore`` brings back the pre-swap base
+    together with its watermark."""
+    from arachne_spark.plans import storage
+    from arachne_spark.streaming.incremental import TwoTierState
+
+    monkeypatch.setattr(incremental, "COMPACT_EVERY", 2)
+    out = str(tmp_path / "crash_out")
+    state = TwoTierState(str(tmp_path / "crash_state"), out)
+
+    def commit(batch_id):
+        rows = spark.createDataFrame(
+            [(f"s{batch_id}", "p", "o")],
+            "subj string, pred string, obj string",
+        )
+        write_batch_partition(rows, out, batch_id)
+        state.read_committed(spark, batch_id)
+        state.compact(spark)
+
+    def base():
+        return sorted(
+            tuple(r) for r in spark.read.parquet(state.base_dir).collect()
+        )
+
+    commit(0)
+    commit(1)
+    assert state.watermark(spark) == 1
+    pre = base()
+    assert pre == [("s0", "p", "o", 0), ("s1", "p", "o", 1)]
+
+    renames = []
+    real = storage.checked_rename
+
+    def crash_on_second(fs, src, dst):
+        renames.append(dst)
+        if len(renames) == 2:
+            raise IOError("crash between the swap's renames")
+        real(fs, src, dst)
+
+    commit(2)
+    monkeypatch.setattr(storage, "checked_rename", crash_on_second)
+    with pytest.raises(IOError):
+        commit(3)
+    monkeypatch.setattr(storage, "checked_rename", real)
+    assert not (tmp_path / "crash_state" / "base").exists()
+    storage.restore(spark, state.base_dir)
+    assert state.watermark(spark) == 1
+    assert base() == pre

@@ -208,6 +208,31 @@ def test_stream_commit_swap_and_curation_defined_once():
         assert _holders(_calls(name)) == {curate}, name
     assert _holders(_calls("scrub_expr")) == {
         curate, "arachne_spark/operators/scrub.py:scrub_pii"}
+    # one write per pipeline micro-batch: its step persists nothing,
+    # and only the commit and an owned delta directory's write emit
+    # batch partitions
+    assert not {
+        h for name in ("cache", "persist", "checkpoint", "localCheckpoint")
+        for h in _holders(_calls(name))
+        if h.startswith(f"{inc}:run_incremental_pipeline")
+    }
+    assert _holders(_calls("write_batch_partition")) == {
+        f"{inc}:_run_micro_batches.commit", f"{inc}:write_delta"}
+    # the watermark file name is held by TwoTierState alone
+    wm = TwoTierState._WATERMARK
+    owners = set()
+
+    def walk(node, rel, cls):
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, ast.Constant) and wm in str(child.value):
+                owners.add(f"{rel}:{cls}")
+            walk(child, rel,
+                 child.name if isinstance(child, ast.ClassDef) else cls)
+
+    for src in SOURCES:
+        walk(ast.parse(src.read_text()), src.relative_to(ROOT).as_posix(),
+             None)
+    assert owners == {f"{inc}:TwoTierState"}
     # the stream's fixed shape is module constants, not options
     removed = {"compact_every", "n_state_files", "n_files", "threshold",
                "max_shingle_df", "max_band_bucket"}
