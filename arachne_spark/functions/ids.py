@@ -119,13 +119,15 @@ def normalize(num: Column, kind: Column) -> Column:
 
     The reference throws on negative / any / unknown
     (src/arachne.cpp:165-174); the dataflow equivalent is NULL.
+
+    The prefix is one map lookup (NULL for a kind not in the map), not
+    a chain of CASEs: the optimizer may inline the expression wherever
+    it is used, and a CASE chain inlined into a grouping key (q40's
+    ``dropDuplicates``) grows the generated aggregate past the JVM's
+    64 KB method limit.
     """
-    prefix = F.coalesce(
-        *[
-            F.when(kind == F.lit(k), F.lit(p))
-            for k, p in PREFIX_FOR_KIND.items()
-        ],
-        F.lit(None).cast("string"),
-    )
+    prefix = F.create_map(
+        *[F.lit(x) for kp in PREFIX_FOR_KIND.items() for x in kp]
+    )[kind]
     ok = prefix.isNotNull() & (num >= 0)
     return F.when(ok, F.concat(prefix, num.cast("string")))

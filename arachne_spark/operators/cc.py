@@ -165,15 +165,13 @@ def connected_components(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    key_encode: bool = True,
 ) -> DataFrame:
     """→ (node, component) with component = min-priority member.
 
-    `edges` is an undirected edge list over entity-ID strings (or any
-    orderable column type if key_encode=False).  Isolated nodes are not
-    emitted (callers coalesce missing nodes to themselves).
+    `edges` is an undirected edge list over entity-ID strings.  Isolated
+    nodes are not emitted (callers coalesce missing nodes to themselves).
     """
-    comp = _star_edges(edges, src, dst, key_encode)
+    comp = _star_edges(edges, src, dst, key_encode=True)
     roots = comp.select("component").distinct().select(
         F.col("component").alias("node"), "component"
     )

@@ -81,6 +81,39 @@ def resolve_alias_dict(alias_df: DataFrame) -> DataFrame:
     )
 
 
+def probe_aliases(
+    pages: DataFrame,
+    alias_df: DataFrame,
+    keep: list[str],
+    broadcast_dict: bool = True,
+) -> DataFrame:
+    """Candidate alias matches of batch and stream: one row per token
+    position whose n-gram equals a resolved alias: the ``keep`` page
+    columns, ``tokens``, ``pos``, ``tok`` and the dictionary row
+    (``alias, qid, priority, n, first_tok``).  No dominance.
+
+    Explodes TOKENS (codegen'd), not n-grams: materializing every
+    n-gram as a struct costs ~4x the rows and runs through Spark's
+    interpreted higher-order-function path (~17 us/struct measured);
+    probing the dictionary with single tokens and verifying the full
+    n-gram only on candidate rows does the same work on a fraction of
+    the data, entirely inside whole-stage codegen.
+    """
+    resolved = resolve_alias_dict(alias_df)
+    toks = tokenize(pages).select(
+        *keep, "tokens", F.posexplode("tokens").alias("pos", "tok")
+    )
+    dict_side = F.broadcast(resolved) if broadcast_dict else resolved
+    return toks.join(
+        dict_side,
+        toks["tok"] == resolved["first_tok"],
+        "inner",
+    ).where(
+        F.expr("array_join(slice(tokens, pos + 1, n), ' ')")
+        == F.col("alias")
+    )
+
+
 def detect_mentions(
     pages: DataFrame,
     alias_df: DataFrame,
@@ -108,28 +141,7 @@ def detect_mentions(
     """
     if id_col != "url":
         pages = pages.withColumnRenamed(id_col, "url")
-    resolved = resolve_alias_dict(alias_df)
-    with_tokens = tokenize(pages)
-
-    # explode TOKENS (codegen'd), not n-grams: materializing every
-    # n-gram as a struct costs ~4x the rows and runs through Spark's
-    # interpreted higher-order-function path (~17 us/struct measured);
-    # probing the broadcast dictionary with single tokens and verifying
-    # the full n-gram only on candidate rows does the same work on a
-    # fraction of the data, entirely inside whole-stage codegen.
-    toks = with_tokens.select(
-        "url", "tokens", F.posexplode("tokens").alias("pos", "tok")
-    )
-    dict_side = F.broadcast(resolved) if broadcast_dict else resolved
-    cand = toks.join(
-        dict_side,
-        toks["tok"] == resolved["first_tok"],
-        "inner",
-    )
-    best = cand.where(
-        F.expr("array_join(slice(tokens, pos + 1, n), ' ')")
-        == F.col("alias")
-    ).select(
+    best = probe_aliases(pages, alias_df, ["url"], broadcast_dict).select(
         "url",
         "pos",
         "n",

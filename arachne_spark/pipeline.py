@@ -86,15 +86,6 @@ class PipelineConfig:
     # graph materialization: also serialize the final triples table as
     # RDF N-Triples under <warehouse>/triples_nt (sources/ntriples.py)
     materialize_rdf: bool = False
-    # co-located canonicalization join: write triples_raw (bucketed by
-    # subj) and canonical_map (bucketed by qid) with the same bucket
-    # spec, so the subj-side join reads both layouts Exchange-free and
-    # the obj-side join shuffles ONLY the probe stream (the bucketed
-    # map side never re-shuffles).  At 100 TB this removes the largest
-    # repeated shuffle of the stage graph; off by default at fixture
-    # scale (two extra table writes).
-    bucket_canonical: bool = False
-    n_buckets: int = 64
     # corpus-curation pre-stages (operators/{urls,scrub,quality}.py),
     # applied between snapshot cleaning and page dedup; each is the
     # standard pre-training hygiene pass, off by default so the KG
@@ -176,9 +167,7 @@ def assign_batches(queue: DataFrame) -> DataFrame:
 def canonicalize_join(t: DataFrame, m: DataFrame) -> DataFrame:
     """triples ⋈ canonical_map on subj, then on obj, coalescing to the
     canonical qid.  No broadcast hint: sameAs clusters grow with the
-    corpus; AQE chooses broadcast vs shuffle at runtime — or, on the
-    bucketed path (``bucketize_canonical_inputs``), the layout itself
-    carries the partitioning."""
+    corpus; AQE chooses broadcast vs shuffle at runtime."""
     t = (
         t.join(
             m.withColumnRenamed("qid", "subj").withColumnRenamed(
@@ -202,34 +191,6 @@ def canonicalize_join(t: DataFrame, m: DataFrame) -> DataFrame:
         .dropDuplicates()
     )
     return t
-
-
-def bucketize_canonical_inputs(
-    wh: Warehouse,
-    triples_raw: DataFrame,
-    canonical_map: DataFrame,
-    n_buckets: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Write both canonicalization-join inputs with the same bucket
-    spec and read them back with bucket metadata intact: the subj-side
-    join then needs NO Exchange on either side, and the obj-side join
-    shuffles only the probe stream (the map side's layout is reused).
-    Plan contract asserted on the REAL pipeline path in
-    tests/test_plans.py::test_pipeline_bucketed_canonicalize."""
-    wh.write_bucketed(
-        triples_raw.where(F.col("pred") != "sameAs"),
-        "triples_raw_bkt",
-        n_buckets,
-        ["subj"],
-        ["subj"],
-    )
-    wh.write_bucketed(
-        canonical_map, "canonical_map_bkt", n_buckets, ["qid"], ["qid"]
-    )
-    return (
-        wh.read_table("triples_raw_bkt"),
-        wh.read_table("canonical_map_bkt"),
-    )
 
 
 def curate_pages(
@@ -459,18 +420,13 @@ def _run_stage_graph(
         force=cfg.force,
     )
 
-    def canonicalize() -> DataFrame:
-        if cfg.bucket_canonical:
-            t, m = bucketize_canonical_inputs(
-                wh, triples_raw, canonical_map, cfg.n_buckets
-            )
-        else:
-            t = triples_raw.where(F.col("pred") != "sameAs")
-            m = canonical_map
-        return canonicalize_join(t, m)
-
     triples = rec.run_stage(
-        "triples", canonicalize, force=cfg.force, partition_by=["pred"]
+        "triples",
+        lambda: canonicalize_join(
+            triples_raw.where(F.col("pred") != "sameAs"), canonical_map
+        ),
+        force=cfg.force,
+        partition_by=["pred"],
     )
 
     if cfg.rank_entities:

@@ -8,8 +8,10 @@ Two backends behind one API:
 * **Iceberg** (preferred on a real cluster): ``df.writeTo(cat.ns.table)``
   — atomic snapshot commit, time travel, incremental reads.  Used when
   the session has an Iceberg catalog configured (``iceberg_catalog``).
-* **Parquet fallback** (this sandbox has no Iceberg runtime jar):
-  per-table directory; Spark's ``_SUCCESS`` marker is the commit record.
+* **Parquet fallback** (no Iceberg runtime jar on the classpath):
+  one directory of plain parquet files per table under the warehouse
+  root, with no session-catalog entry; Spark's ``_SUCCESS`` marker is
+  the commit record.
   Writes go to a temp dir and are atomically swapped into place, so a
   killed run never leaves a half-written "committed" stage.  Every file
   operation goes through the Hadoop FileSystem API resolved from the
@@ -25,7 +27,6 @@ load from their snapshots.
 
 from __future__ import annotations
 
-import hashlib
 import re
 from collections.abc import Callable
 
@@ -221,75 +222,6 @@ class Warehouse:
             return
         fs, _ = hadoop_fs(self.spark, self.root)
         fs.delete(self._jpath(self._path(table)), True)
-
-    def _bucketed_name(self, table: str) -> str:
-        """Session-catalog name for a bucketed parquet-fallback table,
-        namespaced by a hash of the warehouse root: two Warehouse
-        instances with different roots but the same logical table name
-        must not overwrite each other's catalog entry.  (The entry
-        itself is still session-scoped — a new session re-registers by
-        re-running write_bucketed, or moves to the Iceberg backend
-        where bucket metadata lives in the table format.)"""
-        # normalized root: '/wh' and '/wh/' resolve every table to the
-        # same directory, so they must hash to the same namespace
-        tag = hashlib.md5(
-            self.root.rstrip("/").encode()
-        ).hexdigest()[:8]
-        return f"wh_{tag}_{table}"
-
-    def write_bucketed(
-        self,
-        df: DataFrame,
-        table: str,
-        n_buckets: int,
-        bucket_cols: list[str],
-        sort_cols: list[str] | None = None,
-    ) -> None:
-        """Bucketed table for co-located joins: both sides of a
-        repeated equi-join (triples ⋈ canonical_map, triples ⋈ labels)
-        written with the same bucket spec join WITHOUT a shuffle —
-        the Exchange disappears from the plan because partitioning is
-        baked into the table layout.  On Iceberg this is the
-        ``bucket(N, col)`` partition transform; the parquet fallback
-        uses ``bucketBy``/``saveAsTable`` (plain ``save`` cannot carry
-        bucket metadata), with the table's files rooted under the
-        warehouse dir so nothing leaks into the driver cwd.
-
-        Plan contract (asserted in tests/test_bucketing.py): joining
-        two tables bucketed (same N, same keys) on those keys shows
-        SortMergeJoin over FileScans with NO Exchange on either side.
-        """
-        if self.catalog:
-            # Iceberg: one bucket transform PER key column (identity
-            # partitioning on a high-cardinality key would explode the
-            # partition count; joint-hash bucketing is not expressible
-            # as a transform, and per-column bucket transforms still
-            # co-locate two tables written with the same spec for a
-            # join on all bucket_cols).  Atomic replace.
-            from pyspark.sql.functions import bucket, col
-
-            writer = df.writeTo(f"{self.catalog}.{table}").partitionedBy(
-                bucket(n_buckets, col(bucket_cols[0])),
-                *[bucket(n_buckets, col(c)) for c in bucket_cols[1:]],
-            )
-            writer.createOrReplace()
-            return
-        w = (
-            df.write.mode("overwrite")
-            .format("parquet")
-            .option("path", self._path(table))
-            .bucketBy(n_buckets, *bucket_cols)
-        )
-        if sort_cols:
-            w = w.sortBy(*sort_cols)
-        w.saveAsTable(self._bucketed_name(table))
-
-    def read_table(self, table: str) -> DataFrame:
-        """Catalog read that preserves bucket metadata (plain
-        ``spark.read.parquet`` on the directory would forget it)."""
-        if self.catalog:
-            return self.spark.read.table(f"{self.catalog}.{table}")
-        return self.spark.table(self._bucketed_name(table))
 
     def resume_or_compute(
         self, table: str, compute, force: bool = False, **write_kwargs

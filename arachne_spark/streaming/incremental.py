@@ -10,8 +10,8 @@ run incrementally over an unbounded page feed:
 * ``streaming_mention_counts`` — the touch-counter (O8,
   /root/reference/src/arachne.cpp:224-233) as a watermarked windowed
   aggregation: per (window, qid) mention counts with late-data bounds.
-  The broadcast alias join and tokenization are the *same* column
-  expressions as the batch path — stream/batch parity by construction.
+  Tokenization and the broadcast alias probe are the batch path's own
+  ``probe_aliases`` — stream/batch parity by construction.
 * ``run_incremental_pipeline`` — ``foreachBatch`` driving the full
   batch extraction core per micro-batch into the triples table; with
   ``availableNow`` this is the catch-up/backfill mode, with the
@@ -40,8 +40,7 @@ from arachne_spark.operators.extract import (
 from arachne_spark.operators.mentions import (
     detect_mentions,
     link_triples,
-    resolve_alias_dict,
-    tokenize,
+    probe_aliases,
 )
 from arachne_spark.pipeline import curate_pages
 from arachne_spark.plans.storage import hadoop_fs, restore, swap_in
@@ -233,19 +232,7 @@ def streaming_mention_counts(
     match — the touch-counter semantics, which also ignores spans
     (src/arachne.cpp:224-233 counts every touch).
     """
-    resolved = resolve_alias_dict(alias_df)
-    toks = tokenize(with_text(pages)).select(
-        "url", "warc_ts", "tokens",
-        F.posexplode("tokens").alias("pos", "tok"),
-    )
-    matched = toks.join(
-        F.broadcast(resolved),
-        toks["tok"] == resolved["first_tok"],
-        "inner",
-    ).where(
-        F.expr("array_join(slice(tokens, pos + 1, n), ' ')")
-        == F.col("alias")
-    )
+    matched = probe_aliases(with_text(pages), alias_df, ["url", "warc_ts"])
     # group by the *window struct*, not window(...).start: projecting
     # .start inside the groupBy severs the event-time column from the
     # watermark, so append-mode refuses the plan and update-mode state

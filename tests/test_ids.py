@@ -180,3 +180,27 @@ def test_normalize(spark):
         assert got[(n, k)] == expected, (
             f"normalize({n}, {k}) = {got[(n, k)]}, want {expected}"
         )
+
+
+def test_normalize_compiles_without_codegen_fallback(spark, tmp_path):
+    """q35 and q40 use ``normalize`` in a projection and, inlined by the
+    optimizer, inside a ``dropDuplicates`` grouping key.  With codegen
+    fallback off, a generated method past the JVM's 64 KB limit raises
+    instead of silently dropping to interpreted evaluation."""
+    import __spark_entry__ as em
+
+    d = str(tmp_path)
+    spark.range(1, 2001).select(F.col("id").alias("p_partkey")).write.parquet(
+        f"{d}/part.parquet"
+    )
+    spark.range(1, 1501).select(
+        F.col("id").alias("o_orderkey")
+    ).write.parquet(f"{d}/orders.parquet")
+    key = "spark.sql.codegen.fallback"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert len(em.q35_normalize(spark, d).collect()) == 2000
+        assert em.q40_fetch_routing(spark, d).collect()
+    finally:
+        spark.conf.set(key, prev)

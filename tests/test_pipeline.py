@@ -12,6 +12,7 @@ from pyspark.sql import functions as F
 from arachne_spark.pipeline import (
     CANDIDATES_THRESHOLD,
     PipelineConfig,
+    canonicalize_join,
     run_pipeline,
 )
 from arachne_spark.plans.lineage import StageRecorder
@@ -70,6 +71,12 @@ def test_no_sameas_survives_and_canonical_subjects(spark, pipeline_result):
         F.col("subj").isin("Q990082", "Q999769")
         | F.col("obj").isin("Q990082", "Q999769")
     ).count() == 0
+    # the committed triples are exactly the canonicalization join of
+    # the committed inputs
+    raw = spark.read.parquet(f"{wh}/triples_raw")
+    m = spark.read.parquet(f"{wh}/canonical_map")
+    want = canonicalize_join(raw.where(F.col("pred") != "sameAs"), m)
+    assert _triples(spark, wh) == {tuple(r) for r in want.collect()}
 
 
 def test_fuzzy_links_present(spark, pipeline_result):
@@ -511,8 +518,8 @@ def test_strip_dup_spans_stage(spark, tmp_path):
 
 def test_all_gates_compose(spark, tmp_path):
     """Every optional pipeline feature ON in one run: curation gates,
-    near-dup page dedup, bucketed canonicalization, entity ranking,
-    and RDF materialization compose without interfering."""
+    near-dup page dedup, entity ranking and RDF materialization
+    compose without interfering."""
     import os
 
     wh = str(tmp_path / "all_wh")
@@ -521,8 +528,7 @@ def test_all_gates_compose(spark, tmp_path):
         canonical_url_dedup=True, scrub_pii=True,
         strip_dup_spans=True, dup_span_tokens=30,
         quality_filter=True, dedup_pages=True,
-        bucket_canonical=True, rank_entities=True,
-        materialize_rdf=True,
+        rank_entities=True, materialize_rdf=True,
     )
     res = run_pipeline(spark, cfg)
     stages = {s["stage"] for s in res["stages"]}

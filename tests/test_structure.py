@@ -5,7 +5,8 @@ media format's structure is walked once, behind one never-raise
 boundary; connected components and transitive closure share one
 round loop, and components finish small frontiers through one driver
 union-find; fuzzy linking, page dedup and streaming dedup share one
-MinHash-LSH."""
+MinHash-LSH; batch and stream share one alias probe, and the
+canonicalization step has one plan over plain warehouse files."""
 
 from __future__ import annotations
 
@@ -292,3 +293,28 @@ def test_minhash_defined_once():
         h for h in _holders(_calls("connected_components"))
         if "/dedup.py:" in h or h.endswith("/ann.py:semantic_dedup")
     }
+
+
+def test_one_alias_probe_and_one_canonicalization_plan():
+    from arachne_spark.operators.cc import connected_components
+    from arachne_spark.pipeline import PipelineConfig
+    from arachne_spark.plans.storage import Warehouse
+
+    mentions = "arachne_spark/operators/mentions.py"
+    # the stream's touch counter and the batch mention detector probe
+    # the dictionary through one helper
+    assert _holders(_calls("resolve_alias_dict")) == {
+        f"{mentions}:probe_aliases"}
+    assert _holders(_calls("probe_aliases")) == {
+        f"{mentions}:detect_mentions",
+        "arachne_spark/streaming/incremental.py:streaming_mention_counts"}
+    # no session-catalog tables: every stage is plain files under the
+    # warehouse root, read back by path
+    for name in ("bucketBy", "saveAsTable"):
+        assert not _holders(_calls(name)), name
+    fields = set(PipelineConfig.__dataclass_fields__)
+    assert not fields & {"bucket_canonical", "n_buckets"}
+    for gone in ("write_bucketed", "read_table", "_bucketed_name"):
+        assert not hasattr(Warehouse, gone), gone
+    assert "key_encode" not in inspect.signature(
+        connected_components).parameters
