@@ -3794,7 +3794,7 @@ def _kmeans_oracle() -> tuple[str, str]:
     operator before wiring: (1) init order = (xxhash64(vec_id,
     'kmeans_init'), vec_id) via the from-spec XXH64 twin; (2) the
     assignment cosine is a LEFT-TO-RIGHT double fold (the SQL
-    aggregate path — dims < DOT_ARROW_MIN_DIM); (3) the mean is a
+    ``aggregate`` of ``ann.dot_expr``); (3) the mean is a
     decimal sum of inputs quantized HALF_UP at 1e-9 (cast float ->
     decimal(30,9)) divided by the count with the quotient AGAIN
     HALF_UP at 1e-9 (Spark's decimal(38,9)/decimal(20,0) division

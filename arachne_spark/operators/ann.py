@@ -23,26 +23,12 @@ embedding near-dup dedup).  Two strategies, both deterministic:
   bucket join is a plain shuffled equi-join: no broadcast of the
   corpus, no cartesian anything.
 
-Dot products have two interchangeable engines behind one API:
-
-* **JVM expression** (``aggregate``/``zip_with``) — interpreted, not
-  codegen'd (~us/element), but free of any Python round-trip; wins at
-  small dims (the 64-dim fixtures).
-* **Arrow-batched numpy matmul** (scalar pandas UDF, ``einsum`` over a
-  stacked float64 batch) — pays one Arrow transfer per batch, then
-  ~ns/element; wins at real embedding widths.  Selected automatically
-  when the caller declares ``vec_dim >= DOT_ARROW_MIN_DIM``.
-
-The crossover was MEASURED on this host (table in BASELINE.md "ANN
-dot engine crossover"): at equal element counts the engines are at
-par up to ~256 dims, then the expression path's per-row cost grows
-with width (the zip_with intermediate array is allocated per row)
-while the Arrow path stays flat — ~3.5-4x faster at 512-1024 dims.
-``DOT_ARROW_MIN_DIM = 256`` keeps every realistic embedding width
-(384/768/1024/1536) on the vectorized path while the small-dim
-fixtures stay JVM-side (which also keeps the value-hash oracles
-byte-stable: the two engines agree after round(_, 4), but only the
-expression path is used where an oracle hash is recorded).
+Dot products and norms are JVM expressions (``aggregate`` over
+``zip_with``/``transform``): interpreted, not codegen'd (~us/element),
+but free of any Python round-trip, which keeps the whole search in the
+JVM.  An Arrow-batched numpy einsum measured at par up to 256 dims
+(table in BASELINE.md "ANN dot engine crossover"); the embeddings here
+are 8 or 64 dims wide.
 """
 
 from __future__ import annotations
@@ -50,10 +36,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
-
-# Arrow-matmul engine cutover dim for pairwise rescoring (measured —
-# BASELINE.md); callers opt in by declaring their embedding width.
-DOT_ARROW_MIN_DIM = 256
 
 
 def norm_expr(vec_col: str) -> Column:
@@ -74,42 +56,35 @@ def dot_expr(a_col: str, b_col: str) -> Column:
     )
 
 
-def _dot_arrow(a: Column, b: Column) -> Column:
-    """Batched pairwise dot product: one numpy einsum per Arrow batch
-    (rows arrive as ndarrays of the declared fixed dim; float64
-    accumulate matches the expression engine's cast-to-double).  The
-    pandas UDF is created lazily — decorating at import time would
-    require an active SparkContext just to import this module."""
-    from pyspark.sql.types import DoubleType
-
-    def dot(pa, pb):
-        import numpy as np
-        import pandas as pd
-
-        if len(pa) == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        av = np.stack(pa.to_numpy()).astype(np.float64, copy=False)
-        bv = np.stack(pb.to_numpy()).astype(np.float64, copy=False)
-        return pd.Series(np.einsum("ij,ij->i", av, bv))
-
-    return F.pandas_udf(dot, DoubleType())(a, b)
-
-
-def pair_dot(a_col: str, b_col: str, vec_dim: int | None = None) -> Column:
-    """Pairwise dot with automatic engine selection: Arrow matmul when
-    the caller declares a width at or past the measured crossover,
-    interpreted JVM expression otherwise (module docstring)."""
-    if vec_dim is not None and vec_dim >= DOT_ARROW_MIN_DIM:
-        return _dot_arrow(F.col(a_col), F.col(b_col))
-    return dot_expr(a_col, b_col)
-
-
 def cosine(dot: Column, n1: Column, n2: Column) -> Column:
     """dot / (n1 * n2), NULL when either norm is zero: an all-zero
     vector has no direction, and a bare division would fail (ANSI) or
     rank it with a non-number.  Descending sorts put NULL last, so a
     zero vector never outranks a real neighbour."""
     return dot / F.nullif(n1 * n2, F.lit(0.0))
+
+
+def _pair_sim() -> Column:
+    """Rounded cosine of a candidate pair row (qe, qn, ne, nn)."""
+    return F.round(
+        cosine(dot_expr("qe", "ne"), F.col("qn"), F.col("nn")), 4
+    )
+
+
+def _topk(sims: DataFrame, k: int) -> DataFrame:
+    """The ``k`` best (sim desc, nvec) rows per qvec, ranked 1..k."""
+    w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
+    return (
+        sims.withColumn("rank", F.row_number().over(w).cast("bigint"))
+        .where(F.col("rank") <= k)
+    )
+
+
+def _with_cnrm(centroids: DataFrame) -> DataFrame:
+    """An injected quantizer (cid, cvec[, cnrm]) with its norms."""
+    if "cnrm" in centroids.columns:
+        return centroids
+    return centroids.select("cid", "cvec", norm_expr("cvec").alias("cnrm"))
 
 
 def bucket_expr(vec_col: str, hyperplanes: list[list[float]]) -> Column:
@@ -140,74 +115,13 @@ def probe_expr(bucket_col: str, n_bits: int, radius: int = 1) -> Column:
     return F.array(*probes)
 
 
-def _index_arrow(vec: Column, hyperplanes: list[list[float]]) -> Column:
-    """struct(nrm, bucket) per vector, one numpy pass per Arrow batch:
-    norms and ALL hyperplane sign bits come out of a single
-    (batch x dim) @ (dim x n_bits) matmul — the indexing-side
-    counterpart of ``_dot_arrow`` (the expression engine pays n_bits
-    interpreted dot products per row).  Lazily created, like
-    ``_dot_arrow``."""
-    from pyspark.sql.types import (
-        DoubleType,
-        LongType,
-        StructField,
-        StructType,
-    )
-
-    out_type = StructType(
-        [
-            StructField("nrm", DoubleType()),
-            StructField("bucket", LongType()),
-        ]
-    )
-
-    def index(v):
-        import numpy as np
-        import pandas as pd
-
-        if len(v) == 0:
-            return pd.DataFrame(
-                {
-                    "nrm": np.empty(0, dtype=np.float64),
-                    "bucket": np.empty(0, dtype=np.int64),
-                }
-            )
-        hp = np.asarray(hyperplanes, dtype=np.float64)
-        vm = np.stack(v.to_numpy()).astype(np.float64, copy=False)
-        nrm = np.sqrt(np.einsum("ij,ij->i", vm, vm))
-        signs = (vm @ hp.T) > 0
-        weights = np.left_shift(
-            np.int64(1), np.arange(len(hyperplanes), dtype=np.int64)
-        )
-        bucket = (signs * weights).sum(axis=1).astype(np.int64)
-        return pd.DataFrame({"nrm": nrm, "bucket": bucket})
-
-    return F.pandas_udf(index, out_type)(vec)
-
-
 def with_buckets(
     emb: DataFrame,
     hyperplanes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
-    """(id, vec, nrm, bucket): the indexed side of every ANN join.
-    ``vec_dim`` at/past ``DOT_ARROW_MIN_DIM`` routes norm + bucket
-    through one Arrow matmul per batch instead of 1 + n_bits
-    interpreted dot products per row."""
-    if vec_dim is not None and vec_dim >= DOT_ARROW_MIN_DIM:
-        idx = emb.select(
-            F.col(id_col).alias("vec_id"),
-            F.col(vec_col).alias("embedding"),
-            _index_arrow(F.col(vec_col), hyperplanes).alias("_ix"),
-        )
-        return idx.select(
-            "vec_id",
-            "embedding",
-            F.col("_ix.nrm").alias("nrm"),
-            F.col("_ix.bucket").alias("bucket"),
-        )
+    """(id, vec, nrm, bucket): the indexed side of every ANN join."""
     return emb.select(
         F.col(id_col).alias("vec_id"),
         F.col(vec_col).alias("embedding"),
@@ -222,11 +136,9 @@ def brute_force_topk(
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """(qvec, nvec, sim, rank): exact cosine top-k, query side
-    broadcast — linear in the corpus, never a CartesianProduct.
-    ``vec_dim`` (optional declared width) picks the dot engine."""
+    broadcast — linear in the corpus, never a CartesianProduct."""
     ns = emb.select(
         F.col(id_col).alias("nvec"),
         F.col(vec_col).alias("ne"),
@@ -240,18 +152,7 @@ def brute_force_topk(
     pairs = ns.crossJoin(F.broadcast(qs)).where(
         F.col("qvec") != F.col("nvec")
     )
-    sims = pairs.select(
-        "qvec",
-        "nvec",
-        F.round(
-            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(pairs.select("qvec", "nvec", _pair_sim().alias("sim")), k)
 
 
 def _candidate_pairs(
@@ -293,29 +194,17 @@ def ann_topk(
     radius: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """(qvec, nvec, sim, rank): LSH-bucketed approximate top-k for the
     rows matching ``query_pred`` — q28's hyperplane buckets composed
     with the search: candidates share a probe bucket, exact cosine
     rescoring ranks them."""
-    e = with_buckets(emb, hyperplanes, id_col, vec_col, vec_dim)
+    e = with_buckets(emb, hyperplanes, id_col, vec_col)
     cand = _candidate_pairs(
         e, e.where(query_pred), len(hyperplanes), radius,
         F.col("qvec") != F.col("nvec"),
     )
-    sims = cand.select(
-        "qvec",
-        "nvec",
-        F.round(
-            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(cand.select("qvec", "nvec", _pair_sim().alias("sim")), k)
 
 
 def ivf_centroids(
@@ -349,7 +238,6 @@ def kmeans_fit(
     n_iters: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """In-engine deterministic Lloyd's k-means → (cid, cvec, cnrm),
     drop-in for the ``centroids=`` input of ``ivf_assign``/``ivf_topk``
@@ -397,9 +285,9 @@ def kmeans_fit(
         ).withColumn("cnrm", norm_expr("cvec"))
 
     for _ in range(n_iters):
-        assigned = ivf_assign(
-            base, as_df(cent_rows), nprobe=1, vec_dim=vec_dim
-        ).select("cid", "embedding")
+        assigned = ivf_assign(base, as_df(cent_rows), nprobe=1).select(
+            "cid", "embedding"
+        )
         comp = assigned.select(
             "cid", F.posexplode("embedding").alias("pos", "v")
         )
@@ -434,7 +322,6 @@ def ivf_assign(
     nprobe: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """(vec_id, embedding, nrm, cid, crank): each vector's ``nprobe``
     nearest centroids by cosine (crank 1 = nearest; ties break to the
@@ -451,11 +338,7 @@ def ivf_assign(
     pairs = e.crossJoin(F.broadcast(centroids))
     sims = pairs.withColumn(
         "csim",
-        cosine(
-            pair_dot("embedding", "cvec", vec_dim),
-            F.col("nrm"),
-            F.col("cnrm"),
-        ),
+        cosine(dot_expr("embedding", "cvec"), F.col("nrm"), F.col("cnrm")),
     )
     w = Window.partitionBy("vec_id").orderBy(
         F.col("csim").desc(), F.col("cid")
@@ -475,7 +358,6 @@ def ivf_topk(
     nprobe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
     centroids: DataFrame | None = None,
 ) -> DataFrame:
     """(qvec, nvec, sim, rank): IVF approximate top-k — the second
@@ -493,18 +375,14 @@ def ivf_topk(
     over a corpus sample, this operator for index + search.  Omitted,
     the deterministic seeded pick (``ivf_centroids``) is used."""
     if centroids is not None:
-        cents = centroids
-        if "cnrm" not in cents.columns:
-            cents = cents.select(
-                "cid", "cvec", norm_expr("cvec").alias("cnrm")
-            )
+        cents = _with_cnrm(centroids)
     else:
         cents = ivf_centroids(emb, n_centroids, id_col, vec_col)
     indexed = ivf_assign(emb, cents, nprobe=1, id_col=id_col,
-                         vec_col=vec_col, vec_dim=vec_dim)
+                         vec_col=vec_col)
     probing = ivf_assign(
         emb.where(query_pred), cents, nprobe=nprobe,
-        id_col=id_col, vec_col=vec_col, vec_dim=vec_dim,
+        id_col=id_col, vec_col=vec_col,
     )
     cand = (
         probing.select(
@@ -525,18 +403,7 @@ def ivf_topk(
         .where(F.col("qvec") != F.col("nvec"))
         .dropDuplicates(["qvec", "nvec"])
     )
-    sims = cand.select(
-        "qvec",
-        "nvec",
-        F.round(
-            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
-        ).alias("sim"),
-    )
-    w = Window.partitionBy("qvec").orderBy(F.col("sim").desc(), F.col("nvec"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w).cast("bigint"))
-        .where(F.col("rank") <= k)
-    )
+    return _topk(cand.select("qvec", "nvec", _pair_sim().alias("sim")), k)
 
 
 def embedding_neardup(
@@ -546,23 +413,16 @@ def embedding_neardup(
     radius: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """(qvec, nvec, sim), qvec < nvec: near-duplicate pairs by cosine >=
     threshold, blocked by LSH bucket (+ Hamming-1 multi-probe).
     All-pairs comparison happens only inside buckets — the scale-safe
     form of the embedding-cosine dedup sweep."""
-    e = with_buckets(emb, hyperplanes, id_col, vec_col, vec_dim)
+    e = with_buckets(emb, hyperplanes, id_col, vec_col)
     cand = _candidate_pairs(
         e, e, len(hyperplanes), radius, F.col("qvec") < F.col("nvec")
     )
-    sims = cand.select(
-        "qvec",
-        "nvec",
-        F.round(
-            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
-        ).alias("sim"),
-    )
+    sims = cand.select("qvec", "nvec", _pair_sim().alias("sim"))
     return sims.where(F.col("sim") >= threshold)
 
 
@@ -574,7 +434,6 @@ def semantic_dedup(
     kmeans_iters: int = 3,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    vec_dim: int | None = None,
 ) -> DataFrame:
     """(vec_id, rep_id, keep): SemDeDup-style semantic deduplication
     (Abbas et al. 2023) — cluster the embedding space, compare cosine
@@ -595,18 +454,11 @@ def semantic_dedup(
     from .cc import representatives
 
     if centroids is not None:
-        cents = centroids
-        if "cnrm" not in cents.columns:
-            cents = cents.select(
-                "cid", "cvec", norm_expr("cvec").alias("cnrm")
-            )
+        cents = _with_cnrm(centroids)
     else:
-        cents = kmeans_fit(
-            emb, n_centroids, kmeans_iters, id_col, vec_col, vec_dim
-        )
+        cents = kmeans_fit(emb, n_centroids, kmeans_iters, id_col, vec_col)
     a = ivf_assign(
-        emb, cents, nprobe=1, id_col=id_col, vec_col=vec_col,
-        vec_dim=vec_dim,
+        emb, cents, nprobe=1, id_col=id_col, vec_col=vec_col
     ).select("vec_id", "embedding", "nrm", "cid")
     pairs = (
         a.select(
@@ -622,10 +474,5 @@ def semantic_dedup(
         )
         .where(F.col("qvec") < F.col("nvec"))
     )
-    dup = pairs.where(
-        F.round(
-            cosine(pair_dot("qe", "ne", vec_dim), F.col("qn"), F.col("nn")), 4
-        )
-        >= threshold
-    ).select("qvec", "nvec")
+    dup = pairs.where(_pair_sim() >= threshold).select("qvec", "nvec")
     return representatives(emb.select(F.col(id_col).alias("vec_id")), dup)

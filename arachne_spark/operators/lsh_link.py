@@ -42,6 +42,8 @@ K_SHINGLE = 3
 N_HASHES = 8
 N_BANDS = 2
 MAX_BAND_DF = 1000
+# lowest surface-to-alias Jaccard a fuzzy link keeps
+FUZZY_THRESHOLD = 0.5
 
 _SIG = ("shset", "band_idx", "band_hash")
 
@@ -212,13 +214,7 @@ def fuzzy_link_best(
     )
 
 
-def fuzzy_mentions(
-    pages,
-    mentions,
-    alias_df,
-    min_len: int = 6,
-    threshold: float = 0.5,
-):
+def fuzzy_mentions(pages, mentions, alias_df):
     """(url, surface, qid, jaccard): long-tail mention rows for surface
     forms that missed the exact dictionary, resolved to item entities
     via LSH blocking + best-candidate scoring.
@@ -230,11 +226,11 @@ def fuzzy_mentions(
     """
     from arachne_spark.operators.mentions import unmatched_tokens
 
-    um = unmatched_tokens(pages, mentions, min_len=min_len)
+    um = unmatched_tokens(pages, mentions)
     best = fuzzy_link_best(
         um.select("surface").distinct(),
         alias_df.where(F.col("kind") == "item"),
-        threshold=threshold,
+        threshold=FUZZY_THRESHOLD,
     )
     # NOT a forced broadcast: on a real web corpus distinct tokens are
     # ~1e8+, past the 8 GB broadcast ceiling.  With AQE on (the

@@ -10,7 +10,7 @@ Spark-first design (no Python in this path at all):
    Spark's interpreted higher-order-function path (~17 us/struct
    measured) and 4x the rows; probing with single tokens and verifying
    full n-grams only on candidates is ~5x faster end-to-end.
-3. alias match = **broadcast hash join** of tokens against the alias
+3. alias match = planner-chosen hash join of tokens against the alias
    dictionary keyed by its FIRST token, then an n-gram verification
    filter (``slice`` + ``array_join``) on the candidate rows only —
    the Spark restatement of the reference's batched ``wbgetentities``
@@ -41,6 +41,8 @@ from pyspark.sql import functions as F
 
 MAX_GAP_TOKENS = 3
 TOKEN_PATTERN = r"[a-z0-9]+|\."
+# shortest unmatched token the fuzzy-link stage tries to resolve
+FUZZY_MIN_LEN = 6
 
 
 def tokenize(pages: DataFrame, text_col: str = "text") -> DataFrame:
@@ -85,7 +87,6 @@ def probe_aliases(
     pages: DataFrame,
     alias_df: DataFrame,
     keep: list[str],
-    broadcast_dict: bool = True,
 ) -> DataFrame:
     """Candidate alias matches of batch and stream: one row per token
     position whose n-gram equals a resolved alias: the ``keep`` page
@@ -103,11 +104,8 @@ def probe_aliases(
     toks = tokenize(pages).select(
         *keep, "tokens", F.posexplode("tokens").alias("pos", "tok")
     )
-    dict_side = F.broadcast(resolved) if broadcast_dict else resolved
     return toks.join(
-        dict_side,
-        toks["tok"] == resolved["first_tok"],
-        "inner",
+        resolved, toks["tok"] == resolved["first_tok"], "inner"
     ).where(
         F.expr("array_join(slice(tokens, pos + 1, n), ' ')")
         == F.col("alias")
@@ -118,30 +116,21 @@ def detect_mentions(
     pages: DataFrame,
     alias_df: DataFrame,
     id_col: str = "url",
-    broadcast_dict: bool = True,
 ) -> DataFrame:
     """(url, pos, n, end, qid, alias, priority, after) mention rows.
 
     `id_col` is the document identity column; it is carried through as
     `url` in the output regardless of its input name.
 
-    **Dictionary-size contract** (``broadcast_dict``): the resolved
-    alias dictionary ships as an explicit broadcast by default — the
-    SURVEY §1.2 design (dimension broadcast + LSH for the long tail).
-    An explicit hint bypasses ``autoBroadcastJoinThreshold`` but not
-    the hard 8 GB / executor-memory broadcast ceiling, so the contract
-    is a dictionary of up to ~10^7 resolved aliases (≈ low-GB hash
-    relation).  A full Wikidata alias table (~10^8 rows) is past the
-    ceiling: pass ``broadcast_dict=False`` to switch the probe to a
-    plain equi-join on the first token — the token side then shuffles
-    once on ``tok`` (AQE picks shuffle-hash vs sort-merge and handles
-    hot first-token skew with its skew-join split), and every later
-    stage is unchanged.  Both plan regimes are pinned by
-    ``tests/test_plans.py::test_mention_dict_join_regimes``.
+    The planner picks the dictionary join: a resolved alias dictionary
+    under ``autoBroadcastJoinThreshold`` is broadcast (the SURVEY §1.2
+    dimension broadcast), a larger one plans as a shuffled equi-join on
+    the first token; ``tests/test_plans.py::test_mention_dict_join_regimes``
+    pins both regimes.
     """
     if id_col != "url":
         pages = pages.withColumnRenamed(id_col, "url")
-    best = probe_aliases(pages, alias_df, ["url"], broadcast_dict).select(
+    best = probe_aliases(pages, alias_df, ["url"]).select(
         "url",
         "pos",
         "n",
@@ -175,10 +164,8 @@ def detect_mentions(
     )
 
 
-def unmatched_tokens(
-    pages: DataFrame, mentions: DataFrame, min_len: int = 6
-) -> DataFrame:
-    """(url, surface): tokens of length >= min_len at positions not
+def unmatched_tokens(pages: DataFrame, mentions: DataFrame) -> DataFrame:
+    """(url, surface): tokens of length >= FUZZY_MIN_LEN at positions not
     covered by any exact mention span — the long-tail surface forms the
     MinHash-LSH fuzzy-link stage gets to resolve.
 
@@ -193,7 +180,7 @@ def unmatched_tokens(
         "url", F.explode(F.expr("sequence(pos, end - 1)")).alias("pos")
     )
     return (
-        toks.where(F.length("tok") >= min_len)
+        toks.where(F.length("tok") >= FUZZY_MIN_LEN)
         .join(covered, ["url", "pos"], "left_anti")
         .select("url", F.col("tok").alias("surface"))
         .distinct()

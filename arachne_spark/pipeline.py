@@ -65,6 +65,9 @@ from arachne_spark.sources.pages import pages_df
 BATCH_THRESHOLD = 50
 CANDIDATES_THRESHOLD = 50
 STALENESS_HOURS = 24
+# near-dup page dedup (batch page_dupes stage and streaming dedup):
+# exact-Jaccard verify threshold
+DEDUP_THRESHOLD = 0.9
 # parallel window groups per kind for batch-id assignment
 BATCH_BUCKETS = 256
 
@@ -82,7 +85,6 @@ class PipelineConfig:
     # near-dup page dedup gate: the map is always computed (page_dupes
     # stage); when True, only cluster representatives flow downstream
     dedup_pages: bool = False
-    dedup_threshold: float = 0.9
     # graph materialization: also serialize the final triples table as
     # RDF N-Triples under <warehouse>/triples_nt (sources/ntriples.py)
     materialize_rdf: bool = False
@@ -310,7 +312,7 @@ def _run_stage_graph(
         lambda: minhash_doc_dedup(
             pages_clean.select("url", "text"),
             id_col="url",
-            threshold=cfg.dedup_threshold,
+            threshold=DEDUP_THRESHOLD,
         ).select(
             F.col("doc_id").alias("url"),
             F.col("rep_id").alias("rep_url"),

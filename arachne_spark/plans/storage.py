@@ -2,22 +2,15 @@
 
 Realizes the intended-but-empty ``ariadne`` persistence layer of the
 reference (/root/reference/include/ariadne.hpp:29, call sites
-src/arachne.cpp:103,205) as snapshot-committed tables.
-
-Two backends behind one API:
-* **Iceberg** (preferred on a real cluster): ``df.writeTo(cat.ns.table)``
-  — atomic snapshot commit, time travel, incremental reads.  Used when
-  the session has an Iceberg catalog configured (``iceberg_catalog``).
-* **Parquet fallback** (no Iceberg runtime jar on the classpath):
-  one directory of plain parquet files per table under the warehouse
-  root, with no session-catalog entry; Spark's ``_SUCCESS`` marker is
-  the commit record.
-  Writes go to a temp dir and are atomically swapped into place, so a
-  killed run never leaves a half-written "committed" stage.  Every file
-  operation goes through the Hadoop FileSystem API resolved from the
-  session conf — the same warehouse root works on local disk, HDFS,
-  and S3A (driver-local ``os.rename`` would silently no-op or fail on
-  a remote filesystem).
+src/arachne.cpp:103,205) as snapshot-committed tables: one directory
+of plain parquet files per table under the warehouse root, with no
+session-catalog entry; Spark's ``_SUCCESS`` marker is the commit
+record.  Writes go to a temp dir and are atomically swapped into place,
+so a killed run never leaves a half-written "committed" stage.  Every
+file operation goes through the Hadoop FileSystem API resolved from
+the session conf — the same warehouse root works on local disk, HDFS,
+and S3A (driver-local ``os.rename`` would silently no-op or fail on a
+remote filesystem).
 
 ``resume_or_compute`` gives the checkpoint-resume semantics demanded by
 the north_rule: a stage whose table is committed is *read*, not
@@ -81,20 +74,12 @@ def restore(spark: SparkSession, final: str) -> None:
 
 
 class Warehouse:
-    def __init__(
-        self,
-        spark: SparkSession,
-        root: str,
-        iceberg_catalog: str | None = None,
-    ):
+    def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self.catalog = iceberg_catalog
-        if not iceberg_catalog:
-            fs, rpath = hadoop_fs(spark, root)
-            fs.mkdirs(rpath)
+        fs, rpath = hadoop_fs(spark, root)
+        fs.mkdirs(rpath)
 
-    # -- parquet-backend paths ------------------------------------------
     def _path(self, table: str) -> str:
         # plain string join, not os.path.join: the root may be a URI
         # (hdfs://, s3a://) that os.path must not normalize
@@ -104,10 +89,6 @@ class Warehouse:
         return self.spark._jvm.org.apache.hadoop.fs.Path(path)
 
     def is_committed(self, table: str) -> bool:
-        if self.catalog:
-            return self.spark.catalog.tableExists(
-                f"{self.catalog}.{table}"
-            )
         fs, _ = hadoop_fs(self.spark, self.root)
         return fs.exists(self._jpath(self._path(table) + "/_SUCCESS"))
 
@@ -118,19 +99,6 @@ class Warehouse:
         mode: str = "overwrite",
         partition_by: list[str] | None = None,
     ) -> None:
-        if self.catalog:
-            writer = df.writeTo(f"{self.catalog}.{table}")
-            if partition_by:
-                from pyspark.sql.functions import col
-
-                writer = writer.partitionedBy(
-                    *[col(c) for c in partition_by]
-                )
-            if mode == "append" and self.is_committed(table):
-                writer.append()
-            else:
-                writer.createOrReplace()
-            return
         final = self._path(table)
         w = df.write.mode(mode)
         if partition_by:
@@ -170,26 +138,12 @@ class Warehouse:
     def file_row_counts(self, table: str) -> dict[int, int]:
         """{partition_id: rows} of a committed table, read from file
         metadata instead of the data: the record count in each parquet
-        footer (Iceberg: ``record_count`` of the ``files`` metadata
-        table).  ``partition_id`` is the writer's task number, the
+        footer.  ``partition_id`` is the writer's task number, the
         ``NNNNN`` of a ``part-NNNNN-…`` file name; the files one task
         writes into several ``partition_by`` directories are summed.
         Zero-row files are skipped: an empty write leaves one
         schema-only file, and an empty table reads as ``{}``."""
         counts: dict[int, int] = {}
-
-        def add(name: str, rows: int) -> None:
-            if rows:
-                pid = int(re.match(r"(?:part-)?(\d+)-", name).group(1))
-                counts[pid] = counts.get(pid, 0) + rows
-
-        if self.catalog:
-            for r in self.spark.sql(
-                "SELECT file_path, record_count FROM "
-                f"{self.catalog}.{table}.files WHERE content = 0"
-            ).collect():
-                add(r["file_path"].rsplit("/", 1)[-1], r["record_count"])
-            return counts
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         parquet = jvm.org.apache.parquet.hadoop
@@ -206,22 +160,16 @@ class Warehouse:
                 parquet.util.HadoopInputFile.fromStatus(st, conf)
             )
             try:
-                add(name, reader.getRecordCount())
+                rows = reader.getRecordCount()
             finally:
                 reader.close()
+            if rows:
+                pid = int(re.match(r"part-(\d+)-", name).group(1))
+                counts[pid] = counts.get(pid, 0) + rows
         return counts
 
     def read(self, table: str) -> DataFrame:
-        if self.catalog:
-            return self.spark.read.table(f"{self.catalog}.{table}")
         return self.spark.read.parquet(self._path(table))
-
-    def drop(self, table: str) -> None:
-        if self.catalog:
-            self.spark.sql(f"DROP TABLE IF EXISTS {self.catalog}.{table}")
-            return
-        fs, _ = hadoop_fs(self.spark, self.root)
-        fs.delete(self._jpath(self._path(table)), True)
 
     def resume_or_compute(
         self, table: str, compute, force: bool = False, **write_kwargs
@@ -231,8 +179,6 @@ class Warehouse:
             return self.read(table), True
         df = compute()
         self.write(df, table, **write_kwargs)
-        if self.catalog:
-            return self.read(table), False
         # the schema just written: inferring it again from the parquet
         # footers is a Spark job per stage, and reads back the same
         # schema (nullable, partition columns last)

@@ -31,6 +31,14 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 8))
 
 
+def default_driver_memory() -> str:
+    """A quarter of physical RAM, capped at 8g: a local session's JVM
+    heap must leave room for a second session (and the OS) on the same
+    host."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(ram // 4 >> 20, 8 << 10)}m"
+
+
 def get_spark(
     app_name: str = "arachne_spark",
     master: str | None = None,
@@ -59,7 +67,10 @@ def get_spark(
         # deterministic timestamps regardless of host TZ
         .config("spark.sql.session.timeZone", "UTC")
         # local mode: keep driver memory sane; a real deploy overrides this
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # broadcast *values* here are small, but some broadcast inputs

@@ -42,7 +42,7 @@ from arachne_spark.operators.mentions import (
     link_triples,
     probe_aliases,
 )
-from arachne_spark.pipeline import curate_pages
+from arachne_spark.pipeline import DEDUP_THRESHOLD, curate_pages
 from arachne_spark.plans.storage import hadoop_fs, restore, swap_in
 
 PAGE_SCHEMA = (
@@ -52,8 +52,7 @@ PAGE_SCHEMA = (
 # partitions, into this many base files
 COMPACT_EVERY = 4
 STATE_FILES = 8
-# streaming dedup: exact-Jaccard verify threshold and band-bucket cap
-DEDUP_THRESHOLD = 0.9
+# streaming dedup: band-bucket cap
 MAX_BAND_BUCKET = 20
 
 

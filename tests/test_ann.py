@@ -1,7 +1,6 @@
-"""ANN dot-engine tests: the Arrow-matmul rescorer must agree with the
-interpreted JVM expression engine (same sims after round(_, 4), same
-ranks) at high dims, and the automatic engine selection must only kick
-in at the declared crossover width (operators/ann.py module doc)."""
+"""ANN tests: the plan stays in the JVM, injected and trained
+quantizers (IVF, k-means) and semantic dedup agree with their
+definitions, and a zero vector never ranks first."""
 
 from __future__ import annotations
 
@@ -22,98 +21,14 @@ def _synth_emb(spark, n: int, dim: int):
     )
 
 
-def test_arrow_dot_matches_expression_engine(spark):
-    """Differential: brute-force top-k at 300 dims via both engines —
-    identical (qvec, nvec, rank) sets and sims equal after round(4)."""
-    from arachne_spark.operators.ann import brute_force_topk
-
-    emb = _synth_emb(spark, 60, 300)
-    q = emb.where(F.col("vec_id") < 6)
-    expr_rows = {
-        (r["qvec"], r["nvec"]): (r["sim"], r["rank"])
-        for r in brute_force_topk(emb, q, k=5).collect()
-    }
-    arrow_rows = {
-        (r["qvec"], r["nvec"]): (r["sim"], r["rank"])
-        for r in brute_force_topk(emb, q, k=5, vec_dim=300).collect()
-    }
-    assert expr_rows == arrow_rows
-    assert len(arrow_rows) == 6 * 5
-
-
-def test_ivf_topk_arrow_matches_expression(spark):
-    """Same differential through the IVF path (centroid assignment AND
-    rescoring both route through pair_dot)."""
-    from arachne_spark.operators.ann import ivf_topk
-
-    emb = _synth_emb(spark, 80, 300)
-    pred = F.col("vec_id") < 5
-    a = {
-        tuple(r)
-        for r in ivf_topk(emb, pred, n_centroids=6, k=3, nprobe=2)
-        .collect()
-    }
-    b = {
-        tuple(r)
-        for r in ivf_topk(
-            emb, pred, n_centroids=6, k=3, nprobe=2, vec_dim=300
-        ).collect()
-    }
-    assert a == b and len(a) > 0
-
-
 def test_engine_selection_plan(spark):
-    """Below the crossover the plan must stay pure-JVM (no Python
-    eval); at/above it the rescorer appears as ArrowEvalPython — never
-    row-at-a-time BatchEvalPython."""
+    """The ANN plan stays pure-JVM: no Python evaluation node."""
     from arachne_spark.operators.ann import brute_force_topk
 
     emb = _synth_emb(spark, 20, 64)
     q = emb.where(F.col("vec_id") < 2)
-    low = brute_force_topk(emb, q, k=2, vec_dim=64)
-    plan_low = low._jdf.queryExecution().executedPlan().toString()
-    assert "EvalPython" not in plan_low
-
-    emb_hi = _synth_emb(spark, 20, 300)
-    q_hi = emb_hi.where(F.col("vec_id") < 2)
-    hi = brute_force_topk(emb_hi, q_hi, k=2, vec_dim=300)
-    plan_hi = hi._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan_hi
-    assert "BatchEvalPython" not in plan_hi
-
-
-def test_arrow_index_matches_expression_engine(spark):
-    """Indexing-side differential: with_buckets at 300 dims via the
-    Arrow matmul must produce the same buckets and norms as the
-    expression engine, and the full LSH search (index + rescore on the
-    Arrow path) must return identical rows."""
-    from arachne_spark.operators.ann import ann_topk, with_buckets
-
-    hyperplanes = [
-        [((i * 7 + j * 13) % 11 - 5) / 7.0 for j in range(300)]
-        for i in range(4)
-    ]
-    emb = _synth_emb(spark, 60, 300)
-    a = {
-        r["vec_id"]: (r["bucket"], round(r["nrm"], 9))
-        for r in with_buckets(emb, hyperplanes).collect()
-    }
-    b = {
-        r["vec_id"]: (r["bucket"], round(r["nrm"], 9))
-        for r in with_buckets(emb, hyperplanes, vec_dim=300).collect()
-    }
-    assert a == b and len(a) == 60
-
-    pred = F.col("vec_id") < 5
-    expr_rows = {
-        tuple(r) for r in ann_topk(emb, hyperplanes, pred, k=3).collect()
-    }
-    arrow_rows = {
-        tuple(r)
-        for r in ann_topk(emb, hyperplanes, pred, k=3, vec_dim=300)
-        .collect()
-    }
-    assert expr_rows == arrow_rows and len(arrow_rows) > 0
+    plan = brute_force_topk(emb, q, k=2)._jdf.queryExecution()
+    assert "EvalPython" not in plan.executedPlan().toString()
 
 
 def test_ivf_external_centroids(spark):

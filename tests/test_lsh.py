@@ -160,7 +160,7 @@ def test_unmatched_tokens_excludes_covered_spans(spark):
         "alias string, qid string, kind string, priority long",
     )
     m = detect_mentions(pages, d)
-    um = unmatched_tokens(pages, m, min_len=6)
+    um = unmatched_tokens(pages, m)
     got = {r["surface"] for r in um.collect()}
     # covered span tokens (museo, del, prado) excluded; short tokens
     # (the, shows < 6) excluded

@@ -266,7 +266,7 @@ def test_page_dedup_gate(spark, tmp_path):
     )
     cfg = PipelineConfig(
         warehouse=wh, n_pages=60, run_id="dd",
-        dedup_pages=True, dedup_threshold=0.9,
+        dedup_pages=True,
     )
     run_pipeline(spark, cfg, pages=pages.unionByName(clones))
     dupes = {
@@ -425,7 +425,7 @@ def test_corpus_curation_stages(spark, tmp_path):
     cfg = PipelineConfig(
         warehouse=wh, n_pages=60, run_id="cur",
         canonical_url_dedup=True, scrub_pii=True, quality_filter=True,
-        dedup_pages=True, dedup_threshold=0.9,
+        dedup_pages=True,
     )
     run_pipeline(
         spark, cfg, pages=pages.unionByName(mirror).unionByName(extra_df)

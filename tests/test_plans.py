@@ -66,14 +66,11 @@ def test_enrichment_join_aqe_fallback(spark):
 
 
 def test_mention_dict_join_regimes(spark):
-    """detect_mentions' dictionary-size contract (round-4 verdict item
-    2): the default regime force-broadcasts the resolved alias dict
-    (SURVEY §1.2 — valid to ~10^7 aliases); past the ceiling the
-    caller switches to broadcast_dict=False and the token probe
-    becomes a plain first_tok equi-join that AQE plans as a shuffled
-    join.  Both regimes pinned, and both produce identical mentions."""
-    from pyspark.sql import functions as F  # noqa: F401
-
+    """detect_mentions leaves the dictionary join to the planner: the
+    resolved alias dictionary is broadcast by default, and with
+    auto-broadcast disabled (the planner's view of a dictionary too
+    big to broadcast) the token probe becomes a shuffled first_tok
+    equi-join.  Both regimes produce identical mentions."""
     from arachne_spark.operators.mentions import detect_mentions
     from arachne_spark.sources.dictionary import alias_df
     from arachne_spark.sources.pages import pages_df
@@ -81,22 +78,20 @@ def test_mention_dict_join_regimes(spark):
     pages = pages_df(spark, 200)
     aliases = alias_df(spark)
 
-    forced = detect_mentions(pages, aliases)
-    plan = forced._jdf.queryExecution().executedPlan().toString()
+    default = detect_mentions(pages, aliases)
+    plan = default._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
+    want = {tuple(r) for r in default.drop("after").collect()}
 
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        # with the hint off and auto-broadcast disabled (the planner's
-        # view of a dictionary too big to broadcast), the probe must
-        # compile to a shuffled join — not OOM the driver building an
-        # 8 GB+ hash relation
-        fallback = detect_mentions(pages, aliases, broadcast_dict=False)
-        fplan = fallback._jdf.queryExecution().executedPlan().toString()
-        assert "SortMergeJoin" in fplan or "ShuffledHashJoin" in fplan
-        want = {tuple(r) for r in forced.drop("after").collect()}
-        got = {tuple(r) for r in fallback.drop("after").collect()}
+        # a shuffled join — not OOM the driver building an 8 GB+ hash
+        # relation
+        shuffled = detect_mentions(pages, aliases)
+        splan = shuffled._jdf.queryExecution().executedPlan().toString()
+        assert "SortMergeJoin" in splan or "ShuffledHashJoin" in splan
+        got = {tuple(r) for r in shuffled.drop("after").collect()}
         assert got == want
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

@@ -1,65 +1,14 @@
-"""Warehouse backend tests.
-
-The parquet fallback is covered end-to-end by the pipeline resume
-tests; this file pins the CATALOG (Iceberg) branch.  The sandbox has
-no Iceberg runtime jar, so the session catalog rejects REPLACE TABLE
-AS SELECT at execution time — the test drives the branch through
-``is_committed`` / ``drop`` / writer construction and skips at the
-exact point that needs a real V2 catalog, so the code path still
-compiles and binds against the API it claims.  On a cluster with
-``iceberg_catalog`` configured the same test runs to completion.
-
-Why the jar cannot be vendored here (round-4 verdict stretch item,
-measured round 5): a filesystem sweep for ``*iceberg*`` finds nothing
-(no ivy/maven cache, no extra jars dir beside pyspark's bundled ones),
-and the sandbox has no package network access (pip/apt/maven are
-prohibited and unreachable), so ``spark.jars.packages`` cannot resolve
-``org.apache.iceberg:iceberg-spark-runtime`` either.  The unskip
-therefore requires exactly one deploy-side step: drop the runtime jar
-on the classpath and set ``iceberg_catalog``.
+"""Warehouse tests: the parquet swap protocol's edge cases (zero-row
+partitioned overwrites, failed writes, the read-back schema).  The
+commit-and-resume path itself is covered end-to-end by the pipeline
+resume tests.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.errors import AnalysisException
 
 from arachne_spark.plans.storage import Warehouse
-
-TABLE = "wh_catalog_probe"
-
-
-def test_warehouse_catalog_branch(spark, tmp_path):
-    wh = Warehouse(
-        spark, root=str(tmp_path),
-        iceberg_catalog="spark_catalog.default",
-    )
-    # catalog-path probes that work on any catalog implementation
-    wh.drop(TABLE)
-    assert not wh.is_committed(TABLE)
-
-    df = spark.range(5).withColumnRenamed("id", "v")
-    try:
-        wh.write(df, TABLE)
-    except AnalysisException as e:
-        assert "TABLE_OPERATION" in str(e) or "REPLACE" in str(e)
-        pytest.skip(
-            "no V2 catalog with atomic replace in this sandbox "
-            "(Iceberg runtime jar absent); catalog API path exercised "
-            "up to execution"
-        )
-
-    # full integration — runs when a real Iceberg catalog is configured
-    try:
-        assert wh.is_committed(TABLE)
-        assert wh.read(TABLE).count() == 5
-        wh.write(df, TABLE, mode="append")
-        assert wh.read(TABLE).count() == 10
-        df2, resumed = wh.resume_or_compute(TABLE, lambda: df)
-        assert resumed and df2.count() == 10
-    finally:
-        wh.drop(TABLE)
-    assert not wh.is_committed(TABLE)
 
 
 def test_empty_partitioned_overwrite_stays_readable(spark, tmp_path):
@@ -70,8 +19,6 @@ def test_empty_partitioned_overwrite_stays_readable(spark, tmp_path):
     that case; a later non-empty overwrite restores the partitioned
     layout."""
     from pyspark.sql import functions as F
-
-    from arachne_spark.plans.storage import Warehouse
 
     wh = Warehouse(spark, str(tmp_path / "empty_wh"))
     schema = "subj string, pred string, obj string"

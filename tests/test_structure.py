@@ -6,7 +6,9 @@ boundary; connected components and transitive closure share one
 round loop, and components finish small frontiers through one driver
 union-find; fuzzy linking, page dedup and streaming dedup share one
 MinHash-LSH; batch and stream share one alias probe, and the
-canonicalization step has one plan over plain warehouse files."""
+canonicalization step has one plan over plain warehouse files; no
+option selects a second warehouse backend, ANN dot engine or
+mention-probe join."""
 
 from __future__ import annotations
 
@@ -318,3 +320,27 @@ def test_one_alias_probe_and_one_canonicalization_plan():
         assert not hasattr(Warehouse, gone), gone
     assert "key_encode" not in inspect.signature(
         connected_components).parameters
+
+
+def test_no_unselected_forks():
+    """The warehouse has one (parquet) backend, ANN one (JVM
+    expression) dot engine, and the mention probe leaves its join to
+    the planner: none of them takes an option that selects a second
+    code path."""
+    from arachne_spark.operators import ann
+    from arachne_spark.operators.mentions import (
+        detect_mentions,
+        probe_aliases,
+    )
+    from arachne_spark.pipeline import PipelineConfig
+    from arachne_spark.plans.storage import Warehouse
+
+    assert not hasattr(Warehouse, "drop")
+    assert list(inspect.signature(Warehouse).parameters) == [
+        "spark", "root"]
+    for name, fn in inspect.getmembers(ann, inspect.isfunction):
+        assert "vec_dim" not in inspect.signature(fn).parameters, name
+    assert "pandas_udf" not in inspect.getsource(ann)
+    for fn in (probe_aliases, detect_mentions):
+        assert "broadcast_dict" not in inspect.signature(fn).parameters
+    assert len(PipelineConfig.__dataclass_fields__) == 15
