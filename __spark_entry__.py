@@ -681,8 +681,6 @@ def q20_text_stats(spark, sf_dir):
     return base.join(sim, "doc_id").join(cur, "doc_id")
 
 
-MAX_SHINGLE_DF = 50  # boilerplate df-cap (see operators/dedup.py)
-
 SUBSTR_K = 12  # span-dedup shingle width shared by q56 and its oracle
 
 
@@ -953,10 +951,7 @@ def q38_doc_dedup(spark, sf_dir):
     from arachne_spark.operators.dedup import minhash_doc_dedup
 
     docs = _t(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
-    return minhash_doc_dedup(
-        docs, threshold=0.5, max_shingle_df=MAX_SHINGLE_DF,
-        max_band_bucket=20,
-    )
+    return minhash_doc_dedup(docs, threshold=0.5)
 
 
 def q39_merge_patch(spark, sf_dir):
@@ -4416,6 +4411,8 @@ def _pagerank_oracle_rows() -> str:
 
 
 def oracle_sql() -> dict[str, str]:
+    from arachne_spark.operators.dedup import MAX_BAND_BUCKET, MAX_SHINGLE_DF
+
     grammar_kind = """
       CASE
         WHEN regexp_matches(entity_id, '^[QPLME](0|[1-9][0-9]*)$')
@@ -5475,7 +5472,8 @@ def oracle_sql() -> dict[str, str]:
                     select doc_id, 1, md5(m4 || m5 || m6 || m7) from sig),
           bsz as (select bi, bh, count(*) as c from bands group by 1, 2),
           bands2 as (select bands.doc_id, bands.bi, bands.bh from bands
-                     join bsz using (bi, bh) where bsz.c <= 20),
+                     join bsz using (bi, bh)
+                     where bsz.c <= {MAX_BAND_BUCKET}),
           cand as (select distinct a.doc_id da, b.doc_id db
                    from bands2 a join bands2 b
                      on a.bi = b.bi and a.bh = b.bh

@@ -10,7 +10,7 @@ end-to-end pipeline a 100 TB crawl actually needs.  Scale posture:
 
 * **shingling** is a narrow per-doc projection (token k-grams,
   distinct) — embarrassingly parallel;
-* **df-cap**: shingles appearing in more than ``max_shingle_df``
+* **df-cap**: shingles appearing in more than ``MAX_SHINGLE_DF``
   documents are boilerplate (navigation chrome, license footers) and
   are dropped *before* any join — one hot shingle would otherwise make
   the inverted-index pair generation quadratic in its document
@@ -20,7 +20,7 @@ end-to-end pipeline a 100 TB crawl actually needs.  Scale posture:
   so candidate generation is an equi-join on (band_idx, band_hash) —
   never all-pairs;
 * **bucket-cap**: a band bucket with B docs yields B^2/2 candidate
-  pairs; buckets larger than ``max_band_bucket`` are near-certainly
+  pairs; buckets larger than ``MAX_BAND_BUCKET`` are near-certainly
   boilerplate clusters (every template page hashing identically) and
   are dropped — dedup of *exact* template duplicates belongs to the
   cheaper exact-hash pass (q03/q22 fingerprints), not the quadratic
@@ -43,6 +43,11 @@ from pyspark.sql import functions as F
 
 from arachne_spark.operators.cc import representatives
 from arachne_spark.operators.lsh_link import lsh_join, minhash
+
+# boilerplate caps of the near-dup dedup (batch page_dupes, q38 and,
+# for the band bucket only, the streaming dedup)
+MAX_SHINGLE_DF = 50
+MAX_BAND_BUCKET = 20
 
 
 def doc_shingles(
@@ -83,19 +88,16 @@ def doc_shingles(
     )
 
 
-def cap_shingle_df(sh: DataFrame, max_df: int | None) -> DataFrame:
-    """Drop shingles whose document frequency exceeds max_df (hot
-    boilerplate shingles are the skew-killer of every posting-list
-    self-join: pair fanout is quadratic in df).  ``None`` disables the
-    cap — required where signatures must be a pure function of document
-    content (the streaming dedup path: a batch-local df would make the
+def cap_shingle_df(sh: DataFrame) -> DataFrame:
+    """Drop shingles whose document frequency exceeds
+    ``MAX_SHINGLE_DF`` (hot boilerplate shingles are the skew-killer of
+    every posting-list self-join: pair fanout is quadratic in df).  The
+    streaming dedup does not cap: there a batch-local df would make the
     same document hash differently depending on what it shares a
-    micro-batch with)."""
-    if max_df is None:
-        return sh
+    micro-batch with."""
     df = sh.groupBy("s").agg(F.count("*").alias("_df"))
     return (
-        sh.join(df.where(F.col("_df") <= max_df), "s")
+        sh.join(df.where(F.col("_df") <= MAX_SHINGLE_DF), "s")
         .select("doc_id", "s")
     )
 
@@ -105,29 +107,21 @@ def minhash_doc_dedup(
     id_col: str = "doc_id",
     text_col: str = "text",
     threshold: float = 0.5,
-    max_shingle_df: int | None = 50,
-    max_band_bucket: int = 20,
 ) -> DataFrame:
     """(doc_id, rep_id, keep): every input document mapped to the
     minimum-id representative of its near-duplicate cluster; singleton
     docs map to themselves.  keep = (doc_id == rep_id) — filtering on
     it IS the dedup."""
-    sh = cap_shingle_df(
-        doc_shingles(docs, id_col, text_col), max_shingle_df
-    )
+    sh = cap_shingle_df(doc_shingles(docs, id_col, text_col))
     return near_dup_clusters(
         docs.select(F.col(id_col).alias("doc_id")),
         minhash(sh, "doc_id"),
         threshold,
-        max_band_bucket,
     )
 
 
 def near_dup_clusters(
-    ids: DataFrame,
-    sig: DataFrame,
-    threshold: float,
-    max_band_bucket: int,
+    ids: DataFrame, sig: DataFrame, threshold: float
 ) -> DataFrame:
     """The clustering half of ``minhash_doc_dedup``: (doc_id, rep_id,
     keep) from the documents' ids and their ``minhash`` rows, for a
@@ -136,7 +130,7 @@ def near_dup_clusters(
         sig.withColumnRenamed("doc_id", "da"),
         sig.withColumnRenamed("doc_id", "db"),
         threshold,
-        max_band_bucket,
+        MAX_BAND_BUCKET,
         F.col("da") < F.col("db"),
     )
     return representatives(ids, pairs.select("da", "db"))

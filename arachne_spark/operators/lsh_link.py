@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 K_SHINGLE = 3
 N_HASHES = 8
 N_BANDS = 2
+# fuzzy linking's cap on a band's dictionary-side frequency
 MAX_BAND_DF = 1000
 # lowest surface-to-alias Jaccard a fuzzy link keeps
 FUZZY_THRESHOLD = 0.5
@@ -156,16 +157,15 @@ def lsh_candidates(
     surfaces: DataFrame,
     dictionary: DataFrame,
     threshold: float,
-    max_band_df: int | None = MAX_BAND_DF,
 ) -> DataFrame:
     """(surface, qid, jaccard): all dictionary candidates sharing >= 1
     LSH band with the surface form, rescored by exact char-shingle
     Jaccard and filtered to >= threshold.
 
     ``surfaces`` must carry ``surface`` and ``dictionary`` (alias,
-    qid); extra columns are dropped.  ``max_band_df`` caps the
-    dictionary-side frequency of a band hash (see ``lsh_join``); the
-    default is far above any real alias dictionary's band skew.
+    qid); extra columns are dropped.  ``MAX_BAND_DF`` caps the
+    dictionary-side frequency of a band hash (see ``lsh_join``); it is
+    far above any real alias dictionary's band skew.
     """
     q = minhash(
         char_shingles(surfaces.select("surface"), "surface"), "surface"
@@ -174,19 +174,16 @@ def lsh_candidates(
         char_shingles(dictionary.select("alias", "qid"), "alias"),
         "alias", "qid",
     )
-    return lsh_join(q, F.broadcast(d), threshold, max_band_df).select(
+    return lsh_join(q, F.broadcast(d), threshold, MAX_BAND_DF).select(
         "surface", "qid", "jaccard"
     )
 
 
-def fuzzy_link_best(
-    surfaces: DataFrame,
-    dictionary: DataFrame,
-    threshold: float,
-) -> DataFrame:
-    """(surface, qid, jaccard): single best candidate per surface by
-    (jaccard desc, priority asc, qid asc) — the deterministic
-    QID-priority rule of SURVEY.md §4.3 applied to fuzzy links.
+def fuzzy_link_best(surfaces: DataFrame, dictionary: DataFrame) -> DataFrame:
+    """(surface, qid, jaccard): single best candidate per surface at
+    Jaccard >= ``FUZZY_THRESHOLD``, by (jaccard desc, priority asc, qid
+    asc) — the deterministic QID-priority rule of SURVEY.md §4.3
+    applied to fuzzy links.
 
     `surfaces` must carry ``surface`` and `dictionary` (alias, qid,
     priority).
@@ -195,7 +192,7 @@ def fuzzy_link_best(
     # dropDuplicates here would keep a partition-order-dependent row if
     # a future dictionary carried per-alias priorities — violating the
     # hard determinism invariant)
-    cands = lsh_candidates(surfaces, dictionary, threshold).join(
+    cands = lsh_candidates(surfaces, dictionary, FUZZY_THRESHOLD).join(
         F.broadcast(
             dictionary.groupBy("qid").agg(
                 F.min("priority").alias("priority")
@@ -230,7 +227,6 @@ def fuzzy_mentions(pages, mentions, alias_df):
     best = fuzzy_link_best(
         um.select("surface").distinct(),
         alias_df.where(F.col("kind") == "item"),
-        threshold=FUZZY_THRESHOLD,
     )
     # NOT a forced broadcast: on a real web corpus distinct tokens are
     # ~1e8+, past the 8 GB broadcast ceiling.  With AQE on (the

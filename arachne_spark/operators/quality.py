@@ -286,18 +286,20 @@ def strip_boilerplate(
     return rebuilt.unionByName(empties).select(*docs.columns)
 
 
+# published Gopher repetition cut points (Rae et al. 2021, A1.1)
+MAX_DUP_LINE_FRAC = 0.30
+MAX_TOP2_CHAR_FRAC = 0.20
+MAX_DUP5_CHAR_FRAC = 0.15
+
+
 def repetition_filter(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    max_dup_line_frac: float = 0.30,
-    max_top2_char_frac: float = 0.20,
-    max_dup5_char_frac: float = 0.15,
 ) -> DataFrame:
     """Gopher-rule document filter: keeps docs whose repetition
-    profile passes the (configurable) thresholds; returns the input
-    columns unchanged.  Thresholds default to the published Gopher
-    cut points for the three signals implemented here."""
+    profile passes the published Gopher cut points for the three
+    signals implemented here; returns the input columns unchanged."""
     stats = repetition_stats(
         docs, id_col, text_col, top_ns=(2,), dup_ns=(5,)
     ).select(
@@ -307,9 +309,9 @@ def repetition_filter(
         "dup5_gram_char_frac",
     )
     keep = (
-        (F.col("dup_line_frac") <= max_dup_line_frac)
-        & (F.col("top2_gram_char_frac") <= max_top2_char_frac)
-        & (F.col("dup5_gram_char_frac") <= max_dup5_char_frac)
+        (F.col("dup_line_frac") <= MAX_DUP_LINE_FRAC)
+        & (F.col("top2_gram_char_frac") <= MAX_TOP2_CHAR_FRAC)
+        & (F.col("dup5_gram_char_frac") <= MAX_DUP5_CHAR_FRAC)
     )
     return (
         docs.join(
@@ -372,6 +374,16 @@ def corpus_report(
 # Gopher A1.1 required stopwords (Rae et al. 2021): a doc counts a hit
 # per DISTINCT stopword present
 GOPHER_STOPWORDS = ("the", "be", "to", "of", "and", "that", "have", "with")
+# published Gopher A1.1 quality cut points
+GOPHER_MIN_WORDS = 50
+GOPHER_MAX_WORDS = 100_000
+GOPHER_MIN_MEAN_WORD_LEN = 3.0
+GOPHER_MAX_MEAN_WORD_LEN = 10.0
+GOPHER_MAX_SYMBOL_RATIO = 0.1
+GOPHER_MAX_BULLET_FRAC = 0.9
+GOPHER_MAX_ELLIPSIS_FRAC = 0.3
+GOPHER_MIN_ALPHA_FRAC = 0.8
+GOPHER_MIN_STOP_HITS = 2
 
 
 def gopher_quality_stats(
@@ -445,15 +457,6 @@ def gopher_quality_filter(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_words: int = 50,
-    max_words: int = 100_000,
-    min_mean_word_len: float = 3.0,
-    max_mean_word_len: float = 10.0,
-    max_symbol_ratio: float = 0.1,
-    max_bullet_frac: float = 0.9,
-    max_ellipsis_frac: float = 0.3,
-    min_alpha_frac: float = 0.8,
-    min_stop_hits: int = 2,
 ) -> DataFrame:
     """Gopher-rule document filter over the published A1.1 cut points
     (word-count window, mean word length, symbol/bullet/ellipsis
@@ -462,15 +465,15 @@ def gopher_quality_filter(
     they are the full published Gopher heuristic gate."""
     stats = gopher_quality_stats(docs, id_col, text_col)
     keep = (
-        F.col("n_words").between(min_words, max_words)
+        F.col("n_words").between(GOPHER_MIN_WORDS, GOPHER_MAX_WORDS)
         & F.col("mean_word_len").between(
-            min_mean_word_len, max_mean_word_len
+            GOPHER_MIN_MEAN_WORD_LEN, GOPHER_MAX_MEAN_WORD_LEN
         )
-        & (F.col("symbol_word_ratio") <= max_symbol_ratio)
-        & (F.col("bullet_line_frac") <= max_bullet_frac)
-        & (F.col("ellipsis_line_frac") <= max_ellipsis_frac)
-        & (F.col("alpha_word_frac") >= min_alpha_frac)
-        & (F.col("n_stop_hits") >= min_stop_hits)
+        & (F.col("symbol_word_ratio") <= GOPHER_MAX_SYMBOL_RATIO)
+        & (F.col("bullet_line_frac") <= GOPHER_MAX_BULLET_FRAC)
+        & (F.col("ellipsis_line_frac") <= GOPHER_MAX_ELLIPSIS_FRAC)
+        & (F.col("alpha_word_frac") >= GOPHER_MIN_ALPHA_FRAC)
+        & (F.col("n_stop_hits") >= GOPHER_MIN_STOP_HITS)
     )
     ok = stats.where(keep).select(F.col("doc_id").alias("__gid"))
     return docs.join(
@@ -478,24 +481,27 @@ def gopher_quality_filter(
     ).select(*docs.columns)
 
 
+# published C4 cut points (Raffel et al. 2020, §2.2)
+C4_MIN_LINE_WORDS = 3
+C4_MIN_SENTENCES = 3
+
+
 def c4_clean(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
-    min_line_words: int = 3,
-    min_sentences: int = 3,
 ) -> DataFrame:
     """The published C4 cleaning rules (Raffel et al. 2020, §2.2) as
     one row-preserving rewrite + page predicate:
 
     * keep only lines that end in terminal punctuation (. ! ? ")
-      and hold at least ``min_line_words`` words;
+      and hold at least ``C4_MIN_LINE_WORDS`` words;
     * drop lines containing the word "javascript" or a cookie/
       enable-JS boilerplate phrase (case-insensitive);
     * blank the whole page (empty text) when the ORIGINAL page
       contains "lorem ipsum" or a curly brace (code) — page-level
       rules in the paper, judged before line cleaning — or when the
-      CLEANED text has fewer than ``min_sentences`` sentences.
+      CLEANED text has fewer than ``C4_MIN_SENTENCES`` sentences.
 
     Returns the input columns with ``text`` rewritten (possibly
     empty); dropping empties is the caller's policy, same contract as
@@ -505,7 +511,7 @@ def c4_clean(
     keep_line = (
         "l -> l rlike '[.!?\"]\\\\s*$'"
         f" and size(filter(split(l, '\\\\s+'), w -> w != ''))"
-        f" >= {min_line_words}"
+        f" >= {C4_MIN_LINE_WORDS}"
         " and not lower(l) rlike"
         " 'javascript|cookies enabled|enable javascript'"
     )
@@ -520,7 +526,7 @@ def c4_clean(
     page_ok = (
         (
             F.expr("regexp_count(__cleaned, '[.!?]')")
-            >= F.lit(min_sentences)
+            >= F.lit(C4_MIN_SENTENCES)
         )
         & ~F.lower(F.col("text_c4")).contains("lorem ipsum")
         & ~F.col("text_c4").contains("{")

@@ -16,7 +16,7 @@ shape is provided and used by the pipeline:
   phase 2: groupBy(key) over the n pre-reduced rows
 
 Both phases are plain hash aggregates; the extra shuffle moves at most
-n_salt rows per key.
+N_SALT rows per key.
 """
 
 from __future__ import annotations
@@ -24,18 +24,19 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-DEFAULT_SALT = 32
+N_SALT = 32
+# touch-promotion threshold of the reference (include/arachne.hpp:285-286)
+CANDIDATES_THRESHOLD = 50
 
 
 def salted_count(
     df: DataFrame,
     keys: list[str],
     salt_from: str | Column,
-    n_salt: int = DEFAULT_SALT,
     count_alias: str = "cnt",
 ) -> DataFrame:
     """Two-phase skew-safe count per key."""
-    salt_col = F.pmod(F.xxhash64(salt_from), F.lit(n_salt))
+    salt_col = F.pmod(F.xxhash64(salt_from), F.lit(N_SALT))
     partial = (
         df.withColumn("_salt", salt_col)
         .groupBy(*keys, "_salt")
@@ -78,11 +79,9 @@ def salted_distinct_count(
 def promote_candidates(
     touches: DataFrame,
     key: str = "qid",
-    threshold: int = 50,
     salt_from: str = "url",
 ) -> DataFrame:
     """Touch-counter promotion (src/arachne.cpp:224-233): keys touched
-    >= threshold times, with the 50-touch default of the reference
-    (include/arachne.hpp:285-286).  Returns (key, cnt)."""
+    >= ``CANDIDATES_THRESHOLD`` times.  Returns (key, cnt)."""
     counts = salted_count(touches, [key], salt_from)
-    return counts.where(F.col("cnt") >= threshold)
+    return counts.where(F.col("cnt") >= CANDIDATES_THRESHOLD)

@@ -7,15 +7,18 @@ Stage graph (each stage = committed snapshot table, resumable):
   pages_clean ─ MinHash bands ─ verify ─ CC clusters     → page_dupes
         (url → rep_url near-dup map; filters the corpus when
          cfg.dedup_pages — the training-data dedup gate)
-        └ detect_mentions (broadcast alias dict)         → mentions
+        └ detect_mentions (alias dict probe)             → mentions
   unmatched long tokens ─ MinHash-LSH block ─ Jaccard    → fuzzy_mentions
   mentions ─ salted touch-count ≥ 50                     → promoted
   mentions ∪ promoted ─ entity_root ─ staleness anti-join
            ─ batch-id assignment                         → fetch_queue
-  fetch_queue ⋈ broadcast labels (enrichment)            → entities
+  fetch_queue ⋈ labels (enrichment)                      → entities
   mentions → (url,'mentions',qid) ∪ relation extraction  → triples_raw
   triples_raw[sameAs] → large-star/small-star CC         → canonical_map
-  triples_raw ⋈ canonical_map (broadcast)                → triples
+  triples_raw ⋈ canonical_map                            → triples
+
+The alias probe, the enrichment and the canonicalization joins carry
+no broadcast hint: the planner picks each one's strategy.
 
 Reference behaviors realized (citations into /root/reference):
 * add_entity/enqueue staleness gate  src/arachne.cpp:201-222,235-251
@@ -61,15 +64,17 @@ from arachne_spark.plans.storage import Warehouse
 from arachne_spark.sources.dictionary import alias_df, labels_df, predicate_df
 from arachne_spark.sources.pages import pages_df
 
-# reference thresholds (include/arachne.hpp:283-291)
+# reference thresholds (include/arachne.hpp:283-291; the touch
+# promotion threshold is skew.CANDIDATES_THRESHOLD)
 BATCH_THRESHOLD = 50
-CANDIDATES_THRESHOLD = 50
 STALENESS_HOURS = 24
 # near-dup page dedup (batch page_dupes stage and streaming dedup):
 # exact-Jaccard verify threshold
 DEDUP_THRESHOLD = 0.9
 # parallel window groups per kind for batch-id assignment
 BATCH_BUCKETS = 256
+# span-strip curation gate: shortest duplicated token passage cut
+DUP_SPAN_TOKENS = 50
 
 
 @dataclass
@@ -99,12 +104,11 @@ class PipelineConfig:
     scrub_pii: bool = False
     # drop Gopher-rule repetition-degenerate pages
     quality_filter: bool = False
-    # cut duplicated >= dup_span_tokens token passages out of every
+    # cut duplicated >= DUP_SPAN_TOKENS token passages out of every
     # occurrence but the corpus-first one (exact_substring_dedup) —
     # runs after PII scrub so redacted copies merge, before the
     # repetition filter so cut docs are judged on what remains
     strip_dup_spans: bool = False
-    dup_span_tokens: int = 50
     # C4 line/page rules (terminal punctuation, javascript lines,
     # lorem ipsum / brace pages) — line-level, so it runs BEFORE the
     # document-level gates judge what remains
@@ -112,7 +116,6 @@ class PipelineConfig:
     # full Gopher A1.1 heuristic gate (word count window, mean word
     # length, symbol/bullet/ellipsis caps, alpha floor, stopwords)
     gopher_filter: bool = False
-    gopher_min_words: int = 50
     # entity-importance ranking: materialize deterministic PageRank
     # over the canonical triples (operators/pagerank.py) as an
     # `entity_rank` stage — how a consumer finds the hot entities the
@@ -201,10 +204,8 @@ def curate_pages(
     scrub_pii: bool = False,
     c4_rules: bool = False,
     strip_dup_spans: bool = False,
-    dup_span_tokens: int = 50,
     quality_filter: bool = False,
     gopher_filter: bool = False,
-    gopher_min_words: int = 50,
     classifier: tuple[dict[int, float], float, float] | None = None,
 ) -> DataFrame:
     """The one curation pass of batch and stream, in the order a
@@ -233,14 +234,12 @@ def curate_pages(
         out = c4_clean(out, id_col="url", text_col="text")
     if strip_dup_spans:
         out = exact_substring_dedup(
-            out, k=dup_span_tokens, id_col="url", text_col="text"
+            out, k=DUP_SPAN_TOKENS, id_col="url", text_col="text"
         )
     if quality_filter:
         out = repetition_filter(out, id_col="url", text_col="text")
     if gopher_filter:
-        out = gopher_quality_filter(
-            out, id_col="url", text_col="text", min_words=gopher_min_words
-        )
+        out = gopher_quality_filter(out, id_col="url", text_col="text")
     if classifier is not None:
         out = quality_classifier_filter(
             out, *classifier, id_col="url", text_col="text"
@@ -295,9 +294,7 @@ def _run_stage_graph(
         pages_clean, canonical_url_dedup=cfg.canonical_url_dedup,
         scrub_pii=cfg.scrub_pii, c4_rules=cfg.c4_rules,
         strip_dup_spans=cfg.strip_dup_spans,
-        dup_span_tokens=cfg.dup_span_tokens,
         quality_filter=cfg.quality_filter, gopher_filter=cfg.gopher_filter,
-        gopher_min_words=cfg.gopher_min_words,
     )
     if curated is not pages_clean:
         pages_clean = rec.run_stage(
@@ -343,10 +340,7 @@ def _run_stage_graph(
 
     promoted = rec.run_stage(
         "promoted",
-        lambda: promote_candidates(
-            mentions, key="qid", threshold=CANDIDATES_THRESHOLD,
-            salt_from="url",
-        ),
+        lambda: promote_candidates(mentions, key="qid", salt_from="url"),
         force=cfg.force,
     )
 
@@ -428,7 +422,6 @@ def _run_stage_graph(
             triples_raw.where(F.col("pred") != "sameAs"), canonical_map
         ),
         force=cfg.force,
-        partition_by=["pred"],
     )
 
     if cfg.rank_entities:
@@ -441,8 +434,7 @@ def _run_stage_graph(
         )
 
     if cfg.materialize_rdf:
-        # the graph-materialize step of the north_star: the interchange
-        # serialization inherits the triples table's pred partitioning
+        # the graph-materialize step of the north_star
         from arachne_spark.sources.ntriples import write_ntriples
 
         write_ntriples(triples, cfg.warehouse + "/triples_nt")

@@ -7,11 +7,10 @@ updates as it runs, with no extra request to count what was just
 sent.  Every stage run records
 
 * ``metrics``  — one row per stage run: rows out, wall ms, resumed flag
-* ``lineage``  — one row per written file: (stage, partition_id, rows),
-  the writer's task number and the row count from the parquet footer
-  of the *committed* table (``Warehouse.file_row_counts``; the files
-  one task writes into several ``partition_by`` directories share a
-  row), so it reflects exactly what was persisted without scanning it.
+* ``lineage``  — one row per writer task: (stage, partition_id, rows),
+  the task number and the row count from the parquet footers of the
+  *committed* table (``Warehouse.file_row_counts``), so it reflects
+  exactly what was persisted without scanning it.
 
 The recorder launches no Spark job while the stage graph runs: rows are
 buffered in memory and ``flush`` commits them once per run, one append
@@ -46,13 +45,11 @@ class StageRecorder:
     _metrics: list = field(default_factory=list)
 
     def run_stage(
-        self, name: str, compute, force: bool = False, **write_kwargs
+        self, name: str, compute, force: bool = False
     ) -> DataFrame:
         """resume_or_compute a stage and buffer its metrics + lineage."""
         t0 = time.time()
-        df, resumed = self.wh.resume_or_compute(
-            name, compute, force=force, **write_kwargs
-        )
+        df, resumed = self.wh.resume_or_compute(name, compute, force=force)
         wall_ms = int((time.time() - t0) * 1000)
 
         parts = self.wh.file_row_counts(name)

@@ -93,64 +93,35 @@ class Warehouse:
         return fs.exists(self._jpath(self._path(table) + "/_SUCCESS"))
 
     def write(
-        self,
-        df: DataFrame,
-        table: str,
-        mode: str = "overwrite",
-        partition_by: list[str] | None = None,
+        self, df: DataFrame, table: str, mode: str = "overwrite"
     ) -> None:
         final = self._path(table)
         w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
         if mode == "append":
             w.parquet(final)
             return
         # overwrite: write to temp, atomically swap in via the Hadoop
         # FS API (rename is atomic on HDFS and local; on S3A the
         # object-store commit protocol underneath gives the same
-        # all-or-nothing contract for the directory marker)
-        def write_tmp(tmp: str) -> None:
-            w.parquet(tmp)
-            if partition_by and not self._has_data_files(tmp):
-                # a ZERO-ROW partitioned write emits no data files at
-                # all (no partition dirs — just _SUCCESS), which a
-                # later read fails to infer a schema from.  Rewrite
-                # schema-only, unpartitioned: an empty part file
-                # carries the schema and the table stays readable (a
-                # curation gate that filters a stage to nothing must
-                # not poison the stage graph).
-                df.limit(0).write.mode("overwrite").parquet(tmp)
-
-        swap_in(self.spark, final, write_tmp)
-
-    def _has_data_files(self, path: str) -> bool:
-        """True iff the directory holds anything besides commit
-        markers (_SUCCESS, .crc) — i.e. at least one data file or
-        partition directory."""
-        fs, hpath = hadoop_fs(self.spark, path)
-        for st in fs.listStatus(hpath):
-            name = st.getPath().getName()
-            if not name.startswith(("_", ".")):
-                return True
-        return False
+        # all-or-nothing contract for the directory marker).  A
+        # zero-row write leaves one schema-only part file, so an empty
+        # stage still reads back with its schema.
+        swap_in(self.spark, final, w.parquet)
 
     def file_row_counts(self, table: str) -> dict[int, int]:
         """{partition_id: rows} of a committed table, read from file
         metadata instead of the data: the record count in each parquet
         footer.  ``partition_id`` is the writer's task number, the
         ``NNNNN`` of a ``part-NNNNN-…`` file name; the files one task
-        writes into several ``partition_by`` directories are summed.
-        Zero-row files are skipped: an empty write leaves one
-        schema-only file, and an empty table reads as ``{}``."""
+        writes (several when ``maxRecordsPerFile`` splits its output)
+        are summed.  Zero-row files are skipped: an empty write leaves
+        one schema-only file, and an empty table reads as ``{}``."""
         counts: dict[int, int] = {}
         jvm = self.spark._jvm
         conf = self.spark._jsc.hadoopConfiguration()
         parquet = jvm.org.apache.parquet.hadoop
         fs, _ = hadoop_fs(self.spark, self.root)
-        # recursive: a partition_by table keeps its files one
-        # directory down, under <col>=<value>/
-        files = fs.listFiles(self._jpath(self._path(table)), True)
+        files = fs.listFiles(self._jpath(self._path(table)), False)
         while files.hasNext():
             st = files.next()
             name = st.getPath().getName()
@@ -172,15 +143,15 @@ class Warehouse:
         return self.spark.read.parquet(self._path(table))
 
     def resume_or_compute(
-        self, table: str, compute, force: bool = False, **write_kwargs
+        self, table: str, compute, force: bool = False
     ) -> tuple[DataFrame, bool]:
         """(df, resumed): read committed snapshot or compute+commit."""
         if not force and self.is_committed(table):
             return self.read(table), True
         df = compute()
-        self.write(df, table, **write_kwargs)
+        self.write(df, table)
         # the schema just written: inferring it again from the parquet
         # footers is a Spark job per stage, and reads back the same
-        # schema (nullable, partition columns last)
+        # schema (nullable, in the written column order)
         path = self._path(table)
         return self.spark.read.schema(df.schema).parquet(path), False

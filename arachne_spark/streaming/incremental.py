@@ -6,7 +6,7 @@ overnight") but is a single-shot CLI.  Here the same batch operators
 run incrementally over an unbounded page feed:
 
 * ``stream_pages``          — file-source stream of page parquet drops
-  (on a cluster: Iceberg/Kafka source, same downstream code).
+  (on a cluster: a Kafka source, same downstream code).
 * ``streaming_mention_counts`` — the touch-counter (O8,
   /root/reference/src/arachne.cpp:224-233) as a watermarked windowed
   aggregation: per (window, qid) mention counts with late-data bounds.
@@ -52,8 +52,6 @@ PAGE_SCHEMA = (
 # partitions, into this many base files
 COMPACT_EVERY = 4
 STATE_FILES = 8
-# streaming dedup: band-bucket cap
-MAX_BAND_BUCKET = 20
 
 
 def _try_read_parquet(spark: SparkSession, path: str) -> DataFrame | None:
@@ -112,8 +110,7 @@ class TwoTierState:
     ``storage.restore`` brings the pair back after a crash mid-swap,
     and absorbed partitions are then deleted if the state owns them.
     So a batch reads at most ``STATE_FILES`` base files plus fewer
-    than ``COMPACT_EVERY`` partitions.  An Iceberg deployment replaces
-    the swap with a MERGE / rewrite_data_files action.
+    than ``COMPACT_EVERY`` partitions.
     """
 
     _WATERMARK = "_batch_watermark"
@@ -334,7 +331,7 @@ def run_incremental_dedup(
     a pure function of the document — the same page would hash
     differently depending on batch composition, and a mirror arriving
     in a boilerplate-heavy batch would fail to collide with its
-    committed original.  ``MAX_BAND_BUCKET`` bounds the intra-batch
+    committed original.  ``dedup.MAX_BAND_BUCKET`` bounds the intra-batch
     clustering's hot-band fan-out only: the committed-band probe is
     uncapped, so a band that B committed pages share fans each new page
     in it out into B candidates.  Precision is bounded by the
@@ -357,7 +354,7 @@ def run_incremental_dedup(
         sig = cache(minhash(doc_shingles(docs, id_col="url"), "doc_id"))
         intra = near_dup_clusters(
             docs.select(F.col("url").alias("doc_id")), sig,
-            DEDUP_THRESHOLD, MAX_BAND_BUCKET,
+            DEDUP_THRESHOLD,
         ).select(
             F.col("doc_id").alias("url"),
             F.col("rep_id").alias("intra_rep"),
@@ -429,7 +426,6 @@ def run_incremental_pipeline(
     scrub_pii: bool = False,
     c4_rules: bool = False,
     gopher_filter: bool = False,
-    gopher_min_words: int = 50,
     classifier: tuple[dict[int, float], float, float] | None = None,
 ):
     """foreachBatch: full batch extraction core per micro-batch,
@@ -450,8 +446,6 @@ def run_incremental_pipeline(
       probe index**: a ``TwoTierState`` with its base at ``state_dir``
       (default ``out_dir + "_state"``) and the committed output
       partitions as its delta tier, so a batch writes its triples once.
-      An Iceberg sink expresses the same upsert natively as MERGE; the
-      probe index is the parquet-fallback statement of it.
 
     **Curation gates** (``scrub_pii`` / ``c4_rules`` /
     ``gopher_filter`` / ``classifier=(weights, bias, min_prob)``): the
@@ -497,7 +491,6 @@ def run_incremental_pipeline(
             scrub_pii=scrub_pii,
             c4_rules=c4_rules,
             gopher_filter=gopher_filter,
-            gopher_min_words=gopher_min_words,
             classifier=classifier,
         )
         triples = link_triples(detect_mentions(pages, alias_df), predicate_df)

@@ -146,7 +146,7 @@ def test_minhash_dedup_20k_vs_python_twin(spark):
 
     out = minhash_doc_dedup(
         spark.createDataFrame(rows, "doc_id bigint, text string"),
-        threshold=0.5, max_shingle_df=50, max_band_bucket=20,
+        threshold=0.5,
     )
     got = {r["doc_id"]: (r["rep_id"], r["keep"]) for r in out.collect()}
     assert len(got) == N_DOCS

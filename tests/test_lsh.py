@@ -76,7 +76,7 @@ def test_fuzzy_link_best_deterministic_priority(spark):
         ],
         "alias string, qid string, kind string, priority long",
     )
-    rows = fuzzy_link_best(s, d, threshold=0.3).collect()
+    rows = fuzzy_link_best(s, d).collect()
     assert len(rows) == 1
     assert rows[0]["qid"] == "Q297"
 
@@ -121,7 +121,7 @@ def test_hot_shingle_df_cap_bounds_skew(spark):
     )
     assert fanout > 1e9
 
-    sh = cap_shingle_df(sh0, max_df=100)
+    sh = cap_shingle_df(sh0)
     assert sh.where(F.col("s").startswith("copyright")).count() == 0
     assert sh.groupBy("s").count().agg(F.max("count")).first()[0] == 1
 
@@ -131,6 +131,12 @@ def test_lsh_band_df_cap_drops_hot_band(spark):
     not fan every surface out into all of them: with the cap the hot
     band is dropped dictionary-side (recall degrades, fanout does not
     explode)."""
+    from arachne_spark.operators.lsh_link import (
+        char_shingles,
+        lsh_join,
+        minhash,
+    )
+
     s = spark.createDataFrame([("velazques",)], ["surface"])
     # 30 entries with the IDENTICAL alias → identical signatures →
     # both bands hot; plus one distinct entry
@@ -139,9 +145,13 @@ def test_lsh_band_df_cap_drops_hot_band(spark):
         + [("arachne", "Q190082", "item", 190082)],
         "alias string, qid string, kind string, priority long",
     )
-    capped = lsh_candidates(s, d, threshold=0.3, max_band_df=10)
+    q = minhash(char_shingles(s, "surface"), "surface")
+    sig = minhash(
+        char_shingles(d.select("alias", "qid"), "alias"), "alias", "qid"
+    )
+    capped = lsh_join(q, sig, 0.3, max_band_df=10)
     assert capped.count() == 0  # hot band dropped, no candidates
-    uncapped = lsh_candidates(s, d, threshold=0.3, max_band_df=None)
+    uncapped = lsh_join(q, sig, 0.3, max_band_df=None)
     assert uncapped.count() == 30  # the fanout the cap prevents
 
 

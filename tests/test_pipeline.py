@@ -9,8 +9,8 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
+from arachne_spark.operators.skew import CANDIDATES_THRESHOLD
 from arachne_spark.pipeline import (
-    CANDIDATES_THRESHOLD,
     PipelineConfig,
     canonicalize_join,
     run_pipeline,
@@ -183,7 +183,7 @@ def test_recorder_launches_no_jobs(spark, tmp_path):
     wh = Warehouse(spark, str(tmp_path / "jobs_wh"))
     rec = StageRecorder(wh, "jobs")
     df = spark.range(100).selectExpr("id", "id % 3 as k")
-    wh.resume_or_compute("stage", lambda: df, partition_by=["k"])
+    wh.resume_or_compute("stage", lambda: df)
     sc = spark.sparkContext
     bare = _jobs_in_group(
         sc, "recorder-bare", lambda: wh.resume_or_compute("stage", None)
@@ -477,7 +477,7 @@ def test_rank_entities_stage(spark, tmp_path):
     assert not top["v"].startswith("https://")
 
 
-def test_strip_dup_spans_stage(spark, tmp_path):
+def test_strip_dup_spans_stage(spark, tmp_path, monkeypatch):
     """cfg.strip_dup_spans cuts a copied passage out of the
     lexicographically-later document while the first occurrence and
     the rest of the corpus pass through row-preserving."""
@@ -495,9 +495,9 @@ def test_strip_dup_spans_stage(spark, tmp_path):
         "url string, warc_ts timestamp, html binary, "
         "text string, lang string",
     )
+    monkeypatch.setattr("arachne_spark.pipeline.DUP_SPAN_TOKENS", 20)
     cfg = PipelineConfig(
-        warehouse=wh, n_pages=40, run_id="spans",
-        strip_dup_spans=True, dup_span_tokens=20,
+        warehouse=wh, n_pages=40, run_id="spans", strip_dup_spans=True
     )
     run_pipeline(spark, cfg, pages=pages.unionByName(extra_df))
     clean = spark.read.parquet(f"{wh}/pages_clean")
@@ -516,17 +516,17 @@ def test_strip_dup_spans_stage(spark, tmp_path):
     shutil.rmtree(wh, ignore_errors=True)
 
 
-def test_all_gates_compose(spark, tmp_path):
+def test_all_gates_compose(spark, tmp_path, monkeypatch):
     """Every optional pipeline feature ON in one run: curation gates,
     near-dup page dedup, entity ranking and RDF materialization
     compose without interfering."""
     import os
 
     wh = str(tmp_path / "all_wh")
+    monkeypatch.setattr("arachne_spark.pipeline.DUP_SPAN_TOKENS", 30)
     cfg = PipelineConfig(
         warehouse=wh, n_pages=60, run_id="all",
-        canonical_url_dedup=True, scrub_pii=True,
-        strip_dup_spans=True, dup_span_tokens=30,
+        canonical_url_dedup=True, scrub_pii=True, strip_dup_spans=True,
         quality_filter=True, dedup_pages=True,
         rank_entities=True, materialize_rdf=True,
     )
@@ -545,7 +545,7 @@ def test_all_gates_compose(spark, tmp_path):
     shutil.rmtree(wh, ignore_errors=True)
 
 
-def test_c4_and_gopher_gates(spark, tmp_path):
+def test_c4_and_gopher_gates(spark, tmp_path, monkeypatch):
     """cfg.{c4_rules, gopher_filter} on a hand-made realistic corpus:
     C4 strips unterminated/javascript lines and kills the code page;
     Gopher drops the stopword-free spam page; real prose survives to
@@ -580,9 +580,12 @@ def test_c4_and_gopher_gates(spark, tmp_path):
         pages, "url string, warc_ts timestamp, html binary, "
                "text string, lang string",
     )
+    monkeypatch.setattr(
+        "arachne_spark.operators.quality.GOPHER_MIN_WORDS", 20
+    )
     cfg = PipelineConfig(
         warehouse=wh, n_pages=4, run_id="c4g",
-        c4_rules=True, gopher_filter=True, gopher_min_words=20,
+        c4_rules=True, gopher_filter=True,
     )
     run_pipeline(spark, cfg, pages=df)
     curated = {

@@ -328,8 +328,7 @@ def test_gopher_quality_stats_and_filter(spark):
 
     kept = {
         r["doc_id"]
-        for r in gopher_quality_filter(df, min_words=50)
-        .select("doc_id").collect()
+        for r in gopher_quality_filter(df).select("doc_id").collect()
     }
     assert kept == {1}
 

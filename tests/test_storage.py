@@ -1,5 +1,5 @@
 """Warehouse tests: the parquet swap protocol's edge cases (zero-row
-partitioned overwrites, failed writes, the read-back schema).  The
+overwrites, failed writes, the read-back schema).  The
 commit-and-resume path itself is covered end-to-end by the pipeline
 resume tests.
 """
@@ -11,13 +11,12 @@ import pytest
 from arachne_spark.plans.storage import Warehouse
 
 
-def test_empty_partitioned_overwrite_stays_readable(spark, tmp_path):
-    """A partitionBy overwrite of a ZERO-ROW relation emits no data
-    files (no partition dirs), which poisoned read-back with
-    UNABLE_TO_INFER_SCHEMA — found when a curation gate filtered a
-    corpus to zero triples.  The warehouse rewrites schema-only in
-    that case; a later non-empty overwrite restores the partitioned
-    layout."""
+def test_empty_overwrite_stays_readable(spark, tmp_path):
+    """An overwrite with a ZERO-ROW relation must stay readable with
+    its schema: a curation gate that filters a stage to nothing must
+    not poison the stage graph (a read-back failing with
+    UNABLE_TO_INFER_SCHEMA).  A later non-empty overwrite replaces
+    it."""
     from pyspark.sql import functions as F
 
     wh = Warehouse(spark, str(tmp_path / "empty_wh"))
@@ -25,15 +24,14 @@ def test_empty_partitioned_overwrite_stays_readable(spark, tmp_path):
     empty = spark.createDataFrame(
         [("a", "b", "c")], schema
     ).where(F.lit(False))
-    wh.write(empty, "triples", partition_by=["pred"])
+    wh.write(empty, "triples")
     back = wh.read("triples")
     assert back.count() == 0
-    assert set(back.columns) == {"subj", "pred", "obj"}
-    # non-empty overwrite afterwards: partitioned layout, same data
+    assert back.columns == ["subj", "pred", "obj"]
     full = spark.createDataFrame(
         [("s1", "p1", "o1"), ("s2", "p2", "o2")], schema
     )
-    wh.write(full, "triples", partition_by=["pred"])
+    wh.write(full, "triples")
     got = {
         (r["subj"], r["pred"], r["obj"])
         for r in wh.read("triples").collect()
@@ -64,9 +62,8 @@ def test_failed_overwrite_leaves_no_temp_dir(spark, tmp_path):
 def test_computed_stage_reads_back_as_inferred(spark, tmp_path):
     """A computed stage is read back with the schema just written, not
     re-inferred from the parquet footers: the same schema (names,
-    types, nullability, order — partition columns last) and rows as an
-    inferring read, for a plain, a partitioned and a partitioned stage
-    filtered to zero rows (which the warehouse rewrites schema-only)."""
+    types, nullability, order) and rows as an inferring read, for a
+    stage with rows and one filtered to zero rows."""
     from pyspark.sql import functions as F
 
     wh = Warehouse(spark, str(tmp_path / "schema_wh"))
@@ -83,14 +80,11 @@ def test_computed_stage_reads_back_as_inferred(spark, tmp_path):
                  .alias("y")).alias("st"),
         F.when(F.col("id") > 1, F.col("id")).alias("maybe"),
     )
-    for table, df, parts in (
-        ("plain", base, None),
-        ("parted", base, ["k"]),
-        ("parted_empty", base.where(F.lit(False)), ["k"]),
+    for table, df in (
+        ("plain", base),
+        ("plain_empty", base.where(F.lit(False))),
     ):
-        got, resumed = wh.resume_or_compute(
-            table, lambda: df, partition_by=parts
-        )
+        got, resumed = wh.resume_or_compute(table, lambda: df)
         inferred = spark.read.parquet(str(tmp_path / "schema_wh" / table))
         assert not resumed
         assert got.schema == inferred.schema, table

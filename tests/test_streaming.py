@@ -349,7 +349,9 @@ def test_incremental_pipeline_probe_bootstrap(spark, tmp_path):
     shutil.rmtree(ckpt, ignore_errors=True)
 
 
-def test_incremental_pipeline_curation_gates_match_batch(spark, tmp_path):
+def test_incremental_pipeline_curation_gates_match_batch(
+    spark, tmp_path, monkeypatch
+):
     """Round-4 verdict item 6: the per-row curation gates (PII scrub,
     C4 rules, Gopher filter, classifier score) are offered on the
     stream — each is a pure function of row content, so batch
@@ -381,10 +383,13 @@ def test_incremental_pipeline_curation_gates_match_batch(spark, tmp_path):
     pages.repartition(8).write.parquet(src)
 
     w, bias, min_prob = {1: 0.2, 7: -0.1}, 0.3, 0.4
+    monkeypatch.setattr(
+        "arachne_spark.operators.quality.GOPHER_MIN_WORDS", 5
+    )
     q = run_incremental_pipeline(
         spark, src, out, ckpt, alias_df(spark), predicate_df(spark),
         scrub_pii=True, c4_rules=True, gopher_filter=True,
-        gopher_min_words=5, classifier=(w, bias, min_prob),
+        classifier=(w, bias, min_prob),
     )
     q.awaitTermination(600)
     got = {
@@ -401,9 +406,7 @@ def test_incremental_pipeline_curation_gates_match_batch(spark, tmp_path):
     )
     gated = clean.withColumn("text", scrub_expr(F.col("text")))
     gated = c4_clean(gated, id_col="url", text_col="text")
-    gated = gopher_quality_filter(
-        gated, id_col="url", text_col="text", min_words=5
-    )
+    gated = gopher_quality_filter(gated, id_col="url", text_col="text")
     gated = quality_classifier_filter(
         gated, w, bias, min_prob, id_col="url", text_col="text"
     )

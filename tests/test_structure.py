@@ -8,7 +8,9 @@ union-find; fuzzy linking, page dedup and streaming dedup share one
 MinHash-LSH; batch and stream share one alias probe, and the
 canonicalization step has one plan over plain warehouse files; no
 option selects a second warehouse backend, ANN dot engine or
-mention-probe join."""
+mention-probe join; the warehouse commits one (unpartitioned) layout,
+and the thresholds and caps the KG stage graph's callers all set
+alike are module constants, not parameters."""
 
 from __future__ import annotations
 
@@ -343,4 +345,56 @@ def test_no_unselected_forks():
     assert "pandas_udf" not in inspect.getsource(ann)
     for fn in (probe_aliases, detect_mentions):
         assert "broadcast_dict" not in inspect.signature(fn).parameters
-    assert len(PipelineConfig.__dataclass_fields__) == 15
+    assert len(PipelineConfig.__dataclass_fields__) == 13
+
+
+def test_stage_graph_takes_only_varied_options():
+    """The stage graph's operators take no parameter for a value that
+    every caller sets alike, and the warehouse writes one layout."""
+    from arachne_spark.operators import dedup, lsh_link, quality, skew
+    from arachne_spark.pipeline import PipelineConfig, curate_pages
+    from arachne_spark.plans.lineage import StageRecorder
+    from arachne_spark.plans.storage import Warehouse
+    from arachne_spark.streaming.incremental import run_incremental_pipeline
+
+    # removed parameters; no function passes keyword arguments through
+    removed = {
+        Warehouse.write: {"partition_by"},
+        Warehouse.resume_or_compute: set(),
+        StageRecorder.run_stage: set(),
+        curate_pages: {"dup_span_tokens", "gopher_min_words"},
+        run_incremental_pipeline: {"gopher_min_words"},
+        dedup.minhash_doc_dedup: {"max_shingle_df", "max_band_bucket"},
+        dedup.cap_shingle_df: {"max_df"},
+        dedup.near_dup_clusters: {"max_band_bucket"},
+        lsh_link.lsh_candidates: {"max_band_df"},
+        lsh_link.fuzzy_link_best: {"threshold"},
+        skew.promote_candidates: {"threshold"},
+        skew.salted_count: {"n_salt"},
+        quality.repetition_filter: {
+            "max_dup_line_frac", "max_top2_char_frac",
+            "max_dup5_char_frac"},
+        quality.c4_clean: {"min_line_words", "min_sentences"},
+        quality.gopher_quality_filter: {
+            "min_words", "max_words", "min_mean_word_len",
+            "max_mean_word_len", "max_symbol_ratio", "max_bullet_frac",
+            "max_ellipsis_frac", "min_alpha_frac", "min_stop_hits"},
+    }
+    for fn, gone in removed.items():
+        params = inspect.signature(fn).parameters
+        assert not gone & set(params), fn.__qualname__
+        assert not any(
+            p.kind is inspect.Parameter.VAR_KEYWORD for p in params.values()
+        ), fn.__qualname__
+    assert not hasattr(Warehouse, "_has_data_files")
+    assert not set(PipelineConfig.__dataclass_fields__) & {
+        "dup_span_tokens", "gopher_min_words"}
+    # the dedup caps are defined once, in the dedup operator
+    for name in ("MAX_SHINGLE_DF", "MAX_BAND_BUCKET"):
+        assigned = [
+            src for src in (*SOURCES, ROOT / "__spark_entry__.py")
+            for n in ast.walk(ast.parse(src.read_text()))
+            if isinstance(n, ast.Assign)
+            and any(getattr(t, "id", None) == name for t in n.targets)
+        ]
+        assert assigned == [ROOT / "arachne_spark/operators/dedup.py"], name
