@@ -162,7 +162,8 @@ def lsh_candidates(
     LSH band with the surface form, rescored by exact char-shingle
     Jaccard and filtered to >= threshold.
 
-    ``surfaces`` must carry ``surface`` and ``dictionary`` (alias,
+    ``surfaces`` must carry ``surface`` (a surface may repeat: the
+    signature aggregation groups by it) and ``dictionary`` (alias,
     qid); extra columns are dropped.  ``MAX_BAND_DF`` caps the
     dictionary-side frequency of a band hash (see ``lsh_join``); it is
     far above any real alias dictionary's band skew.
@@ -185,8 +186,8 @@ def fuzzy_link_best(surfaces: DataFrame, dictionary: DataFrame) -> DataFrame:
     asc) — the deterministic QID-priority rule of SURVEY.md §4.3
     applied to fuzzy links.
 
-    `surfaces` must carry ``surface`` and `dictionary` (alias, qid,
-    priority).
+    `surfaces` must carry ``surface`` (a surface may repeat) and
+    `dictionary` (alias, qid, priority).
     """
     # min-priority per qid: order-independent by construction (a
     # dropDuplicates here would keep a partition-order-dependent row if
@@ -216,18 +217,23 @@ def fuzzy_mentions(pages, mentions, alias_df):
     forms that missed the exact dictionary, resolved to item entities
     via LSH blocking + best-candidate scoring.
 
-    The linking runs once per distinct SURFACE (vocabulary-sized, tiny
-    next to the corpus), then broadcast-joins back onto the
-    (url, surface) occurrences — at 10^12 pages the per-page data never
-    enters the similarity computation.
+    The occurrences — distinct (url, surface) rows of
+    ``unmatched_tokens`` — are evaluated once: the signature
+    aggregation and the join back read the same shuffle of them (a
+    reused exchange), so the corpus is tokenized and anti-joined once.
+    The signatures are partial-aggregated per surface before their own
+    shuffle, and the band join, the Jaccard verify and the best-candidate
+    pick run once per distinct SURFACE (vocabulary-sized, tiny next to
+    the corpus); only the best link per surface joins back onto the
+    occurrences.
     """
     from arachne_spark.operators.mentions import unmatched_tokens
 
     um = unmatched_tokens(pages, mentions)
-    best = fuzzy_link_best(
-        um.select("surface").distinct(),
-        alias_df.where(F.col("kind") == "item"),
-    )
+    # ``um`` itself, not ``um.select("surface").distinct()``: under
+    # that distinct the optimizer drops um's own (url, surface) one,
+    # and the vocabulary's shuffle would share nothing with the join's
+    best = fuzzy_link_best(um, alias_df.where(F.col("kind") == "item"))
     # NOT a forced broadcast: on a real web corpus distinct tokens are
     # ~1e8+, past the 8 GB broadcast ceiling.  With AQE on (the
     # pipeline default) Spark broadcasts `best` automatically while it

@@ -1,21 +1,28 @@
 """End-to-end KG-construction pipeline (the `arachne` ingest path E1,
 SURVEY.md §3, restated Spark-first).
 
-Stage graph (each stage = committed snapshot table, resumable):
+Stage graph (each stage = committed snapshot table, resumable).  A
+stage runs as soon as the stages it reads have committed
+(``run_graph``), so three branches run side by side: page dedup from
+``pages_clean`` on, and the fetch and the linking chains from
+``mentions`` on.
 
   pages ─ latest_snapshot ─ lang filter ─ extract text   → pages_clean
-  pages_clean ─ MinHash bands ─ verify ─ CC clusters     → page_dupes
-        (url → rep_url near-dup map; filters the corpus when
-         cfg.dedup_pages — the training-data dedup gate)
-        └ detect_mentions (alias dict probe)             → mentions
-  unmatched long tokens ─ MinHash-LSH block ─ Jaccard    → fuzzy_mentions
-  mentions ─ salted touch-count ≥ 50                     → promoted
-  mentions ∪ promoted ─ entity_root ─ staleness anti-join
-           ─ batch-id assignment                         → fetch_queue
-  fetch_queue ⋈ labels (enrichment)                      → entities
-  mentions → (url,'mentions',qid) ∪ relation extraction  → triples_raw
-  triples_raw[sameAs] → large-star/small-star CC         → canonical_map
-  triples_raw ⋈ canonical_map                            → triples
+    (optional curation pre-stages, PipelineConfig)       → pages_curated
+   ├─ MinHash bands ─ verify ─ CC clusters               → page_dupes
+   │    (url → rep_url near-dup map; when cfg.dedup_pages,
+   │     only representatives flow on and mentions waits for it)
+   └─ detect_mentions (alias dict probe)                 → mentions
+       ├─ salted touch-count ≥ 50                        → promoted
+       │  mentions ∪ promoted ─ entity_root ─ staleness
+       │    anti-join ─ batch-id assignment              → fetch_queue
+       │  fetch_queue ⋈ labels (enrichment)              → entities
+       │  previous state ∪ fetch_queue at logical now    → fetch_state
+       └─ unmatched long tokens ─ MinHash-LSH ─ Jaccard  → fuzzy_mentions
+          mentions → (url,'mentions',qid) ∪ fuzzy
+            ∪ relation extraction                        → triples_raw
+          triples_raw[sameAs] → large-star/small-star CC → canonical_map
+          triples_raw ⋈ canonical_map                    → triples
 
 The alias probe, the enrichment and the canonicalization joins carry
 no broadcast hint: the planner picks each one's strategy.
@@ -35,10 +42,12 @@ from __future__ import annotations
 
 import argparse
 import json
+from concurrent.futures import FIRST_COMPLETED, ThreadPoolExecutor, wait
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from arachne_spark.functions.ids import entity_root, identify
 from arachne_spark.operators.cc import canonical_mapping
@@ -254,12 +263,14 @@ def run_pipeline(
 ) -> dict:
     wh = Warehouse(spark, cfg.warehouse)
     rec = StageRecorder(wh, cfg.run_id)
+    graph = _stage_graph(spark, cfg, pages, wh, rec)
     try:
-        _run_stage_graph(spark, cfg, pages, wh, rec)
+        run_graph(spark, graph)
     finally:
-        # one kg_lineage / kg_metrics commit per run; a run that raises
-        # still records the stages it finished
-        rec.flush()
+        # one kg_lineage / kg_metrics commit per run, in the graph's
+        # declared order; a run that raises still records the stages
+        # it finished
+        rec.flush(order=tuple(graph))
     # stage totals come from the recorder (parquet footers), so the
     # summary costs no count job
     rows = {r["stage"]: r["rows"] for r in rec.records}
@@ -270,13 +281,67 @@ def run_pipeline(
     }
 
 
-def _run_stage_graph(
+def run_graph(spark: SparkSession, graph: dict) -> None:
+    """Run every node of ``graph`` — ``{name: (reads, fn)}``, each node
+    declared after the nodes it reads — as ``fn(*values of reads)``, as
+    soon as every node it reads has returned.
+
+    The nodes run on one driver-side thread pool with a worker per sink
+    of the graph (a node no other node reads), so each branch has a
+    thread and the width is the graph's own.  A node's thread carries
+    the caller's local properties (job group, description, scheduler
+    pool): every job of the run is in the caller's job group, and
+    ``sc.cancelJobGroup`` cancels the whole run.
+
+    When a node raises, no node that reads it, directly or not, starts;
+    every other node still runs, and the first exception is raised once
+    the running ones have finished.
+    """
+    declared: set = set()
+    for name, (reads, _) in graph.items():
+        if not declared.issuperset(reads):
+            raise ValueError(f"{name} reads an undeclared node: {reads}")
+        declared.add(name)
+    sinks = declared - {r for reads, _ in graph.values() for r in reads}
+    values: dict = {}
+    failed: set = set()
+    errors: list = []
+    waiting = dict(graph)
+    running: dict = {}
+    with ThreadPoolExecutor(max_workers=len(sinks)) as pool:
+        while waiting or running:
+            # one pass in declared order reaches every transitive
+            # dependent of a failed node
+            for name, (reads, fn) in list(waiting.items()):
+                if failed.intersection(reads):
+                    failed.add(name)
+                    del waiting[name]
+                elif all(r in values for r in reads):
+                    del waiting[name]
+                    target = inheritable_thread_target(spark)(fn)
+                    args = [values[r] for r in reads]
+                    running[pool.submit(target, *args)] = name
+            done, _ = wait(running, return_when=FIRST_COMPLETED)
+            for fut in done:
+                name = running.pop(fut)
+                if fut.exception() is None:
+                    values[name] = fut.result()
+                else:
+                    failed.add(name)
+                    errors.append(fut.exception())
+    if errors:
+        raise errors[0]
+
+
+def _stage_graph(
     spark: SparkSession,
     cfg: PipelineConfig,
     pages: DataFrame | None,
     wh: Warehouse,
     rec: StageRecorder,
-) -> None:
+) -> dict:
+    """The run's nodes for ``run_graph``, in the stage diagram's order:
+    recorded stages (``stage``) and the steps between them (``step``)."""
     aliases = alias_df(spark)
     labels = labels_df(spark)
     preds = predicate_df(spark)
@@ -284,30 +349,44 @@ def _run_stage_graph(
     if pages is None:
         pages = pages_df(spark, cfg.n_pages)
 
-    pages_clean = rec.run_stage(
-        "pages_clean",
-        lambda: clean_pages(pages),
-        force=cfg.force,
-    )
+    graph: dict = {}
 
-    curated = curate_pages(
-        pages_clean, canonical_url_dedup=cfg.canonical_url_dedup,
-        scrub_pii=cfg.scrub_pii, c4_rules=cfg.c4_rules,
-        strip_dup_spans=cfg.strip_dup_spans,
-        quality_filter=cfg.quality_filter, gopher_filter=cfg.gopher_filter,
-    )
-    if curated is not pages_clean:
-        pages_clean = rec.run_stage(
+    def step(name: str, reads: tuple, fn) -> None:
+        graph[name] = (reads, fn)
+
+    def stage(name: str, reads: tuple, compute) -> None:
+        """A recorded stage: ``compute(*values of reads)`` committed as
+        table ``name``; its value is the committed table."""
+        step(name, reads, lambda *args: rec.run_stage(
+            name, lambda: compute(*args), force=cfg.force
+        ))
+
+    stage("pages_clean", (), lambda: clean_pages(pages))
+
+    def curate(clean: DataFrame) -> DataFrame:
+        curated = curate_pages(
+            clean, canonical_url_dedup=cfg.canonical_url_dedup,
+            scrub_pii=cfg.scrub_pii, c4_rules=cfg.c4_rules,
+            strip_dup_spans=cfg.strip_dup_spans,
+            quality_filter=cfg.quality_filter,
+            gopher_filter=cfg.gopher_filter,
+        )
+        if curated is clean:
+            return clean
+        return rec.run_stage(
             "pages_curated", lambda: curated, force=cfg.force
         )
+
+    step("pages_curated", ("pages_clean",), curate)
 
     # near-duplicate page map (url → min-url representative): the
     # LLM-training-data dedup pass, composed from MinHash bands +
     # Jaccard verify + connected components (operators/dedup.py)
-    page_dupes = rec.run_stage(
+    stage(
         "page_dupes",
-        lambda: minhash_doc_dedup(
-            pages_clean.select("url", "text"),
+        ("pages_curated",),
+        lambda p: minhash_doc_dedup(
+            p.select("url", "text"),
             id_col="url",
             threshold=DEDUP_THRESHOLD,
         ).select(
@@ -315,41 +394,46 @@ def _run_stage_graph(
             F.col("rep_id").alias("rep_url"),
             "keep",
         ),
-        force=cfg.force,
     )
+    # the pages every later stage reads: with cfg.dedup_pages only the
+    # cluster representatives, so mention detection waits for the map
+    text = "pages_curated"
     if cfg.dedup_pages:
-        pages_clean = pages_clean.join(
-            page_dupes.where(F.col("keep")).select("url"),
-            "url",
-            "left_semi",
+        text = "pages_kept"
+        step(
+            text,
+            ("pages_curated", "page_dupes"),
+            lambda p, d: p.join(
+                d.where(F.col("keep")).select("url"), "url", "left_semi"
+            ),
         )
 
-    mentions = rec.run_stage(
-        "mentions",
-        lambda: detect_mentions(pages_clean, aliases),
-        force=cfg.force,
-    )
+    stage("mentions", (text,), lambda p: detect_mentions(p, aliases))
 
     # long-tail fuzzy linking (north_star: MinHash-LSH blocking for
     # candidates the exact broadcast lookup misses)
-    fuzzy = rec.run_stage(
+    stage(
         "fuzzy_mentions",
-        lambda: fuzzy_mentions(pages_clean, mentions, aliases),
-        force=cfg.force,
+        (text, "mentions"),
+        lambda p, m: fuzzy_mentions(p, m, aliases),
     )
 
-    promoted = rec.run_stage(
+    stage(
         "promoted",
-        lambda: promote_candidates(mentions, key="qid", salt_from="url"),
-        force=cfg.force,
+        ("mentions",),
+        lambda m: promote_candidates(m, key="qid", salt_from="url"),
     )
 
     # "logical now" = max crawl timestamp: one 1-row scalar over the
-    # committed pages_clean snapshot, computed once and reused by both
-    # the staleness gate and the fetch_state update
-    logical_now = pages_clean.agg(F.max("warc_ts")).collect()[0][0]
+    # committed pages, computed once and read by both the staleness
+    # gate and the fetch_state update
+    step(
+        "logical_now",
+        (text,),
+        lambda p: p.agg(F.max("warc_ts")).collect()[0][0],
+    )
 
-    def build_queue() -> DataFrame:
+    def build_queue(mentions, promoted, logical_now) -> DataFrame:
         # every mentioned entity enters the queue (add_entity path);
         # promoted candidates are the extra_batches analog — same join
         # downstream, exactly as SURVEY.md §2 O8 prescribes.
@@ -374,70 +458,81 @@ def _run_stage_graph(
             seen = seen.join(fresh, "qid", "left_anti")
         return assign_batches(seen)
 
-    fetch_queue = rec.run_stage("fetch_queue", build_queue, force=cfg.force)
+    stage(
+        "fetch_queue", ("mentions", "promoted", "logical_now"), build_queue
+    )
 
-    rec.run_stage(
+    stage(
         "entities",
-        lambda: enrich_entities(fetch_queue, labels),
-        force=cfg.force,
+        ("fetch_queue",),
+        lambda q: enrich_entities(q, labels),
     )
 
-    # update fetch_state (ariadne.store analog, src/arachne.cpp:103).
-    # The cast keeps the column a real timestamp even when pages_clean
-    # is empty (logical_now is None → F.lit alone would be NullType,
-    # which parquet cannot write).
-    new_state = fetch_queue.select(
-        "qid", F.lit(logical_now).cast("timestamp").alias("last_fetched_ts")
-    )
-    if wh.is_committed(FETCH_STATE):
-        prev = wh.read(FETCH_STATE)
-        new_state = (
-            prev.unionByName(new_state)
-            .groupBy("qid")
-            .agg(F.max("last_fetched_ts").alias("last_fetched_ts"))
+    def update_fetch_state(fetch_queue, logical_now, _entities) -> None:
+        # update fetch_state (ariadne.store analog, src/arachne.cpp:103)
+        # once the queue's entities are committed: an entity counts as
+        # fetched only after its enrichment.  The cast keeps the column
+        # a real timestamp even when the pages are empty (logical_now
+        # is None → F.lit alone would be NullType, which parquet cannot
+        # write).
+        new_state = fetch_queue.select(
+            "qid",
+            F.lit(logical_now).cast("timestamp").alias("last_fetched_ts"),
         )
-    # safe although new_state reads FETCH_STATE: Warehouse.write
-    # commits by writing a temp copy and renaming it into place
-    wh.write(new_state, FETCH_STATE)
+        if wh.is_committed(FETCH_STATE):
+            prev = wh.read(FETCH_STATE)
+            new_state = (
+                prev.unionByName(new_state)
+                .groupBy("qid")
+                .agg(F.max("last_fetched_ts").alias("last_fetched_ts"))
+            )
+        # safe although new_state reads FETCH_STATE: Warehouse.write
+        # commits by writing a temp copy and renaming it into place
+        wh.write(new_state, FETCH_STATE)
 
-    triples_raw = rec.run_stage(
-        "triples_raw",
-        lambda: link_triples(mentions, preds, fuzzy),
-        force=cfg.force,
+    step(
+        FETCH_STATE,
+        ("fetch_queue", "logical_now", "entities"),
+        update_fetch_state,
     )
 
-    canonical_map = rec.run_stage(
+    stage(
+        "triples_raw",
+        ("mentions", "fuzzy_mentions"),
+        lambda m, fuzzy: link_triples(m, preds, fuzzy),
+    )
+
+    stage(
         "canonical_map",
-        lambda: canonical_mapping(
-            triples_raw.where(F.col("pred") == "sameAs").select(
+        ("triples_raw",),
+        lambda t: canonical_mapping(
+            t.where(F.col("pred") == "sameAs").select(
                 F.col("subj").alias("src"), F.col("obj").alias("dst")
             )
         ),
-        force=cfg.force,
     )
 
-    triples = rec.run_stage(
+    stage(
         "triples",
-        lambda: canonicalize_join(
-            triples_raw.where(F.col("pred") != "sameAs"), canonical_map
-        ),
-        force=cfg.force,
+        ("triples_raw", "canonical_map"),
+        lambda t, m: canonicalize_join(t.where(F.col("pred") != "sameAs"), m),
     )
 
     if cfg.rank_entities:
         from arachne_spark.operators.pagerank import entity_pagerank
 
-        rec.run_stage(
-            "entity_rank",
-            lambda: entity_pagerank(triples),
-            force=cfg.force,
-        )
+        stage("entity_rank", ("triples",), entity_pagerank)
 
     if cfg.materialize_rdf:
         # the graph-materialize step of the north_star
         from arachne_spark.sources.ntriples import write_ntriples
 
-        write_ntriples(triples, cfg.warehouse + "/triples_nt")
+        step(
+            "triples_nt",
+            ("triples",),
+            lambda t: write_ntriples(t, cfg.warehouse + "/triples_nt"),
+        )
+    return graph
 
 
 def main() -> None:

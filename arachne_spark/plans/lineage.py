@@ -14,11 +14,14 @@ sent.  Every stage run records
 
 The recorder launches no Spark job while the stage graph runs: rows are
 buffered in memory and ``flush`` commits them once per run, one append
-to each table.
+to each table.  Stages may run on several threads at once and finish
+in any order; ``flush`` lists the records and both tables' rows in the
+graph's declared order.
 """
 
 from __future__ import annotations
 
+import threading
 import time
 from dataclasses import dataclass, field
 
@@ -43,6 +46,7 @@ class StageRecorder:
     # rows not yet committed by flush()
     _lineage: list = field(default_factory=list)
     _metrics: list = field(default_factory=list)
+    _lock: threading.Lock = field(default_factory=threading.Lock)
 
     def run_stage(
         self, name: str, compute, force: bool = False
@@ -53,23 +57,32 @@ class StageRecorder:
         wall_ms = int((time.time() - t0) * 1000)
 
         parts = self.wh.file_row_counts(name)
-        self._lineage += [
+        lineage = [
             (self.run_id, name, pid, rows)
             for pid, rows in sorted(parts.items())
         ] or [(self.run_id, name, -1, 0)]
         total = sum(parts.values())
-        self._metrics.append(
-            (self.run_id, name, total, wall_ms, bool(resumed))
-        )
-        self.records.append(
-            {"stage": name, "rows": total, "wall_ms": wall_ms,
-             "resumed": resumed}
-        )
+        with self._lock:
+            self._lineage += lineage
+            self._metrics.append(
+                (self.run_id, name, total, wall_ms, bool(resumed))
+            )
+            self.records.append(
+                {"stage": name, "rows": total, "wall_ms": wall_ms,
+                 "resumed": resumed}
+            )
         return df
 
-    def flush(self) -> None:
+    def flush(self, order: tuple = ()) -> None:
         """Commit the buffered rows: one single-file append to each of
-        the lineage and metrics tables."""
+        the lineage and metrics tables.  ``records`` and the rows are
+        first put in ``order`` (stage names; a stage not in it goes
+        last), whatever order the stages finished in."""
+        rank = {name: i for i, name in enumerate(order)}
+        with self._lock:
+            self.records.sort(key=lambda r: rank.get(r["stage"], len(rank)))
+            for rows in (self._lineage, self._metrics):
+                rows.sort(key=lambda row: rank.get(row[1], len(rank)))
         spark = self.wh.spark
         for table, rows, schema in (
             (LINEAGE_TABLE, self._lineage, LINEAGE_SCHEMA),

@@ -54,3 +54,70 @@ def test_tiny_runs_launch_no_more_jobs(spark):
     )
     assert cc_jobs <= CC_TWO_EDGE_JOBS
     assert closure_jobs <= CLOSURE_TREE_JOBS
+
+
+def test_concurrent_loops_leave_session_conf_alone(spark, monkeypatch):
+    """Two connected-components loops on two threads at once (page
+    dedup's and canonicalization's run side by side in the stage
+    graph): each returns its serial result, the session's shuffle
+    partitions are unchanged afterwards, and every round sizes its
+    input in its own plan."""
+    import threading
+
+    from pyspark.sql import functions as F
+    from pyspark.util import inheritable_thread_target
+
+    from arachne_spark.operators import cc
+    from arachne_spark.operators.cc import representatives
+
+    monkeypatch.setattr(fixpoint, "FINISH_ROWS", 0)
+    conf = spark.conf.get("spark.sql.shuffle.partitions")
+    inputs = []
+    real = cc.fixpoint
+
+    def spy(start, step, *args, **kwargs):
+        def sized_step(df):
+            inputs.append(df._jdf.queryExecution().executedPlan().toString())
+            return step(df)
+
+        return real(start, sized_step, *args, **kwargs)
+
+    monkeypatch.setattr(cc, "fixpoint", spy)
+    qids = spark.createDataFrame(
+        [(f"Q{i}", f"Q{i + 1}") for i in range(1, 12)]
+        + [(f"P{i}", f"P{2 * i}") for i in range(1, 9)],
+        "src string, dst string",
+    )
+    nums = spark.createDataFrame(
+        [(i, i + 3) for i in range(30)], "src bigint, dst bigint"
+    )
+    ids = nums.select(F.col("src").alias("id")).union(
+        nums.select("dst")).distinct()
+    runs = {
+        "cc": lambda: sorted(
+            tuple(r) for r in canonical_mapping(qids).collect()),
+        "reps": lambda: sorted(
+            tuple(r) for r in representatives(ids, nums).collect()),
+    }
+    serial = {name: run() for name, run in runs.items()}
+    assert inputs and all("Coalesce 1" in p for p in inputs)
+    got, errors = {}, []
+
+    def target(name):
+        try:
+            got[name] = runs[name]()
+        except Exception as e:  # re-raised on the test thread
+            errors.append(e)
+
+    threads = [
+        threading.Thread(target=inheritable_thread_target(spark)(target),
+                         args=(name,))
+        for name in runs
+    ]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join()
+    assert not errors, errors
+    assert got == serial
+    assert spark.conf.get("spark.sql.shuffle.partitions") == conf

@@ -195,6 +195,61 @@ def test_recorder_launches_no_jobs(spark, tmp_path):
     assert rec.records[-1]["rows"] == 100 and rec.records[-1]["resumed"]
 
 
+def test_recorder_keeps_every_record_across_threads(spark):
+    """Stages recorded from 16 threads at once, with a short switch
+    interval: no record or row is lost, and flush lists records and
+    both tables' rows in the declared order."""
+    import sys
+    import threading
+
+    class Recorded:
+        """The warehouse calls run_stage and flush make, without Spark
+        jobs, except that each write collects its rows."""
+
+        def __init__(self):
+            self.spark = spark
+            self.written = {}
+
+        def resume_or_compute(self, table, compute, force=False):
+            return None, False
+
+        def file_row_counts(self, table):
+            return {0: 1, 1: int(table[1:])}
+
+        def write(self, df, table, mode="overwrite"):
+            self.written[table] = [tuple(r) for r in df.collect()]
+
+    wh = Recorded()
+    rec = StageRecorder(wh, "stress")
+    names = [f"s{i}" for i in range(1, 401)]
+
+    def record(part):
+        for name in part:
+            rec.run_stage(name, None)
+
+    threads = [
+        threading.Thread(target=record, args=(names[k::16],))
+        for k in range(16)
+    ]
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=60)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    rec.flush(order=tuple(names))
+    assert [r["stage"] for r in rec.records] == names
+    assert [r[1] for r in wh.written["kg_metrics"]] == names
+    assert [(r[1], r[2], r[3]) for r in wh.written["kg_lineage"]] == [
+        (name, pid, rows) for name in names
+        for pid, rows in ((0, 1), (1, int(name[1:])))
+    ]
+
+
 def test_local_inputs_need_no_python_worker(spark):
     """Driver-side rows (dictionaries, the recorder's flush) become
     JVM-only DataFrames: exact round trip, and no plan scans a Python
@@ -240,6 +295,105 @@ def test_failing_run_still_flushes(spark, tmp_path, monkeypatch):
     lineage = spark.read.parquet(f"{wh}/kg_lineage").collect()
     assert {r["run_id"] for r in lineage} == {"fail"}
     assert {r["stage"] for r in lineage} == set(finished)
+
+
+# the default graph's stages in their declared order
+STAGE_ORDER = [
+    "pages_clean", "page_dupes", "mentions", "fuzzy_mentions", "promoted",
+    "fetch_queue", "entities", "triples_raw", "canonical_map", "triples",
+]
+
+
+def test_independent_branches_run_concurrently(spark, tmp_path,
+                                               monkeypatch):
+    """page_dupes' compute waits for mention detection to start: a graph
+    that ran its stages one after another in declared order would time
+    out here.  Stages finish in any order, yet the records and both
+    tables list them in declared order."""
+    import threading
+
+    import arachne_spark.pipeline as pipeline
+
+    started = threading.Event()
+    real_dedup, real_detect = (
+        pipeline.minhash_doc_dedup, pipeline.detect_mentions)
+
+    def dedup_after_mentions(*args, **kwargs):
+        if not started.wait(timeout=60):
+            raise TimeoutError("page_dupes ran before mentions started")
+        return real_dedup(*args, **kwargs)
+
+    def detect(*args, **kwargs):
+        started.set()
+        return real_detect(*args, **kwargs)
+
+    monkeypatch.setattr(pipeline, "minhash_doc_dedup", dedup_after_mentions)
+    monkeypatch.setattr(pipeline, "detect_mentions", detect)
+    wh = str(tmp_path / "concurrent_wh")
+    res = run_pipeline(
+        spark, PipelineConfig(warehouse=wh, n_pages=60, run_id="conc")
+    )
+    assert [s["stage"] for s in res["stages"]] == STAGE_ORDER
+    assert res["triples"] > 0
+    for table in ("kg_metrics", "kg_lineage"):
+        stages = [r["stage"] for r in spark.read.parquet(
+            f"{wh}/{table}").collect()]
+        assert list(dict.fromkeys(stages)) == STAGE_ORDER, table
+
+
+def test_failed_stage_skips_only_its_dependents(spark, tmp_path,
+                                                monkeypatch):
+    """A stage that raises stops only the stages that read it: the run
+    re-raises its exception after every other stage has committed, and
+    kg_metrics holds those stages, in declared order."""
+    import arachne_spark.pipeline as pipeline
+
+    def fail(*_args, **_kwargs):
+        raise RuntimeError("page_dupes failed")
+
+    monkeypatch.setattr(pipeline, "minhash_doc_dedup", fail)
+    wh = str(tmp_path / "fail_dupes_wh")
+    with pytest.raises(RuntimeError, match="page_dupes failed"):
+        run_pipeline(
+            spark, PipelineConfig(warehouse=wh, n_pages=60, run_id="fd")
+        )
+    metrics = [r["stage"] for r in spark.read.parquet(
+        f"{wh}/kg_metrics").collect()]
+    assert metrics == [s for s in STAGE_ORDER if s != "page_dupes"]
+    # with the dedup gate on, mention detection reads page_dupes, so
+    # only pages_clean commits
+    wh = str(tmp_path / "fail_gate_wh")
+    with pytest.raises(RuntimeError, match="page_dupes failed"):
+        run_pipeline(spark, PipelineConfig(
+            warehouse=wh, n_pages=60, run_id="fg", dedup_pages=True))
+    metrics = spark.read.parquet(f"{wh}/kg_metrics").collect()
+    assert [r["stage"] for r in metrics] == ["pages_clean"]
+
+
+def test_run_jobs_carry_callers_group(spark, tmp_path):
+    """Every Spark job of a run is in the caller's job group, whichever
+    stage thread launched it, so cancelling the group cancels the
+    run."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+
+    def job_ids() -> list:
+        # the status store keeps the latest spark.ui.retainedJobs jobs,
+        # so jobs are told apart by id, not counted from the start
+        jsc.listenerBus().waitUntilEmpty()
+        jobs = jsc.statusStore().jobsList(None)
+        return [jobs.apply(i).jobId() for i in range(jobs.size())]
+
+    last = max(job_ids(), default=-1)
+    cfg = PipelineConfig(
+        warehouse=str(tmp_path / "group_wh"), n_pages=60, run_id="grp"
+    )
+    in_group = _jobs_in_group(
+        sc, "caller-group", lambda: run_pipeline(spark, cfg)
+    )
+    launched = [j for j in job_ids() if j > last]
+    assert in_group > 0
+    assert in_group == len(launched)
 
 
 def test_determinism_across_parallelism(spark, tmp_path):

@@ -10,7 +10,8 @@ canonicalization step has one plan over plain warehouse files; no
 option selects a second warehouse backend, ANN dot engine or
 mention-probe join; the warehouse commits one (unpartitioned) layout,
 and the thresholds and caps the KG stage graph's callers all set
-alike are module constants, not parameters."""
+alike are module constants, not parameters; the stage graph runs on
+one executor, and nothing on the KG path writes the session's conf."""
 
 from __future__ import annotations
 
@@ -146,8 +147,8 @@ def test_fixpoint_loop_defined_once():
         if isinstance(n, ast.FunctionDef) and n.name == "fixpoint"
     ]
     assert defs == [ROOT / "arachne_spark/operators/fixpoint.py"]
-    # the session factory configures the setting; only the loop resizes
-    # it per round
+    # the session factory configures the setting; only the loop reads
+    # it, to cap its rounds' input partitions (it writes no conf)
     assert _holders(
         lambda n: isinstance(n, ast.Constant)
         and n.value == "spark.sql.shuffle.partitions"
@@ -398,3 +399,30 @@ def test_stage_graph_takes_only_varied_options():
             and any(getattr(t, "id", None) == name for t in n.targets)
         ]
         assert assigned == [ROOT / "arachne_spark/operators/dedup.py"], name
+
+
+def test_one_stage_executor_and_no_session_conf_writes():
+    """The batch stage graph runs its stages on one thread pool, made
+    in pipeline.py; stages that run side by side share the session, so
+    nothing on the KG path (the operators, the storage and lineage
+    layer, the pipeline) writes the session's conf."""
+    pipeline = "arachne_spark/pipeline.py"
+    assert _holders(_calls("ThreadPoolExecutor")) == {
+        f"{pipeline}:run_graph"}
+    for name in ("Thread", "InheritableThread", "ProcessPoolExecutor"):
+        assert not _holders(_calls(name)), name
+
+    def conf_set(node) -> bool:
+        # <anything>.conf.set(...)
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "set"
+            and getattr(node.func.value, "attr", None) == "conf"
+        )
+
+    kg_path = ("arachne_spark/operators/", "arachne_spark/plans/", pipeline)
+    assert not {h for h in _holders(conf_set) if h.startswith(kg_path)}
+    # the guard sees the one conf write that stays, the stream's
+    assert _holders(conf_set) == {
+        "arachne_spark/streaming/incremental.py:write_batch_partition"}

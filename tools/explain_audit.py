@@ -41,6 +41,15 @@ def plan_of(df) -> str:
     )
 
 
+def final_plan_tree(df) -> str:
+    """The operator tree of an executed adaptive plan's final plan: the
+    tree lines between ``== Final Plan ==`` and ``== Initial Plan ==``
+    (node details and the initial plan left out)."""
+    plan = plan_of(df)
+    return plan.split("== Final Plan ==", 1)[1].split(
+        "== Initial Plan ==", 1)[0]
+
+
 def _check(name, plan, expect_contains=(), expect_absent=()):
     problems = []
     for s in expect_contains:
@@ -119,6 +128,26 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
         expect_absent=("lambdafunction", "ArrowEvalPython",
                        "BatchEvalPython", "ExistingRDD"),
     )
+    # ...and the unmatched-token occurrences are evaluated once: after
+    # execution, the signature aggregation reads the occurrence
+    # shuffle of the join back as a reused exchange, so the final plan
+    # holds one tokenize → anti-join subtree.  Its inputs are
+    # materialized first, as the stage graph's committed tables are
+    # (mention detection's own dominance anti-join stays out of it).
+    fuzzy = fuzzy_mentions(
+        clean.localCheckpoint(), m.localCheckpoint(), alias_df(spark)
+    )
+    fuzzy.collect()  # runs this DataFrame's own (adaptive) plan
+    final = final_plan_tree(fuzzy)
+    n_anti = sum("LeftAnti" in line for line in final.splitlines())
+    if n_anti != 1 or "ReusedExchange" not in final:
+        problems.append(
+            f"fuzzy link: {n_anti} LeftAnti joins in the executed plan"
+            " (want 1, with a ReusedExchange)"
+        )
+        print(final)
+    elif verbose:
+        print("ok   fuzzy link evaluates unmatched tokens once")
 
     # page shingles: token k-grams by element access, and their MinHash
     # signatures by aggregation — no interpreted higher-order function.
