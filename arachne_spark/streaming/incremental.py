@@ -10,16 +10,18 @@ run incrementally over an unbounded page feed:
 * ``streaming_mention_counts`` — the touch-counter (O8,
   /root/reference/src/arachne.cpp:224-233) as a watermarked windowed
   aggregation: per (window, qid) mention counts with late-data bounds.
-  Tokenization and the broadcast alias probe are the batch path's own
-  ``probe_aliases`` — stream/batch parity by construction.
+  Tokenization and the alias probe (the planner picks its join) are
+  the batch path's own ``probe_aliases`` — stream/batch parity by
+  construction.
 * ``run_incremental_pipeline`` — ``foreachBatch`` driving the full
   batch extraction core per micro-batch into the triples table; with
   ``availableNow`` this is the catch-up/backfill mode, with the
   default trigger it is the perpetual mode.  foreachBatch is
   at-least-once, so the write is made idempotent per batch_id
   (dynamic partition overwrite of ``batch_id=<n>``) and de-duplicated
-  across batches (anti-join vs the committed table) — the streaming
-  analog of the warehouse snapshot-resume in plans/storage.py.
+  across batches (anti-join vs the compacted probe index,
+  ``TwoTierState``) — the streaming analog of the warehouse
+  snapshot-resume in plans/storage.py.
 
 Mention *dominance* (the anti-join in detect_mentions) is a
 stream-to-stream self-join Structured Streaming cannot express
@@ -70,22 +72,15 @@ def write_batch_partition(df: DataFrame, path: str, batch_id: int) -> None:
     """Write ``df`` as the ``batch_id=<n>`` partition of the parquet
     table at ``path`` with dynamic partition overwrite: a retried
     micro-batch (foreachBatch is at-least-once) replaces its own
-    partial files and leaves every other partition alone.  The
-    session's overwrite mode is restored afterwards, also when the
-    write raises."""
-    sp = df.sparkSession
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = sp.conf.get(key)
-    sp.conf.set(key, "dynamic")
-    try:
-        (
-            df.withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .parquet(path)
-        )
-    finally:
-        sp.conf.set(key, prev)
+    partial files and leaves every other partition alone.  The mode is
+    this write's option, so the session's conf is never touched."""
+    (
+        df.withColumn("batch_id", F.lit(batch_id))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id")
+        .parquet(path)
+    )
 
 
 class TwoTierState:
@@ -223,7 +218,7 @@ def streaming_mention_counts(
 ) -> DataFrame:
     """(window_start, qid, cnt) with late-data handling.
 
-    Reuses the batch tokenizer + first-token broadcast probe; no
+    Reuses the batch tokenizer + first-token alias probe; no
     dominance (see module docstring), so counts are per candidate
     match — the touch-counter semantics, which also ignores spans
     (src/arachne.cpp:224-233 counts every touch).

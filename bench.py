@@ -13,17 +13,18 @@ Two parts:
 1. headline operator queries from __spark_entry__ at
    $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
    local[$SPARK_GRAFT_CPUS];
-2. KG-construction core (snapshot dedup -> extract -> mentions ->
-   LSH fuzzy links -> relations -> triples, no warehouse I/O) on an
-   identical synthetic
-   corpus at local[2] (N) vs local[8] (4N) — the sandbox substitute
-   for N vs 4N executors demanded by BASELINE.json;
+2. the shipped KG stage graph (``pipeline.run_pipeline``, default
+   config: every stage committed to a fresh warehouse per call) on an
+   identical synthetic corpus at local[2] (N) vs local[8] (4N) — the
+   sandbox substitute for N vs 4N executors demanded by
+   BASELINE.json; throughput counts the canonical triples and
    scaling_efficiency = throughput_4N / (4 * throughput_N).
    Pairs run back-to-back; a retry pair runs only if the first is
    below KG_EFF_ACCEPT, and the pair with the lowest combined wall
    (least host-noise disturbance — noise only ever adds wall) is
-   reported; all pairs land in the artifact under kg.pairs.
-   Headline queries report the per-query MEDIAN of 3 warm runs (raw
+   reported; all pairs, with their stage records, land in the
+   artifact under kg.pairs.
+   Headline queries report the per-query MEDIAN of 5 warm runs (raw
    runs kept under query_runs) so round-over-round deltas survive the
    host's bursty slow periods.
 
@@ -69,7 +70,9 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -263,8 +266,6 @@ def run_graph(cpus: int) -> dict:
     deterministic synthetic graph (200k vertices, 600k edges, xxhash64
     wiring — no corpus prep in the measurement).  Guarded like the
     curation section: a failure here never sinks the artifact."""
-    import time as _t
-
     from pyspark.sql import functions as F
 
     from arachne_spark.operators.pagerank import pagerank
@@ -288,10 +289,10 @@ def run_graph(cpus: int) -> dict:
     edges = edges.localCheckpoint()
 
     def run() -> float:
-        t0 = _t.time()
+        t0 = time.time()
         pr = pagerank(edges, n_iter=5)
         pr.agg(F.sum("rank")).collect()
-        return _t.time() - t0
+        return time.time() - t0
 
     run()  # warm
     walls = sorted(run() for _ in range(3))
@@ -309,8 +310,6 @@ def run_semdedup(cpus: int) -> dict:
     pair stage is Σ|cell|², so the histogram IS the scale evidence —
     plus fit/dedup walls and the recovered duplicate count.  Guarded
     like the curation section: a failure never sinks the artifact."""
-    import time as _t
-
     from pyspark.sql import functions as F
 
     from arachne_spark.operators.ann import (
@@ -345,9 +344,9 @@ def run_semdedup(cpus: int) -> dict:
         .persist()
     )
     emb.count()
-    t0 = _t.time()
+    t0 = time.time()
     cents = kmeans_fit(emb, k, n_iters=2)
-    fit_sec = _t.time() - t0
+    fit_sec = time.time() - t0
     sizes = sorted(
         r["c"]
         for r in ivf_assign(emb, cents, nprobe=1)
@@ -355,13 +354,13 @@ def run_semdedup(cpus: int) -> dict:
         .agg(F.count(F.lit(1)).alias("c"))
         .collect()
     )
-    t0 = _t.time()
+    t0 = time.time()
     dup_rows = (
         semantic_dedup(emb, threshold=0.9999, centroids=cents)
         .where(~F.col("keep"))
         .count()
     )
-    dedup_sec = _t.time() - t0
+    dedup_sec = time.time() - t0
     emb.unpersist()
     spark.stop()
     return {
@@ -395,7 +394,6 @@ def run_media(cpus: int) -> dict:
     optimizer prune the decode).  Guarded like the other auxiliary
     sections: a failure never sinks the artifact."""
     import struct
-    import time as _t
 
     from pyspark.sql import functions as F
 
@@ -430,9 +428,9 @@ def run_media(cpus: int) -> dict:
     img_df.count()
 
     def measure(fn):
-        t0 = _t.time()
+        t0 = time.time()
         out = fn()
-        return out, _t.time() - t0
+        return out, time.time() - t0
 
     # warm once (python workers + codegen), then measure
     force_img = lambda: resize_meta(  # noqa: E731
@@ -526,15 +524,13 @@ def run_media(cpus: int) -> dict:
     }
 
 
-def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
-    """Wall seconds + triple count for the warmed pipeline core."""
+def kg_core_run(cores: int, n_pages: int) -> tuple[float, int, list]:
+    """Wall seconds, canonical triple count and stage records of the
+    warmed ``run_pipeline`` call over ``n_pages`` synthetic pages."""
     from pyspark.sql import SparkSession
 
-    from arachne_spark.operators.extract import clean_pages
-    from arachne_spark.operators.lsh_link import fuzzy_mentions
-    from arachne_spark.operators.mentions import detect_mentions, link_triples
+    from arachne_spark.pipeline import PipelineConfig, run_pipeline
     from arachne_spark.session import get_spark
-    from arachne_spark.sources.dictionary import alias_df, predicate_df
     from arachne_spark.sources.pages import pages_df
 
     # sequential SparkContexts in one JVM — the warm-JVM protocol (a
@@ -563,32 +559,27 @@ def kg_core_run(cores: int, n_pages: int) -> tuple[float, int]:
             "spark.sql.adaptive.advisoryPartitionSizeInBytes": "4m",
         },
     )
-    aliases = alias_df(spark)
-    preds = predicate_df(spark)
 
-    def core(pg):
-        # mentions feeds several consumers (mention/fuzzy/relation
-        # paths); persist = the bench analog of the pipeline's
-        # warehouse materialization.  pages_clean is deliberately NOT
-        # cached: storing the html-wide corpus in the block store adds
-        # a measurable serial component (cache write + eviction) that
-        # distorts the scaling measurement, while the recompute it
-        # avoids is embarrassingly parallel and identical at both
-        # levels.
-        clean = clean_pages(pg)
-        m = detect_mentions(clean, aliases).persist()
-        n = link_triples(m, preds, fuzzy_mentions(clean, m, aliases)).count()
-        m.unpersist()
-        return n
+    def run(n: int, run_id: str) -> tuple[float, dict]:
+        # a fresh warehouse per call: the staleness gate reads any
+        # committed fetch_state whatever cfg.force says, so a reused
+        # one would drop this call's entities
+        wh = tempfile.mkdtemp(prefix="bench-kg-")
+        try:
+            t0 = time.time()
+            out = run_pipeline(
+                spark, PipelineConfig(warehouse=wh, run_id=run_id),
+                pages=pages_df(spark, n, partitions=KG_PARTITIONS),
+            )
+            return time.time() - t0, out
+        finally:
+            shutil.rmtree(wh, ignore_errors=True)
 
-    for _ in range(KG_WARMUPS):  # JIT warm-up (see module docstring)
-        core(pages_df(spark, KG_WARM_PAGES, partitions=KG_PARTITIONS))
-
-    t0 = time.time()
-    n = core(pages_df(spark, n_pages, partitions=KG_PARTITIONS))
-    wall = time.time() - t0
+    for i in range(KG_WARMUPS):  # JIT warm-up (see module docstring)
+        run(KG_WARM_PAGES, f"warm{i}")
+    wall, out = run(n_pages, "timed")
     spark.stop()
-    return wall, n
+    return wall, out["triples"], out["stages"]
 
 
 def main() -> None:
@@ -640,10 +631,11 @@ def main() -> None:
     # and a third would push the whole bench past the hour
     budgets = [KG_RETRY_BUDGET_SEC, KG_THIRD_PAIR_BUDGET_SEC]
     for attempt in range(3):
-        w_n_i, rows_n_i = kg_core_run(KG_CORES_N, KG_PAGES)
-        w_4n_i, rows_4n_i = kg_core_run(KG_CORES_4N, KG_PAGES)
+        w_n_i, rows_n_i, stages_n_i = kg_core_run(KG_CORES_N, KG_PAGES)
+        w_4n_i, rows_4n_i, stages_4n_i = kg_core_run(KG_CORES_4N, KG_PAGES)
         eff_i = (rows_4n_i / w_4n_i) / (4 * rows_n_i / w_n_i)
-        pairs.append((eff_i, w_n_i, w_4n_i, rows_n_i, rows_4n_i))
+        pairs.append((eff_i, w_n_i, w_4n_i, rows_n_i, rows_4n_i,
+                      stages_n_i, stages_4n_i))
         print(
             f"kg pair {attempt}: n={w_n_i:.1f}s 4n={w_4n_i:.1f}s "
             f"eff={eff_i:.3f}",
@@ -658,7 +650,7 @@ def main() -> None:
             time.time() - t_kg > budgets[attempt]
         ):
             break
-    eff, w_n, w_4n, rows_n, rows_4n = pairs[chosen_idx()]
+    eff, w_n, w_4n, rows_n, rows_4n = pairs[chosen_idx()][:5]
     tput_n, tput_4n = rows_n / w_n, rows_4n / w_4n
 
     # semdedup runs AFTER the kg phase on purpose: it is the newest
@@ -697,12 +689,15 @@ def main() -> None:
             "triples_sec_n": round(tput_n, 1),
             "triples_sec_4n": round(tput_4n, 1),
             "scaling_efficiency_n_to_4n": round(eff, 3),
-            # full measurement record: every pair + the decision
+            # full measurement record: every pair with its timed calls'
+            # stage records (triples_raw rows: 10,027,998 at 1.5M pages)
             "pairs": [
                 {
                     "wall_sec_n": round(p[1], 3),
                     "wall_sec_4n": round(p[2], 3),
                     "efficiency": round(p[0], 3),
+                    "stages_n": p[5],
+                    "stages_4n": p[6],
                 }
                 for p in pairs
             ],
