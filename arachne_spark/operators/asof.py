@@ -27,9 +27,66 @@ total order).
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
+
+
+def _tagged_union(
+    left: DataFrame,
+    right: DataFrame,
+    key: str,
+    left_ts: str,
+    right_ts: str,
+    payload_cols: list[str] | None,
+    seq: Column | None,
+    bucket: Callable[[Column, str], Column] | None = None,
+) -> tuple[DataFrame, DataFrame, list[str]]:
+    """The prologue both plans share: the payload-column and ``seq``
+    defaults, then left and right rows tagged by ``_side`` in one
+    relation (``_k``, ``_ts``, ``_side``, ``_seq``, ``_payload``, plus
+    ``_b`` when ``bucket(col, type name)`` maps a timestamp to its
+    bucket).  Returns (union, tagged right rows, payload columns)."""
+    payload_cols = payload_cols or [
+        c for c in right.columns if c not in (key, right_ts)
+    ]
+    if not payload_cols:
+        raise ValueError(
+            "asof_join: right side has no payload columns beyond "
+            "key/timestamp — nothing to attach"
+        )
+    seq = seq if seq is not None else F.col(payload_cols[0])
+
+    def tags(df: DataFrame, ts: str) -> list[Column]:
+        b = [] if bucket is None else [
+            bucket(F.col(ts), df.schema[ts].dataType.simpleString())
+            .alias("_b")
+        ]
+        return [F.col(key).alias("_k"), F.col(ts).alias("_ts"), *b]
+
+    r = right.select(
+        *tags(right, right_ts),
+        F.lit(0).alias("_side"),
+        seq.alias("_seq"),
+        F.struct(*[F.col(c) for c in payload_cols]).alias("_payload"),
+    )
+    lf = left.select(
+        *[F.col(c) for c in left.columns],
+        *tags(left, left_ts),
+        F.lit(1).alias("_side"),
+        F.lit(None).cast(r.schema["_seq"].dataType).alias("_seq"),
+        F.lit(None).cast(r.schema["_payload"].dataType).alias("_payload"),
+    )
+    r2 = r.select(
+        *[
+            F.lit(None).cast(left.schema[c].dataType).alias(c)
+            for c in left.columns
+        ],
+        *r.columns,
+    )
+    return lf.unionByName(r2), r, payload_cols
 
 
 def asof_join(
@@ -79,38 +136,8 @@ def asof_join(
             left, right, key, left_ts, right_ts, payload_cols, seq,
             time_bucket,
         )
-    payload_cols = payload_cols or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
-    if not payload_cols:
-        raise ValueError(
-            "asof_join: right side has no payload columns beyond "
-            "key/timestamp — nothing to attach"
-        )
-    seq = seq if seq is not None else F.col(payload_cols[0])
-
-    r = right.select(
-        F.col(key).alias("_k"),
-        F.col(right_ts).alias("_ts"),
-        F.lit(0).alias("_side"),
-        seq.alias("_seq"),
-        F.struct(*[F.col(c) for c in payload_cols]).alias("_payload"),
-    )
-    l_cols = [F.col(c) for c in left.columns]
-    lf = left.select(
-        *l_cols,
-        F.col(key).alias("_k"),
-        F.col(left_ts).alias("_ts"),
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(r.schema["_seq"].dataType).alias("_seq"),
-        F.lit(None).cast(r.schema["_payload"].dataType).alias("_payload"),
-    )
-    r2 = r.select(
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left.columns
-        ],
-        "_k", "_ts", "_side", "_seq", "_payload",
+    tagged, _, payload_cols = _tagged_union(
+        left, right, key, left_ts, right_ts, payload_cols, seq
     )
     # nulls-first ascending puts left rows (null _seq) after no right
     # row they should see: ordering is (_ts, _side, _seq), and _side
@@ -120,7 +147,7 @@ def asof_join(
         .orderBy("_ts", "_side", "_seq")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    carried = lf.unionByName(r2).withColumn(
+    carried = tagged.withColumn(
         "_carry", F.last("_payload", ignorenulls=True).over(w)
     )
     out = carried.where(F.col("_side") == 1).select(
@@ -146,16 +173,6 @@ def _asof_join_bucketed(
     """Two-pass as-of: per-(key, time-bucket) carry-forward, then a
     bucket-granularity as-of (recursion on the small summary relation)
     for rows whose bucket holds no preceding right row."""
-    payload_cols = payload_cols or [
-        c for c in right.columns if c not in (key, right_ts)
-    ]
-    if not payload_cols:
-        raise ValueError(
-            "asof_join: right side has no payload columns beyond "
-            "key/timestamp — nothing to attach"
-        )
-    seq = seq if seq is not None else F.col(payload_cols[0])
-
     def bucket(col: Column, dtype: str) -> Column:
         # timestamps (ltz AND ntz) go through unix_micros — a direct
         # double cast is rejected for TIMESTAMP_NTZ; the ntz→ltz cast
@@ -168,35 +185,8 @@ def _asof_join_bucketed(
             num = col.cast("double")
         return F.floor(num / F.lit(float(width))).cast("long")
 
-    r = right.select(
-        F.col(key).alias("_k"),
-        F.col(right_ts).alias("_ts"),
-        bucket(
-            F.col(right_ts),
-            right.schema[right_ts].dataType.simpleString(),
-        ).alias("_b"),
-        F.lit(0).alias("_side"),
-        seq.alias("_seq"),
-        F.struct(*[F.col(c) for c in payload_cols]).alias("_payload"),
-    )
-    lf = left.select(
-        *[F.col(c) for c in left.columns],
-        F.col(key).alias("_k"),
-        F.col(left_ts).alias("_ts"),
-        bucket(
-            F.col(left_ts),
-            left.schema[left_ts].dataType.simpleString(),
-        ).alias("_b"),
-        F.lit(1).alias("_side"),
-        F.lit(None).cast(r.schema["_seq"].dataType).alias("_seq"),
-        F.lit(None).cast(r.schema["_payload"].dataType).alias("_payload"),
-    )
-    r2 = r.select(
-        *[
-            F.lit(None).cast(left.schema[c].dataType).alias(c)
-            for c in left.columns
-        ],
-        "_k", "_ts", "_b", "_side", "_seq", "_payload",
+    tagged, r, payload_cols = _tagged_union(
+        left, right, key, left_ts, right_ts, payload_cols, seq, bucket
     )
     # pass 1: carry INSIDE each (key, bucket) — the hot key is spread
     # over its time range, so no single task owns it
@@ -205,7 +195,7 @@ def _asof_join_bucketed(
         .orderBy("_ts", "_side", "_seq")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    within = lf.unionByName(r2).withColumn(
+    within = tagged.withColumn(
         "_c1", F.last("_payload", ignorenulls=True).over(w1)
     )
     lrows = within.where(F.col("_side") == 1)
@@ -253,3 +243,4 @@ def _asof_join_bucketed(
             for c in payload_cols
         ],
     )
+

@@ -11,7 +11,11 @@ clearly-labeled stubs.  Every format's structure is walked once, by
 one layout function, through the bounded ``_Reader``: a declared
 size the payload cannot back, or an allocation past ``_MAX_PIXELS``,
 raises ``Malformed``, and the ``_never_raise`` boundary on each
-public decoder turns it into None.  The
+public decoder turns it into None.  JPEG's one marker walk
+(``_jpeg_segments``) serves both the header decode and the T.81
+decoder; only the entropy-coded scan data is read outside the
+reader, by the bit reader.  Three walks still index the payload by
+hand: ``_flac_layout``, ``_decode_mp3`` and ``_decode_ogg``.  The
 Spark side — schema, Arrow batch shape, ``mapInPandas`` iterator
 signature, fan-out row production, binary output columns, partition
 preservation — is real and tested throughout:
@@ -578,11 +582,6 @@ def _lzw_decode(data: bytes, min_code: int, npix: int) -> bytes | None:
     return bytes(out[:npix]) if len(out) >= npix else None
 
 
-# SOF markers that carry frame dimensions: C0-C3, C5-C7, C9-CB, CD-CF
-# (C4 = DHT, C8 = JPG extension, CC = DAC — no dimensions)
-_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
-
-
 def _gif_subblocks(r: _Reader) -> bytes:
     """One GIF sub-block chain (size-prefixed blocks ending at a 0
     terminator), joined; Malformed if it runs off the payload."""
@@ -713,45 +712,70 @@ def decode_gif_pixels(payload: bytes | None) -> dict | None:
     }
 
 
-def _decode_jpeg(payload: bytes) -> dict | None:
-    """JPEG frame-header decode via the marker-segment walk, no codec
-    library: SOI, then FF-prefixed segments skipped by their declared
-    big-endian lengths until a SOF marker yields (precision, height,
-    width, components).  The walk itself is the structural validation:
-    every segment must start with 0xFF and carry a sane length —
-    arbitrary text after an SOI prefix fails the walk."""
-    n = len(payload)
-    if n < 4 or bytes(payload[:2]) != b"\xff\xd8":
-        return None
-    i = 2
-    while i + 4 <= n:
-        if payload[i] != 0xFF:
-            return None
-        marker = payload[i + 1]
+# SOF markers that carry frame dimensions: C0-C3, C5-C7, C9-CB, CD-CF
+# (C4 = DHT, C8 = JPG extension, CC = DAC — no dimensions)
+_JPEG_SOF = frozenset(range(0xC0, 0xD0)) - {0xC4, 0xC8, 0xCC}
+# markers without a length field (T.81 B.1.1.3): TEM, RST0-7, SOI
+_JPEG_STANDALONE = frozenset((0x01, *range(0xD0, 0xD9)))
+
+
+def _jpeg_segments(data: bytes):
+    """The one JPEG marker walk (T.81 B.1): SOI, then fill bytes and
+    the standalone markers (TEM, RSTn, SOI) skipped, each
+    length-bearing segment yielded as (marker, body reader), and EOI
+    yielded as (0xD9, None), which ends the walk.  After an SOS
+    segment the caller decodes the entropy-coded data that starts at
+    ``body.end``; the walk resumes at the next marker that is neither
+    stuffed (FF00) nor RSTn — where ``_JpegBits``, which stops at any
+    other marker, left off — and ends if there is none.  A byte other
+    than a marker where one is due, or a length the payload cannot
+    back, raises ``Malformed``."""
+    r = _Reader(data)
+    if r.take(2) != b"\xff\xd8":
+        raise Malformed("jpeg: no SOI")
+    while r.remaining >= 2:
+        if r.u8() != 0xFF:
+            raise Malformed("jpeg: marker expected")
+        marker = data[r.pos]
         if marker == 0xFF:  # fill byte
-            i += 1
             continue
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:  # SOI / RSTn
-            i += 2
+        r.pos += 1
+        if marker in _JPEG_STANDALONE:
             continue
-        if marker in (0xD9, 0xDA):  # EOI / SOS before any SOF
-            return None
-        seg_len = int.from_bytes(payload[i + 2:i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
+        if marker == 0xD9:
+            yield marker, None
+            return
+        size = r.u16()
+        if size < 2:
+            raise Malformed("jpeg: segment length below 2")
+        body = r.sub(size - 2)
+        yield marker, body
+        if marker == 0xDA:
+            i = r.pos
+            while ((i := data.find(b"\xff", i, len(data) - 1)) >= 0
+                   and (not data[i + 1] or 0xD0 <= data[i + 1] <= 0xD7)):
+                i += 2
+            if i < 0:
+                return
+            r.pos = i
+
+
+def _decode_jpeg(payload: bytes) -> dict | None:
+    """JPEG frame-header decode, no codec library: the marker walk
+    (``_jpeg_segments``) up to the first SOF, whose body gives
+    (precision, height, width, components).  The walk itself is the
+    structural validation — arbitrary text after an SOI prefix fails
+    it — and an SOS or EOI before any SOF fails the decode."""
+    for marker, body in _jpeg_segments(payload):
+        if marker in (0xD9, 0xDA):
             return None
         if marker in _JPEG_SOF:
-            if seg_len < 8:
-                return None
-            precision = payload[i + 4]
-            h = int.from_bytes(payload[i + 5:i + 7], "big")
-            w = int.from_bytes(payload[i + 7:i + 9], "big")
-            ncomp = payload[i + 9]
-            if w <= 0 or h <= 0:
+            precision, h, w, ncomp = body.unpack("BHHB")
+            if not w or not h:
                 return None
             if precision not in (8, 12, 16) or ncomp not in (1, 3, 4):
                 return None
             return {"format": "jpeg", "width": w, "height": h}
-        i += 2 + seg_len
     return None
 
 
@@ -761,12 +785,12 @@ def _decode_jpeg(payload: bytes) -> dict | None:
 # the byte-stuffed entropy-coded segment.  Everything below is from
 # the public spec — no codec library.
 
-_JPEG_ZIGZAG = (
+_JPEG_ZIGZAG = [
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
-)
+]
 
 
 def _jpeg_dct_basis() -> "np.ndarray":
@@ -782,7 +806,7 @@ _JPEG_DCT_C = _jpeg_dct_basis()
 
 
 def _jpeg_huff_table(
-    bits: list[int], vals: bytes
+    bits: bytes, vals: bytes
 ) -> dict[tuple[int, int], int]:
     """(code length, code value) -> symbol, from DHT's BITS/HUFFVAL
     canonical encoding (T.81 C.2)."""
@@ -790,8 +814,6 @@ def _jpeg_huff_table(
     code, k = 0, 0
     for length in range(1, 17):
         for _ in range(bits[length - 1]):
-            if k >= len(vals):
-                raise ValueError("huffman vals underrun")
             table[(length, code)] = vals[k]
             code += 1
             k += 1
@@ -873,436 +895,265 @@ def _jpeg_extend(v: int, t: int) -> int:
 @_never_raise
 def decode_jpeg_pixels(payload: bytes | None) -> dict | None:
     """REAL baseline-JPEG pixel decode from the public T.81 spec — no
-    codec library: the marker walk collects DQT/DHT/SOF/DRI, the scan
-    is Huffman-decoded MCU by MCU (DC prediction + AC run/size codes,
-    restart markers honored), coefficients are dequantized,
-    un-zigzagged and IDCT'd with the exact 8x8 float basis (numpy),
-    chroma planes are nearest-upsampled, and YCbCr converts to RGB by
-    the JFIF matrix.  PROGRESSIVE frames (SOF2) decode too: T.81
-    Annex G coefficient accumulation across scans — DC first and
-    refinement scans (interleaved MCU order or per-component tight
-    grids), AC first scans with EOB runs and ZRL, and AC refinement
-    scans with position-synchronized correction bits — then one
-    shared dequantize + IDCT + assemble pass at EOI.  Scope: Huffman
-    8-bit (SOF0/1/2), 1 or 3 components, sampling factors 1-4 — the
-    overwhelming majority of web JPEGs; arithmetic, 12-bit and CMYK
-    return None and stay on the metadata-only path.  Same return
-    shape as ``decode_png_pixels``; never raises on adversarial bytes
-    (dimension claims bounded by ``_MAX_PIXELS``).  Per-symbol
-    Python bit-reading is fine here: thumbnail-scale work inside
-    Arrow batches, same contract as the PNG unfilter loop."""
-    p = bytes(payload or b"")
-    n = len(p)
-    if n < 4 or p[0] != 0xFF or p[1] != 0xD8:
-        return None
-    i = 2
+    codec library: the marker walk (``_jpeg_segments``) collects
+    DQT/DHT/SOF/DRI/SOS, each scan is Huffman-decoded block by block
+    into a per-component coefficient store (DC prediction + AC
+    run/size codes, restart markers honored), and one pass
+    dequantizes, un-zigzags and IDCTs the store with the exact 8x8
+    float basis (numpy), nearest-upsamples chroma and converts YCbCr
+    to RGB by the JFIF matrix.  A SEQUENTIAL frame (SOF0/1) finishes
+    right after its one scan; a PROGRESSIVE frame (SOF2) accumulates
+    T.81 Annex G scans — DC first and refinement scans, AC first
+    scans with EOB runs and ZRL, and AC refinement scans with
+    position-synchronized correction bits — and finishes at EOI.
+    Scope: Huffman 8-bit (SOF0/1/2), 1 or 3 components, sampling
+    factors 1-4 — the overwhelming majority of web JPEGs; arithmetic,
+    12-bit and CMYK return None and stay on the metadata-only path.
+    Same return shape as ``decode_png_pixels``; never raises on
+    adversarial bytes (dimension claims bounded by ``_MAX_PIXELS``).
+    Per-symbol Python bit-reading is fine here: thumbnail-scale work
+    inside Arrow batches, same contract as the PNG unfilter loop."""
+    data = bytes(payload or b"")
     qt: dict[int, "np.ndarray"] = {}
     huff_dc: dict[int, dict] = {}
     huff_ac: dict[int, dict] = {}
-    comps: list[tuple[int, int, int, int]] | None = None
-    w = h = 0
-    dri = 0
+    frame = None  # (width, height, components, coefficient store)
     progressive = False
-    coefs = grids = None  # per-component coefficient store (SOF2)
-    n_scans = 0
-    while i + 2 <= n:
-        if p[i] != 0xFF:
-            return None
-        marker = p[i + 1]
-        if marker == 0xFF:  # fill byte
-            i += 1
-            continue
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7 or marker == 0x01:
-            i += 2
-            continue
+    dri = n_scans = 0
+    for marker, body in _jpeg_segments(data):
         if marker == 0xD9:  # EOI: ends a progressive frame
             if progressive and n_scans:
-                return _jpeg_prog_finish(w, h, comps, coefs, grids, qt)
+                return _jpeg_finish(*frame, qt)
             return None
-        if i + 4 > n:
-            return None
-        seg_len = int.from_bytes(p[i + 2:i + 4], "big")
-        if seg_len < 2 or i + 2 + seg_len > n:
-            return None
-        body = p[i + 4:i + 2 + seg_len]
         if marker == 0xDB:  # DQT (possibly several tables)
-            j = 0
-            while j < len(body):
-                pq, tq = body[j] >> 4, body[j] & 15
-                step = 128 if pq else 64
-                if pq > 1 or j + 1 + step > len(body):
+            while body.remaining:
+                pq, tq = divmod(body.u8(), 16)
+                if pq > 1:
                     return None
-                if pq:
-                    tbl = [
-                        int.from_bytes(
-                            body[j + 1 + 2 * k:j + 3 + 2 * k], "big"
-                        )
-                        for k in range(64)
-                    ]
-                else:
-                    tbl = list(body[j + 1:j + 65])
-                q = np.zeros((8, 8))
-                for k in range(64):
-                    q.flat[_JPEG_ZIGZAG[k]] = tbl[k]
-                qt[tq] = q
-                j += 1 + step
+                qt[tq] = np.array(body.unpack("64H" if pq else "64B"),
+                                  dtype=float)
         elif marker == 0xC4:  # DHT (possibly several tables)
-            j = 0
-            while j + 17 <= len(body):
-                tc, th = body[j] >> 4, body[j] & 15
-                bits = list(body[j + 1:j + 17])
-                nv = sum(bits)
-                vals = bytes(body[j + 17:j + 17 + nv])
-                if len(vals) < nv or tc > 1:
+            while body.remaining >= 17:
+                tc, th = divmod(body.u8(), 16)
+                bits = body.take(16)
+                vals = body.take(sum(bits))
+                if tc > 1:
                     return None
-                (huff_dc if tc == 0 else huff_ac)[th] = (
+                (huff_ac if tc else huff_dc)[th] = (
                     _jpeg_huff_table(bits, vals)
                 )
-                j += 17 + nv
         elif marker in (0xC0, 0xC1, 0xC2):  # Huffman DCT frames
-            if len(body) < 6 or body[0] != 8:
+            frame = _jpeg_frame(body)
+            if frame is None:
                 return None
             progressive = marker == 0xC2
-            h = int.from_bytes(body[1:3], "big")
-            w = int.from_bytes(body[3:5], "big")
-            nc = body[5]
-            if not w or not h:
-                return None
-            _need(w * h, _MAX_PIXELS)
-            if nc not in (1, 3) or len(body) < 6 + 3 * nc:
-                return None
-            comps = []
-            for c in range(nc):
-                hv = body[7 + 3 * c]
-                ch, cv = hv >> 4, hv & 15
-                if not (1 <= ch <= 4 and 1 <= cv <= 4):
-                    return None
-                comps.append((body[6 + 3 * c], ch, cv, body[8 + 3 * c]))
-            if progressive:  # coefficients accumulate across scans
-                hmax = max(c[1] for c in comps)
-                vmax = max(c[2] for c in comps)
-                mcus_x = -(-w // (8 * hmax))
-                mcus_y = -(-h // (8 * vmax))
-                grids, coefs = [], []
-                for _, ch, cv, _ in comps:
-                    pw, ph = mcus_x * ch, mcus_y * cv  # padded grid
-                    # tight grid for non-interleaved scans:
-                    # ceil(ceil(dim * sampling / max_sampling) / 8)
-                    tw = -(-(-(-w * ch // hmax)) // 8)
-                    th_ = -(-(-(-h * cv // vmax)) // 8)
-                    grids.append((pw, ph, tw, th_, ch, cv))
-                    coefs.append(np.zeros((ph, pw, 64), dtype=np.int32))
         elif marker in _JPEG_SOF:  # arithmetic/lossless/12-bit
             return None
         elif marker == 0xDD:  # DRI
-            if len(body) < 2:
-                return None
-            dri = int.from_bytes(body[:2], "big")
+            dri = body.u16()
         elif marker == 0xDA:  # SOS
-            if comps is None:
+            if frame is None:
                 return None
-            if progressive:
-                n_scans += 1
-                if n_scans > 64:  # bound adversarial scan counts
-                    return None
-                i = _jpeg_prog_sos(
-                    p, i + 2 + seg_len, body, comps, grids, coefs,
-                    huff_dc, huff_ac, dri,
-                )
-                continue
-            ns = body[0] if body else 0
-            if ns != len(comps) or len(body) < 1 + 2 * ns + 3:
-                return None
+            comps = frame[2]
+            ns = body.u8()
             scan = []
-            for s in range(ns):
-                cs = body[1 + 2 * s]
-                td, ta = body[2 + 2 * s] >> 4, body[2 + 2 * s] & 15
-                idx = next(
-                    (k for k, c in enumerate(comps) if c[0] == cs),
-                    None,
+            for _ in range(ns):
+                cs, t = body.u8(), body.u8()
+                ci = next(
+                    (k for k, c in enumerate(comps) if c[0] == cs), None
                 )
-                if idx is None or td not in huff_dc or ta not in huff_ac:
+                if ci is None:
                     return None
-                scan.append((idx, huff_dc[td], huff_ac[ta]))
-            return _jpeg_scan(
-                p, i + 2 + seg_len, w, h, comps, scan, qt, dri
-            )
-        i += 2 + seg_len
+                scan.append((ci, huff_dc.get(t >> 4), huff_ac.get(t & 15)))
+            ss, se, a = body.unpack("3B")
+            bits = _JpegBits(data, body.end)
+            if not progressive:  # Ss/Se/Ah/Al are fixed (0, 63, 0, 0)
+                if ns != len(comps) or any(None in e for e in scan):
+                    return None
+                _jpeg_decode_scan(bits, scan, frame, 0, 63, 0, 0, dri)
+                return _jpeg_finish(*frame, qt)
+            n_scans += 1
+            ah, al = a >> 4, a & 15
+            if (not ns or n_scans > 64 or ss > se or se > 63 or al > 13
+                    or (ss == 0 and se != 0) or (ss and ns != 1)):
+                return None
+            # DC first scans decode with a DC table, AC scans with an AC
+            # table; DC refinement reads raw bits
+            if (ss or not ah) and None in [e[2 if ss else 1] for e in scan]:
+                return None
+            _jpeg_decode_scan(bits, scan, frame, ss, se, ah, al, dri)
     return None
 
 
-def _jpeg_next_marker(p: bytes, pos: int) -> int:
-    """Position of the next non-stuffed, non-restart marker at or
-    after ``pos`` (the resume point after a progressive scan's
-    entropy-coded segment)."""
-    n = len(p)
-    i = pos
-    while i + 1 < n:
-        if p[i] == 0xFF and p[i + 1] != 0x00:
-            if 0xD0 <= p[i + 1] <= 0xD7:
-                i += 2
-                continue
-            return i
-        i += 1
-    raise ValueError("no terminating marker after scan")
+def _jpeg_frame(body: _Reader) -> tuple | None:
+    """SOF0/1/2 → (width, height, components, coefficient store); each
+    component is (id, h sampling, v sampling, quant table, tight block
+    columns, tight block rows), and its store holds int32 zigzag
+    coefficients over the padded MCU grid."""
+    precision, h, w, nc = body.unpack("BHHB")
+    if precision != 8 or not w or not h:
+        return None
+    _need(w * h, _MAX_PIXELS)
+    if nc not in (1, 3):
+        return None
+    raw = [body.unpack("3B") for _ in range(nc)]
+    samp = [(hv >> 4, hv & 15) for _, hv, _ in raw]
+    if not all(1 <= ch <= 4 and 1 <= cv <= 4 for ch, cv in samp):
+        return None
+    hmax = max(ch for ch, _ in samp)
+    vmax = max(cv for _, cv in samp)
+    mcus_x, mcus_y = -(-w // (8 * hmax)), -(-h // (8 * vmax))
+    comps, coefs = [], []
+    for (cid, _, tq), (ch, cv) in zip(raw, samp):
+        # tight grid for non-interleaved scans (T.81 A.2.2):
+        # ceil(ceil(dim * sampling / max_sampling) / 8)
+        tw = -(-(-(-w * ch // hmax)) // 8)
+        th = -(-(-(-h * cv // vmax)) // 8)
+        comps.append((cid, ch, cv, tq, tw, th))
+        coefs.append(np.zeros((mcus_y * cv, mcus_x * ch, 64), np.int32))
+    return w, h, comps, coefs
 
 
-def _jpeg_prog_sos(p, pos, body, comps, grids, coefs, huff_dc,
-                   huff_ac, dri):
-    """Decode one progressive scan (T.81 Annex G) into the
-    coefficient store: DC first/refinement scans (interleaved MCU
-    order or a single component's tight block grid) and AC
-    first/refinement scans (single component, EOB runs, correction
-    bits).  Returns the payload position of the next marker."""
-    ns = body[0] if body else 0
-    if ns < 1 or len(body) < 1 + 2 * ns + 3:
-        raise ValueError("bad SOS")
-    ss = body[1 + 2 * ns]
-    se = body[2 + 2 * ns]
-    a = body[3 + 2 * ns]
-    ah, al = a >> 4, a & 15
-    if ss > se or se > 63 or al > 13:
-        raise ValueError("bad spectral range")
-    scan = []
-    for s in range(ns):
-        cs = body[1 + 2 * s]
-        td, ta = body[2 + 2 * s] >> 4, body[2 + 2 * s] & 15
-        idx = next((k for k, c in enumerate(comps) if c[0] == cs), None)
-        if idx is None:
-            raise ValueError("unknown component in scan")
-        scan.append((idx, td, ta))
-    reader = _JpegBits(p, pos)
-    if ss == 0:
-        if se != 0:
-            raise ValueError("DC scan with Se != 0")
-        for _, td, _ in scan:
-            if ah == 0 and td not in huff_dc:
-                raise ValueError("missing DC table")
-        _jpeg_prog_dc(reader, scan, grids, coefs, huff_dc, ah, al, dri)
+def _jpeg_blocks(bits, scan, comps, coefs, dri):
+    """The one block loop of every scan (T.81 A.2): MCU by MCU in
+    interleaved order when the scan has several components, one block
+    per MCU over the component's tight grid when it has one (A.2.2).
+    Every ``dri`` MCUs the next restart marker is consumed.  Yields
+    (scan entry, coefficient block, restart), restart being True on
+    an MCU's first block right after a marker."""
+    ci = scan[0][0]
+    if len(scan) == 1:
+        cols, rows = comps[ci][4:6]
+        units = [(scan[0], 1, 1)]
     else:
-        if ns != 1:
-            raise ValueError("interleaved AC scan")
-        ci, _, ta = scan[0]
-        if ta not in huff_ac:
-            raise ValueError("missing AC table")
-        _jpeg_prog_ac(reader, grids[ci], coefs[ci], huff_ac[ta], ss,
-                      se, ah, al, dri)
-    return _jpeg_next_marker(p, reader.pos)
-
-
-def _jpeg_prog_dc(reader, scan, grids, coefs, huff_dc, ah, al, dri):
-    preds = {ci: 0 for ci, _, _ in scan}
+        cols = coefs[ci].shape[1] // comps[ci][1]
+        rows = coefs[ci].shape[0] // comps[ci][2]
+        units = [(e, comps[e[0]][1], comps[e[0]][2]) for e in scan]
     rst_n = 0
-    count = 0
-
-    def block(ci, td, by, bx):
-        if ah == 0:  # first scan: diff at precision al
-            t = reader.huff_decode(huff_dc[td])
-            if t > 11:
-                raise ValueError("bad DC category")
-            preds[ci] += _jpeg_extend(reader.receive(t), t)
-            coefs[ci][by, bx, 0] = preds[ci] << al
-        elif reader.read_bit():  # refinement: one bit per block
-            coefs[ci][by, bx, 0] |= 1 << al
-
-    if len(scan) == 1:  # non-interleaved: the tight block grid
-        ci, td, _ = scan[0]
-        _, _, tw, th_, _, _ = grids[ci]
-        for by in range(th_):
-            for bx in range(tw):
-                if dri and count and count % dri == 0:
-                    reader.align_restart(rst_n)
-                    rst_n = (rst_n + 1) & 7
-                    preds[ci] = 0
-                block(ci, td, by, bx)
-                count += 1
-        return
-    pw0, ph0, _, _, ch0, cv0 = grids[scan[0][0]]
-    mcus_x, mcus_y = pw0 // ch0, ph0 // cv0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if dri and count and count % dri == 0:
-                reader.align_restart(rst_n)
-                rst_n = (rst_n + 1) & 7
-                preds = {ci: 0 for ci, _, _ in scan}
-            for ci, td, _ in scan:
-                _, _, _, _, ch, cv = grids[ci]
-                for by in range(cv):
-                    for bx in range(ch):
-                        block(ci, td, my * cv + by, mx * ch + bx)
-            count += 1
+    for m in range(cols * rows):
+        restart = bool(dri and m and m % dri == 0)
+        if restart:
+            bits.align_restart(rst_n)
+            rst_n = (rst_n + 1) & 7
+        my, mx = divmod(m, cols)
+        for entry, ch, cv in units:
+            store = coefs[entry[0]]
+            for by in range(my * cv, my * cv + cv):
+                for bx in range(mx * ch, mx * ch + ch):
+                    yield entry, store[by, bx], restart
+                    restart = False
 
 
-def _jpeg_prog_ac(reader, grid, coef, tbl, ss, se, ah, al, dri):
-    _, _, tw, th_, _, _ = grid
+def _jpeg_decode_scan(bits, scan, frame, ss, se, ah, al, dri):
+    """Decode one scan's entropy-coded data into the coefficient
+    store.  ``scan`` lists (component, DC table, AC table).  A
+    sequential scan is (Ss, Se, Ah, Al) = (0, 63, 0, 0); progressive
+    scans (T.81 G.1.2) are DC first/refinement (Ss = Se = 0) or AC
+    first/refinement over Ss..Se with EOB runs, at bit position Al."""
+    _, _, comps, coefs = frame
+    preds = [0] * len(coefs)
     eobrun = 0
-    rst_n = 0
-    count = 0
     p1 = 1 << al
     m1 = -p1
-    for by in range(th_):
-        for bx in range(tw):
-            if dri and count and count % dri == 0:
-                reader.align_restart(rst_n)
-                rst_n = (rst_n + 1) & 7
-                eobrun = 0
-            count += 1
-            blk = coef[by, bx]
-            if ah == 0:  # AC first scan at precision al
-                if eobrun > 0:
-                    eobrun -= 1
-                    continue
-                k = ss
-                while k <= se:
-                    rs = reader.huff_decode(tbl)
-                    r, s = rs >> 4, rs & 15
-                    if s:
-                        k += r
-                        if k > se:
-                            raise ValueError("AC index overrun")
-                        blk[k] = _jpeg_extend(reader.receive(s), s) << al
-                        k += 1
-                    else:
-                        if r != 15:
-                            eobrun = (1 << r) - 1
-                            if r:
-                                eobrun += reader.receive(r)
-                            break
-                        k += 16  # ZRL
+    for (ci, dc, ac), blk, restart in _jpeg_blocks(bits, scan, comps,
+                                                   coefs, dri):
+        if restart:
+            preds = [0] * len(coefs)
+            eobrun = 0
+        k = ss
+        if ss == 0:
+            if ah == 0:  # DC diff at precision al
+                t = bits.huff_decode(dc)
+                if t > 11:
+                    raise ValueError("bad DC category")
+                preds[ci] += _jpeg_extend(bits.receive(t), t)
+                blk[0] = preds[ci] << al
+            elif bits.read_bit():  # DC refinement: one bit per block
+                blk[0] |= p1
+            k = 1
+        if k > se:
+            continue
+        if ah == 0:  # AC first at precision al
+            if eobrun > 0:
+                eobrun -= 1
                 continue
-            # AC refinement scan (T.81 G.1.2.3 / libjpeg semantics)
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = reader.huff_decode(tbl)
-                    r, s = rs >> 4, rs & 15
-                    if s:
-                        if s != 1:
-                            raise ValueError("bad refinement size")
-                        s = p1 if reader.read_bit() else m1
-                    else:
-                        if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += reader.receive(r)
-                            break
-                        s = 0  # ZRL: pass 16 zero-history positions
-                    while k <= se:
-                        c = int(blk[k])
-                        if c != 0:  # history coef: correction bit
-                            if reader.read_bit() and (c & p1) == 0:
-                                blk[k] = c + (p1 if c >= 0 else m1)
-                        else:
-                            r -= 1
-                            if r < 0:
-                                break
-                        k += 1
-                    if s and k <= se:
-                        blk[k] = s
+            while k <= se:
+                rs = bits.huff_decode(ac)
+                r, s = rs >> 4, rs & 15
+                if s:
+                    k += r
+                    if k > se:
+                        raise ValueError("AC index overrun")
+                    blk[k] = _jpeg_extend(bits.receive(s), s) << al
                     k += 1
-            if eobrun > 0:  # correction bits for the EOB-run tail
+                elif r == 15:  # ZRL
+                    k += 16
+                else:  # EOB; AC-only (progressive) scans code EOB runs
+                    if ss:
+                        eobrun = (1 << r) - 1 + bits.receive(r)
+                    break
+            continue
+        # AC refinement scan (T.81 G.1.2.3 / libjpeg semantics)
+        if eobrun == 0:
+            while k <= se:
+                rs = bits.huff_decode(ac)
+                r, s = rs >> 4, rs & 15
+                if s:
+                    if s != 1:
+                        raise ValueError("bad refinement size")
+                    s = p1 if bits.read_bit() else m1
+                else:
+                    if r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += bits.receive(r)
+                        break
+                    s = 0  # ZRL: pass 16 zero-history positions
                 while k <= se:
                     c = int(blk[k])
-                    if c != 0:
-                        if reader.read_bit() and (c & p1) == 0:
+                    if c != 0:  # history coef: correction bit
+                        if bits.read_bit() and (c & p1) == 0:
                             blk[k] = c + (p1 if c >= 0 else m1)
+                    else:
+                        r -= 1
+                        if r < 0:
+                            break
                     k += 1
-                eobrun -= 1
+                if s and k <= se:
+                    blk[k] = s
+                k += 1
+        if eobrun > 0:  # correction bits for the EOB-run tail
+            while k <= se:
+                c = int(blk[k])
+                if c != 0:
+                    if bits.read_bit() and (c & p1) == 0:
+                        blk[k] = c + (p1 if c >= 0 else m1)
+                k += 1
+            eobrun -= 1
 
 
-def _jpeg_prog_finish(w, h, comps, coefs, grids, qt):
-    """Dequantize + IDCT the accumulated progressive coefficients and
-    assemble the pixel output (shared tail with the sequential path)."""
-    zz = list(_JPEG_ZIGZAG)
-    basis, basis_t = _JPEG_DCT_C, _JPEG_DCT_C.T
-    planes = []
-    for ci, (_, ch, cv, tq) in enumerate(comps):
-        if tq not in qt:
-            return None
-        q = qt[tq]
-        pw, ph, _, _, _, _ = grids[ci]
-        plane = np.zeros((ph * 8, pw * 8))
-        for by in range(ph):
-            for bx in range(pw):
-                nat = np.zeros(64)
-                nat[zz] = coefs[ci][by, bx]
-                block = basis_t @ (nat.reshape(8, 8) * q) @ basis
-                plane[by * 8:by * 8 + 8, bx * 8:bx * 8 + 8] = block
-        planes.append(plane)
-    return _jpeg_assemble(w, h, comps, planes)
-
-
-def _jpeg_scan(p, pos, w, h, comps, scan, qt, dri):
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * hmax))
-    mcus_y = -(-h // (8 * vmax))
-    for _, _, _, tq in comps:
-        if tq not in qt:
-            raise ValueError("missing quant table")
-    planes = [
-        np.zeros((mcus_y * cv * 8, mcus_x * ch * 8))
-        for _, ch, cv, _ in comps
-    ]
-    reader = _JpegBits(p, pos)
-    preds = [0] * len(comps)
-    rst_n = 0
-    mcu_count = 0
-    zz = _JPEG_ZIGZAG
-    basis, basis_t = _JPEG_DCT_C, _JPEG_DCT_C.T
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if dri and mcu_count and mcu_count % dri == 0:
-                reader.align_restart(rst_n)
-                rst_n = (rst_n + 1) & 7
-                preds = [0] * len(comps)
-            for ci, dc_tbl, ac_tbl in scan:
-                _, ch, cv, tq = comps[ci]
-                q = qt[tq]
-                for by in range(cv):
-                    for bx in range(ch):
-                        coef = np.zeros((8, 8))
-                        t = reader.huff_decode(dc_tbl)
-                        if t > 11:
-                            raise ValueError("bad DC category")
-                        preds[ci] += _jpeg_extend(reader.receive(t), t)
-                        coef.flat[0] = preds[ci]
-                        k = 1
-                        while k < 64:
-                            rs = reader.huff_decode(ac_tbl)
-                            r, s = rs >> 4, rs & 15
-                            if s == 0:
-                                if r == 15:  # ZRL
-                                    k += 16
-                                    continue
-                                break  # EOB
-                            k += r
-                            if k > 63:
-                                raise ValueError("AC index overrun")
-                            coef.flat[zz[k]] = _jpeg_extend(
-                                reader.receive(s), s
-                            )
-                            k += 1
-                        block = basis_t @ (coef * q) @ basis
-                        y0 = (my * cv + by) * 8
-                        x0 = (mx * ch + bx) * 8
-                        planes[ci][y0:y0 + 8, x0:x0 + 8] = block
-            mcu_count += 1
-    return _jpeg_assemble(w, h, comps, planes)
-
-
-def _jpeg_assemble(w, h, comps, planes):
-    """Level-shift, crop, nearest-upsample and color-convert the
-    per-component IDCT planes — shared by the sequential and
-    progressive paths."""
+def _jpeg_finish(w, h, comps, coefs, qt):
+    """The one dequantize + IDCT + assemble pass over the coefficient
+    store: block row by block row, coefficients are dequantized,
+    un-zigzagged and IDCT'd; each plane is level-shifted, cropped and
+    nearest-upsampled, and three planes convert YCbCr → RGB."""
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     full = []
-    for ci, (_, ch, cv, _) in enumerate(comps):
-        plane = planes[ci] + 128.0
+    for (_, ch, cv, tq, _, _), coef in zip(comps, coefs):
+        if tq not in qt:
+            return None
+        ph, pw, _ = coef.shape
+        plane = np.empty((ph * 8, pw * 8))
+        nat = np.empty((pw, 64))
+        for by in range(ph):
+            nat[:, _JPEG_ZIGZAG] = coef[by] * qt[tq]
+            blocks = _JPEG_DCT_C.T @ nat.reshape(pw, 8, 8) @ _JPEG_DCT_C
+            plane[by * 8:by * 8 + 8] = blocks.transpose(1, 0, 2).reshape(
+                8, pw * 8)
         ys = (np.arange(h) * cv) // vmax
         xs = (np.arange(w) * ch) // hmax
-        full.append(plane[np.ix_(ys, xs)])
+        full.append(plane[np.ix_(ys, xs)] + 128.0)
     if len(comps) == 1:
         out = np.clip(np.round(full[0]), 0, 255).astype(np.uint8)
         return {

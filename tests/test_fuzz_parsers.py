@@ -230,6 +230,26 @@ def test_media_decoders_never_raise():
         subsample=True,
     )
 
+    # restart-interval seeds: mutations hit the shared block loop's
+    # restart path in progressive DC/AC scans, and a one-component
+    # sequential scan whose 2x2 sampling leaves it non-interleaved
+    prog_dri_jpeg = _jpeg_prog_enc(
+        bytes((x * 11 + y * 5) % 256
+              for y in range(10) for x in range(9) for _ in range(3)),
+        9, 10, 3,
+        [([0, 1, 2], 0, 0, 0, 1), ([0], 0, 0, 1, 0), ([0], 1, 63, 0, 1),
+         ([1], 1, 63, 0, 0), ([0], 1, 63, 1, 0)],
+        subsample=True, dri=1,
+    )
+    from test_multimodal import _jpeg_resample
+
+    gray_22_jpeg = _jpeg_resample(
+        _jpeg_enc(bytes((x * 9 + y * 21) % 256
+                        for y in range(16) for x in range(16)),
+                  16, 16, 1, dri=1),
+        0x22,
+    )
+
     # MJPEG-AVI seed: mutations hit the RIFF walk + real frame
     # extraction of _avi_scan through decode_video
     mjpeg_avi = _avi(
@@ -364,7 +384,7 @@ def test_media_decoders_never_raise():
         tiled_tiff, deep_tiff, anim_gif, pixel_jpeg,
         pixel_prog_jpeg, mjpeg_avi, mp3_seed, ogg_seed,
         ulaw_wav, ima_wav, ms_wav, cram_bmp, cram_avi, msv1_16,
-        mjpeg_mp4, mjpeg_strf_avi,
+        mjpeg_mp4, mjpeg_strf_avi, prog_dri_jpeg, gray_22_jpeg,
     ]
     decoders = (
         decode_image, decode_audio, decode_video, decode_png_pixels,

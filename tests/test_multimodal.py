@@ -1580,6 +1580,49 @@ def test_decode_jpeg_progressive():
     assert decode_jpeg_pixels(bytes(huge)) is None
 
 
+def _jpeg_resample(jpeg: bytes, hv: int) -> bytes:
+    """``jpeg`` (one of the test encoders' grayscale streams) with its
+    component's SOF sampling byte set to ``hv`` (0xHV)."""
+    import re
+
+    b = bytearray(jpeg)
+    b[re.search(rb"\xff[\xc0\xc2]", jpeg).start() + 11] = hv
+    return bytes(b)
+
+
+def test_jpeg_single_component_sampling():
+    """A one-component scan is non-interleaved (T.81 A.2.2): one block
+    per MCU over the component's own block grid, whatever sampling
+    factors the SOF declares, so rewriting a grayscale stream's
+    sampling byte changes no pixel — sequential or progressive."""
+    import numpy as np
+
+    from arachne_spark.operators.multimodal import decode_jpeg_pixels
+
+    rng = np.random.RandomState(11)
+    for w, h in ((16, 16), (13, 11), (24, 8)):
+        pix = rng.randint(0, 256, size=(h, w), dtype=np.uint8).tobytes()
+        prog = _jpeg_prog_enc(pix, w, h, 1,
+                              [([0], 0, 0, 0, 0), ([0], 1, 63, 0, 0)])
+        for enc in (_jpeg_enc(pix, w, h, 1), prog):
+            want = decode_jpeg_pixels(enc)
+            assert want is not None, (w, h)
+            for hv in (0x21, 0x12, 0x22):
+                got = decode_jpeg_pixels(_jpeg_resample(enc, hv))
+                assert got == want, (w, h, hex(hv), enc is prog)
+
+
+def test_jpeg_tem_marker_is_standalone():
+    """TEM (FF01) carries no length (T.81 Table B.1): the header walk
+    and the pixel decoder both step over it."""
+    from arachne_spark.operators.multimodal import decode_jpeg_pixels
+
+    enc = _jpeg_enc(bytes(range(64, 128)), 8, 8, 1)
+    tem = enc[:2] + b"\xff\x01" + enc[2:]
+    assert decode_image(tem) == {"format": "jpeg", "width": 8, "height": 8}
+    assert decode_jpeg_pixels(tem) == decode_jpeg_pixels(enc) is not None
+
+
 def test_gif_anim_fixture_decodes_pixel_exact():
     """q42's animated-GIF fixture is only byte-hashed by the driver
     (the re-wrap is verbatim), so its REAL dictionary-LZW encoder must

@@ -3,7 +3,8 @@
 once, batch and stream call that one definition, and the bench times
 the shipped stage graph (``run_pipeline``), not a copy of it; each
 media format's structure is walked once, behind one never-raise
-boundary; connected components and transitive closure share one
+boundary, and every JPEG scan runs one block loop into one
+coefficient store; connected components and transitive closure share one
 round loop, and components finish small frontiers through one driver
 union-find; fuzzy linking, page dedup and streaming dedup share one
 MinHash-LSH; batch and stream share one alias probe, and the
@@ -144,12 +145,27 @@ def test_media_structure_parsed_once():
                  "_tiff_layout", "_bmp_layout", "_ico_layout",
                  "_wav_layout", "_aiff_layout", "_flac_layout",
                  "_avi_scan", "_mp4_layout", "_mkv_layout",
+                 "_jpeg_segments", "_jpeg_blocks", "_jpeg_finish",
                  "_never_raise", "_map_payloads", "payload_meta"):
         assert defs.count(name) == 1, name
     for gone in ("fake_decode", "_mp4_boxes", "_riff_chunks",
                  "_ebml_elements", "_skip_subblocks", "_wav_resolve_tag",
-                 "_jpeg_pixels", "_ico_entries"):
+                 "_jpeg_pixels", "_ico_entries", "_jpeg_scan",
+                 "_jpeg_next_marker", "_jpeg_prog_sos", "_jpeg_assemble"):
         assert gone not in defs, gone
+
+    def callers(name: str) -> set[str]:
+        return {h.split(":")[1] for h in _holders(_calls(name))
+                if h.startswith(media + ":")}
+
+    # JPEG: the header decode and the T.81 decoder share one marker
+    # walk; every scan, sequential or progressive, runs the one block
+    # loop into the coefficient store and ends in the one IDCT pass
+    assert callers("_jpeg_segments") == {"_decode_jpeg",
+                                         "decode_jpeg_pixels"}
+    assert callers("_jpeg_blocks") == {"_jpeg_decode_scan"}
+    assert callers("_jpeg_decode_scan") == {"decode_jpeg_pixels"}
+    assert callers("_jpeg_finish") == {"decode_jpeg_pixels"}
     # every operator goes through the one mapInPandas wrapper
     assert {
         h for h in _holders(_calls("mapInPandas"))
