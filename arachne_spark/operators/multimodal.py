@@ -13,10 +13,12 @@ size the payload cannot back, or an allocation past ``_MAX_PIXELS``,
 raises ``Malformed``, and the ``_never_raise`` boundary on each
 public decoder turns it into None.  JPEG's one marker walk
 (``_jpeg_segments``) serves both the header decode and the T.81
-decoder; only the entropy-coded scan data is read outside the
-reader, by the bit reader.  Three walks still index the payload by
-hand: ``_flac_layout``, ``_decode_mp3`` and ``_decode_ogg``.  The
-Spark side — schema, Arrow batch shape, ``mapInPandas`` iterator
+decoder, and one BITMAPINFOHEADER parse (``_dib_header``) and one
+palette read (``_dib_palette``) serve BMP files, ICO DIB entries and
+the AVI video ``strf``.  Only the coded data past the structure —
+JPEG scans, FLAC frames, RLE and MS Video 1 blocks, sample arrays —
+is read outside the reader, by each codec's own loop.  The Spark
+side — schema, Arrow batch shape, ``mapInPandas`` iterator
 signature, fan-out row production, binary output columns, partition
 preservation — is real and tested throughout:
 
@@ -824,14 +826,16 @@ def _jpeg_huff_table(
 class _JpegBits:
     """MSB-first reader over an entropy-coded segment: removes 0xFF00
     byte stuffing, pads with 1-bits at a real marker (spec-legal scan
-    tail), raises ValueError on payload underrun; restart markers are
-    consumed byte-aligned via ``align_restart``."""
+    tail — one fill's worth at most, so a scan cannot decode its
+    blocks from padding alone), raises ValueError on payload underrun;
+    restart markers are consumed byte-aligned via ``align_restart``."""
 
     def __init__(self, data: bytes, pos: int):
         self.data = data
         self.pos = pos
         self.acc = 0
         self.nbits = 0
+        self.pad = 0  # padding bytes fed since the scan or restart
 
     def _fill(self) -> None:
         d = self.data
@@ -845,9 +849,11 @@ class _JpegBits:
                     self.pos += 2
                 elif nxt is None:
                     raise ValueError("scan underrun")
-                else:
-                    b = 0xFF  # marker reached: 1-bit padding, stay put
-                    self.acc = (self.acc << 8) | b
+                else:  # marker reached: 1-bit padding, stay put
+                    self.pad += 1
+                    if self.pad > 4:
+                        raise Malformed("scan padding past one fill")
+                    self.acc = (self.acc << 8) | 0xFF
                     self.nbits += 8
                     continue
             else:
@@ -879,6 +885,7 @@ class _JpegBits:
     def align_restart(self, n: int) -> None:
         self.acc = 0
         self.nbits = 0
+        self.pad = 0
         d, p = self.data, self.pos
         if p + 2 > len(d) or d[p] != 0xFF or d[p + 1] != 0xD0 + (n & 7):
             raise ValueError("missing restart marker")
@@ -1560,6 +1567,28 @@ def decode_tiff_pixels(payload: bytes | None) -> dict | None:
     }
 
 
+def _dib_header(data: bytes, at: int = 0) -> tuple:
+    """The one BITMAPINFOHEADER parse — a BMP file's info header, an
+    ICO DIB entry, an AVI video ``strf``: (biSize, width, signed
+    height, planes, bit count, compression, biClrUsed) from the
+    header's 40 bytes at ``at``.  Every caller gates the fields its
+    own format bounds."""
+    return _Reader(data, at, order="little").unpack("IiiHHI12xI4x")
+
+
+def _dib_palette(data: bytes, at: int, hdr: tuple) -> list[bytes]:
+    """The one DIB palette read: ``biClrUsed or 1 << bpp`` BGRA quads
+    starting ``biSize`` bytes past the header at ``at``, as RGB
+    triples.  A header under 40 bytes, a count past ``1 << bpp`` or a
+    table the payload cannot back raises ``Malformed``."""
+    size, _, _, _, bpp, _, clr_used = hdr
+    if size < 40:
+        raise Malformed("info header under 40 bytes")
+    n = _need(clr_used or 1 << bpp, 1 << bpp)
+    quads = _Reader(data, at + size).take(4 * n)
+    return [quads[k:k + 3][::-1] for k in range(0, 4 * n, 4)]
+
+
 def _bmp_rle(data, w: int, h: int, bpp: int) -> list | None:
     """BI_RLE8 / BI_RLE4 decode (Windows BMP spec): encoded runs
     (count, index — nibbles alternating for RLE4), escapes 0,0 = end
@@ -1744,7 +1773,8 @@ def decode_bmp_pixels(payload: bytes | None) -> dict | None:
     layout = _bmp_layout(payload)
     if layout is None:
         return None
-    w, h_raw, bpp, compression, offset, hdr_size = layout
+    offset, hdr = layout
+    _, w, h_raw, _, bpp, compression, _ = hdr
     h = abs(h_raw)
     rle = None
     msv1 = False
@@ -1761,20 +1791,7 @@ def decode_bmp_pixels(payload: bytes | None) -> dict | None:
     # the payload size — cap them before _bmp_rle preallocates
     _need(w * h, _MAX_PIXELS)
     row_bytes = ((w * bpp + 31) // 32) * 4
-    palette = None
-    if bpp <= 8:
-        n_colors = int.from_bytes(payload[46:50], "little") or (1 << bpp)
-        if n_colors > (1 << bpp):
-            return None
-        pal_at = 14 + hdr_size
-        if pal_at + 4 * n_colors > len(payload):
-            return None
-        palette = [
-            bytes((payload[pal_at + 4 * i + 2],
-                   payload[pal_at + 4 * i + 1],
-                   payload[pal_at + 4 * i]))
-            for i in range(n_colors)
-        ]
+    palette = _dib_palette(payload, 14, hdr) if bpp <= 8 else None
     if msv1:
         pixels = _msvideo1_pixels(
             payload[offset:], w, h, bpp, palette
@@ -1831,7 +1848,7 @@ def _ico_layout(data: bytes) -> tuple | None:
     """The one ICO/CUR (favicon) directory walk: ICONDIR + entry
     table, every entry's byte range in bounds and its embedded image
     structurally valid (``_ico_entry_dims``).  Returns (kind,
-    (w, h, off, size, is_png) of the LARGEST entry — the one a
+    (w, h, off, size, dib) of the LARGEST entry — the one a
     pipeline thumbnails) or None."""
     n = len(data)
     if (n < 22 or data[0:2] != b"\x00\x00"
@@ -1853,9 +1870,9 @@ def _ico_layout(data: bytes) -> tuple | None:
         d = _ico_entry_dims(data, off, size)
         if d is None:  # every entry must be structurally valid
             return None
-        w, h, is_png = d
+        w, h, dib = d
         if best is None or w * h > best[0] * best[1]:
-            best = (w, h, off, size, is_png)
+            best = (w, h, off, size, dib)
     return ("ico" if data[2] == 1 else "cur"), best
 
 
@@ -1863,37 +1880,30 @@ def _ico_entry_dims(data: bytes, off: int, size: int):
     """Dims of one ICO directory entry's embedded image: a full PNG
     (delegated to the CRC-verified ``_decode_png``) or a headerless
     DIB whose biHeight doubles the visual height (XOR plane + 1-bit
-    AND mask).  Returns (w, h, is_png) or None."""
+    AND mask).  Returns (w, h, dib) or None, where dib is None for a
+    PNG and (XOR-plane offset, XOR-plane end) for a DIB."""
     sl = data[off:off + size]
     if sl[:8] == PNG_MAGIC:
         m = _decode_png(sl)
         if m is None:
             return None
-        return m["width"], m["height"], True
-    if len(sl) < 40:
-        return None
-    hdr_size = int.from_bytes(sl[0:4], "little")
+        return m["width"], m["height"], None
+    hdr_size, w, dh, planes, bpp, compression, clr_used = _dib_header(sl)
     if hdr_size < 40 or hdr_size > len(sl):
         return None
-    w = int.from_bytes(sl[4:8], "little", signed=True)
-    dh = int.from_bytes(sl[8:12], "little", signed=True)
-    planes = int.from_bytes(sl[12:14], "little")
-    bpp = int.from_bytes(sl[14:16], "little")
     if w <= 0 or dh <= 0 or dh % 2 or planes != 1:
         return None
     if bpp not in (1, 4, 8, 16, 24, 32):
         return None
-    if int.from_bytes(sl[16:20], "little") != 0:  # BI_RGB only
+    if compression != 0:  # BI_RGB only
         return None
     h = dh // 2
-    clr_used = int.from_bytes(sl[32:36], "little")
-    pal = clr_used if clr_used else (1 << bpp if bpp <= 8 else 0)
-    row = ((w * bpp + 31) // 32) * 4
-    mask_row = ((w + 31) // 32) * 4
+    pix_off = hdr_size + 4 * (clr_used or (1 << bpp if bpp <= 8 else 0))
+    xor_end = pix_off + ((w * bpp + 31) // 32) * 4 * h
     # the XOR plane and the 1-bit AND mask must both be present
-    if hdr_size + pal * 4 + (row + mask_row) * h > len(sl):
+    if xor_end + ((w + 31) // 32) * 4 * h > len(sl):
         return None
-    return w, h, False
+    return w, h, (pix_off, xor_end)
 
 
 def _decode_ico(payload: bytes) -> dict | None:
@@ -1911,38 +1921,23 @@ def _decode_ico(payload: bytes) -> dict | None:
 def decode_ico_pixels(payload: bytes | None) -> dict | None:
     """REAL ICO/CUR pixel decode of the largest entry: PNG entries
     delegate to ``decode_png_pixels``; DIB entries re-wrap the XOR
-    plane as a standalone BMP (un-doubling biHeight, recomputing the
-    data offset past the palette) and decode through
-    ``decode_bmp_pixels`` — the same re-wrap pattern the AVI/GIF
-    frame extractors use.  The 1-bit AND mask (transparency) is
+    plane as a standalone BMP with biHeight un-doubled — the AVI frame
+    extractor's ``_bmp_rewrap`` — and decode through
+    ``decode_bmp_pixels``.  The 1-bit AND mask (transparency) is
     dropped: output is opaque RGB, same shape as every pixel decoder
     here."""
     data = bytes(payload or b"")
     layout = _ico_layout(data)
     if layout is None:
         return None
-    w, h, off, size, is_png = layout[1]
+    w, h, off, size, dib = layout[1]
     sl = data[off:off + size]
-    if is_png:
+    if dib is None:
         return decode_png_pixels(sl)
-    hdr_size = int.from_bytes(sl[0:4], "little")
-    bpp = int.from_bytes(sl[14:16], "little")
-    compression = int.from_bytes(sl[16:20], "little")
-    if compression != 0:  # ICO DIBs are BI_RGB in practice
-        return None
-    clr_used = int.from_bytes(sl[32:36], "little")
-    pal = clr_used if clr_used else (1 << bpp if bpp <= 8 else 0)
-    pix_off = hdr_size + pal * 4
-    row = ((w * bpp + 31) // 32) * 4
-    xor_end = pix_off + row * h  # AND mask (after) is dropped
-    if xor_end > len(sl):
-        return None
-    hdr = bytearray(sl[:hdr_size])
+    pix_off, xor_end = dib  # the AND mask after the XOR plane is dropped
+    hdr = bytearray(sl[:pix_off])
     hdr[8:12] = h.to_bytes(4, "little", signed=True)  # un-double
-    bmp = (b"BM" + (14 + xor_end).to_bytes(4, "little") + bytes(4)
-           + (14 + pix_off).to_bytes(4, "little")
-           + bytes(hdr) + sl[hdr_size:xor_end])
-    return decode_bmp_pixels(bmp)
+    return decode_bmp_pixels(_bmp_rewrap(bytes(hdr), sl[pix_off:xor_end]))
 
 
 def _decode_webp(payload: bytes) -> dict | None:
@@ -2145,12 +2140,12 @@ def _bmp_layout(data: bytes) -> tuple | None:
     is REQUIRED to be 1 by the spec (two ASCII chars can never be
     0x0001), bpp must be a legal depth, and the pixel array implied by
     (w, h, bpp) must actually be present past the declared data
-    offset.  Returns (w, signed h, bpp, compression, data offset,
-    info-header size) or None."""
+    offset.  Returns (data offset, ``_dib_header`` fields) or None."""
     if len(data) < 54 or data[:2] != b"BM":
         return None
-    r = _Reader(data, 10, order="little")
-    offset, hdr_size, w, h, planes, bpp, compression = r.unpack("IIiiHHI")
+    offset = _Reader(data, 10, order="little").u32()
+    hdr = _dib_header(data, 14)
+    hdr_size, w, h, planes, bpp, compression, _ = hdr
     if hdr_size < 40 or w <= 0 or h == 0:  # negative h = top-down
         return None
     if planes != 1 or bpp not in (1, 4, 8, 16, 24, 32):
@@ -2163,7 +2158,7 @@ def _bmp_layout(data: bytes) -> tuple | None:
             return None
     elif len(data) - offset < ((w * bpp + 31) // 32) * 4 * abs(h):
         return None
-    return w, h, bpp, compression, offset, hdr_size
+    return offset, hdr
 
 
 def _decode_bmp(payload: bytes) -> dict | None:
@@ -2171,7 +2166,8 @@ def _decode_bmp(payload: bytes) -> dict | None:
     layout = _bmp_layout(bytes(payload))
     if layout is None:
         return None
-    return {"format": "bmp", "width": layout[0], "height": abs(layout[1])}
+    _, w, h, *_ = layout[1]
+    return {"format": "bmp", "width": w, "height": abs(h)}
 
 
 def _flac_layout(payload: bytes) -> tuple | None:
@@ -2184,35 +2180,34 @@ def _flac_layout(payload: bytes) -> tuple | None:
     the last-flag block inside the payload and audio frames must
     follow (first frame's 14-bit sync code 0b11111111111110) — magic
     plus junk fails, same contract as the other format walks.
-    Returns (channels, rate, bits, total, first frame offset) or
-    None."""
-    n = len(payload)
-    if n < 42 or bytes(payload[:4]) != b"fLaC":
+    Returns (channels, rate, bits, total, first frame offset) or None;
+    a block the payload cannot back raises ``Malformed``."""
+    if len(payload) < 42 or payload[:4] != b"fLaC":
         return None
-    if payload[4] & 0x7F != 0:  # first block must be STREAMINFO
-        return None
-    if int.from_bytes(payload[5:8], "big") != 34:
-        return None
+    r = _Reader(payload, 4)
+    if r.u8() & 0x7F or r.u24() != 34:
+        return None  # the first block must be a 34-byte STREAMINFO
     # sample rate 20 bits, channels-1 3 bits, bps-1 5 bits, total 36
     # bits, packed big-endian starting at STREAMINFO byte 10
-    packed = int.from_bytes(payload[18:26], "big")
+    r.skip(10)
+    packed = r.uint(8)
     rate = packed >> 44
     channels = ((packed >> 41) & 0x7) + 1
     bits = ((packed >> 36) & 0x1F) + 1
     total = packed & ((1 << 36) - 1)
     if rate == 0 or rate > 655350:
         return None
-    i, last = 4, False
+    r.pos, last = 4, False  # the block table, STREAMINFO first
     while not last:
-        if i + 4 > n:
-            return None  # truncated metadata table
-        last = bool(payload[i] & 0x80)
-        if payload[i] & 0x7F > 6:
+        head = r.u8()
+        if head & 0x7F > 6:
             return None  # invalid block type (127 is forbidden)
-        i += 4 + int.from_bytes(payload[i + 1:i + 4], "big")
-    if i + 2 > n or payload[i] != 0xFF or payload[i + 1] & 0xFC != 0xF8:
+        last = head & 0x80
+        r.skip(r.u24())
+    first = r.pos
+    if r.u8() != 0xFF or r.u8() & 0xFC != 0xF8:
         return None  # no audio frame after the metadata table
-    return channels, rate, bits, total, i
+    return channels, rate, bits, total, first
 
 
 def _decode_flac(payload: bytes) -> dict | None:
@@ -2264,24 +2259,26 @@ def _decode_mp3(payload: bytes) -> dict | None:
     ID3v1 'TAG' allowed), and number at least two.  Duration comes
     from samples-per-frame × frame count.  Returns the
     ``decode_audio`` dict shape (``bits_per_sample`` None — not
-    defined for entropy-coded audio); never raises."""
-    n = len(payload)
-    i = 0
-    if bytes(payload[:3]) == b"ID3" and n >= 10:
-        size = 0
-        for k in range(6, 10):
-            if payload[k] & 0x80:  # syncsafe bytes keep the top bit 0
+    defined for entropy-coded audio) or None; a frame the payload
+    cannot back raises ``Malformed``."""
+    r = _Reader(payload)
+    if payload[:3] == b"ID3" and len(payload) >= 10:
+        r.skip(5)
+        flags, size = r.u8(), 0
+        for b in r.take(4):
+            if b & 0x80:  # syncsafe bytes keep the top bit 0
                 return None
-            size = (size << 7) | payload[k]
-        i = 10 + size + (10 if payload[5] & 0x10 else 0)
+            size = (size << 7) | b
+        r.skip(size + (10 if flags & 0x10 else 0))
     spec = None  # (version_bits, layer, rate, channels)
     frames = samples = 0
-    while i < n:
-        if n - i == 128 and bytes(payload[i:i + 3]) == b"TAG":
+    while r.remaining:
+        tail = r.remaining == 128
+        b0, b1, b2, b3 = head = r.take(4)
+        if tail and head[:3] == b"TAG":
             break  # trailing ID3v1 tag
-        if i + 4 > n or payload[i] != 0xFF or payload[i + 1] & 0xE0 != 0xE0:
+        if b0 != 0xFF or b1 & 0xE0 != 0xE0:
             return None
-        b1, b2, b3 = payload[i + 1], payload[i + 2], payload[i + 3]
         ver = (b1 >> 3) & 3
         layer = 4 - ((b1 >> 1) & 3)  # bits 3/2/1 = Layer I/II/III
         br_idx, rate_idx = b2 >> 4, (b2 >> 2) & 3
@@ -2302,11 +2299,11 @@ def _decode_mp3(payload: bytes) -> dict | None:
         else:
             spf = 1152 if layer == 2 or mpeg1 else 576
             flen = spf // 8 * bitrate // rate + padding
-        if flen <= 4 or i + flen > n:
+        if flen <= 4:
             return None
+        r.skip(flen - 4)
         frames += 1
         samples += spf
-        i += flen
     if frames < 2 or spec is None:
         return None
     _, _, rate, channels = spec
@@ -2331,41 +2328,31 @@ def _decode_ogg(payload: bytes) -> dict | None:
     channels u8 + pre-skip u16le, granules always at 48 kHz).  Total
     samples = the last finished-packet granule position (minus
     pre-skip for Opus).  Returns the ``decode_audio`` dict shape
-    (``bits_per_sample`` None); never raises."""
-    n = len(payload)
-    i, first = 0, True
+    (``bits_per_sample`` None) or None; a page the payload cannot back
+    raises ``Malformed``."""
+    r = _Reader(payload, order="little")
+    first = True
     fmt = channels = rate = preskip = None
     last_granule = 0
-    while i < n:
-        if i + 27 > n or bytes(payload[i:i + 4]) != b"OggS":
+    while r.remaining:
+        magic, version, header_type, granule, n_segs = r.unpack(
+            "4sBBq12xB")  # 12x: serial, sequence, checksum
+        if magic != b"OggS" or version != 0:  # stream structure
             return None
-        if payload[i + 4] != 0:  # stream structure version
-            return None
-        header_type = payload[i + 5]
-        granule = int.from_bytes(
-            payload[i + 6:i + 14], "little", signed=True
-        )
-        n_segs = payload[i + 26]
-        if i + 27 + n_segs > n:
-            return None
-        body_len = sum(payload[i + 27:i + 27 + n_segs])
-        body_at = i + 27 + n_segs
-        if body_at + body_len > n:
-            return None
+        body = r.take(sum(r.take(n_segs)))
         if first:
             if not header_type & 0x02:  # BOS flag required
                 return None
-            body = bytes(payload[body_at:body_at + body_len])
             if body[:7] == b"\x01vorbis" and len(body) >= 30:
-                if int.from_bytes(body[7:11], "little") != 0:
-                    return None  # vorbis_version must be 0
+                vorbis_version, channels, rate = _Reader(
+                    body, 7, order="little").unpack("IBI")
+                if vorbis_version != 0:
+                    return None
                 fmt = "vorbis"
-                channels = body[11]
-                rate = int.from_bytes(body[12:16], "little")
             elif body[:8] == b"OpusHead" and len(body) >= 19:
                 fmt = "opus"
-                channels = body[9]
-                preskip = int.from_bytes(body[10:12], "little")
+                channels, preskip = _Reader(
+                    body, 9, order="little").unpack("BH")
                 rate = 48000  # granule positions are always 48 kHz
             else:
                 return None
@@ -2374,7 +2361,6 @@ def _decode_ogg(payload: bytes) -> dict | None:
             first = False
         if granule >= 0:  # -1 = no packet finishes on this page
             last_granule = granule
-        i = body_at + body_len
     if fmt is None:
         return None
     total = last_granule - (preskip or 0)
@@ -3372,8 +3358,9 @@ def _avi_scan(data: bytes) -> tuple[dict, list[bytes]] | None:
 
 
 def _bmp_rewrap(strf: bytes, frame: bytes) -> bytes:
-    """A standalone BMP from an AVI video chunk: ``BM`` file header +
-    the strf BITMAPINFOHEADER+palette verbatim + the chunk verbatim."""
+    """A standalone BMP around a DIB: ``BM`` file header + the
+    BITMAPINFOHEADER+palette verbatim (an AVI strf, an ICO entry's) +
+    the pixel data verbatim (a video chunk, an ICO XOR plane)."""
     off = 14 + len(strf)
     return (b"BM" + (off + len(frame)).to_bytes(4, "little") + bytes(4)
             + off.to_bytes(4, "little") + strf + frame)
@@ -3398,7 +3385,7 @@ def _avi_video_frames(payload: bytes | None) -> list[bytes] | None:
     meta, frames = scanned
     strf = meta["strf"]
     if strf is not None:
-        comp = int.from_bytes(strf[16:20], "little")
+        comp = _dib_header(strf)[5]  # biCompression
         if comp in (0, 1, 2) or comp in _MSV1_FOURCCS:
             frames = [_bmp_rewrap(strf, f) for f in frames]
     return frames
@@ -3685,7 +3672,9 @@ def _jpeg_sequence_compose(frames: list[bytes]) -> dict | None:
             "channels": shape[2], "frames": out}
 
 
-_MJPEG_FOURCCS = frozenset((b"MJPG", b"mjpg", b"dmb1"))
+_MJPEG_FOURCCS = frozenset(
+    int.from_bytes(f, "little") for f in (b"MJPG", b"mjpg", b"dmb1")
+)
 
 
 def _avi_compose(data: bytes) -> dict | None:
@@ -3709,26 +3698,15 @@ def _avi_compose(data: bytes) -> dict | None:
         return None
     if len(chunks) > _MAX_COMPOSED_FRAMES:
         return None
-    w = int.from_bytes(strf[4:8], "little", signed=True)
-    h = int.from_bytes(strf[8:12], "little", signed=True)
-    bpp = int.from_bytes(strf[14:16], "little")
-    comp = int.from_bytes(strf[16:20], "little")
+    hdr = _dib_header(strf)
+    _, w, h, _, bpp, comp, _ = hdr
     if comp in _MSV1_FOURCCS and bpp in (8, 16) and h > 0:
         if w <= 0:
             return None
         _need(w * h, _MAX_PIXELS)
         if len(chunks) * w * h > _MAX_COMPOSED_PIXELS:
             return None
-        palette = None
-        if bpp == 8:
-            n_colors = int.from_bytes(strf[32:36], "little") or 256
-            if len(strf) < 40 + 4 * n_colors:
-                return None
-            palette = [
-                bytes((strf[40 + 4 * i + 2], strf[40 + 4 * i + 1],
-                       strf[40 + 4 * i]))
-                for i in range(n_colors)
-            ]
+        palette = _dib_palette(strf, 0, hdr) if bpp == 8 else None
         frames: list[bytes] = []
         canvas: bytes | None = None
         for c in chunks:
@@ -3753,7 +3731,7 @@ def _avi_compose(data: bytes) -> dict | None:
             return None
         return {"width": dec["width"], "height": dec["height"],
                 "channels": 3, "frames": frames}
-    if strf[16:20] in _MJPEG_FOURCCS:
+    if comp in _MJPEG_FOURCCS:
         return _jpeg_sequence_compose(chunks)
     return None  # remaining entropy-coded codecs: metadata only
 

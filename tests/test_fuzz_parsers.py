@@ -342,6 +342,18 @@ def test_media_decoders_never_raise():
         _ico_dib(6, 5, ico_rgb),
         _png_raw(8, 7, 2, lambda x, y: (x * 9, y * 13, 5)),
     ])
+    # palettized ICO DIB with biClrUsed set, and a CRAM AVI whose strf
+    # is a 108-byte BITMAPV4HEADER: mutations hit the shared DIB
+    # header parse and palette read of all three containers
+    from test_multimodal import _cram_avi_v4
+
+    pal_rgb = bytes(c for y in range(5) for x in range(6)
+                    for c in ((255, 0, 0), (0, 0, 255))[(x + y) % 2])
+    pal_dib = bytearray(_bmp_px(6, 5, pal_rgb, bpp=8)[14:])
+    pal_dib[8:12] = (10).to_bytes(4, "little")  # doubled biHeight
+    ico_pal = _ico([bytes(pal_dib) + bytes(4 * 5)])  # + AND mask
+    assert decode_ico_pixels(ico_pal)["pixels"] == pal_rgb
+    cram_v4_avi = _cram_avi_v4()
 
     # WebP / HEIF seeds: mutations hit the RIFF-tiling check and the
     # pitm→ipma→ipco association walk of the new header decoders
@@ -385,6 +397,7 @@ def test_media_decoders_never_raise():
         pixel_prog_jpeg, mjpeg_avi, mp3_seed, ogg_seed,
         ulaw_wav, ima_wav, ms_wav, cram_bmp, cram_avi, msv1_16,
         mjpeg_mp4, mjpeg_strf_avi, prog_dri_jpeg, gray_22_jpeg,
+        ico_pal, cram_v4_avi,
     ]
     decoders = (
         decode_image, decode_audio, decode_video, decode_png_pixels,

@@ -1520,6 +1520,9 @@ def test_decode_jpeg_progressive():
         torture += one_scan
     torture += b"\xff\xd9"
     assert decode_jpeg_pixels(bytes(torture)) is None
+
+
+def test_decode_jpeg_pixels():
     """REAL baseline-JPEG pixel decode: encode→decode roundtrip error
     is rounding-bounded with all-ones quant tables (forward DCT in
     the test encoder, inverse in the decoder — independent
@@ -1578,6 +1581,27 @@ def test_decode_jpeg_progressive():
     i = huge.find(b"\xff\xc0")
     huge[i + 5:i + 9] = (30000).to_bytes(2, "big") * 2  # 9e8 pixels
     assert decode_jpeg_pixels(bytes(huge)) is None
+
+
+def test_jpeg_scan_padding_is_bounded():
+    """A scan reads at most one fill (4 bytes) of 1-bit padding at its
+    closing marker.  With DHT tables whose all-ones codes are valid
+    (DC category 0, AC EOB), padding alone would otherwise decode
+    every block a 2048x2048 SOF claims from a 144-byte stream."""
+    from arachne_spark.operators.multimodal import decode_jpeg_pixels
+
+    enc = _jpeg_enc(bytes(64), 8, 8, 1)
+    ones = bytes([2] + [0] * 15) + bytes(2)  # codes 0 and 1 -> symbol 0
+    dht = b"".join(b"\xff\xc4\x00\x15" + bytes([tc]) + ones
+                   for tc in (0x00, 0x10))
+    small = (enc[:enc.index(b"\xff\xc4")] + dht
+             + enc[enc.index(b"\xff\xda"):])
+    sof = small.index(b"\xff\xc0")
+    bomb = small[:sof + 5] + (2048).to_bytes(2, "big") * 2 + small[sof + 9:]
+    assert len(bomb) == 144
+    assert decode_jpeg_pixels(bomb) is None
+    # the same tables at the stream's own 8x8 need no padding
+    assert decode_jpeg_pixels(small)["pixels"] == bytes([128]) * 64
 
 
 def _jpeg_resample(jpeg: bytes, hv: int) -> bytes:
@@ -2650,6 +2674,55 @@ def test_compose_msv1_skip_persistence():
     # a malformed MJPEG frame fails the whole sequence
     mj = _avi([b"\xff\xd8x"], w=4, h=4, strf=_bih(4, 4, 24, b"MJPG"))
     assert compose_video_pixels(mj) is None
+
+
+def _cram_avi_v4():
+    """An 8x8 8-bit CRAM AVI whose strf is a 108-byte BITMAPV4HEADER
+    (colour-space fields zero) followed by a 16-colour palette; frame
+    0 paints 1-, 2- and 8-colour blocks, frame 1 skips all four."""
+    palette = bytes((i * 5) % 256 for i in range(64))
+    bih = _bih(8, 8, 8, b"CRAM", palette)
+    strf = (108).to_bytes(4, "little") + bih[4:40] + bytes(68) + palette
+    stream = bytes([3, 0x80, 0xC3, 0x5A, 1, 2, 0x35, 0x9F,
+                    4, 5, 6, 7, 8, 9, 10, 11, 1, 0x84])
+    return _avi([stream, bytes([4, 0x84])], w=8, h=8, handler=b"CRAM",
+                strf=strf)
+
+
+def test_compose_reads_the_palette_after_bisize():
+    """Composition and the standalone re-wrap read the AVI strf
+    through one BITMAPINFOHEADER parse: the palette starts after
+    biSize, not at a fixed 40 bytes."""
+    from arachne_spark.operators.multimodal import (
+        _avi_video_frames,
+        compose_video_pixels,
+        decode_bmp_pixels,
+    )
+
+    avi = _cram_avi_v4()
+    composed = compose_video_pixels(avi)
+    standalone = decode_bmp_pixels(_avi_video_frames(avi)[0])
+    assert composed is not None and standalone is not None
+    assert composed["frames"][0] == standalone["pixels"]
+    assert composed["frames"][1] == standalone["pixels"]  # all skipped
+    # the bottom-left 1-colour block is palette entry 3 (BGRA 60..75)
+    assert standalone["pixels"][3 * 8 * 4:3 * 8 * 4 + 12] == (
+        bytes((70, 65, 60)) * 4)
+
+
+def test_compose_rejects_a_palette_past_bpp():
+    """A biClrUsed of 320 at 8 bpp fails composition as it fails the
+    standalone re-wrapped frame."""
+    from arachne_spark.operators.multimodal import (
+        _avi_video_frames,
+        compose_video_pixels,
+        decode_bmp_pixels,
+    )
+
+    avi = _avi([bytes([3, 0x80]) * 4], w=8, h=8, handler=b"CRAM",
+               strf=_bih(8, 8, 8, b"CRAM", bytes(range(256)) * 5))
+    assert decode_bmp_pixels(_avi_video_frames(avi)[0]) is None
+    assert compose_video_pixels(avi) is None
 
 
 def test_compose_mjpeg_avi_and_mp4():

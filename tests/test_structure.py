@@ -3,8 +3,8 @@
 once, batch and stream call that one definition, and the bench times
 the shipped stage graph (``run_pipeline``), not a copy of it; each
 media format's structure is walked once, behind one never-raise
-boundary, and every JPEG scan runs one block loop into one
-coefficient store; connected components and transitive closure share one
+boundary, every JPEG scan runs one block loop into one
+coefficient store, and BMP, ICO and AVI share one DIB header parse; connected components and transitive closure share one
 round loop, and components finish small frontiers through one driver
 union-find; fuzzy linking, page dedup and streaming dedup share one
 MinHash-LSH; batch and stream share one alias probe, and the
@@ -146,6 +146,7 @@ def test_media_structure_parsed_once():
                  "_wav_layout", "_aiff_layout", "_flac_layout",
                  "_avi_scan", "_mp4_layout", "_mkv_layout",
                  "_jpeg_segments", "_jpeg_blocks", "_jpeg_finish",
+                 "_dib_header", "_dib_palette",
                  "_never_raise", "_map_payloads", "payload_meta"):
         assert defs.count(name) == 1, name
     for gone in ("fake_decode", "_mp4_boxes", "_riff_chunks",
@@ -166,6 +167,19 @@ def test_media_structure_parsed_once():
     assert callers("_jpeg_blocks") == {"_jpeg_decode_scan"}
     assert callers("_jpeg_decode_scan") == {"decode_jpeg_pixels"}
     assert callers("_jpeg_finish") == {"decode_jpeg_pixels"}
+    # BMP files, ICO DIB entries and the AVI video strf share one
+    # BITMAPINFOHEADER parse and one palette read, and the FLAC, MP3
+    # and OGG walks read through the bounded reader: none of these
+    # decodes an integer from the payload by hand
+    assert callers("_dib_header") == {"_bmp_layout", "_ico_entry_dims",
+                                      "_avi_video_frames", "_avi_compose"}
+    assert callers("_dib_palette") == {"decode_bmp_pixels", "_avi_compose"}
+    audio_walks = {"_flac_layout", "_decode_mp3", "_decode_ogg"}
+    assert audio_walks <= callers("_Reader")
+    dib_callers = {"_bmp_layout", "decode_bmp_pixels", "_ico_entry_dims",
+                   "decode_ico_pixels", "_avi_video_frames", "_avi_compose"}
+    by_hand = {h.split(".")[0] for h in callers("from_bytes")}
+    assert not by_hand & (audio_walks | dib_callers)
     # every operator goes through the one mapInPandas wrapper
     assert {
         h for h in _holders(_calls("mapInPandas"))
