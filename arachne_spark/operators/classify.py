@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from arachne_spark.operators.dedup import token_ngrams
+
 _ACC = "decimal(38,18)"
 
 
@@ -46,29 +48,12 @@ def hashed_ngram_features(
     fastText's input representation.  ``feat`` = xxhash64(gram) mod
     ``n_features``; ``x`` = gram count / total grams in the doc (so a
     doc's features sum to 1 and the margin is a mean, not a length-
-    dependent sum).  Docs shorter than min(ns) tokens produce no rows
-    (callers treat missing docs as margin 0 = prob 0.5)."""
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.split(F.col(text_col), " ", -1).alias("toks"),
+    dependent sum).  The grams are ``dedup.token_ngrams``; docs
+    shorter than min(ns) tokens produce no rows (callers treat missing
+    docs as margin 0 = prob 0.5)."""
+    grams = token_ngrams(
+        docs.select(F.col(id_col).alias("doc_id"), text_col), text_col, ns
     )
-    branches = [
-        base.select(
-            "doc_id",
-            F.explode(
-                F.expr(
-                    f"if(size(toks) >= {n},"
-                    f" transform(sequence(1, size(toks) - {n} + 1),"
-                    f" i -> concat_ws(' ', slice(toks, i, {n}))),"
-                    " array())"
-                )
-            ).alias("gram"),
-        )
-        for n in ns
-    ]
-    grams = branches[0]
-    for b in branches[1:]:
-        grams = grams.unionByName(b)
     counts = grams.select(
         "doc_id",
         F.pmod(F.xxhash64("gram"), F.lit(n_features)).alias("feat"),

@@ -38,6 +38,9 @@ signature bit-for-bit.
 
 from __future__ import annotations
 
+from collections.abc import Iterable
+from functools import reduce
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -50,40 +53,101 @@ MAX_SHINGLE_DF = 50
 MAX_BAND_BUCKET = 20
 
 
+def token_ngrams(
+    docs: DataFrame, text_col: str, ns: Iterable[int]
+) -> DataFrame:
+    """(docs' other columns…, n, pos, gram): every run of ``n``
+    consecutive tokens of the single-space split of ``text_col``, for
+    each n in ``ns`` — ``pos`` is the 0-based start token and ``gram``
+    the tokens joined by one space.  The one token n-gram builder of
+    the shingle, span-dedup, repetition and classifier operators.
+
+    Documents with fewer than ``n`` tokens yield no ``n``-grams.  The
+    ``size >= n`` row filter is load-bearing: for a shorter document
+    ``sequence(0, size - n)`` runs DESCENDING (e.g. ``sequence(0, -1)
+    = [0, -1]``), and a ``slice`` starting at index 0 raises.  Each
+    gram is ``concat_ws`` over a ``slice`` at
+    an exploded start position, both code-generated, not a
+    ``transform`` lambda, which Spark interprets; the expression stays
+    one ``slice`` whatever ``n`` (``n`` element accesses grew the
+    generated code with ``n`` and measured slower at n = 3, 8 and 50).
+    Several ``n`` are union branches of plain strings, not one explode
+    of per-element structs."""
+    keep = [c for c in docs.columns if c != text_col]
+    toks, pos = F.col("__toks"), F.col("pos")
+    base = docs.select(
+        *keep, F.split(F.col(text_col), " ", -1).alias("__toks")
+    )
+    branches = [
+        base.where(F.size(toks) >= n)
+        .select(
+            *keep,
+            toks,
+            F.explode(F.sequence(F.lit(0), F.size(toks) - n)).alias("pos"),
+        )
+        .select(
+            *keep,
+            F.lit(n).alias("n"),
+            pos,
+            F.concat_ws(" ", F.slice(toks, pos + 1, F.lit(n))).alias("gram"),
+        )
+        for n in ns
+    ]
+    return reduce(DataFrame.unionByName, branches)
+
+
+def rebuild_text(
+    pieces: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    text_col: str,
+    sep: str,
+) -> DataFrame:
+    """``docs`` with ``text_col`` rebuilt from ``pieces`` — rows of
+    docs' other columns plus (``__idx``, ``__piece``): each doc's
+    pieces joined by ``sep`` in ``__idx`` order.  The order comes
+    from sorting the collected (idx, piece) structs, so no window or
+    per-group ordering assumption is made.
+
+    Row-preserving: a doc left with no piece drops out of the groupBy
+    and is restored with empty text (filtering empties is the
+    caller's policy call).  The restoring anti-join keys on ``id_col``
+    ONLY: keying on every passthrough column would silently duplicate
+    any doc with a NULL column (NULL join keys never match, so the
+    anti-join keeps the row)."""
+    other = [c for c in docs.columns if c != text_col]
+    rebuilt = pieces.groupBy(*other).agg(
+        F.array_join(
+            F.sort_array(F.collect_list(F.struct("__idx", "__piece")))[
+                "__piece"
+            ],
+            sep,
+        ).alias(text_col)
+    )
+    empties = (
+        docs.select(*other)
+        .join(rebuilt.select(id_col), id_col, "left_anti")
+        .withColumn(text_col, F.lit(""))
+    )
+    return rebuilt.unionByName(empties).select(*docs.columns)
+
+
 def doc_shingles(
     docs: DataFrame,
     id_col: str = "doc_id",
     text_col: str = "text",
     k: int = 3,
 ) -> DataFrame:
-    """(doc_id, s): distinct token k-gram shingles per document.
-
-    Documents with fewer than ``k`` tokens yield zero shingles (matching
-    the DuckDB/python oracles).  The ``size >= k`` row filter is
-    load-bearing: for a shorter document ``sequence(0, size - k)`` runs
-    DESCENDING (e.g. ``sequence(0, -1) = [0, -1]``), which would index
-    ``toks`` out of bounds and throw under ANSI mode.  The k-grams are
-    element accesses on exploded start positions, not a ``transform``
-    lambda, which Spark interprets instead of code-generating.
-    """
-    toks = F.col("toks")
+    """(doc_id, s): distinct token k-gram shingles per document
+    (``token_ngrams``); documents with fewer than ``k`` tokens yield
+    zero shingles (matching the DuckDB/python oracles)."""
     return (
-        docs.select(
-            F.col(id_col).alias("doc_id"),
-            F.split(F.col(text_col), " ", -1).alias("toks"),
+        token_ngrams(
+            docs.select(F.col(id_col).alias("doc_id"), text_col),
+            text_col,
+            (k,),
         )
-        .where(F.size(toks) >= k)
-        .select(
-            "doc_id",
-            "toks",
-            F.explode(F.sequence(F.lit(0), F.size(toks) - k)).alias("_i"),
-        )
-        .select(
-            "doc_id",
-            F.concat_ws(
-                " ", *[toks[F.col("_i") + j] for j in range(k)]
-            ).alias("s"),
-        )
+        .select("doc_id", F.col("gram").alias("s"))
         .dropDuplicates()
     )
 
@@ -212,8 +276,8 @@ def exact_substring_dedup(
     The reference tool builds a corpus-wide suffix array on one giant
     machine; this is the shuffle-native restatement:
 
-    * rolling ``k``-token shingles per doc as one per-row transform
-      (pos is the 0-based start token) — a duplicated span of L >= k
+    * rolling ``k``-token shingles per doc from ``token_ngrams`` (pos
+      is the 0-based start token) — a duplicated span of L >= k
       tokens is exactly a run of duplicated shingles, so span-level
       dedup reduces to shingle-hash equality;
     * shingles keyed by md5 of the gram text (128 bits: at 10^12
@@ -226,10 +290,9 @@ def exact_substring_dedup(
       coverage [pos, pos+k-1] chains while successive starts are <= k
       apart), so the covered-index explode is proportional to the
       covered TEXT length, not (span length x k);
-    * only touched documents are re-tokenized and reassembled — clean
-      documents (the vast majority) pass through untouched, and the
-      reassembly sorts (idx, token) structs so no per-group ordering
-      assumption is made (same discipline as strip_boilerplate).
+    * only touched documents are re-tokenized and reassembled
+      (``rebuild_text``, which strip_boilerplate runs too) — clean
+      documents (the vast majority) pass through untouched.
 
     Tokenization is single-space split/join, which is lossless
     (consecutive spaces round-trip as empty tokens), so untouched text
@@ -242,21 +305,9 @@ def exact_substring_dedup(
     the CLAUDE.md invariant).  Streams dedup near-duplicates
     incrementally; span-level cutting runs on the committed corpus.
     """
-    other = [c for c in docs.columns if c != text_col]
-    toks = docs.select(
-        *other, F.split(F.col(text_col), " ", -1).alias("__toks")
-    )
-    occ = toks.select(
-        F.col(id_col).alias("__id"),
-        F.posexplode(
-            F.expr(
-                f"transform("
-                f" if(size(__toks) >= {k},"
-                f"    sequence(1, size(__toks) - {k - 1}), array()),"
-                f" i -> md5(concat_ws(' ', slice(__toks, i, {k}))))"
-            )
-        ).alias("pos", "h"),
-    )
+    occ = token_ngrams(
+        docs.select(F.col(id_col).alias("__id"), text_col), text_col, (k,)
+    ).select("__id", "pos", F.md5("gram").alias("h"))
     dup = (
         occ.groupBy("h")
         .agg(
@@ -302,34 +353,14 @@ def exact_substring_dedup(
         )
     )
     touched_ids = covered.select(id_col).distinct()
-    untouched = docs.join(touched_ids, id_col, "left_anti")
-    tokens = (
-        toks.join(touched_ids, id_col, "left_semi")
-        .select(*other, F.posexplode("__toks").alias("__idx", "__tok"))
+    touched = docs.join(touched_ids, id_col, "left_semi")
+    pieces = touched.select(
+        *[c for c in docs.columns if c != text_col],
+        F.posexplode(F.split(F.col(text_col), " ", -1)).alias(
+            "__idx", "__piece"
+        ),
     )
-    kept = tokens.join(covered, [id_col, "__idx"], "left_anti")
-    rebuilt = kept.groupBy(*other).agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(F.collect_list(F.struct("__idx", "__tok"))),
-                lambda s: s["__tok"],
-            ),
-            " ",
-        ).alias(text_col)
-    )
-    # fully-covered docs lose every token and drop out of the groupBy;
-    # restore them with empty text so the operator is row-preserving.
-    # The anti-joins key on id_col ONLY: keying on every passthrough
-    # column would silently duplicate any doc with a NULL column (NULL
-    # join keys never match, so anti-join keeps the row)
-    empties = (
-        docs.select(*other)
-        .join(untouched.select(id_col), id_col, "left_anti")
-        .join(rebuilt.select(id_col), id_col, "left_anti")
-        .withColumn(text_col, F.lit(""))
-    )
-    return (
-        rebuilt.unionByName(empties)
-        .unionByName(untouched.select(*rebuilt.columns))
-        .select(*docs.columns)
+    kept = pieces.join(covered, [id_col, "__idx"], "left_anti")
+    return rebuild_text(kept, touched, id_col, text_col, " ").unionByName(
+        docs.join(touched_ids, id_col, "left_anti")
     )

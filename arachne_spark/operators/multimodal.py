@@ -13,9 +13,9 @@ size the payload cannot back, or an allocation past ``_MAX_PIXELS``,
 raises ``Malformed``, and the ``_never_raise`` boundary on each
 public decoder turns it into None.  JPEG's one marker walk
 (``_jpeg_segments``) serves both the header decode and the T.81
-decoder, and one BITMAPINFOHEADER parse (``_dib_header``) and one
-palette read (``_dib_palette``) serve BMP files, ICO DIB entries and
-the AVI video ``strf``.  Only the coded data past the structure —
+decoder, and one BITMAPINFOHEADER parse (``_dib_header``), one
+header gate (``_dib_ok``) and one palette read (``_dib_palette``)
+serve BMP files, ICO DIB entries and the AVI video ``strf``.  Only the coded data past the structure —
 JPEG scans, FLAC frames, RLE and MS Video 1 blocks, sample arrays —
 is read outside the reader, by each codec's own loop.  The Spark
 side — schema, Arrow batch shape, ``mapInPandas`` iterator
@@ -1576,6 +1576,18 @@ def _dib_header(data: bytes, at: int = 0) -> tuple:
     return _Reader(data, at, order="little").unpack("IiiHHI12xI4x")
 
 
+def _dib_ok(hdr: tuple) -> bool:
+    """The one structural gate over ``_dib_header`` fields that BMP
+    files, ICO DIB entries and the AVI video ``strf`` all pass: an
+    info header of at least 40 bytes, a positive width, a nonzero
+    height (negative = top-down), one plane (REQUIRED by the spec —
+    two ASCII chars can never be 0x0001) and a legal bit depth.  Each
+    caller adds its own format's bounds."""
+    size, w, h, planes, bpp, _, _ = hdr
+    return (size >= 40 and w > 0 and h != 0 and planes == 1
+            and bpp in (1, 4, 8, 16, 24, 32))
+
+
 def _dib_palette(data: bytes, at: int, hdr: tuple) -> list[bytes]:
     """The one DIB palette read: ``biClrUsed or 1 << bpp`` BGRA quads
     starting ``biSize`` bytes past the header at ``at``, as RGB
@@ -1888,12 +1900,9 @@ def _ico_entry_dims(data: bytes, off: int, size: int):
         if m is None:
             return None
         return m["width"], m["height"], None
-    hdr_size, w, dh, planes, bpp, compression, clr_used = _dib_header(sl)
-    if hdr_size < 40 or hdr_size > len(sl):
-        return None
-    if w <= 0 or dh <= 0 or dh % 2 or planes != 1:
-        return None
-    if bpp not in (1, 4, 8, 16, 24, 32):
+    hdr = _dib_header(sl)
+    hdr_size, w, dh, _, bpp, compression, clr_used = hdr
+    if not _dib_ok(hdr) or hdr_size > len(sl) or dh <= 0 or dh % 2:
         return None
     if compression != 0:  # BI_RGB only
         return None
@@ -2136,21 +2145,16 @@ def _bmp_layout(data: bytes) -> tuple | None:
     """The one BMP (BITMAPINFOHEADER) header walk, structural
     validation included — without it any >=54-byte text that happens
     to start with "BM" (e.g. "BMW dealers ...") would "decode", since
-    ASCII bytes at the dimension offsets form positive ints.  planes
-    is REQUIRED to be 1 by the spec (two ASCII chars can never be
-    0x0001), bpp must be a legal depth, and the pixel array implied by
-    (w, h, bpp) must actually be present past the declared data
-    offset.  Returns (data offset, ``_dib_header`` fields) or None."""
+    ASCII bytes at the dimension offsets form positive ints.  The
+    header must pass ``_dib_ok`` and the pixel array implied by (w, h,
+    bpp) must actually be present past the declared data offset.
+    Returns (data offset, ``_dib_header`` fields) or None."""
     if len(data) < 54 or data[:2] != b"BM":
         return None
     offset = _Reader(data, 10, order="little").u32()
     hdr = _dib_header(data, 14)
-    hdr_size, w, h, planes, bpp, compression, _ = hdr
-    if hdr_size < 40 or w <= 0 or h == 0:  # negative h = top-down
-        return None
-    if planes != 1 or bpp not in (1, 4, 8, 16, 24, 32):
-        return None
-    if not 54 <= offset <= len(data):
+    _, w, h, _, bpp, compression, _ = hdr
+    if not _dib_ok(hdr) or not 54 <= offset <= len(data):
         return None
     if compression in (1, 2) or compression in _MSV1_FOURCCS:
         # RLE / MS Video 1: data is variable-length, just
@@ -3701,7 +3705,7 @@ def _avi_compose(data: bytes) -> dict | None:
     hdr = _dib_header(strf)
     _, w, h, _, bpp, comp, _ = hdr
     if comp in _MSV1_FOURCCS and bpp in (8, 16) and h > 0:
-        if w <= 0:
+        if not _dib_ok(hdr):  # the standalone frame's gate
             return None
         _need(w * h, _MAX_PIXELS)
         if len(chunks) * w * h > _MAX_COMPOSED_PIXELS:

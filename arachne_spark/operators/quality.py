@@ -13,11 +13,11 @@ Scale shape: a union of per-n explodes feeding ONE hash aggregation
 keyed by (doc_id, n, gram) — map-side partial aggregation bounds the
 shuffle by the number of DISTINCT grams per doc, never by corpus
 size, and no stage ever compares two documents (this is a per-doc
-profile, not a dedup).  The gram lists are built with
-``transform``+``explode`` of plain strings (one pass per n, no
-shuffle) rather than posexplode+self-join; the interpreted-lambda
-cost is per token, not per pair, and stays far below a shuffle at
-any corpus size.
+profile, not a dedup).  The grams come from ``dedup.token_ngrams``,
+one explode of start positions per n whose grams are element
+accesses in generated code (no shuffle, no interpreted lambda), and
+the boilerplate strip reassembles its surviving lines with
+``dedup.rebuild_text``, the rebuild exact_substring_dedup runs.
 
 Definitions (documented because the literature leaves the char
 accounting ambiguous; the pure-Python twin in tests/test_quality.py
@@ -37,26 +37,15 @@ mirrors these exactly):
   distributed approximation of Gopher's coverage definition)
 
 Short docs degrade gracefully: a doc with fewer than n tokens emits
-no n-grams and reports 0.0 for that n (ANSI-safe ``if(size >= n)``
-guard, same pattern as operators/dedup.py).
+no n-grams and reports 0.0 for that n (``token_ngrams``' ANSI-safe
+``size >= n`` guard).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-
-def _gram_expr(n: int) -> str:
-    """All n-grams of the space-tokenized doc, ANSI-safe on short
-    docs.  ``slice`` + ``concat_ws`` over a ``sequence`` keeps the
-    whole construction per-row (no shuffle, no struct
-    materialization)."""
-    return (
-        f"if(size(toks) >= {n},"
-        f" transform(sequence(1, size(toks) - {n} + 1),"
-        f" i -> concat_ws(' ', slice(toks, i, {n}))),"
-        " array())"
-    )
+from arachne_spark.operators.dedup import rebuild_text, token_ngrams
 
 
 def line_repetition(
@@ -99,31 +88,12 @@ def repetition_stats(
     ``dup_line_char_frac``, ``top{n}_gram_char_frac`` for each n in
     ``top_ns`` and ``dup{n}_gram_char_frac`` for each n in
     ``dup_ns``.  All n values share ONE (doc_id, n, gram)
-    aggregation; each n adds a union branch over the pruned token
-    array, not an aggregation stage."""
-    ns = sorted(set(top_ns) | set(dup_ns))
-    base = docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.length(text_col).cast("double").alias("n_chars"),
-        F.split(F.col(text_col), " ", -1).alias("toks"),
+    aggregation; each n adds a ``token_ngrams`` union branch, not an
+    aggregation stage."""
+    base = docs.select(F.col(id_col).alias("doc_id"), text_col)
+    grams = token_ngrams(
+        base, text_col, sorted(set(top_ns) | set(dup_ns))
     )
-    # one union branch per n, each exploding PLAIN gram strings: a
-    # single concat-of-struct-transforms explode was measured 2.3x
-    # slower (per-element struct materialization is interpreted,
-    # never codegen'd — the CLAUDE.md higher-order-function trap);
-    # the extra branch scans are projection-pruned token arrays and
-    # come out far cheaper
-    branches = [
-        base.select(
-            "doc_id",
-            F.lit(n).alias("n"),
-            F.explode(F.expr(_gram_expr(n))).alias("gram"),
-        )
-        for n in ns
-    ]
-    grams = branches[0]
-    for b in branches[1:]:
-        grams = grams.unionByName(b)
     counts = grams.groupBy("doc_id", "n", "gram").agg(
         F.count(F.lit(1)).alias("c")
     )
@@ -160,7 +130,9 @@ def repetition_stats(
     )
     lrep = line_repetition(docs, id_col, text_col)
     out = (
-        base.select("doc_id", "n_chars")
+        base.select(
+            "doc_id", F.length(text_col).cast("double").alias("n_chars")
+        )
         .join(lrep, "doc_id", "left")
         .join(wide, "doc_id", "left")
     )
@@ -245,45 +217,20 @@ def strip_boilerplate(
     Scale shape: one posexplode of the corpus (line order carried as
     the position), a left-anti join against the (small) boilerplate
     line set — AQE broadcasts it; corpus-scale data shuffles only for
-    the per-doc reassembly groupBy, and the reassembly aggregates
-    (pos, line) structs with ``sort_array`` so no window or
-    per-group ordering assumption is needed."""
+    the per-doc reassembly groupBy (``rebuild_text``)."""
     boiler = boilerplate_lines(
         docs, max_occurrences, id_col, text_col, min_len
     ).select("line")
-    other_cols = [c for c in docs.columns if c != text_col]
     exploded = docs.select(
-        *other_cols,
+        *[c for c in docs.columns if c != text_col],
         F.posexplode(F.split(F.col(text_col), "\n", -1)).alias(
-            "__pos", "__line"
+            "__idx", "__piece"
         ),
     )
     kept = exploded.join(
-        boiler, exploded["__line"] == boiler["line"], "left_anti"
+        boiler, exploded["__piece"] == boiler["line"], "left_anti"
     )
-    rebuilt = kept.groupBy(*other_cols).agg(
-        F.array_join(
-            F.transform(
-                F.sort_array(
-                    F.collect_list(F.struct("__pos", "__line"))
-                ),
-                lambda s: s["__line"],
-            ),
-            "\n",
-        ).alias(text_col)
-    )
-    # docs whose every line was boilerplate drop out of the groupBy
-    # input entirely; restore them with empty text so the operator is
-    # row-preserving (filtering empties is the caller's policy call).
-    # Keyed on id_col ONLY: keying on every passthrough column would
-    # silently duplicate any doc with a NULL column (NULL join keys
-    # never match, so the anti-join keeps the row)
-    empties = (
-        docs.select(*other_cols)
-        .join(rebuilt.select(id_col), id_col, "left_anti")
-        .withColumn(text_col, F.lit(""))
-    )
-    return rebuilt.unionByName(empties).select(*docs.columns)
+    return rebuild_text(kept, docs, id_col, text_col, "\n")
 
 
 # published Gopher repetition cut points (Rae et al. 2021, A1.1)
@@ -394,10 +341,10 @@ def gopher_quality_stats(
     symbol_word_ratio, bullet_line_frac, ellipsis_line_frac,
     alpha_word_frac, n_stop_hits.  Everything is a per-row column
     expression over the tokenized doc — no shuffle, no join, no UDF;
-    the higher-order lambdas operate on plain strings (the
-    structs-in-HOF trap documented on repetition_stats does not
-    apply).  Words = whitespace-separated non-empty tokens;
-    mean_word_len divides the doc's non-whitespace char count by the
+    the higher-order lambdas are per-row string predicates (no
+    per-element structs, the trap ``dedup.token_ngrams`` avoids).
+    Words = whitespace-separated non-empty tokens; mean_word_len
+    divides the doc's non-whitespace char count by the
     word count (identical accounting, no per-word length array)."""
     words = "filter(split(text_q, '\\\\s+'), w -> w != '')"
     lines = "split(text_q, '\\n', -1)"

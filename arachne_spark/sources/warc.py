@@ -89,10 +89,12 @@ def _parse_records(
     stats: dict | None = None,
     record_types: tuple[str, ...] = ("response",),
 ) -> Iterator[dict]:
-    """Yield {url, warc_ts, payload} per well-formed record of the
-    requested types — ``response`` (crawl WARC: the HTTP status line +
-    headers are stripped, payload = the HTML bytes) or ``conversion``
-    (WET text archives: payload = the body verbatim).
+    """Yield one pages row (a dict keyed by ``PAGES_SCHEMA``'s
+    fields) per well-formed record of the requested types —
+    ``response`` (crawl WARC: the HTTP status line + headers are
+    stripped, ``html`` = the HTML bytes) or ``conversion`` (WET text
+    archives: ``text`` = the body verbatim, decoded UTF-8 with invalid
+    bytes replaced); the other payload column and ``lang`` are None.
 
     Offset-based scan driven by each record's Content-Length — NOT a
     split on the version marker, because a page body may itself
@@ -151,14 +153,43 @@ def _parse_records(
         except ValueError:
             stats["dropped"] += 1
             continue
+        stats["responses"] += 1
+        row = {"url": url, "warc_ts": ts, "html": None, "text": None,
+               "lang": None}
         if rectype == "response":
             # HTTP response payload: strip the status line + headers
             http_end = body.find(b"\r\n\r\n")
-            payload = body[http_end + 4:] if http_end >= 0 else body
+            row["html"] = bytes(
+                body[http_end + 4:] if http_end >= 0 else body)
         else:  # conversion: the body IS the payload
-            payload = body
-        stats["responses"] += 1
-        yield {"url": url, "warc_ts": ts, "html": bytes(payload)}
+            row["text"] = body.decode("utf-8", "replace")
+        yield row
+
+
+def _read_pages(
+    spark: SparkSession, path: str, record_type: str
+) -> DataFrame:
+    """The one parse path of ``read_warc`` and ``read_wet``: a
+    ``mapInPandas`` fan-out of every file's ``record_type`` records
+    into pages rows."""
+    files = spark.read.format("binaryFile").load(path).select(
+        "path", "content"
+    )
+
+    def parse_batches(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [
+                rec
+                for content in pdf["content"]
+                for rec in _parse_records(
+                    _decompress(bytes(content)), record_types=(record_type,)
+                )
+            ]
+            yield pd.DataFrame(rows, columns=PAGES_SCHEMA.names)
+
+    return files.mapInPandas(parse_batches, PAGES_SCHEMA)
 
 
 def read_warc(spark: SparkSession, path: str) -> DataFrame:
@@ -169,28 +200,7 @@ def read_warc(spark: SparkSession, path: str) -> DataFrame:
     (the language-ID operator fills it) — same contract as a pages
     table whose enrichment columns have not been computed yet.
     """
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "url": [], "warc_ts": [], "html": [], "text": [],
-                "lang": [],
-            }
-            for content in pdf["content"]:
-                for rec in _parse_records(_decompress(bytes(content))):
-                    rows["url"].append(rec["url"])
-                    rows["warc_ts"].append(rec["warc_ts"])
-                    rows["html"].append(rec["html"])
-                    rows["text"].append(None)
-                    rows["lang"].append(None)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(parse_batches, PAGES_SCHEMA)
+    return _read_pages(spark, path, "response")
 
 
 def read_wet(spark: SparkSession, path: str) -> DataFrame:
@@ -202,33 +212,7 @@ def read_wet(spark: SparkSession, path: str) -> DataFrame:
     the original markup is not in a WET archive.  Same tolerant
     offset-based parser, same three compression layouts as
     ``read_warc``."""
-    files = spark.read.format("binaryFile").load(path).select(
-        "path", "content"
-    )
-
-    def parse_batches(
-        batches: Iterator[pd.DataFrame],
-    ) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {
-                "url": [], "warc_ts": [], "html": [], "text": [],
-                "lang": [],
-            }
-            for content in pdf["content"]:
-                for rec in _parse_records(
-                    _decompress(bytes(content)),
-                    record_types=("conversion",),
-                ):
-                    rows["url"].append(rec["url"])
-                    rows["warc_ts"].append(rec["warc_ts"])
-                    rows["html"].append(None)
-                    rows["text"].append(
-                        rec["html"].decode("utf-8", "replace")
-                    )
-                    rows["lang"].append(None)
-            yield pd.DataFrame(rows)
-
-    return files.mapInPandas(parse_batches, PAGES_SCHEMA)
+    return _read_pages(spark, path, "conversion")
 
 
 def read_warc_metrics(spark: SparkSession, path: str) -> DataFrame:

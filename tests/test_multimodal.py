@@ -2725,6 +2725,28 @@ def test_compose_rejects_a_palette_past_bpp():
     assert compose_video_pixels(avi) is None
 
 
+def test_compose_rejects_a_header_the_standalone_frame_rejects():
+    """An MS Video 1 strf with three planes, or with a 12-byte biSize,
+    fails composition as it fails the standalone re-wrapped frame."""
+    from arachne_spark.operators.multimodal import (
+        _avi_video_frames,
+        compose_video_pixels,
+        decode_bmp_pixels,
+    )
+
+    bih = _bih(4, 8, 16, b"MSVC")
+    frame = bytes([0x1F, 0x80]) * 2  # two 1-colour blocks
+    ok = _avi([frame], w=4, h=8, handler=b"MSVC", strf=bih)
+    assert compose_video_pixels(ok)["frames"] == [
+        decode_bmp_pixels(_avi_video_frames(ok)[0])["pixels"]]
+    three_planes = bih[:12] + (3).to_bytes(2, "little") + bih[14:]
+    core_size = (12).to_bytes(4, "little") + bih[4:]
+    for strf in (three_planes, core_size):
+        avi = _avi([frame], w=4, h=8, handler=b"MSVC", strf=strf)
+        assert decode_bmp_pixels(_avi_video_frames(avi)[0]) is None
+        assert compose_video_pixels(avi) is None
+
+
 def test_compose_mjpeg_avi_and_mp4():
     """Motion-JPEG composition: every sample is an independent JPEG
     full repaint, so an MJPG AVI and an MP4 whose sample table

@@ -4,7 +4,8 @@ once, batch and stream call that one definition, and the bench times
 the shipped stage graph (``run_pipeline``), not a copy of it; each
 media format's structure is walked once, behind one never-raise
 boundary, every JPEG scan runs one block loop into one
-coefficient store, and BMP, ICO and AVI share one DIB header parse; connected components and transitive closure share one
+coefficient store, and BMP, ICO and AVI share one DIB header parse
+and gate; connected components and transitive closure share one
 round loop, and components finish small frontiers through one driver
 union-find; fuzzy linking, page dedup and streaming dedup share one
 MinHash-LSH; batch and stream share one alias probe, and the
@@ -13,7 +14,9 @@ option selects a second warehouse backend, ANN dot engine or
 mention-probe join; the warehouse commits one (unpartitioned) layout,
 and the thresholds and caps the KG stage graph's callers all set
 alike are module constants, not parameters; the stage graph runs on
-one executor, and no engine source writes the session's conf."""
+one executor, and no engine source writes the session's conf; the
+text-curation operators share one token n-gram builder and one
+ordered text rebuild, with no interpreted lambda."""
 
 from __future__ import annotations
 
@@ -146,7 +149,7 @@ def test_media_structure_parsed_once():
                  "_wav_layout", "_aiff_layout", "_flac_layout",
                  "_avi_scan", "_mp4_layout", "_mkv_layout",
                  "_jpeg_segments", "_jpeg_blocks", "_jpeg_finish",
-                 "_dib_header", "_dib_palette",
+                 "_dib_header", "_dib_palette", "_dib_ok",
                  "_never_raise", "_map_payloads", "payload_meta"):
         assert defs.count(name) == 1, name
     for gone in ("fake_decode", "_mp4_boxes", "_riff_chunks",
@@ -174,6 +177,10 @@ def test_media_structure_parsed_once():
     assert callers("_dib_header") == {"_bmp_layout", "_ico_entry_dims",
                                       "_avi_video_frames", "_avi_compose"}
     assert callers("_dib_palette") == {"decode_bmp_pixels", "_avi_compose"}
+    # ...and one structural header gate, so an AVI frame composes only
+    # if its standalone re-wrap decodes
+    assert callers("_dib_ok") == {"_bmp_layout", "_ico_entry_dims",
+                                  "_avi_compose"}
     audio_walks = {"_flac_layout", "_decode_mp3", "_decode_ogg"}
     assert audio_walks <= callers("_Reader")
     dib_callers = {"_bmp_layout", "decode_bmp_pixels", "_ico_entry_dims",
@@ -471,3 +478,28 @@ def test_one_stage_executor_and_no_session_conf_writes():
         )
 
     assert not _holders(conf_set)
+
+
+def test_one_token_ngram_builder_and_one_text_rebuild():
+    """The text-curation operators build token n-grams through one
+    builder and reassemble rewritten text through one ordered
+    rebuild, and none of them runs a ``transform`` lambda (Spark
+    interprets higher-order functions instead of code-generating)."""
+    from arachne_spark.operators import classify, dedup, quality
+
+    dd = "arachne_spark/operators/dedup.py"
+    qa = "arachne_spark/operators/quality.py"
+    assert not hasattr(quality, "_gram_expr")
+    assert _holders(_calls("token_ngrams")) == {
+        f"{dd}:doc_shingles", f"{dd}:exact_substring_dedup",
+        f"{qa}:repetition_stats",
+        "arachne_spark/operators/classify.py:hashed_ngram_features"}
+    assert _holders(_calls("rebuild_text")) == {
+        f"{dd}:exact_substring_dedup", f"{qa}:strip_boilerplate"}
+    for fn in (dedup.token_ngrams, dedup.rebuild_text, dedup.doc_shingles,
+               dedup.exact_substring_dedup, quality.repetition_stats,
+               quality.strip_boilerplate, classify.hashed_ngram_features):
+        node = ast.parse(inspect.getsource(fn)).body[0]
+        if ast.get_docstring(node) is not None:
+            node.body = node.body[1:]
+        assert "transform" not in ast.unparse(node), fn.__name__

@@ -149,8 +149,9 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     elif verbose:
         print("ok   fuzzy link evaluates unmatched tokens once")
 
-    # page shingles: token k-grams by element access, and their MinHash
-    # signatures by aggregation — no interpreted higher-order function.
+    # page shingles: token k-grams by slice at exploded positions, and
+    # their MinHash signatures by aggregation — no interpreted
+    # higher-order function.
     # (Audited before the dedup's clustering: a small pair set finishes
     # on the driver as a local relation.)
     from arachne_spark.operators.dedup import doc_shingles
@@ -211,11 +212,27 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     )
     from arachne_spark.operators.dedup import exact_substring_dedup
     from arachne_spark.operators.lm import lm_perplexity, lm_train
+    from arachne_spark.operators.quality import (
+        repetition_stats,
+        strip_boilerplate,
+    )
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    # the text operators build token n-grams by slice at exploded
+    # positions and rebuild text by struct-field extraction: no
+    # interpreted lambda
+    no_lambda = (*GLOBAL_FORBIDDEN, "lambdafunction")
     audit(
         "exact substring dedup", exact_substring_dedup(docs, k=8),
-        expect_absent=GLOBAL_FORBIDDEN,
+        expect_absent=no_lambda,
+    )
+    audit(
+        "repetition stats", repetition_stats(docs),
+        expect_absent=no_lambda,
+    )
+    audit(
+        "strip boilerplate", strip_boilerplate(docs, max_occurrences=50),
+        expect_absent=no_lambda,
     )
     # classifier scoring: the bounded weight relation joins broadcast
     audit(
@@ -228,7 +245,7 @@ def run_audit(spark, sf_dir: str = SF, verbose: bool = False) -> list[str]:
     audit(
         "classifier features",
         hashed_ngram_features(docs, n_features=1 << 12),
-        expect_absent=GLOBAL_FORBIDDEN,
+        expect_absent=no_lambda,
     )
     uni, bi = lm_train(docs.limit(50))
     audit(
