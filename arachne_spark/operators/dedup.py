@@ -14,7 +14,8 @@ end-to-end pipeline a 100 TB crawl actually needs.  Scale posture:
   documents are boilerplate (navigation chrome, license footers) and
   are dropped *before* any join — one hot shingle would otherwise make
   the inverted-index pair generation quadratic in its document
-  frequency.  The cap costs one small aggregation over (shingle, df);
+  frequency.  The cap is one window count over the shingles
+  (``lsh_link.cap_hot``, the bucket-cap's rule too), not a join back;
 * **banding**: one aggregation per doc gives its sorted shingle set
   and 8 minhashes → 2 bands; a pair collides iff some band matches,
   so candidate generation is an equi-join on (band_idx, band_hash) —
@@ -45,7 +46,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from arachne_spark.operators.cc import representatives
-from arachne_spark.operators.lsh_link import lsh_join, minhash
+from arachne_spark.operators.lsh_link import cap_hot, lsh_join, minhash
 
 # boilerplate caps of the near-dup dedup (batch page_dupes, q38 and,
 # for the band bucket only, the streaming dedup)
@@ -112,9 +113,9 @@ def rebuild_text(
     Row-preserving: a doc left with no piece drops out of the groupBy
     and is restored with empty text (filtering empties is the
     caller's policy call).  The restoring anti-join keys on ``id_col``
-    ONLY: keying on every passthrough column would silently duplicate
-    any doc with a NULL column (NULL join keys never match, so the
-    anti-join keeps the row)."""
+    ONLY, null-safe: an equi-join key never matches NULL, so keying on
+    a passthrough column, or on a NULL id, would restore a rebuilt doc
+    a second time, empty."""
     other = [c for c in docs.columns if c != text_col]
     rebuilt = pieces.groupBy(*other).agg(
         F.array_join(
@@ -124,9 +125,10 @@ def rebuild_text(
             sep,
         ).alias(text_col)
     )
+    done = rebuilt.select(F.col(id_col).alias("__done"))
     empties = (
         docs.select(*other)
-        .join(rebuilt.select(id_col), id_col, "left_anti")
+        .join(done, F.col(id_col).eqNullSafe(done["__done"]), "left_anti")
         .withColumn(text_col, F.lit(""))
     )
     return rebuilt.unionByName(empties).select(*docs.columns)
@@ -152,20 +154,6 @@ def doc_shingles(
     )
 
 
-def cap_shingle_df(sh: DataFrame) -> DataFrame:
-    """Drop shingles whose document frequency exceeds
-    ``MAX_SHINGLE_DF`` (hot boilerplate shingles are the skew-killer of
-    every posting-list self-join: pair fanout is quadratic in df).  The
-    streaming dedup does not cap: there a batch-local df would make the
-    same document hash differently depending on what it shares a
-    micro-batch with."""
-    df = sh.groupBy("s").agg(F.count("*").alias("_df"))
-    return (
-        sh.join(df.where(F.col("_df") <= MAX_SHINGLE_DF), "s")
-        .select("doc_id", "s")
-    )
-
-
 def minhash_doc_dedup(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -176,7 +164,9 @@ def minhash_doc_dedup(
     minimum-id representative of its near-duplicate cluster; singleton
     docs map to themselves.  keep = (doc_id == rep_id) — filtering on
     it IS the dedup."""
-    sh = cap_shingle_df(doc_shingles(docs, id_col, text_col))
+    sh = cap_hot(
+        doc_shingles(docs, id_col, text_col), ["s"], MAX_SHINGLE_DF
+    )
     return near_dup_clusters(
         docs.select(F.col(id_col).alias("doc_id")),
         minhash(sh, "doc_id"),
@@ -189,12 +179,14 @@ def near_dup_clusters(
 ) -> DataFrame:
     """The clustering half of ``minhash_doc_dedup``: (doc_id, rep_id,
     keep) from the documents' ids and their ``minhash`` rows, for a
-    caller that already holds them."""
+    caller that already holds them.  The band buckets are capped once,
+    before the self-join, so both sides read one signature
+    aggregation."""
+    sig = cap_hot(sig, ["band_idx", "band_hash"], MAX_BAND_BUCKET)
     pairs = lsh_join(
         sig.withColumnRenamed("doc_id", "da"),
         sig.withColumnRenamed("doc_id", "db"),
         threshold,
-        MAX_BAND_BUCKET,
         F.col("da") < F.col("db"),
     )
     return representatives(ids, pairs.select("da", "db"))
@@ -320,8 +312,10 @@ def exact_substring_dedup(
     marked = (
         occ.join(dup, "h")
         .where(
+            # null-safe: a NULL-id first occurrence must not spare
+            # the span everywhere else
             ~(
-                (F.col("__id") == F.col("m.__id"))
+                F.col("__id").eqNullSafe(F.col("m.__id"))
                 & (F.col("pos") == F.col("m.pos"))
             )
         )

@@ -100,11 +100,31 @@ def jaccard_expr(a_col: str, b_col: str):
     )
 
 
+def cap_hot(df: DataFrame, keys: list[str], limit: int) -> DataFrame:
+    """``df`` without the rows of any ``keys`` group that holds more
+    than ``limit`` rows: the one hot-key cap (page dedup's shingles,
+    both band joins' buckets), counted by one window, not a join.
+
+    A band bucket shared by B rows fans every row that probes it out
+    into B candidates, so one degenerate hot band (near-identical
+    boilerplate strings) makes the blocking quadratic.  True near-pairs
+    in a dropped band almost always share their other band(s), so a
+    pathological input degrades recall, not the cluster.  In a
+    self-join a pair shares its band on both sides, so capping the
+    signatures once, before the join, drops exactly the pairs a
+    one-side cap drops."""
+    w = Window.partitionBy(*keys)
+    return (
+        df.withColumn("_n", F.count(F.lit(1)).over(w))
+        .where(F.col("_n") <= limit)
+        .drop("_n")
+    )
+
+
 def lsh_join(
     left: DataFrame,
     right: DataFrame,
     threshold: float,
-    max_band_df: int | None = None,
     where: Column | None = None,
 ) -> DataFrame:
     """(left ids…, right ids…, jaccard): each pair of ``minhash`` rows
@@ -114,28 +134,11 @@ def lsh_join(
     The two sides' id columns (all but shset/band_idx/band_hash) must
     be disjoint, and a side's ids must determine its shingle set.
     ``where`` restricts the pairs before they are verified (a self-join
-    passes ``da < db``).
-
-    ``max_band_df`` drops right-side bands held by more than that many
-    rows: a band shared by B rows fans every matching left row out into
-    B candidates, so one degenerate hot band (near-identical
-    boilerplate strings) makes the blocking quadratic.  True near-pairs
-    in a dropped band almost always share their other band(s), so a
-    pathological input degrades recall, not the cluster.  In a
-    self-join a pair shares its band on both sides, so the right-side
-    cap drops exactly the pairs a cap on both sides would.  The cap is
-    a window, not a join, so a broadcast hint on ``right`` reaches the
-    band join.
+    passes ``da < db``).  Hot bands are the caller's to cap
+    (``cap_hot``).
     """
     lids = [c for c in left.columns if c not in _SIG]
     rids = [c for c in right.columns if c not in _SIG]
-    if max_band_df is not None:
-        band = Window.partitionBy("band_idx", "band_hash")
-        right = (
-            right.withColumn("_bdf", F.count(F.lit(1)).over(band))
-            .where(F.col("_bdf") <= max_band_df)
-            .drop("_bdf")
-        )
     pairs = left.withColumnRenamed("shset", "_sa").join(
         right.withColumnRenamed("shset", "_sb"), ["band_idx", "band_hash"]
     )
@@ -165,8 +168,8 @@ def lsh_candidates(
     ``surfaces`` must carry ``surface`` (a surface may repeat: the
     signature aggregation groups by it) and ``dictionary`` (alias,
     qid); extra columns are dropped.  ``MAX_BAND_DF`` caps the
-    dictionary-side frequency of a band hash (see ``lsh_join``); it is
-    far above any real alias dictionary's band skew.
+    dictionary-side frequency of a band hash (``cap_hot``); it is far
+    above any real alias dictionary's band skew.
     """
     q = minhash(
         char_shingles(surfaces.select("surface"), "surface"), "surface"
@@ -175,7 +178,8 @@ def lsh_candidates(
         char_shingles(dictionary.select("alias", "qid"), "alias"),
         "alias", "qid",
     )
-    return lsh_join(q, F.broadcast(d), threshold, MAX_BAND_DF).select(
+    d = cap_hot(d, ["band_idx", "band_hash"], MAX_BAND_DF)
+    return lsh_join(q, F.broadcast(d), threshold).select(
         "surface", "qid", "jaccard"
     )
 

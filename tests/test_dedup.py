@@ -157,6 +157,36 @@ def test_minhash_dedup_20k_vs_python_twin(spark):
     assert not bad, (len(bad), bad[:5])
 
 
+def test_both_caps_fire_vs_python_twin(spark):
+    """A corpus where both boilerplate caps decide the answer: 25
+    identical docs and a near copy of them fill band buckets past
+    MAX_BAND_BUCKET, and 65 docs (near-dup pairs) share a 20-token
+    footer held past MAX_SHINGLE_DF; beside them a 4-doc near-dup
+    cluster.  The dedup agrees with the twin, and the twin's answer
+    changes when either cap is lifted, so each cap is load-bearing."""
+    same = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    near = "north south east west up down left right in out"
+    footer = " ".join(f"f{j}" for j in range(20))
+    rows = [(i, same) for i in range(25)] + [(25, same + " lambda")]
+    rows += [(26 + i, near + " extra" * (i == 3)) for i in range(4)]
+    rows += [
+        (30 + i, f"page p{i // 2} covers item m{i // 2} with note "
+                 f"n{i // 2} {footer}" + " more" * (i % 2))
+        for i in range(65)
+    ]
+    want = _py_dedup(rows)
+    assert want != _py_dedup(rows, max_df=len(rows))
+    assert want != _py_dedup(rows, bucket_cap=len(rows))
+    # the identical docs' buckets are dropped: each is its own rep
+    assert all(want[i] == i for i in range(26))
+
+    out = minhash_doc_dedup(
+        spark.createDataFrame(rows, "doc_id bigint, text string")
+    )
+    got = {r["doc_id"]: (r["rep_id"], r["keep"]) for r in out.collect()}
+    assert got == {i: (want[i], want[i] == i) for i, _ in rows}
+
+
 def test_benchmark_contamination(spark):
     """Decontamination sweep: documents embedding a benchmark item's
     k-gram verbatim are flagged with the right overlap counts;

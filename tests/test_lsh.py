@@ -99,7 +99,8 @@ def test_hot_shingle_df_cap_bounds_skew(spark):
     df-cap an inverted-index self-join would generate ~5e9 pairs from
     the hot shingles alone; with the cap, every surviving shingle is
     held by one document, so no pair can form."""
-    from arachne_spark.operators.dedup import cap_shingle_df, doc_shingles
+    from arachne_spark.operators.dedup import MAX_SHINGLE_DF, doc_shingles
+    from arachne_spark.operators.lsh_link import cap_hot
 
     n = 100_000
     docs = spark.range(n).select(
@@ -121,7 +122,7 @@ def test_hot_shingle_df_cap_bounds_skew(spark):
     )
     assert fanout > 1e9
 
-    sh = cap_shingle_df(sh0)
+    sh = cap_hot(sh0, ["s"], MAX_SHINGLE_DF)
     assert sh.where(F.col("s").startswith("copyright")).count() == 0
     assert sh.groupBy("s").count().agg(F.max("count")).first()[0] == 1
 
@@ -132,6 +133,7 @@ def test_lsh_band_df_cap_drops_hot_band(spark):
     band is dropped dictionary-side (recall degrades, fanout does not
     explode)."""
     from arachne_spark.operators.lsh_link import (
+        cap_hot,
         char_shingles,
         lsh_join,
         minhash,
@@ -149,9 +151,9 @@ def test_lsh_band_df_cap_drops_hot_band(spark):
     sig = minhash(
         char_shingles(d.select("alias", "qid"), "alias"), "alias", "qid"
     )
-    capped = lsh_join(q, sig, 0.3, max_band_df=10)
+    capped = lsh_join(q, cap_hot(sig, ["band_idx", "band_hash"], 10), 0.3)
     assert capped.count() == 0  # hot band dropped, no candidates
-    uncapped = lsh_join(q, sig, 0.3, max_band_df=None)
+    uncapped = lsh_join(q, sig, 0.3)
     assert uncapped.count() == 30  # the fanout the cap prevents
 
 

@@ -2,7 +2,8 @@
 corpus WILL contain NULL text (un-extracted pages), empty strings,
 control bytes, and megabyte tokens — no operator may crash, every
 row-preserving operator must keep the row, and the filters must treat
-an unscorable doc conservatively (drop / NULL stats), never raise."""
+an unscorable doc conservatively (drop / NULL stats), never raise.
+A NULL document id is a key like any other to the text rewrites."""
 
 from __future__ import annotations
 
@@ -69,3 +70,42 @@ def test_null_text_sweep(spark):
     ppl = lm_perplexity(docs, uni, bi)
     assert ppl.count() == n - 1
     assert ppl.where(F.col("doc_id") == 3).count() == 0
+
+
+def test_strip_boilerplate_null_id_comes_back_once(spark):
+    """The rebuild's restoring anti-join is null-safe: a NULL-id doc
+    that keeps a line is not restored a second time, empty."""
+    from arachne_spark.operators.quality import strip_boilerplate
+
+    docs = spark.createDataFrame(
+        [(1, "home\nbody one"), (2, "home\nbody two"),
+         (None, "home\nbody three"), (3, "other")],
+        "doc_id bigint, text string",
+    )
+    got = sorted(
+        (r["doc_id"] is None, r["doc_id"] or 0, r["text"])
+        for r in strip_boilerplate(docs, max_occurrences=1).collect()
+    )
+    assert got == [
+        (False, 1, "body one"), (False, 2, "body two"),
+        (False, 3, "other"), (True, 0, "body three"),
+    ]
+
+
+def test_exact_substring_dedup_null_id_first_occurrence(spark):
+    """A span whose first occurrence sits in a NULL-id doc is still cut
+    from every later occurrence, as it is under a non-NULL id."""
+    from arachne_spark.operators.dedup import exact_substring_dedup
+
+    def run(first_id):
+        docs = spark.createDataFrame(
+            [(first_id, "p q r s"), (3, "p q r s t")],
+            "doc_id bigint, text string",
+        )
+        return {
+            r["doc_id"]: r["text"]
+            for r in exact_substring_dedup(docs, k=3).collect()
+        }
+
+    assert run(1) == {1: "p q r s", 3: "t"}
+    assert run(None) == {None: "p q r s", 3: "t"}

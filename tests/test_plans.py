@@ -14,12 +14,42 @@ sys.path.insert(
     0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools")
 )
 
-from explain_audit import run_audit  # noqa: E402
+from explain_audit import final_plan_tree, plan_of, run_audit  # noqa: E402
 
 
 def test_physical_plans(spark):
     problems = run_audit(spark)
     assert problems == []
+
+
+def test_page_dedup_aggregates_signatures_once(spark, monkeypatch):
+    """Page dedup caps hot shingles and hot band buckets by a window
+    count, and caps the buckets once, before its band self-join: the
+    executed pair plan runs the signature aggregation once (partial +
+    final, two ObjectHashAggregate nodes; both join sides read it) and
+    holds one join, the band join — the shingle cap is a Window.  The
+    input is materialized, as the stage graph's committed tables
+    are."""
+    from arachne_spark.operators import dedup
+    from arachne_spark.operators.extract import clean_pages
+    from arachne_spark.sources.pages import pages_df
+
+    seen = []
+
+    def capture(ids, pairs):
+        seen.append(pairs)
+        return representatives(ids, pairs)
+
+    representatives = dedup.representatives
+    monkeypatch.setattr(dedup, "representatives", capture)
+    clean = clean_pages(pages_df(spark, 300)).localCheckpoint()
+    dedup.minhash_doc_dedup(clean, "url", "text")
+    (pairs,) = seen
+    pairs.collect()  # runs the pair relation's own (adaptive) plan
+    tree = final_plan_tree(pairs).splitlines()
+    assert sum("ObjectHashAggregate" in n for n in tree) == 2, tree
+    assert sum("Join" in n for n in tree) == 1, tree
+    assert "windowspecdefinition(s#" in plan_of(pairs)
 
 
 def test_enrichment_join_aqe_fallback(spark):

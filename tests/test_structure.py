@@ -8,8 +8,9 @@ coefficient store, and BMP, ICO and AVI share one DIB header parse
 and gate; connected components and transitive closure share one
 round loop, and components finish small frontiers through one driver
 union-find; fuzzy linking, page dedup and streaming dedup share one
-MinHash-LSH; batch and stream share one alias probe, and the
-canonicalization step has one plan over plain warehouse files; no
+MinHash-LSH and one hot-key cap; batch and stream share one alias
+probe, and the canonicalization step has one plan over plain
+warehouse files; no
 option selects a second warehouse backend, ANN dot engine or
 mention-probe join; the warehouse commits one (unpartitioned) layout,
 and the thresholds and caps the KG stage graph's callers all set
@@ -341,7 +342,7 @@ def test_minhash_defined_once():
         if isinstance(n, ast.FunctionDef)
     }
     for gone in ("_with_signature", "shingle_expr", "minhash_bands",
-                 "shingle_sets", "ngram_jaccard_pairs"):
+                 "shingle_sets", "ngram_jaccard_pairs", "cap_shingle_df"):
         assert gone not in defs, gone
     # one pairs -> representative tail: representatives, beside
     # connected_components and canonical_mapping, runs the one star
@@ -422,8 +423,8 @@ def test_stage_graph_takes_only_varied_options():
         curate_pages: {"dup_span_tokens", "gopher_min_words"},
         run_incremental_pipeline: {"gopher_min_words"},
         dedup.minhash_doc_dedup: {"max_shingle_df", "max_band_bucket"},
-        dedup.cap_shingle_df: {"max_df"},
         dedup.near_dup_clusters: {"max_band_bucket"},
+        lsh_link.lsh_join: {"max_band_df"},
         lsh_link.lsh_candidates: {"max_band_df"},
         lsh_link.fuzzy_link_best: {"threshold"},
         skew.promote_candidates: {"threshold"},
@@ -455,6 +456,13 @@ def test_stage_graph_takes_only_varied_options():
             and any(getattr(t, "id", None) == name for t in n.targets)
         ]
         assert assigned == [ROOT / "arachne_spark/operators/dedup.py"], name
+    # ...and applied by one hot-key cap: page dedup's shingles and
+    # buckets, and fuzzy linking's dictionary buckets
+    ops = "arachne_spark/operators"
+    assert _holders(_calls("cap_hot")) == {
+        f"{ops}/dedup.py:minhash_doc_dedup",
+        f"{ops}/dedup.py:near_dup_clusters",
+        f"{ops}/lsh_link.py:lsh_candidates"}
 
 
 def test_one_stage_executor_and_no_session_conf_writes():
